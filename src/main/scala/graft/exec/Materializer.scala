@@ -1,5 +1,6 @@
 package graft.exec
 
+import java.io.{FileNotFoundException, IOException}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -64,13 +65,15 @@ object Materializer {
       case Some(old) if partitionCols.nonEmpty =>
         // Dynamic partition overwrite: merge only the partitions the batch
         // touches; the rest of the (arbitrarily large) target is untouched.
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        // The mode is a per-write option, so the session's own overwrite
+        // mode stays as it was for every later write.
         val touched = newRows.select(partitionCols.map(col): _*).distinct()
         val oldTouched = old.join(broadcast(touched), partitionCols, "left_semi")
         val kept = oldTouched.join(newRows.select(keys.map(col): _*).distinct(),
           keys, "left_anti")
         kept.unionByName(newRows, allowMissingColumns = true)
-          .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy(partitionCols: _*).parquet(path)
 
       case Some(old) =>
         val kept = old.join(newRows.select(keys.map(col): _*).distinct(), keys, "left_anti")
@@ -218,10 +221,18 @@ object Materializer {
     swap(spark, tmp, path)
   }
 
-  private def swap(spark: SparkSession, tmp: String, path: String): Unit = {
+  /** Replace `path` with the staged table at `tmp`. The target is deleted
+    * only once the staged table is known to exist, and a failed rename
+    * throws rather than leaving no table behind silently.
+    */
+  private[exec] def swap(spark: SparkSession, tmp: String, path: String): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = new Path(tmp)
     val target = new Path(path)
+    if (!fs.exists(staged))
+      throw new FileNotFoundException(s"staged table $tmp does not exist; $path left as is")
     if (fs.exists(target)) fs.delete(target, true)
-    fs.rename(new Path(tmp), target)
+    if (!fs.rename(staged, target))
+      throw new IOException(s"could not rename staged table $tmp to $path")
   }
 }

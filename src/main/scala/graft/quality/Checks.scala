@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** dbt-test equivalents (SURVEY §2.10): each check compiles to a
   * violations DataFrame that must be empty, exactly like a dbt test
-  * compiles to a SELECT that must return 0 rows.
+  * compiles to a SELECT that must return 0 rows. A gate of checks is
+  * counted in one Spark action (`evaluate`), not one action per check.
   */
 object Checks {
 
@@ -92,9 +93,7 @@ object Checks {
 
   // ── The reference's full 54-test suite ──────────────────────────────────
 
-  case class Check(model: String, test: String, violations: () => DataFrame) {
-    def count: Long = violations().count()
-  }
+  case class Check(model: String, test: String, violations: () => DataFrame)
 
   /** All 54 checks: 53 declarative column tests from the three schema.yml
     * files + the singular orphan test (SURVEY §5 counts).
@@ -180,7 +179,25 @@ object Checks {
     def passed: Boolean = violations == 0
   }
 
+  /** Violation counts of a whole gate in one Spark action: each check's
+    * violations frame is tagged with its index, the tagged frames are
+    * unioned, and one `groupBy(__check).count()` is collected. An index
+    * with no row has 0 violations. The counts equal each frame's own
+    * `count()`; only the per-check planning and job overhead goes.
+    */
+  def evaluate(checks: Seq[Check]): Seq[CheckResult] =
+    if (checks.isEmpty) Nil
+    else {
+      val counts = checks.zipWithIndex
+        .map { case (ch, i) => ch.violations().select(lit(i).as("__check")) }
+        .reduce(_ union _)
+        .groupBy("__check").count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      checks.zipWithIndex.map { case (ch, i) =>
+        CheckResult(ch.model, ch.test, counts.getOrElse(i, 0L))
+      }
+    }
+
   /** Evaluate every check (the `dbt test` step, SURVEY §3.3). */
-  def runAll(m: Medallion): Seq[CheckResult] =
-    suite(m).map(ch => CheckResult(ch.model, ch.test, ch.count))
+  def runAll(m: Medallion): Seq[CheckResult] = evaluate(suite(m))
 }

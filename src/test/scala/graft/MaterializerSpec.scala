@@ -119,6 +119,25 @@ class MaterializerSpec extends AnyFunSuite {
     assert(got === Seq((1, 10), (2, 20), (3, 31), (4, 40)))
   }
 
+  test("partitioned upsert leaves the session's partition overwrite mode unchanged") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val path = tmpDir()
+      Materializer.incrementalUpsert(
+        Seq((1, "2025-01-01", 10), (2, "2025-01-02", 20)).toDF("id", "day", "v"),
+        path, Seq("id"), partitionCols = Seq("day"))
+      Materializer.incrementalUpsert(Seq((2, "2025-01-02", 21)).toDF("id", "day", "v"),
+        path, Seq("id"), partitionCols = Seq("day"))
+      assert(spark.conf.get(key) === "static")
+      // the upsert itself still overwrites dynamically: day 1 survives
+      val got = spark.read.parquet(path).orderBy("id")
+        .collect().map(r => (r.getAs[Int]("id"), r.getAs[Int]("v"))).toSeq
+      assert(got === Seq((1, 10), (2, 21)))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("clusteredWrite: a key-filtered scan touches exactly one file") {
     val path = tmpDir()
     val rnd = new scala.util.Random(7)
