@@ -4,6 +4,7 @@ import java.io.{FileNotFoundException, IOException}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Materialization sinks (SURVEY §2.1 S5/S6/S7).
   *
@@ -18,6 +19,10 @@ import org.apache.spark.sql.functions._
   * bottleneck, so `partitionCols` switches to dynamic partition overwrite —
   * only partitions containing upserted keys are read back, merged, and
   * rewritten; untouched partitions are never opened.
+  *
+  * The table sinks return the schema they wrote, so a caller re-reads the
+  * table with `spark.read.schema(s).parquet(path)` and Spark launches no
+  * footer job to infer it.
   */
 object Materializer {
 
@@ -29,38 +34,50 @@ object Materializer {
   def readTarget(spark: SparkSession, path: String): Option[DataFrame] =
     if (exists(spark, path)) Some(spark.read.parquet(path)) else None
 
-  /** `{{ this }}` watermark scan (SURVEY S4/P4/A6): max(col) of the current
-    * target, None when the target doesn't exist yet (first run keeps all).
+  /** `{{ this }}` watermark scan (SURVEY S4/P4/A6): max(col) of the
+    * current target table; None when it holds no value.
     */
-  def watermark(spark: SparkSession, path: String, c: String): Option[java.sql.Timestamp] =
-    readTarget(spark, path).flatMap { df =>
-      Option(df.agg(max(col(c))).head().getTimestamp(0))
-    }
+  def watermark(target: DataFrame, c: String): Option[java.sql.Timestamp] =
+    Option(target.agg(max(col(c))).head().getTimestamp(0))
 
   /** Gold table sink — atomic overwrite via temp-dir + swap. */
-  def overwriteTable(df: DataFrame, path: String): Unit = {
+  def overwriteTable(df: DataFrame, path: String): StructType = {
     val spark = df.sparkSession
     val tmp = path + "__tmp"
     df.write.mode("overwrite").parquet(tmp)
     swap(spark, tmp, path)
+    df.schema
   }
 
-  /** Silver incremental sink. `newRows` is the (already watermark-filtered)
-    * batch; rows whose `keys` match an existing target row replace it, new
-    * keys append. `on_schema_change='append_new_columns'`: columns present
-    * only on one side are null-filled via unionByName(allowMissingColumns).
-    */
+  /** Silver incremental sink: `upsertInto` the table now at `path`. */
   def incrementalUpsert(
       newRows: DataFrame,
       path: String,
       keys: Seq[String],
-      partitionCols: Seq[String] = Nil): Unit = {
+      partitionCols: Seq[String] = Nil): StructType =
+    upsertInto(readTarget(newRows.sparkSession, path), newRows, path, keys, partitionCols)
+
+  /** Silver sink over an already-read `target` (None: no table yet, or a
+    * full refresh that drops it). `newRows` is the (already
+    * watermark-filtered) batch; rows whose `keys` match a target row replace
+    * it, new keys append. Without a target the table is overwritten.
+    * `on_schema_change='append_new_columns'`: columns present only on one
+    * side are null-filled via unionByName(allowMissingColumns).
+    */
+  def upsertInto(
+      target: Option[DataFrame],
+      newRows: DataFrame,
+      path: String,
+      keys: Seq[String],
+      partitionCols: Seq[String] = Nil): StructType = {
     val spark = newRows.sparkSession
-    readTarget(spark, path) match {
+    target match {
       case None =>
-        if (partitionCols.nonEmpty)
+        if (partitionCols.isEmpty) overwriteTable(newRows, path)
+        else {
           newRows.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-        else overwriteTable(newRows, path)
+          newRows.schema
+        }
 
       case Some(old) if partitionCols.nonEmpty =>
         // Dynamic partition overwrite: merge only the partitions the batch
@@ -71,9 +88,10 @@ object Materializer {
         val oldTouched = old.join(broadcast(touched), partitionCols, "left_semi")
         val kept = oldTouched.join(newRows.select(keys.map(col): _*).distinct(),
           keys, "left_anti")
-        kept.unionByName(newRows, allowMissingColumns = true)
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        val merged = kept.unionByName(newRows, allowMissingColumns = true)
+        merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .partitionBy(partitionCols: _*).parquet(path)
+        merged.schema
 
       case Some(old) =>
         val kept = old.join(newRows.select(keys.map(col): _*).distinct(), keys, "left_anti")
@@ -82,6 +100,7 @@ object Materializer {
         val tmp = path + "__tmp"
         merged.write.mode("overwrite").parquet(tmp)
         swap(spark, tmp, path)
+        merged.schema
     }
   }
 

@@ -3,9 +3,11 @@ package graft.exec
 import graft.{Catalog, RunConfig}
 import graft.models._
 import graft.quality.Checks
-import graft.quality.Checks.CheckResult
+import graft.quality.Checks.{Check, CheckResult}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.collection.concurrent.TrieMap
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
@@ -61,13 +63,17 @@ object Pipeline {
   /** Full `dbt seed → run → test` lifecycle against a warehouse dir.
     *
     * Each test gate (35 silver checks, then 19 gold checks) is counted in
-    * one Spark action by `Checks.evaluate`; the gold checks read the gold
-    * tables just written.
+    * one Spark action by `Checks.evaluate`, which reads each model once;
+    * the gold checks read the gold tables just written. Tables this run
+    * wrote are re-read with the schema their sink returned, so no re-read
+    * launches a footer job.
     *
     * Silver models are materialized incrementally on their unique keys with
-    * the reference's exact watermark predicates; `fullRefresh` mirrors
-    * `dbt run --full-refresh` (drop + rebuild), the branch the production
-    * workflow takes when anomalies spike
+    * the reference's exact watermark predicates; each node reads its target
+    * once, for the watermark and the merge. `fullRefresh` mirrors `dbt run
+    * --full-refresh` (drop + rebuild: each silver table is atomically
+    * overwritten with the model over every source row), the branch the
+    * production workflow takes when anomalies spike
     * (notebooks/databricks_control_flow.py:150-215).
     */
   def run(
@@ -87,8 +93,19 @@ object Pipeline {
     val stgD = Staging.stgDevices(Catalog.rawDevices(spark, seedDir), cfg)
     val stgA = Staging.stgAlerts(Catalog.rawAlerts(spark, seedDir), cfg)
 
-    def wm(path: String, c: String): Option[java.sql.Timestamp] =
-      if (fullRefresh) None else Materializer.watermark(spark, path, c)
+    val schemas = TrieMap.empty[String, StructType]
+    def written(path: String): DataFrame = spark.read.schema(schemas(path)).parquet(path)
+
+    // One silver node: the rows of `input` past the target's watermark on
+    // `c` go through `model` and are upserted on `keys`. A full refresh
+    // ignores the old table, so the sink overwrites it.
+    def silver(path: String, keys: Seq[String], input: DataFrame, c: String)(
+        model: DataFrame => DataFrame): Unit = {
+      val target = if (fullRefresh) None else Materializer.readTarget(spark, path)
+      val rows = target.flatMap(Materializer.watermark(_, c))
+        .fold(input)(w => input.filter(col(c) > lit(w)))
+      schemas(path) = Materializer.upsertInto(target, model(rows), path, keys)
+    }
 
     // Silver, as a DAG on `threads` workers: cleaned ∥ alerts first,
     // health once cleaned lands — the two independent chains overlap
@@ -97,36 +114,26 @@ object Pipeline {
       // Silver 1: cleaned readings — incremental on reading_id, watermark
       // on ingested_at (int_sensor_readings_cleaned.sql:24-27).
       DagNode("int_sensor_readings_cleaned", Nil) { () =>
-        val newReadings = wm(cleanedPath, "ingested_at")
-          .map(w => stgR.filter(col("ingested_at") > lit(w))).getOrElse(stgR)
-        Materializer.incrementalUpsert(
-          Intermediate.intSensorReadingsCleaned(newReadings, stgD, cfg),
-          cleanedPath, Seq("reading_id"))
+        silver(cleanedPath, Seq("reading_id"), stgR, "ingested_at")(
+          Intermediate.intSensorReadingsCleaned(_, stgD, cfg))
       },
       // Silver 3: enriched alerts — incremental on alert_id, watermark on
       // alert_ts (int_alerts_enriched.sql:18-20). Independent of cleaned.
       DagNode("int_alerts_enriched", Nil) { () =>
-        val newAlerts = wm(alertsPath, "alert_ts")
-          .map(w => stgA.filter(col("alert_ts") > lit(w))).getOrElse(stgA)
-        Materializer.incrementalUpsert(
-          Intermediate.intAlertsEnriched(newAlerts, stgD, cfg),
-          alertsPath, Seq("alert_id"))
+        silver(alertsPath, Seq("alert_id"), stgA, "alert_ts")(
+          Intermediate.intAlertsEnriched(_, stgD, cfg))
       },
       // Silver 2: device health — incremental on the surrogate key,
       // watermark on _dbt_processed_at (int_device_health.sql:20-22);
       // reads the cleaned table it depends on.
       DagNode("int_device_health", Seq("int_sensor_readings_cleaned")) { () =>
-        val cleanedT = spark.read.parquet(cleanedPath)
-        val healthInput = wm(healthPath, "_dbt_processed_at")
-          .map(w => cleanedT.filter(col("_dbt_processed_at") > lit(w))).getOrElse(cleanedT)
-        Materializer.incrementalUpsert(
-          Intermediate.intDeviceHealth(healthInput, cfg),
-          healthPath, Seq("device_health_key"))
+        silver(healthPath, Seq("device_health_key"), written(cleanedPath), "_dbt_processed_at")(
+          Intermediate.intDeviceHealth(_, cfg))
       }), threads)
 
-    val cleaned = spark.read.parquet(cleanedPath)
-    val health = spark.read.parquet(healthPath)
-    val alertsE = spark.read.parquet(alertsPath)
+    val cleaned = written(cleanedPath)
+    val health = written(healthPath)
+    val alertsE = written(alertsPath)
 
     // Gate: gold is conditional on bronze+silver tests passing
     // (databricks_control_flow.py:88-110, CONCEPTS.md:104-121).
@@ -135,8 +142,7 @@ object Pipeline {
       Marts.fctDeviceSummary(cleaned, alertsE, cfg),
       Marts.fctAnomalyEvents(cleaned, cfg),
       Marts.dimDevices(stgD, cleaned, cfg))
-    val silverChecks = Checks.evaluate(Checks.suite(m0)
-      .filter(ch => ch.model.startsWith("stg_") || ch.model.startsWith("int_")))
+    val silverChecks = Checks.evaluate(silverGate(m0))
 
     if (silverChecks.exists(!_.passed)) return Result(silverChecks, goldBuilt = false, Nil)
 
@@ -144,26 +150,30 @@ object Pipeline {
     // they build concurrently on the same pool width.
     def gold(name: String) = s"$warehouseDir/gold/$name"
     runDag(Seq(
-      DagNode("fct_hourly_metrics", Nil) { () =>
-        Materializer.overwriteTable(m0.fctHourlyMetrics, gold("fct_hourly_metrics")) },
-      DagNode("fct_device_summary", Nil) { () =>
-        Materializer.overwriteTable(m0.fctDeviceSummary, gold("fct_device_summary")) },
-      DagNode("fct_anomaly_events", Nil) { () =>
-        Materializer.overwriteTable(m0.fctAnomalyEvents, gold("fct_anomaly_events")) },
-      DagNode("dim_devices", Nil) { () =>
-        Materializer.overwriteTable(m0.dimDevices, gold("dim_devices")) }), threads)
+      "fct_hourly_metrics" -> m0.fctHourlyMetrics,
+      "fct_device_summary" -> m0.fctDeviceSummary,
+      "fct_anomaly_events" -> m0.fctAnomalyEvents,
+      "dim_devices" -> m0.dimDevices).map { case (name, df) =>
+        DagNode(name, Nil) { () => schemas(gold(name)) = Materializer.overwriteTable(df, gold(name)) }
+      }, threads)
 
     // Gold tests query the materialized relations, as dbt's `test` step
     // does, instead of rebuilding every mart from silver.
-    val written = m0.copy(
-      fctHourlyMetrics = spark.read.parquet(gold("fct_hourly_metrics")),
-      fctDeviceSummary = spark.read.parquet(gold("fct_device_summary")),
-      fctAnomalyEvents = spark.read.parquet(gold("fct_anomaly_events")),
-      dimDevices = spark.read.parquet(gold("dim_devices")))
-    val goldChecks = Checks.evaluate(Checks.suite(written)
-      .filter(ch => ch.model.startsWith("fct_") || ch.model.startsWith("dim_")))
+    val goldChecks = Checks.evaluate(goldGate(m0.copy(
+      fctHourlyMetrics = written(gold("fct_hourly_metrics")),
+      fctDeviceSummary = written(gold("fct_device_summary")),
+      fctAnomalyEvents = written(gold("fct_anomaly_events")),
+      dimDevices = written(gold("dim_devices")))))
     Result(silverChecks, goldBuilt = true, goldChecks)
   }
+
+  /** The silver gate: the checks on the bronze and silver models. */
+  def silverGate(m: Medallion): Seq[Check] =
+    Checks.suite(m).filter(ch => ch.model.startsWith("stg_") || ch.model.startsWith("int_"))
+
+  /** The gold gate: the checks on the marts. */
+  def goldGate(m: Medallion): Seq[Check] =
+    Checks.suite(m).filter(ch => ch.model.startsWith("fct_") || ch.model.startsWith("dim_"))
 
   /** IF/ELSE condition task (databricks_control_flow.py:150-215): anomaly
     * count above the threshold triggers a full refresh, else incremental.

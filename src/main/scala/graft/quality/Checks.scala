@@ -7,13 +7,21 @@ import org.apache.spark.sql.functions._
 /** dbt-test equivalents (SURVEY §2.10): each check compiles to a
   * violations DataFrame that must be empty, exactly like a dbt test
   * compiles to a SELECT that must return 0 rows. A gate of checks is
-  * counted in one Spark action (`evaluate`), not one action per check.
+  * counted in one Spark action (`evaluate`) that reads each model once.
   */
 object Checks {
 
+  /** The `not_null` violation predicate: the column is null. */
+  private def isNull(c: String): Column = col(c).isNull
+
+  /** The `accepted_values` violation predicate: a non-null value outside
+    * the list (null passes).
+    */
+  private def notAccepted(c: String, values: Seq[String]): Column =
+    col(c).isNotNull && !col(c).isin(values: _*)
+
   /** `not_null` — rows where the column is null. */
-  def notNull(df: DataFrame, c: String): DataFrame =
-    df.filter(col(c).isNull)
+  def notNull(df: DataFrame, c: String): DataFrame = df.filter(isNull(c))
 
   /** `unique` — dbt semantics: nulls are ignored; group keys seen >1×. */
   def unique(df: DataFrame, c: String): DataFrame =
@@ -23,7 +31,7 @@ object Checks {
 
   /** `accepted_values` — non-null values outside the list (null passes). */
   def acceptedValues(df: DataFrame, c: String, values: Seq[String]): DataFrame =
-    df.filter(col(c).isNotNull && !col(c).isin(values: _*))
+    df.filter(notAccepted(c, values))
 
   /** `relationships` — non-null child keys missing from the parent
     * (left-anti join, SURVEY J6).
@@ -93,106 +101,147 @@ object Checks {
 
   // ── The reference's full 54-test suite ──────────────────────────────────
 
-  case class Check(model: String, test: String, violations: () => DataFrame)
+  /** What a check counts, declared once: `Check.violations` and the fused
+    * gate are both derived from it.
+    */
+  sealed trait Shape
+
+  /** Rows of `model` where `violates` holds (`not_null`, `accepted_values`). */
+  final case class RowPredicate(model: DataFrame, violates: Column) extends Shape
+
+  /** Non-null values of `key` seen more than once in `model` (`unique`). */
+  final case class UniqueKey(model: DataFrame, key: String) extends Shape
+
+  /** Any other violations frame (`relationships`, singular tests). */
+  final case class Opaque(frame: () => DataFrame) extends Shape
+
+  case class Check(model: String, test: String, shape: Shape) {
+    def violations(): DataFrame = shape match {
+      case RowPredicate(df, p) => df.filter(p)
+      case UniqueKey(df, k) => unique(df, k)
+      case Opaque(frame) => frame()
+    }
+  }
 
   /** All 54 checks: 53 declarative column tests from the three schema.yml
     * files + the singular orphan test (SURVEY §5 counts).
     */
   def suite(m: Medallion): Seq[Check] = {
-    def c(model: String, test: String)(df: => DataFrame) = Check(model, test, () => df)
-    val sr = m.stgSensorReadings; val sd = m.stgDevices; val sa = m.stgAlerts
-    val cl = m.intSensorReadingsCleaned; val dh = m.intDeviceHealth
-    val ae = m.intAlertsEnriched; val hm = m.fctHourlyMetrics
-    val ds = m.fctDeviceSummary; val an = m.fctAnomalyEvents; val dd = m.dimDevices
+    class On(model: String, df: DataFrame) {
+      def notNull(c: String) = Check(model, s"not_null $c", RowPredicate(df, isNull(c)))
+      def unique(c: String) = Check(model, s"unique $c", UniqueKey(df, c))
+      def accepted(c: String, values: String*) =
+        Check(model, s"accepted_values $c", RowPredicate(df, notAccepted(c, values)))
+      def deviceRelationship = Check(model, "relationships device_id -> stg_devices",
+        Opaque(() => relationships(df, "device_id", m.stgDevices, "device_id")))
+    }
+    val sr = new On("stg_sensor_readings", m.stgSensorReadings)
+    val sd = new On("stg_devices", m.stgDevices)
+    val sa = new On("stg_alerts", m.stgAlerts)
+    val cl = new On("int_sensor_readings_cleaned", m.intSensorReadingsCleaned)
+    val dh = new On("int_device_health", m.intDeviceHealth)
+    val ae = new On("int_alerts_enriched", m.intAlertsEnriched)
+    val hm = new On("fct_hourly_metrics", m.fctHourlyMetrics)
+    val ds = new On("fct_device_summary", m.fctDeviceSummary)
+    val an = new On("fct_anomaly_events", m.fctAnomalyEvents)
+    val dd = new On("dim_devices", m.dimDevices)
+    val severities = Seq("info", "warning", "critical")
 
     Seq(
       // staging/schema.yml — 19
-      c("stg_sensor_readings", "not_null reading_id")(notNull(sr, "reading_id")),
-      c("stg_sensor_readings", "unique reading_id")(unique(sr, "reading_id")),
-      c("stg_sensor_readings", "not_null device_id")(notNull(sr, "device_id")),
-      c("stg_sensor_readings", "not_null metric_name")(notNull(sr, "metric_name")),
-      c("stg_sensor_readings", "accepted_values metric_name")(
-        acceptedValues(sr, "metric_name", Seq("temperature", "vibration", "humidity", "pressure"))),
-      c("stg_sensor_readings", "not_null reading_ts")(notNull(sr, "reading_ts")),
-      c("stg_devices", "not_null device_id")(notNull(sd, "device_id")),
-      c("stg_devices", "unique device_id")(unique(sd, "device_id")),
-      c("stg_devices", "not_null device_name")(notNull(sd, "device_name")),
-      c("stg_devices", "not_null device_type")(notNull(sd, "device_type")),
-      c("stg_devices", "not_null plant_location")(notNull(sd, "plant_location")),
-      c("stg_devices", "not_null is_active")(notNull(sd, "is_active")),
-      c("stg_alerts", "not_null alert_id")(notNull(sa, "alert_id")),
-      c("stg_alerts", "unique alert_id")(unique(sa, "alert_id")),
-      c("stg_alerts", "not_null device_id")(notNull(sa, "device_id")),
-      c("stg_alerts", "not_null alert_type")(notNull(sa, "alert_type")),
-      c("stg_alerts", "accepted_values alert_type")(
-        acceptedValues(sa, "alert_type", Seq("threshold_breach", "data_quality", "equipment_fault", "maintenance_due"))),
-      c("stg_alerts", "not_null severity")(notNull(sa, "severity")),
-      c("stg_alerts", "accepted_values severity")(
-        acceptedValues(sa, "severity", Seq("info", "warning", "critical"))),
+      sr.notNull("reading_id"), sr.unique("reading_id"), sr.notNull("device_id"),
+      sr.notNull("metric_name"),
+      sr.accepted("metric_name", "temperature", "vibration", "humidity", "pressure"),
+      sr.notNull("reading_ts"),
+      sd.notNull("device_id"), sd.unique("device_id"), sd.notNull("device_name"),
+      sd.notNull("device_type"), sd.notNull("plant_location"), sd.notNull("is_active"),
+      sa.notNull("alert_id"), sa.unique("alert_id"), sa.notNull("device_id"),
+      sa.notNull("alert_type"),
+      sa.accepted("alert_type", "threshold_breach", "data_quality", "equipment_fault",
+        "maintenance_due"),
+      sa.notNull("severity"), sa.accepted("severity", severities: _*),
       // intermediate/schema.yml — 15
-      c("int_sensor_readings_cleaned", "not_null reading_id")(notNull(cl, "reading_id")),
-      c("int_sensor_readings_cleaned", "unique reading_id")(unique(cl, "reading_id")),
-      c("int_sensor_readings_cleaned", "not_null device_id")(notNull(cl, "device_id")),
-      c("int_sensor_readings_cleaned", "relationships device_id -> stg_devices")(
-        relationships(cl, "device_id", sd, "device_id")),
-      c("int_sensor_readings_cleaned", "not_null is_anomaly")(notNull(cl, "is_anomaly")),
-      c("int_sensor_readings_cleaned", "not_null is_missing_value")(notNull(cl, "is_missing_value")),
-      c("int_device_health", "not_null device_health_key")(notNull(dh, "device_health_key")),
-      c("int_device_health", "unique device_health_key")(unique(dh, "device_health_key")),
-      c("int_device_health", "not_null reading_count")(notNull(dh, "reading_count")),
-      c("int_alerts_enriched", "not_null alert_id")(notNull(ae, "alert_id")),
-      c("int_alerts_enriched", "unique alert_id")(unique(ae, "alert_id")),
-      c("int_alerts_enriched", "not_null device_id")(notNull(ae, "device_id")),
-      c("int_alerts_enriched", "relationships device_id -> stg_devices")(
-        relationships(ae, "device_id", sd, "device_id")),
-      c("int_alerts_enriched", "accepted_values severity")(
-        acceptedValues(ae, "severity", Seq("info", "warning", "critical"))),
-      c("int_alerts_enriched", "not_null severity_score")(notNull(ae, "severity_score")),
+      cl.notNull("reading_id"), cl.unique("reading_id"), cl.notNull("device_id"),
+      cl.deviceRelationship, cl.notNull("is_anomaly"), cl.notNull("is_missing_value"),
+      dh.notNull("device_health_key"), dh.unique("device_health_key"),
+      dh.notNull("reading_count"),
+      ae.notNull("alert_id"), ae.unique("alert_id"), ae.notNull("device_id"),
+      ae.deviceRelationship, ae.accepted("severity", severities: _*),
+      ae.notNull("severity_score"),
       // marts/schema.yml — 19
-      c("fct_hourly_metrics", "not_null device_health_key")(notNull(hm, "device_health_key")),
-      c("fct_hourly_metrics", "unique device_health_key")(unique(hm, "device_health_key")),
-      c("fct_hourly_metrics", "not_null device_id")(notNull(hm, "device_id")),
-      c("fct_hourly_metrics", "not_null metric_name")(notNull(hm, "metric_name")),
-      c("fct_hourly_metrics", "accepted_values health_status")(
-        acceptedValues(hm, "health_status", Seq("healthy", "warning", "degraded", "critical"))),
-      c("fct_device_summary", "not_null device_summary_key")(notNull(ds, "device_summary_key")),
-      c("fct_device_summary", "unique device_summary_key")(unique(ds, "device_summary_key")),
-      c("fct_device_summary", "not_null health_score")(notNull(ds, "health_score")),
-      c("fct_device_summary", "accepted_values health_category")(
-        acceptedValues(ds, "health_category", Seq("healthy", "at_risk", "degraded", "critical"))),
-      c("fct_anomaly_events", "not_null anomaly_event_key")(notNull(an, "anomaly_event_key")),
-      c("fct_anomaly_events", "unique anomaly_event_key")(unique(an, "anomaly_event_key")),
-      c("fct_anomaly_events", "not_null device_id")(notNull(an, "device_id")),
-      c("fct_anomaly_events", "not_null actual_value")(notNull(an, "actual_value")),
-      c("fct_anomaly_events", "accepted_values breach_direction")(
-        acceptedValues(an, "breach_direction", Seq("above_upper", "below_lower"))),
-      c("dim_devices", "not_null device_key")(notNull(dd, "device_key")),
-      c("dim_devices", "unique device_key")(unique(dd, "device_key")),
-      c("dim_devices", "not_null device_id")(notNull(dd, "device_id")),
-      c("dim_devices", "unique device_id")(unique(dd, "device_id")),
-      c("dim_devices", "not_null is_active")(notNull(dd, "is_active")),
+      hm.notNull("device_health_key"), hm.unique("device_health_key"),
+      hm.notNull("device_id"), hm.notNull("metric_name"),
+      hm.accepted("health_status", "healthy", "warning", "degraded", "critical"),
+      ds.notNull("device_summary_key"), ds.unique("device_summary_key"),
+      ds.notNull("health_score"),
+      ds.accepted("health_category", "healthy", "at_risk", "degraded", "critical"),
+      an.notNull("anomaly_event_key"), an.unique("anomaly_event_key"),
+      an.notNull("device_id"), an.notNull("actual_value"),
+      an.accepted("breach_direction", "above_upper", "below_lower"),
+      dd.notNull("device_key"), dd.unique("device_key"), dd.notNull("device_id"),
+      dd.unique("device_id"), dd.notNull("is_active"),
       // singular test — 1
-      c("stg_alerts", "assert_no_orphan_alerts")(orphanAlerts(sa, sd)))
+      Check("stg_alerts", "assert_no_orphan_alerts",
+        Opaque(() => orphanAlerts(m.stgAlerts, m.stgDevices))))
   }
 
   case class CheckResult(model: String, test: String, violations: Long) {
     def passed: Boolean = violations == 0
   }
 
-  /** Violation counts of a whole gate in one Spark action: each check's
-    * violations frame is tagged with its index, the tagged frames are
-    * unioned, and one `groupBy(__check).count()` is collected. An index
-    * with no row has 0 violations. The counts equal each frame's own
-    * `count()`; only the per-check planning and job overhead goes.
+  /** The violation counts of a gate as one frame of (`__check` = index in
+    * `checks`, `__n` = violations), without the checks that pass.
+    *
+    * Row predicates and unique keys are counted per model frame (by
+    * reference): one `groupBy` on the model's first unique key carries
+    * `count(*)` and a `count(when(p, 1))` per row predicate, so the row
+    * counts ride the exchange `unique` pays anyway (a model without a unique
+    * key gets a global aggregate). Each group row is unpivoted to one
+    * (`__check`, `__n`) row per check, and zero counts are dropped before
+    * the final exchange. A null key's group counts toward the row
+    * predicates but never toward `unique`. Any other check — an opaque
+    * frame or a model's second unique key — contributes one row per
+    * violation. One `groupBy(__check)` sums the lot.
+    */
+  def gate(checks: Seq[Check]): DataFrame = {
+    require(checks.nonEmpty, "a gate needs at least one check")
+    val indexed = checks.zipWithIndex
+    def modelOf(s: Shape): Option[DataFrame] = s match {
+      case RowPredicate(df, _) => Some(df)
+      case UniqueKey(df, _) => Some(df)
+      case Opaque(_) => None
+    }
+    // `distinct` compares frames by reference: Dataset keeps Object.equals.
+    val fused = indexed.flatMap { case (ch, _) => modelOf(ch.shape) }.distinct.map { df =>
+      val own = indexed.filter { case (ch, _) => modelOf(ch.shape).exists(_ eq df) }
+      val key = own.collectFirst { case (Check(_, _, UniqueKey(_, k)), i) => (k, i) }.toSeq
+      val predicates = own.collect { case (Check(_, _, RowPredicate(_, p)), i) => (p, i) }
+      val counted = df.groupBy(key.map(k => col(k._1)): _*).agg(
+        count(lit(1)).as("__rows"),
+        predicates.map { case (p, i) => count(when(p, 1)).as(s"__n$i") }: _*)
+      val perCheck =
+        key.map { case (k, i) => i -> when(col(k).isNotNull && col("__rows") > 1, 1L).otherwise(0L) } ++
+          predicates.map { case (_, i) => i -> col(s"__n$i") }
+      val rows = counted.select(inline(array(perCheck.map { case (i, n) =>
+        struct(lit(i).as("__check"), n.as("__n")) }: _*))).filter(col("__n") > 0)
+      (rows, perCheck.map(_._1))
+    }
+    val done = fused.flatMap(_._2).toSet
+    val rest = indexed.filterNot { case (_, i) => done(i) }.map { case (ch, i) =>
+      ch.violations().select(lit(i).as("__check"), lit(1L).as("__n"))
+    }
+    (fused.map(_._1) ++ rest).reduce(_ union _)
+      .groupBy("__check").agg(sum("__n").as("__n"))
+  }
+
+  /** Violation counts of a whole gate in one Spark action: collects `gate`.
+    * An index with no row has 0 violations; the counts equal each check's
+    * own `violations().count()`.
     */
   def evaluate(checks: Seq[Check]): Seq[CheckResult] =
     if (checks.isEmpty) Nil
     else {
-      val counts = checks.zipWithIndex
-        .map { case (ch, i) => ch.violations().select(lit(i).as("__check")) }
-        .reduce(_ union _)
-        .groupBy("__check").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val counts = gate(checks).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       checks.zipWithIndex.map { case (ch, i) =>
         CheckResult(ch.model, ch.test, counts.getOrElse(i, 0L))
       }

@@ -100,6 +100,7 @@ object StreamingIngest {
         val cleaned = Intermediate.intSensorReadingsCleaned(
           Staging.stgSensorReadings(batch, cfg), devices, cfg)
         Materializer.incrementalUpsert(cleaned, targetPath, Seq("reading_id"))
+        ()
       }
       .start()
 

@@ -38,6 +38,16 @@ class ChecksEvaluateSpec extends AnyFunSuite {
     assert(v("stg_alerts" -> "assert_no_orphan_alerts") === 1)
   }
 
+  test("null keys and a duplicated key beside a row violation count as dbt counts them") {
+    val suite = Checks.suite(MedallionFixture.clean.nullAndDuplicateKeys.medallion(spark))
+    val fused = Checks.evaluate(suite)
+    assert(fused === perCheck(suite))
+    val v = fused.map(r => (r.model, r.test) -> r.violations).toMap
+    assert(v("stg_sensor_readings" -> "not_null reading_id") === 2)
+    assert(v("stg_sensor_readings" -> "unique reading_id") === 1, "null keys are not duplicates")
+    assert(v("stg_sensor_readings" -> "accepted_values metric_name") === 1)
+  }
+
   test("an empty gate evaluates to no results") {
     assert(Checks.evaluate(Nil) === Nil)
   }

@@ -226,6 +226,29 @@ class MaterializerSpec extends AnyFunSuite {
     assert(read === payloads.map { case (n, b) => (n, b.length.toLong, b.toSeq) })
   }
 
+  test("a sink's returned schema re-reads the table as a bare read does") {
+    val path = tmpDir()
+    def same(written: org.apache.spark.sql.types.StructType): Unit = {
+      val bare = spark.read.parquet(path)
+      val typed = spark.read.schema(written).parquet(path)
+      assert(typed.schema === bare.schema)
+      assert(typed.exceptAll(bare).isEmpty && bare.exceptAll(typed).isEmpty)
+    }
+    same(Materializer.incrementalUpsert(Seq((1, "a", 10)).toDF("id", "name", "v"), path, Seq("id")))
+    same(Materializer.incrementalUpsert(
+      Seq((2, "b", 20, 7L)).toDF("id", "name", "v", "extra"), path, Seq("id")))
+    same(Materializer.overwriteTable(Seq((3, 1.5)).toDF("id", "x"), path))
+  }
+
+  test("upsertInto without a target drops the old rows (full refresh)") {
+    val path = tmpDir()
+    Materializer.incrementalUpsert(Seq((1, "a"), (2, "b")).toDF("id", "name"), path, Seq("id"))
+    Materializer.upsertInto(None, Seq((2, "b2"), (3, "c")).toDF("id", "name"), path, Seq("id"))
+    val got = spark.read.parquet(path).orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(got === Seq((2, "b2"), (3, "c")))
+  }
+
   test("overwriteTable swaps atomically and is re-runnable") {
     val path = tmpDir()
     Materializer.overwriteTable(Seq((1, "a")).toDF("id", "v"), path)

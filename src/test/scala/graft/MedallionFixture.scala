@@ -52,6 +52,17 @@ case class MedallionFixture(readings: Seq[String], devices: Seq[String], alerts:
       "ALT004,DEV001,threshold_breach,fatal,temperature,85.0,91.0,2025-01-15 09:40:00,,",
       "ALT005,DEV999,data_quality,warning,humidity,,,2025-01-15 09:45:00,,"))
 
+  /** The clean source plus two readings without a reading_id, a second
+    * R0001 and a reading of an unknown metric. On stg_sensor_readings that
+    * is not_null reading_id 2, unique reading_id 1 (the null keys are not a
+    * duplicated key) and accepted_values metric_name 1.
+    */
+  def nullAndDuplicateKeys: MedallionFixture = copy(readings = readings ++ Seq(
+    ",DEV001,temperature,61.5,2025-01-15 08:00:00,2025-01-15 10:05:00",
+    ",DEV002,humidity,52.0,2025-01-15 08:30:00,2025-01-15 10:06:00",
+    "R0001,DEV001,temperature,60.5,2025-01-15 08:00:00,2025-01-15 10:01:00",
+    "R9001,DEV003,rpm,1500.0,2025-01-15 09:00:00,2025-01-15 10:07:00"))
+
   /** The clean source plus one alert of an unknown severity. */
   def unknownSeverity: MedallionFixture = copy(alerts = alerts :+
     "ALT006,DEV002,equipment_fault,fatal,vibration,,,2025-01-15 09:50:00,,")
