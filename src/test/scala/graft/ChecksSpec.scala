@@ -7,10 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ChecksSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private lazy val m = Medallion.fromSeeds(spark)
+  private lazy val m = MedallionFixture.clean.medallion(spark)
+  /** The reference seeds; cases over it call `ReferenceSeeds.assumePresent()` first. */
+  private lazy val ref = Medallion.fromSeeds(spark)
 
   test("the full 54-check suite passes on the seed fixture") {
-    val results = Checks.runAll(m)
+    ReferenceSeeds.assumePresent()
+    val results = Checks.runAll(ref)
     assert(results.length === 54)
     val failing = results.filterNot(_.passed)
     assert(failing.isEmpty, s"failing checks: ${failing.mkString(", ")}")
@@ -18,7 +21,7 @@ class ChecksSpec extends AnyFunSuite {
 
   test("not_null catches injected nulls") {
     val poisoned = m.stgSensorReadings
-      .withColumn("device_id", when(col("reading_id") === "R001", lit(null)).otherwise(col("device_id")))
+      .withColumn("device_id", when(col("reading_id") === "R0001", lit(null)).otherwise(col("device_id")))
     assert(Checks.notNull(poisoned, "device_id").count() === 1)
   }
 
@@ -34,7 +37,7 @@ class ChecksSpec extends AnyFunSuite {
       .withColumn("severity", when(col("alert_id") === "ALT001", "fatal").otherwise(col("severity")))
     assert(Checks.acceptedValues(poisoned, "severity", Seq("info", "warning", "critical")).count() === 1)
     assert(Checks.acceptedValues(m.stgAlerts, "metric_name",
-      Seq("temperature", "vibration", "humidity", "pressure")).count() === 0) // ALT024 null passes
+      Seq("temperature", "vibration", "humidity", "pressure")).count() === 0) // ALT003 null passes
   }
 
   test("relationships/orphans catch a child key missing from the parent") {
@@ -45,10 +48,18 @@ class ChecksSpec extends AnyFunSuite {
   }
 
   test("value_in_range groups violations with occurrence counts (unused macro, implemented)") {
-    val v = Checks.valueInRange(m.stgSensorReadings, "metric_value", 0.0, 100.0).collect()
+    ReferenceSeeds.assumePresent()
+    val v = Checks.valueInRange(ref.stgSensorReadings, "metric_value", 0.0, 100.0).collect()
     // pressure readings (~950-1050) all exceed 100
     assert(v.nonEmpty)
     assert(v.map(_.getAs[Long]("occurrences")).sum === 52)
+  }
+
+  test("value_in_range on MedallionFixture counts its 12 pressure readings, its only values above 100") {
+    val v = Checks.valueInRange(m.stgSensorReadings, "metric_value", 0.0, 100.0).collect()
+    // 3 devices x 4 pressure readings (1000.0-1003.0); every other metric stays under 100
+    assert(v.nonEmpty)
+    assert(v.map(_.getAs[Long]("occurrences")).sum === 12)
   }
 
   test("source freshness: warn after 24h, error after 48h") {

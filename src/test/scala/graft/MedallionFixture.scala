@@ -76,6 +76,14 @@ object MedallionFixture {
   /** Three devices × four metrics every 30 minutes over two hours; DEV002
     * runs hot (temperature anomalies), DEV003 drops one vibration value,
     * and the maintenance alert has a null `alert_ts`. Every check passes.
+    * Facts specs rely on:
+    *  - 3 plants (Plant-Austin, Plant-Chicago, Plant-Detroit), one device
+    *    each, all readings on 2025-01-15: 3 device-day rows;
+    *  - 12 pressure readings (3 devices × 4, 1000.0–1003.0), and no other
+    *    value is ≥ 100 (temperature ≤ 93.5, humidity ≤ 53.0, vibration < 5);
+    *  - DEV002 temperatures (90.5–93.5) exceed the 85.0 upper threshold;
+    *  - the latest `ingested_at` is 2025-01-15 09:35;
+    *  - reading ids run R0001–R0048; ALT003 has a null `metric_name`.
     */
   val clean: MedallionFixture = {
     val readings = for {

@@ -3,14 +3,21 @@ package graft
 import graft.models.{Eda, Medallion}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-value tests over the reference seed fixtures
   * (FIXTURES.md §6; reference README.md:150-160 known-dirty rows).
+  * Each case is canceled where the reference seeds are absent.
   */
 class ModelsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private lazy val m = Medallion.fromSeeds(spark)
+
+  override def withFixture(test: NoArgTest): Outcome = {
+    ReferenceSeeds.assumePresent()
+    super.withFixture(test)
+  }
 
   test("staging row counts match seeds (209 readings / 10 devices / 24 alerts)") {
     assert(m.stgSensorReadings.count() === 209)

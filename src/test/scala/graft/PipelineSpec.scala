@@ -11,7 +11,12 @@ class PipelineSpec extends AnyFunSuite {
 
   private def wh(): String = Files.createTempDirectory("graft_wh").toString
 
+  /** `MedallionFixture.clean` written as a seed directory. */
+  private def seeds(): String =
+    MedallionFixture.clean.writeSeeds(Files.createTempDirectory("graft_seeds").toString)
+
   test("end-to-end: seed -> bronze -> silver -> tests -> gold, all green") {
+    ReferenceSeeds.assumePresent()
     val dir = wh()
     val res = Pipeline.run(spark, dir)
     assert(res.goldBuilt)
@@ -24,11 +29,11 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("incremental re-run is a no-op (watermark filters everything out)") {
-    val dir = wh()
-    Pipeline.run(spark, dir)
+    val dir = wh(); val src = seeds()
+    Pipeline.run(spark, dir, src)
     val before = spark.read.parquet(s"$dir/silver/int_sensor_readings_cleaned")
       .orderBy("reading_id").collect().toSeq
-    val res2 = Pipeline.run(spark, dir) // same seeds, same frozen clock
+    val res2 = Pipeline.run(spark, dir, src) // same seeds, same frozen clock
     assert(res2.goldBuilt)
     val after = spark.read.parquet(s"$dir/silver/int_sensor_readings_cleaned")
       .orderBy("reading_id").collect().toSeq
@@ -36,25 +41,26 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("full refresh rebuilds and matches the incremental result") {
-    val dir = wh()
-    Pipeline.run(spark, dir)
+    val dir = wh(); val src = seeds()
+    Pipeline.run(spark, dir, src)
     val incr = spark.read.parquet(s"$dir/silver/int_device_health")
       .orderBy("device_health_key").collect().toSeq
-    Pipeline.run(spark, dir, fullRefresh = true)
+    Pipeline.run(spark, dir, src, fullRefresh = true)
     val full = spark.read.parquet(s"$dir/silver/int_device_health")
       .orderBy("device_health_key").collect().toSeq
     assert(incr === full)
   }
 
   test("conditional refresh branches on the anomaly-count scalar") {
-    val dir = wh()
+    val dir = wh(); val src = seeds()
     // threshold 0: any anomaly forces the full-refresh branch; just assert it runs green
-    Pipeline.run(spark, dir)
-    val res = Pipeline.runWithConditionalRefresh(spark, dir, anomalyThreshold = 0)
+    Pipeline.run(spark, dir, src)
+    val res = Pipeline.runWithConditionalRefresh(spark, dir, src, anomalyThreshold = 0)
     assert(res.goldBuilt)
   }
 
   test("forEachPlant fans out over distinct locations with bounded concurrency") {
+    ReferenceSeeds.assumePresent()
     val m = Medallion.fromSeeds(spark)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val results = Pipeline.forEachPlant(m.stgDevices) { loc =>
@@ -64,6 +70,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(results.map(_._1).sorted === Seq("Plant-Austin", "Plant-Chicago", "Plant-Detroit"))
     assert(results.forall(_._2.isSuccess))
     assert(results.map(_._2.get).sum === 10)
+  }
+
+  test("forEachPlant on MedallionFixture: one device-day per plant") {
+    val m = MedallionFixture.clean.medallion(spark)
+    val results = Pipeline.forEachPlant(m.stgDevices) { loc =>
+      m.fctDeviceSummary.filter(col("plant_location") === loc).count()
+    }
+    assert(results.map(_._1).sorted === Seq("Plant-Austin", "Plant-Chicago", "Plant-Detroit"))
+    assert(results.forall(_._2.isSuccess))
+    assert(results.map(_._2.get).sum === 3) // 3 devices, all readings on 2025-01-15
   }
 
   test("retry retries transient failures then succeeds") {
@@ -111,9 +127,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("threads=1 and threads=4 lifecycles produce identical tables and checks") {
-    val d1 = wh(); val d4 = wh()
-    val r1 = Pipeline.run(spark, d1, threads = 1)
-    val r4 = Pipeline.run(spark, d4, threads = 4)
+    val d1 = wh(); val d4 = wh(); val src = seeds()
+    val r1 = Pipeline.run(spark, d1, src, threads = 1)
+    val r4 = Pipeline.run(spark, d4, src, threads = 4)
     assert(r1 === r4)
     for (t <- Seq("silver/int_sensor_readings_cleaned", "silver/int_device_health",
         "silver/int_alerts_enriched", "gold/fct_hourly_metrics",
@@ -127,7 +143,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("lineage manifest: declared DAG matches Medallion wiring, acyclic, schemas real") {
-    val m = graft.models.Medallion.fromSeeds(spark)
+    val m = MedallionFixture.clean.medallion(spark)
     val names = m.byName.map(_._1)
     // every model has a declared dependency entry and vice versa
     assert(graft.exec.Lineage.dependencies.keySet === names.toSet)

@@ -28,11 +28,16 @@ class StreamingSpec extends AnyFunSuite {
     Files.write(java.nio.file.Paths.get(dir, name),
       (csvHeader +: rows).mkString("\n").getBytes("UTF-8"))
 
+  /** stg_devices over `MedallionFixture.clean` (DEV001-DEV003). */
+  private def fixtureDevices() = Staging.stgDevices(
+    MedallionFixture.frame(spark, MedallionFixture.clean.devices, Catalog.devicesSchema),
+    RunConfig.frozen)
+
   test("file-source stream -> foreachBatch upsert: idempotent re-ingestion across batches") {
     val landing = tmpDir("graft-landing")
     val target = tmpDir("graft-silver") + "/readings"
     val checkpoint = tmpDir("graft-ckpt")
-    val devices = Staging.stgDevices(Catalog.rawDevices(spark), RunConfig.frozen)
+    val devices = fixtureDevices()
 
     writeLanding(landing, "batch1.csv", Seq(
       "R001,DEV001,temperature,72.5,2024-01-15 08:00:00,2024-01-15 08:01:00",
@@ -460,7 +465,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static join: stream enriches from the batch dim and matches the batch join") {
     implicit val sqlCtx = spark.sqlContext
-    val devices = Staging.stgDevices(Catalog.rawDevices(spark), RunConfig.frozen)
+    val devices = fixtureDevices()
     val mem = MemoryStream[(String, Timestamp, Double)]
     val readings = mem.toDF().toDF("device_id", "reading_ts", "temperature")
     val enriched = StreamingIngest.enrichWithDevices(readings, devices)
