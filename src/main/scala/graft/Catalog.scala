@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 
 /** Source registration: typed readers for the driver-provided TPC-H-ish
   * parquet tables (/root/repo/TESTDATA.md) and for the reference's three
-  * CSV seed tables (schemas from /root/reference/seeds/schema.yml:1-43 —
+  * CSV seed tables (schemas from the reference's seeds/schema.yml:1-43 —
   * re-declared here as Spark StructTypes, never inferSchema, so empty CSV
   * cells load as null and ids like "R001" stay strings).
   */
@@ -185,14 +185,12 @@ object Catalog {
       .option("dateFormat", "yyyy-MM-dd")
       .csv(path)
 
-  val defaultSeedDir = "/root/reference/seeds"
-
-  def rawSensorReadings(spark: SparkSession, dir: String = defaultSeedDir): DataFrame =
+  def rawSensorReadings(spark: SparkSession, dir: String): DataFrame =
     seed(spark, s"$dir/raw_sensor_readings.csv", sensorReadingsSchema)
 
-  def rawDevices(spark: SparkSession, dir: String = defaultSeedDir): DataFrame =
+  def rawDevices(spark: SparkSession, dir: String): DataFrame =
     seed(spark, s"$dir/raw_devices.csv", devicesSchema)
 
-  def rawAlerts(spark: SparkSession, dir: String = defaultSeedDir): DataFrame =
+  def rawAlerts(spark: SparkSession, dir: String): DataFrame =
     seed(spark, s"$dir/raw_alerts.csv", alertsSchema)
 }

@@ -283,7 +283,6 @@ object CorpusRun {
     // (the mutated family's decisions equal a from-scratch curation run
     // over the survivors — the q204 law inside the lifecycle).
     import graft.streaming.ForgetStream
-    graft.functions.ShingleHashes.register(spark)
     // the stage is self-contained per run: a fresh copy plus fresh
     // checkpoint/markers/landing, so re-running the lifecycle replays
     // the erasure deterministically instead of the checkpoint skipping
@@ -708,16 +707,7 @@ object CorpusRun {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.CorpusRun <sfDir> <outDir>")
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .appName("graft-corpus-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv()
     val stages = run(spark, sfDir, outDir)
     stages.foreach { st =>
       val mark = if (st.ok) "ok  " else "FAIL"

@@ -1,30 +1,26 @@
 package graft
 
 import graft.exec.Pipeline
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry for the medallion pipeline — the `dbt seed && dbt run &&
   * dbt test` lifecycle (SURVEY §3) as one command:
   *
-  *   runMain graft.Run <warehouseDir> [seedDir] [--full-refresh]
+  *   runMain graft.Run <warehouseDir> <seedDir> [--full-refresh]
+  *
+  * `seedDir` holds `raw_sensor_readings.csv`, `raw_devices.csv` and
+  * `raw_alerts.csv` in the `Catalog` seed schemas.
   */
 object Run {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: graft.Run <warehouseDir> [seedDir] [--full-refresh]")
-    val warehouseDir = args(0)
-    val seedDir = args.drop(1).find(!_.startsWith("--")).getOrElse(Catalog.defaultSeedDir)
+    val paths = args.filterNot(_.startsWith("--"))
+    if (paths.length != 2) {
+      System.err.println("usage: graft.Run <warehouseDir> <seedDir> [--full-refresh]")
+      sys.exit(2)
+    }
+    val (warehouseDir, seedDir) = (paths(0), paths(1))
     val fullRefresh = args.contains("--full-refresh")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv()
 
     val res = Pipeline.run(spark, warehouseDir, seedDir, fullRefresh = fullRefresh)
     val silverFail = res.silverChecks.filterNot(_.passed)

@@ -79,7 +79,7 @@ object Pipeline {
   def run(
       spark: SparkSession,
       warehouseDir: String,
-      seedDir: String = Catalog.defaultSeedDir,
+      seedDir: String,
       cfg: RunConfig = RunConfig.frozen,
       fullRefresh: Boolean = false,
       threads: Int = 4): Result = {
@@ -181,7 +181,7 @@ object Pipeline {
   def runWithConditionalRefresh(
       spark: SparkSession,
       warehouseDir: String,
-      seedDir: String = Catalog.defaultSeedDir,
+      seedDir: String,
       cfg: RunConfig = RunConfig.frozen,
       anomalyThreshold: Long = 50): Result = {
     val anomalyCount = Materializer.readTarget(spark, s"$warehouseDir/silver/int_sensor_readings_cleaned")

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -79,15 +78,7 @@ case class BitmapDistinct(
 }
 
 object BitmapDistinct {
-  /** Register `bitmap_distinct(col, maxId)` (maxId a literal). */
-  def register(spark: SparkSession): Unit =
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_distinct",
-      exprs => BitmapDistinct(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "scala_udf")
-
-  /** Column wrapper — requires register(spark) once per session. */
+  /** Column wrapper for `bitmap_distinct(col, maxId)`. */
   def apply(c: Column, maxId: Int): Column =
     call_function("bitmap_distinct", c, org.apache.spark.sql.functions.lit(maxId))
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -59,11 +58,7 @@ object BpeMerge {
     new GenericArrayData(out.toArray)
   }
 
-  def register(spark: SparkSession): Unit =
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_merge", exprs => BpeMerge(exprs.head, exprs(1), exprs(2)), "scala_udf")
-
-  /** Column wrapper — requires register(spark) once per session. */
+  /** Column wrapper. */
   def apply(toks: Column, a: Column, b: Column): Column =
     call_function("bpe_merge", toks, a, b)
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
@@ -37,10 +36,6 @@ object DoubleBits {
     */
   def withCast(e: Expression): DoubleBits = DoubleBits(Cast(e, DoubleType))
 
-  def register(spark: SparkSession): Unit =
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "double_bits", exprs => withCast(exprs.head), "scala_udf")
-
-  /** Column wrapper — requires register(spark) once per session. */
+  /** Column wrapper. */
   def apply(v: Column): Column = call_function("double_bits", v)
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -61,15 +60,10 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 }
 
 object RollingHash {
-  /** Register `rolling_hash` in the session's function registry (the
-    * Column companion / expression converter are private[sql] in Spark 4,
-    * so the registry + call_function is the public bridge).
+  /** Column wrapper (the Column companion / expression converter are
+    * private[sql] in Spark 4, so `call_function` on the name
+    * `GraftExtensions` injects is the public bridge).
     */
-  def register(spark: SparkSession): Unit =
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "scala_udf")
-
-  /** Column wrapper — requires register(spark) once per session. */
   def apply(c: Column): Column = call_function("rolling_hash", c)
 
   /** DuckDB SQL mirror of the hash over an arbitrary string expression.

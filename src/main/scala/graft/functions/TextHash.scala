@@ -1,11 +1,10 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -476,50 +475,7 @@ case class LinearScore(child: Expression, w: Seq[Long]) extends UnaryExpression 
 }
 
 object ShingleHashes {
-  def register(spark: SparkSession): Unit = {
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_hashes", exprs => TokenHashes(exprs.head), "scala_udf")
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "feature_hash_vec",
-      exprs => FeatureHashVec(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes_all",
-      exprs => ShingleHashesAll(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_sketch",
-      exprs => WinnowSketch(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "scala_udf")
-  }
-
-  /** Register the fused minhash signature under `name` with the hash
-    * family fixed at registration time (the family is inlined into
-    * machine-generated oracle SQL from the same values, so it must not
-    * arrive via per-call literals that could drift).
-    */
-  def registerMinhash(spark: SparkSession, name: String, n: Int, prime: Long,
-      a: Seq[Long], b: Seq[Long]): Unit =
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinhashSig(exprs.head, n, prime, a, b), "scala_udf")
-
-  /** Register the fused linear scorer with the weight table fixed at
-    * registration time (inlined into the oracle SQL from the same values).
-    */
-  def registerLinearScore(spark: SparkSession, name: String, w: Seq[Long]): Unit =
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LinearScore(exprs.head, w), "scala_udf")
-
-  def registerSimhash(spark: SparkSession, name: String, bits: Int): Unit =
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SimhashSig(exprs.head, bits), "scala_udf")
-
-  /** Distinct n-shingle hashes column (register(spark) once per session). */
+  /** Distinct n-shingle hashes column. */
   def apply(text: Column, n: Int): Column =
     call_function("shingle_hashes", text, org.apache.spark.sql.functions.lit(n))
 

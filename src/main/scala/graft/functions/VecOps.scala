@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.{call_function, lit, typedlit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
@@ -56,17 +55,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 }
 
 object VecDot {
-  def register(spark: SparkSession): Unit = {
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "scala_udf")
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_sqdist", exprs => VecSqDist(exprs.head, exprs(1)), "scala_udf")
-    castToImpl(spark).sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs.head, exprs(1), exprs(2),
-        exprs(3).eval().asInstanceOf[Int]), "scala_udf")
-  }
-
-  /** Column wrapper — requires register(spark) once per session. */
+  /** Column wrapper. */
   def apply(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 }
 
@@ -125,7 +114,7 @@ case class VecSqDist(left: Expression, right: Expression) extends BinaryExpressi
 }
 
 object VecSqDist {
-  /** Column wrapper — requires VecDot.register(spark) once per session. */
+  /** Column wrapper. */
   def apply(a: Column, b: Column): Column = call_function("vec_sqdist", a, b)
 }
 
@@ -255,7 +244,7 @@ case class PqEncode(vec: Expression, cb: Expression, kIds: Expression,
 
 object PqEncode {
   /** Column form over a driver-side codebook `cb(m) = Seq((kId, codeword))`
-    * — requires VecDot.register(spark) once per session. Codeword ids must
+    * Codeword ids must
     * be identical across subspaces (they are: one id set indexes every
     * subspace's codewords). The flat layout + ascending-id sort happen
     * here, once, on the driver.

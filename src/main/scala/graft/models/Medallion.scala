@@ -55,10 +55,10 @@ object Medallion {
       Marts.dimDevices(stgD, cleaned, cfg))
   }
 
-  /** Build from the reference seed CSVs. */
+  /** Build from the seed CSVs under `seedDir` (`Catalog.raw*`). */
   def fromSeeds(
       spark: SparkSession,
-      seedDir: String = Catalog.defaultSeedDir,
+      seedDir: String,
       cfg: RunConfig = RunConfig.frozen): Medallion =
     build(
       Catalog.rawSensorReadings(spark, seedDir),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.2 P1, §2.4 F1-F5). Materialized as unpersisted DataFrames
   * (the reference's `materialized='view'`, dbt_project.yml:28-31).
   *
-  * Semantics from /root/reference/models/staging/stg_sensor_readings.sql,
+  * Semantics from the reference's models/staging/stg_sensor_readings.sql,
   * stg_devices.sql, stg_alerts.sql.
   */
 object Staging {

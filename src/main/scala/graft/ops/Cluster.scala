@@ -198,7 +198,7 @@ object Cluster {
   }
 
   /** The q65 pipeline over an arbitrary (doc_id, text) frame — also the
-    * 10× scale-probe entry (`Scratch scale`).
+    * 10× scale-probe entry (SURVEY.md §8, "10× scale probe").
     */
   def dedupClusters(d: DataFrame): DataFrame = {
     val fp = md5(TextOps.normalized(col("text")))
@@ -236,7 +236,7 @@ object Cluster {
   }
 
   /** The measured selection rule for the PageRank loops (r13 VERDICT #8,
-    * r14 `Scratch prprobe`): ≤ [[SmallGraphMaxEdges]] → one-task
+    * OPTIMIZATION_r14.md "PageRank loop crossover"): ≤ [[SmallGraphMaxEdges]] → one-task
     * in-memory sweeps (validated: at 4.7M edges the local path, 3.5 s,
     * still edges out the DF loop, 4.2 s — the 8M bound sits right at the
     * crossover); above it → the DataFrame loop. The RDD co-partitioned
@@ -330,7 +330,7 @@ object Cluster {
   }
 
   /** The q71 pipeline over arbitrary TPC-H-shaped frames — also the 10×
-    * scale-probe entry (`Scratch scale`).
+    * scale-probe entry (SURVEY.md §8, "10× scale probe").
     */
   def pagerank(lineitem: DataFrame, orders: DataFrame,
       supplier: DataFrame, customer: DataFrame): DataFrame = {
@@ -449,7 +449,8 @@ object Cluster {
     * Arithmetic is the identical fixed-point integer form (`/` on
     * positive Longs ≡ `div`), so either path satisfies the same oracle.
     *
-    * r14 `Scratch prprobe` (id-shifted edge multiples, min-of-reps):
+    * The r14 probe (OPTIMIZATION_r14.md "PageRank loop crossover";
+    * id-shifted edge multiples, min-of-reps):
     * 1.17M edges — DF loop 2.0 s, RDD loop 10.7 s, one-task local 1.0 s;
     * 4.7M edges — DF 4.2 s, RDD 34.0 s, local 3.5 s. The RDD deficit
     * WIDENS with edge count on a single node (shuffle is memcpy-cheap

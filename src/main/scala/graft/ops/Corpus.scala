@@ -448,7 +448,6 @@ object Corpus {
     * pass — token-stream linear, the 1-row merge table broadcasts.
     */
   val q105 = Q("q105_bpe_merge_loop", q105OracleSql) { (s, dir) =>
-    graft.functions.BpeMerge.register(s)
     import org.apache.spark.sql.expressions.Window
     val tk = docs(s, dir).select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
     def pairCounts(toks: DataFrame): DataFrame = toks
@@ -623,7 +622,6 @@ object Corpus {
     * parity equals greedy left-to-right exactly.
     */
   val q118 = Q("q118_bpe_encode", q118OracleSql) { (s, dir) =>
-    graft.functions.BpeMerge.register(s)
     import org.apache.spark.sql.expressions.Window
     val tk0 = pretokens(docs(s, dir)).localCheckpoint()
     val merges = trainMerges(tk0, BpeEncodeRounds)
@@ -690,7 +688,6 @@ object Corpus {
     * |sources| rows.
     */
   val q191 = Q("q191_tokenizer_fertility", q191OracleSql) { (s, dir) =>
-    graft.functions.BpeMerge.register(s)
     val d = docs(s, dir)
     val tk0 = pretokens(d).localCheckpoint()
     val merges = trainMerges(tk0, BpeEncodeRounds)
@@ -740,7 +737,6 @@ object Corpus {
     * |sources| rows.
     */
   val q192 = Q("q192_fertility_reweighting", q192OracleSql) { (s, dir) =>
-    graft.functions.BpeMerge.register(s)
     val d = docs(s, dir)
     val tk0 = pretokens(d).localCheckpoint()
     val merges = trainMerges(tk0, BpeEncodeRounds)

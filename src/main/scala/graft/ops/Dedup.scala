@@ -128,9 +128,6 @@ object Dedup {
     * tree). At 100 TB: embarrassingly parallel, no exchange at all.
     */
   def minhashSignatures(d: DataFrame): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
-    ShingleHashes.registerMinhash(d.sparkSession, "minhash_sig", ShingleN,
-      MinhashPrime, hashA.toSeq, hashB.toSeq)
     d.select(col("doc_id"), call_function("minhash_sig", col("text")).as("_mh"))
       .select(col("doc_id") +: element_at(col("_mh"), 1).as("n_shingles") +:
         (0 until NumHashes).map(i => element_at(col("_mh"), i + 2).as(s"sig_$i")): _*)
@@ -142,7 +139,6 @@ object Dedup {
     * oracle mirrors).
     */
   private[graft] def minhashSignaturesAgg(d: DataFrame): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
     val exploded = d
       .select(col("doc_id"), explode(shingleHashes(col("text"))).as("h"))
     val hp = col("h") % MinhashPrime
@@ -154,8 +150,9 @@ object Dedup {
 
   /** (doc_id, band_idx, band_hash) — LSH bucketing of the signature.
     * `bandSize` widens/narrows the bands over the same 64 hashes (the
-    * recall/precision knob `Scratch lshsweep` measures); the default is
-    * the production 16×4 configuration every query uses.
+    * recall/precision knob whose 32×2/16×4/8×8 sweep SURVEY.md's round-10
+    * handoff records); the default is the production 16×4 configuration
+    * every query uses.
     */
   def lshBands(sigs: DataFrame, bandSize: Int = BandSize): DataFrame = {
     require(NumHashes % bandSize == 0,
@@ -213,7 +210,6 @@ object Dedup {
     * h60 buckets → self-join) regenerated in DuckDB list SQL.
     */
   val q31 = Q("q31_minhash_lsh", q31OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val sigs = minhashSignatures(docs(s, dir))
     val bands = lshBands(sigs)
     val other = bands.select(col("doc_id").as("doc_b"),
@@ -247,7 +243,6 @@ object Dedup {
     * drop-empty-docs semantics (and the oracle's `WHERE len(t) > 0`).
     */
   def simhash(d: DataFrame): DataFrame = {
-    ShingleHashes.registerSimhash(d.sparkSession, "simhash_sig", SimBits)
     d.select(col("doc_id"), call_function("simhash_sig", col("text")).as("_sh"))
       .select(col("doc_id"), element_at(col("_sh"), 1).as("n_tokens"),
         element_at(col("_sh"), 2).as("simhash"))
@@ -259,7 +254,6 @@ object Dedup {
     * reference tree for the fused kernel.
     */
   private[graft] def simhashAgg(d: DataFrame): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
     val exploded = d.select(col("doc_id"),
       explode(ShingleHashes.tokens(col("text"))).as("h"))
     val bitSums = (0 until SimBits).map(b =>
@@ -317,7 +311,6 @@ object Dedup {
     * spelled out per bit position).
     */
   val q32 = Q("q32_simhash", q32OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val sigs = simhash(docs(s, dir))
     val bands = sigs.select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map(k =>
@@ -489,7 +482,6 @@ object Dedup {
     * density), never corpus²; verdicts are one per-doc aggregate.
     */
   val q124 = Q("q124_lsh_keep_earliest", q124OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     val bands = lshBands(minhashSignatures(d))
     keepEarliestVerdicts(d.select("doc_id"), earlierBandPartners(bands, bands))
@@ -576,7 +568,6 @@ object Dedup {
     * bounded by rep bucket occupancy; the decision join is rep-keyed.
     */
   val q127 = Q("q127_curation_decisions", q127OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     // gate applied as an in-row filter (Corpus.gateKeepOnly): the former
     // doc_id self-join against gateFrame(d) shuffled the text payload
@@ -687,7 +678,6 @@ object Dedup {
   }
 
   val q133 = Q("q133_quarantine_rates", q133OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val root = buildCurationStores(s, dir)
     quarantineRates(s.read.parquet(s"$root/accepted"),
       s.read.parquet(s"$root/quarantine"))
@@ -753,7 +743,6 @@ object Dedup {
   }
 
   val q134 = Q("q134_curated_packing", q134OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val root = buildCurationStores(s, dir)
     packAccepted(s.read.parquet(s"$root/accepted"))
   }
@@ -766,7 +755,6 @@ object Dedup {
     * no per-pair set materialization.
     */
   def jaccardPairs(d: DataFrame, minShared: Int = 1): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
     // Each exploded row CARRIES its doc's set size: the old separate
     // `sizes` aggregate re-ran the shingle kernel (its doc_id exchange is
     // a different subtree than the join's h exchange, so ReuseExchange
@@ -820,7 +808,6 @@ object Dedup {
     * banding curve (1-(1-J^r)^b ≈ 96% at J=0.5 for 16 bands of 4).
     */
   def jaccardLshPairs(d: DataFrame, minJaccard: Double = 0.5): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
     val sigs = minhashSignatures(d)
     val bands = lshBands(sigs)
     val other = bands.select(col("doc_id").as("doc_b"),
@@ -876,7 +863,6 @@ object Dedup {
     * Oracle: the identical inverted-index formulation in DuckDB.
     */
   val q33 = Q("q33_ngram_jaccard", q33OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     val pairs = jaccardPairs(d)
     // symmetrize so every doc sees its best partner — explode both
@@ -911,7 +897,6 @@ object Dedup {
     * broadcasts.
     */
   def contaminationPairs(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
-    ShingleHashes.register(corpus.sparkSession)
     val c = corpus.select(col("doc_id"), explode(shingleHashes(col("text"))).as("h"))
     // bench rows carry their set size in-row — the old separate bSizes
     // projection ran the benchmark shingle kernel a second time and paid
@@ -1030,7 +1015,6 @@ object Dedup {
     * exchange beyond what the dedup path already pays.
     */
   val q135 = Q("q135_split_leakage", q135OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     val splits = d.select(col("doc_id"), TextOps.splitAssignment(col("text")).as("split"))
     val tagged = jaccardLshPairs(d, 0.5)
@@ -1104,7 +1088,6 @@ object Dedup {
     * each contaminated (doc, bench) pair aggregates its hit positions.
     */
   def contaminationSpans(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
-    ShingleHashes.register(corpus.sparkSession)
     val pos = corpus
       .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
@@ -1208,7 +1191,6 @@ object Dedup {
     * family can serve off an artifact instead of re-deriving it per run.
     */
   def benchShingleHashes(benchmark: DataFrame): DataFrame = {
-    ShingleHashes.register(benchmark.sparkSession)
     benchmark.select(explode(shingleHashes(col("text"))).as("h")).distinct()
   }
 
@@ -1230,7 +1212,6 @@ object Dedup {
     * streamed path hands in the artifact's hashes directly.
     */
   def scrubbedTokensByHashes(corpus: DataFrame, benchHashes: DataFrame): DataFrame = {
-    ShingleHashes.register(corpus.sparkSession)
     val toks = corpus.select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
     val hitPos = positionalShingles(corpus)
       .join(broadcast(benchHashes.select(col("h"))), Seq("h"))
@@ -1402,7 +1383,6 @@ object Dedup {
     * component — (doc_id, cluster_id, split, final_split, moved).
     */
   def leakRepair(d: DataFrame): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
     val splits = d.select(col("doc_id"), TextOps.splitAssignment(col("text")).as("split"))
     val pairs = jaccardLshPairs(d, 0.5)
       .select(col("doc_id").as("src"), col("doc_b").as("dst"))
@@ -1656,7 +1636,6 @@ object Dedup {
     * also re-proves the incremental law end-to-end.
     */
   val q142 = Q("q142_bench_release_delta", q142OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     val corpus = d.filter(col("doc_id") >= 50).select(col("doc_id"), col("text"))
     val h1 = benchShingleHashes(d.filter(col("doc_id") < 25)).localCheckpoint()
@@ -1851,7 +1830,6 @@ object Dedup {
     * unified packing q140.
     */
   def unifiedRepair(s: SparkSession, dir: String): DataFrame = {
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     // each pair pipeline feeds the union AND its provenance flag —
     // evaluate once
@@ -2012,7 +1990,6 @@ object Dedup {
     * (doc_id, source, fp, ln). In-row HOF work only, no shuffle.
     */
   private[graft] def cdcChunks(d: DataFrame): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
     d.select(col("doc_id"), col("source"), TextOps.tokens(col("text")).as("t"),
         ShingleHashes.tokens(col("text")).as("hh"))
       .filter(size(col("t")) > 0)
@@ -2123,7 +2100,6 @@ object Dedup {
     * output is method-count-bounded, never corpus-sized.
     */
   val q172 = Q("q172_dedup_signal_agreement", q172OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     val lex = jaccardLshPairs(d, 0.5)
       .select(col("doc_id"), col("doc_b")).withColumn("m", lit(1L))
@@ -2233,7 +2209,6 @@ object Dedup {
     * direction, tie-broken like q33.
     */
   val q184 = Q("q184_containment_dedup", q184OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     containmentOf(docs(s, dir))
   }
 
@@ -2457,7 +2432,6 @@ object Dedup {
     * (tiny), so both hop joins broadcast against the symmetric edge set.
     */
   val q190 = Q("q190_contamination_radius", q190OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     contaminationBlastRadius(docs(s, dir))
   }
 
@@ -2568,7 +2542,6 @@ object Dedup {
     * production band join.
     */
   val q194 = Q("q194_lsh_recall_monitor", q194OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     val truePairs = jaccardPairs(d)
       .filter(lit(5) * col("n_shared") >=

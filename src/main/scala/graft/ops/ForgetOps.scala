@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Catalog
 import graft.queries.Q
-import graft.functions.ShingleHashes
 import graft.streaming.{CorpusStream, Forget, LshStream}
 
 /** q200-q202 — right-to-be-forgotten over the artifact stores, end to
@@ -137,7 +136,6 @@ object ForgetOps {
     val (idx, dec, rep) = (s"$root/index", s"$root/decisions", s"$root/report")
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      ShingleHashes.register(s)
       val d = docs(s, dir).select("doc_id", "source", "text")
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       LshStream.processBatch(d.filter(col("doc_id") < cut), idx, dec, 0L)
@@ -307,7 +305,6 @@ object ForgetOps {
     val root = curationForgetStorePath(dir)
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      ShingleHashes.register(s)
       val d = docs(s, dir).select("doc_id", "text", "source")
       graft.streaming.CurationStream.processBatch(
         d, s"$root/fp", s"$root/index", s"$root/decisions", 0L,
@@ -430,7 +427,6 @@ object ForgetOps {
     val bounds = Seq(q, 2 * q, 3 * q, Long.MaxValue)
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      graft.functions.ShingleHashes.register(s)
       bounds.zipWithIndex.foreach { case (hi, k) =>
         val lo = if (k == 0) Long.MinValue else bounds(k - 1)
         graft.streaming.ScrubStream.writeShingleDelta(
@@ -475,7 +471,6 @@ object ForgetOps {
     val rows = s"$root/rows"
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      graft.functions.ShingleHashes.register(s)
       val benchRoot = graft.streaming.ScrubStream.buildBenchArtifact(s, dir)
       val bench = s.read.parquet(s"$benchRoot/hashes").localCheckpoint()
       val corpus = docs(s, dir).filter(col("doc_id") >= 50)
@@ -594,7 +589,6 @@ object ForgetOps {
     val deltas = s"$root/deltas"
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      graft.functions.ShingleHashes.register(s)
       val d = docs(s, dir).select("doc_id", "text")
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       CorpusStream.writeSpanDelta(d.filter(col("doc_id") < cut), deltas, 0L)
@@ -640,7 +634,6 @@ object ForgetOps {
     val (chunks, nd) = (s"$root/chunks", s"$root/docs")
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      graft.functions.ShingleHashes.register(s)
       val d = docs(s, dir).select("doc_id", "source", "text")
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       CorpusStream.writeCdcDelta(d.filter(col("doc_id") < cut), chunks, nd, 0L)
@@ -795,7 +788,6 @@ object ForgetOps {
     val (deltas, cents) = (s"$root/deltas", s"$root/centroids")
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      graft.functions.VecDot.register(s)
       val e = Catalog.table(s, dir, "embeddings")
       val ed = e.select(col("vec_id"),
         Similarity.asDouble(col("embedding")).as("v"))
@@ -1061,7 +1053,6 @@ object ForgetOps {
         "SELECT s.vec_id, s.label, s.adc_dist,\n" +
           "  (SELECT CAST(COUNT(DISTINCT vec_id) AS BIGINT) FROM adc) AS n_candidates,")) {
     (s, dir) =>
-      graft.functions.VecDot.register(s)
       import graft.ops.Similarity.{PqM, PqSubDim, PqK, NProbe, asDouble, dot, norm, sqDist}
       val store = buildPqForgetStore(s, dir)
       val e = Catalog.table(s, dir, "embeddings")
@@ -1122,7 +1113,6 @@ object ForgetOps {
     val markers = s"$root/markers"
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      graft.functions.ShingleHashes.register(s)
       val d = Catalog.table(s, dir, "documents").localCheckpoint()
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       val (lm, kanon, chunks, nd, shingle, assets) = (s"$root/lm",
@@ -1220,7 +1210,6 @@ object ForgetOps {
     val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      graft.functions.ShingleHashes.register(s)
       val bounds = Seq(
         Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
@@ -1248,7 +1237,6 @@ object ForgetOps {
     Dedup.containmentOracleSql(
       s"doc_id >= 50 AND doc_id >= (SELECT (MAX(doc_id) // 4) * 2 FROM documents) " +
         s"AND doc_id % $ForgetMod <> $ForgetRes")) { (s, dir) =>
-    graft.functions.ShingleHashes.register(s)
     val (deltas, cut2) = buildShingleTtlStore(s, dir)
     val spine = docs(s, dir).filter(col("doc_id") >= 50 &&
       col("doc_id") >= cut2 && !forgottenPred)
@@ -1538,7 +1526,6 @@ object ForgetOps {
     val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      ShingleHashes.register(s)
       val bounds = Seq(
         Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
@@ -1593,7 +1580,6 @@ object ForgetOps {
     * retained corpus.
     */
   val q223 = Q("q223_dedup_window", q223OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val (idx, cut2) = buildLshTtlStore(s, dir)
     val spine = docs(s, dir).filter(!forgottenPred && col("doc_id") >= cut2)
     LshStream.windowedDecisions(s, idx, spine, lo = 2L).orderBy("doc_id")
@@ -1617,7 +1603,6 @@ object ForgetOps {
     val (fpD, idxD) = (s"$root/fps", s"$root/bands")
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      ShingleHashes.register(s)
       val d = docs(s, dir).select("doc_id", "source", "text")
       val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
       val bounds = Seq(
@@ -1658,7 +1643,6 @@ object ForgetOps {
        |  v.n_earlier, v.dup_of, v.is_band_dup
        |FROM exact e LEFT JOIN verdicts v ON e.doc_id = v.doc_id
        |ORDER BY e.doc_id""".stripMargin) { (s, dir) =>
-    ShingleHashes.register(s)
     val (fpD, idxD) = buildCurationTtlStore(s, dir)
     graft.streaming.CurationStream.windowedDecisions(s, fpD, idxD, lo = 2L)
   }
@@ -1779,7 +1763,6 @@ object ForgetOps {
     val (fpD, idxD) = (s"$root/fps", s"$root/bands")
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      ShingleHashes.register(s)
       val d = docs(s, dir).select("doc_id", "source", "text")
       val (batch, _, w) = amendFixture(s, dir)
       val bounds = Seq(
@@ -1810,7 +1793,6 @@ object ForgetOps {
        |  v.n_earlier, v.dup_of, v.is_band_dup
        |FROM exact e LEFT JOIN verdicts v ON e.doc_id = v.doc_id
        |ORDER BY e.doc_id""".stripMargin) { (s, dir) =>
-    ShingleHashes.register(s)
     val (fpD, idxD) = buildWindowAmendStore(s, dir)
     graft.streaming.CurationStream.windowedDecisions(s, fpD, idxD, lo = 0L)
   }
@@ -1830,7 +1812,6 @@ object ForgetOps {
     val root = curationAmendStorePath(dir)
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      ShingleHashes.register(s)
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
       val bounds = Seq(
@@ -1868,7 +1849,6 @@ object ForgetOps {
        |  v.n_earlier, v.dup_of, v.is_band_dup
        |FROM exact e LEFT JOIN verdicts v ON e.doc_id = v.doc_id
        |ORDER BY e.doc_id""".stripMargin) { (s, dir) =>
-    ShingleHashes.register(s)
     val root = buildCurationAmendStore(s, dir)
     graft.streaming.CurationStream.decisions(s, s"$root/decisions")
   }
@@ -2082,7 +2062,6 @@ object ForgetOps {
        |    ('curation', 'amendments', CAST(1 AS BIGINT))
        |) AS t(store, metric, value)
        |ORDER BY store, metric""".stripMargin) { (s, dir) =>
-    graft.functions.ShingleHashes.register(s)
     val root = buildCurationAmendStore(s, dir)
     graft.streaming.Compliance.ledger(s, Nil,
       amendAuditRoots = Seq(s"$root/amend_audit"))
@@ -2332,7 +2311,6 @@ object ForgetOps {
     val root = curationBandAmendStorePath(dir)
     val marker = new java.io.File(root, "_STORE_COMMITTED")
     if (!marker.exists()) {
-      ShingleHashes.register(s)
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
       val bounds = Seq(
@@ -2374,7 +2352,6 @@ object ForgetOps {
        |  v.n_earlier, v.dup_of, v.is_band_dup
        |FROM exact e LEFT JOIN verdicts v ON e.doc_id = v.doc_id
        |ORDER BY e.doc_id""".stripMargin) { (s, dir) =>
-    ShingleHashes.register(s)
     val root = buildCurationBandAmendStore(s, dir)
     graft.streaming.CurationStream.decisions(s, s"$root/decisions")
   }

@@ -65,7 +65,6 @@ object Mining {
     * widths (q-gram novelty, coverage maps).
     */
   def windowDocFreq(d: DataFrame, w: Int): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
     d.select(col("doc_id"), explode(ShingleHashes(col("text"), w)).as("h"))
       .groupBy("h").agg(count(lit(1)).as("n_docs"))
   }
@@ -91,7 +90,6 @@ object Mining {
     * document with no outer join.
     */
   val q48 = Q("q48_substring_dedup", q48OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val ex = docs(s, dir)
       .select(col("doc_id"), explode(ShingleHashes(col("text"), SubstringWindow)).as("h"))
     val dfreq = ex.groupBy("h").agg(count(lit(1)).as("n_docs"))
@@ -174,7 +172,6 @@ object Mining {
 
   /** q181's span extraction over any documents frame (doc_id, text). */
   private[graft] def duplicatedSpansOf(d: DataFrame): DataFrame = {
-    ShingleHashes.register(d.sparkSession)
     val ex = d.select(col("doc_id"),
       posexplode(call_function("shingle_hashes_all", col("text"),
         lit(SubstringWindow))).as(Seq("pos", "h")))
@@ -270,7 +267,6 @@ object Mining {
 
   /** Span-eligible docs with their positional window hashes. */
   private def spanWindows(d: DataFrame): (DataFrame, DataFrame) = {
-    ShingleHashes.register(d.sparkSession)
     val toks = d.select(col("doc_id"),
       size(graft.ops.TextOps.tokens(col("text"))).cast("long").as("n_tokens"), col("text"))
       .filter(col("n_tokens") >= SubstringWindow)
@@ -490,7 +486,6 @@ object Mining {
     * zero shuffle until the final sort.
     */
   val q92 = Q("q92_quality_classifier", q92OracleSql) { (s, dir) =>
-    ShingleHashes.registerLinearScore(s, "linear_score", classifierWeights)
     val mean = when(col("n_tokens") === 0L, lit(0.0))
       .otherwise(Det.dround(col("score").cast("double") / col("n_tokens"), 4))
     docs(s, dir)
@@ -553,7 +548,6 @@ object Mining {
     * tiered with no corpus-sized shuffle at all.
     */
   val q102 = Q("q102_source_calibration", q102OracleSql) { (s, dir) =>
-    ShingleHashes.registerLinearScore(s, "linear_score", classifierWeights)
     val mean = when(col("n_tokens") === 0L, lit(0.0))
       .otherwise(Det.dround(col("score").cast("double") / col("n_tokens"), 4))
     val sq = docs(s, dir)
@@ -585,7 +579,6 @@ object Mining {
     * ≤2048 rows regardless of benchmark size — the broadcastable index.
     */
   def bloomFilter(benchmark: DataFrame): DataFrame = {
-    ShingleHashes.register(benchmark.sparkSession)
     benchmark
       .select(explode(ShingleHashes(col("text"), Dedup.ShingleN)).as("h"))
       .select(explode(array(
@@ -639,7 +632,6 @@ object Mining {
     * q39's exact containment join. The corpus side never shuffles.
     */
   val q93 = Q("q93_bloom_decontaminate", q93OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir)
     val bloom = bloomFilter(d.filter(col("doc_id") < 50))
     val m = (BloomBits - 1).toLong
@@ -712,7 +704,6 @@ object Mining {
     * source falls back to the PrefixSum kernel (q56's shape).
     */
   val q95 = Q("q95_token_budget", q95OracleSql) { (s, dir) =>
-    ShingleHashes.registerLinearScore(s, "linear_score", classifierWeights)
     val mean = when(col("n_tokens") === 0L, lit(0.0))
       .otherwise(Det.dround(col("score").cast("double") / col("n_tokens"), 4))
     val scored = docs(s, dir)
@@ -1007,7 +998,6 @@ object Mining {
     * the variant that keeps the fingerprint table sub-corpus-sized.
     */
   val q96 = Q("q96_winnowing", q96OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val sk = docs(s, dir)
       .select(col("doc_id"), ShingleHashes.winnow(col("text"), WinnowK, WinnowWindow).as("ws"))
       .select(col("doc_id"), element_at(col("ws"), 1).as("n_kgrams"),
@@ -1205,7 +1195,6 @@ object Mining {
     * differently.
     */
   private[graft] def curriculumKeyed(d: DataFrame): DataFrame = {
-    ShingleHashes.registerLinearScore(d.sparkSession, "linear_score", classifierWeights)
     d.select(col("doc_id"), call_function("linear_score", col("text")).as("_ls"))
       .select(col("doc_id"), element_at(col("_ls"), 1).as("n_tokens"),
         element_at(col("_ls"), 2).as("score"))
@@ -2050,7 +2039,6 @@ object Mining {
     * batch q163 over the union of landings. ≤ |bands|+1 rows per batch.
     */
   private[graft] def evalCells(d: DataFrame): DataFrame = {
-    ShingleHashes.registerLinearScore(d.sparkSession, "linear_score", classifierWeights)
     val scored = d.select(col("doc_id"), col("text"),
       element_at(call_function("linear_score", col("text")), 2).as("score"))
     val withGate = Corpus.gateFrame(scored)
@@ -2160,7 +2148,6 @@ object Mining {
     // kernel's pinned law (h60 of space-joined token n-grams, in order);
     // the size(tokens)>=2 row filter reproduces the old frame exactly
     // (the kernel's <2-token fallback row never materializes).
-    graft.functions.ShingleHashes.register(d.sparkSession)
     d.filter(size(TextOps.tokens(col("text"))) >= 2)
       .select(col("doc_id"), col("source"),
         transform(graft.functions.ShingleHashes.positional(col("text"), 2),
@@ -2817,7 +2804,6 @@ object Mining {
     * |sources|-row rollup.
     */
   val q187 = Q("q187_dupweighted_mixture", q187OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     dupWeightedMixture(docs(s, dir).select(col("doc_id"), col("source"), col("text")))
   }
 
@@ -2895,7 +2881,6 @@ object Mining {
     * assignment is one hash projection; the rollup is |sources| rows.
     */
   val q188 = Q("q188_clusteraware_split", q188OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     clusterAwareSplit(docs(s, dir).select(col("doc_id"), col("source"), col("text")))
   }
 
@@ -2958,7 +2943,6 @@ object Mining {
     * (shared with q187/q188) + two bounded rollups.
     */
   val q193 = Q("q193_duplication_profile", q193OracleSql) { (s, dir) =>
-    ShingleHashes.register(s)
     val d = docs(s, dir).select(col("doc_id"), col("source"), col("text"))
     val csz = nearDupComponents(d)
       .groupBy("component").agg(count(lit(1)).as("csz"))

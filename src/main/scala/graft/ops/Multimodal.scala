@@ -1017,7 +1017,8 @@ object Multimodal {
 
   /** q174's banding + Hamming verify + keep-first report over any
     * (doc_id, phash) frame. `bandBits` widens the bands for larger
-    * corpora (the occupancy mitigation — see `Scratch mmprobe`): recall
+    * corpora (the occupancy mitigation — SURVEY.md §8 records the 16×
+    * multimodal dedup probe): recall
     * for ≤(60/bandBits − 1)-bit-apart pairs stays structural, bucket
     * collisions shrink 2^Δ-fold.
     */
@@ -1476,7 +1477,6 @@ object Multimodal {
     * three broadcast-sized left joins on doc_id.
     */
   val q186 = Q("q186_crossmodal_curation", q186OracleSql) { (s, dir) =>
-    graft.functions.ShingleHashes.register(s)
     crossModalOf(Catalog.table(s, dir, "documents"),
       assets = Some(s.read.parquet(buildAssetStore(s, dir))))
   }
@@ -1491,7 +1491,6 @@ object Multimodal {
     */
   private[graft] def crossModalOf(d: DataFrame,
       assets: Option[DataFrame] = None): DataFrame = {
-    graft.functions.ShingleHashes.register(d.sparkSession)
     // spread: the fused shingle kernel is CPU-dense and this scan is
     // narrow (r14; no-op on real multi-split inputs and on the
     // join-bearing frames CorpusRun's accepted audit hands in)

@@ -81,7 +81,6 @@ object RankSelect {
       maxBucketRows: Long): Seq[Target] = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.DoubleBits.register(spark)
     val withM = df.select(col(groupCol), mappedLong(col(valueCol)).as("_m"))
 
     // pass 1: (group, 12-bit bucket) histogram — small enough to reason
@@ -145,7 +144,6 @@ object RankSelect {
       smallMaxRows: Long = 8L << 20): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.DoubleBits.register(spark)
 
     val targets = locateTargets(df, groupCol, valueCol, quantiles, maxBucketRows)
 

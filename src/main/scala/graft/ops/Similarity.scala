@@ -48,7 +48,6 @@ object Similarity {
        |WHERE a.vec_id = 0 AND b.vec_id <> 0
        |ORDER BY cosine_sim DESC, b.vec_id
        |LIMIT 10""".stripMargin) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") === 0)
       .select(col("v").as("qv"))
@@ -83,7 +82,6 @@ object Similarity {
        |  sim AS best_sim, n_above_05
        |FROM ranked WHERE rn = 1
        |ORDER BY vec_id""".stripMargin) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     // per-vector norm computed ONCE per side, not per pair — the reused
     // double is bit-identical to recomputation, so the oracle (which
     // inlines the norm per pair) still hash-matches
@@ -166,7 +164,6 @@ object Similarity {
     * so bucketing, multiprobe, and ranking are all hash-checked.
     */
   val q36 = Q("q36_ann_lsh", q36OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir)
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v")))
@@ -410,7 +407,6 @@ object Similarity {
     * corpus, and the centroid table (k rows) broadcasts everywhere.
     */
   val q38 = Q("q38_ann_ivf", q38OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val cents = s.read.parquet(buildIvfIndex(s, dir))
     val qv = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
@@ -469,7 +465,6 @@ object Similarity {
        |  MIN(CAST(FLOOR(cos * 1000000.0) AS BIGINT)) AS min_cos_fp
        |FROM j GROUP BY label
        |ORDER BY label""".stripMargin) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val pe = e.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
     val sums = pe.groupBy("label", "pos")
@@ -593,7 +588,6 @@ object Similarity {
         "r -> CAST(r.s_fp AS DOUBLE) / (r.n * 1000000.0))").as("c"))
 
   val q94 = Q("q94_kmeans_step", q94OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     def centroids(members: DataFrame, key: String): DataFrame =
       fixedPointCentroids(members, key)
@@ -643,7 +637,7 @@ object Similarity {
   /** Codegen'd (VecSqDist) — bit-identical to the
     * `aggregate(zip_with(a, b, (x,y) => (x-y)*(x-y)), 0.0, _+_)` HOF
     * fold it replaced; the interpreted HOF was the measured bottleneck
-    * of the M·K-per-vector encode rounds. Requires VecDot.register.
+    * of the M·K-per-vector encode rounds.
     */
   private[ops] def sqDist(a: Column, b: Column): Column =
     graft.functions.VecSqDist(a, b)
@@ -695,7 +689,6 @@ object Similarity {
     * the array form is derivable from packed_code (4 bits per subspace).
     */
   val q97 = Q("q97_pq_encode", q97OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val subArr = array((0 until PqM).map(m =>
       struct(lit(m).as("m"), slice(col("v"), m * PqSubDim + 1, PqSubDim).as("sv"))): _*)
@@ -828,7 +821,6 @@ object Similarity {
       lit(0L), (a, x) => a + x)
 
   val q107 = Q("q107_pq_train_round", q107OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     // seed codebook: the first PqK vectors' subvectors, collected once
     // (M·K·subdim doubles of driver state — a broadcast in all but name)
@@ -946,7 +938,6 @@ object Similarity {
     * against; codes commit last so `_SUCCESS` implies the sidecar exists.
     */
   def writePqIndex(e: DataFrame, path: String): Unit = {
-    graft.functions.VecDot.register(e.sparkSession)
     val sub = subspaces(e, "v")
     val cb = sub.filter(col("vec_id") < PqK)
       .select(col("m").as("cm"), col("vec_id").as("k"), col("sv").as("cw"))
@@ -968,7 +959,6 @@ object Similarity {
     * `appendPqIndexMeasured` below is this append WITH that trigger.
     */
   def appendPqIndex(s: SparkSession, path: String, delta: DataFrame): Unit = {
-    graft.functions.VecDot.register(s)
     val cb = s.read.parquet(cbPath(path))
     encodeAgainst(subspaces(delta, "v"), cb).write.mode("append").parquet(path)
   }
@@ -1006,7 +996,6 @@ object Similarity {
     */
   def appendPqIndexMeasured(s: SparkSession, path: String, delta: DataFrame,
       thresholdPct: Long = 150L): PqAppendDrift = {
-    graft.functions.VecDot.register(s)
     val cb = s.read.parquet(cbPath(path))
     val coded = encodeAgainstWithDist(subspaces(delta, "v"), cb).localCheckpoint()
     coded.select("vec_id", "m", "k").write.mode("append").parquet(path)
@@ -1105,7 +1094,6 @@ object Similarity {
     * O(M×K) or O(k) state — the corpus-sized side never shuffles.
     */
   val q99 = Q("q99_ivf_pq_search", q99OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val codes = s.read.parquet(buildPqIndex(s, dir))
     val cents = s.read.parquet(buildIvfIndex(s, dir))
@@ -1254,7 +1242,6 @@ object Similarity {
     * one (M·K·subdim)-cell hash aggregate, corpus-linear.
     */
   def buildTrainedResPqIndex(s: SparkSession, dir: String): String = {
-    graft.functions.VecDot.register(s)
     val path = trainedResPqIndexPath(dir)
     if (!new java.io.File(path, "_SUCCESS").exists()) {
       val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
@@ -1389,7 +1376,6 @@ object Similarity {
     * detail that distinguishes IVFADC from single-LUT PQ scan.
     */
   val q106 = Q("q106_ivfadc_residual", q106OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val codes = s.read.parquet(buildResPqIndex(s, dir))
     val cents = s.read.parquet(buildIvfIndex(s, dir))
@@ -1469,7 +1455,6 @@ object Similarity {
     * with Σ bucket², not n².
     */
   val q98 = Q("q98_hard_negatives", q98OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir)
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v")))
@@ -1521,7 +1506,6 @@ object Similarity {
 
   def kmeans(e: DataFrame, initCol: String, maxIters: Int = 10): (DataFrame, Int, Long) = {
     val s = e.sparkSession
-    graft.functions.VecDot.register(s)
     // Iterative state carries the vector WITH its assignment —
     // (vec_id, v, vn, cluster), localCheckpointed — so a round never
     // re-joins the corpus on vec_id. Per round: ONE map-side-combined
@@ -1617,7 +1601,6 @@ object Similarity {
     * is exactly what the unrolled oracle computes.
     */
   val q103 = Q("q103_kmeans_converge", q103OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val (asg, _, _) = kmeans(e.select(col("vec_id"), col("v"), col("label").as("init")),
       "init", maxIters = 2)
@@ -1673,7 +1656,6 @@ object Similarity {
     * pair-space.
     */
   val q100 = Q("q100_semantic_dedup", q100OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       .withColumn("nn", norm(col("v")))
     val b2 = e.select(col("vec_id").as("b_id"), col("label").as("b_label"),
@@ -1702,7 +1684,6 @@ object Similarity {
     */
   def semanticDedup(e: DataFrame, k: Int, threshold: Double = SemDupThreshold,
       maxIters: Int = 10): DataFrame = {
-    graft.functions.VecDot.register(e.sparkSession)
     // hash-bucket init: h60 of the id — deterministic, engine-portable
     // (the q104 oracle mirrors it), and independent of id distribution
     val init = e.select(col("vec_id"), col("v"),
@@ -1844,8 +1825,6 @@ object Similarity {
        |  t1.top1_full = t1.top1_t16 AS top1_match
        |FROM t1 LEFT JOIN ov ON t1.probe_id = ov.probe_id
        |ORDER BY t1.probe_id""".stripMargin) { (s, dir) =>
-    graft.functions.VecDot.register(s)
-    graft.functions.DoubleBits.register(s)
     val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("v16", slice(col("v"), 1, 16))
     val p = e.filter(col("vec_id") < 10)
@@ -1917,8 +1896,6 @@ object Similarity {
        |  CAST(COALESCE(ov.n_overlap, 0) * 1000 AS BIGINT) AS recall_bp
        |FROM p LEFT JOIN ov ON p.probe_id = ov.probe_id
        |ORDER BY p.probe_id""".stripMargin) { (s, dir) =>
-    graft.functions.VecDot.register(s)
-    graft.functions.DoubleBits.register(s)
     val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("v16", slice(col("v"), 1, 16))
     val p = e.filter(col("vec_id") < 10)
@@ -2110,8 +2087,6 @@ object Similarity {
     * the only varying CTE (`chainOracleSql`).
     */
   def retrievalChain(s: SparkSession, dir: String, probeIds: DataFrame): DataFrame = {
-    graft.functions.VecDot.register(s)
-    graft.functions.DoubleBits.register(s)
     val codesPath = buildTrainedResPqIndex(s, dir)
     val codes = s.read.parquet(codesPath)
     val cb = s.read.parquet(cbPath(codesPath))
@@ -2343,7 +2318,6 @@ object Similarity {
   }
 
   val q130 = Q("q130_embedding_occupancy_drift", q130OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val init = e.select(col("vec_id"), col("v"),
       pmod(Dedup.h60Col(concat(lit("sem:"), col("vec_id").cast("string"))),
@@ -2412,7 +2386,6 @@ object Similarity {
     * threshold, vec_id ↔ doc_id.
     */
   def semanticStrongPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecDot.register(s)
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       .withColumn("nn", norm(col("v")))
     val b2 = e.select(col("vec_id").as("b_id"), col("label").as("b_label"),
@@ -2492,7 +2465,6 @@ object Similarity {
     * sink-written history store (zero embeddings scans).
     */
   def semanticLeakMatrix(e0: DataFrame, splits: DataFrame): DataFrame = {
-    graft.functions.VecDot.register(e0.sparkSession)
     val e = e0.select(col("vec_id"), col("label"), col("v"))
       .withColumn("nn", norm(col("v")))
     val b2 = e.select(col("vec_id").as("b_id"), col("label").as("b_label"),
@@ -2547,7 +2519,6 @@ object Similarity {
     * no codebook, no second pass.
     */
   private[graft] def hashedVec(d: DataFrame, keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.ShingleHashes.register(d.sparkSession)
     // the fused FeatureHashVec kernel, not a transform/filter HOF tree:
     // CollapseProject would inline the token-hash array into every one of
     // the 2·dim lambdas and recompute md5 per token ~128× (measured 96 s
@@ -2603,7 +2574,6 @@ object Similarity {
     * the table embeddings' width.
     */
   val q177 = Q("q177_hashed_embedding_knn", q177OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = hashedVec(Catalog.table(s, dir, "documents"))
       .withColumn("nn", dot(col("v"), col("v")))
       .filter(col("nn") > 0)
@@ -2765,7 +2735,6 @@ object Similarity {
     * only the ≤22 probed buckets of the corpus, not all pairs.
     */
   val q179 = Q("q179_hashed_lsh_recall", q179OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     val e = hashedVec(Catalog.table(s, dir, "documents"))
       .withColumn("nn", dot(col("v"), col("v")))
       .filter(col("nn") > 0)
@@ -2855,7 +2824,6 @@ object Similarity {
     * grows with log(n) exactly as the q36 comment prescribes.
     */
   val q180 = Q("q180_bootstrap_semdedup", q180OracleSql) { (s, dir) =>
-    graft.functions.VecDot.register(s)
     bootstrapVerdicts(Catalog.table(s, dir, "documents"))
       .groupBy("source")
       .agg(count(lit(1)).cast("long").as("n_docs"),

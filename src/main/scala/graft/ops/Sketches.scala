@@ -145,7 +145,7 @@ object Sketches {
 
   /** Key for q108/q110 and the streaming sinks: one token per active
     * (user, day) pair. The Column and SQL forms are parity-load-bearing
-    * twins — every consumer (batch queries, SketchStream, Scratch probes)
+    * twins — every consumer (batch queries, SketchStream, scale probes)
     * must reference THESE definitions, never a private copy.
     */
   val userDayKeySql = "CAST(user_id AS VARCHAR) || '@' || CAST(CAST(ts AS DATE) AS VARCHAR)"

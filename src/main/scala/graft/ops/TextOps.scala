@@ -168,7 +168,6 @@ object TextOps {
        |  ${RollingHash.oracleSql("text")} AS fingerprint_raw
        |FROM documents
        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    RollingHash.register(s)
     docs(s, dir).select(
       col("doc_id"),
       RollingHash(normalized(col("text"))).as("fingerprint"),

@@ -330,7 +330,6 @@ object Relational {
       |FROM events
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin) { (s, dir) =>
-    graft.functions.BitmapDistinct.register(s)
     t(s, dir, "events")
       .groupBy("event_type")
       .agg(graft.functions.BitmapDistinct(col("user_id"), 1 << 20).as("n_users"))

@@ -9,7 +9,7 @@ class ChecksSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private lazy val m = MedallionFixture.clean.medallion(spark)
   /** The reference seeds; cases over it call `ReferenceSeeds.assumePresent()` first. */
-  private lazy val ref = Medallion.fromSeeds(spark)
+  private lazy val ref = Medallion.fromSeeds(spark, ReferenceSeeds.dir)
 
   test("the full 54-check suite passes on the seed fixture") {
     ReferenceSeeds.assumePresent()

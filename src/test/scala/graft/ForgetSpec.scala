@@ -182,7 +182,6 @@ class ForgetSpec extends AnyFunSuite {
   test("streamed forget: request waves through the sink equal batch erasure of their union on every store family; a replayed batch is a no-op") {
     import graft.streaming.{CorpusStream, ForgetStream, LshStream}
     import graft.streaming.ForgetStream.ForgetTargets
-    graft.functions.ShingleHashes.register(spark)
     val d = docs.localCheckpoint()
     val ids = d.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val cut = ids(ids.length / 2)
@@ -249,7 +248,6 @@ class ForgetSpec extends AnyFunSuite {
 
   test("curation amnesia: forgetting an exact-dup owner re-admits the earliest surviving duplicate, and the accepted/quarantine split stays an exact partition of the gate") {
     import graft.streaming.CurationStream
-    graft.functions.ShingleHashes.register(spark)
     val root = tmpDir("graft-forget-curation")
     // the sf0.001 corpus has no natural exact duplicates — PLANT two
     // families: copies of two gate-passing docs under higher ids, so the
@@ -319,7 +317,6 @@ class ForgetSpec extends AnyFunSuite {
   }
 
   test("re-election: forgetting a keeper promotes the earliest survivor; decisions equal from-scratch dedup on the surviving corpus") {
-    graft.functions.ShingleHashes.register(spark)
     val root = tmpDir("graft-forget-reelect")
     val (idx, dec) = (s"$root/index", s"$root/decisions")
     val d = docs
@@ -370,7 +367,6 @@ class ForgetSpec extends AnyFunSuite {
 
   test("span forget: first-occurrence re-election hands attribution to the earliest survivor; served plans equal batch q182 on the survivors, through compaction") {
     import graft.ops.Mining
-    graft.functions.ShingleHashes.register(spark)
     val deltas = tmpDir("graft-forget-span") + "/deltas"
     val w = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     val uniq = "unique uno dos tres cuatro cinco seis siete ocho nueve diez once"
@@ -431,7 +427,6 @@ class ForgetSpec extends AnyFunSuite {
 
   test("CDC forget: one negative landing per store equals a re-chunk of the survivors (tombstones drop), through compaction; double-forgets refuse loudly") {
     import graft.ops.Dedup
-    graft.functions.ShingleHashes.register(spark)
     val root = tmpDir("graft-forget-cdc")
     val (chunks, nd) = (s"$root/chunks", s"$root/docs")
     val d = docs.localCheckpoint()
@@ -578,7 +573,6 @@ class ForgetSpec extends AnyFunSuite {
   test("identity-store forget survives compaction: the shingle index serves survivor containment bit-identically across a fold") {
     import graft.ops.Dedup
     import graft.streaming.ScrubStream
-    graft.functions.ShingleHashes.register(spark)
     val deltas = tmpDir("graft-forget-shingle") + "/deltas"
     val d = docs.localCheckpoint()
     val ids = d.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
@@ -606,7 +600,6 @@ class ForgetSpec extends AnyFunSuite {
   test("streamed forget reaches the extended families: one request wave erases kanon/cdc/span/cs/shingle/sum-cell/asset stores with commit stamps") {
     import graft.streaming.ForgetStream
     import graft.streaming.ForgetStream.ForgetTargets
-    graft.functions.ShingleHashes.register(spark)
     val root = tmpDir("graft-forget-ext")
     val full = Catalog.table(spark, sf, "documents").localCheckpoint()
     val cut = full.agg(max(col("doc_id"))).head().getLong(0) / 2
@@ -930,7 +923,6 @@ class ForgetSpec extends AnyFunSuite {
   }
 
   test("split forget generalizes across the additive families: k-anon, diversity, and CDC pinned serves equal their slice recomputes with no horizon sealed anywhere") {
-    graft.functions.ShingleHashes.register(spark)
     val full = Catalog.table(spark, sf, "documents").localCheckpoint()
     val cut = full.agg(max(col("doc_id"))).head().getLong(0) / 2
     val srcB = when(col("doc_id") < cut, 0L).otherwise(1L)
@@ -1080,7 +1072,6 @@ class ForgetSpec extends AnyFunSuite {
   }
 
   test("retention windows generalize across the additive families: diversity, k-anon, and CDC windowed serves equal their retained-window survivor recomputes") {
-    graft.functions.ShingleHashes.register(spark)
     val full = Catalog.table(spark, sf, "documents").localCheckpoint()
     val ids = full.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val bounds = Seq(ids(ids.length / 4), ids(ids.length / 2),
@@ -1215,7 +1206,6 @@ class ForgetSpec extends AnyFunSuite {
   }
 
   test("retention windows close over the identity families: code-switch, scrub verdicts, semantic history, span cells, and band decisions re-elected from the windowed index") {
-    graft.functions.ShingleHashes.register(spark)
     val full = Catalog.table(spark, sf, "documents")
       .select("doc_id", "source", "text").localCheckpoint()
     val ids = full.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
@@ -1417,7 +1407,6 @@ class ForgetSpec extends AnyFunSuite {
 
   test("window-mode curation stores: per-doc identity rows make erasure re-elect implicitly at serve time and expiry re-scope ownership to the window — serves equal the q127 kernel on the logical corpus at every step") {
     import graft.streaming.{CurationStream, LshStream}
-    graft.functions.ShingleHashes.register(spark)
     val d = Catalog.table(spark, sf, "documents")
       .select("doc_id", "source", "text").localCheckpoint()
     val ids = d.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
@@ -1927,7 +1916,6 @@ class ForgetSpec extends AnyFunSuite {
   }
 
   test("window-mode curation banding: epoch folds on both stores leave the served election row-identical, and whole-epoch expiry re-scopes it to the retained window") {
-    graft.functions.ShingleHashes.register(spark)
     val d = docs.localCheckpoint()
     val ids = d.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val root = tmpDir("graft-wincur-band")
@@ -2086,7 +2074,6 @@ class ForgetSpec extends AnyFunSuite {
   test("compliance ledger: cumulative rows across two waves accumulate surgical, re-election, and state metrics, ground-truthed per family") {
     import graft.streaming.{Compliance, ForgetStream}
     import graft.streaming.ForgetStream.ForgetTargets
-    graft.functions.ShingleHashes.register(spark)
     val root = tmpDir("graft-ledger")
     val full = Catalog.table(spark, sf, "documents").localCheckpoint()
     val cut = full.agg(max(col("doc_id"))).head().getLong(0) / 2
@@ -2274,7 +2261,6 @@ class ForgetSpec extends AnyFunSuite {
 
   test("materialized curation amendment: ownership steals demote the later copy, the amended keeper's family re-elects, and a replayed amendment converges") {
     import graft.streaming.Amend
-    graft.functions.ShingleHashes.register(spark)
     val (batch, corpus, w) = graft.ops.ForgetOps.amendFixture(spark, sf)
     val b = batch.localCheckpoint(); val c = corpus.localCheckpoint()
     val d = docs.localCheckpoint()
@@ -2364,7 +2350,6 @@ class ForgetSpec extends AnyFunSuite {
 
   test("materialized curation amendment on an epoch-banded landing: the archive supplies the doc list, verdicts equal the from-scratch build, and banding without the archive keeps the refusal") {
     import graft.streaming.{Amend, StoreCompaction}
-    graft.functions.ShingleHashes.register(spark)
     val (batch, corpus, w) = graft.ops.ForgetOps.amendFixture(spark, sf)
     val b = batch.localCheckpoint(); val c = corpus.localCheckpoint()
     val d = docs.localCheckpoint()
@@ -2477,7 +2462,6 @@ class ForgetSpec extends AnyFunSuite {
     // identity sinks register on first landing: the window-mode fp store
     val root = tmpDir("graft-ident-evo-fp")
     val (fpD, idxD) = (s"$root/fps", s"$root/bands")
-    graft.functions.ShingleHashes.register(spark)
     CurationStream.writeWindowDelta(d, fpD, idxD, 0L)
     assert(StoreCompaction.cellSchemaOf(fpD).map(_._2.map(_._1)) ===
       Some(Seq("doc_id", "fp", "source")),
@@ -2572,7 +2556,6 @@ class ForgetSpec extends AnyFunSuite {
       "opting in after the fold must refuse — the archive is incomplete")
 
     // ── the window-mode curation pair re-bands together ──
-    graft.functions.ShingleHashes.register(spark)
     val wroot = tmpDir("graft-reband-win")
     val (fpD, idxD) = (s"$wroot/fps", s"$wroot/bands")
     StoreCompaction.declarePrefoldKeep(fpD)
@@ -2723,7 +2706,6 @@ class ForgetSpec extends AnyFunSuite {
 
   test("erasure scrubs the pre-fold archive: forgotten rows leave .prefold with the live store, and a later re-band amendment cannot resurrect them") {
     import graft.streaming.Amend
-    graft.functions.ShingleHashes.register(spark)
     val d = docs.select("doc_id", "text", "source").localCheckpoint()
     val (batch, corpus, w) = graft.ops.ForgetOps.amendFixture(spark, sf)
     val b = batch.localCheckpoint(); val c = corpus.localCheckpoint()

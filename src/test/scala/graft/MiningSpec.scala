@@ -31,7 +31,6 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("substring dedup: an exact copy duplicates every window; an edited copy most but not all") {
-    ShingleHashes.register(spark)
     val ex = planted.select(col("doc_id"),
       explode(ShingleHashes(col("text"), Mining.SubstringWindow)).as("h"))
     val dfreq = Mining.windowDocFreq(planted, Mining.SubstringWindow)
@@ -54,8 +53,6 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("linear_score kernel is bit-equal to the built-in HOF tree") {
-    ShingleHashes.register(spark)
-    ShingleHashes.registerLinearScore(spark, "linear_score", Mining.classifierWeights)
     val w = array(Mining.classifierWeights.map(lit): _*)
     val d = Catalog.table(spark, sf, "documents").limit(100)
     val fused = d.select(col("doc_id"),
@@ -92,7 +89,6 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("bloom filter has no false negatives: benchmark's own shingles always hit") {
-    ShingleHashes.register(spark)
     val bench = Catalog.table(spark, sf, "documents").filter(col("doc_id") < 50)
     val bloom = Mining.bloomFilter(bench)
     val m = (Mining.BloomBits - 1).toLong
@@ -125,7 +121,6 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("winnowing: identical documents produce identical sketches, compressed vs the k-gram set") {
-    ShingleHashes.register(spark)
     val sk = planted.select(col("doc_id"),
         size(ShingleHashes.positional(col("text"), Mining.WinnowK)).as("n_kgrams"),
         Mining.winnowSketch(col("text")).as("sketch"))
@@ -143,7 +138,6 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("winnow_sketch kernel is set-equal to the built-in HOF tree") {
-    ShingleHashes.register(spark)
     val d = Catalog.table(spark, sf, "documents").limit(200)
     val both = d.select(col("doc_id"),
       Mining.winnowSketch(col("text")).as("fused"),

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ModelsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private lazy val m = Medallion.fromSeeds(spark)
+  private lazy val m = Medallion.fromSeeds(spark, ReferenceSeeds.dir)
 
   override def withFixture(test: NoArgTest): Outcome = {
     ReferenceSeeds.assumePresent()
@@ -35,12 +35,12 @@ class ModelsSpec extends AnyFunSuite {
     // Same reading_id delivered again with a later ingested_at and changed
     // value — the window dedup must keep only the later row (idempotence
     // under re-ingestion, SURVEY §2.6).
-    val raw = Catalog.rawSensorReadings(spark)
+    val raw = Catalog.rawSensorReadings(spark, ReferenceSeeds.dir)
     val dup = raw.filter(col("reading_id") === "R001")
       .withColumn("ingested_at", col("ingested_at") + expr("INTERVAL 1 HOUR"))
       .withColumn("metric_value", lit(999.0f))
-    val m2 = Medallion.build(raw.unionByName(dup), Catalog.rawDevices(spark),
-      Catalog.rawAlerts(spark))
+    val m2 = Medallion.build(raw.unionByName(dup), Catalog.rawDevices(spark, ReferenceSeeds.dir),
+      Catalog.rawAlerts(spark, ReferenceSeeds.dir))
     val r001 = m2.intSensorReadingsCleaned.filter(col("reading_id") === "R001").collect()
     assert(r001.length === 1)
     assert(r001.head.getAs[Double]("metric_value") === 999.0)

@@ -501,7 +501,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("rolling_hash: golden value, null passthrough, matches JVM reference") {
-    RollingHash.register(spark)
     val got = Seq(("abc"), ("")).toDF("s")
       .select(RollingHash(col("s")).as("h")).collect().map(_.getLong(0))
     assert(got(0) === (('a' * 31L + 'b') * 31L + 'c') % 2147483647L) // 96354
@@ -732,7 +731,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("PqEncode kernel: bit-identical to the M x K literal-struct argmin tree at fixture and production widths") {
-    graft.functions.VecDot.register(spark)
     import spark.implicits._
     // deterministic vectors, including ties (vec 0 duplicated as vec 50 —
     // identical distances everywhere, argmin must break ties identically)
@@ -761,7 +759,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("PqEncode kernel: NaN distances follow Spark's total order — a NaN running best is replaced by a later finite distance; all-NaN keeps id 0") {
-    graft.functions.VecDot.register(spark)
     import spark.implicits._
     // codeword id 0 carries a NaN coordinate, so its distance is NaN for
     // every finite vector — the argmin must NOT keep it (`acc < best` is
@@ -1352,7 +1349,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("shingle_hashes: codegen expression matches the built-in md5/conv tree") {
-    graft.functions.ShingleHashes.register(spark)
     val d = Catalog.table(spark, sf, "documents").limit(50)
     val toks = TextOps.tokens(col("text"))
     val shingles = when(size(toks) >= 3,
@@ -1384,7 +1380,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("vec_dot: codegen expression is bit-identical to the HOF fold") {
-    graft.functions.VecDot.register(spark)
     val e = Catalog.table(spark, sf, "embeddings").limit(100)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
     val hof = e.select(col("vec_id"),
@@ -1400,6 +1395,9 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions: custom functions resolve in plain spark.sql") {
+    import graft.functions._
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
     assert(spark.sql("SELECT rolling_hash('abc') AS h").head().getLong(0) === 96354L)
     assert(spark.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .head().getDouble(0) === 11.0)
@@ -1407,6 +1405,76 @@ class OpsSpec extends AnyFunSuite {
     assert(spark.sql(
       "SELECT bitmap_distinct(id, 100) AS n FROM VALUES (1), (2), (2), (7) AS t(id)")
       .head().getLong(0) === 3L)
+
+    // Every injected name: the spark.sql value equals its Column form's.
+    val f = Seq(
+      (1, "the quick brown fox jumps over the lazy dog the quick fox",
+        Seq(1.0, 2.0, 3.0, 4.0), Seq(0.5, -1.0, 2.0, 8.0), 1.5, Seq("a", "b", "a", "b", "c")),
+      (2, "a b c d", Seq(0.0, 9.0, -2.5, 1.0), Seq(3.0, 4.0, 0.0, 0.0), -0.0, Seq("b", "a")),
+      (7, "Lorem ipsum, dolor sit amet; consectetur adipiscing elit.",
+        Seq(2.0, 2.0, 2.0, 2.0), Seq(1.0, 1.0, 1.0, 1.0), 1e300, Seq("a", "b")))
+      .toDF("id", "text", "a", "b", "x", "toks")
+    f.createOrReplaceTempView("graft_registry_rows")
+    val cb = Map(
+      0 -> Seq((7L, Seq(0.0, 0.0)), (3L, Seq(1.0, 2.0))),
+      1 -> Seq((3L, Seq(3.0, 4.0)), (7L, Seq(0.0, 9.0))))
+    val perRow: Seq[(String, String, Column)] = Seq(
+      ("rolling_hash", "rolling_hash(text)", RollingHash(col("text"))),
+      ("vec_dot", "vec_dot(a, b)", VecDot(col("a"), col("b"))),
+      ("vec_sqdist", "vec_sqdist(a, b)", VecSqDist(col("a"), col("b"))),
+      ("pq_encode", "pq_encode(a, array(1.0d, 2.0d, 0.0d, 0.0d, 3.0d, 4.0d, 0.0d, 9.0d), " +
+        "array(3L, 7L), 2)", PqEncode(col("a"), cb)),
+      ("shingle_hashes", "shingle_hashes(text, 3)", ShingleHashes(col("text"), 3)),
+      ("shingle_hashes_all", "shingle_hashes_all(text, 2)", ShingleHashes.positional(col("text"), 2)),
+      ("winnow_sketch", "winnow_sketch(text, 3, 4)", ShingleHashes.winnow(col("text"), 3, 4)),
+      ("token_hashes", "token_hashes(text)", ShingleHashes.tokens(col("text"))),
+      ("feature_hash_vec", "feature_hash_vec(text, 16)",
+        call_function("feature_hash_vec", col("text"), lit(16))),
+      ("minhash_sig", "minhash_sig(text)", call_function("minhash_sig", col("text"))),
+      ("simhash_sig", "simhash_sig(text)", call_function("simhash_sig", col("text"))),
+      ("linear_score", "linear_score(text)", call_function("linear_score", col("text"))),
+      ("double_bits", "double_bits(x)", DoubleBits(col("x"))),
+      ("bpe_merge", "bpe_merge(toks, 'a', 'b')", BpeMerge(col("toks"), lit("a"), lit("b"))))
+    perRow.foreach { case (name, sql, c) =>
+      val viaSql = spark.sql(s"SELECT $sql AS v FROM graft_registry_rows ORDER BY id").collect().toSeq
+      val viaColumn = f.orderBy("id").select(c.as("v")).collect().toSeq
+      assert(viaSql.size === 3, name)
+      assert(viaSql === viaColumn, name)
+    }
+    assert(spark.sql("SELECT bitmap_distinct(id, 100) FROM graft_registry_rows").head() ===
+      f.agg(BitmapDistinct(col("id"), 100)).head())
+
+    // The three kernels with builder-fixed parameters close over the
+    // constants the oracle SQL inlines.
+    spark.sql("SELECT text, minhash_sig(text), simhash_sig(text), linear_score(text) " +
+      "FROM graft_registry_rows").collect().foreach { r =>
+      val t = r.getString(0)
+      assert(r.getSeq[Long](1) === TextHash.minhashSig(t, Dedup.ShingleN, Dedup.MinhashPrime,
+        Dedup.hashA, Dedup.hashB).toSeq)
+      assert(r.getSeq[Long](2) === TextHash.simhashSig(t, Dedup.SimBits).toSeq)
+      assert(r.getSeq[Long](3) === TextHash.linearScore(t, Mining.classifierWeights.toArray).toSeq)
+    }
+
+    // Exactly these 15 names are the extension's.
+    val registry = castToImpl(spark).sessionState.functionRegistry
+    val injected = registry.listFunction().filter(id =>
+      registry.lookupFunction(id).exists(_.getClassName == "graft")).map(_.funcName).toSet
+    assert(injected === (perRow.map(_._1) :+ "bitmap_distinct").toSet)
+  }
+
+  test("building and running the curation queries leaves the function registry unchanged") {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val fresh = spark.newSession()
+    def names(): Seq[String] =
+      castToImpl(fresh).sessionState.functionRegistry.listFunction().map(_.unquotedString).sorted
+    val before = names()
+    val byId = SparkEntry.allQ.map(q => q.name.takeWhile(_ != '_') -> q).toMap
+    Seq("q199", "q140", "q192", "q186", "q173", "q202", "q107", "q110").foreach { id =>
+      byId(id).fn(fresh, sf).count()
+    }
+    val after = names()
+    // (names added, names removed)
+    assert((after.diff(before), before.diff(after)) === ((Nil, Nil)))
   }
 
   test("asof join: latest right row at-or-before each left timestamp, null when none") {
@@ -1526,7 +1594,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("bitmap_distinct: equals countDistinct across partitions, ignores nulls") {
-    graft.functions.BitmapDistinct.register(spark)
     val df = ((1 to 500).map(i => (i % 5, Some(i % 37L))) ++
       Seq((0, None), (1, None))).toDF("g", "id").repartition(7)
     val got = df.groupBy("g")
@@ -1598,7 +1665,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("bpe_merge kernel: left-to-right greedy, including self-pair runs") {
-    graft.functions.BpeMerge.register(spark)
     val cases = Seq(
       (Seq("a", "b", "c", "a", "b"), "a", "b", Seq("ab", "c", "ab")),
       // self-pair run: greedy merges (1,2) and (3,4), the middle match is consumed
@@ -1628,7 +1694,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("q118: encoding the training corpus reproduces the trainer's final stream") {
-    graft.functions.BpeMerge.register(spark)
     val tk0 = graft.ops.Corpus.pretokens(Catalog.table(spark, sf, "documents"))
       .localCheckpoint()
     val merges = graft.ops.Corpus.trainMerges(tk0, 3)
@@ -1648,7 +1713,6 @@ class OpsSpec extends AnyFunSuite {
     // loop must agree with a plain single-threaded BPE trainer at every
     // rank, not just the 3 ranks q118 exercises — merge table AND final
     // stream size, differentially
-    graft.functions.BpeMerge.register(spark)
     val k = 16
     val tk0 = graft.ops.Corpus.pretokens(Catalog.table(spark, sf, "documents"))
       .localCheckpoint()
@@ -1758,7 +1822,6 @@ class OpsSpec extends AnyFunSuite {
 
   test("simDescKey: ascending key order equals descending double order, zeros collapse") {
     import spark.implicits._
-    graft.functions.DoubleBits.register(spark)
     val vals = Seq(1.0, 0.9999999999999999, 0.5, 1e-300, 4.9e-324, 0.0, -0.0,
       -4.9e-324, -1e-300, -0.5, -1.0, 0.123456789, -0.987654321)
     val got = vals.toDF("sim")

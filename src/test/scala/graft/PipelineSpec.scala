@@ -18,7 +18,7 @@ class PipelineSpec extends AnyFunSuite {
   test("end-to-end: seed -> bronze -> silver -> tests -> gold, all green") {
     ReferenceSeeds.assumePresent()
     val dir = wh()
-    val res = Pipeline.run(spark, dir)
+    val res = Pipeline.run(spark, dir, ReferenceSeeds.dir)
     assert(res.goldBuilt)
     assert(res.allPassed)
     assert(res.silverChecks.length === 35) // 19 staging + 15 intermediate + orphan singular
@@ -61,7 +61,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("forEachPlant fans out over distinct locations with bounded concurrency") {
     ReferenceSeeds.assumePresent()
-    val m = Medallion.fromSeeds(spark)
+    val m = Medallion.fromSeeds(spark, ReferenceSeeds.dir)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val results = Pipeline.forEachPlant(m.stgDevices) { loc =>
       seen.add(loc)

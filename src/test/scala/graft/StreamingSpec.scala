@@ -1706,7 +1706,6 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.{CorpusStream, DriftStream, OrderStream,
       ScrubStream, ShardStream, StoreCompaction}
     import StoreCompaction.MaintenancePolicy
-    graft.functions.ShingleHashes.register(spark)
     val sf = "/root/testdata/sf0.001"
     val full = Catalog.table(spark, sf, "documents").localCheckpoint()
     val ids = full.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
@@ -3482,7 +3481,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("amendment stream: corrections land as a request stream, the family re-elects per targeted landing, and a replayed request batch is a no-op") {
     import graft.streaming.{Amend, CorpusStream, CurationStream}
-    graft.functions.ShingleHashes.register(spark)
     val sf = "/root/testdata/sf0.001"
     val (corrected, corpus, w) = graft.ops.ForgetOps.amendFixture(spark, sf)
     val b = corrected.localCheckpoint(); val c = corpus.localCheckpoint()
