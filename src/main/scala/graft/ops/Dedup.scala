@@ -591,40 +591,22 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Where the batch-built curation stores for a source dir live —
-    * content-addressed by documents.parquet identity like the vector
-    * index artifacts, so a regenerated corpus invalidates the stores.
-    */
-  def curationStoresPath(dir: String): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_curation_stores_v1_$key"
-  }
-
   /** Build the full curation store family (fp history, band index,
     * decisions, accepted, quarantine) for a corpus dir by running the
     * consolidated CurationStream fold over the whole corpus as one
     * batch — the same code path every micro-batch runs, so the stores
-    * ARE the streaming sink's output shape. Idempotent via a marker
-    * file written after all five stores commit (parquet `_SUCCESS` per
-    * store is not enough: a crash between stores would leave a partial
-    * family). Returns the root; stores live at `$root/{fp,index,
-    * decisions,accepted,quarantine}`.
+    * ARE the streaming sink's output shape. The five stores commit
+    * together as one [[graft.exec.DerivedStore]] root, so a crash between
+    * stores never leaves a partial family. Returns the root; stores live
+    * at `$root/{fp,index,decisions,accepted,quarantine}`.
     */
-  def buildCurationStores(s: SparkSession, dir: String): String = {
-    val root = curationStoresPath(dir)
-    val marker = new java.io.File(root, "_STORES_COMMITTED")
-    if (!marker.exists()) {
+  def buildCurationStores(s: SparkSession, dir: String): String =
+    graft.exec.DerivedStore.cached("curation_stores", dir, "documents") { root =>
       val d = docs(s, dir).select(col("doc_id"), col("text"), col("source"))
       graft.streaming.CurationStream.processBatch(
         d, s"$root/fp", s"$root/index", s"$root/decisions", 0L,
         Some(s"$root/accepted"), Some(s"$root/quarantine"))
-      marker.createNewFile()
     }
-    root
-  }
 
   private def q133OracleSql: String =
     s"""${curationVerdictCtes()}, reasons AS (
@@ -1571,7 +1553,7 @@ object Dedup {
     * (docs hit, exact basis points, token mass before/removed) computed
     * by reading ONLY the scrub store the streaming sink maintains
     * (`ScrubStream.buildScrubStore` runs the sink's batch path over the
-    * corpus once, marker-committed) — the dashboard a decontamination
+    * corpus once) — the dashboard a decontamination
     * pipeline serves without re-touching corpus text OR the benchmark.
     * The oracle recomputes every number from raw documents through the
     * scrub chain, so a row match proves the store carries exactly the

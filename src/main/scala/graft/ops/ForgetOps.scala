@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Catalog
+import graft.exec.DerivedStore
 import graft.queries.Q
 import graft.streaming.{CorpusStream, Forget, LshStream}
 
@@ -36,35 +37,20 @@ object ForgetOps {
   private val survivorsSql =
     s"(SELECT * FROM documents WHERE doc_id % $ForgetMod <> $ForgetRes)"
 
-  private def storeKey(dir: String, tag: String): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}:$tag".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-  }
-
   // ── the LM store with a forget landing ────────────────────────────────
-
-  def lmForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lm_forget_v1_${storeKey(dir, "lmforget")}"
 
   /** Two id-ordered LM cell landings (split at max(doc_id)/2), then the
     * forget landing: batch 2 = the forgotten docs' cells NEGATED.
-    * Idempotent (marker-committed).
+    * Idempotent.
     */
-  def buildLmForgetStore(s: SparkSession, dir: String): String = {
-    val root = lmForgetStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildLmForgetStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("lm_forget", dir, "documents") { root =>
       val d = docs(s, dir)
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       CorpusStream.writeLmDelta(d.filter(col("doc_id") < cut), root, 0L)
       CorpusStream.writeLmDelta(d.filter(col("doc_id") >= cut), root, 1L)
       Forget.forgetLmDocs(d.filter(forgottenPred), root, 2L)
-      marker.createNewFile()
     }
-    root
-  }
 
   /** The LM-forget fluency oracle over an arbitrary corpus expression —
     * a from-scratch bigram retrain on `corpus` scoring `corpus` itself
@@ -123,19 +109,14 @@ object ForgetOps {
 
   // ── the band store with forget + re-election ──────────────────────────
 
-  def lshForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lsh_forget_v1_${storeKey(dir, "lshforget")}"
-
   /** Two id-ordered band-store landings, then the forget pass
     * ([[Forget.reelectBandStores]]); the forget report is persisted
-    * beside the stores for q202. Idempotent (marker-committed).
+    * beside the stores for q202. Idempotent.
     * Returns (indexDir, decisionsDir, reportDir).
     */
   def buildLshForgetStore(s: SparkSession, dir: String): (String, String, String) = {
-    val root = lshForgetStorePath(dir)
-    val (idx, dec, rep) = (s"$root/index", s"$root/decisions", s"$root/report")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("lsh_forget", dir, "documents") { root =>
+      val (idx, dec, rep) = (s"$root/index", s"$root/decisions", s"$root/report")
       val d = docs(s, dir).select("doc_id", "source", "text")
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       LshStream.processBatch(d.filter(col("doc_id") < cut), idx, dec, 0L)
@@ -148,9 +129,8 @@ object ForgetOps {
         .toDF("n_forgotten", "idx_rows_removed", "dec_rows_removed",
           "n_reelected", "idx_parts_rewritten", "dec_parts_rewritten")
         .coalesce(1).write.mode("overwrite").parquet(rep)
-      marker.createNewFile()
     }
-    (idx, dec, rep)
+    (s"$root/index", s"$root/decisions", s"$root/report")
   }
 
   private def q201OracleSql: String = {
@@ -244,25 +224,19 @@ object ForgetOps {
 
   // ── the diversity store with a forget landing ─────────────────────────
 
-  def divForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_div_forget_v1_${storeKey(dir, "divforget")}"
-
   /** Two diversity-cell landings, then the negative forget landing on
-    * both stores. Idempotent (marker-committed). Returns (dimDir, statDir).
+    * both stores. Idempotent. Returns (dimDir, statDir).
     */
   def buildDivForgetStore(s: SparkSession, dir: String): (String, String) = {
-    val root = divForgetStorePath(dir)
-    val (dims, stats) = (s"$root/dims", s"$root/stats")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("div_forget", dir, "documents") { root =>
+      val (dims, stats) = (s"$root/dims", s"$root/stats")
       val d = docs(s, dir)
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       CorpusStream.writeDivDelta(d.filter(col("doc_id") < cut), dims, stats, 0L)
       CorpusStream.writeDivDelta(d.filter(col("doc_id") >= cut), dims, stats, 1L)
       Forget.forgetDivDocs(d.filter(forgottenPred), dims, stats, 2L)
-      marker.createNewFile()
     }
-    (dims, stats)
+    (s"$root/dims", s"$root/stats")
   }
 
   private def q203OracleSql: String =
@@ -291,20 +265,15 @@ object ForgetOps {
     */
   val ReplayOffset = 1000000L
 
-  def curationForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cur_forget_v1_${storeKey(dir, "curforget")}"
-
   /** Batch 0 = the full corpus through `CurationStream.processBatch`;
     * then the forget set is erased from all five stores with two-level
     * re-election (corrective partition 1); then batch 2 REPLAYS exact
     * copies of the forgotten docs' content under new ids — the amnesia
-    * probe: the family must decide them from scratch. Idempotent
-    * (marker-committed). Returns the family root.
+    * probe: the family must decide them from scratch. Idempotent.
+    * Returns the family root.
     */
-  def buildCurationForgetStore(s: SparkSession, dir: String): String = {
-    val root = curationForgetStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildCurationForgetStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("cur_forget", dir, "documents") { root =>
       val d = docs(s, dir).select("doc_id", "text", "source")
       graft.streaming.CurationStream.processBatch(
         d, s"$root/fp", s"$root/index", s"$root/decisions", 0L,
@@ -317,10 +286,7 @@ object ForgetOps {
       graft.streaming.CurationStream.processBatch(
         replay, s"$root/fp", s"$root/index", s"$root/decisions", 2L,
         Some(s"$root/accepted"), Some(s"$root/quarantine"))
-      marker.createNewFile()
     }
-    root
-  }
 
   private def q204OracleSql: String = {
     val modified =
@@ -360,25 +326,17 @@ object ForgetOps {
 
   // ── k-anonymity after erasure ──────────────────────────────────────
 
-  def kAnonForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_kanon_forget_v1_${storeKey(dir, "kanonforget")}"
-
   /** Two QI-cell landings, then the negative forget landing.
-    * Idempotent (marker-committed). Returns the delta dir.
+    * Idempotent. Returns the delta dir.
     */
-  def buildKAnonForgetStore(s: SparkSession, dir: String): String = {
-    val root = kAnonForgetStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildKAnonForgetStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("kanon_forget", dir, "documents") { root =>
       val d = docs(s, dir)
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       CorpusStream.writeKAnonDelta(d.filter(col("doc_id") < cut), root, 0L)
       CorpusStream.writeKAnonDelta(d.filter(col("doc_id") >= cut), root, 1L)
       Forget.forgetKAnonDocs(d.filter(forgottenPred), root, 2L)
-      marker.createNewFile()
     }
-    root
-  }
 
   private def q205OracleSql: String =
     graft.ops.TextOps.q189.oracle.get.replace(
@@ -408,25 +366,20 @@ object ForgetOps {
 
   // ── q206: containment trend AFTER forgetting (shingle-index family) ──
 
-  def trendForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_trend_forget_v1_${storeKey(dir, "trendforget")}"
-
   /** Four quartile landings of the shingle-index trend store (q199's
     * exact build), the trend-history pin registered, then the forget
     * set surgically deleted from every landing — erasure MUTATES pinned
     * history by design (legal erasure outranks bit-identical time
     * travel; the pin keeps the slices servable, their VALUES change
-    * where the forgotten docs contributed). Idempotent
-    * (marker-committed). Returns (deltaDir, bounds).
+    * where the forgotten docs contributed). Idempotent.
+    * Returns (deltaDir, bounds).
     */
   def buildTrendForgetStore(s: SparkSession, dir: String): (String, Seq[Long]) = {
-    val root = trendForgetStorePath(dir)
-    val deltas = s"$root/deltas"
     val d = docs(s, dir)
     val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
     val bounds = Seq(q, 2 * q, 3 * q, Long.MaxValue)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("trend_forget", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
       bounds.zipWithIndex.foreach { case (hi, k) =>
         val lo = if (k == 0) Long.MinValue else bounds(k - 1)
         graft.streaming.ScrubStream.writeShingleDelta(
@@ -434,9 +387,8 @@ object ForgetOps {
       }
       graft.streaming.StoreCompaction.registerPin(deltas, "trend_history", 0L)
       Forget.surgicalDelete(s, deltas, d.filter(forgottenPred).select("doc_id"))
-      marker.createNewFile()
     }
-    (deltas, bounds)
+    (s"$root/deltas", bounds)
   }
 
   /** q206 — containment trend AFTER FORGETTING: the q199 trend store is
@@ -460,17 +412,12 @@ object ForgetOps {
 
   // ── q207: scrub verdict store AFTER forgetting ────────────────────────
 
-  def scrubForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_scrub_forget_v1_${storeKey(dir, "scrubforget")}"
-
   /** Two id-ordered scrub-store landings (the streaming sink's batch
     * path), then the forget set surgically deleted. Idempotent.
     */
   def buildScrubForgetStore(s: SparkSession, dir: String): String = {
-    val root = scrubForgetStorePath(dir)
-    val rows = s"$root/rows"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("scrub_forget", dir, "documents") { root =>
+      val rows = s"$root/rows"
       val benchRoot = graft.streaming.ScrubStream.buildBenchArtifact(s, dir)
       val bench = s.read.parquet(s"$benchRoot/hashes").localCheckpoint()
       val corpus = docs(s, dir).filter(col("doc_id") >= 50)
@@ -483,9 +430,8 @@ object ForgetOps {
       }
       Forget.surgicalDelete(s, rows,
         docs(s, dir).filter(forgottenPred).select("doc_id"))
-      marker.createNewFile()
     }
-    rows
+    s"$root/rows"
   }
 
   /** q207 — the decontamination dashboard AFTER FORGETTING: the scrub
@@ -509,9 +455,6 @@ object ForgetOps {
 
   // ── q208: embedding history + semantic decisions AFTER forgetting ─────
 
-  def semanticForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_sem_forget_v1_${storeKey(dir, "semforget")}"
-
   /** Two id-ordered landings of the streamed SemDeDup store pair
     * (history vectors + scoreBatch decisions, clusters assigned by the
     * q104 learned quantizer treated as FROZEN), then the forget pass
@@ -519,10 +462,8 @@ object ForgetOps {
     * Returns (historyDir, decisionsDir).
     */
   def buildSemanticForgetStore(s: SparkSession, dir: String): (String, String) = {
-    val root = semanticForgetStorePath(dir)
-    val (hist, dec) = (s"$root/history", s"$root/decisions")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("sem_forget", dir, "documents") { root =>
+      val (hist, dec) = (s"$root/history", s"$root/decisions")
       val e = Catalog.table(s, dir, "embeddings")
         .select(col("vec_id"),
           graft.ops.Similarity.asDouble(col("embedding")).as("v"))
@@ -543,9 +484,8 @@ object ForgetOps {
         .write.mode("overwrite").parquet(s"$dec/batch_id=1")
       Forget.reelectSemanticStores(s, hist, dec,
         m.filter(forgottenVecPred).select("vec_id"))
-      marker.createNewFile()
     }
-    (hist, dec)
+    (s"$root/history", s"$root/decisions")
   }
 
   private def forgottenVecPred =
@@ -578,26 +518,20 @@ object ForgetOps {
 
   // ── q209: span window store AFTER forgetting (MIN re-election) ────────
 
-  def spanForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_span_forget_v1_${storeKey(dir, "spanforget")}"
-
   /** Two id-ordered span-cell landings, then the first-occurrence
     * re-election forget pass. Idempotent. Returns the delta dir.
     */
   def buildSpanForgetStore(s: SparkSession, dir: String): String = {
-    val root = spanForgetStorePath(dir)
-    val deltas = s"$root/deltas"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("span_forget", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text")
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       CorpusStream.writeSpanDelta(d.filter(col("doc_id") < cut), deltas, 0L)
       CorpusStream.writeSpanDelta(d.filter(col("doc_id") >= cut), deltas, 1L)
       Forget.forgetSpanCells(s, deltas, d.filter(forgottenPred),
         d.filter(!forgottenPred), correctiveId = 2L)
-      marker.createNewFile()
     }
-    deltas
+    s"$root/deltas"
   }
 
   /** q209 — SPAN SCRUB AFTER FORGETTING: the window store's `first_key`
@@ -623,25 +557,19 @@ object ForgetOps {
 
   // ── q210: CDC chunk store AFTER forgetting (negative cells) ───────────
 
-  def cdcForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cdc_forget_v1_${storeKey(dir, "cdcforget")}"
-
   /** Two id-ordered CDC landings on both stores, then the negative
     * forget landing. Idempotent. Returns (chunkDir, docDir).
     */
   def buildCdcForgetStore(s: SparkSession, dir: String): (String, String) = {
-    val root = cdcForgetStorePath(dir)
-    val (chunks, nd) = (s"$root/chunks", s"$root/docs")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("cdc_forget", dir, "documents") { root =>
+      val (chunks, nd) = (s"$root/chunks", s"$root/docs")
       val d = docs(s, dir).select("doc_id", "source", "text")
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       CorpusStream.writeCdcDelta(d.filter(col("doc_id") < cut), chunks, nd, 0L)
       CorpusStream.writeCdcDelta(d.filter(col("doc_id") >= cut), chunks, nd, 1L)
       Forget.forgetCdcDocs(d.filter(forgottenPred), chunks, nd, 2L)
-      marker.createNewFile()
     }
-    (chunks, nd)
+    (s"$root/chunks", s"$root/docs")
   }
 
   /** q210 — CDC DUPLICATION AFTER FORGETTING: chunk instance counts are
@@ -665,26 +593,20 @@ object ForgetOps {
 
   // ── q211: window-majority (code-switch) store AFTER forgetting ────────
 
-  def csForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cs_forget_v1_${storeKey(dir, "csforget")}"
-
   /** Two id-ordered window-majority landings, then the surgical delete.
     * Idempotent. Returns the delta dir.
     */
   def buildCsForgetStore(s: SparkSession, dir: String): String = {
-    val root = csForgetStorePath(dir)
-    val deltas = s"$root/deltas"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("cs_forget", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text")
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       CorpusStream.writeCsDelta(d.filter(col("doc_id") < cut), deltas, 0L)
       CorpusStream.writeCsDelta(d.filter(col("doc_id") >= cut), deltas, 1L)
       Forget.surgicalDelete(s, deltas,
         d.filter(forgottenPred).select("doc_id"))
-      marker.createNewFile()
     }
-    deltas
+    s"$root/deltas"
   }
 
   /** q211 — CODE-SWITCH SEGMENTATION AFTER FORGETTING: the window-
@@ -707,28 +629,20 @@ object ForgetOps {
 
   // ── q212: asset store AFTER forgetting (the payload bytes leave) ──────
 
-  def assetForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_asset_forget_v1_${storeKey(dir, "assetforget")}"
-
   /** A private copy of the multimodal asset store (kind-partitioned
     * payload binaries), then the forget set's payload rows surgically
     * deleted — `partCol = "kind"`, proving the surgical mechanics on a
     * non-batchId partitioning. Idempotent. Returns the store path.
     */
-  def buildAssetForgetStore(s: SparkSession, dir: String): String = {
-    val root = assetForgetStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildAssetForgetStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("asset_forget", dir, "documents") { root =>
       s.read.parquet(graft.ops.Multimodal.buildAssetStore(s, dir))
         .repartition(col("kind"))
         .write.partitionBy("kind").mode("overwrite").parquet(root)
       Forget.surgicalDelete(s, root,
         docs(s, dir).filter(forgottenPred).select("doc_id"),
         partCol = "kind")
-      marker.createNewFile()
     }
-    root
-  }
 
   /** q212 — ASSET-STORE ERASURE AUDIT: the round-9 verdict's sharpest
     * compliance gap — "nothing ever deletes the payload bytes" — closed
@@ -770,9 +684,6 @@ object ForgetOps {
 
   // ── q213: embedding-occupancy cells AFTER forgetting (SumCellTarget) ──
 
-  def occForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_occ_forget_v1_${storeKey(dir, "occforget")}"
-
   /** The frozen quantizer (the round-1 fixed-point centroids whose
     * cosine argmax IS the q104/q130 `asg2` assignment), two snapshot-
     * tagged occupancy landings split at max(vec_id)/2 (snapshots =
@@ -780,14 +691,12 @@ object ForgetOps {
     * GENERIC [[graft.streaming.Forget.SumCellTarget]] wiring — the same
     * entry every eval/feature/MW cell store uses, so this build is the
     * symmetry proof that any add-mergeable store in the system erases
-    * with one negated landing. Idempotent (marker-committed). Returns
+    * with one negated landing. Idempotent. Returns
     * (deltaDir, centroidPath).
     */
   def buildOccForgetStore(s: SparkSession, dir: String): (String, String) = {
-    val root = occForgetStorePath(dir)
-    val (deltas, cents) = (s"$root/deltas", s"$root/centroids")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("occ_forget", dir, "documents") { root =>
+      val (deltas, cents) = (s"$root/deltas", s"$root/centroids")
       val e = Catalog.table(s, dir, "embeddings")
       val ed = e.select(col("vec_id"),
         Similarity.asDouble(col("embedding")).as("v"))
@@ -808,9 +717,8 @@ object ForgetOps {
         snap.filter(col("vec_id") >= cut), cents, deltas, 1L)
       Forget.forgetSumCells(snap.filter(forgottenVecPred),
         Forget.occupancyCellTarget(deltas, cents), 2L)
-      marker.createNewFile()
     }
-    (deltas, cents)
+    (s"$root/deltas", s"$root/centroids")
   }
 
   private def q213OracleSql: String =
@@ -850,23 +758,18 @@ object ForgetOps {
 
   // ── q214: a release pin SURVIVES erasure (pin-preserving split forget) ──
 
-  def lmPinForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lmpin_forget_v1_${storeKey(dir, "lmpinforget")}"
-
   /** Four quartile LM landings (batches 0-3 by doc_id), the release pin
     * registered at batch 1 — and THEN the forget wave, landed
     * PIN-PRESERVINGLY ([[graft.streaming.Forget.forgetSumCellsSplit]]):
     * one negative delta per source batch the forgotten docs span, ids
     * encoding the source batch, NO forget horizon sealed. The pin stays
-    * registered and legal throughout. Idempotent (marker-committed).
+    * registered and legal throughout. Idempotent.
     * Returns (deltaDir, the pin slice's doc_id bound).
     */
   def buildLmPinForgetStore(s: SparkSession, dir: String): (String, Long) = {
-    val root = lmPinForgetStorePath(dir)
     val d = docs(s, dir)
     val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("lmpin_forget", dir, "documents") { root =>
       val bounds = Seq(
         Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
@@ -880,7 +783,6 @@ object ForgetOps {
             .when(col("doc_id") < 3 * q, 2L).otherwise(3L))
       Forget.forgetSumCellsSplit(forgotten, Forget.lmCellTarget(root),
         requestId = 0L)
-      marker.createNewFile()
     }
     (root, 2 * q)
   }
@@ -928,23 +830,18 @@ object ForgetOps {
 
   // ── q215: retention expiry + windowed serving + split forget compose ──
 
-  def lmTtlStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lmttl_v1_${storeKey(dir, "lmttl")}"
-
   /** Four quartile LM landings, a pin-preserving (split) forget wave,
     * then RETENTION EXPIRY of the two oldest landings
     * ([[graft.streaming.StoreCompaction.expireBefore]]): batches 0-1
     * leave disk as pure partition drops — and the split negatives for
     * source batches 0-1 leave WITH them, because an erasure correction
-    * for expired content is itself expired. Idempotent
-    * (marker-committed). Returns (deltaDir, the window's doc_id floor).
+    * for expired content is itself expired. Idempotent.
+    * Returns (deltaDir, the window's doc_id floor).
     */
   def buildLmTtlStore(s: SparkSession, dir: String): (String, Long) = {
-    val root = lmTtlStorePath(dir)
     val d = docs(s, dir)
     val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("lmttl", dir, "documents") { root =>
       val bounds = Seq(
         Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
@@ -958,7 +855,6 @@ object ForgetOps {
       Forget.forgetSumCellsSplit(forgotten, Forget.lmCellTarget(root),
         requestId = 0L)
       graft.streaming.StoreCompaction.expireBefore(root, lo = 2L)
-      marker.createNewFile()
     }
     (root, 2 * q)
   }
@@ -1000,21 +896,16 @@ object ForgetOps {
 
   // ── q216: ANN retrieval AFTER erasure (file-level surgical delete) ────
 
-  def pqForgetStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_pq_forget_v1_${storeKey(dir, "pqforget")}"
-
   /** A private copy of the q97/q99 PQ code artifact laid out as an
     * append-per-landing store is on disk — plain part-FILES whose rows
     * cluster by vec_id range (`repartitionByRange`), no batch_id dirs —
     * then the forget set's code rows erased FILE-surgically
     * ([[graft.streaming.Forget.surgicalDeleteFiles]]: one column-pruned
     * detection pass, only files holding a forgotten row rewritten).
-    * Idempotent (marker-committed). Returns the store path.
+    * Idempotent. Returns the store path.
     */
-  def buildPqForgetStore(s: SparkSession, dir: String): String = {
-    val root = pqForgetStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildPqForgetStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("pq_forget", dir, "documents") { root =>
       s.read.parquet(Similarity.buildPqIndex(s, dir))
         .repartitionByRange(8, col("vec_id"))
         .write.mode("overwrite").parquet(root)
@@ -1022,10 +913,7 @@ object ForgetOps {
         Catalog.table(s, dir, "embeddings")
           .filter(forgottenVecPred).select("vec_id"),
         keyCol = "vec_id")
-      marker.createNewFile()
     }
-    root
-  }
 
   /** q216 — RETRIEVAL AFTER ERASURE: the compliance question for the
     * serving surface — an erased vector must stop being RETRIEVABLE,
@@ -1098,21 +986,16 @@ object ForgetOps {
 
   // ── q217: the erasure certificate, ground-truthed ─────────────────────
 
-  def certStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cert_v1_${storeKey(dir, "cert")}"
-
   /** Six store families (LM, k-anonymity, CDC pair, shingle index,
     * asset payloads) built with their own sink writers (two id-ordered
     * landings each; assets copied kind-partitioned), then ONE streamed
     * forget wave in pin-preserving mode erases the forget set from all
     * of them — and the certificate the sink persists is what q217
-    * serves. Idempotent (marker-committed). Returns the marker root.
+    * serves. Idempotent. Returns the marker root.
     */
   def buildCertStores(s: SparkSession, dir: String): String = {
-    val root = certStorePath(dir)
-    val markers = s"$root/markers"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("cert", dir, "documents") { root =>
+      val markers = s"$root/markers"
       val d = Catalog.table(s, dir, "documents").localCheckpoint()
       val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
       val (lm, kanon, chunks, nd, shingle, assets) = (s"$root/lm",
@@ -1138,9 +1021,8 @@ object ForgetOps {
           cdcStores = Some((chunks, nd)), shingleIndexDirs = Seq(shingle),
           assetStore = Some((assets, "kind")), splitBySrcBatch = true),
         markers, batchId = 0L)
-      marker.createNewFile()
     }
-    markers
+    s"$root/markers"
   }
 
   /** q217 — the ERASURE CERTIFICATE, ground-truthed: the audit table
@@ -1193,9 +1075,6 @@ object ForgetOps {
 
   // ── q218: containment over a retention window (identity-store TTL) ────
 
-  def shingleTtlStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_shingle_ttl_v1_${storeKey(dir, "shingle_ttl")}"
-
   /** Four quartile landings of the shingle inverted index, the forget
     * set surgically deleted from every landing (identity erasure), then
     * the two oldest landings EXPIRED — the retention lifecycle on an
@@ -1204,12 +1083,10 @@ object ForgetOps {
     * (deltaDir, the window's doc_id floor).
     */
   def buildShingleTtlStore(s: SparkSession, dir: String): (String, Long) = {
-    val root = shingleTtlStorePath(dir)
-    val deltas = s"$root/deltas"
     val d = docs(s, dir)
     val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("shingle_ttl", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
       val bounds = Seq(
         Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
@@ -1218,9 +1095,8 @@ object ForgetOps {
       }
       Forget.surgicalDelete(s, deltas, d.filter(forgottenPred).select("doc_id"))
       graft.streaming.StoreCompaction.expireBefore(deltas, 2L)
-      marker.createNewFile()
     }
-    (deltas, 2 * q)
+    (s"$root/deltas", 2 * q)
   }
 
   /** q218 — CONTAINMENT over a retention window: the identity-store
@@ -1245,9 +1121,6 @@ object ForgetOps {
 
   // ── q219/q220: policy-driven epoch folds + the expiry certificate ────
 
-  def lmEpochStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lmepoch_v1_${storeKey(dir, "lmepoch")}"
-
   /** Eight octile LM landings, a pin-preserving (split) forget wave,
     * then the RETENTION LIFECYCLE as a deployment actually runs it:
     * scheduled maintenance with an epoch-banding policy
@@ -1259,21 +1132,19 @@ object ForgetOps {
     * drops everything below batch 6: two whole epochs as single
     * directory drops, two raw landings, and the split negatives that
     * expire with their source batches, with one persisted audit row per
-    * action. Idempotent (marker-committed). Returns
+    * action. Idempotent. Returns
     * (deltaDir, auditRoot, the window's doc_id floor).
     */
   def buildLmEpochStore(s: SparkSession, dir: String): (String, String, Long) = {
-    val root = lmEpochStorePath(dir)
-    val deltas = s"$root/deltas"
-    val audit = s"$root/expiry_audit"
     val d = docs(s, dir)
     val o = d.agg(max(col("doc_id"))).head().getLong(0) / 8
     // the split wave below decodes src_batch with `doc_id div o`: o=0
     // would null the div (non-ANSI) and silently land every negative
     // under least(null, 7) = 7 — refuse loudly on a degenerate fixture
     require(o > 0, s"lm epoch store needs max(doc_id) >= 8, got octile width $o")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("lmepoch", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
+      val audit = s"$root/expiry_audit"
       (0 until 8).foreach { k =>
         val lo = if (k == 0) Long.MinValue else k * o
         val hi = if (k == 7) Long.MaxValue else (k + 1) * o
@@ -1291,9 +1162,8 @@ object ForgetOps {
         s"the banding policy must fold epochs 0-1 (ends 1, 3 <= margin 4): $rep")
       graft.streaming.StoreCompaction.expireBeforeCertified(s, deltas,
         lo = 6L, audit, storeName = "lm")
-      marker.createNewFile()
     }
-    (deltas, audit, 6 * o)
+    (s"$root/deltas", s"$root/expiry_audit", 6 * o)
   }
 
   private val epochWindowSurvivorsSql =
@@ -1360,9 +1230,6 @@ object ForgetOps {
 
   // ── q221: the LANDED asset store — payload bytes expiring by age ─────
 
-  def assetTtlStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_asset_ttl_v1_${storeKey(dir, "assetttl")}"
-
   /** The asset store re-laid as a LANDED table — `batch_id=N/kind=K`,
     * landing batch OUTER so age-based expiry has an axis to drop, payload
     * family INNER so kind scans stay partition-pruned (the layout q212's
@@ -1376,13 +1243,11 @@ object ForgetOps {
     * (storeDir, auditRoot, the window's doc_id floor).
     */
   def buildAssetTtlStore(s: SparkSession, dir: String): (String, String, Long) = {
-    val root = assetTtlStorePath(dir)
-    val store = s"$root/assets"
-    val audit = s"$root/expiry_audit"
     val d = docs(s, dir)
     val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("asset_ttl", dir, "documents") { root =>
+      val store = s"$root/assets"
+      val audit = s"$root/expiry_audit"
       val assets = s.read.parquet(Multimodal.buildAssetStore(s, dir))
       val bounds = Seq(
         Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
@@ -1397,9 +1262,8 @@ object ForgetOps {
         partCol = "batch_id", subPartBy = Seq("kind"))
       graft.streaming.StoreCompaction.expireBeforeCertified(s, store,
         lo = 2L, audit, storeName = "assets")
-      marker.createNewFile()
     }
-    (store, audit, 2 * q)
+    (s"$root/assets", s"$root/expiry_audit", 2 * q)
   }
 
   /** q221 — ASSET PAYLOADS EXPIRING BY AGE: the round-10 verdict's most
@@ -1455,19 +1319,14 @@ object ForgetOps {
 
   // ── q222: the DSIR selector trained on a retention window ────────────
 
-  def featureTtlStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_feat_ttl_v1_${storeKey(dir, "featttl")}"
-
   /** Four feature-cell landings sliced by doc_id mod 4 (round-robin
     * landing shards, so the benchmark/target docs spread across every
     * landing instead of concentrating in the oldest), a pin-preserving
     * forget wave, then landings 0-1 expired — the licensing scenario
     * where two of four ingest shards lose their license. Idempotent.
     */
-  def buildFeatureTtlStore(s: SparkSession, dir: String): String = {
-    val root = featureTtlStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildFeatureTtlStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("feat_ttl", dir, "documents") { root =>
       val d = docs(s, dir)
       (0 until 4).foreach { k =>
         CorpusStream.writeFeatureDelta(
@@ -1478,10 +1337,7 @@ object ForgetOps {
       Forget.forgetSumCellsSplit(forgotten, Forget.featureCellTarget(root),
         requestId = 0L)
       graft.streaming.StoreCompaction.expireBefore(root, lo = 2L)
-      marker.createNewFile()
     }
-    root
-  }
 
   /** q222 — the DSIR SELECTOR trained on a retention window: "train the
     * selector only on licensed data", operationally. The feature-cell
@@ -1511,21 +1367,16 @@ object ForgetOps {
 
   // ── q223: keep-earliest dedup over a retention window ────────────────
 
-  def lshTtlStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lsh_ttl_v1_${storeKey(dir, "lshttl")}"
-
   /** Four id-ordered band-index + decision landings (the streamed dedup
     * sink's exact batch path), the forget set surgically erased from
     * both stores, then the two oldest landings expired on both.
     * Idempotent. Returns (indexDir, the window's doc_id floor).
     */
   def buildLshTtlStore(s: SparkSession, dir: String): (String, Long) = {
-    val root = lshTtlStorePath(dir)
-    val (idx, dec) = (s"$root/index", s"$root/decisions")
     val d = docs(s, dir).select("doc_id", "source", "text")
     val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("lsh_ttl", dir, "documents") { root =>
+      val (idx, dec) = (s"$root/index", s"$root/decisions")
       val bounds = Seq(
         Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
@@ -1537,9 +1388,8 @@ object ForgetOps {
       Forget.surgicalDelete(s, dec, fIds)
       graft.streaming.StoreCompaction.expireBefore(idx, 2L)
       graft.streaming.StoreCompaction.expireBefore(dec, 2L)
-      marker.createNewFile()
     }
-    (idx, 2 * q)
+    (s"$root/index", 2 * q)
   }
 
   private def q223OracleSql: String = {
@@ -1587,9 +1437,6 @@ object ForgetOps {
 
   // ── q225: the full curation verdict over a retention window ──────────
 
-  def curationTtlStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cur_ttl_v1_${storeKey(dir, "curttl")}"
-
   /** Four quartile landings of the WINDOW-MODE curation stores
     * ([[graft.streaming.CurationStream.writeWindowDelta]] — per-doc fp
     * rows and per-doc band rows, ownership never materialized), the
@@ -1599,10 +1446,8 @@ object ForgetOps {
     * Idempotent. Returns (fpDir, idxDir).
     */
   def buildCurationTtlStore(s: SparkSession, dir: String): (String, String) = {
-    val root = curationTtlStorePath(dir)
-    val (fpD, idxD) = (s"$root/fps", s"$root/bands")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("cur_ttl", dir, "documents") { root =>
+      val (fpD, idxD) = (s"$root/fps", s"$root/bands")
       val d = docs(s, dir).select("doc_id", "source", "text")
       val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
       val bounds = Seq(
@@ -1617,9 +1462,8 @@ object ForgetOps {
       Forget.surgicalDelete(s, idxD, fIds)
       graft.streaming.StoreCompaction.expireBefore(fpD, 2L)
       graft.streaming.StoreCompaction.expireBefore(idxD, 2L)
-      marker.createNewFile()
     }
-    (fpD, idxD)
+    (s"$root/fps", s"$root/bands")
   }
 
   /** q225 — the FULL CURATION VERDICT over a retention window: the
@@ -1698,19 +1542,14 @@ object ForgetOps {
        |   AND b.doc_id < 2 * (SELECT MAX(doc_id) // 4 FROM documents)
        |   AND b.doc_id % 3 <> 2)""".stripMargin
 
-  def lmAmendStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lm_amend_v1_${storeKey(dir, "lmamend")}"
-
   /** Four quartile LM landings, then batch 1 AMENDED to the corrected
     * content ([[graft.streaming.Amend.amendSumCells]] — one partition
     * overwrite with the corrected cells, no negative delta, no old
     * content needed). Idempotent. Returns the delta dir.
     */
   def buildLmAmendStore(s: SparkSession, dir: String): String = {
-    val root = lmAmendStorePath(dir)
-    val deltas = s"$root/deltas"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("lm_amend", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
       val d = docs(s, dir)
       val (batch, _, w) = amendFixture(s, dir)
       val bounds = Seq(
@@ -1720,9 +1559,8 @@ object ForgetOps {
           d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
       }
       graft.streaming.Amend.amendSumCells(Forget.lmCellTarget(deltas), batch, 1L)
-      marker.createNewFile()
     }
-    deltas
+    s"$root/deltas"
   }
 
   /** q226 — AMENDING an additive store: batch 1's corrected content
@@ -1749,9 +1587,6 @@ object ForgetOps {
       .orderBy("doc_id")
   }
 
-  def curationAmendTtlStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cur_amend_ttl_v1_${storeKey(dir, "curamendttl")}"
-
   /** Four quartile landings of the WINDOW-MODE curation stores, then
     * batch 1 amended in place ([[graft.streaming.Amend
     * .amendWindowCuration]] — the corrected batch's per-doc fp and band
@@ -1759,10 +1594,8 @@ object ForgetOps {
     * (fpDir, idxDir).
     */
   def buildWindowAmendStore(s: SparkSession, dir: String): (String, String) = {
-    val root = curationAmendTtlStorePath(dir)
-    val (fpD, idxD) = (s"$root/fps", s"$root/bands")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("cur_amend_ttl", dir, "documents") { root =>
+      val (fpD, idxD) = (s"$root/fps", s"$root/bands")
       val d = docs(s, dir).select("doc_id", "source", "text")
       val (batch, _, w) = amendFixture(s, dir)
       val bounds = Seq(
@@ -1773,9 +1606,8 @@ object ForgetOps {
           k.toLong)
       }
       graft.streaming.Amend.amendWindowCuration(batch, fpD, idxD, 1L)
-      marker.createNewFile()
     }
-    (fpD, idxD)
+    (s"$root/fps", s"$root/bands")
   }
 
   /** q227 — AMENDING a per-doc identity store family: the window-mode
@@ -1797,9 +1629,6 @@ object ForgetOps {
     graft.streaming.CurationStream.windowedDecisions(s, fpD, idxD, lo = 0L)
   }
 
-  def curationAmendStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cur_amend_v2_${storeKey(dir, "curamend")}"
-
   /** Four quartile landings through the MATERIALIZED curation family
     * ([[graft.streaming.CurationStream.processBatch]]), then batch 1
     * amended ([[graft.streaming.Amend.amendCurationBatch]] — the old
@@ -1808,10 +1637,8 @@ object ForgetOps {
     * correctives at partition 4, insert correctives at 5). Idempotent.
     * Returns the family root.
     */
-  def buildCurationAmendStore(s: SparkSession, dir: String): String = {
-    val root = curationAmendStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildCurationAmendStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("cur_amend", dir, "documents") { root =>
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
       val bounds = Seq(
@@ -1825,10 +1652,7 @@ object ForgetOps {
       graft.streaming.Amend.amendCurationBatch(s, root, batch,
         batchId = 1L, correctiveId = 4L,
         audit = Some((s"$root/amend_audit", "curation")))
-      marker.createNewFile()
     }
-    root
-  }
 
   /** q228 — AMENDING the materialized first-seen curation family: the
     * case replay landings never face — corrected content must propagate
@@ -1855,9 +1679,6 @@ object ForgetOps {
 
   // ── q229: the cumulative cross-family compliance ledger ──────────────
 
-  def complianceStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_compliance_v1_${storeKey(dir, "compliance")}"
-
   /** Eight octile LM landings, TWO streamed pin-preserving erasure waves
     * (doc_id % 17 ∈ {3, 5} — each lands one split negative per octile it
     * spans and one erasure-certificate row), then TWO certified expiry
@@ -1866,11 +1687,9 @@ object ForgetOps {
     * Returns (deltaDir, forgetMarkerRoot, expiryAuditRoot).
     */
   def buildComplianceStore(s: SparkSession, dir: String): (String, String, String) = {
-    val root = complianceStorePath(dir)
-    val (deltas, markers, audit) =
-      (s"$root/deltas", s"$root/forget_markers", s"$root/expiry_audit")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("compliance", dir, "documents") { root =>
+      val (deltas, markers, audit) =
+        (s"$root/deltas", s"$root/forget_markers", s"$root/expiry_audit")
       val d = docs(s, dir).select("doc_id", "text", "source")
       val o = d.agg(max(col("doc_id"))).head().getLong(0) / 8
       require(o > 0, s"compliance store needs max(doc_id) >= 8, got width $o")
@@ -1894,9 +1713,8 @@ object ForgetOps {
         lo = 2L, audit, storeName = "lm")
       graft.streaming.StoreCompaction.expireBeforeCertified(s, deltas,
         lo = 4L, audit, storeName = "lm")
-      marker.createNewFile()
     }
-    (deltas, markers, audit)
+    (s"$root/deltas", s"$root/forget_markers", s"$root/expiry_audit")
   }
 
   /** q229 — the CUMULATIVE COMPLIANCE LEDGER, stores-served: the
@@ -1968,9 +1786,6 @@ object ForgetOps {
         sum(col("n_tok")).cast("long").as("n_tokens"))
   }
 
-  def schemaEvoStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_schema_evo_v1_${storeKey(dir, "schemaevo")}"
-
   /** Four quartile landings of the token-stat store, the first two at
     * cell schema v1 and the last two at v2 (n_alpha appended) — landed
     * through [[graft.streaming.StoreCompaction.writeEvolvedDelta]], so
@@ -1978,10 +1793,8 @@ object ForgetOps {
     * Returns the delta dir.
     */
   def buildSchemaEvoStore(s: SparkSession, dir: String): String = {
-    val root = schemaEvoStorePath(dir)
-    val deltas = s"$root/deltas"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("schema_evo", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text", "source")
       val w = d.agg(max(col("doc_id"))).head().getLong(0) / 4
       val bounds = Seq(
@@ -1992,9 +1805,8 @@ object ForgetOps {
             withAlpha = k >= 2),
           deltas, k.toLong)
       }
-      marker.createNewFile()
     }
-    deltas
+    s"$root/deltas"
   }
 
   /** q230 — CELL-SCHEMA EVOLUTION served: the reference declares
@@ -2067,9 +1879,6 @@ object ForgetOps {
       amendAuditRoots = Seq(s"$root/amend_audit"))
   }
 
-  def lmRebandStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lm_reband_v1_${storeKey(dir, "lmreband")}"
-
   /** Four quartile LM landings on a store OPTED INTO the pre-fold
     * archive ([[graft.streaming.StoreCompaction.declarePrefoldKeep]]),
     * epoch-banded at size 2 (epochs 0 and 1 fold, sources archived under
@@ -2079,10 +1888,8 @@ object ForgetOps {
     * the epoch from the archive. Idempotent. Returns the delta dir.
     */
   def buildLmRebandStore(s: SparkSession, dir: String): String = {
-    val root = lmRebandStorePath(dir)
-    val deltas = s"$root/deltas"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("lm_reband", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
       val d = docs(s, dir)
       val (batch, _, w) = amendFixture(s, dir)
       graft.streaming.StoreCompaction.declarePrefoldKeep(deltas)
@@ -2095,9 +1902,8 @@ object ForgetOps {
       graft.streaming.StoreCompaction.foldEpochs(s, deltas,
         epochSize = 2L, uptoBatch = 3L)
       graft.streaming.Amend.amendSumCells(Forget.lmCellTarget(deltas), batch, 1L)
-      marker.createNewFile()
     }
-    deltas
+    s"$root/deltas"
   }
 
   /** q232 — AMENDING an EPOCH-BANDED landing via the re-band path:
@@ -2143,9 +1949,6 @@ object ForgetOps {
     else m.select(col("doc_id"), col("source"), col("n_tok"))
   }
 
-  def identityEvoStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_identity_evo_v1_${storeKey(dir, "identevo")}"
-
   /** Four quartile landings of a per-doc IDENTITY store, the first two
     * at schema v1 and the last two at v2 (n_alpha appended) — landed
     * through the same [[graft.streaming.StoreCompaction
@@ -2154,10 +1957,8 @@ object ForgetOps {
     * the store dir.
     */
   def buildIdentityEvoStore(s: SparkSession, dir: String): String = {
-    val root = identityEvoStorePath(dir)
-    val store = s"$root/docstats"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("identity_evo", dir, "documents") { root =>
+      val store = s"$root/docstats"
       val d = docs(s, dir).select("doc_id", "text", "source")
       val w = d.agg(max(col("doc_id"))).head().getLong(0) / 4
       val bounds = Seq(
@@ -2168,9 +1969,8 @@ object ForgetOps {
             withAlpha = k >= 2),
           store, k.toLong)
       }
-      marker.createNewFile()
     }
-    store
+    s"$root/docstats"
   }
 
   /** q233 — SCHEMA EVOLUTION on an IDENTITY-store family: q230 proved
@@ -2204,9 +2004,6 @@ object ForgetOps {
       .orderBy("doc_id")
   }
 
-  def ledgerSnapStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_ledger_snap_v1_${storeKey(dir, "ledgersnap")}"
-
   /** The q229 compliance fixture with the lifecycle INTERLEAVED and a
     * ledger SNAPSHOT landed after each audit event: eight octile LM
     * landings, then wave A (doc_id % 17 = 3) → certified floor 2 →
@@ -2216,12 +2013,10 @@ object ForgetOps {
     */
   def buildLedgerSnapshotStore(s: SparkSession,
       dir: String): (String, String, String, String) = {
-    val root = ledgerSnapStorePath(dir)
-    val (deltas, markers, audit, snaps) =
-      (s"$root/deltas", s"$root/forget_markers", s"$root/expiry_audit",
-        s"$root/snapshots")
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("ledger_snap", dir, "documents") { root =>
+      val (deltas, markers, audit, snaps) =
+        (s"$root/deltas", s"$root/forget_markers", s"$root/expiry_audit",
+          s"$root/snapshots")
       val d = docs(s, dir).select("doc_id", "text", "source")
       val o = d.agg(max(col("doc_id"))).head().getLong(0) / 8
       require(o > 0, s"ledger snapshot store needs max(doc_id) >= 8, got width $o")
@@ -2253,9 +2048,8 @@ object ForgetOps {
       graft.streaming.StoreCompaction.expireBeforeCertified(s, deltas,
         lo = 4L, audit, storeName = "lm")
       snapshot(1L)
-      marker.createNewFile()
     }
-    (snaps, deltas, markers, audit)
+    (s"$root/snapshots", s"$root/deltas", s"$root/forget_markers", s"$root/expiry_audit")
   }
 
   /** q234 — the compliance ledger as a SERVED STORE: q229 made the
@@ -2295,9 +2089,6 @@ object ForgetOps {
     graft.streaming.Compliance.ledgerAsOf(s, snaps, 0L)
   }
 
-  def curationBandAmendStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cur_bandamend_v1_${storeKey(dir, "curamendband")}"
-
   /** The q228 family built BANDED before the correction arrives: all
     * five stores opt into the pre-fold archive, four landings fold at
     * epoch size 2, and THEN batch 1 — inside folded epoch 0 on every
@@ -2307,10 +2098,8 @@ object ForgetOps {
     * insert lands corrective partitions); the archive supplies the
     * landing's doc list that banding erased. Idempotent. Returns root.
     */
-  def buildCurationBandAmendStore(s: SparkSession, dir: String): String = {
-    val root = curationBandAmendStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildCurationBandAmendStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("cur_bandamend", dir, "documents") { root =>
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
       val bounds = Seq(
@@ -2331,10 +2120,7 @@ object ForgetOps {
       graft.streaming.Amend.amendCurationBatch(s, root, batch,
         batchId = 1L, correctiveId = 4L,
         audit = Some((s"$root/amend_audit", "curation")))
-      marker.createNewFile()
     }
-    root
-  }
 
   /** q236 — q228's law on the BANDED layout: corrections arrive late,
     * so the materialized family's landings have usually epoch-folded by
@@ -2356,9 +2142,6 @@ object ForgetOps {
     graft.streaming.CurationStream.decisions(s, s"$root/decisions")
   }
 
-  def lmCommuteStorePath(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_lm_commute_v1_${storeKey(dir, "lmcommute")}"
-
   /** The corrected corpus MINUS the commute-wave forget set (doc_id ≡ 4
     * mod 9 below the second quartile boundary) — what q235's store must
     * serve after erasure and correction both apply.
@@ -2378,10 +2161,8 @@ object ForgetOps {
     * now-obsolete split negatives. Idempotent. Returns the delta dir.
     */
   def buildLmCommuteStore(s: SparkSession, dir: String): String = {
-    val root = lmCommuteStorePath(dir)
-    val deltas = s"$root/deltas"
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("lm_commute", dir, "documents") { root =>
+      val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
       val bounds = Seq(
@@ -2408,9 +2189,8 @@ object ForgetOps {
           sumCellStores = Seq("lm" -> Forget.lmCellTarget(deltas)),
           forgetRequestDirs = Seq(s"$root/requests")),
         s"$root/amend_markers", 0L, Some(s"$root/amend_audit"))
-      marker.createNewFile()
     }
-    deltas
+    s"$root/deltas"
   }
 
   /** q235 — ERASURE–CORRECTION COMMUTATION: a right-to-be-forgotten

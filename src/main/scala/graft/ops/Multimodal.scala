@@ -476,35 +476,22 @@ object Multimodal {
 
   // ── the stored-asset artifact: payloads as a real binary column ───────
 
-  /** Where the materialized asset store for a source dir lives —
-    * content-addressed by the documents table's path + mtime/size (the
-    * `ivfIndexPath` convention) so a regenerated corpus invalidates the
-    * payloads instead of silently reusing stale bytes.
-    */
-  def assetStorePath(dir: String): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_assets_v1_$key"
-  }
-
   /** Materialize every fixture payload ONCE into a parquet asset table
     * (doc_id, mime, payload binary), partitioned by payload family
     * (`kind`) — after this build the multimodal queries read REAL stored
     * bytes off parquet pages (binary column pruning, partition-pruned
     * family scans, decode-off-storage), and the synth mapping survives
-    * only here as the generator. Idempotent: `_SUCCESS`-gated like the
-    * ANN index builds. Kinds: `bmp2x1`/`wav4` (the q154/q155 decode
-    * batteries), `grid_bmp`/`wav64` (the dense q174/q176 dedup
-    * fixtures), `grid_bmp_sparse`/`wav64_sparse` (q186's disjoint-family
-    * cross-modal fixtures). At 100 TB this table IS the corpus — the
+    * only here as the generator. Cached per corpus by
+    * [[graft.exec.DerivedStore]], so a regenerated corpus invalidates the
+    * payloads instead of silently reusing stale bytes. Kinds:
+    * `bmp2x1`/`wav4` (the q154/q155 decode batteries), `grid_bmp`/`wav64`
+    * (the dense q174/q176 dedup fixtures), `grid_bmp_sparse`/`wav64_sparse`
+    * (q186's disjoint-family cross-modal fixtures). At 100 TB this table IS the corpus — the
     * payloads arrive stored; everything downstream of this artifact is
     * exactly the production read path.
     */
-  def buildAssetStore(s: SparkSession, dir: String): String = {
-    val path = assetStorePath(dir)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+  def buildAssetStore(s: SparkSession, dir: String): String =
+    graft.exec.DerivedStore.cached("assets", dir, "documents") { path =>
       import s.implicits._
       Catalog.table(s, dir, "documents").select(col("doc_id")).as[Long]
         .mapPartitions(_.flatMap { id =>
@@ -520,8 +507,6 @@ object Multimodal {
         .repartition(col("kind"))
         .write.partitionBy("kind").mode("overwrite").parquet(path)
     }
-    path
-  }
 
   /** One payload family of the asset store — the `kind` predicate is
     * partition pruning (one directory scanned, PlanSpec-pinned), and a

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Catalog
+import graft.exec.DerivedStore
 import graft.queries.{Det, Q}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -222,24 +223,6 @@ object Similarity {
         c => c.getField("mu")).as("centroid"))
   }
 
-  /** Where the materialized IVF index for a given source dir lives
-    * (content-addressed by the dir path; tmp-dir scoped like the other
-    * emulated warehouse artifacts).
-    */
-  def ivfIndexPath(dir: String): String = {
-    // keyed by source path + mtime/size so a regenerated corpus invalidates
-    // the index instead of silently reusing stale centroids
-    val src = new java.io.File(dir, "embeddings.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    // v2: the artifact carries raw integer sums alongside the decoded
-    // centroids (appendIvfIndex needs them) — new key so a pre-v2 cached
-    // artifact is never reused with the s_fp column missing
-    // v3: the build-metadata sidecar is written beside the artifact
-    s"${sys.props("java.io.tmpdir")}/graft_ivf_centroids_v3_$key"
-  }
-
   /** (label, pos) INTEGER centroid sums — the associative representation
     * behind the IVF artifact. Because each element is floor-scaled to a
     * long before summing, merging two corpora's sums then decoding equals
@@ -386,17 +369,16 @@ object Similarity {
   /** Build step: materialize the centroid table once per corpus — this is
     * how an IVF index actually works at 100 TB (the quantizer is a written
     * artifact that queries reuse, not something recomputed from the full
-    * corpus per query). Idempotent: skips the build when the artifact is
-    * already committed (parquet `_SUCCESS`). Returns the artifact path.
+    * corpus per query). Cached per corpus by [[DerivedStore]], with the
+    * build-metadata sidecar inside the same root. Returns the artifact
+    * path.
     */
   def buildIvfIndex(s: SparkSession, dir: String): String = {
-    val path = ivfIndexPath(dir)
-    val success = new java.io.File(path, "_SUCCESS")
-    if (!success.exists()) {
+    val root = DerivedStore.cached("ivf_centroids", dir, "embeddings") { root =>
       val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-      writeIvfIndex(e, path)
+      writeIvfIndex(e, s"$root/centroids")
     }
-    path
+    s"$root/centroids"
   }
 
   /** q38 — IVF ANN: the coarse quantizer is the materialized centroid
@@ -866,22 +848,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** Where the materialized PQ code table for a source dir lives — same
-    * content-addressed scheme as the IVF centroids: at scale the codes are
-    * a written index artifact (4 bytes/vector), not per-query work.
-    * v2: the frozen codebook is written beside the codes (see `cbPath`) so
-    * the append path can encode NEW vectors without the seed rows.
-    * v3: the per-vector quantization-error sidecar (`errPath`) is written
-    * too — the training baseline the append drift trigger reads.
-    */
-  def pqIndexPath(dir: String): String = {
-    val src = new java.io.File(dir, "embeddings.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_pq_codes_v4_$key"
-  }
-
   /** The frozen (m, k, cw) codebook parquet that travels with a PQ code
     * artifact — what new vectors encode against when APPENDING.
     */
@@ -918,16 +884,16 @@ object Similarity {
       .agg(sum(floor(col("dist") * lit(1000000.0)).cast("long")).as("err_fp"))
 
   /** Build step: materialize (vec_id, m, k) PQ code assignments once per
-    * corpus (idempotent, `_SUCCESS`-guarded like the IVF build), plus the
+    * corpus (cached like the IVF build; at scale the codes are a written
+    * index artifact of 4 bytes/vector, not per-query work), plus the
     * frozen codebook beside them.
     */
   def buildPqIndex(s: SparkSession, dir: String): String = {
-    val path = pqIndexPath(dir)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    val root = DerivedStore.cached("pq_codes", dir, "embeddings") { root =>
       val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      writePqIndex(e, path)
+      writePqIndex(e, s"$root/codes")
     }
-    path
+    s"$root/codes"
   }
 
   /** Write codes + codebook for a (vec_id, v) frame. The codebook seed is
@@ -1131,46 +1097,24 @@ object Similarity {
       .orderBy("adc_dist", "vec_id")
   }
 
-  /** Where the RESIDUAL PQ code artifact lives (IVFADC's compressed
-    * payload — codes of v − centroid(cell(v)), not of v).
-    */
-  def resPqIndexPath(dir: String): String = {
-    val src = new java.io.File(dir, "embeddings.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_respq_codes_v3_$key"
-  }
-
-  /** Build the residual-PQ artifact: subtract each vector's cell centroid
-    * (the IVF artifact), then encode the residuals with `writePqIndex`
+  /** Build the RESIDUAL PQ code artifact (IVFADC's compressed payload —
+    * codes of v − centroid(cell(v)), not of v): subtract each vector's
+    * cell centroid (the IVF artifact), then encode the residuals with `writePqIndex`
     * (seed codebook = the first PqK RESIDUALS' subvectors). Residuals are
     * what IVFADC compresses because they are smaller and center on zero —
     * the same code budget quantizes a tighter distribution, which is why
     * residual recall ≥ raw recall (spec-measured).
     */
   def buildResPqIndex(s: SparkSession, dir: String): String = {
-    val path = resPqIndexPath(dir)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    val root = DerivedStore.cached("respq_codes", dir, "embeddings") { root =>
       val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       val cents = s.read.parquet(buildIvfIndex(s, dir))
         .select(col("label").as("cl"), col("centroid"))
       val er = e.join(broadcast(cents), col("label") === col("cl"))
         .select(col("vec_id"), zip_with(col("v"), col("centroid"), _ - _).as("v"))
-      writePqIndex(er, path)
+      writePqIndex(er, s"$root/codes")
     }
-    path
-  }
-
-  /** Where the TRAINED residual-PQ artifact lives — q106's residual codes
-    * after ONE q107 Lloyd round refined the codebook.
-    */
-  def trainedResPqIndexPath(dir: String): String = {
-    val src = new java.io.File(dir, "embeddings.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_trespq_codes_v2_$key"
+    s"$root/codes"
   }
 
   /** Per-vector fixed-point quantization-error sidecar that travels with
@@ -1236,14 +1180,14 @@ object Similarity {
     * Writes three tables: codes (vec_id, m, k), the frozen trained
     * codebook (`cbPath` — what appends and query LUTs read), and the
     * per-vector seed/trained error sidecar (`errPath`; Lloyd
-    * monotonicity makes Σtrained ≤ Σseed, spec-pinned). Codes write LAST
-    * so the `_SUCCESS` guard implies both sidecars exist. Same scale
-    * shape as the untrained build: two broadcast-codebook encodes plus
-    * one (M·K·subdim)-cell hash aggregate, corpus-linear.
+    * monotonicity makes Σtrained ≤ Σseed, spec-pinned), all inside one
+    * [[DerivedStore]] root. Same scale shape as the untrained build: two
+    * broadcast-codebook encodes plus one (M·K·subdim)-cell hash
+    * aggregate, corpus-linear.
     */
   def buildTrainedResPqIndex(s: SparkSession, dir: String): String = {
-    val path = trainedResPqIndexPath(dir)
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    val root = DerivedStore.cached("trespq_codes", dir, "embeddings") { root =>
+      val path = s"$root/codes"
       val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       val cents = s.read.parquet(buildIvfIndex(s, dir))
         .select(col("label").as("cl"), col("centroid"))
@@ -1286,7 +1230,7 @@ object Similarity {
       writeBuildMeta(er, path)
       best1.select(col("vec_id"), col("m"), col("k")).write.mode("overwrite").parquet(path)
     }
-    path
+    s"$root/codes"
   }
 
   private def q106OracleSql: String = {
@@ -1380,7 +1324,7 @@ object Similarity {
     val codes = s.read.parquet(buildResPqIndex(s, dir))
     val cents = s.read.parquet(buildIvfIndex(s, dir))
     val centSel = cents.select(col("label").as("cl"), col("centroid"))
-    val cb = s.read.parquet(cbPath(resPqIndexPath(dir)))
+    val cb = s.read.parquet(cbPath(buildResPqIndex(s, dir)))
     val qrow = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
     val probes = cents.crossJoin(broadcast(qrow))
       .select(col("label").as("probe_label"),

@@ -350,14 +350,6 @@ object Sketches {
 
   // ── q224: the HLL dashboard under RETENTION ───────────────────────────
 
-  def hllTtlStorePath(dir: String): String = {
-    val src = new java.io.File(dir, "events.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}:hllttl".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_hll_ttl_v1_$key"
-  }
-
   /** Four arrival-ordered HLL register landings (event_id quartiles,
     * p = 8 — q108's configuration), then the two oldest EXPIRED
     * ([[graft.streaming.StoreCompaction.expireBefore]]). Registers
@@ -369,12 +361,10 @@ object Sketches {
     * event_id floor).
     */
   def buildHllTtlStore(s: SparkSession, dir: String): (String, Long) = {
-    val root = hllTtlStorePath(dir)
-    val deltas = s"$root/deltas"
     val e = ev(s, dir)
     val q = e.agg(max(col("event_id"))).head().getLong(0) / 4
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = graft.exec.DerivedStore.cached("hll_ttl", dir, "events") { root =>
+      val deltas = s"$root/deltas"
       val bounds = Seq(
         Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
@@ -383,9 +373,8 @@ object Sketches {
           deltas, k.toLong, p = 8)
       }
       graft.streaming.StoreCompaction.expireBefore(deltas, 2L)
-      marker.createNewFile()
     }
-    (deltas, 2 * q)
+    (s"$root/deltas", 2 * q)
   }
 
   /** q224 — HLL DISTINCT over a retention window: the sketch family's

@@ -55,13 +55,16 @@ object Compliance {
       expiryAuditRoots: Seq[String] = Nil,
       amendAuditRoots: Seq[String] = Nil): DataFrame = {
     import spark.implicits._
-    val lookup = stores.toDF("__name", "__dir")
 
-    val fRoots = forgetMarkerRoots.map(r => s"$r/reports")
-      .filter(p => new java.io.File(p).exists())
+    val fRoots = forgetMarkerRoots.filter(r => new java.io.File(s"$r/reports").exists())
     val forgetRows = if (fRoots.isEmpty) Nil else {
-      val fr = spark.read.parquet(fRoots: _*)
-        .join(lookup, col("store") === col("__dir"))
+      // each marker root's certificates name the stores as seen from it
+      val fr = fRoots.map { r =>
+        spark.read.parquet(s"$r/reports").join(
+          stores.map { case (n, d) => n -> ForgetStream.certifiedStore(r, d) }
+            .toDF("__name", "__dir"),
+          col("store") === col("__dir"))
+      }.reduce(_.unionByName(_))
       val reqs = fr.groupBy(col("__name").as("store"))
         .agg(countDistinct(col("batch_id")).as("value"))
         .select(col("store"), lit("forget_requests").as("metric"), col("value"))

@@ -123,6 +123,18 @@ object ForgetStream {
   def erasureCertificate(spark: SparkSession, markerRoot: String): DataFrame =
     spark.read.parquet(s"$markerRoot/reports")
 
+  /** How a certificate under `markerRoot` names `store`: relative to the
+    * marker root's parent when the store lies under it, else by absolute
+    * path. A directory holding the markers and the stores can then move
+    * as a whole — a derived store is built in a staging dir and renamed
+    * into place — and its certificates still name its stores.
+    */
+  private[streaming] def certifiedStore(markerRoot: String, store: String): String = {
+    val base = java.nio.file.Paths.get(markerRoot).toAbsolutePath.normalize.getParent
+    val p = java.nio.file.Paths.get(store).toAbsolutePath.normalize
+    if (p.startsWith(base)) base.relativize(p).toString else p.toString
+  }
+
   /** One request batch's full fold — exposed so specs can pin replay
     * (same batchId re-run) as a no-op across every target store.
     *
@@ -188,7 +200,7 @@ object ForgetStream {
       (String, String, String, Long, String)]
     def record(family: String, store: String, action: String, n: Long,
         detail: String): Unit = {
-      cert += ((family, store, action, n, detail))
+      cert += ((family, certifiedStore(markerRoot, store), action, n, detail))
       ()
     }
     def recordSurgical(family: String, store: String,

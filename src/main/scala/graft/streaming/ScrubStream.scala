@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.exec.DerivedStore
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,9 +12,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * benchmark hash set from raw benchmark text every run; a pipeline
   * scrubs arriving documents against a FROZEN benchmark release).
   *
-  * Artifact discipline: the benchmark set is a content-addressed parquet
-  * of distinct h60 shingle hashes with a commit marker (the curation-
-  * store pattern) — small by nature (a benchmark suite, not a corpus),
+  * Artifact discipline: the benchmark set is a parquet of distinct h60
+  * shingle hashes cached by [[graft.exec.DerivedStore]] — small by nature (a benchmark suite, not a corpus),
   * so every micro-batch broadcasts it; rebuilding it is only ever
   * triggered by a new benchmark release, never by corpus growth.
   *
@@ -32,33 +32,17 @@ object ScrubStream {
   def readDocStream(spark: SparkSession, landingDir: String): DataFrame =
     CorpusStream.readDocStream(spark, landingDir)
 
-  /** Where the benchmark shingle artifact for a corpus dir lives —
-    * content-addressed by documents.parquet identity (regenerated corpus
-    * → regenerated benchmark slice → new artifact).
-    */
-  def benchArtifactPath(dir: String): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_bench_shingles_v1_$key"
-  }
-
   /** Build (or reuse) the benchmark shingle artifact: the distinct h60
-    * set of the benchmark slice (doc_id < 50), marker-committed.
+    * set of the benchmark slice (doc_id < 50), cached per corpus
+    * (regenerated corpus → regenerated benchmark slice → new artifact).
     */
-  def buildBenchArtifact(s: SparkSession, dir: String): String = {
-    val root = benchArtifactPath(dir)
-    val marker = new java.io.File(root, "_ARTIFACT_COMMITTED")
-    if (!marker.exists()) {
+  def buildBenchArtifact(s: SparkSession, dir: String): String =
+    DerivedStore.cached("bench_shingles", dir, "documents") { root =>
       val bench = graft.Catalog.table(s, dir, "documents")
         .filter(col("doc_id") < 50).select(col("doc_id"), col("text"))
       Dedup.benchShingleHashes(bench)
         .write.mode("overwrite").parquet(s"$root/hashes")
-      marker.createNewFile()
     }
-    root
-  }
 
   /** One micro-batch's scrub rows — `Dedup.scrubSpansByHashes` verbatim
     * (the batch q137 kernel against the artifact's hash set), with the
@@ -112,24 +96,13 @@ object ScrubStream {
       }
       .start()
 
-  /** Where the batch-built scrub store for a corpus dir lives. */
-  def scrubStorePath(dir: String): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_scrub_store_v1_$key"
-  }
-
   /** Build the scrub store for a corpus dir by running the sink's batch
     * path over the whole corpus slice as one batch — the same code every
     * micro-batch runs, so the store IS the streaming sink's output
-    * shape. Marker-committed; returns the store root.
+    * shape. Returns the store root.
     */
-  def buildScrubStore(s: SparkSession, dir: String): String = {
-    val root = scrubStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+  def buildScrubStore(s: SparkSession, dir: String): String =
+    DerivedStore.cached("scrub_store", dir, "documents") { root =>
       val benchRoot = buildBenchArtifact(s, dir)
       val corpus = graft.Catalog.table(s, dir, "documents")
         .filter(col("doc_id") >= 50)
@@ -137,19 +110,7 @@ object ScrubStream {
       val bench = s.read.parquet(s"$benchRoot/hashes")
       batchScrub(corpus, bench)
         .write.mode("overwrite").parquet(s"$root/rows/batch_id=0")
-      marker.createNewFile()
     }
-    root
-  }
-
-  /** Where the inverted (h, doc_id) shingle index for a corpus lives. */
-  def shingleIndexPath(dir: String): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_shingle_index_v1_$key"
-  }
 
   /** Build (or reuse) the inverted shingle index: DISTINCT (h, doc_id)
     * pairs over the corpus's positional 3-shingles. Built once per
@@ -157,18 +118,13 @@ object ScrubStream {
     * touched-doc detection becomes a broadcast join of the (tiny) hash
     * delta against this index, with no corpus text unroll at all.
     */
-  def buildShingleIndex(s: SparkSession, dir: String): String = {
-    val root = shingleIndexPath(dir)
-    val marker = new java.io.File(root, "_INDEX_COMMITTED")
-    if (!marker.exists()) {
+  def buildShingleIndex(s: SparkSession, dir: String): String =
+    DerivedStore.cached("shingle_index", dir, "documents") { root =>
       val corpus = graft.Catalog.table(s, dir, "documents")
         .filter(col("doc_id") >= 50).select(col("doc_id"), col("text"))
       Dedup.positionalShingles(corpus).select(col("h"), col("doc_id")).distinct()
         .write.mode("overwrite").parquet(s"$root/pairs")
-      marker.createNewFile()
     }
-    root
-  }
 
   /** One micro-batch's inverted-index delta: the corpus slice's
     * (doc_id ≥ 50, the batch-build's convention) DISTINCT positional-
@@ -252,19 +208,9 @@ object ScrubStream {
     graft.ops.Dedup.scrubReport(
       StoreCompaction.readWindow(spark, storeDir, lo, upto))
 
-  /** Where the release-DELTA-structured shingle-index store for a corpus
-    * lives (two committed partitions: batch 0 = the first release's
-    * corpus half, batch 1 = the rest — q183's max/2 release convention).
-    */
-  def shingleDeltaStorePath(dir: String): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}:deltas".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_shingle_deltas_v1_$key"
-  }
-
-  /** Build (or reuse) the release-delta shingle-index store: the corpus
+  /** Build (or reuse) the release-delta shingle-index store (two
+    * committed partitions: batch 0 = the first release's corpus half,
+    * batch 1 = the rest — q183's max/2 release convention): the corpus
     * split at the q183 release boundary (max doc_id / 2), each half one
     * per-batchId partition — exactly what `shingleIndexSink` would have
     * produced had the two releases landed as separate micro-batches.
@@ -273,12 +219,9 @@ object ScrubStream {
     val d = graft.Catalog.table(s, dir, "documents")
     val cut = d.agg(org.apache.spark.sql.functions.max(col("doc_id")))
       .head().getLong(0) / 2
-    val root = shingleDeltaStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("shingle_deltas", dir, "documents") { root =>
       writeShingleDelta(d.filter(col("doc_id") < cut), s"$root/deltas", 0L)
       writeShingleDelta(d.filter(col("doc_id") >= cut), s"$root/deltas", 1L)
-      marker.createNewFile()
     }
     // q198 serves release 0 off this store — write the pin through the
     // registry (idempotent) so any maintenance fold past batch 0 refuses
@@ -287,19 +230,8 @@ object ScrubStream {
     (s"$root/deltas", cut)
   }
 
-  /** Where the four-landing trend store lives — q199's finer-grained
-    * sibling of [[shingleDeltaStorePath]] (quartile landings instead of
-    * the single release split).
-    */
-  def shingleTrendStorePath(dir: String): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}:deltas4".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_shingle_deltas4_v1_$key"
-  }
-
-  /** Build (or reuse) the FOUR-landing shingle-index delta store: the
+  /** Build (or reuse) the FOUR-landing shingle-index delta store —
+    * q199's finer-grained sibling of [[buildShingleDeltaStore]]: the
     * corpus cut at multiples of max(doc_id)/4 (integer division first,
     * so the oracle reproduces the boundaries exactly), one per-batchId
     * partition per landing — the registry a containment-over-time sweep
@@ -314,16 +246,13 @@ object ScrubStream {
     val q = d.agg(org.apache.spark.sql.functions.max(col("doc_id")))
       .head().getLong(0) / 4
     val bounds = Seq(q, 2 * q, 3 * q, Long.MaxValue)
-    val root = shingleTrendStorePath(dir)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+    val root = DerivedStore.cached("shingle_deltas4", dir, "documents") { root =>
       bounds.zipWithIndex.foreach { case (hi, k) =>
         val lo = if (k == 0) Long.MinValue else bounds(k - 1)
         writeShingleDelta(
           d.filter(col("doc_id") >= lo && col("doc_id") < hi),
           s"$root/deltas", k.toLong)
       }
-      marker.createNewFile()
     }
     StoreCompaction.registerPin(s"$root/deltas", "trend_history", 0L)
     (s"$root/deltas", bounds)
@@ -377,19 +306,9 @@ object ScrubStream {
       .orderBy("batch_id")
   }
 
-  /** Where a RELEASE-keyed scrub store lives: corpus identity × the
-    * benchmark release's id bound — each benchmark release gets its own
-    * frozen verdict store.
-    */
-  def releaseScrubStorePath(dir: String, benchMaxId: Long): String = {
-    val src = new java.io.File(dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:${src.lastModified}:${src.length}:r$benchMaxId".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft_scrub_release_v1_$key"
-  }
-
-  /** Build a release's scrub store. With `prev` (an earlier release's
+  /** Build a release's scrub store — keyed by corpus identity × the
+    * benchmark release's id bound, so each benchmark release gets its own
+    * frozen verdict store. With `prev` (an earlier release's
     * committed store and its id bound), the build is INCREMENTAL —
     * `Dedup.incrementalRescrub` re-scrubs only the docs the release
     * delta touches and carries every other row over from the previous
@@ -397,10 +316,8 @@ object ScrubStream {
     * density, not a corpus re-scan. Without `prev`, a full scrub.
     */
   def buildReleaseScrubStore(s: SparkSession, dir: String, benchMaxId: Long,
-      prev: Option[(String, Long)] = None): String = {
-    val root = releaseScrubStorePath(dir, benchMaxId)
-    val marker = new java.io.File(root, "_STORE_COMMITTED")
-    if (!marker.exists()) {
+      prev: Option[(String, Long)] = None): String =
+    DerivedStore.cached(s"scrub_release_r$benchMaxId", dir, "documents") { root =>
       val d = graft.Catalog.table(s, dir, "documents")
       val corpus = d.filter(col("doc_id") >= 50)
         .select(col("doc_id"), col("text"), col("source"))
@@ -422,8 +339,5 @@ object ScrubStream {
           batchScrub(corpus, h2)
       }
       rows.write.mode("overwrite").parquet(s"$root/rows/batch_id=0")
-      marker.createNewFile()
     }
-    root
-  }
 }

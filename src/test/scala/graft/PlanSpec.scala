@@ -94,8 +94,9 @@ class PlanSpec extends AnyFunSuite {
       s"serving an amended window must never re-read the corpus:\n$p227")
     val p228 = plan("q228_amend_curation")
     val loc228 = p228.linesIterator.filter(_.contains("Location:")).toSeq
+    val amendRoot = graft.ops.ForgetOps.buildCurationAmendStore(spark, sf)
     assert(loc228.nonEmpty &&
-      loc228.forall(l => l.contains("graft_cur_amend_v") && l.contains("decisions")),
+      loc228.forall(l => l.contains(amendRoot) && l.contains("decisions")),
       s"the amended family must serve as a pure decisions-store read:\n${loc228.mkString("\n")}")
     assert(!p228.contains("documents.parquet"), p228)
   }
@@ -740,7 +741,7 @@ class PlanSpec extends AnyFunSuite {
     // carry the binary column (parquet column pruning — what keeps a
     // 100 TB asset table's audits from touching payload pages)
     val store = spark.read.parquet(
-      graft.ops.Multimodal.assetStorePath(sf))
+      graft.ops.Multimodal.buildAssetStore(spark, sf))
     val countPlan = store.filter(org.apache.spark.sql.functions.col("kind") === "grid_bmp")
       .groupBy("kind").count()
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
