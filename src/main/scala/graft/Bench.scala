@@ -18,6 +18,26 @@ import scala.util.control.NonFatal
   */
 object Bench {
 
+  /** Per-query minimum seconds over the passes, in query order, of the
+    * queries that never threw, and the first error of each that did.
+    */
+  final case class Timing(seconds: Seq[(String, Double)], failed: collection.Map[String, Throwable])
+
+  /** Runs `passes` timed passes over `queries`. A query that throws in
+    * any pass is failed: it is left out of `seconds`, so it can never be
+    * reported as fast.
+    */
+  def timePasses(passes: Int, queries: Seq[(String, () => Unit)]): Timing = {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
+    val runs = (1 to passes).map(_ => queries.map { case (name, run) =>
+      val t0 = System.nanoTime()
+      try run() catch { case NonFatal(e) => failed.getOrElseUpdate(name, e) }
+      name -> (System.nanoTime() - t0) / 1e9
+    }.toMap)
+    Timing(queries.collect { case (name, _) if !failed.contains(name) => name -> runs.map(_(name)).min },
+      failed)
+  }
+
   /** Force production of every output column. Falls back to count() for
     * the rare output type the hash expression rejects (e.g. MapType).
     */
@@ -29,8 +49,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.fromEnv()
-    // A query that throws is still timed (stdout keeps its format), but
-    // its name and first error go to stderr, so it cannot pass for fast.
+    // Warmup and index-build errors go to stderr; a query that throws in
+    // a timed pass is also left out of the times (see `timePasses`).
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def attempt(name: String)(body: => Unit): Unit =
       try body catch { case NonFatal(e) => failures.getOrElseUpdate(name, String.valueOf(e.getMessage)) }
@@ -52,25 +72,15 @@ object Bench {
     attempt("buildPqIndex")(ops.Similarity.buildPqIndex(spark, sfDir))
     attempt("buildResPqIndex")(ops.Similarity.buildResPqIndex(spark, sfDir))
     attempt("buildTrainedResPqIndex")(ops.Similarity.buildTrainedResPqIndex(spark, sfDir))
-    // two timed passes, min per query: a single-shot timing on a shared
-    // host folds GC pauses and CPU steal into whichever query they land
-    // on (observed: the same query 1.4 s and 8.7 s across runs); the min
-    // of two is the reproducible steady-state cost of the plan
-    def timedPass(): Map[String, Double] = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      attempt(name)(force(fn(spark, sfDir)))
-      name -> (System.nanoTime() - t0) / 1e9
-    }.toMap
     // min over N passes (default 3): single-shot timings on this shared
     // host fold GC pauses and CPU steal into whichever query they land on
     // (observed: identical plans 1.4 s vs 8.7 s, suite totals 66-85 s);
     // the per-query min is the reproducible steady-state cost of the plan
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .flatMap(_.toIntOption).getOrElse(3).max(1)
-    val runs = (1 to passes).map(_ => timedPass())
-    val results = ordered.map { case (name, _) =>
-      name -> runs.map(_(name)).min
-    }
+    val Timing(results, thrown) = timePasses(passes,
+      ordered.map { case (name, fn) => name -> (() => force(fn(spark, sfDir))) })
+    thrown.foreach { case (name, e) => failures.getOrElseUpdate(name, String.valueOf(e.getMessage)) }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -89,8 +99,9 @@ object Bench {
       }.mkString("{", ",", "}")
       println(s"""{"bench_chunk":${i + 1},"of":${chunks.size},"q":$body}""")
     }
-    val (maxQ, maxV) = results.maxBy(_._2)
-    println(s"""{"total_s":${r3(total)},"n_queries":${results.size},"max_s":${r3(maxV)},"max_q":"$maxQ","sf":"$sfDir"}""")
+    val (maxQ, maxV) = results.maxByOption(_._2).getOrElse("" -> 0.0)
+    val failed = thrown.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"total_s":${r3(total)},"n_queries":${results.size},"max_s":${r3(maxV)},"max_q":"$maxQ","sf":"$sfDir","failed":$failed}""")
     failures.foreach { case (name, msg) => System.err.println(s"[bench] $name threw: $msg") }
     spark.stop()
   }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one way this engine builds a session: `local[cpus]` with `cpus`
   * shuffle partitions, the UTC session time zone, no UI, WARN logging and
   * [[GraftExtensions]], so every kernel resolves in it and in each
-  * `newSession()` of it.
+  * `newSession()` of it, and Spark's generated-class cache gets the size the
+  * extension defaults it to, unless one is set explicitly.
   */
 object Sessions {
   def local(cpus: Int): SparkSession = {

@@ -353,10 +353,12 @@ object TextOps {
       .agg(
         count(lit(1)).as("n_docs"),
         sum(tokenCount(col("text"))).cast("long").as("n_tokens"))
-    val total = org.apache.spark.sql.expressions.Window.partitionBy()
-    agg.select(col("source"), col("n_docs"), col("n_tokens"),
+    // The one-row total joins back by broadcast; an empty OVER () window
+    // would move every source into a single partition.
+    val total = agg.agg(sum(col("n_tokens")).as("total_tokens"))
+    agg.crossJoin(total).select(col("source"), col("n_docs"), col("n_tokens"),
       Det.dround(col("n_tokens").cast("double") /
-        sum(col("n_tokens")).over(total).cast("double"), 6).as("token_share"))
+        col("total_tokens").cast("double"), 6).as("token_share"))
       .orderBy("source")
   }
 

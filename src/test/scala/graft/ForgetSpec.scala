@@ -12,15 +12,9 @@ import graft.streaming.{CorpusStream, CurationStream, Forget, LshStream, StoreCo
   * survivors — including through compaction (forgetting rows already
   * folded into the base partition).
   */
-class ForgetSpec extends AnyFunSuite {
+class ForgetSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  private def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit()
-    d.getPath
-  }
 
   private val sf = "/root/testdata/sf0.001"
   private def docs = Catalog.table(spark, sf, "documents")

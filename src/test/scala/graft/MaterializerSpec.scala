@@ -3,24 +3,22 @@ package graft
 import graft.exec.Materializer
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-class MaterializerSpec extends AnyFunSuite {
+class MaterializerSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft_mat").toString + "/t"
+  private def tablePath(): String = tmpDir("graft_mat") + "/t"
 
   test("first upsert creates the target") {
-    val path = tmpDir()
+    val path = tablePath()
     val batch = Seq((1, "a", 10), (2, "b", 20)).toDF("id", "name", "v")
     Materializer.incrementalUpsert(batch, path, Seq("id"))
     assert(spark.read.parquet(path).count() === 2)
   }
 
   test("upsert replaces matched keys and appends new ones (MERGE semantics)") {
-    val path = tmpDir()
+    val path = tablePath()
     Materializer.incrementalUpsert(Seq((1, "a", 10), (2, "b", 20)).toDF("id", "name", "v"), path, Seq("id"))
     Materializer.incrementalUpsert(Seq((2, "b2", 21), (3, "c", 30)).toDF("id", "name", "v"), path, Seq("id"))
     val got = spark.read.parquet(path).orderBy("id").collect()
@@ -29,7 +27,7 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("SCD2 upsert: changed keys close + reopen, unchanged keys untouched, history immutable") {
-    val path = tmpDir()
+    val path = tablePath()
     val t1 = java.sql.Timestamp.valueOf("2025-01-01 00:00:00")
     val t2 = java.sql.Timestamp.valueOf("2025-02-01 00:00:00")
     val t3 = java.sql.Timestamp.valueOf("2025-03-01 00:00:00")
@@ -62,7 +60,7 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("upsert is idempotent: re-applying the same batch is a no-op") {
-    val path = tmpDir()
+    val path = tablePath()
     val batch = Seq((1, "a", 10), (2, "b", 20)).toDF("id", "name", "v")
     Materializer.incrementalUpsert(batch, path, Seq("id"))
     val first = spark.read.parquet(path).orderBy("id").collect().toSeq
@@ -74,7 +72,7 @@ class MaterializerSpec extends AnyFunSuite {
   test("randomized upsert idempotence + key uniqueness (property)") {
     val rnd = new scala.util.Random(42)
     (1 to 5).foreach { _ =>
-      val path = tmpDir()
+      val path = tablePath()
       val batches = (1 to 3).map { _ =>
         (1 to 20).map(_ => (rnd.nextInt(10), rnd.nextInt(100))).toDF("id", "v")
           .dropDuplicates("id") // a batch has one row per key, like a MERGE source must
@@ -91,7 +89,7 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("schema evolution: append_new_columns null-fills old rows") {
-    val path = tmpDir()
+    val path = tablePath()
     Materializer.incrementalUpsert(Seq((1, "a")).toDF("id", "name"), path, Seq("id"))
     Materializer.incrementalUpsert(
       Seq((2, "b", 99)).toDF("id", "name", "extra"), path, Seq("id"))
@@ -102,7 +100,7 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("partitioned upsert only rewrites touched partitions (dynamic overwrite)") {
-    val path = tmpDir()
+    val path = tablePath()
     val day1 = Seq((1, "2025-01-01", 10), (2, "2025-01-01", 20), (3, "2025-01-02", 30))
       .toDF("id", "day", "v")
     Materializer.incrementalUpsert(day1, path, Seq("id"), partitionCols = Seq("day"))
@@ -124,7 +122,7 @@ class MaterializerSpec extends AnyFunSuite {
     val before = spark.conf.getOption(key)
     spark.conf.set(key, "static")
     try {
-      val path = tmpDir()
+      val path = tablePath()
       Materializer.incrementalUpsert(
         Seq((1, "2025-01-01", 10), (2, "2025-01-02", 20)).toDF("id", "day", "v"),
         path, Seq("id"), partitionCols = Seq("day"))
@@ -139,7 +137,7 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("clusteredWrite: a key-filtered scan touches exactly one file") {
-    val path = tmpDir()
+    val path = tablePath()
     val rnd = new scala.util.Random(7)
     val rows = (1 to 5000).map(i => (rnd.nextInt(1000), i)).toDF("k", "v")
     Materializer.clusteredWrite(rows, path, Seq("k"), numFiles = 8)
@@ -153,7 +151,7 @@ class MaterializerSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(11)
     val rows = (1 to 20000).map(i => (rnd.nextInt(1024), rnd.nextInt(1024), i)).toDF("x", "y", "v")
 
-    val zPath = tmpDir()
+    val zPath = tablePath()
     Materializer.zorderWrite(rows, zPath, Seq("x", "y"), numFiles = 16)
     val z = spark.read.parquet(zPath)
     assert(z.count() === 20000)
@@ -163,7 +161,7 @@ class MaterializerSpec extends AnyFunSuite {
     assert(zy <= 8, s"z-order: y-point query hit $zy of 16 files")
 
     // linear clustering on (x, y) localizes x but scatters y across all files
-    val lPath = tmpDir()
+    val lPath = tablePath()
     Materializer.clusteredWrite(rows, lPath, Seq("x", "y"), numFiles = 16)
     val l = spark.read.parquet(lPath)
     val ly = l.filter(col("y") === 5).select(input_file_name()).distinct().count()
@@ -178,7 +176,7 @@ class MaterializerSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(13)
     val rows = ((1 to 20000).map(i => (rnd.nextInt(1024), rnd.nextInt(1024), i))
       :+ ((1024 * 1024, 1024 * 1024, 0))).toDF("x", "y", "v")
-    val path = tmpDir()
+    val path = tablePath()
     Materializer.zorderWrite(rows, path, Seq("x", "y"), numFiles = 16)
     val t = spark.read.parquet(path)
     assert(t.count() === 20001)
@@ -195,7 +193,7 @@ class MaterializerSpec extends AnyFunSuite {
       .limit(200)
     val want = df.orderBy("event_id").collect().toSeq
     val schema = df.schema
-    val base = tmpDir()
+    val base = tablePath()
     graft.exec.Materializer.export(df, s"$base/csv", "csv")
     graft.exec.Materializer.export(df, s"$base/json", "jsonl")
     val fromCsv = spark.read.schema(schema).option("header", "true")
@@ -212,7 +210,7 @@ class MaterializerSpec extends AnyFunSuite {
   test("binaryFile source: opaque blobs ingest with path/length/content intact") {
     // the multimodal ingest path: raw image/audio files land as binary
     // columns (Multimodal.scala consumes exactly this shape downstream)
-    val dir = Files.createTempDirectory("graft_bin").toString
+    val dir = tmpDir("graft_bin")
     val payloads = Seq("img1.bin" -> Array[Byte](1, 2, 3, 4),
       "img2.bin" -> Array[Byte](9, 8, 7))
     payloads.foreach { case (n, b) =>
@@ -227,7 +225,7 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("a sink's returned schema re-reads the table as a bare read does") {
-    val path = tmpDir()
+    val path = tablePath()
     def same(written: org.apache.spark.sql.types.StructType): Unit = {
       val bare = spark.read.parquet(path)
       val typed = spark.read.schema(written).parquet(path)
@@ -241,7 +239,7 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("upsertInto without a target drops the old rows (full refresh)") {
-    val path = tmpDir()
+    val path = tablePath()
     Materializer.incrementalUpsert(Seq((1, "a"), (2, "b")).toDF("id", "name"), path, Seq("id"))
     Materializer.upsertInto(None, Seq((2, "b2"), (3, "c")).toDF("id", "name"), path, Seq("id"))
     val got = spark.read.parquet(path).orderBy("id").collect()
@@ -250,7 +248,7 @@ class MaterializerSpec extends AnyFunSuite {
   }
 
   test("overwriteTable swaps atomically and is re-runnable") {
-    val path = tmpDir()
+    val path = tablePath()
     Materializer.overwriteTable(Seq((1, "a")).toDF("id", "v"), path)
     Materializer.overwriteTable(Seq((2, "b"), (3, "c")).toDF("id", "v"), path)
     assert(spark.read.parquet(path).count() === 2)

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scorer, integer edit-distance goldens for linkage, the Bloom filter's
   * one-sided error guarantee, and the broadcast plan shape.
   */
-class MiningSpec extends AnyFunSuite {
+class MiningSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -227,7 +227,7 @@ class MiningSpec extends AnyFunSuite {
       sel.agg(sum(col("n_tokens"))).head().getLong(0))
     // determinism: a re-run materializes BYTE-identical manifest parquet
     def writeOnce(tag: String): Array[Byte] = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-manifest-$tag").toString
+      val dir = tmpDir(s"graft-manifest-$tag")
       Mining.q119.fn(spark, sf).coalesce(1).write.mode("overwrite").parquet(dir)
       val part = new java.io.File(dir).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get

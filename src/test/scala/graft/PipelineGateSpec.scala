@@ -5,17 +5,16 @@ import graft.models.Medallion
 import graft.quality.Checks
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The silver → gold gate of `Pipeline.run` on the in-test fixture. */
-class PipelineGateSpec extends AnyFunSuite {
+class PipelineGateSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private def isGold(model: String): Boolean =
     model.startsWith("fct_") || model.startsWith("dim_")
 
   test("a clean run builds gold with 35 + 19 passing checks, counted as on the lazy marts") {
-    val root = Files.createTempDirectory("graft_gate").toString
+    val root = tmpDir("graft_gate")
     val seeds = MedallionFixture.clean.writeSeeds(s"$root/seeds")
     val res = Pipeline.run(spark, s"$root/wh", seeds)
     assert(res.goldBuilt)
@@ -29,7 +28,7 @@ class PipelineGateSpec extends AnyFunSuite {
   }
 
   test("each gate reads each model once: at most 12 file scans for silver, 5 for gold") {
-    val root = Files.createTempDirectory("graft_gate").toString
+    val root = tmpDir("graft_gate")
     val seeds = MedallionFixture.clean.writeSeeds(s"$root/seeds")
     assert(Pipeline.run(spark, s"$root/wh", seeds).goldBuilt)
     def table(name: String) = spark.read.parquet(s"$root/wh/$name")
@@ -49,7 +48,7 @@ class PipelineGateSpec extends AnyFunSuite {
   }
 
   test("an unknown severity fails the silver gate: no gold is built or written") {
-    val root = Files.createTempDirectory("graft_gate").toString
+    val root = tmpDir("graft_gate")
     val seeds = MedallionFixture.clean.unknownSeverity.writeSeeds(s"$root/seeds")
     val res = Pipeline.run(spark, s"$root/wh", seeds)
     assert(!res.goldBuilt)

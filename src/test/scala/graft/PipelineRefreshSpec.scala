@@ -3,17 +3,16 @@ package graft
 import graft.exec.Pipeline
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** `Pipeline.run(fullRefresh = true)` drops and rebuilds the silver tables. */
-class PipelineRefreshSpec extends AnyFunSuite {
+class PipelineRefreshSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val Silver =
     Seq("int_sensor_readings_cleaned", "int_device_health", "int_alerts_enriched")
 
   test("a full refresh over an old warehouse drops rows whose source is gone") {
-    val root = Files.createTempDirectory("graft_refresh").toString
+    val root = tmpDir("graft_refresh")
     val clean = MedallionFixture.clean
     // An extra reading in an hour of its own, so it also makes a health row.
     val extra = "R9100,DEV001,temperature,62.5,2025-01-15 12:00:00,2025-01-15 12:05:00"

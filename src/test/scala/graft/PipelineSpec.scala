@@ -4,16 +4,15 @@ import graft.exec.Pipeline
 import graft.models.Medallion
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
-  private def wh(): String = Files.createTempDirectory("graft_wh").toString
+  private def wh(): String = tmpDir("graft_wh")
 
   /** `MedallionFixture.clean` written as a seed directory. */
   private def seeds(): String =
-    MedallionFixture.clean.writeSeeds(Files.createTempDirectory("graft_seeds").toString)
+    MedallionFixture.clean.writeSeeds(tmpDir("graft_seeds"))
 
   test("end-to-end: seed -> bronze -> silver -> tests -> gold, all green") {
     ReferenceSeeds.assumePresent()
@@ -210,7 +209,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("CorpusRun: the one-command curation lifecycle passes every cross-stage invariant") {
-    val out = java.nio.file.Files.createTempDirectory("graft-corpus-run").toString
+    val out = tmpDir("graft-corpus-run")
     val stages = CorpusRun.run(spark, "/root/testdata/sf0.001", out)
     assert(stages.map(_.name) ===
       Seq("curation", "decontamination", "leak_repair", "packing", "ordering",

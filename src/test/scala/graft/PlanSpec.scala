@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinned so a refactor that silently loses them fails `sbt test` instead
   * of a 100 TB run.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -312,7 +312,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("date-partitioned layout prunes partitions at the scan") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/events"
+    val dir = tmpDir("graft_part") + "/events"
     Catalog.table(spark, sf, "events")
       .withColumn("day", to_date(col("ts")))
       .write.partitionBy("day").parquet(dir)

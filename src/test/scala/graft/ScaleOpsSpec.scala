@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must keep band-collision candidates density-bounded when the corpus
   * contains exact-duplicate clusters (the SURVEY §8 blowup).
   */
-class ScaleOpsSpec extends AnyFunSuite {
+class ScaleOpsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -252,8 +252,8 @@ class ScaleOpsSpec extends AnyFunSuite {
       .select(col("vec_id"), col("label"), ops.Similarity.asDouble(col("embedding")).as("v"))
     val ids = e.select("vec_id").orderBy("vec_id").collect().map(_.getLong(0))
     val cut = ids(ids.length / 2)
-    val p1 = java.nio.file.Files.createTempDirectory("graft-ivf-inc").toString + "/idx"
-    val p2 = java.nio.file.Files.createTempDirectory("graft-ivf-full").toString + "/idx"
+    val p1 = tmpDir("graft-ivf-inc") + "/idx"
+    val p2 = tmpDir("graft-ivf-full") + "/idx"
     ops.Similarity.writeIvfIndex(e.filter(col("vec_id") < cut), p1)
     ops.Similarity.appendIvfIndex(spark, p1, e.filter(col("vec_id") >= cut))
     ops.Similarity.writeIvfIndex(e, p2)
@@ -284,7 +284,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       "fixture: the first half must cover every cell")
 
     // in-distribution: centroids barely move, no new cells, keep serving
-    val p1 = java.nio.file.Files.createTempDirectory("graft-ivfd-in").toString + "/idx"
+    val p1 = tmpDir("graft-ivfd-in") + "/idx"
     ops.Similarity.writeIvfIndex(half, p1)
     val inDist = ops.Similarity.appendIvfIndexMeasured(spark, p1, delta)
     assert(inDist.nAppended === delta.count())
@@ -292,7 +292,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(!inDist.rebuild,
       s"an in-distribution append must not trip the rebuild: $inDist")
     // and the measured merge wrote exactly the plain append's artifact
-    val p2 = java.nio.file.Files.createTempDirectory("graft-ivfd-full").toString + "/idx"
+    val p2 = tmpDir("graft-ivfd-full") + "/idx"
     ops.Similarity.writeIvfIndex(e, p2)
     def cents(p: String) = spark.read.parquet(p).collect()
       .map(r => r.getAs[Int]("label") ->
@@ -301,7 +301,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       "measured append must stay bit-equal to a from-scratch rebuild")
 
     // planted magnitude shift: centroids move past the routing gap
-    val p3 = java.nio.file.Files.createTempDirectory("graft-ivfd-shift").toString + "/idx"
+    val p3 = tmpDir("graft-ivfd-shift") + "/idx"
     ops.Similarity.writeIvfIndex(half, p3)
     val shifted = delta.select(col("vec_id"), col("label"),
       transform(col("v"), x => x * lit(10.0)).as("v"))
@@ -310,7 +310,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       s"a centroid-moving append must trip: $moved vs $inDist")
 
     // a never-seen cell always trips, whatever the geometry
-    val p4 = java.nio.file.Files.createTempDirectory("graft-ivfd-new").toString + "/idx"
+    val p4 = tmpDir("graft-ivfd-new") + "/idx"
     ops.Similarity.writeIvfIndex(half, p4)
     val newCell = delta.select(col("vec_id"),
       (col("label") + lit(1000)).as("label"), col("v"))
@@ -337,8 +337,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     val ids = e.select("vec_id").orderBy("vec_id").collect().map(_.getLong(0))
     val cut = ids(ids.length / 2)
     assert(cut > ops.Similarity.PqK, "first half must contain the codebook seeds")
-    val p1 = java.nio.file.Files.createTempDirectory("graft-pq-inc").toString + "/idx"
-    val p2 = java.nio.file.Files.createTempDirectory("graft-pq-full").toString + "/idx"
+    val p1 = tmpDir("graft-pq-inc") + "/idx"
+    val p2 = tmpDir("graft-pq-full") + "/idx"
     ops.Similarity.writePqIndex(e.filter(col("vec_id") < cut), p1)
     ops.Similarity.appendPqIndex(spark, p1, e.filter(col("vec_id") >= cut))
     ops.Similarity.writePqIndex(e, p2)
@@ -365,7 +365,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val delta = e.filter(col("vec_id") >= cut)
 
     // in-distribution: the appended half quantizes like the trained half
-    val p1 = java.nio.file.Files.createTempDirectory("graft-pqd-in").toString + "/idx"
+    val p1 = tmpDir("graft-pqd-in") + "/idx"
     ops.Similarity.writePqIndex(half, p1)
     val inDist = ops.Similarity.appendPqIndexMeasured(spark, p1, delta)
     assert(inDist.nAppended === ids.length - ids.count(_ < cut))
@@ -375,7 +375,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
     // the measured append writes EXACTLY the plain append's codes — the
     // drift statistic rides the encode, it never changes the artifact
-    val p2 = java.nio.file.Files.createTempDirectory("graft-pqd-full").toString + "/idx"
+    val p2 = tmpDir("graft-pqd-full") + "/idx"
     ops.Similarity.writePqIndex(e, p2)
     def codeSet(p: String) = spark.read.parquet(p)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -384,7 +384,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
     // planted drift: the same delta scaled 3x sits far from every
     // codeword — mean quantization error explodes and the trigger fires
-    val p3 = java.nio.file.Files.createTempDirectory("graft-pqd-drift").toString + "/idx"
+    val p3 = tmpDir("graft-pqd-drift") + "/idx"
     ops.Similarity.writePqIndex(half, p3)
     val shifted = delta.select(col("vec_id"),
       transform(col("v"), x => x * lit(3.0)).as("v"))

@@ -18,14 +18,8 @@ import graft.streaming.{CorpusStream, Forget, ForgetStream, StoreCompaction}
   * Runs at sf0.01 (the correctness-gate scale) so the vocabulary is
   * non-toy; every equality is exact (integer bigram counts).
   */
-class SoakSpec extends AnyFunSuite {
+class SoakSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
-
-  private def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit()
-    d.getPath
-  }
 
   private def lmMap(df: org.apache.spark.sql.DataFrame): Map[(String, String), Long] =
     df.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap

@@ -9,12 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * must be row-identical to the parquet source of truth — including
   * timestamps (ISO-8601 round trip) and float arrays (ORC/JSON).
   */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+  private def tmp(prefix: String): String = tmpDir(prefix) + "/t"
 
   private def roundTrip(src: DataFrame, format: String): DataFrame = {
     val dir = tmp(s"graft-src-$format")

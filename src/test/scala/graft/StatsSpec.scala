@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * feed Catalyst's cost-based join planning; at 100 TB they are what let
   * the optimizer pick broadcast vs shuffle and reorder joins correctly.
   */
-class StatsSpec extends AnyFunSuite {
+class StatsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("ANALYZE TABLE computes row and column statistics the optimizer can see") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stats").toString
+    val dir = tmpDir("graft_stats")
     spark.sql("DROP TABLE IF EXISTS stats_nation")
     val p = new org.apache.hadoop.fs.Path("spark-warehouse/stats_nation")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -14,13 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * ingest driving the shared Silver upsert path, watermarked streaming
   * dedup, tumbling-window aggregation, and flatMapGroupsWithState.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   import spark.implicits._
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private val csvHeader = "reading_id,device_id,metric_name,metric_value,reading_ts,ingested_at"
 

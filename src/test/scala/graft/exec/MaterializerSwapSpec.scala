@@ -1,15 +1,14 @@
 package graft.exec
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-class MaterializerSwapSpec extends AnyFunSuite {
+class MaterializerSwapSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("a swap from a missing staged dir throws and leaves the target intact") {
-    val path = Files.createTempDirectory("graft_swap").toString + "/t"
+    val path = tmpDir("graft_swap") + "/t"
     Materializer.overwriteTable(Seq((1, "a"), (2, "b")).toDF("id", "v"), path)
     val e = intercept[java.io.IOException] {
       Materializer.swap(spark, path + "__missing", path)
