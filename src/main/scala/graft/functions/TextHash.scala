@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Cross-engine 60-bit string hash + one-pass shingle extraction.
   *
   * h60(s) = the first 15 hex chars of md5(s) parsed as a base-16 integer —
-  * chosen because a DuckDB oracle can compute the identical value as
-  * `CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)`, which makes every
+  * chosen because a DuckDB oracle can compute the identical value
+  * (`graft.ops.OracleSql.h60`), which makes every
   * hash-based operator (minhash, simhash, LSH bands, fingerprints)
   * oracle-checkable, unlike engine-private hashes (xxhash64/murmur).
   * 60 bits keeps all arithmetic non-negative and overflow-free in BIGINT.
@@ -42,8 +42,8 @@ object TextHash {
 
   private val tokenPattern = java.util.regex.Pattern.compile("[a-z0-9]+")
 
-  /** Tokens of lower(s) matching [a-z0-9]+ — the JVM mirror of
-    * `regexp_extract_all(lower(text), '[a-z0-9]+')`. ASCII strings take a
+  /** Tokens of lower(s) matching [a-z0-9]+ — the JVM mirror of the
+    * oracles' one tokenizer, `graft.ops.OracleSql.tokens`. ASCII strings take a
     * single-pass fast path; anything else falls back to the exact
     * Locale.ROOT lowercase + java.util.regex pipeline Spark's built-ins
     * use (special casing like İ/ß changes string length, so per-char
@@ -162,8 +162,8 @@ object TextHash {
   }
 
   /** ALL (non-distinct) token h60 hashes — term-frequency-weighted inputs
-    * for simhash. Mirrors hashing `regexp_extract_all(lower(text),
-    * '[a-z0-9]+')` element-wise.
+    * for simhash. Mirrors hashing `graft.ops.OracleSql.tokens`
+    * element-wise.
     */
   def tokenHashes(s: String): Array[Long] = {
     val toks = tokenize(s)

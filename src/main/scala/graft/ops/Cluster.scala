@@ -141,26 +141,12 @@ object Cluster {
   }
 
   private def q65OracleSql: String = {
-    val bandSelects = (0 until Dedup.SimBits / Dedup.SimBandBits).map { k =>
-      s"  SELECT rep_id, simhash, $k AS band_idx, (simhash >> ${k * Dedup.SimBandBits}) & ${(1 << Dedup.SimBandBits) - 1} AS band_val FROM sigs"
-    }.mkString("\n  UNION ALL\n")
     s"""WITH RECURSIVE norm AS (
-       |  SELECT doc_id, text, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+       |  SELECT doc_id, text, md5(${OracleSql.normalized()}) AS fp
        |  FROM documents
        |), reps AS (
        |  SELECT fp, MIN(doc_id) AS rep_id, arg_min(text, doc_id) AS text FROM norm GROUP BY fp
-       |), tk AS (
-       |  SELECT rep_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM reps
-       |), hs AS (
-       |  SELECT rep_id, list_transform(t, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hh
-       |  FROM tk WHERE len(t) > 0
-       |), sigs AS (
-       |  SELECT rep_id,
-       |${Dedup.simhashSumSql} AS simhash
-       |  FROM hs
-       |), bands AS (
-       |$bandSelects
-       |), pairs AS (
+       |), ${Dedup.simhashBandCtes("reps", id = "rep_id")}, pairs AS (
        |  SELECT DISTINCT a.rep_id AS src, b.rep_id AS dst
        |  FROM bands a JOIN bands b
        |    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.rep_id < b.rep_id
@@ -252,6 +238,26 @@ object Cluster {
   private val CustOffset = 1000000000L
   private val PrIters = 5
 
+
+  /** PageRank oracle tail: `nodes` (suppliers, then customers offset by
+    * [[CustOffset]]), the uniform start `pr0`, the unrolled rounds `iters`
+    * and the 20 top-ranked nodes.
+    */
+  private def pageRankTailSql(iters: String): String =
+    s"""nodes AS (
+       |  SELECT CAST(s_suppkey AS BIGINT) AS id FROM supplier
+       |  UNION ALL
+       |  SELECT CAST($CustOffset AS BIGINT) + c_custkey FROM customer
+       |), pr0 AS (
+       |  SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes
+       |), $iters
+       |SELECT CASE WHEN id >= $CustOffset THEN 'customer' ELSE 'supplier' END AS node_kind,
+       |  CAST(CASE WHEN id >= $CustOffset THEN id - $CustOffset ELSE id END AS BIGINT) AS node_id,
+       |  CAST(r AS BIGINT) AS rank_fp
+       |FROM pr$PrIters
+       |ORDER BY rank_fp DESC, node_kind, node_id
+       |LIMIT 20""".stripMargin
+
   /** The supplier↔customer trade multigraph, grouped to one row per
     * (supplier, customer) pair with the transaction count as weight —
     * the ONE expensive build (lineitem⋈orders + group) that both q71
@@ -294,19 +300,7 @@ object Cluster {
        |  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
        |), ed AS (
        |  SELECT e.src, e.dst, d.deg FROM edges e JOIN deg d ON d.src = e.src
-       |), nodes AS (
-       |  SELECT CAST(s_suppkey AS BIGINT) AS id FROM supplier
-       |  UNION ALL
-       |  SELECT CAST($CustOffset AS BIGINT) + c_custkey FROM customer
-       |), pr0 AS (
-       |  SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes
-       |), $iters
-       |SELECT CASE WHEN id >= $CustOffset THEN 'customer' ELSE 'supplier' END AS node_kind,
-       |  CAST(CASE WHEN id >= $CustOffset THEN id - $CustOffset ELSE id END AS BIGINT) AS node_id,
-       |  CAST(r AS BIGINT) AS rank_fp
-       |FROM pr$PrIters
-       |ORDER BY rank_fp DESC, node_kind, node_id
-       |LIMIT 20""".stripMargin
+       |), ${pageRankTailSql(iters)}""".stripMargin
   }
 
   /** q71 — PageRank over the supplier↔customer transaction graph
@@ -510,19 +504,7 @@ object Cluster {
        |  SELECT src, CAST(SUM(w) AS BIGINT) AS wsum FROM edges GROUP BY src
        |), ed AS (
        |  SELECT e.src, e.dst, e.w, d.wsum FROM edges e JOIN wsums d ON d.src = e.src
-       |), nodes AS (
-       |  SELECT CAST(s_suppkey AS BIGINT) AS id FROM supplier
-       |  UNION ALL
-       |  SELECT CAST($CustOffset AS BIGINT) + c_custkey FROM customer
-       |), pr0 AS (
-       |  SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes
-       |), $iters
-       |SELECT CASE WHEN id >= $CustOffset THEN 'customer' ELSE 'supplier' END AS node_kind,
-       |  CAST(CASE WHEN id >= $CustOffset THEN id - $CustOffset ELSE id END AS BIGINT) AS node_id,
-       |  CAST(r AS BIGINT) AS rank_fp
-       |FROM pr$PrIters
-       |ORDER BY rank_fp DESC, node_kind, node_id
-       |LIMIT 20""".stripMargin
+       |), ${pageRankTailSql(iters)}""".stripMargin
   }
 
   /** q82 — WEIGHTED PageRank: edge weight = transaction count between the

@@ -33,8 +33,8 @@ object Corpus {
     * key space is vocabulary², both linear-scan friendly.
     */
   val q67 = Q("q67_bpe_merge_pairs",
-    """WITH tk AS (
-      |  SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+    s"""WITH tk AS (
+      |  SELECT ${OracleSql.tokens()} AS t FROM documents
       |), pr AS (
       |  SELECT unnest(list_transform(range(1, len(t)), i -> {'a': t[i], 'b': t[i+1]})) AS p
       |  FROM tk WHERE len(t) >= 2
@@ -71,14 +71,14 @@ object Corpus {
     */
   val q68 = Q("q68_chunk_documents",
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), ch AS (
        |  SELECT doc_id, t, unnest(range(0, len(t), $ChunkStride)) AS start FROM tk
        |  WHERE len(t) > 0
        |)
        |SELECT doc_id, start // $ChunkStride AS chunk_idx, start AS start_tok,
        |  len(list_slice(t, start + 1, start + $ChunkTokens)) AS n_chunk_tokens,
-       |  ${Dedup.h60Sql(s"array_to_string(list_slice(t, start + 1, start + $ChunkTokens), ' ')")} AS chunk_h60
+       |  ${OracleSql.h60(s"array_to_string(list_slice(t, start + 1, start + $ChunkTokens), ' ')")} AS chunk_h60
        |FROM ch
        |ORDER BY doc_id, chunk_idx""".stripMargin) { (s, dir) =>
     docs(s, dir)
@@ -104,29 +104,15 @@ object Corpus {
     * filter that runs FIRST at 100 TB, before any shuffle-bearing dedup.
     */
   val q69 = Q("q69_quality_gate",
-    s"""WITH st AS (
-       |  SELECT doc_id,
-       |    length(text) AS text_len,
-       |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t,
-       |    length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct
-       |  FROM documents
-       |), m AS (
-       |  SELECT doc_id, text_len, len(t) AS n_tokens,
-       |    CAST(coalesce(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS alpha_chars,
-       |    n_punct,
-       |    len(list_filter(t, x -> list_contains([${TextOps.allStop.map("'" + _ + "'").mkString(",")}], x))) AS n_stop
-       |  FROM st
-       |)
+    s"""WITH ${OracleSql.gateStatsCtes()}
        |SELECT doc_id, text_len, n_tokens, alpha_chars, n_punct,
        |  CAST(n_stop AS BIGINT) AS n_stop,
        |  n_tokens BETWEEN 50 AND 100000 AS len_ok,
        |  (3 * n_tokens <= alpha_chars AND alpha_chars <= 10 * n_tokens) AS wordlen_ok,
        |  10 * n_punct <= text_len AS punct_ok,
        |  n_stop >= 2 AS stop_ok,
-       |  (n_tokens BETWEEN 50 AND 100000
-       |    AND 3 * n_tokens <= alpha_chars AND alpha_chars <= 10 * n_tokens
-       |    AND 10 * n_punct <= text_len AND n_stop >= 2) AS keep
-       |FROM m
+       |  ${OracleSql.gateKeepSql} AS keep
+       |FROM gm
        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     gateFrame(docs(s, dir)).orderBy("doc_id")
   }
@@ -206,10 +192,10 @@ object Corpus {
     * — all hash-partitioned by fp, no skew (md5 keys are uniform).
     */
   val q72 = Q("q72_incremental_ingest",
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT doc_id, source,
-      |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-      |    CAST('0x' || substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 15) AS BIGINT) % 100 AS bucket
+      |    md5(${OracleSql.normalized()}) AS fp,
+      |    ${OracleSql.h60(OracleSql.normalized())} % 100 AS bucket
       |  FROM documents
       |), hist AS (
       |  SELECT DISTINCT fp FROM base WHERE bucket < 90
@@ -255,9 +241,9 @@ object Corpus {
     * shuffles and sorts the whole corpus to keep 5 rows per group).
     */
   val q77 = Q("q77_group_sample",
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT source, doc_id,
-      |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS hk
+      |    ${OracleSql.h60("CAST(doc_id AS VARCHAR)")} AS hk
       |  FROM documents
       |), r AS (
       |  SELECT source, doc_id,
@@ -284,8 +270,8 @@ object Corpus {
     * then a source rollup; both hash-partitioned, both map-side combined.
     */
   val q79 = Q("q79_dedup_report",
-    """WITH f AS (
-      |  SELECT source, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+    s"""WITH f AS (
+      |  SELECT source, md5(${OracleSql.normalized()}) AS fp
       |  FROM documents
       |), per AS (
       |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -312,9 +298,9 @@ object Corpus {
     * bounded by #sources² — never corpus-quadratic.
     */
   val q83 = Q("q83_source_overlap",
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT DISTINCT source,
-      |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+      |    md5(${OracleSql.normalized()}) AS fp
       |  FROM documents
       |)
       |SELECT a.source AS source_a, b.source AS source_b,
@@ -345,7 +331,7 @@ object Corpus {
     s"""WITH st AS (
        |  SELECT doc_id, text,
        |    length(text) AS text_len,
-       |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t,
+       |    ${OracleSql.tokens()} AS t,
        |    length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct
        |  FROM documents
        |), m AS (
@@ -355,7 +341,7 @@ object Corpus {
        |    len(list_filter(t, x -> list_contains([${TextOps.allStop.map("'" + _ + "'").mkString(",")}], x))) AS n_stop
        |  FROM st
        |), kept AS (
-       |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+       |  SELECT doc_id, md5(${OracleSql.normalized()}) AS fp
        |  FROM m
        |  WHERE n_tokens BETWEEN 50 AND 100000
        |    AND 3 * n_tokens <= alpha_chars AND alpha_chars <= 10 * n_tokens
@@ -379,7 +365,7 @@ object Corpus {
 
   private def q105OracleSql: String =
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), pr1 AS (
        |  SELECT unnest(list_transform(range(1, len(t)), i -> {'a': t[i], 'b': t[i+1]})) AS p
        |  FROM tk WHERE len(t) >= 2
@@ -760,7 +746,7 @@ object Corpus {
   private def q126OracleSql: String =
     s"""WITH t AS (
        |  SELECT source,
-       |    LEAST(CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT)
+       |    LEAST(CAST(len(${OracleSql.tokens()}) AS BIGINT)
        |      // $DriftBinWidth, $DriftMaxBin) AS bin
        |  FROM documents
        |), cells AS (
@@ -908,7 +894,7 @@ object Corpus {
     */
   private def snapParity = Dedup.h60Col(col("doc_id").cast("string")) % 2
 
-  private val snapParitySql = s"${Dedup.h60Sql("CAST(doc_id AS VARCHAR)")} % 2"
+  private val snapParitySql = s"${OracleSql.h60("CAST(doc_id AS VARCHAR)")} % 2"
 
   def snapshotA(d: DataFrame): DataFrame = d.filter(snapParity === 0)
 
@@ -922,12 +908,12 @@ object Corpus {
   private def snapshotSqlB =
     s"""SELECT * FROM documents WHERE $snapParitySql = 1
        |    AND NOT (source = '$DriftShiftSource'
-       |      AND CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) >= $DriftBinWidth)
+       |      AND CAST(len(${OracleSql.tokens()}) AS BIGINT) >= $DriftBinWidth)
        |    AND source <> '$DriftDropSource'""".stripMargin
 
   private def cellsSql(alias: String) =
     s"""SELECT source,
-       |    LEAST(CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT)
+       |    LEAST(CAST(len(${OracleSql.tokens()}) AS BIGINT)
        |      // $DriftBinWidth, $DriftMaxBin) AS bin,
        |    CAST(COUNT(*) AS BIGINT) AS o
        |  FROM $alias GROUP BY 1, 2""".stripMargin
@@ -1133,7 +1119,7 @@ object Corpus {
   val RollSnapshots = 4
 
   private val rollParitySql =
-    s"CAST(${Dedup.h60Sql("'roll:' || CAST(doc_id AS VARCHAR)")} % $RollSnapshots AS BIGINT)"
+    s"CAST(${OracleSql.h60("'roll:' || CAST(doc_id AS VARCHAR)")} % $RollSnapshots AS BIGINT)"
 
   /** The rolling fixture: RollSnapshots-way h60 split, with
     * `DriftDropSource` vanishing from the LAST snapshot only — the sweep
@@ -1188,7 +1174,7 @@ object Corpus {
        |  WHERE NOT (snapshot_id = ${RollSnapshots - 1} AND source = '$DriftDropSource')
        |), kcells AS (
        |  SELECT snapshot_id, source,
-       |    LEAST(CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT)
+       |    LEAST(CAST(len(${OracleSql.tokens()}) AS BIGINT)
        |      // $DriftBinWidth, $DriftMaxBin) AS bin,
        |    CAST(COUNT(*) AS BIGINT) AS o
        |  FROM tg GROUP BY 1, 2, 3

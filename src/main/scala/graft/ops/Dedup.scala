@@ -37,38 +37,19 @@ object Dedup {
   private def docsPlain(s: SparkSession, dir: String) =
     Catalog.table(s, dir, "documents")
 
-  /** SQL fragment: h60 of a string expression (DuckDB mirror of
-    * TextHash.h60 / the conv(substr(md5)) Spark tree).
-    */
-  def h60Sql(e: String): String = s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
-
   /** Spark column: h60 via built-ins (for small per-row strings like band
     * keys; the per-shingle path uses the codegen ShingleHashes instead).
     */
   def h60Col(c: Column): Column = conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Shared oracle CTEs: tokens → distinct 3-shingle strings → h60 list
-    * (mirrors ShingleHashes(text, 3) exactly), from any (doc_id, text)
-    * relation — q127 runs it over gate-keeper representatives. */
-  private[ops] def shingleCtesBody(base: String): String =
-    s"""tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM $base
-       |), sh AS (
-       |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-       |    THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
-       |    ELSE [array_to_string(t, ' ')] END) AS ss FROM tk
-       |), hs AS (
-       |  SELECT doc_id, list_transform(ss, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hh FROM sh
-       |)""".stripMargin
-
-  private val shingleCtes = "WITH " + shingleCtesBody("documents")
+  private def shingleCtes = "WITH " + OracleSql.shingleCtes()
 
   /** q30 — exact dedup: cluster by normalized-content fingerprint, keep the
     * lowest doc_id (one shuffle on the 128-bit key; at any scale this is
     * the cheapest dedup and the first pass before near-dup methods).
     */
   val q30 = Q("q30_dedup_exact",
-    """SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint,
+    s"""SELECT md5(${OracleSql.normalized()}) AS fingerprint,
       |  MIN(doc_id) AS keep_doc_id,
       |  COUNT(*) AS n_copies,
       |  COUNT(*) - 1 AS n_removed
@@ -98,7 +79,7 @@ object Dedup {
       Array.fill(NumHashes)(rnd.nextInt(Int.MaxValue).toLong))
   }
 
-  val ShingleN = 3
+  final val ShingleN = 3
 
   /** Content fingerprint of the banding CONFIGURATION — shingle width,
     * signature length, band size, prime, and both affine hash families.
@@ -169,31 +150,42 @@ object Dedup {
   /** Oracle fragment: the 64 affine min-hash signature columns off an `hh`
     * shingle-hash list (shared by every LSH oracle below).
     */
-  private[ops] def sigDefsSql: String = (0 until NumHashes).map(i =>
+  private def sigDefsSql: String = (0 until NumHashes).map(i =>
     s"  list_min(list_transform(hh, h -> ((h % $MinhashPrime) * ${hashA(i)} + ${hashB(i)}) % $MinhashPrime)) AS sig_$i")
     .mkString(",\n")
 
   /** Oracle fragment: the 16-band h60 bucket rows off a `sigs` relation. */
-  private[ops] def bandSelectsSql: String = (0 until NumHashes / BandSize).map { j =>
+  private def bandSelectsSql: String = (0 until NumHashes / BandSize).map { j =>
     val parts = (0 until BandSize).map(k => s"sig_${j * BandSize + k}").mkString(", ")
-    s"  SELECT doc_id, $j AS band_idx, ${h60Sql(s"concat_ws(',', $parts)")} AS band_hash FROM sigs"
+    s"  SELECT doc_id, $j AS band_idx, ${OracleSql.h60(s"concat_ws(',', $parts)")} AS band_hash FROM sigs"
   }.mkString("\n  UNION ALL\n")
 
-  private def q31OracleSql: String = {
-    val sigDefs = sigDefsSql
-    val bandSelects = bandSelectsSql
-    val checksum = (0 until NumHashes).map(i => s"sig_$i").mkString(" + ")
-    s"""$shingleCtes, sigs AS (
+  /** Oracle CTEs `sigs` (n_shingles and the 64 min-hash slots) → `bands`
+    * (the 16 h60 band buckets) off an `hs` shingle-hash relation. No WITH
+    * prefix.
+    */
+  private[ops] def lshBandCtes: String =
+    s"""sigs AS (
        |  SELECT doc_id, len(hh) AS n_shingles,
-       |$sigDefs
+       |$sigDefsSql
        |  FROM hs
        |), bands AS (
-       |$bandSelects
-       |), cand AS (
+       |$bandSelectsSql
+       |)""".stripMargin
+
+  /** [[lshBandCtes]] then `cand`: the distinct band-sharing
+    * (doc_id, doc_b) pairs whose ids satisfy `pair` over aliases `a`, `b`.
+    */
+  private def lshCandCtes(pair: String): String =
+    s"""$lshBandCtes, cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id <> b.doc_id
-       |), nc AS (
+       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND $pair
+       |)""".stripMargin
+
+  private def q31OracleSql: String = {
+    val checksum = (0 until NumHashes).map(i => s"sig_$i").mkString(" + ")
+    s"""$shingleCtes, ${lshCandCtes("a.doc_id <> b.doc_id")}, nc AS (
        |  SELECT doc_id, COUNT(*) AS n FROM cand GROUP BY doc_id
        |)
        |SELECT s.doc_id, s.n_shingles,
@@ -272,23 +264,27 @@ object Dedup {
     s"    (CASE WHEN list_sum(list_transform(hh, h -> CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END)")
     .mkString(" +\n")
 
+  /** Oracle CTEs `${p}tk` → `${p}hs` (token h60 lists of the non-empty
+    * docs) → `${p}sigs` (id, n_tokens, simhash) → `${p}bands` (its 15-bit
+    * LSH bands) over a relation with an `id` column and `text`. No WITH
+    * prefix.
+    */
+  private[ops] def simhashBandCtes(base: String, p: String = "", id: String = "doc_id"): String =
+    s"""${p}tk AS (
+       |  SELECT $id, ${OracleSql.tokens()} AS t FROM $base
+       |), ${p}hs AS (
+       |  SELECT $id, list_transform(t, s -> ${OracleSql.h60("s")}) AS hh
+       |  FROM ${p}tk WHERE len(t) > 0
+       |), ${p}sigs AS (
+       |  SELECT $id, len(hh) AS n_tokens,
+       |$simhashSumSql AS simhash
+       |  FROM ${p}hs
+       |), ${p}bands AS (
+       |${OracleSql.bitBandSelectsSql(id, "simhash", s"${p}sigs", SimBandBits, SimBits / SimBandBits)}
+       |)""".stripMargin
+
   private def q32OracleSql: String = {
-    val sigSum = simhashSumSql
-    val bandSelects = (0 until 4).map { k =>
-      s"  SELECT doc_id, simhash, $k AS band_idx, (simhash >> ${k * SimBandBits}) & ${(1 << SimBandBits) - 1} AS band_val FROM sigs"
-    }.mkString("\n  UNION ALL\n")
-    s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-       |), hs AS (
-       |  SELECT doc_id, list_transform(t, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hh
-       |  FROM tk WHERE len(t) > 0
-       |), sigs AS (
-       |  SELECT doc_id, len(hh) AS n_tokens,
-       |$sigSum AS simhash
-       |  FROM hs
-       |), bands AS (
-       |$bandSelects
-       |), pairs AS (
+    s"""WITH ${simhashBandCtes("documents")}, pairs AS (
        |  SELECT DISTINCT a.doc_id AS doc_id, a.simhash AS sim_a, b.doc_id AS doc_b, b.simhash AS sim_b
        |  FROM bands a JOIN bands b
        |    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id <> b.doc_id
@@ -443,30 +439,27 @@ object Dedup {
         col("dup_of"),
         col("dup_of").isNotNull.as("is_band_dup"))
 
-  private def q124OracleSql: String = {
-    val sigDefs = sigDefsSql
-    val bandSelects = bandSelectsSql
-    s"""$shingleCtes, sigs AS (
-       |  SELECT doc_id, len(hh) AS n_shingles,
-       |$sigDefs
-       |  FROM hs
-       |), bands AS (
-       |$bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND b.doc_id < a.doc_id
-       |), agg AS (
+  /** Oracle CTEs ending in `verdicts` (doc_id, n_earlier, dup_of,
+    * is_band_dup): the keep-earliest band verdict of every row of `base`,
+    * a (doc_id, text) relation. No WITH prefix.
+    */
+  private def keepEarliestCtes(base: String): String =
+    s"""${OracleSql.shingleCtes(base)}, ${lshCandCtes("b.doc_id < a.doc_id")}, agg AS (
        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_earlier, MIN(doc_b) AS dup_of
        |  FROM cand GROUP BY doc_id
-       |)
-       |SELECT d.doc_id,
-       |  CAST(COALESCE(a.n_earlier, 0) AS BIGINT) AS n_earlier,
-       |  a.dup_of,
-       |  a.dup_of IS NOT NULL AS is_band_dup
-       |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-  }
+       |), verdicts AS (
+       |  SELECT r.doc_id,
+       |    CAST(COALESCE(a.n_earlier, 0) AS BIGINT) AS n_earlier,
+       |    a.dup_of,
+       |    a.dup_of IS NOT NULL AS is_band_dup
+       |  FROM $base r LEFT JOIN agg a ON r.doc_id = a.doc_id
+       |)""".stripMargin
+
+  /** q124's oracle over a `corpus` relation (the survivors for q201, a
+    * retention window's survivors for q223).
+    */
+  private[ops] def keepEarliestOracleSql(corpus: String = "documents"): String =
+    s"WITH ${keepEarliestCtes(corpus)}\nSELECT * FROM verdicts ORDER BY doc_id"
 
   /** q124 — keep-earliest MinHash-LSH dedup verdicts: q31's band-bucket
     * candidates made ASYMMETRIC (partners with a lower doc_id only), so
@@ -481,7 +474,7 @@ object Dedup {
     * (band_idx, band_hash) — work bounded by bucket occupancy (near-dup
     * density), never corpus²; verdicts are one per-doc aggregate.
     */
-  val q124 = Q("q124_lsh_keep_earliest", q124OracleSql) { (s, dir) =>
+  val q124 = Q("q124_lsh_keep_earliest", keepEarliestOracleSql()) { (s, dir) =>
     val d = docs(s, dir)
     val bands = lshBands(minhashSignatures(d))
     keepEarliestVerdicts(d.select("doc_id"), earlierBandPartners(bands, bands))
@@ -494,29 +487,11 @@ object Dedup {
     * relations ready for a final SELECT.
     */
   private[ops] def curationVerdictCtes(base: String = "documents"): String = {
-    val sigDefs = sigDefsSql
-    val bandSelects = bandSelectsSql
-    val stop = TextOps.allStop.map("'" + _ + "'").mkString(",")
-    s"""WITH st AS (
-       |  SELECT doc_id,
-       |    length(text) AS text_len,
-       |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t,
-       |    length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct
-       |  FROM $base
-       |), gm AS (
-       |  SELECT doc_id, text_len, len(t) AS n_tokens,
-       |    CAST(coalesce(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS alpha_chars,
-       |    n_punct,
-       |    len(list_filter(t, x -> list_contains([$stop], x))) AS n_stop
-       |  FROM st
-       |), keep_ids AS (
-       |  SELECT doc_id FROM gm
-       |  WHERE n_tokens BETWEEN 50 AND 100000
-       |    AND 3 * n_tokens <= alpha_chars AND alpha_chars <= 10 * n_tokens
-       |    AND 10 * n_punct <= text_len AND n_stop >= 2
+    s"""WITH ${OracleSql.gateStatsCtes(base)}, keep_ids AS (
+       |  SELECT doc_id FROM gm WHERE ${OracleSql.gateKeepSql}
        |), keepers AS (
        |  SELECT d.doc_id, d.text,
-       |    md5(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g'))) AS fp
+       |    md5(${OracleSql.normalized("d.text")}) AS fp
        |  FROM $base d JOIN keep_ids k ON d.doc_id = k.doc_id
        |), firstown AS (
        |  SELECT fp, MIN(doc_id) AS first FROM keepers GROUP BY fp
@@ -526,26 +501,7 @@ object Dedup {
        |  FROM keepers k JOIN firstown f ON k.fp = f.fp
        |), reps AS (
        |  SELECT k.doc_id, k.text FROM keepers k JOIN firstown f ON k.doc_id = f.first
-       |), ${shingleCtesBody("reps")}, sigs AS (
-       |  SELECT doc_id, len(hh) AS n_shingles,
-       |$sigDefs
-       |  FROM hs
-       |), bands AS (
-       |$bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND b.doc_id < a.doc_id
-       |), agg AS (
-       |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_earlier, MIN(doc_b) AS dup_of
-       |  FROM cand GROUP BY doc_id
-       |), verdicts AS (
-       |  SELECT r.doc_id,
-       |    CAST(COALESCE(a.n_earlier, 0) AS BIGINT) AS n_earlier,
-       |    a.dup_of,
-       |    a.dup_of IS NOT NULL AS is_band_dup
-       |  FROM reps r LEFT JOIN agg a ON r.doc_id = a.doc_id
-       |)""".stripMargin
+       |), ${keepEarliestCtes("reps")}""".stripMargin
   }
 
   private def q127OracleSql: String =
@@ -672,15 +628,7 @@ object Dedup {
        |  JOIN exact e ON d.doc_id = e.doc_id
        |  LEFT JOIN verdicts v ON d.doc_id = v.doc_id
        |  WHERE NOT e.is_exact_dup AND NOT COALESCE(v.is_band_dup, FALSE)
-       |), toks AS (
-       |  SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tokens
-       |  FROM acc
-       |), packed AS (
-       |  SELECT doc_id, n_tokens,
-       |    CAST(FLOOR((SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-       |      - n_tokens) / 2048.0) AS BIGINT) AS pack_id
-       |  FROM toks
-       |)
+       |), ${OracleSql.packedCtes("acc")}
        |SELECT pack_id,
        |  COUNT(*) AS n_docs,
        |  CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens,
@@ -810,21 +758,7 @@ object Dedup {
   }
 
   private def q33OracleSql: String =
-    s"""$shingleCtes, ex AS (
-       |  SELECT doc_id, unnest(hh) AS h FROM hs
-       |), sizes AS (
-       |  SELECT doc_id, len(hh) AS sz FROM hs
-       |), shared AS (
-       |  SELECT a.doc_id AS doc_id, b.doc_id AS doc_b, COUNT(*) AS n_shared
-       |  FROM ex a JOIN ex b ON a.h = b.h AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), pairs AS (
-       |  SELECT s.doc_id, s.doc_b,
-       |    CAST(s.n_shared AS DOUBLE) / (sa.sz + sb.sz - s.n_shared) AS j
-       |  FROM shared s
-       |  JOIN sizes sa ON s.doc_id = sa.doc_id
-       |  JOIN sizes sb ON s.doc_b = sb.doc_id
-       |), sym AS (
+    s"""$shingleCtes, ${OracleSql.shingleOverlapCtes()}, sym AS (
        |  SELECT doc_id, doc_b, j FROM pairs
        |  UNION ALL
        |  SELECT doc_b AS doc_id, doc_id AS doc_b, j FROM pairs
@@ -834,8 +768,8 @@ object Dedup {
        |  FROM sym
        |)
        |SELECT d.doc_id, b.doc_b AS best_match_id,
-       |  COALESCE(FLOOR(b.j * 10000.0 + 0.5) / 10000.0, 0.0) AS best_jaccard,
-       |  (COALESCE(FLOOR(b.j * 10000.0 + 0.5) / 10000.0, 0.0) >= 0.8) AS is_near_dup
+       |  COALESCE(${OracleSql.round4("b.j")}, 0.0) AS best_jaccard,
+       |  (COALESCE(${OracleSql.round4("b.j")}, 0.0) >= 0.8) AS is_near_dup
        |FROM documents d
        |LEFT JOIN (SELECT doc_id, doc_b, j FROM best WHERE rn = 1) b ON d.doc_id = b.doc_id
        |ORDER BY d.doc_id""".stripMargin
@@ -892,20 +826,28 @@ object Dedup {
         (col("n_shared").cast("double") / col("bench_size")).as("containment"))
   }
 
+  /** Oracle CTEs over `hs`: `bench` (doc_id < 50) and `corpus`
+    * (doc_id ≥ 50) shingle sets, their unrolled hashes `be`/`ce`, and
+    * `shared`, the shingle count of every (doc_id, bench_id) pair that
+    * shares one. No WITH prefix.
+    */
+  private def benchSharedCtes: String =
+    """bench AS (
+      |  SELECT doc_id AS bench_id, hh FROM hs WHERE doc_id < 50
+      |), corpus AS (
+      |  SELECT doc_id, hh FROM hs WHERE doc_id >= 50
+      |), ce AS (
+      |  SELECT doc_id, unnest(hh) AS h FROM corpus
+      |), be AS (
+      |  SELECT bench_id, unnest(hh) AS h FROM bench
+      |), shared AS (
+      |  SELECT ce.doc_id, be.bench_id, COUNT(*) AS n_shared
+      |  FROM ce JOIN be ON ce.h = be.h
+      |  GROUP BY 1, 2
+      |)""".stripMargin
+
   private def q34ContOracleSql: String =
-    s"""$shingleCtes, bench AS (
-       |  SELECT doc_id AS bench_id, hh FROM hs WHERE doc_id < 50
-       |), corpus AS (
-       |  SELECT doc_id, hh FROM hs WHERE doc_id >= 50
-       |), ce AS (
-       |  SELECT doc_id, unnest(hh) AS h FROM corpus
-       |), be AS (
-       |  SELECT bench_id, unnest(hh) AS h FROM bench
-       |), shared AS (
-       |  SELECT ce.doc_id, be.bench_id, COUNT(*) AS n_shared
-       |  FROM ce JOIN be ON ce.h = be.h
-       |  GROUP BY 1, 2
-       |), scored AS (
+    s"""$shingleCtes, $benchSharedCtes, scored AS (
        |  SELECT s.doc_id, s.bench_id,
        |    CAST(s.n_shared AS DOUBLE) / len(b.hh) AS containment
        |  FROM shared s JOIN bench b ON s.bench_id = b.bench_id
@@ -916,8 +858,8 @@ object Dedup {
        |  FROM scored
        |)
        |SELECT doc_id, bench_id AS worst_bench_id,
-       |  FLOOR(containment * 10000.0 + 0.5) / 10000.0 AS containment,
-       |  (FLOOR(containment * 10000.0 + 0.5) / 10000.0 >= 0.3) AS is_contaminated
+       |  ${OracleSql.round4("containment")} AS containment,
+       |  (${OracleSql.round4("containment")} >= 0.3) AS is_contaminated
        |FROM best WHERE rn = 1
        |ORDER BY doc_id""".stripMargin
 
@@ -939,17 +881,7 @@ object Dedup {
   }
 
   private def q135OracleSql: String =
-    s"""$shingleCtes, sigs AS (
-       |  SELECT doc_id,
-       |$sigDefsSql
-       |  FROM hs
-       |), bands AS (
-       |$bandSelectsSql
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-       |), jac AS (
+    s"""$shingleCtes, ${lshCandCtes("a.doc_id < b.doc_id")}, jac AS (
        |  SELECT c.doc_id, c.doc_b,
        |    CAST(len(list_filter(ha.hh, h -> list_contains(hb.hh, h))) AS DOUBLE)
        |      / (len(ha.hh) + len(hb.hh) - len(list_filter(ha.hh, h -> list_contains(hb.hh, h)))) AS j
@@ -975,7 +907,7 @@ object Dedup {
        |SELECT t.split_a, t.split_b,
        |  CAST(COUNT(*) AS BIGINT) AS n_pairs,
        |  MAX(dc.n_docs) AS n_docs,
-       |  FLOOR(MAX(t.j) * 10000.0 + 0.5) / 10000.0 AS max_jaccard,
+       |  ${OracleSql.round4("MAX(t.j)")} AS max_jaccard,
        |  (t.split_a <> t.split_b) AS is_leak
        |FROM tagged t JOIN dcount dc ON t.split_a = dc.split_a AND t.split_b = dc.split_b
        |GROUP BY t.split_a, t.split_b
@@ -1022,28 +954,18 @@ object Dedup {
   }
 
   private def q136OracleSql: String =
-    """WITH tk AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-      |), ps AS (
-      |  SELECT doc_id, CAST(len(t) - 2 AS BIGINT) AS n_pos,
-      |    [struct_pack(pos := i, h := CAST('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15) AS BIGINT)) for i in range(1, len(t) - 1)] AS ph
-      |  FROM tk WHERE len(t) >= 3 AND doc_id >= 50
-      |), ce AS (
-      |  SELECT doc_id, n_pos, unnest(ph, recursive := true) FROM ps
-      |), bsh AS (
-      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
-      |    ELSE [array_to_string(t, ' ')] END) AS ss FROM tk WHERE doc_id < 50
+    s"""WITH ${corpusPosCtesSql(ScrubCorpus)}, bsh AS (
+      |  SELECT doc_id, ${OracleSql.shingleSetSql()} AS ss FROM tk WHERE doc_id < 50
       |), be AS (
       |  SELECT doc_id AS bench_id,
-      |    unnest(list_transform(ss, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS h
+      |    unnest(list_transform(ss, s -> ${OracleSql.h60("s")})) AS h
       |  FROM bsh
       |)
       |SELECT ce.doc_id, be.bench_id,
       |  CAST(COUNT(*) AS BIGINT) AS n_hits,
       |  CAST(MIN(ce.pos) AS BIGINT) AS first_pos,
       |  CAST(MAX(ce.pos) AS BIGINT) AS last_pos,
-      |  FLOOR(CAST(COUNT(*) AS DOUBLE) / MAX(ce.n_pos) * 10000.0 + 0.5) / 10000.0 AS coverage
+      |  ${OracleSql.round4("CAST(COUNT(*) AS DOUBLE) / MAX(ce.n_pos)")} AS coverage
       |FROM ce JOIN be ON ce.h = be.h
       |GROUP BY 1, 2
       |ORDER BY doc_id, bench_id""".stripMargin
@@ -1097,32 +1019,38 @@ object Dedup {
       .orderBy("doc_id", "bench_id")
   }
 
+  /** The scrubbed corpus of the span-scrub oracles: every doc past the
+    * benchmark slice.
+    */
+  private final val ScrubCorpus = "doc_id >= 50"
+
   /** Oracle fragment: corpus-side positional shingles — `tk` (tokens),
-    * `ps`/`ce` (positional 3-shingle h60s), independent of any benchmark
+    * `ps`/`ce` (positional 3-shingle h60s and the doc's position count
+    * `n_pos`) of the docs matching `corpus`, independent of any benchmark
     * release, so two-release oracles (q142) emit it once.
     */
-  private def corpusPosCtesSql: String =
-    """tk AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+  private def corpusPosCtesSql(corpus: String): String =
+    s"""tk AS (
+      |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
       |), ps AS (
-      |  SELECT doc_id,
-      |    [struct_pack(pos := i, h := CAST('0x' || substr(md5(array_to_string(t[i:i+2], ' ')), 1, 15) AS BIGINT)) for i in range(1, len(t) - 1)] AS ph
-      |  FROM tk WHERE len(t) >= 3 AND doc_id >= 50
+      |  SELECT doc_id, CAST(len(t) - 2 AS BIGINT) AS n_pos,
+      |    [struct_pack(pos := i, h := ${OracleSql.h60("array_to_string(t[i:i+2], ' ')")}) for i in range(1, len(t) - 1)] AS ph
+      |  FROM tk WHERE len(t) >= 3 AND $corpus
       |), ce AS (
-      |  SELECT doc_id, unnest(ph, recursive := true) FROM ps
+      |  SELECT doc_id, n_pos, unnest(ph, recursive := true) FROM ps
       |)""".stripMargin
 
   /** Oracle fragment: one benchmark release's scrub — hash set, hit
-    * positions, scrubbed token list — with CTE names prefixed so two
-    * releases coexist in one WITH chain. `${p}scrub` is the result.
+    * positions, scrubbed token list of the docs matching `corpus` — with
+    * CTE names prefixed so two releases coexist in one WITH chain.
+    * `${p}scrub` is the result.
     */
-  private def benchScrubCtesSql(benchPred: String, p: String): String =
+  private def benchScrubCtesSql(benchPred: String, p: String,
+      corpus: String = ScrubCorpus): String =
     s"""${p}bsh AS (
-       |  SELECT list_distinct(CASE WHEN len(t) >= 3
-       |    THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
-       |    ELSE [array_to_string(t, ' ')] END) AS ss FROM tk WHERE $benchPred
+       |  SELECT ${OracleSql.shingleSetSql()} AS ss FROM tk WHERE $benchPred
        |), ${p}ba AS (
-       |  SELECT DISTINCT unnest(list_transform(ss, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT))) AS h FROM ${p}bsh
+       |  SELECT DISTINCT unnest(list_transform(ss, s -> ${OracleSql.h60("s")})) AS h FROM ${p}bsh
        |), ${p}hp AS (
        |  SELECT ce.doc_id, list(ce.pos) AS hp
        |  FROM ce JOIN ${p}ba ON ce.h = ${p}ba.h GROUP BY ce.doc_id
@@ -1130,17 +1058,17 @@ object Dedup {
        |  SELECT c.doc_id, CAST(len(c.t) AS BIGINT) AS n_tokens,
        |    [c.t[i] for i in range(1, len(c.t) + 1)
        |      if len(list_filter(COALESCE(${p}hp.hp, CAST([] AS BIGINT[])), p -> i >= p AND i <= p + 2)) = 0] AS st
-       |  FROM tk c LEFT JOIN ${p}hp ON c.doc_id = ${p}hp.doc_id WHERE c.doc_id >= 50
+       |  FROM (SELECT * FROM tk WHERE $corpus) c LEFT JOIN ${p}hp ON c.doc_id = ${p}hp.doc_id
        |)""".stripMargin
 
   /** Oracle CTE chain ending in `scrub` (doc_id, n_tokens, st = scrubbed
     * token list) — shared by q137 and the requalification pass q139.
     */
-  private def scrubCtesSql: String =
-    s"$corpusPosCtesSql, ${benchScrubCtesSql("doc_id < 50", "")}"
+  private def scrubCtesSql(corpus: String = ScrubCorpus): String =
+    s"${corpusPosCtesSql(corpus)}, ${benchScrubCtesSql("doc_id < 50", "", corpus)}"
 
   private def q137OracleSql: String =
-    s"""WITH $scrubCtesSql
+    s"""WITH ${scrubCtesSql()}
       |SELECT doc_id, n_tokens,
       |  n_tokens - CAST(len(st) AS BIGINT) AS n_removed,
       |  CAST(len(st) AS BIGINT) AS n_after,
@@ -1314,17 +1242,7 @@ object Dedup {
     * (doc_id, doc_b with exact Jaccard ≥ 0.5) — no WITH prefix.
     */
   private[ops] def lexStrongCtesSql: String =
-    s"""${shingleCtesBody("documents")}, sigs AS (
-       |  SELECT doc_id,
-       |$sigDefsSql
-       |  FROM hs
-       |), bands AS (
-       |$bandSelectsSql
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-       |), jac AS (
+    s"""${OracleSql.shingleCtes()}, ${lshCandCtes("a.doc_id < b.doc_id")}, jac AS (
        |  SELECT c.doc_id, c.doc_b,
        |    CAST(len(list_filter(ha.hh, h -> list_contains(hb.hh, h))) AS DOUBLE)
        |      / (len(ha.hh) + len(hb.hh) - len(list_filter(ha.hh, h -> list_contains(hb.hh, h)))) AS j
@@ -1396,7 +1314,7 @@ object Dedup {
     s"""${prefix}src AS (
        |  SELECT doc_id,
        |    length(text) AS text_len,
-       |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t,
+       |    ${OracleSql.tokens()} AS t,
        |    length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct
        |  FROM $base
        |), ${prefix}keep AS (
@@ -1411,7 +1329,7 @@ object Dedup {
   }
 
   private def q139OracleSql: String =
-    s"""WITH $scrubCtesSql, scrubdocs AS (
+    s"""WITH ${scrubCtesSql()}, scrubdocs AS (
        |  SELECT doc_id, COALESCE(array_to_string(st, ' '), '') AS text FROM scrub
        |), ${gateKeepCtes("(SELECT doc_id, text FROM documents WHERE doc_id >= 50)", "g1")},
        |${gateKeepCtes("scrubdocs", "g2")}
@@ -1472,14 +1390,13 @@ object Dedup {
        |  LEFT JOIN members m ON s.doc_id = m.doc_id
        |  LEFT JOIN rep j ON m.cluster_id = j.cluster_id
        |), toks AS (
-       |  SELECT d.doc_id, len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS n_tokens,
+       |  SELECT d.doc_id, len(${OracleSql.tokens("d.text")}) AS n_tokens,
        |    f.moved_in
        |  FROM documents d JOIN fin f ON d.doc_id = f.doc_id
        |  WHERE f.split = 'train'
        |), packed AS (
        |  SELECT doc_id, n_tokens, moved_in,
-       |    CAST(FLOOR((SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-       |      - n_tokens) / 2048.0) AS BIGINT) AS pack_id
+       |    ${OracleSql.packIdSql} AS pack_id
        |  FROM toks
        |)
        |SELECT pack_id,
@@ -1531,8 +1448,11 @@ object Dedup {
       .orderBy("pack_id")
   }
 
-  private def q141OracleSql: String =
-    s"""WITH $scrubCtesSql, srcd AS (
+  /** q141's oracle over the corpus docs matching `corpus` (q207 adds the
+    * survivor predicate).
+    */
+  private[ops] def q141OracleSql(corpus: String = ScrubCorpus): String =
+    s"""WITH ${scrubCtesSql(corpus)}, srcd AS (
        |  SELECT s.doc_id, d.source, s.n_tokens,
        |    s.n_tokens - CAST(len(s.st) AS BIGINT) AS n_removed
        |  FROM scrub s JOIN documents d ON s.doc_id = d.doc_id
@@ -1576,13 +1496,13 @@ object Dedup {
         col("contaminated_bp"), col("tokens_before"), col("tokens_removed"))
       .orderBy("source")
 
-  val q141 = Q("q141_scrub_report", q141OracleSql) { (s, dir) =>
+  val q141 = Q("q141_scrub_report", q141OracleSql()) { (s, dir) =>
     val root = graft.streaming.ScrubStream.buildScrubStore(s, dir)
     scrubReport(s.read.parquet(s"$root/rows"))
   }
 
   private def q142OracleSql: String =
-    s"""WITH $corpusPosCtesSql,
+    s"""WITH ${corpusPosCtesSql(ScrubCorpus)},
        |${benchScrubCtesSql("doc_id < 25", "v1")},
        |${benchScrubCtesSql("doc_id < 50", "v2")},
        |per AS (
@@ -1696,9 +1616,9 @@ object Dedup {
     // h60 over each artifact's canonical row key (NOT xxhash — DuckDB
     // lacks it; NOT an integer SUM — DuckDB raises on BIGINT overflow
     // where Spark wraps)
-    val scrubRowFp = h60Sql("CAST(doc_id AS VARCHAR) || ':' || " +
+    val scrubRowFp = OracleSql.h60("CAST(doc_id AS VARCHAR) || ':' || " +
       "md5(COALESCE(array_to_string(st, ' '), ''))")
-    s"""WITH $corpusPosCtesSql,
+    s"""WITH ${corpusPosCtesSql(ScrubCorpus)},
        |${benchScrubCtesSql("doc_id < 50", "")},
        |${benchScrubCtesSql("doc_id < 25", "v1")},
        |scrub_agg AS (
@@ -1711,7 +1631,7 @@ object Dedup {
        |    bit_xor(h) AS content_fp FROM ba
        |  UNION ALL
        |  SELECT 'index_pairs', CAST(COUNT(*) AS BIGINT),
-       |    bit_xor(${h60Sql("CAST(h AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")})
+       |    bit_xor(${OracleSql.h60("CAST(h AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")})
        |  FROM (SELECT DISTINCT h, doc_id FROM ce)
        |  UNION ALL SELECT 'release_v1', n, fp FROM v1_agg
        |  UNION ALL SELECT 'release_v2', n, fp FROM scrub_agg
@@ -1852,7 +1772,7 @@ object Dedup {
   }
 
   private def q147OracleSql: String =
-    s"""WITH $scrubCtesSql, scrubdocs AS (
+    s"""WITH ${scrubCtesSql()}, scrubdocs AS (
        |  SELECT doc_id, COALESCE(array_to_string(st, ' '), '') AS text FROM scrub
        |), ${gateKeepCtes("scrubdocs", "g2")},
        |keep AS (
@@ -1862,8 +1782,7 @@ object Dedup {
        |  WHERE g.keep
        |), packed AS (
        |  SELECT doc_id, n_tokens, was_scrubbed,
-       |    CAST(FLOOR((SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-       |      - n_tokens) / 2048.0) AS BIGINT) AS pack_id
+       |    ${OracleSql.packIdSql} AS pack_id
        |  FROM keep
        |)
        |SELECT pack_id,
@@ -1917,12 +1836,13 @@ object Dedup {
     */
   val CdcDivisor = 16L
 
-  private def q171OracleSql: String =
+  /** q171's oracle over a `corpus` relation (q210: the survivors). */
+  private[ops] def q171OracleSql(corpus: String = "documents"): String =
     s"""WITH tk AS (
-       |  SELECT doc_id, source, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, source, ${OracleSql.tokens()} AS t FROM $corpus
        |), hs AS (
        |  SELECT doc_id, source, t,
-       |    list_transform(t, s -> ${h60Sql("s")}) AS hh
+       |    list_transform(t, s -> ${OracleSql.h60("s")}) AS hh
        |  FROM tk WHERE len(t) > 0
        |), cu AS (
        |  SELECT doc_id, source, t,
@@ -1933,7 +1853,7 @@ object Dedup {
        |), ch AS (
        |  SELECT doc_id, source,
        |    unnest(list_transform(range(1, len(cuts) + 1), j -> struct_pack(
-       |      fp := ${h60Sql("array_to_string(t[(CASE WHEN j = 1 THEN 1 ELSE cuts[j-1] + 1 END):(cuts[j])], ' ')")},
+       |      fp := ${OracleSql.h60("array_to_string(t[(CASE WHEN j = 1 THEN 1 ELSE cuts[j-1] + 1 END):(cuts[j])], ' ')")},
        |      ln := cuts[j] - (CASE WHEN j = 1 THEN 1 ELSE cuts[j-1] + 1 END) + 1))) AS c
        |  FROM cu
        |), ex AS (
@@ -2023,7 +1943,7 @@ object Dedup {
       .orderBy("source")
   }
 
-  val q171 = Q("q171_cdc_chunks", q171OracleSql) { (s, dir) =>
+  val q171 = Q("q171_cdc_chunks", q171OracleSql()) { (s, dir) =>
     val ex = cdcChunks(docs(s, dir)).localCheckpoint()
     val nd = ex.select("source", "doc_id").distinct()
       .groupBy("source").agg(count(lit(1)).as("n_docs"))
@@ -2033,20 +1953,7 @@ object Dedup {
   // ── q172: dedup-signal agreement matrix ───────────────────────────────
 
   private def q172OracleSql: String =
-    s"""WITH $lexStrongCtesSql, simtk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-       |), simhs AS (
-       |  SELECT doc_id, list_transform(t, s -> ${h60Sql("s")}) AS hh
-       |  FROM simtk WHERE len(t) > 0
-       |), simsig AS (
-       |  SELECT doc_id,
-       |$simhashSumSql AS simhash
-       |  FROM simhs
-       |), simbands AS (
-       |${(0 until 4).map(k =>
-            s"  SELECT doc_id, simhash, $k AS band_idx, (simhash >> ${k * SimBandBits}) & ${(1 << SimBandBits) - 1} AS band_val FROM simsig")
-          .mkString("\n  UNION ALL\n")}
-       |), simnear AS (
+    s"""WITH $lexStrongCtesSql, ${simhashBandCtes("documents", "sim")}, simnear AS (
        |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
        |  FROM simbands a JOIN simbands b
        |    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
@@ -2107,41 +2014,7 @@ object Dedup {
 
   // ── q184: asymmetric containment detection ────────────────────────────
 
-  private def q184OracleSql: String =
-    s"""$shingleCtes, ex AS (
-       |  SELECT doc_id, unnest(hh) AS h FROM hs
-       |), sizes AS (
-       |  SELECT doc_id, len(hh) AS sz FROM hs
-       |), shared AS (
-       |  SELECT a.doc_id AS doc_id, b.doc_id AS doc_b, COUNT(*) AS n_shared
-       |  FROM ex a JOIN ex b ON a.h = b.h AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), pairs AS (
-       |  SELECT s.doc_id, s.doc_b, s.n_shared, sa.sz AS sa, sb.sz AS sb,
-       |    CAST(s.n_shared AS DOUBLE) / (sa.sz + sb.sz - s.n_shared) AS j
-       |  FROM shared s
-       |  JOIN sizes sa ON s.doc_id = sa.doc_id
-       |  JOIN sizes sb ON s.doc_b = sb.doc_id
-       |), sym AS (
-       |  SELECT doc_id, doc_b, CAST(n_shared AS DOUBLE) / sa AS c, j FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS doc_id, doc_id AS doc_b, CAST(n_shared AS DOUBLE) / sb AS c, j
-       |  FROM pairs
-       |), best AS (
-       |  SELECT doc_id, doc_b, c, j,
-       |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY c DESC, doc_b) AS rn
-       |  FROM sym
-       |)
-       |SELECT d.doc_id, b.doc_b AS contained_in,
-       |  COALESCE(FLOOR(b.c * 10000.0 + 0.5) / 10000.0, 0.0) AS containment,
-       |  COALESCE(FLOOR(b.j * 10000.0 + 0.5) / 10000.0, 0.0) AS jaccard_at_best,
-       |  (COALESCE(FLOOR(b.c * 10000.0 + 0.5) / 10000.0, 0.0) >= 0.9) AS is_contained,
-       |  (COALESCE(FLOOR(b.c * 10000.0 + 0.5) / 10000.0, 0.0) >= 0.9
-       |    AND COALESCE(FLOOR(b.j * 10000.0 + 0.5) / 10000.0, 0.0) < 0.5) AS missed_by_jaccard
-       |FROM documents d
-       |LEFT JOIN (SELECT doc_id, doc_b, c, j FROM best WHERE rn = 1) b
-       |  ON d.doc_id = b.doc_id
-       |ORDER BY d.doc_id""".stripMargin
+  private def q184OracleSql: String = s"$shingleCtes, ${containmentTailSql("documents")}"
 
   /** The containment rollup over a (doc_id, doc_b, n_shared, size_a,
     * size_b, jaccard) undirected-pair frame + a doc_id spine: shared by
@@ -2205,28 +2078,19 @@ object Dedup {
     s"""WITH corpus AS (
        |  SELECT doc_id, text FROM documents WHERE $corpusWhere
        |), tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM corpus
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM corpus
        |), sh AS (
-       |  SELECT doc_id, list_distinct(
-       |    [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]) AS ss
-       |  FROM tk WHERE len(t) >= 3
+       |  SELECT doc_id, ${OracleSql.shingleSetSql()} AS ss FROM tk WHERE len(t) >= 3
        |), hs AS (
-       |  SELECT doc_id, list_transform(ss, s -> ${h60Sql("s")}) AS hh FROM sh
-       |), ex AS (
-       |  SELECT doc_id, unnest(hh) AS h FROM hs
-       |), sizes AS (
-       |  SELECT doc_id, len(hh) AS sz FROM hs
-       |), shared AS (
-       |  SELECT a.doc_id AS doc_id, b.doc_id AS doc_b, COUNT(*) AS n_shared
-       |  FROM ex a JOIN ex b ON a.h = b.h AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), pairs AS (
-       |  SELECT s.doc_id, s.doc_b, s.n_shared, sa.sz AS sa, sb.sz AS sb,
-       |    CAST(s.n_shared AS DOUBLE) / (sa.sz + sb.sz - s.n_shared) AS j
-       |  FROM shared s
-       |  JOIN sizes sa ON s.doc_id = sa.doc_id
-       |  JOIN sizes sb ON s.doc_b = sb.doc_id
-       |), sym AS (
+       |  SELECT doc_id, list_transform(ss, s -> ${OracleSql.h60("s")}) AS hh FROM sh
+       |), ${containmentTailSql("corpus")}""".stripMargin
+
+  /** Oracle tail of the containment oracles: [[OracleSql.shingleOverlapCtes]] over
+    * `hs`, each doc's best directed containment |A∩B|/|A|, and one
+    * verdict row per doc of the `spine` relation.
+    */
+  private def containmentTailSql(spine: String): String =
+    s"""${OracleSql.shingleOverlapCtes()}, sym AS (
        |  SELECT doc_id, doc_b, CAST(n_shared AS DOUBLE) / sa AS c, j FROM pairs
        |  UNION ALL
        |  SELECT doc_b AS doc_id, doc_id AS doc_b, CAST(n_shared AS DOUBLE) / sb AS c, j
@@ -2237,12 +2101,12 @@ object Dedup {
        |  FROM sym
        |)
        |SELECT d.doc_id, b.doc_b AS contained_in,
-       |  COALESCE(FLOOR(b.c * 10000.0 + 0.5) / 10000.0, 0.0) AS containment,
-       |  COALESCE(FLOOR(b.j * 10000.0 + 0.5) / 10000.0, 0.0) AS jaccard_at_best,
-       |  (COALESCE(FLOOR(b.c * 10000.0 + 0.5) / 10000.0, 0.0) >= 0.9) AS is_contained,
-       |  (COALESCE(FLOOR(b.c * 10000.0 + 0.5) / 10000.0, 0.0) >= 0.9
-       |    AND COALESCE(FLOOR(b.j * 10000.0 + 0.5) / 10000.0, 0.0) < 0.5) AS missed_by_jaccard
-       |FROM corpus d
+       |  COALESCE(${OracleSql.round4("b.c")}, 0.0) AS containment,
+       |  COALESCE(${OracleSql.round4("b.j")}, 0.0) AS jaccard_at_best,
+       |  (COALESCE(${OracleSql.round4("b.c")}, 0.0) >= 0.9) AS is_contained,
+       |  (COALESCE(${OracleSql.round4("b.c")}, 0.0) >= 0.9
+       |    AND COALESCE(${OracleSql.round4("b.j")}, 0.0) < 0.5) AS missed_by_jaccard
+       |FROM $spine d
        |LEFT JOIN (SELECT doc_id, doc_b, c, j FROM best WHERE rn = 1) b
        |  ON d.doc_id = b.doc_id
        |ORDER BY d.doc_id""".stripMargin
@@ -2294,18 +2158,17 @@ object Dedup {
 
   // ── q199: containment-over-time trend off the landing registry ────────
 
-  private def q199OracleSql: String = {
+  /** q199's oracle over the corpus docs matching `corpus` (q206 adds the
+    * survivor predicate).
+    */
+  private[ops] def q199OracleSql(corpus: String = "doc_id >= 50"): String = {
     def landing(p: Int, where: String) =
       s"""SELECT $p AS batch_id, COUNT(*) AS n_docs,
          |  CAST(SUM(CASE WHEN is_contained THEN 1 ELSE 0 END) AS BIGINT) AS n_contained,
          |  CAST(SUM(CAST(FLOOR(containment * 10000.0 + 0.5) AS BIGINT)) AS BIGINT) AS mass_fp
          |FROM (${containmentOracleSql(where)})""".stripMargin
     val q = "(SELECT MAX(doc_id) // 4 FROM documents)"
-    val wheres = Seq(
-      s"doc_id >= 50 AND doc_id < 1 * $q",
-      s"doc_id >= 50 AND doc_id < 2 * $q",
-      s"doc_id >= 50 AND doc_id < 3 * $q",
-      "doc_id >= 50")
+    val wheres = (1 to 3).map(k => s"$corpus AND doc_id < $k * $q") :+ corpus
     s"""WITH per AS (
        |${wheres.zipWithIndex.map { case (w, p) => landing(p, w) }.mkString("\nUNION ALL\n")}
        |)
@@ -2330,7 +2193,7 @@ object Dedup {
     * the q185 containment SQL evaluated at each boundary, aggregated
     * and lag-joined identically.
     */
-  val q199 = Q("q199_containment_trend", q199OracleSql) { (s, dir) =>
+  val q199 = Q("q199_containment_trend", q199OracleSql()) { (s, dir) =>
     val (deltaDir, bounds) =
       graft.streaming.ScrubStream.buildShingleTrendStore(s, dir)
     graft.streaming.ScrubStream.containmentTrend(s, deltaDir, docs(s, dir), bounds)
@@ -2339,25 +2202,13 @@ object Dedup {
   // ── q190: contamination blast radius over the near-dup graph ──────────
 
   private def q190OracleSql: String =
-    s"""$shingleCtes, bench AS (
-       |  SELECT doc_id AS bench_id, hh FROM hs WHERE doc_id < 50
-       |), corpus AS (
-       |  SELECT doc_id, hh FROM hs WHERE doc_id >= 50
-       |), ce AS (
-       |  SELECT doc_id, unnest(hh) AS h FROM corpus
-       |), be AS (
-       |  SELECT bench_id, unnest(hh) AS h FROM bench
-       |), shared AS (
-       |  SELECT ce.doc_id, be.bench_id, COUNT(*) AS n_shared
-       |  FROM ce JOIN be ON ce.h = be.h
-       |  GROUP BY 1, 2
-       |), scored AS (
+    s"""$shingleCtes, $benchSharedCtes, scored AS (
        |  SELECT s.doc_id, MAX(CAST(s.n_shared AS DOUBLE) / len(b.hh)) AS containment
        |  FROM shared s JOIN bench b ON s.bench_id = b.bench_id
        |  GROUP BY s.doc_id
        |), hits0 AS (
        |  SELECT doc_id FROM scored
-       |  WHERE FLOOR(containment * 10000.0 + 0.5) / 10000.0 >= 0.3
+       |  WHERE ${OracleSql.round4("containment")} >= 0.3
        |), csz AS (
        |  SELECT doc_id, len(hh) AS sz FROM corpus
        |), cshared AS (
@@ -2458,31 +2309,9 @@ object Dedup {
   // ── q194: LSH index health — recall/precision vs the exact pair set ──
 
   private def q194OracleSql: String =
-    s"""$shingleCtes, ex AS (
-       |  SELECT doc_id, unnest(hh) AS h FROM hs
-       |), sizes AS (
-       |  SELECT doc_id, len(hh) AS sz FROM hs
-       |), shared AS (
-       |  SELECT a.doc_id AS doc_id, b.doc_id AS doc_b, COUNT(*) AS n_shared
-       |  FROM ex a JOIN ex b ON a.h = b.h AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), truep AS (
-       |  SELECT s.doc_id, s.doc_b
-       |  FROM shared s
-       |  JOIN sizes sa ON s.doc_id = sa.doc_id
-       |  JOIN sizes sb ON s.doc_b = sb.doc_id
-       |  WHERE 5 * s.n_shared >= 4 * (sa.sz + sb.sz - s.n_shared)
-       |), sigs AS (
-       |  SELECT doc_id,
-       |$sigDefsSql
-       |  FROM hs
-       |), bands AS (
-       |$bandSelectsSql
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-       |), caught AS (
+    s"""$shingleCtes, ${OracleSql.shingleOverlapCtes()}, truep AS (
+       |  SELECT doc_id, doc_b FROM pairs WHERE ${OracleSql.nearDupPairSql}
+       |), ${lshCandCtes("a.doc_id < b.doc_id")}, caught AS (
        |  SELECT t.doc_id, t.doc_b FROM truep t
        |  JOIN cand c ON t.doc_id = c.doc_id AND t.doc_b = c.doc_b
        |), byt AS (

@@ -52,39 +52,7 @@ object ForgetOps {
       Forget.forgetLmDocs(d.filter(forgottenPred), root, 2L)
     }
 
-  /** The LM-forget fluency oracle over an arbitrary corpus expression —
-    * a from-scratch bigram retrain on `corpus` scoring `corpus` itself
-    * (q200 passes the survivors; q214 the survivors of a pinned slice).
-    */
-  private def lmForgetFluencyOracle(corpus: String): String =
-    s"""WITH d0 AS (SELECT * FROM $corpus t), tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM d0
-       |), bg AS (
-       |  SELECT doc_id,
-       |    unnest(list_slice(t, 1, len(t) - 1)) AS w1,
-       |    unnest(list_slice(t, 2, len(t))) AS w2
-       |  FROM tk WHERE len(t) >= 2
-       |), big AS (
-       |  SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2
-       |), uni AS (
-       |  SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1
-       |), scored AS (
-       |  SELECT bg.doc_id,
-       |    COUNT(*) AS n_bigrams,
-       |    CAST(SUM((big.c12 * 1000000) // uni.c1) AS BIGINT) AS sum_fp
-       |  FROM bg
-       |  JOIN big ON bg.w1 = big.w1 AND bg.w2 = big.w2
-       |  JOIN uni ON bg.w1 = uni.w1
-       |  GROUP BY bg.doc_id
-       |)
-       |SELECT d.doc_id,
-       |  CAST(COALESCE(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       |  CASE WHEN s.n_bigrams IS NULL THEN 0.0
-       |    ELSE CAST(s.sum_fp AS DOUBLE) / (s.n_bigrams * 1000000.0) END AS fluency_score
-       |FROM d0 d LEFT JOIN scored s ON d.doc_id = s.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-
-  private def q200OracleSql: String = lmForgetFluencyOracle(survivorsSql)
+  private def q200OracleSql: String = TextOps.fluencyOracleSql(survivorsSql)
 
   /** q200 — fluency AFTER FORGETTING: the LM store erases the forget set
     * by landing ONE negative cell delta (no rewrite — the fold algebra
@@ -133,30 +101,7 @@ object ForgetOps {
     (s"$root/index", s"$root/decisions", s"$root/report")
   }
 
-  private def q201OracleSql: String = {
-    val sigDefs = Dedup.sigDefsSql
-    val bandSelects = Dedup.bandSelectsSql
-    s"""WITH ${Dedup.shingleCtesBody(survivorsSql)}, sigs AS (
-       |  SELECT doc_id, len(hh) AS n_shingles,
-       |$sigDefs
-       |  FROM hs
-       |), bands AS (
-       |$bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND b.doc_id < a.doc_id
-       |), agg AS (
-       |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_earlier, MIN(doc_b) AS dup_of
-       |  FROM cand GROUP BY doc_id
-       |)
-       |SELECT d.doc_id,
-       |  CAST(COALESCE(a.n_earlier, 0) AS BIGINT) AS n_earlier,
-       |  a.dup_of,
-       |  a.dup_of IS NOT NULL AS is_band_dup
-       |FROM $survivorsSql d LEFT JOIN agg a ON d.doc_id = a.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-  }
+  private def q201OracleSql: String = Dedup.keepEarliestOracleSql(survivorsSql)
 
   /** q201 — keep-earliest dedup AFTER FORGETTING, with keeper
     * RE-ELECTION: erasing the forget set from the band index + decision
@@ -174,15 +119,7 @@ object ForgetOps {
   }
 
   private def q202OracleSql: String = {
-    val sigDefs = Dedup.sigDefsSql
-    val bandSelects = Dedup.bandSelectsSql
-    s"""WITH ${Dedup.shingleCtesBody("documents")}, sigs AS (
-       |  SELECT doc_id, len(hh) AS n_shingles,
-       |$sigDefs
-       |  FROM hs
-       |), bands AS (
-       |$bandSelects
-       |), fban AS (
+    s"""WITH ${OracleSql.shingleCtes()}, ${Dedup.lshBandCtes}, fban AS (
        |  SELECT DISTINCT band_idx, band_hash FROM bands
        |  WHERE doc_id % $ForgetMod = $ForgetRes
        |), aff AS (
@@ -239,9 +176,7 @@ object ForgetOps {
     (s"$root/dims", s"$root/stats")
   }
 
-  private def q203OracleSql: String =
-    graft.ops.Similarity.q178.oracle.get.replace(
-      "FROM documents", s"FROM $survivorsSql t")
+  private def q203OracleSql: String = Similarity.q178OracleSql(survivorsSql)
 
   /** q203 — diversity AFTER FORGETTING: the negative-cell erasure law
     * ([[graft.streaming.Forget.forgetDivDocs]]) on a TWO-store family —
@@ -338,9 +273,7 @@ object ForgetOps {
       Forget.forgetKAnonDocs(d.filter(forgottenPred), root, 2L)
     }
 
-  private def q205OracleSql: String =
-    graft.ops.TextOps.q189.oracle.get.replace(
-      "FROM documents", s"FROM $survivorsSql t")
+  private def q205OracleSql: String = TextOps.q189OracleSql(survivorsSql)
 
   /** q205 — k-anonymity AFTER FORGETTING: erasure SHRINKS
     * quasi-identifier groups, so a privacy pass that trusted its
@@ -403,8 +336,7 @@ object ForgetOps {
     * serving index and the q198 release-delta store (one row shape).
     */
   val q206 = Q("q206_trend_forget",
-    Dedup.q199.oracle.get.replace(
-      "doc_id >= 50", s"doc_id >= 50 $survivorAnd")) { (s, dir) =>
+    Dedup.q199OracleSql(s"doc_id >= 50 $survivorAnd")) { (s, dir) =>
     val (deltas, bounds) = buildTrendForgetStore(s, dir)
     graft.streaming.ScrubStream.containmentTrend(
       s, deltas, docs(s, dir).filter(!forgottenPred), bounds)
@@ -443,11 +375,7 @@ object ForgetOps {
     * benchmark rescans: erasure cost is the affected verdict partitions.
     */
   val q207 = Q("q207_scrub_forget",
-    Dedup.q141.oracle.get
-      .replace("AND doc_id >= 50", s"AND doc_id >= 50 $survivorAnd")
-      // the scrub CTE's doc spine has its own corpus bound
-      .replace("WHERE c.doc_id >= 50",
-        s"WHERE c.doc_id >= 50 AND c.doc_id % $ForgetMod <> $ForgetRes")) {
+    Dedup.q141OracleSql(s"doc_id >= 50 $survivorAnd")) {
     (s, dir) =>
       val rows = buildScrubForgetStore(s, dir)
       Dedup.scrubReport(s.read.parquet(rows))
@@ -505,10 +433,7 @@ object ForgetOps {
     * clusters' occupancy — never a corpus re-embed.
     */
   val q208 = Q("q208_semantic_forget",
-    graft.ops.Similarity.q104.oracle.get.replace(
-      "FROM asg2 a JOIN e ON a.vec_id = e.vec_id",
-      s"FROM asg2 a JOIN e ON a.vec_id = e.vec_id " +
-        s"WHERE a.vec_id % $ForgetMod <> $ForgetRes")) { (s, dir) =>
+    Similarity.q104OracleSql(s" WHERE a.vec_id % $ForgetMod <> $ForgetRes")) { (s, dir) =>
     val (_, dec) = buildSemanticForgetStore(s, dir)
     s.read.parquet(dec)
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
@@ -546,9 +471,7 @@ object ForgetOps {
     * only duplicated against forgotten content is no longer cut).
     */
   val q209 = Q("q209_span_forget",
-    graft.ops.Mining.q182.oracle.get.replace(
-      "FROM documents",
-      s"FROM (SELECT * FROM documents WHERE doc_id % $ForgetMod <> $ForgetRes)")) {
+    Mining.q182OracleSql(survivorsSql)) {
     (s, dir) =>
       val deltas = buildSpanForgetStore(s, dir)
       CorpusStream.spanScrubFromDeltas(s, deltas,
@@ -583,9 +506,7 @@ object ForgetOps {
     * correctly stops counting as duplicated.
     */
   val q210 = Q("q210_cdc_forget",
-    Dedup.q171.oracle.get.replace(
-      "FROM documents",
-      s"FROM (SELECT * FROM documents WHERE doc_id % $ForgetMod <> $ForgetRes)")) {
+    Dedup.q171OracleSql(survivorsSql)) {
     (s, dir) =>
       val (chunks, nd) = buildCdcForgetStore(s, dir)
       CorpusStream.cdcReportFromDeltas(s, chunks, nd)
@@ -618,9 +539,7 @@ object ForgetOps {
     * and stays covered, not because the math is deep.
     */
   val q211 = Q("q211_cs_forget",
-    graft.ops.TextOps.q195.oracle.get.replace(
-      "FROM documents",
-      s"FROM (SELECT * FROM documents WHERE doc_id % $ForgetMod <> $ForgetRes)")) {
+    TextOps.q195OracleSql(survivorsSql)) {
     (s, dir) =>
       val deltas = buildCsForgetStore(s, dir)
       CorpusStream.codeSwitchFromDeltas(s, deltas,
@@ -811,7 +730,7 @@ object ForgetOps {
     * small appends instead of one, still zero store rewrites.
     */
   val q214 = Q("q214_pinned_forget",
-    lmForgetFluencyOracle(pinnedSurvivorsSql)) { (s, dir) =>
+    TextOps.fluencyOracleSql(pinnedSurvivorsSql)) { (s, dir) =>
     val (store, cut2) = buildLmPinForgetStore(s, dir)
     // the law under test: the pin registered before the wave is STILL
     // servable (a whole-wave forget would have sealed the horizon at 3
@@ -881,7 +800,7 @@ object ForgetOps {
     * can do neither).
     */
   val q215 = Q("q215_retention_window",
-    lmForgetFluencyOracle(windowSurvivorsSql)) { (s, dir) =>
+    TextOps.fluencyOracleSql(windowSurvivorsSql)) { (s, dir) =>
     val (store, cut2) = buildLmTtlStore(s, dir)
     val windowSurvivors = docs(s, dir)
       .filter(!forgottenPred && col("doc_id") >= cut2)
@@ -934,12 +853,7 @@ object ForgetOps {
     * codebook retraining is q132's rebuild trigger's job).
     */
   val q216 = Q("q216_retrieval_after_forget",
-    Similarity.q99OracleSql
-      .replace("SELECT vec_id, m, k FROM bestc WHERE rn = 1",
-        s"SELECT vec_id, m, k FROM bestc WHERE rn = 1 AND vec_id % $ForgetMod <> $ForgetRes")
-      .replace("SELECT s.vec_id, s.label, s.adc_dist,",
-        "SELECT s.vec_id, s.label, s.adc_dist,\n" +
-          "  (SELECT CAST(COUNT(DISTINCT vec_id) AS BIGINT) FROM adc) AS n_candidates,")) {
+    Similarity.q99OracleSql(s" AND vec_id % $ForgetMod <> $ForgetRes", candidates = true)) {
     (s, dir) =>
       import graft.ops.Similarity.{PqM, PqSubDim, PqK, NProbe, asDouble, dot, norm, sqDist}
       val store = buildPqForgetStore(s, dir)
@@ -1048,12 +962,10 @@ object ForgetOps {
        |), nf AS (
        |  SELECT CAST(COUNT(*) AS BIGINT) AS n FROM f
        |), tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t
        |  FROM f WHERE doc_id >= 50
        |), sh AS (
-       |  SELECT doc_id, CASE WHEN len(t) >= 3
-       |    THEN list_distinct([array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)])
-       |    ELSE [] END AS ss FROM tk
+       |  SELECT doc_id, CASE WHEN len(t) >= 3 THEN ${OracleSql.shingleSetSql()} ELSE [] END AS ss FROM tk
        |), shn AS (
        |  SELECT CAST(COALESCE(SUM(len(ss)), 0) AS BIGINT) AS n FROM sh
        |)
@@ -1183,7 +1095,7 @@ object ForgetOps {
     * that retrain.
     */
   val q219 = Q("q219_epoch_window",
-    lmForgetFluencyOracle(epochWindowSurvivorsSql)) { (s, dir) =>
+    TextOps.fluencyOracleSql(epochWindowSurvivorsSql)) { (s, dir) =>
     val (store, _, cut6) = buildLmEpochStore(s, dir)
     val windowSurvivors = docs(s, dir)
       .filter(!forgottenPred && col("doc_id") >= cut6)
@@ -1352,9 +1264,8 @@ object ForgetOps {
     * disk: O(window cells) vs O(corpus).
     */
   val q222 = Q("q222_selector_window",
-    graft.ops.Mining.q164.oracle.get.replace("FROM documents",
-      s"FROM (SELECT * FROM documents WHERE doc_id % 4 >= 2 " +
-        s"AND doc_id % $ForgetMod <> $ForgetRes)")) { (s, dir) =>
+    Mining.q164OracleSql(s"(SELECT * FROM documents WHERE doc_id % 4 >= 2 " +
+      s"AND doc_id % $ForgetMod <> $ForgetRes)")) { (s, dir) =>
     val store = buildFeatureTtlStore(s, dir)
     val ratio = CorpusStream.ratioWindowed(s, store, lo = 2L)
     val windowSurv = docs(s, dir)
@@ -1392,30 +1303,7 @@ object ForgetOps {
     (s"$root/index", 2 * q)
   }
 
-  private def q223OracleSql: String = {
-    val sigDefs = Dedup.sigDefsSql
-    val bandSelects = Dedup.bandSelectsSql
-    s"""WITH ${Dedup.shingleCtesBody(windowSurvivorsSql)}, sigs AS (
-       |  SELECT doc_id, len(hh) AS n_shingles,
-       |$sigDefs
-       |  FROM hs
-       |), bands AS (
-       |$bandSelects
-       |), cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND b.doc_id < a.doc_id
-       |), agg AS (
-       |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_earlier, MIN(doc_b) AS dup_of
-       |  FROM cand GROUP BY doc_id
-       |)
-       |SELECT d.doc_id,
-       |  CAST(COALESCE(a.n_earlier, 0) AS BIGINT) AS n_earlier,
-       |  a.dup_of,
-       |  a.dup_of IS NOT NULL AS is_band_dup
-       |FROM $windowSurvivorsSql d LEFT JOIN agg a ON d.doc_id = a.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-  }
+  private def q223OracleSql: String = Dedup.keepEarliestOracleSql(windowSurvivorsSql)
 
   /** q223 — KEEP-EARLIEST DEDUP over a retention window: stored verdicts
     * cannot window (a doc deduped against an expired landing names an
@@ -1575,7 +1463,7 @@ object ForgetOps {
     * amendment rewrites identical bytes.
     */
   val q226 = Q("q226_amend_lm",
-    lmForgetFluencyOracle(correctedCorpusSql)) { (s, dir) =>
+    TextOps.fluencyOracleSql(correctedCorpusSql)) { (s, dir) =>
     val deltas = buildLmAmendStore(s, dir)
     val (_, corpus, _) = amendFixture(s, dir)
     graft.ops.TextOps.fluencyScoredFromCounts(corpus,
@@ -1824,7 +1712,7 @@ object ForgetOps {
   val q230 = Q("q230_schema_evolution",
     s"""WITH tk AS (
        |  SELECT source, doc_id,
-       |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+       |    ${OracleSql.tokens()} AS t
        |  FROM documents
        |), m AS (
        |  SELECT source, doc_id, len(t) AS n_tok,
@@ -1919,7 +1807,7 @@ object ForgetOps {
     * don't stop applying because data got compacted).
     */
   val q232 = Q("q232_amend_rebanded_epoch",
-    lmForgetFluencyOracle(correctedCorpusSql)) { (s, dir) =>
+    TextOps.fluencyOracleSql(correctedCorpusSql)) { (s, dir) =>
     val deltas = buildLmRebandStore(s, dir)
     val (_, corpus, _) = amendFixture(s, dir)
     graft.ops.TextOps.fluencyScoredFromCounts(corpus,
@@ -1990,7 +1878,7 @@ object ForgetOps {
   val q233 = Q("q233_identity_schema_evolution",
     s"""WITH tk AS (
        |  SELECT doc_id, source,
-       |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+       |    ${OracleSql.tokens()} AS t
        |  FROM documents
        |)
        |SELECT doc_id, source, CAST(len(t) AS BIGINT) AS n_tok,
@@ -2209,7 +2097,7 @@ object ForgetOps {
     * deletes by key, regardless of arrival order.
     */
   val q235 = Q("q235_amend_respects_erasure",
-    lmForgetFluencyOracle(commuteCorpusSql)) { (s, dir) =>
+    TextOps.fluencyOracleSql(commuteCorpusSql)) { (s, dir) =>
     val deltas = buildLmCommuteStore(s, dir)
     val (_, corpus, w) = amendFixture(s, dir)
     val after = corpus.filter(!(pmod(col("doc_id"), lit(9L)) === 4L &&

@@ -35,19 +35,25 @@ object Mining {
 
   private def docs(s: SparkSession, dir: String) = Catalog.table(s, dir, "documents")
 
-  /** DuckDB CTEs: tokens → distinct n-token windows → h60 list (the
-    * parameterized form of Dedup's 3-shingle CTEs; mirrors
-    * ShingleHashes(text, n) exactly).
+  /** Oracle CTEs `lagged` → `isl` → `spans` (doc_id, island,
+    * span_tokens): the duplicated window starts of a (doc_id, pos)
+    * relation merged into token spans — starts closer than one window
+    * join one island.
     */
-  def shingleCtesN(n: Int): String =
-    s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-       |), sh AS (
-       |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= $n
-       |    THEN [array_to_string(t[i:i+${n - 1}], ' ') for i in range(1, len(t) - ${n - 2})]
-       |    ELSE [array_to_string(t, ' ')] END) AS ss FROM tk
-       |), hs AS (
-       |  SELECT doc_id, list_transform(ss, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hh FROM sh
+  private def spanCtes(starts: String): String =
+    s"""lagged AS (
+       |  SELECT doc_id, pos,
+       |    CASE WHEN LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
+       |      OR pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) >= $SubstringWindow
+       |      THEN 1 ELSE 0 END AS is_start
+       |  FROM $starts
+       |), isl AS (
+       |  SELECT doc_id, pos, SUM(is_start) OVER (PARTITION BY doc_id ORDER BY pos
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+       |  FROM lagged
+       |), spans AS (
+       |  SELECT doc_id, island, MAX(pos) - MIN(pos) + $SubstringWindow AS span_tokens
+       |  FROM isl GROUP BY doc_id, island
        |)""".stripMargin
 
   // ── q48: windowed exact-substring dedup ───────────────────────────────
@@ -70,7 +76,7 @@ object Mining {
   }
 
   private def q48OracleSql: String =
-    s"""${shingleCtesN(SubstringWindow)}, ex AS (
+    s"""WITH ${OracleSql.shingleCtes(n = SubstringWindow)}, ex AS (
        |  SELECT doc_id, unnest(hh) AS h FROM hs
        |), df AS (
        |  SELECT h, COUNT(*) AS n_docs FROM ex GROUP BY h
@@ -80,8 +86,8 @@ object Mining {
        |  FROM ex JOIN df ON ex.h = df.h GROUP BY ex.doc_id
        |)
        |SELECT doc_id, n_windows, n_dup_windows,
-       |  FLOOR(CAST(n_dup_windows AS DOUBLE) / n_windows * 10000.0 + 0.5) / 10000.0 AS dup_fraction,
-       |  (FLOOR(CAST(n_dup_windows AS DOUBLE) / n_windows * 10000.0 + 0.5) / 10000.0 >= $SubstringDupThreshold) AS is_substring_dup
+       |  ${OracleSql.round4("CAST(n_dup_windows AS DOUBLE) / n_windows")} AS dup_fraction,
+       |  (${OracleSql.round4("CAST(n_dup_windows AS DOUBLE) / n_windows")} >= $SubstringDupThreshold) AS is_substring_dup
        |FROM per ORDER BY doc_id""".stripMargin
 
   /** q48 — windowed substring dedup: per doc, how many of its W-token
@@ -109,11 +115,11 @@ object Mining {
 
   private def q181OracleSql: String =
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), ph AS (
        |  SELECT doc_id, CASE WHEN len(t) >= $SubstringWindow
-       |    THEN [struct_pack(pos := i - 1, h := ${Dedup.h60Sql(s"array_to_string(t[i:i+${SubstringWindow - 1}], ' ')")}) for i in range(1, len(t) - ${SubstringWindow - 2})]
-       |    ELSE [struct_pack(pos := 0, h := ${Dedup.h60Sql("array_to_string(t, ' ')")})] END AS ps
+       |    THEN [struct_pack(pos := i - 1, h := ${OracleSql.h60(s"array_to_string(t[i:i+${SubstringWindow - 1}], ' ')")}) for i in range(1, len(t) - ${SubstringWindow - 2})]
+       |    ELSE [struct_pack(pos := 0, h := ${OracleSql.h60("array_to_string(t, ' ')")})] END AS ps
        |  FROM tk
        |), ex AS (
        |  SELECT doc_id, unnest(ps, recursive := true) FROM ph
@@ -125,20 +131,7 @@ object Mining {
        |  FROM ex LEFT JOIN freq f ON ex.h = f.h GROUP BY ex.doc_id
        |), d AS (
        |  SELECT e.doc_id, e.pos FROM ex e JOIN freq f ON e.h = f.h
-       |), lagged AS (
-       |  SELECT doc_id, pos,
-       |    CASE WHEN LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-       |      OR pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) >= $SubstringWindow
-       |      THEN 1 ELSE 0 END AS is_start
-       |  FROM d
-       |), isl AS (
-       |  SELECT doc_id, pos, SUM(is_start) OVER (PARTITION BY doc_id ORDER BY pos
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-       |  FROM lagged
-       |), spans AS (
-       |  SELECT doc_id, island, MAX(pos) - MIN(pos) + $SubstringWindow AS span_tokens
-       |  FROM isl GROUP BY doc_id, island
-       |), rep AS (
+       |), ${spanCtes("d")}, rep AS (
        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
        |    CAST(SUM(span_tokens) AS BIGINT) AS dup_tokens,
        |    CAST(MAX(span_tokens) AS BIGINT) AS max_span_tokens
@@ -219,15 +212,16 @@ object Mining {
     */
   private val SpanPosKey = 100000L
 
-  private def q182OracleSql: String =
+  /** q182's oracle over a `corpus` relation (q209: the survivors). */
+  private[ops] def q182OracleSql(corpus: String = "documents"): String =
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM $corpus
        |), tt AS (
        |  SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens, t FROM tk
        |  WHERE len(t) >= $SubstringWindow
        |), ph AS (
        |  SELECT doc_id, n_tokens,
-       |    [struct_pack(pos := i - 1, h := ${Dedup.h60Sql(s"array_to_string(t[i:i+${SubstringWindow - 1}], ' ')")}) for i in range(1, len(t) - ${SubstringWindow - 2})] AS ps
+       |    [struct_pack(pos := i - 1, h := ${OracleSql.h60(s"array_to_string(t[i:i+${SubstringWindow - 1}], ' ')")}) for i in range(1, len(t) - ${SubstringWindow - 2})] AS ps
        |  FROM tt
        |), ex AS (
        |  SELECT doc_id, n_tokens, unnest(ps, recursive := true) FROM ph
@@ -237,20 +231,7 @@ object Mining {
        |), cut AS (
        |  SELECT e.doc_id, e.pos FROM ex e JOIN fq ON e.h = fq.h
        |  WHERE fq.n >= 2 AND e.doc_id * $SpanPosKey + e.pos > fq.first_key
-       |), lagged AS (
-       |  SELECT doc_id, pos,
-       |    CASE WHEN LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-       |      OR pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) >= $SubstringWindow
-       |      THEN 1 ELSE 0 END AS is_start
-       |  FROM cut
-       |), isl AS (
-       |  SELECT doc_id, pos, SUM(is_start) OVER (PARTITION BY doc_id ORDER BY pos
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-       |  FROM lagged
-       |), spans AS (
-       |  SELECT doc_id, island, MAX(pos) - MIN(pos) + $SubstringWindow AS span_tokens
-       |  FROM isl GROUP BY doc_id, island
-       |), rep AS (
+       |), ${spanCtes("cut")}, rep AS (
        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS cut_spans,
        |    CAST(SUM(span_tokens) AS BIGINT) AS cut_tokens
        |  FROM spans GROUP BY doc_id
@@ -352,7 +333,7 @@ object Mining {
     * duplication verdict AND the argmin first-occurrence key; islands
     * ride per-document window partitions.
     */
-  val q182 = Q("q182_span_scrub_plan", q182OracleSql) { (s, dir) =>
+  val q182 = Q("q182_span_scrub_plan", q182OracleSql()) { (s, dir) =>
     spanScrubPlanOf(docs(s, dir))
   }
 
@@ -460,13 +441,18 @@ object Mining {
     Seq.fill(ClassifierBuckets)((rnd.nextInt(11) - 5).toLong)
   }
 
+  /** Oracle fragment: the per-token mean quality score of an `sc`
+    * (n_tokens, score) row, 4-decimal — the mirror of `linear_score`'s mean.
+    */
+  private def qualityMeanSql: String =
+    s"CASE WHEN n_tokens = 0 THEN 0.0 ELSE ${OracleSql.round4("CAST(score AS DOUBLE) / n_tokens")} END"
+
   private def q92OracleSql: String = {
     val w = classifierWeights.mkString("[", ", ", "]")
-    val mean = "CASE WHEN n_tokens = 0 THEN 0.0 ELSE FLOOR(CAST(score AS DOUBLE) / n_tokens * 10000.0 + 0.5) / 10000.0 END"
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), hs AS (
-       |  SELECT doc_id, list_transform(t, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hh FROM tk
+       |  SELECT doc_id, list_transform(t, s -> ${OracleSql.h60("s")}) AS hh FROM tk
        |), sc AS (
        |  SELECT doc_id, CAST(len(hh) AS BIGINT) AS n_tokens,
        |    CAST(COALESCE(list_sum(list_transform(hh,
@@ -474,8 +460,8 @@ object Mining {
        |  FROM hs
        |)
        |SELECT doc_id, n_tokens, score,
-       |  $mean AS quality_score,
-       |  ($mean > 0.0) AS is_quality
+       |  $qualityMeanSql AS quality_score,
+       |  ($qualityMeanSql > 0.0) AS is_quality
        |FROM sc ORDER BY doc_id""".stripMargin
   }
 
@@ -501,20 +487,19 @@ object Mining {
 
   private def q102OracleSql: String = {
     val w = classifierWeights.mkString("[", ", ", "]")
-    val mean = "CASE WHEN n_tokens = 0 THEN 0.0 ELSE FLOOR(CAST(score AS DOUBLE) / n_tokens * 10000.0 + 0.5) / 10000.0 END"
     val tier = "CASE WHEN q.quality_score >= th.p90 THEN 4 WHEN q.quality_score >= th.p70 THEN 3" +
       " WHEN q.quality_score >= th.p50 THEN 2 WHEN q.quality_score >= th.p30 THEN 1 ELSE 0 END"
     s"""WITH tk AS (
-       |  SELECT doc_id, source, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, source, ${OracleSql.tokens()} AS t FROM documents
        |), hs AS (
-       |  SELECT doc_id, source, list_transform(t, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hh FROM tk
+       |  SELECT doc_id, source, list_transform(t, s -> ${OracleSql.h60("s")}) AS hh FROM tk
        |), sc AS (
        |  SELECT doc_id, source, CAST(len(hh) AS BIGINT) AS n_tokens,
        |    CAST(COALESCE(list_sum(list_transform(hh,
        |      h -> list_extract($w, CAST(h % $ClassifierBuckets AS BIGINT) + 1))), 0) AS BIGINT) AS score
        |  FROM hs
        |), sq AS (
-       |  SELECT doc_id, source, $mean AS quality_score FROM sc
+       |  SELECT doc_id, source, $qualityMeanSql AS quality_score FROM sc
        |), ranked AS (
        |  SELECT source, doc_id, quality_score,
        |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY quality_score, doc_id) AS rn,
@@ -591,7 +576,7 @@ object Mining {
 
   private def q93OracleSql: String = {
     val m = BloomBits - 1
-    s"""${shingleCtesN(Dedup.ShingleN)}, bex AS (
+    s"""WITH ${OracleSql.shingleCtes()}, bex AS (
        |  SELECT unnest(hh) AS h FROM hs WHERE doc_id < 50
        |), probes AS (
        |  SELECT h & $m AS p FROM bex
@@ -618,8 +603,8 @@ object Mining {
        |  FROM tested GROUP BY doc_id
        |)
        |SELECT doc_id, n_shingles, n_hits,
-       |  FLOOR(CAST(n_hits AS DOUBLE) / n_shingles * 10000.0 + 0.5) / 10000.0 AS hit_fraction,
-       |  (FLOOR(CAST(n_hits AS DOUBLE) / n_shingles * 10000.0 + 0.5) / 10000.0 >= $BloomFlagThreshold) AS is_flagged
+       |  ${OracleSql.round4("CAST(n_hits AS DOUBLE) / n_shingles")} AS hit_fraction,
+       |  (${OracleSql.round4("CAST(n_hits AS DOUBLE) / n_shingles")} >= $BloomFlagThreshold) AS is_flagged
        |FROM per ORDER BY doc_id""".stripMargin
   }
 
@@ -668,16 +653,15 @@ object Mining {
     */
   private def q95WithBody: String = {
     val w = classifierWeights.mkString("[", ", ", "]")
-    val mean = "CASE WHEN n_tokens = 0 THEN 0.0 ELSE FLOOR(CAST(score AS DOUBLE) / n_tokens * 10000.0 + 0.5) / 10000.0 END"
     s"""tk AS (
-       |  SELECT doc_id, source, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, source, ${OracleSql.tokens()} AS t FROM documents
        |), sc AS (
        |  SELECT doc_id, source, CAST(len(t) AS BIGINT) AS n_tokens,
        |    CAST(COALESCE(list_sum(list_transform(t,
-       |      s -> list_extract($w, CAST(CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) % $ClassifierBuckets AS BIGINT) + 1))), 0) AS BIGINT) AS score
+       |      s -> list_extract($w, CAST(${OracleSql.h60("s")} % $ClassifierBuckets AS BIGINT) + 1))), 0) AS BIGINT) AS score
        |  FROM tk
        |), q AS (
-       |  SELECT doc_id, source, n_tokens, $mean AS quality_score FROM sc
+       |  SELECT doc_id, source, n_tokens, $qualityMeanSql AS quality_score FROM sc
        |), win AS (
        |  SELECT doc_id, source, n_tokens, quality_score,
        |    SUM(n_tokens) OVER (PARTITION BY source ORDER BY quality_score DESC, doc_id
@@ -740,8 +724,8 @@ object Mining {
   val ShardBudget = 4096L
 
   private def q119OracleSql: String = {
-    val hkSql = Dedup.h60Sql("CAST(s.doc_id AS VARCHAR)")
-    val chSql = Dedup.h60Sql("trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g'))")
+    val hkSql = OracleSql.h60("CAST(s.doc_id AS VARCHAR)")
+    val chSql = OracleSql.h60(OracleSql.normalized("d.text"))
     s"""WITH $q95WithBody, sel AS (
        |  SELECT doc_id, n_tokens FROM win
        |  WHERE cum_tokens <= FLOOR(tokens_total * $BudgetFraction)
@@ -839,11 +823,11 @@ object Mining {
     .orderBy("shard_id")
 
   private def q123OracleSql: String = {
-    val hkSql = Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
-    val chSql = Dedup.h60Sql("trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))")
+    val hkSql = OracleSql.h60("CAST(doc_id AS VARCHAR)")
+    val chSql = OracleSql.h60(OracleSql.normalized())
     s"""WITH h AS (
        |  SELECT doc_id,
-       |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens,
+       |    CAST(len(${OracleSql.tokens()}) AS BIGINT) AS n_tokens,
        |    $hkSql AS hk, $chSql AS ch
        |  FROM documents
        |)
@@ -882,11 +866,11 @@ object Mining {
 
   private def q125OracleSql: String = {
     val width = (1L << 60) / MembershipShards
-    val hkSql = Dedup.h60Sql("CAST(doc_id AS VARCHAR)")
-    val chSql = Dedup.h60Sql("trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))")
+    val hkSql = OracleSql.h60("CAST(doc_id AS VARCHAR)")
+    val chSql = OracleSql.h60(OracleSql.normalized())
     s"""WITH h AS (
        |  SELECT doc_id,
-       |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens,
+       |    CAST(len(${OracleSql.tokens()}) AS BIGINT) AS n_tokens,
        |    $hkSql AS hk, $chSql AS ch
        |  FROM documents
        |)
@@ -963,13 +947,13 @@ object Mining {
   private def q96OracleSql: String = {
     val (k, w) = (WinnowK, WinnowWindow)
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), sh AS (
        |  SELECT doc_id, CASE WHEN len(t) >= $k
        |    THEN [array_to_string(t[i:i+${k - 1}], ' ') for i in range(1, len(t) - ${k - 2})]
        |    ELSE [array_to_string(t, ' ')] END AS ss FROM tk
        |), hs AS (
-       |  SELECT doc_id, list_transform(ss, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hw FROM sh
+       |  SELECT doc_id, list_transform(ss, s -> ${OracleSql.h60("s")}) AS hw FROM sh
        |), sk AS (
        |  SELECT doc_id, len(hw) AS n_kgrams,
        |    list_distinct(CASE WHEN len(hw) >= $w
@@ -986,8 +970,8 @@ object Mining {
        |)
        |SELECT sk.doc_id, CAST(n_kgrams AS BIGINT) AS n_kgrams,
        |  CAST(len(sketch) AS BIGINT) AS sketch_size, per.n_dup_fps,
-       |  FLOOR(CAST(per.n_dup_fps AS DOUBLE) / len(sketch) * 10000.0 + 0.5) / 10000.0 AS dup_fraction,
-       |  (FLOOR(CAST(per.n_dup_fps AS DOUBLE) / len(sketch) * 10000.0 + 0.5) / 10000.0 >= $WinnowDupThreshold) AS is_winnow_dup
+       |  ${OracleSql.round4("CAST(per.n_dup_fps AS DOUBLE) / len(sketch)")} AS dup_fraction,
+       |  (${OracleSql.round4("CAST(per.n_dup_fps AS DOUBLE) / len(sketch)")} >= $WinnowDupThreshold) AS is_winnow_dup
        |FROM sk JOIN per ON sk.doc_id = per.doc_id
        |ORDER BY sk.doc_id""".stripMargin
   }
@@ -1027,7 +1011,7 @@ object Mining {
     s"""WITH epochs AS (SELECT 1 AS epoch UNION ALL SELECT 2),
        |keyed AS (
        |  SELECT e.epoch, d.doc_id,
-       |    ${Dedup.h60Sql("CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)")} AS k
+       |    ${OracleSql.h60("CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)")} AS k
        |  FROM documents d CROSS JOIN epochs e
        |), ranked AS (
        |  SELECT epoch, doc_id, k, k % $EpochShards AS shard,
@@ -1165,10 +1149,10 @@ object Mining {
   private def q150OracleSql: String = {
     val w = classifierWeights.mkString("[", ", ", "]")
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), sc AS (
        |  SELECT doc_id, CAST(COALESCE(list_sum(list_transform(
-       |    list_transform(t, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)),
+       |    list_transform(t, s -> ${OracleSql.h60("s")}),
        |    h -> list_extract($w, CAST(h % $ClassifierBuckets AS BIGINT) + 1))), 0) AS BIGINT) AS score
        |  FROM tk
        |), keyed AS (
@@ -1176,7 +1160,7 @@ object Mining {
        |    CASE WHEN score >= ${CurriculumCuts(0)} THEN 0
        |         WHEN score >= ${CurriculumCuts(1)} THEN 1
        |         WHEN score >= ${CurriculumCuts(2)} THEN 2 ELSE 3 END AS phase,
-       |    ${Dedup.h60Sql("'cur:' || CAST(doc_id AS VARCHAR)")} AS k
+       |    ${OracleSql.h60("'cur:' || CAST(doc_id AS VARCHAR)")} AS k
        |  FROM sc
        |), ranked AS (
        |  SELECT doc_id, phase, k % $EpochShards AS shard,
@@ -1285,11 +1269,11 @@ object Mining {
   private def q151OracleSql: String = {
     val w = classifierWeights.mkString("[", ", ", "]")
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), sc AS (
        |  SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
        |    CAST(COALESCE(list_sum(list_transform(
-       |    list_transform(t, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)),
+       |    list_transform(t, s -> ${OracleSql.h60("s")}),
        |    h -> list_extract($w, CAST(h % $ClassifierBuckets AS BIGINT) + 1))), 0) AS BIGINT) AS score
        |  FROM tk
        |), keyed AS (
@@ -1297,7 +1281,7 @@ object Mining {
        |    CASE WHEN score >= ${CurriculumCuts(0)} THEN 0
        |         WHEN score >= ${CurriculumCuts(1)} THEN 1
        |         WHEN score >= ${CurriculumCuts(2)} THEN 2 ELSE 3 END AS phase,
-       |    ${Dedup.h60Sql("'cur:' || CAST(doc_id AS VARCHAR)")} % $EpochShards AS shard
+       |    ${OracleSql.h60("'cur:' || CAST(doc_id AS VARCHAR)")} % $EpochShards AS shard
        |  FROM sc
        |), cells AS (
        |  SELECT phase, shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1334,7 +1318,7 @@ object Mining {
        |epochs AS (SELECT 1 AS epoch UNION ALL SELECT 2),
        |keyed AS (
        |  SELECT e.epoch, p.pack_id, p.pack_tokens,
-       |    ${Dedup.h60Sql("'pk:' || CAST(e.epoch AS VARCHAR) || ':' || CAST(p.pack_id AS VARCHAR)")} AS k
+       |    ${OracleSql.h60("'pk:' || CAST(e.epoch AS VARCHAR) || ':' || CAST(p.pack_id AS VARCHAR)")} AS k
        |  FROM packs p CROSS JOIN epochs e
        |), ranked AS (
        |  SELECT epoch, pack_id, pack_tokens, k, k % $EpochShards AS shard,
@@ -1380,7 +1364,7 @@ object Mining {
     s"""${TextOps.wrapPackCtesSql},
        |keyed AS (
        |  SELECT pack_id, pack_tokens,
-       |    ${Dedup.h60Sql("'pk:1:' || CAST(pack_id AS VARCHAR)")} AS k
+       |    ${OracleSql.h60("'pk:1:' || CAST(pack_id AS VARCHAR)")} AS k
        |  FROM packs
        |), ranked AS (
        |  SELECT pack_id, pack_tokens, k, k % $EpochShards AS shard,
@@ -1457,23 +1441,11 @@ object Mining {
     * sequential weighted round-robin with removal.
     */
   private def q157OracleSql: String =
-    s"""WITH ${renormSegCtesBody("documents")}, soff AS (
-      |  SELECT seg_idx, source,
-      |    CAST(COALESCE(SUM(em) OVER (PARTITION BY seg_idx ORDER BY source
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-      |  FROM segsrc
-      |), ranked AS (
+    s"""WITH ${renormSegCtesBody("documents")}, ranked AS (
       |  SELECT doc_id, source,
       |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) - 1 AS r0
       |  FROM documents
-      |), slotted AS (
-      |  SELECT r.source, r.doc_id, w.w,
-      |    sb.base + (r.r0 // w.w - sb.b) * sb.len_cycle + so.off + (r.r0 % w.w) AS slot
-      |  FROM ranked r
-      |  JOIN wt w ON r.source = w.source
-      |  JOIN segbase sb ON (r.r0 // w.w) >= sb.b AND (r.r0 // w.w) < sb.e
-      |  JOIN soff so ON so.seg_idx = sb.seg_idx AND so.source = r.source
-      |)
+      |), ${slottedCte("r.source, r.doc_id, w.w")}
       |SELECT source, MAX(w) AS w, COUNT(*) AS n_docs,
       |  MIN(slot) AS first_slot, MAX(slot) AS last_slot,
       |  CAST(SUM(slot * doc_id) AS BIGINT) AS slot_dot
@@ -1584,7 +1556,8 @@ object Mining {
 
   /** The SQL body shared by q158/q159/q161: per-source masses (over any
     * relation with a `source` column) → breakpoints → segment table with
-    * cycle lengths and exclusive slot bases. Returned WITHOUT a leading
+    * cycle lengths and exclusive slot bases, and each source's in-cycle
+    * slot offset `soff` per segment. Returned WITHOUT a leading
     * `WITH` so callers can prepend their own CTEs (q161 feeds the
     * upsampled row stream instead of raw documents).
     */
@@ -1619,7 +1592,27 @@ object Mining {
       |    CAST(COALESCE(SUM((e - b) * len_cycle) OVER (ORDER BY seg_idx
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS base
       |  FROM segl
+      |), soff AS (
+      |  SELECT seg_idx, source,
+      |    CAST(COALESCE(SUM(em) OVER (PARTITION BY seg_idx ORDER BY source
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
+      |  FROM segsrc
       |)""".stripMargin
+
+  /** Oracle CTE `slotted`: each `ranked` row (`r0`, its 0-based rank
+    * within its source) at its schedule slot — its segment's slot base,
+    * its whole cycles into the segment, its source's offset in the cycle
+    * and its place in its source's run. `cols` are the kept columns.
+    */
+  private def slottedCte(cols: String): String =
+    s"""slotted AS (
+       |  SELECT $cols,
+       |    sb.base + (r.r0 // w.w - sb.b) * sb.len_cycle + so.off + (r.r0 % w.w) AS slot
+       |  FROM ranked r
+       |  JOIN wt w ON r.source = w.source
+       |  JOIN segbase sb ON (r.r0 // w.w) >= sb.b AND (r.r0 // w.w) < sb.e
+       |  JOIN soff so ON so.seg_idx = sb.seg_idx AND so.source = r.source
+       |)""".stripMargin
 
   private def q158OracleSql: String =
     s"""WITH ${renormSegCtesBody("documents")}
@@ -1651,24 +1644,12 @@ object Mining {
   // ── q159: budget-cut resume over the renormalized order ───────────────
 
   private def q159OracleSql: String =
-    s"""WITH ${renormSegCtesBody("documents")}, soff AS (
-       |  SELECT seg_idx, source,
-       |    CAST(COALESCE(SUM(em) OVER (PARTITION BY seg_idx ORDER BY source
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-       |  FROM segsrc
-       |), ranked AS (
+    s"""WITH ${renormSegCtesBody("documents")}, ranked AS (
        |  SELECT doc_id, source,
-       |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_tokens,
+       |    CAST(len(${OracleSql.tokens()}) AS BIGINT) AS n_tokens,
        |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) - 1 AS r0
        |  FROM documents
-       |), slotted AS (
-       |  SELECT r.source, r.doc_id, r.n_tokens, w.w,
-       |    sb.base + (r.r0 // w.w - sb.b) * sb.len_cycle + so.off + (r.r0 % w.w) AS slot
-       |  FROM ranked r
-       |  JOIN wt w ON r.source = w.source
-       |  JOIN segbase sb ON (r.r0 // w.w) >= sb.b AND (r.r0 // w.w) < sb.e
-       |  JOIN soff so ON so.seg_idx = sb.seg_idx AND so.source = r.source
-       |), cum AS (
+       |), ${slottedCte("r.source, r.doc_id, r.n_tokens, w.w")}, cum AS (
        |  SELECT *,
        |    CAST(SUM(n_tokens) OVER (ORDER BY slot ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
        |    CAST(SUM(n_tokens) OVER () AS BIGINT) AS total
@@ -1728,23 +1709,11 @@ object Mining {
     s""", rows_ AS (
        |  SELECT source, doc_id, unnest(range(1, copies + 1)) AS copy_idx, toks
        |  FROM perdoc WHERE copies > 0
-       |), ${renormSegCtesBody("rows_")}, soff AS (
-       |  SELECT seg_idx, source,
-       |    CAST(COALESCE(SUM(em) OVER (PARTITION BY seg_idx ORDER BY source
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-       |  FROM segsrc
-       |), ranked AS (
+       |), ${renormSegCtesBody("rows_")}, ranked AS (
        |  SELECT source, doc_id, copy_idx, toks,
        |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id, copy_idx) - 1 AS r0
        |  FROM rows_
-       |), slotted AS (
-       |  SELECT r.source, r.doc_id, r.copy_idx, r.toks,
-       |    sb.base + (r.r0 // w.w - sb.b) * sb.len_cycle + so.off + (r.r0 % w.w) AS slot
-       |  FROM ranked r
-       |  JOIN wt w ON r.source = w.source
-       |  JOIN segbase sb ON (r.r0 // w.w) >= sb.b AND (r.r0 // w.w) < sb.e
-       |  JOIN soff so ON so.seg_idx = sb.seg_idx AND so.source = r.source
-       |), cum AS (
+       |), ${slottedCte("r.source, r.doc_id, r.copy_idx, r.toks")}, cum AS (
        |  SELECT *,
        |    CAST(SUM(toks) OVER (ORDER BY slot ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c
        |  FROM slotted
@@ -1839,26 +1808,14 @@ object Mining {
   // ── q162: epoch-seeded renormalized schedules ─────────────────────────
 
   private def q162OracleSql: String =
-    s"""WITH ${renormSegCtesBody("documents")}, soff AS (
-       |  SELECT seg_idx, source,
-       |    CAST(COALESCE(SUM(em) OVER (PARTITION BY seg_idx ORDER BY source
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-       |  FROM segsrc
-       |), eps AS (
+    s"""WITH ${renormSegCtesBody("documents")}, eps AS (
        |  SELECT CAST(1 AS BIGINT) AS epoch UNION ALL SELECT CAST(2 AS BIGINT)
        |), ranked AS (
        |  SELECT e.epoch, d.doc_id, d.source,
        |    ROW_NUMBER() OVER (PARTITION BY e.epoch, d.source
-       |      ORDER BY ${Dedup.h60Sql("'rs:' || CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)")}, d.doc_id) - 1 AS r0
+       |      ORDER BY ${OracleSql.h60("'rs:' || CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)")}, d.doc_id) - 1 AS r0
        |  FROM documents d CROSS JOIN eps e
-       |), slotted AS (
-       |  SELECT r.epoch, r.source, r.doc_id, w.w,
-       |    sb.base + (r.r0 // w.w - sb.b) * sb.len_cycle + so.off + (r.r0 % w.w) AS slot
-       |  FROM ranked r
-       |  JOIN wt w ON r.source = w.source
-       |  JOIN segbase sb ON (r.r0 // w.w) >= sb.b AND (r.r0 // w.w) < sb.e
-       |  JOIN soff so ON so.seg_idx = sb.seg_idx AND so.source = r.source
-       |)
+       |), ${slottedCte("r.epoch, r.source, r.doc_id, w.w")}
        |SELECT epoch, source, MAX(w) AS w, COUNT(*) AS n_docs,
        |  MIN(slot) AS first_slot, MAX(slot) AS last_slot,
        |  CAST(SUM(slot * doc_id) AS BIGINT) AS slot_dot
@@ -1897,27 +1854,15 @@ object Mining {
   // ── q166: budget consumption across epoch boundaries ──────────────────
 
   private def q166OracleSql: String =
-    s"""WITH ${renormSegCtesBody("documents")}, soff AS (
-       |  SELECT seg_idx, source,
-       |    CAST(COALESCE(SUM(em) OVER (PARTITION BY seg_idx ORDER BY source
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-       |  FROM segsrc
-       |), eps AS (
+    s"""WITH ${renormSegCtesBody("documents")}, eps AS (
        |  SELECT CAST(1 AS BIGINT) AS epoch UNION ALL SELECT CAST(2 AS BIGINT)
        |), ranked AS (
        |  SELECT e.epoch, d.doc_id, d.source,
-       |    CAST(len(regexp_extract_all(lower(d.text), '[a-z0-9]+')) AS BIGINT) AS n_tokens,
+       |    CAST(len(${OracleSql.tokens("d.text")}) AS BIGINT) AS n_tokens,
        |    ROW_NUMBER() OVER (PARTITION BY e.epoch, d.source
-       |      ORDER BY ${Dedup.h60Sql("'rs:' || CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)")}, d.doc_id) - 1 AS r0
+       |      ORDER BY ${OracleSql.h60("'rs:' || CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)")}, d.doc_id) - 1 AS r0
        |  FROM documents d CROSS JOIN eps e
-       |), slotted AS (
-       |  SELECT r.epoch, r.source, r.doc_id, r.n_tokens, w.w,
-       |    sb.base + (r.r0 // w.w - sb.b) * sb.len_cycle + so.off + (r.r0 % w.w) AS slot
-       |  FROM ranked r
-       |  JOIN wt w ON r.source = w.source
-       |  JOIN segbase sb ON (r.r0 // w.w) >= sb.b AND (r.r0 // w.w) < sb.e
-       |  JOIN soff so ON so.seg_idx = sb.seg_idx AND so.source = r.source
-       |), cum AS (
+       |), ${slottedCte("r.epoch, r.source, r.doc_id, r.n_tokens, w.w")}, cum AS (
        |  SELECT *,
        |    CAST(SUM(n_tokens) OVER (ORDER BY epoch, slot ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c,
        |    CAST(SUM(n_tokens) OVER () AS BIGINT) AS total
@@ -1979,27 +1924,11 @@ object Mining {
     val band = ("CASE " + EvalBandCuts.zipWithIndex.map { case (c, i) =>
       s"WHEN score >= $c THEN ${EvalBandCuts.length - i}" }.mkString(" ") +
       " ELSE 0 END")
-    s"""WITH st AS (
-       |  SELECT doc_id,
-       |    length(text) AS text_len,
-       |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t,
-       |    length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct
-       |  FROM documents
-       |), m AS (
-       |  SELECT doc_id, text_len, len(t) AS n_tokens,
-       |    CAST(coalesce(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS alpha_chars,
-       |    n_punct,
-       |    len(list_filter(t, x -> list_contains([${TextOps.allStop.map("'" + _ + "'").mkString(",")}], x))) AS n_stop
-       |  FROM st
-       |), gate AS (
-       |  SELECT doc_id,
-       |    (n_tokens BETWEEN 50 AND 100000
-       |      AND 3 * n_tokens <= alpha_chars AND alpha_chars <= 10 * n_tokens
-       |      AND 10 * n_punct <= text_len AND n_stop >= 2) AS keep
-       |  FROM m
+    s"""WITH ${OracleSql.gateStatsCtes()}, gate AS (
+       |  SELECT doc_id, ${OracleSql.gateKeepSql} AS keep FROM gm
        |), sc AS (
        |  SELECT doc_id, CAST(COALESCE(list_sum(list_transform(
-       |    list_transform(t, s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)),
+       |    list_transform(t, s -> ${OracleSql.h60("s")}),
        |    h -> list_extract($w, CAST(h % $ClassifierBuckets AS BIGINT) + 1))), 0) AS BIGINT) AS score
        |  FROM st
        |), b AS (
@@ -2084,26 +2013,11 @@ object Mining {
     */
   val SelectionBuckets = 1024L
 
-  private def q164OracleSql: String =
-    s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-       |), bg AS (
-       |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i ->
-       |    CAST('0x' || substr(md5(t[i] || ' ' || t[i+1]), 1, 15) AS BIGINT) % $SelectionBuckets)) AS f
-       |  FROM tk WHERE len(t) >= 2
-       |), tgt AS (
-       |  SELECT f, CAST(COUNT(*) AS BIGINT) AS n FROM bg WHERE doc_id < 50 GROUP BY f
-       |), rawc AS (
-       |  SELECT f, CAST(COUNT(*) AS BIGINT) AS n FROM bg WHERE doc_id >= 50 GROUP BY f
-       |), allf AS (
-       |  SELECT unnest(range(0, $SelectionBuckets)) AS f
-       |), ratio AS (
-       |  SELECT a.f,
-       |    (COALESCE(t.n, 0) + 1) * 10000 // (COALESCE(r.n, 0) + 1) AS rt
-       |  FROM allf a
-       |  LEFT JOIN tgt t ON a.f = t.f
-       |  LEFT JOIN rawc r ON a.f = r.f
-       |), sc AS (
+  /** q164's oracle over a `corpus` relation (q222: a retention
+    * window's survivors).
+    */
+  private[ops] def q164OracleSql(corpus: String = "documents"): String =
+    s"""WITH ${selectionRatioCtes(corpus)}, sc AS (
        |  SELECT b.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
        |    CAST(SUM(rt) AS BIGINT) AS score_sum
        |  FROM bg b JOIN ratio ON b.f = ratio.f
@@ -2130,7 +2044,7 @@ object Mining {
     * ratio table trains on a sample and the apply still touches each
     * doc once, map-side.
     */
-  val q164 = Q("q164_targeted_selection", q164OracleSql) { (s, dir) =>
+  val q164 = Q("q164_targeted_selection", q164OracleSql()) { (s, dir) =>
     targetedScores(s, dir)
       .select("doc_id", "n_bigrams", "score_sum", "score_mean_fp")
       .orderBy("doc_id")
@@ -2254,17 +2168,21 @@ object Mining {
     * shared by the single-ratio chain below and q169's two-release
     * variant.
     */
-  private def selectionBgCtes: String =
+  private def selectionBgCtes(corpus: String = "documents"): String =
     s"""tk AS (
-       |  SELECT doc_id, source, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, source, ${OracleSql.tokens()} AS t FROM $corpus
        |), bg AS (
        |  SELECT doc_id, source, unnest(list_transform(range(1, len(t)), i ->
-       |    CAST('0x' || substr(md5(t[i] || ' ' || t[i+1]), 1, 15) AS BIGINT) % $SelectionBuckets)) AS f
+       |    ${OracleSql.h60("t[i] || ' ' || t[i+1]")} % $SelectionBuckets)) AS f
        |  FROM tk WHERE len(t) >= 2
        |)""".stripMargin
 
-  private def selectionScoredCtes: String =
-    s"""$selectionBgCtes, tgt AS (
+  /** [[selectionBgCtes]], the target (doc_id < 50) and raw pool
+    * feature counts, and `ratio` (f, rt): each bucket's exact add-one
+    * importance ratio.
+    */
+  private def selectionRatioCtes(corpus: String): String =
+    s"""${selectionBgCtes(corpus)}, tgt AS (
        |  SELECT f, CAST(COUNT(*) AS BIGINT) AS n FROM bg WHERE doc_id < 50 GROUP BY f
        |), rawc AS (
        |  SELECT f, CAST(COUNT(*) AS BIGINT) AS n FROM bg WHERE doc_id >= 50 GROUP BY f
@@ -2276,7 +2194,10 @@ object Mining {
        |  FROM allf a
        |  LEFT JOIN tgt t ON a.f = t.f
        |  LEFT JOIN rawc r ON a.f = r.f
-       |), sc AS (
+       |)""".stripMargin
+
+  private def selectionScoredCtes: String =
+    s"""${selectionRatioCtes("documents")}, sc AS (
        |  SELECT b.doc_id, b.source, CAST(COUNT(*) AS BIGINT) AS n,
        |    CAST(SUM(rt) AS BIGINT) AS ss
        |  FROM bg b JOIN ratio ON b.f = ratio.f
@@ -2370,8 +2291,7 @@ object Mining {
        |    - CAST(FLOOR(wc / total_c * 1000000.0 + 0.5) AS BIGINT) AS shift_ppm,
        |  CAST(FLOOR(ws / total_s * 1000000.0) AS BIGINT) AS sel_target_tokens,
        |  CASE WHEN sel_tokens = 0 THEN CAST(0.0 AS DOUBLE)
-       |    ELSE FLOOR(ws / total_s * 1000000.0 / CAST(sel_tokens AS DOUBLE) * 10000.0 + 0.5)
-       |      / 10000.0 END AS sel_oversample_x
+       |    ELSE ${OracleSql.round4("ws / total_s * 1000000.0 / CAST(sel_tokens AS DOUBLE)")} END AS sel_oversample_x
        |FROM w, tc ORDER BY source""".stripMargin
 
   /** q167 — the selection→recipe COMPOSITION the round-9 handoff named:
@@ -2475,7 +2395,7 @@ object Mining {
   private[graft] val ReleaseV1Max = 25L
 
   private def q169OracleSql: String =
-    s"""WITH $selectionBgCtes, tgt1 AS (
+    s"""WITH ${selectionBgCtes()}, tgt1 AS (
        |  SELECT f, CAST(COUNT(*) AS BIGINT) AS n FROM bg WHERE doc_id < $ReleaseV1Max GROUP BY f
        |), tgt2 AS (
        |  SELECT f, CAST(COUNT(*) AS BIGINT) AS n FROM bg WHERE doc_id < 50 GROUP BY f
@@ -2648,8 +2568,8 @@ object Mining {
 
   private def q175OracleSql: String = mwOracleSql(
     s"""WITH d AS (
-       |  SELECT source, (10000 * n_chars) // len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS cpt
-       |  FROM documents WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0
+       |  SELECT source, (10000 * n_chars) // len(${OracleSql.tokens()}) AS cpt
+       |  FROM documents WHERE len(${OracleSql.tokens()}) > 0
        |)""".stripMargin)
 
   /** q175 — DoReMi-shaped domain reweighting: multiplicative-weights
@@ -2735,28 +2655,8 @@ object Mining {
     * recursive min-label closure → (doc_id, component).
     */
   private def nearDupCompCtes: String =
-    s"""WITH RECURSIVE ttk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-       |), tsh AS (
-       |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-       |    THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
-       |    ELSE [array_to_string(t, ' ')] END) AS ss FROM ttk
-       |), ths AS (
-       |  SELECT doc_id, list_transform(ss, s -> ${Dedup.h60Sql("s")}) AS hh FROM tsh
-       |), tex AS (
-       |  SELECT doc_id, unnest(hh) AS h FROM ths
-       |), tsz AS (
-       |  SELECT doc_id, len(hh) AS sz FROM ths
-       |), tshared AS (
-       |  SELECT a.doc_id AS doc_id, b.doc_id AS doc_b, COUNT(*) AS n_shared
-       |  FROM tex a JOIN tex b ON a.h = b.h AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), dupe AS (
-       |  SELECT s.doc_id AS src, s.doc_b AS dst
-       |  FROM tshared s
-       |  JOIN tsz sa ON s.doc_id = sa.doc_id
-       |  JOIN tsz sb ON s.doc_b = sb.doc_id
-       |  WHERE 5 * s.n_shared >= 4 * (sa.sz + sb.sz - s.n_shared)
+    s"""WITH RECURSIVE ${OracleSql.shingleCtes(prefix = "t")}, ${OracleSql.shingleOverlapCtes("t")}, dupe AS (
+       |  SELECT doc_id AS src, doc_b AS dst FROM tpairs WHERE ${OracleSql.nearDupPairSql}
        |), edges AS (
        |  SELECT src, dst FROM dupe UNION ALL SELECT dst AS src, src AS dst FROM dupe
        |), reach AS (
@@ -2855,7 +2755,7 @@ object Mining {
   private def q188OracleSql: String =
     s"""$nearDupCompCtes, asg AS (
        |  SELECT doc_id, component,
-       |    ${Dedup.h60Sql("CAST(component AS VARCHAR)")} % 100 < 5 AS is_eval
+       |    ${OracleSql.h60("CAST(component AS VARCHAR)")} % 100 < 5 AS is_eval
        |  FROM comp
        |)
        |SELECT d.source,

@@ -542,10 +542,10 @@ object Multimodal {
   }
 
   private val q37OracleSql =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, 'text/plain' AS mime, source,
       |    CAST(strlen(text) AS INTEGER) AS byte_len,
-      |    CAST('0x' || substr(md5(text), 1, 15) AS BIGINT) AS checksum,
+      |    ${OracleSql.h60("text")} AS checksum,
       |    CAST(CAST('0x' || substr(md5(text), 1, 4) AS BIGINT) % 640 + 1 AS INTEGER) AS width,
       |    CAST(CAST('0x' || substr(md5(text), 5, 4) AS BIGINT) % 480 + 1 AS INTEGER) AS height,
       |    CAST(CAST('0x' || substr(md5(text), 9, 4) AS BIGINT) % 32 + 1 AS INTEGER) AS n_frames,
@@ -902,9 +902,7 @@ object Multimodal {
   }
 
   private def q174OracleSql: String = {
-    val bandSelects = (0 until 4).map { k =>
-      s"  SELECT doc_id, phash, $k AS band_idx, (phash >> ${k * PhashBandBits}) & ${(1 << PhashBandBits) - 1} AS band_val FROM sigs"
-    }.mkString("\n  UNION ALL\n")
+    val bandSelects = OracleSql.bitBandSelectsSql("doc_id", "phash", "sigs", PhashBandBits, 4)
     s"""WITH px AS (
        |  SELECT doc_id, g.r AS r,
        |    list_transform(generate_series(0, 8), c ->
@@ -1354,31 +1352,9 @@ object Multimodal {
       "CASE WHEN (doc_id // 4) % 5 = 1 THEN CAST(doc_id // 4 AS VARCHAR) ELSE CAST(doc_id + 2000000000 AS VARCHAR) END"
     val audNudge =
       "CASE WHEN (doc_id // 4) % 5 = 1 AND 8*g.j + i = doc_id % 32 THEN CAST(256 * (doc_id % 4) AS INT) ELSE 0 END"
-    val bandSelects = (0 until 4).map { k =>
-      s"  SELECT doc_id, phash, $k AS band_idx, (phash >> ${k * PhashBandBits}) & ${(1 << PhashBandBits) - 1} AS band_val FROM isigs"
-    }.mkString("\n  UNION ALL\n")
-    s"""WITH ttk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-       |), tsh AS (
-       |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-       |    THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
-       |    ELSE [array_to_string(t, ' ')] END) AS ss FROM ttk
-       |), ths AS (
-       |  SELECT doc_id, list_transform(ss, s -> ${graft.ops.Dedup.h60Sql("s")}) AS hh FROM tsh
-       |), tex AS (
-       |  SELECT doc_id, unnest(hh) AS h FROM ths
-       |), tsz AS (
-       |  SELECT doc_id, len(hh) AS sz FROM ths
-       |), tshared AS (
-       |  SELECT a.doc_id AS doc_id, b.doc_id AS doc_b, COUNT(*) AS n_shared
-       |  FROM tex a JOIN tex b ON a.h = b.h AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), tdup AS (
-       |  SELECT DISTINCT s.doc_b AS doc_id
-       |  FROM tshared s
-       |  JOIN tsz sa ON s.doc_id = sa.doc_id
-       |  JOIN tsz sb ON s.doc_b = sb.doc_id
-       |  WHERE 5 * s.n_shared >= 4 * (sa.sz + sb.sz - s.n_shared)
+    val bandSelects = OracleSql.bitBandSelectsSql("doc_id", "phash", "isigs", PhashBandBits, 4)
+    s"""WITH ${OracleSql.shingleCtes(prefix = "t")}, ${OracleSql.shingleOverlapCtes("t")}, tdup AS (
+       |  SELECT DISTINCT doc_b AS doc_id FROM tpairs WHERE ${OracleSql.nearDupPairSql}
        |), px AS (
        |  SELECT doc_id, g.r AS r,
        |    list_transform(generate_series(0, 8), c ->

@@ -139,9 +139,7 @@ object Similarity {
       s"    (CASE WHEN ${dotSql.format("v", planeLit)} > 0 THEN ${1 << i} ELSE 0 END)"
     }.mkString(" +\n")
     val probeList = probeMasks.map(m => s"xor(q.qb, $m)").mkString(", ")
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), bk AS (
+    s"""WITH $embCte, bk AS (
        |  SELECT vec_id, label, v,
        |$bucketSum AS bucket
        |  FROM e
@@ -185,24 +183,9 @@ object Similarity {
   val NProbe = 2
 
   private def q38OracleSql: String = {
-    val davg6 = "SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) / 1000000.0 / COUNT(x)"
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), un AS (
-       |  SELECT label, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM e
-       |), mu AS (
-       |  SELECT label, i, $davg6 AS mu FROM un GROUP BY label, i
-       |), cents AS (
-       |  SELECT label, list(mu ORDER BY i) AS centroid FROM mu GROUP BY label
-       |), q AS (
+    s"""WITH $embCte, $labelCentroidCtes, q AS (
        |  SELECT v AS qv FROM e WHERE vec_id = 0
-       |), probes AS (
-       |  SELECT c.label AS probe_label
-       |  FROM cents c, q
-       |  ORDER BY ${dotSql.format("q.qv", "c.centroid")}
-       |    / (${normSql("q.qv")} * ${normSql("c.centroid")}) DESC, c.label
-       |  LIMIT $NProbe
-       |)
+       |), $probesCte
        |SELECT b.vec_id, b.label,
        |  ${dotSql.format("q.qv", "b.v")} / (${normSql("q.qv")} * ${normSql("b.v")}) AS cosine_sim
        |FROM e b, q
@@ -422,7 +405,7 @@ object Similarity {
     */
   val q70 = Q("q70_label_centroid_quality",
     s"""WITH ed AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+       |  SELECT vec_id, label, $embDoubleSql AS v
        |  FROM embeddings
        |), pe AS (
        |  SELECT label, unnest(range(len(v))) AS pos, unnest(v) AS x FROM ed
@@ -497,9 +480,7 @@ object Similarity {
   }
 
   private def q94OracleSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), pe AS (
+    s"""WITH $embCte, pe AS (
        |  SELECT label, unnest(v) AS x, generate_subscripts(v, 1) AS pos FROM e
        |), sums AS (
        |  SELECT label, pos, SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) AS s_fp, COUNT(*) AS n
@@ -616,6 +597,124 @@ object Similarity {
   private def sqDistSql =
     "list_sum(list_transform(list_zip(%s, %s), x -> (x[1] - x[2]) * (x[1] - x[2])))"
 
+  // ── Oracle fragments shared by the embedding oracles ────────────────
+
+  /** The embeddings as DOUBLE lists: the DuckDB mirror of `asDouble`. */
+  private def embDoubleSql = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+
+  /** Oracle CTE `e` (vec_id, label, v): every embedding. */
+  private def embCte: String =
+    s"""e AS (
+       |  SELECT vec_id, label, $embDoubleSql AS v FROM embeddings
+       |)""".stripMargin
+
+  /** [[embCte]] plus each vector's 16-dim prefix `v16`. */
+  private def embV16Cte: String =
+    s"""e AS (
+       |  SELECT vec_id, label, $embDoubleSql AS v,
+       |    list_slice($embDoubleSql, 1, 16) AS v16
+       |  FROM embeddings
+       |)""".stripMargin
+
+  /** Oracle CTEs `un` → `mu` → `cents` (label, centroid): each label's
+    * exact fixed-point mean vector over `e`, the IVF coarse quantizer.
+    */
+  private def labelCentroidCtes: String = {
+    val davg6 = "SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) / 1000000.0 / COUNT(x)"
+    s"""un AS (
+       |  SELECT label, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM e
+       |), mu AS (
+       |  SELECT label, i, $davg6 AS mu FROM un GROUP BY label, i
+       |), cents AS (
+       |  SELECT label, list(mu ORDER BY i) AS centroid FROM mu GROUP BY label
+       |)""".stripMargin
+  }
+
+  /** Oracle CTE `probes`: the [[NProbe]] centroids of `cents` nearest to
+    * the query vector `q.qv` by cosine.
+    */
+  private def probesCte: String =
+    s"""probes AS (
+       |  SELECT c.label AS probe_label
+       |  FROM cents c, q
+       |  ORDER BY ${dotSql.format("q.qv", "c.centroid")}
+       |    / (${normSql("q.qv")} * ${normSql("c.centroid")}) DESC, c.label
+       |  LIMIT $NProbe
+       |)""".stripMargin
+
+  /** Oracle CTE `ms`: the PQ subspace ids. */
+  private def msCte: String = s"ms AS (\n  SELECT unnest(range($PqM)) AS m\n)"
+
+  /** Oracle CTEs over `ms` and a `src` relation with list column `v`:
+    * `cb$sfx` (the seed codebook, the first [[PqK]] rows' subvectors),
+    * `sub$sfx` (every row's subvectors) and `dist` (each subvector's
+    * squared distance to every codeword of its subspace).
+    */
+  private def pqCodebookCtes(src: String, v: String, sfx: String, dist: String): String = {
+    val slice = s"list_slice($v, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER))"
+    s"""cb$sfx AS (
+       |  SELECT m, vec_id AS k,
+       |    $slice AS cw
+       |  FROM $src, ms WHERE vec_id < $PqK
+       |), sub$sfx AS (
+       |  SELECT vec_id, m,
+       |    $slice AS sv
+       |  FROM $src, ms
+       |), $dist AS (
+       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
+       |  FROM sub$sfx s JOIN cb$sfx c ON s.m = c.m
+       |)""".stripMargin
+  }
+
+  /** Oracle CTEs over [[embV16Cte]]: `p`, the probe vectors whose ids the
+    * relation `probeIdsSql` yields as `probe_id`, and `sims`, each probe's
+    * full and 16-dim-prefix cosine to every other vector.
+    */
+  private def probeSimsCtes(probeIdsSql: String): String =
+    s"""p AS (
+       |  SELECT e.vec_id AS probe_id, e.v AS pv, e.v16 AS pv16
+       |  FROM e JOIN ($probeIdsSql) pid ON e.vec_id = pid.probe_id
+       |), sims AS (
+       |  SELECT p.probe_id, e.vec_id, e.label,
+       |    ${dotSql.format("p.pv", "e.v")} / (${normSql("p.pv")} * ${normSql("e.v")}) AS sim_full,
+       |    ${dotSql.format("p.pv16", "e.v16")} / (${normSql("p.pv16")} * ${normSql("e.v16")}) AS sim_t16
+       |  FROM p JOIN e ON e.vec_id <> p.probe_id
+       |)""".stripMargin
+
+  /** Oracle CTE `er`: each vector's residual `r` from its label's
+    * centroid in `cents`.
+    */
+  private def residualCte: String =
+    """er AS (
+      |  SELECT e.vec_id, e.label,
+      |    list_transform(list_zip(e.v, c.centroid), x -> x[1] - x[2]) AS r
+      |  FROM e JOIN cents c ON e.label = c.label
+      |)""".stripMargin
+
+  /** Oracle CTEs of one PQ Lloyd step over the seed assignment `a0`:
+    * each (subspace, codeword) cell's exact fixed-point member mean
+    * (`mem` → `sums` → `ref`), the refined codebook `cb1` (an empty cell
+    * keeps its `cb` seed) and the distances `d1` of every `sub` subvector
+    * to it.
+    */
+  private def pqRefineCtes(sub: String, cb: String): String =
+    s"""mem AS (
+       |  SELECT a.m, a.k, unnest(s.sv) AS x, generate_subscripts(s.sv, 1) AS pos
+       |  FROM a0 a JOIN $sub s ON a.vec_id = s.vec_id AND a.m = s.m
+       |), sums AS (
+       |  SELECT m, k, pos, SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) AS s_fp, COUNT(*) AS n
+       |  FROM mem GROUP BY 1, 2, 3
+       |), ref AS (
+       |  SELECT m, k, list(CAST(s_fp AS DOUBLE) / (n * 1000000.0) ORDER BY pos) AS cw
+       |  FROM sums GROUP BY m, k
+       |), cb1 AS (
+       |  SELECT c.m, c.k, COALESCE(r.cw, c.cw) AS cw
+       |  FROM $cb c LEFT JOIN ref r ON c.m = r.m AND c.k = r.k
+       |), d1 AS (
+       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
+       |  FROM $sub s JOIN cb1 c ON s.m = c.m
+       |)""".stripMargin
+
   /** Codegen'd (VecSqDist) — bit-identical to the
     * `aggregate(zip_with(a, b, (x,y) => (x-y)*(x-y)), 0.0, _+_)` HOF
     * fold it replaced; the interpreted HOF was the measured bottleneck
@@ -625,22 +724,7 @@ object Similarity {
     graft.functions.VecSqDist(a, b)
 
   private def q97OracleSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), ms AS (
-       |  SELECT unnest(range($PqM)) AS m
-       |), cb AS (
-       |  SELECT m, vec_id AS k,
-       |    list_slice(v, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS cw
-       |  FROM e, ms WHERE vec_id < $PqK
-       |), sub AS (
-       |  SELECT vec_id, m,
-       |    list_slice(v, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS sv
-       |  FROM e, ms
-       |), d AS (
-       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
-       |  FROM sub s JOIN cb c ON s.m = c.m
-       |), best AS (
+    s"""WITH $embCte, $msCte, ${pqCodebookCtes("e", "v", "", "d")}, best AS (
        |  SELECT vec_id, m, k, dist,
        |    ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
        |  FROM d
@@ -697,22 +781,7 @@ object Similarity {
   }
 
   private def q107OracleSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), ms AS (
-       |  SELECT unnest(range($PqM)) AS m
-       |), cb AS (
-       |  SELECT m, vec_id AS k,
-       |    list_slice(v, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS cw
-       |  FROM e, ms WHERE vec_id < $PqK
-       |), sub AS (
-       |  SELECT vec_id, m,
-       |    list_slice(v, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS sv
-       |  FROM e, ms
-       |), d AS (
-       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
-       |  FROM sub s JOIN cb c ON s.m = c.m
-       |), a0 AS (
+    s"""WITH $embCte, $msCte, ${pqCodebookCtes("e", "v", "", "d")}, a0 AS (
        |  SELECT vec_id, m, k, dist FROM (
        |    SELECT vec_id, m, k, dist,
        |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
@@ -721,22 +790,7 @@ object Similarity {
        |  SELECT vec_id,
        |    CAST(SUM(CAST(FLOOR(dist * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS quant_err_seed
        |  FROM a0 GROUP BY vec_id
-       |), mem AS (
-       |  SELECT a.m, a.k, unnest(s.sv) AS x, generate_subscripts(s.sv, 1) AS pos
-       |  FROM a0 a JOIN sub s ON a.vec_id = s.vec_id AND a.m = s.m
-       |), sums AS (
-       |  SELECT m, k, pos, SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) AS s_fp, COUNT(*) AS n
-       |  FROM mem GROUP BY 1, 2, 3
-       |), ref AS (
-       |  SELECT m, k, list(CAST(s_fp AS DOUBLE) / (n * 1000000.0) ORDER BY pos) AS cw
-       |  FROM sums GROUP BY m, k
-       |), cb1 AS (
-       |  SELECT c.m, c.k, COALESCE(r.cw, c.cw) AS cw
-       |  FROM cb c LEFT JOIN ref r ON c.m = r.m AND c.k = r.k
-       |), d1 AS (
-       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
-       |  FROM sub s JOIN cb1 c ON s.m = c.m
-       |), best1 AS (
+       |), ${pqRefineCtes("sub", "cb")}, best1 AS (
        |  SELECT vec_id, m, k, dist,
        |    ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
        |  FROM d1
@@ -987,47 +1041,42 @@ object Similarity {
     verdict
   }
 
-  private[ops] def q99OracleSql: String = {
-    val davg6 = "SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) / 1000000.0 / COUNT(x)"
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), ms AS (
-       |  SELECT unnest(range($PqM)) AS m
-       |), cb AS (
-       |  SELECT m, vec_id AS k,
-       |    list_slice(v, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS cw
-       |  FROM e, ms WHERE vec_id < $PqK
-       |), sub AS (
-       |  SELECT vec_id, m,
-       |    list_slice(v, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS sv
-       |  FROM e, ms
-       |), dd AS (
-       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
-       |  FROM sub s JOIN cb c ON s.m = c.m
-       |), bestc AS (
+  /** The ADC search tail over an `adc` (vec_id, label, adc_fp)
+    * relation: the 10 nearest by ADC distance, each with its exact cosine
+    * to `q.qv` and, with `candidates`, the number of vectors scored.
+    * Closes the WITH chain.
+    */
+  private def adcTopSql(candidates: Boolean = false): String = {
+    val nCand =
+      if (candidates) "\n  (SELECT CAST(COUNT(DISTINCT vec_id) AS BIGINT) FROM adc) AS n_candidates," else ""
+    s"""shortlist AS (
+       |  SELECT vec_id, label, CAST(adc_fp AS DOUBLE) / 1000000.0 AS adc_dist
+       |  FROM adc ORDER BY adc_fp, vec_id LIMIT 10
+       |)
+       |SELECT s.vec_id, s.label, s.adc_dist,$nCand
+       |  ${dotSql.format("q.qv", "b.v")} / (${normSql("q.qv")} * ${normSql("b.v")}) AS cosine_sim
+       |FROM shortlist s
+       |JOIN e b ON s.vec_id = b.vec_id
+       |CROSS JOIN q
+       |ORDER BY s.adc_dist, s.vec_id""".stripMargin
+  }
+
+  /** q99's oracle; `codesWhere` restricts the code store (q216: to the
+    * survivors of a forget), and `candidates` adds the scored-vector count.
+    */
+  private[ops] def q99OracleSql(codesWhere: String = "", candidates: Boolean = false): String = {
+    s"""WITH $embCte, $msCte, ${pqCodebookCtes("e", "v", "", "dd")}, bestc AS (
        |  SELECT vec_id, m, k,
        |    ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
        |  FROM dd
        |), codes AS (
-       |  SELECT vec_id, m, k FROM bestc WHERE rn = 1
+       |  SELECT vec_id, m, k FROM bestc WHERE rn = 1$codesWhere
        |), q AS (
        |  SELECT v AS qv FROM e WHERE vec_id = 0
        |), lut AS (
        |  SELECT s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS ld
        |  FROM (SELECT m, sv FROM sub WHERE vec_id = 0) s JOIN cb c ON s.m = c.m
-       |), un AS (
-       |  SELECT label, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM e
-       |), mu AS (
-       |  SELECT label, i, $davg6 AS mu FROM un GROUP BY label, i
-       |), cents AS (
-       |  SELECT label, list(mu ORDER BY i) AS centroid FROM mu GROUP BY label
-       |), probes AS (
-       |  SELECT c.label AS probe_label
-       |  FROM cents c, q
-       |  ORDER BY ${dotSql.format("q.qv", "c.centroid")}
-       |    / (${normSql("q.qv")} * ${normSql("c.centroid")}) DESC, c.label
-       |  LIMIT $NProbe
-       |), adc AS (
+       |), $labelCentroidCtes, $probesCte, adc AS (
        |  SELECT e.vec_id, e.label,
        |    CAST(SUM(CAST(FLOOR(l.ld * 1000000.0) AS BIGINT)) AS BIGINT) AS adc_fp
        |  FROM e
@@ -1035,16 +1084,7 @@ object Similarity {
        |  JOIN lut l ON c.m = l.m AND c.k = l.k
        |  WHERE e.vec_id <> 0 AND e.label IN (SELECT probe_label FROM probes)
        |  GROUP BY 1, 2
-       |), shortlist AS (
-       |  SELECT vec_id, label, CAST(adc_fp AS DOUBLE) / 1000000.0 AS adc_dist
-       |  FROM adc ORDER BY adc_fp, vec_id LIMIT 10
-       |)
-       |SELECT s.vec_id, s.label, s.adc_dist,
-       |  ${dotSql.format("q.qv", "b.v")} / (${normSql("q.qv")} * ${normSql("b.v")}) AS cosine_sim
-       |FROM shortlist s
-       |JOIN e b ON s.vec_id = b.vec_id
-       |CROSS JOIN q
-       |ORDER BY s.adc_dist, s.vec_id""".stripMargin
+       |), ${adcTopSql(candidates)}""".stripMargin
   }
 
   /** q99 — IVF-PQ ANN search, the billion-scale query path (Jégou et al.
@@ -1059,7 +1099,7 @@ object Similarity {
     * float vectors for 10 rows, and every join here is a broadcast of
     * O(M×K) or O(k) state — the corpus-sized side never shuffles.
     */
-  val q99 = Q("q99_ivf_pq_search", q99OracleSql) { (s, dir) =>
+  val q99 = Q("q99_ivf_pq_search", q99OracleSql()) { (s, dir) =>
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val codes = s.read.parquet(buildPqIndex(s, dir))
     val cents = s.read.parquet(buildIvfIndex(s, dir))
@@ -1234,33 +1274,7 @@ object Similarity {
   }
 
   private def q106OracleSql: String = {
-    val davg6 = "SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) / 1000000.0 / COUNT(x)"
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), ms AS (
-       |  SELECT unnest(range($PqM)) AS m
-       |), un AS (
-       |  SELECT label, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM e
-       |), mu AS (
-       |  SELECT label, i, $davg6 AS mu FROM un GROUP BY label, i
-       |), cents AS (
-       |  SELECT label, list(mu ORDER BY i) AS centroid FROM mu GROUP BY label
-       |), er AS (
-       |  SELECT e.vec_id, e.label,
-       |    list_transform(list_zip(e.v, c.centroid), x -> x[1] - x[2]) AS r
-       |  FROM e JOIN cents c ON e.label = c.label
-       |), cbr AS (
-       |  SELECT m, vec_id AS k,
-       |    list_slice(r, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS cw
-       |  FROM er, ms WHERE vec_id < $PqK
-       |), subr AS (
-       |  SELECT vec_id, m,
-       |    list_slice(r, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS sv
-       |  FROM er, ms
-       |), ddr AS (
-       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
-       |  FROM subr s JOIN cbr c ON s.m = c.m
-       |), bestc AS (
+    s"""WITH $embCte, $msCte, $labelCentroidCtes, $residualCte, ${pqCodebookCtes("er", "r", "r", "ddr")}, bestc AS (
        |  SELECT vec_id, m, k,
        |    ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
        |  FROM ddr
@@ -1268,13 +1282,7 @@ object Similarity {
        |  SELECT vec_id, m, k FROM bestc WHERE rn = 1
        |), q AS (
        |  SELECT v AS qv FROM e WHERE vec_id = 0
-       |), probes AS (
-       |  SELECT c.label AS probe_label
-       |  FROM cents c, q
-       |  ORDER BY ${dotSql.format("q.qv", "c.centroid")}
-       |    / (${normSql("q.qv")} * ${normSql("c.centroid")}) DESC, c.label
-       |  LIMIT $NProbe
-       |), rq AS (
+       |), $probesCte, rq AS (
        |  SELECT p.probe_label AS cell,
        |    list_transform(list_zip(q.qv, c.centroid), x -> x[1] - x[2]) AS rqv
        |  FROM probes p JOIN cents c ON p.probe_label = c.label CROSS JOIN q
@@ -1292,16 +1300,7 @@ object Similarity {
        |  JOIN lut l ON e.label = l.cell AND c.m = l.m AND c.k = l.k
        |  WHERE e.vec_id <> 0
        |  GROUP BY 1, 2
-       |), shortlist AS (
-       |  SELECT vec_id, label, CAST(adc_fp AS DOUBLE) / 1000000.0 AS adc_dist
-       |  FROM adc ORDER BY adc_fp, vec_id LIMIT 10
-       |)
-       |SELECT s.vec_id, s.label, s.adc_dist,
-       |  ${dotSql.format("q.qv", "b.v")} / (${normSql("q.qv")} * ${normSql("b.v")}) AS cosine_sim
-       |FROM shortlist s
-       |JOIN e b ON s.vec_id = b.vec_id
-       |CROSS JOIN q
-       |ORDER BY s.adc_dist, s.vec_id""".stripMargin
+       |), ${adcTopSql()}""".stripMargin
   }
 
   /** q106 — TRUE IVFADC (Jégou et al. 2011, §IV): like q99 but the PQ
@@ -1368,9 +1367,7 @@ object Similarity {
     }.mkString(" +\n")
 
   private def q98OracleSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), bk AS (
+    s"""WITH $embCte, bk AS (
        |  SELECT vec_id, label, v,
        |$bucketSumSql AS bucket
        |  FROM e
@@ -1515,9 +1512,7 @@ object Similarity {
        |)""".stripMargin
 
   private def q103OracleSql: String = {
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), a0 AS (
+    s"""WITH $embCte, a0 AS (
        |  SELECT vec_id, label AS cluster FROM e
        |), ${centroidCtes("a0", "0")},
        |${assignCtes("c0", "1")},
@@ -1569,9 +1564,7 @@ object Similarity {
   val SemDupThreshold = 0.35
 
   private def q100OracleSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), p AS (
+    s"""WITH $embCte, p AS (
        |  SELECT a.vec_id, a.label, b.vec_id AS b_id,
        |    ${dotSql.format("a.v", "b.v")} / (${normSql("a.v")} * ${normSql("b.v")}) AS sim
        |  FROM e a JOIN e b ON a.label = b.label AND b.vec_id < a.vec_id
@@ -1653,19 +1646,13 @@ object Similarity {
   /** Learned-cluster count for the oracled SemDeDup run (q104). */
   val SemK = 8
 
-  private def q104OracleSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), a0 AS (
-       |  SELECT vec_id,
-       |    CAST(${Dedup.h60Sql("'sem:' || CAST(vec_id AS VARCHAR)")} % $SemK AS BIGINT) AS cluster
-       |  FROM e
-       |), ${centroidCtes("a0", "0")},
-       |${assignCtes("c0", "1")},
-       |${centroidCtes("asg1", "1")},
-       |${assignCtes("c1", "2")},
+  /** q104's oracle; `memberWhere` filters the vectors deduplicated
+    * (q208: the survivors of a forget).
+    */
+  private[ops] def q104OracleSql(memberWhere: String = ""): String =
+    s"""WITH $frozenAsgChainSql,
        |m AS (
-       |  SELECT a.vec_id, a.cluster, e.v FROM asg2 a JOIN e ON a.vec_id = e.vec_id
+       |  SELECT a.vec_id, a.cluster, e.v FROM asg2 a JOIN e ON a.vec_id = e.vec_id$memberWhere
        |), p AS (
        |  SELECT a.vec_id, b.vec_id AS b_id,
        |    ${dotSql.format("a.v", "b.v")} / (${normSql("a.v")} * ${normSql("b.v")}) AS sim
@@ -1694,7 +1681,7 @@ object Similarity {
     * convergence is safe: a converged round reproduces its assignment,
     * which is exactly what the unrolled chain computes.
     */
-  val q104 = Q("q104_semdedup_learned", q104OracleSql) { (s, dir) =>
+  val q104 = Q("q104_semdedup_learned", q104OracleSql()) { (s, dir) =>
     val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
     semanticDedup(e, k = SemK, maxIters = 2)
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
@@ -1733,18 +1720,7 @@ object Similarity {
     * trained embeddings front-load variance and would score high.)
     */
   val q112 = Q("q112_matryoshka_recall",
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-       |    list_slice(list_transform(embedding, x -> CAST(x AS DOUBLE)), 1, 16) AS v16
-       |  FROM embeddings
-       |), p AS (
-       |  SELECT vec_id AS probe_id, v AS pv, v16 AS pv16 FROM e WHERE vec_id < 10
-       |), sims AS (
-       |  SELECT p.probe_id, e.vec_id,
-       |    ${dotSql.format("p.pv", "e.v")} / (${normSql("p.pv")} * ${normSql("e.v")}) AS sim_full,
-       |    ${dotSql.format("p.pv16", "e.v16")} / (${normSql("p.pv16")} * ${normSql("e.v16")}) AS sim_t16
-       |  FROM p JOIN e ON e.vec_id <> p.probe_id
-       |), rf AS (
+    s"""WITH $embV16Cte, ${probeSimsCtes("SELECT vec_id AS probe_id FROM e WHERE vec_id < 10")}, rf AS (
        |  SELECT probe_id, vec_id,
        |    ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim_full DESC, vec_id) AS rn
        |  FROM sims
@@ -1805,18 +1781,7 @@ object Similarity {
     * stage 1, the rerank join, and the exact baseline.
     */
   val q114 = Q("q114_two_stage_retrieval",
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-       |    list_slice(list_transform(embedding, x -> CAST(x AS DOUBLE)), 1, 16) AS v16
-       |  FROM embeddings
-       |), p AS (
-       |  SELECT vec_id AS probe_id, v AS pv, v16 AS pv16 FROM e WHERE vec_id < 10
-       |), sims AS (
-       |  SELECT p.probe_id, e.vec_id,
-       |    ${dotSql.format("p.pv", "e.v")} / (${normSql("p.pv")} * ${normSql("e.v")}) AS sim_full,
-       |    ${dotSql.format("p.pv16", "e.v16")} / (${normSql("p.pv16")} * ${normSql("e.v16")}) AS sim_t16
-       |  FROM p JOIN e ON e.vec_id <> p.probe_id
-       |), short AS (
+    s"""WITH $embV16Cte, ${probeSimsCtes("SELECT vec_id AS probe_id FROM e WHERE vec_id < 10")}, short AS (
        |  SELECT probe_id, vec_id, sim_full FROM (
        |    SELECT probe_id, vec_id, sim_full,
        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim_t16 DESC, vec_id) AS rn
@@ -1874,35 +1839,7 @@ object Similarity {
     * `retrievalChain`'s probe-table argument exactly.
     */
   private def chainOracleSql(probeIdsSql: String): String = {
-    val davg6 = "SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) / 1000000.0 / COUNT(x)"
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-       |    list_slice(list_transform(embedding, x -> CAST(x AS DOUBLE)), 1, 16) AS v16
-       |  FROM embeddings
-       |), ms AS (
-       |  SELECT unnest(range($PqM)) AS m
-       |), un AS (
-       |  SELECT label, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM e
-       |), mu AS (
-       |  SELECT label, i, $davg6 AS mu FROM un GROUP BY label, i
-       |), cents AS (
-       |  SELECT label, list(mu ORDER BY i) AS centroid FROM mu GROUP BY label
-       |), er AS (
-       |  SELECT e.vec_id, e.label,
-       |    list_transform(list_zip(e.v, c.centroid), x -> x[1] - x[2]) AS r
-       |  FROM e JOIN cents c ON e.label = c.label
-       |), cbr AS (
-       |  SELECT m, vec_id AS k,
-       |    list_slice(r, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS cw
-       |  FROM er, ms WHERE vec_id < $PqK
-       |), subr AS (
-       |  SELECT vec_id, m,
-       |    list_slice(r, CAST(m * $PqSubDim + 1 AS INTEGER), CAST(m * $PqSubDim + $PqSubDim AS INTEGER)) AS sv
-       |  FROM er, ms
-       |), ddr AS (
-       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
-       |  FROM subr s JOIN cbr c ON s.m = c.m
-       |), a0 AS (
+    s"""WITH $embV16Cte, $msCte, $labelCentroidCtes, $residualCte, ${pqCodebookCtes("er", "r", "r", "ddr")}, a0 AS (
        |  SELECT vec_id, m, k, dist FROM (
        |    SELECT vec_id, m, k, dist,
        |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
@@ -1911,22 +1848,7 @@ object Similarity {
        |  SELECT vec_id,
        |    CAST(SUM(CAST(FLOOR(dist * 1000000.0) AS BIGINT)) AS BIGINT) AS err_seed_fp
        |  FROM a0 GROUP BY vec_id
-       |), mem AS (
-       |  SELECT a.m, a.k, unnest(s.sv) AS x, generate_subscripts(s.sv, 1) AS pos
-       |  FROM a0 a JOIN subr s ON a.vec_id = s.vec_id AND a.m = s.m
-       |), sums AS (
-       |  SELECT m, k, pos, SUM(CAST(FLOOR(x * 1000000.0) AS BIGINT)) AS s_fp, COUNT(*) AS n
-       |  FROM mem GROUP BY 1, 2, 3
-       |), ref AS (
-       |  SELECT m, k, list(CAST(s_fp AS DOUBLE) / (n * 1000000.0) ORDER BY pos) AS cw
-       |  FROM sums GROUP BY m, k
-       |), cb1 AS (
-       |  SELECT c.m, c.k, COALESCE(r.cw, c.cw) AS cw
-       |  FROM cbr c LEFT JOIN ref r ON c.m = r.m AND c.k = r.k
-       |), d1 AS (
-       |  SELECT s.vec_id, s.m, c.k, ${sqDistSql.format("s.sv", "c.cw")} AS dist
-       |  FROM subr s JOIN cb1 c ON s.m = c.m
-       |), best1 AS (
+       |), ${pqRefineCtes("subr", "cbr")}, best1 AS (
        |  SELECT vec_id, m, k, dist FROM (
        |    SELECT vec_id, m, k, dist,
        |      ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, k) AS rn
@@ -1935,15 +1857,7 @@ object Similarity {
        |  SELECT vec_id,
        |    CAST(SUM(CAST(FLOOR(dist * 1000000.0) AS BIGINT)) AS BIGINT) AS err_trained_fp
        |  FROM best1 GROUP BY vec_id
-       |), p AS (
-       |  SELECT e.vec_id AS probe_id, e.v AS pv, e.v16 AS pv16
-       |  FROM e JOIN ($probeIdsSql) pid ON e.vec_id = pid.probe_id
-       |), sims AS (
-       |  SELECT p.probe_id, e.vec_id, e.label,
-       |    ${dotSql.format("p.pv", "e.v")} / (${normSql("p.pv")} * ${normSql("e.v")}) AS sim_full,
-       |    ${dotSql.format("p.pv16", "e.v16")} / (${normSql("p.pv16")} * ${normSql("e.v16")}) AS sim_t16
-       |  FROM p JOIN e ON e.vec_id <> p.probe_id
-       |), short AS (
+       |), ${probeSimsCtes(probeIdsSql)}, short AS (
        |  SELECT probe_id, vec_id, label FROM (
        |    SELECT probe_id, vec_id, label,
        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim_t16 DESC, vec_id) AS rn
@@ -2130,11 +2044,9 @@ object Similarity {
     * forgotten vectors against exactly this frozen quantizer.
     */
   private[ops] def frozenAsgChainSql: String =
-    s"""e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), a0 AS (
+    s"""$embCte, a0 AS (
        |  SELECT vec_id,
-       |    CAST(${Dedup.h60Sql("'sem:' || CAST(vec_id AS VARCHAR)")} % $SemK AS BIGINT) AS cluster
+       |    CAST(${OracleSql.h60("'sem:' || CAST(vec_id AS VARCHAR)")} % $SemK AS BIGINT) AS cluster
        |  FROM e
        |), ${centroidCtes("a0", "0")},
        |${assignCtes("c0", "1")},
@@ -2145,7 +2057,7 @@ object Similarity {
     * shared with q132, which aggregates the same drift table.
     */
   private def q130OracleBody: String = {
-    val parity = s"${Dedup.h60Sql("'snap:' || CAST(vec_id AS VARCHAR)")} % 2"
+    val parity = s"${OracleSql.h60("'snap:' || CAST(vec_id AS VARCHAR)")} % 2"
     s"""WITH $frozenAsgChainSql,
        |asg AS (
        |  SELECT vec_id, CAST(cluster AS BIGINT) AS cluster FROM asg2
@@ -2346,9 +2258,7 @@ object Similarity {
     * lexical chain in one WITH.
     */
   def semStrongCtesSql: String =
-    s"""se AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), sp AS (
+    s"""s$embCte, sp AS (
        |  SELECT a.vec_id, b.vec_id AS b_id,
        |    ${dotSql.format("a.v", "b.v")} / (${normSql("a.v")} * ${normSql("b.v")}) AS sim
        |  FROM se a JOIN se b ON a.label = b.label AND b.vec_id < a.vec_id
@@ -2357,9 +2267,7 @@ object Similarity {
        |)""".stripMargin
 
   private def q145OracleSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-       |), p AS (
+    s"""WITH $embCte, p AS (
        |  SELECT a.vec_id, b.vec_id AS b_id,
        |    ${dotSql.format("a.v", "b.v")} / (${normSql("a.v")} * ${normSql("b.v")}) AS sim
        |  FROM e a JOIN e b ON a.label = b.label AND b.vec_id < a.vec_id
@@ -2384,7 +2292,7 @@ object Similarity {
        |SELECT t.split_a, t.split_b,
        |  CAST(COUNT(*) AS BIGINT) AS n_pairs,
        |  MAX(dc.n_docs) AS n_docs,
-       |  FLOOR(MAX(t.sim) * 10000.0 + 0.5) / 10000.0 AS max_sim,
+       |  ${OracleSql.round4("MAX(t.sim)")} AS max_sim,
        |  (t.split_a <> t.split_b) AS is_leak
        |FROM tagged t JOIN dcount dc ON t.split_a = dc.split_a AND t.split_b = dc.split_b
        |GROUP BY t.split_a, t.split_b
@@ -2483,9 +2391,9 @@ object Similarity {
         |         - len(list_filter(hs, h -> h % 64 = d AND ((h >> 6) & 1) = 0)) AS DOUBLE))"""
         .stripMargin
     s"""tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), hsx AS (
-       |  SELECT doc_id, list_transform(t, s -> ${Dedup.h60Sql("s")}) AS hs
+       |  SELECT doc_id, list_transform(t, s -> ${OracleSql.h60("s")}) AS hs
        |  FROM tk WHERE len(t) > 0
        |), vec AS (
        |  SELECT doc_id, $vecExpr AS v FROM hsx
@@ -2533,17 +2441,18 @@ object Similarity {
 
   // ── q178: per-source embedding-space diversity (centroid identity) ────
 
-  private def q178OracleSql: String = {
+  /** q178's oracle over a `corpus` relation (the survivors for q203). */
+  private[ops] def q178OracleSql(corpus: String = "documents"): String = {
     val vecExpr =
       """list_transform(generate_series(0, 63), d ->
         |      CAST(len(list_filter(hs, h -> h % 64 = d AND ((h >> 6) & 1) = 1))
         |         - len(list_filter(hs, h -> h % 64 = d AND ((h >> 6) & 1) = 0)) AS BIGINT))"""
         .stripMargin
     s"""WITH tk AS (
-       |  SELECT doc_id, source, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-       |  FROM documents
+       |  SELECT doc_id, source, ${OracleSql.tokens()} AS t
+       |  FROM $corpus
        |), hsx AS (
-       |  SELECT doc_id, source, list_transform(t, s -> ${Dedup.h60Sql("s")}) AS hs
+       |  SELECT doc_id, source, list_transform(t, s -> ${OracleSql.h60("s")}) AS hs
        |  FROM tk WHERE len(t) > 0
        |), vec AS (
        |  SELECT doc_id, source, $vecExpr AS v FROM hsx
@@ -2582,7 +2491,7 @@ object Similarity {
     * posexplode → (source, dim) partial sums is map-side combinable with
     * |sources|·64 rows of state; the norms rollup rides the same scan.
     */
-  val q178 = Q("q178_embedding_diversity", q178OracleSql) { (s, dir) =>
+  val q178 = Q("q178_embedding_diversity", q178OracleSql()) { (s, dir) =>
     diversityOf(Catalog.table(s, dir, "documents"))
   }
 

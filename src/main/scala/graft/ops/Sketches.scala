@@ -125,12 +125,12 @@ object Sketches {
     * same way. Kept adjacent to the Scala so the two register pipelines
     * stay textually in sync.
     */
-  private def regSql(keyExpr: String, groupBy: String, p: Int): String = {
-    val h = Dedup.h60Sql(keyExpr)
+  private def regSql(keyExpr: String, groupBy: String, p: Int, events: String = "events"): String = {
+    val h = OracleSql.h60(keyExpr)
     s"""SELECT $groupBy, $h % ${1L << p} AS bucket,
        |    MAX(CASE WHEN $h // ${1L << p} = 0 THEN ${maxRho(p)}
        |             ELSE ${maxRho(p)} - length(bin($h // ${1L << p})) END) AS r
-       |  FROM events GROUP BY ALL""".stripMargin
+       |  FROM $events GROUP BY ALL""".stripMargin
   }
 
   private def foldDenom(p: Int): String =
@@ -158,21 +158,26 @@ object Sketches {
     * |types| × 256 register rows; the exact COUNT(DISTINCT) twin it
     * replaces at scale shuffles every distinct key.
     */
-  val q108 = Q("q108_hll_distinct",
+  /** q108's oracle over an `events` relation (q224: a retention
+    * window).
+    */
+  private def q108OracleSql(events: String = "events"): String =
     s"""WITH reg AS (
-       |  ${regSql(userDayKeySql, "event_type", 8)}
+       |  ${regSql(userDayKeySql, "event_type", 8, events)}
        |), fold AS (
        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_buckets,
        |    ${foldDenom(8)} AS reg_denom
        |  FROM reg GROUP BY event_type
        |), ex AS (
        |  SELECT event_type, CAST(COUNT(DISTINCT $userDayKeySql) AS BIGINT) AS n_exact
-       |  FROM events GROUP BY event_type
+       |  FROM $events GROUP BY event_type
        |)
        |SELECT f.event_type, x.n_exact, f.n_buckets, f.reg_denom,
        |  ${estimateSql(8)} AS hll_estimate
        |FROM fold f JOIN ex x USING (event_type)
-       |ORDER BY event_type""".stripMargin) { (s, dir) =>
+       |ORDER BY event_type""".stripMargin
+
+  val q108 = Q("q108_hll_distinct", q108OracleSql()) { (s, dir) =>
     val e = ev(s, dir)
     val key = userDayKeyCol
     val est = hllEstimate(hllRegisters(e, Seq("event_type"), key, 8), Seq("event_type"), 8)
@@ -255,7 +260,7 @@ object Sketches {
     */
   val q110 = Q("q110_kmv_overlap",
     s"""WITH dk AS (
-       |  SELECT DISTINCT event_type, ${Dedup.h60Sql(userDayKeySql)} AS h FROM events
+       |  SELECT DISTINCT event_type, ${OracleSql.h60(userDayKeySql)} AS h FROM events
        |), sk AS (
        |  SELECT event_type, list_slice(list_sort(list(h)), 1, $KmvK) AS mins,
        |    CAST(COUNT(*) AS BIGINT) AS nd
@@ -390,9 +395,8 @@ object Sketches {
     * only one that can age.
     */
   val q224 = Q("q224_hll_window",
-    q108.oracle.get.replace("FROM events",
-      "FROM (SELECT * FROM events WHERE event_id >= " +
-        "(SELECT (MAX(event_id) // 4) * 2 FROM events))")) { (s, dir) =>
+    q108OracleSql("(SELECT * FROM events WHERE event_id >= " +
+      "(SELECT (MAX(event_id) // 4) * 2 FROM events))")) { (s, dir) =>
     val (deltas, cut2) = buildHllTtlStore(s, dir)
     val est = graft.streaming.SketchStream.estimatesWindowed(
       s, deltas, lo = 2L, p = 8)

@@ -17,8 +17,8 @@ object TextOps {
 
   private def docs(s: SparkSession, dir: String) = Catalog.table(s, dir, "documents")
 
-  /** Word tokens — lowercase alphanumeric runs. Mirrors DuckDB
-    * `regexp_extract_all(lower(text), '[a-z0-9]+')`.
+  /** Word tokens — lowercase alphanumeric runs. Mirrors the oracles'
+    * one tokenizer, `OracleSql.tokens`.
     */
   def tokens(text: Column): Column = regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
 
@@ -39,24 +39,29 @@ object TextOps {
   /** q50 — token/character statistics + quality score (length, punctuation
     * ratio, stopword ratio — the classic pretraining quality heuristics).
     */
-  val q50 = Q("q50_text_stats",
+  /** Oracle fragment: how many of a document's tokens are in `words`. */
+  private def wordHitsSql(words: Seq[String]): String =
+    s"len(list_filter(${OracleSql.tokens()}, t -> list_contains([${words.map("'" + _ + "'").mkString(",")}], t)))"
+
+  private def q50OracleSql: String = {
+    val nTokens = s"len(${OracleSql.tokens()})"
+    val nPunct = "length(regexp_replace(text, '[^.!?,;:]', '', 'g'))"
+    val nStop = wordHitsSql(allStop)
     s"""SELECT doc_id, n_chars,
        |  length(text) AS text_len,
-       |  len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tokens,
-       |  length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct,
-       |  FLOOR(CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE)
-       |    / length(text) * 10000.0 + 0.5) / 10000.0 AS punct_ratio,
-       |  len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |      t -> list_contains([${allStop.map("'" + _ + "'").mkString(",")}], t))) AS n_stopwords,
-       |  CASE WHEN len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0 THEN
-       |    FLOOR(CAST(len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |        t -> list_contains([${allStop.map("'" + _ + "'").mkString(",")}], t))) AS DOUBLE)
-       |      / len(regexp_extract_all(lower(text), '[a-z0-9]+')) * 10000.0 + 0.5) / 10000.0
+       |  $nTokens AS n_tokens,
+       |  $nPunct AS n_punct,
+       |  ${OracleSql.round4(s"CAST($nPunct AS DOUBLE) / length(text)")} AS punct_ratio,
+       |  $nStop AS n_stopwords,
+       |  CASE WHEN $nTokens > 0 THEN ${OracleSql.round4(s"CAST($nStop AS DOUBLE) / $nTokens")}
        |    ELSE 0.0 END AS stopword_ratio,
        |  (length(text) >= 100 AND length(text) <= 20000
-       |    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) >= 20) AS passes_length_filter
+       |    AND $nTokens >= 20) AS passes_length_filter
        |FROM documents
-       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+       |ORDER BY doc_id""".stripMargin
+  }
+
+  val q50 = Q("q50_text_stats", q50OracleSql) { (s, dir) =>
     textStats(docs(s, dir)).orderBy("doc_id")
   }
 
@@ -86,44 +91,23 @@ object TextOps {
     * synthetic corpus is English-vocabulary throughout, so the heuristic
     * predicts 'en' — the oracle verifies the operator, not the labels.)
     */
-  val q51 = Q("q51_lang_id",
+  private def q51OracleSql: String = {
+    val (en, es, de, fr) = (wordHitsSql(enStop), wordHitsSql(esStop), wordHitsSql(deStop), wordHitsSql(frStop))
     s"""SELECT doc_id, lang AS labeled_lang,
-       |  len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |    t -> list_contains([${enStop.map("'" + _ + "'").mkString(",")}], t))) AS en_hits,
-       |  len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |    t -> list_contains([${esStop.map("'" + _ + "'").mkString(",")}], t))) AS es_hits,
-       |  len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |    t -> list_contains([${deStop.map("'" + _ + "'").mkString(",")}], t))) AS de_hits,
-       |  len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |    t -> list_contains([${frStop.map("'" + _ + "'").mkString(",")}], t))) AS fr_hits,
+       |  $en AS en_hits, $es AS es_hits, $de AS de_hits, $fr AS fr_hits,
        |  CASE
        |    WHEN length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) > 0 THEN 'zh'
-       |    WHEN len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |      t -> list_contains([${enStop.map("'" + _ + "'").mkString(",")}], t))) >=
-       |      GREATEST(
-       |        len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |          t -> list_contains([${esStop.map("'" + _ + "'").mkString(",")}], t))),
-       |        len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |          t -> list_contains([${deStop.map("'" + _ + "'").mkString(",")}], t))),
-       |        len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |          t -> list_contains([${frStop.map("'" + _ + "'").mkString(",")}], t))), 1) THEN 'en'
-       |    WHEN len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |      t -> list_contains([${esStop.map("'" + _ + "'").mkString(",")}], t))) >=
-       |      GREATEST(
-       |        len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |          t -> list_contains([${deStop.map("'" + _ + "'").mkString(",")}], t))),
-       |        len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |          t -> list_contains([${frStop.map("'" + _ + "'").mkString(",")}], t))), 1) THEN 'es'
-       |    WHEN len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |      t -> list_contains([${deStop.map("'" + _ + "'").mkString(",")}], t))) >=
-       |      GREATEST(len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |          t -> list_contains([${frStop.map("'" + _ + "'").mkString(",")}], t))), 1) THEN 'de'
-       |    WHEN len(list_filter(regexp_extract_all(lower(text), '[a-z0-9]+'),
-       |      t -> list_contains([${frStop.map("'" + _ + "'").mkString(",")}], t))) >= 1 THEN 'fr'
+       |    WHEN $en >= GREATEST($es, $de, $fr, 1) THEN 'en'
+       |    WHEN $es >= GREATEST($de, $fr, 1) THEN 'es'
+       |    WHEN $de >= GREATEST($fr, 1) THEN 'de'
+       |    WHEN $fr >= 1 THEN 'fr'
        |    ELSE 'unknown'
        |  END AS predicted_lang
        |FROM documents
-       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+       |ORDER BY doc_id""".stripMargin
+  }
+
+  val q51 = Q("q51_lang_id", q51OracleSql) { (s, dir) =>
     val t = col("text")
     val en = wordHits(t, enStop); val es = wordHits(t, esStop)
     val de = wordHits(t, deStop); val fr = wordHits(t, frStop)
@@ -148,8 +132,8 @@ object TextOps {
 
   /** q52 — md5 content fingerprint over normalized text (oracled). */
   val q52 = Q("q52_fingerprint_md5",
-    """SELECT doc_id,
-      |  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
+    s"""SELECT doc_id,
+      |  md5(${OracleSql.normalized()}) AS fingerprint
       |FROM documents
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     docs(s, dir).select(
@@ -164,7 +148,7 @@ object TextOps {
     */
   val q53 = Q("q53_fingerprint_rolling",
     s"""SELECT doc_id,
-       |  ${RollingHash.oracleSql("trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))")} AS fingerprint,
+       |  ${RollingHash.oracleSql(OracleSql.normalized())} AS fingerprint,
        |  ${RollingHash.oracleSql("text")} AS fingerprint_raw
        |FROM documents
        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
@@ -226,16 +210,16 @@ object TextOps {
 
   /** Oracle fragment: q55's split CTE body over `documents` — (doc_id, split). */
   def splitAssignmentSql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       |    CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val' ELSE 'test' END AS split
       |  FROM (SELECT doc_id,
-      |    CAST('0x' || substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 15) AS BIGINT) % 100 AS b
+      |    ${OracleSql.h60(OracleSql.normalized())} % 100 AS b
       |    FROM documents)""".stripMargin
 
   val q55 = Q("q55_dataset_split",
-    """WITH assigned AS (
+    s"""WITH assigned AS (
       |  SELECT doc_id,
-      |    CAST('0x' || substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 15) AS BIGINT) % 100 AS bucket
+      |    ${OracleSql.h60(OracleSql.normalized())} % 100 AS bucket
       |  FROM documents
       |)
       |SELECT
@@ -267,15 +251,7 @@ object TextOps {
     * one task. PlanSpec pins the no-SinglePartition property.
     */
   val q56 = Q("q56_pack_sequences",
-    """WITH toks AS (
-      |  SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tokens
-      |  FROM documents
-      |), packed AS (
-      |  SELECT doc_id, n_tokens,
-      |    CAST(FLOOR((SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-      |      - n_tokens) / 2048.0) AS BIGINT) AS pack_id
-      |  FROM toks
-      |)
+    s"""WITH ${OracleSql.packedCtes("documents")}
       |SELECT pack_id,
       |  COUNT(*) AS n_docs,
       |  CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens,
@@ -301,8 +277,8 @@ object TextOps {
     * ratio and the most-frequent-token share, per document.
     */
   val q57 = Q("q57_repetition_stats",
-    """WITH ex AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+    s"""WITH ex AS (
+      |  SELECT doc_id, unnest(${OracleSql.tokens()}) AS tok
       |  FROM documents
       |), counts AS (
       |  SELECT doc_id, tok, COUNT(*) AS c FROM ex GROUP BY doc_id, tok
@@ -314,8 +290,8 @@ object TextOps {
       |  FROM counts GROUP BY doc_id
       |)
       |SELECT doc_id, n_tokens, n_distinct, top_token_count,
-      |  FLOOR(CAST(n_distinct AS DOUBLE) / n_tokens * 10000.0 + 0.5) / 10000.0 AS type_token_ratio,
-      |  FLOOR(CAST(top_token_count AS DOUBLE) / n_tokens * 10000.0 + 0.5) / 10000.0 AS top_token_share
+      |  ${OracleSql.round4("CAST(n_distinct AS DOUBLE) / n_tokens")} AS type_token_ratio,
+      |  ${OracleSql.round4("CAST(top_token_count AS DOUBLE) / n_tokens")} AS top_token_share
       |FROM agg
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val counts = docs(s, dir)
@@ -338,9 +314,9 @@ object TextOps {
     * global-window total.
     */
   val q58 = Q("q58_source_mixture",
-    """WITH s AS (
+    s"""WITH s AS (
       |  SELECT source, COUNT(*) AS n_docs,
-      |    CAST(SUM(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT) AS n_tokens
+      |    CAST(SUM(len(${OracleSql.tokens()})) AS BIGINT) AS n_tokens
       |  FROM documents GROUP BY source
       |)
       |SELECT source, n_docs, n_tokens,
@@ -372,12 +348,12 @@ object TextOps {
     * oracle shares the exact constants without hand-copying.
     */
   val q62 = Q("q62_mixture_sampling",
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT source,
-      |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS toks,
-      |    1000 + CAST('0x' || substr(md5(source), 1, 15) AS BIGINT) % 9000 AS rate_bp,
-      |    (CAST('0x' || substr(md5('sample:' || source || ':' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000)
-      |      < 1000 + CAST('0x' || substr(md5(source), 1, 15) AS BIGINT) % 9000 AS kept
+      |    len(${OracleSql.tokens()}) AS toks,
+      |    1000 + ${OracleSql.h60("source")} % 9000 AS rate_bp,
+      |    (${OracleSql.h60("'sample:' || source || ':' || CAST(doc_id AS VARCHAR)")} % 10000)
+      |      < 1000 + ${OracleSql.h60("source")} % 9000 AS kept
       |  FROM documents
       |)
       |SELECT source,
@@ -385,8 +361,7 @@ object TextOps {
       |  COUNT(*) AS n_docs,
       |  CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
       |  CAST(SUM(CASE WHEN kept THEN toks ELSE 0 END) AS BIGINT) AS kept_tokens,
-      |  FLOOR(CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS DOUBLE)
-      |    / COUNT(*) * 10000.0 + 0.5) / 10000.0 AS kept_share
+      |  ${OracleSql.round4("CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)")} AS kept_share
       |FROM d
       |GROUP BY source
       |ORDER BY source""".stripMargin) { (s, dir) =>
@@ -414,8 +389,8 @@ object TextOps {
     * vocabulary.
     */
   val q63 = Q("q63_heavy_hitters",
-    """WITH ex AS (
-      |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+    s"""WITH ex AS (
+      |  SELECT unnest(${OracleSql.tokens()}) AS tok
       |  FROM documents
       |)
       |SELECT tok, COUNT(*) AS n
@@ -445,8 +420,8 @@ object TextOps {
     * only shuffles are the three keyed aggregates.
     */
   val q66 = Q("q66_tfidf_salience",
-    """WITH tk AS (
-      |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+    s"""WITH tk AS (
+      |  SELECT doc_id, unnest(${OracleSql.tokens()}) AS tok
       |  FROM documents
       |), tf AS (
       |  SELECT doc_id, tok, COUNT(*) AS tf FROM tk GROUP BY doc_id, tok
@@ -495,7 +470,7 @@ object TextOps {
     */
   val q64 = Q("q64_count_min_sketch",
     s"""WITH ex AS (
-       |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+       |  SELECT unnest(${OracleSql.tokens()}) AS tok
        |  FROM documents
        |), vocab AS (
        |  SELECT tok, COUNT(*) AS c FROM ex GROUP BY tok
@@ -503,7 +478,7 @@ object TextOps {
        |  SELECT * FROM (VALUES (0),(1),(2),(3)) r(j)
        |), counters AS (
        |  SELECT j,
-       |    CAST('0x' || substr(md5('cms' || CAST(j AS VARCHAR) || ':' || tok), 1, 15) AS BIGINT) % $CmsWidth AS bucket,
+       |    ${OracleSql.h60("'cms' || CAST(j AS VARCHAR) || ':' || tok")} % $CmsWidth AS bucket,
        |    CAST(SUM(c) AS BIGINT) AS cnt
        |  FROM vocab, rows_ GROUP BY 1, 2
        |), top AS (
@@ -515,7 +490,7 @@ object TextOps {
        |FROM top t
        |CROSS JOIN rows_ r
        |JOIN counters ct ON ct.j = r.j AND ct.bucket =
-       |  CAST('0x' || substr(md5('cms' || CAST(r.j AS VARCHAR) || ':' || t.tok), 1, 15) AS BIGINT) % $CmsWidth
+       |  ${OracleSql.h60("'cms' || CAST(r.j AS VARCHAR) || ':' || t.tok")} % $CmsWidth
        |GROUP BY t.tok, t.c
        |ORDER BY n_exact DESC, tok""".stripMargin) { (s, dir) =>
     import s.implicits._
@@ -595,33 +570,52 @@ object TextOps {
     * broadcast of the top-K counts) handles it, and nothing here is a
     * window or a single task.
     */
-  val q101 = Q("q101_bigram_lm",
-    """WITH tk AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-      |), bg AS (
-      |  SELECT doc_id,
-      |    unnest(list_slice(t, 1, len(t) - 1)) AS w1,
-      |    unnest(list_slice(t, 2, len(t))) AS w2
-      |  FROM tk WHERE len(t) >= 2
-      |), big AS (
-      |  SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2
-      |), uni AS (
-      |  SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1
-      |), scored AS (
-      |  SELECT bg.doc_id,
-      |    COUNT(*) AS n_bigrams,
-      |    CAST(SUM((big.c12 * 1000000) // uni.c1) AS BIGINT) AS sum_fp
-      |  FROM bg
-      |  JOIN big ON bg.w1 = big.w1 AND bg.w2 = big.w2
-      |  JOIN uni ON bg.w1 = uni.w1
-      |  GROUP BY bg.doc_id
-      |)
-      |SELECT d.doc_id,
-      |  CAST(COALESCE(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-      |  CASE WHEN s.n_bigrams IS NULL THEN 0.0
-      |    ELSE CAST(s.sum_fp AS DOUBLE) / (s.n_bigrams * 1000000.0) END AS fluency_score
-      |FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
-      |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
+  /** Oracle CTEs `tk` → `bg`: the (doc_id, w1, w2) bigram occurrences of
+    * a `corpus` relation. No WITH prefix.
+    */
+  private def bigramRowsCtes(corpus: String): String =
+    s"""tk AS (
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM $corpus
+       |), bg AS (
+       |  SELECT doc_id,
+       |    unnest(list_slice(t, 1, len(t) - 1)) AS w1,
+       |    unnest(list_slice(t, 2, len(t))) AS w2
+       |  FROM tk WHERE len(t) >= 2
+       |)""".stripMargin
+
+  /** [[bigramRowsCtes]], the count model `big`/`uni` trained on all of
+    * them, and `sc` (doc_id, n_bigrams, sum_fp): each doc's exact
+    * fixed-point score under it. No WITH prefix.
+    */
+  private def bigramLmCtes(corpus: String): String =
+    s"""${bigramRowsCtes(corpus)}, big AS (
+       |  SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2
+       |), uni AS (
+       |  SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1
+       |), sc AS (
+       |  SELECT bg.doc_id,
+       |    COUNT(*) AS n_bigrams,
+       |    CAST(SUM((big.c12 * 1000000) // uni.c1) AS BIGINT) AS sum_fp
+       |  FROM bg
+       |  JOIN big ON bg.w1 = big.w1 AND bg.w2 = big.w2
+       |  JOIN uni ON bg.w1 = uni.w1
+       |  GROUP BY bg.doc_id
+       |)""".stripMargin
+
+  /** q101's oracle: a bigram LM trained on `corpus` scoring `corpus`
+    * itself (q200 passes the survivors, q214 the survivors of a pinned
+    * slice).
+    */
+  private[ops] def fluencyOracleSql(corpus: String = "documents"): String =
+    s"""WITH ${bigramLmCtes(corpus)}
+       |SELECT d.doc_id,
+       |  CAST(COALESCE(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+       |  CASE WHEN s.n_bigrams IS NULL THEN 0.0
+       |    ELSE CAST(s.sum_fp AS DOUBLE) / (s.n_bigrams * 1000000.0) END AS fluency_score
+       |FROM $corpus d LEFT JOIN sc s ON d.doc_id = s.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  val q101 = Q("q101_bigram_lm", fluencyOracleSql()) { (s, dir) =>
     fluencyScored(s, dir)
       .select(col("doc_id"), col("n_bigrams"),
         when(col("n_bigrams") === 0, lit(0.0))
@@ -687,26 +681,7 @@ object TextOps {
     fluencyScoredFromCounts(docs(s, dir), None)
 
   private def q170OracleSql: String =
-    """WITH tk AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-      |), bg AS (
-      |  SELECT doc_id,
-      |    unnest(list_slice(t, 1, len(t) - 1)) AS w1,
-      |    unnest(list_slice(t, 2, len(t))) AS w2
-      |  FROM tk WHERE len(t) >= 2
-      |), big AS (
-      |  SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2
-      |), uni AS (
-      |  SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1
-      |), sc AS (
-      |  SELECT bg.doc_id,
-      |    COUNT(*) AS n_bigrams,
-      |    CAST(SUM((big.c12 * 1000000) // uni.c1) AS BIGINT) AS sum_fp
-      |  FROM bg
-      |  JOIN big ON bg.w1 = big.w1 AND bg.w2 = big.w2
-      |  JOIN uni ON bg.w1 = uni.w1
-      |  GROUP BY bg.doc_id
-      |), scored AS (
+    s"""WITH ${bigramLmCtes("documents")}, scored AS (
       |  SELECT d.doc_id, d.source,
       |    CAST(COALESCE(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
       |    CAST(CASE WHEN s.n_bigrams IS NULL THEN 0
@@ -778,14 +753,7 @@ object TextOps {
        |)""".stripMargin
 
   private def q173OracleSql: String =
-    s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
-       |), bg AS (
-       |  SELECT doc_id,
-       |    unnest(list_slice(t, 1, len(t) - 1)) AS w1,
-       |    unnest(list_slice(t, 2, len(t))) AS w2
-       |  FROM tk WHERE len(t) >= 2
-       |), ${fluencyChainSql("1",
+    s"""WITH ${bigramRowsCtes("documents")}, ${fluencyChainSql("1",
               "WHERE bg.doc_id < (SELECT MAX(doc_id) // 2 FROM documents)")},
        |${fluencyChainSql("2", "")}
        |SELECT r1.source,
@@ -881,9 +849,9 @@ object TextOps {
     * long — metadata-sized at any corpus scale).
     */
   val q111 = Q("q111_temperature_mixing",
-    """WITH s AS (
+    s"""WITH s AS (
       |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |    CAST(SUM(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT) AS n_tokens
+      |    CAST(SUM(len(${OracleSql.tokens()})) AS BIGINT) AS n_tokens
       |  FROM documents GROUP BY source
       |), sw AS (
       |  SELECT source, n_docs, n_tokens, sqrt(CAST(n_tokens AS DOUBLE)) AS wr FROM s
@@ -896,7 +864,7 @@ object TextOps {
       |SELECT source, n_docs, n_tokens,
       |  FLOOR(wr / total * 1000000.0 + 0.5) / 1000000.0 AS mix_weight,
       |  CAST(FLOOR(wr / total * 1000000.0) AS BIGINT) AS target_tokens,
-      |  FLOOR(wr / total * 1000000.0 / CAST(n_tokens AS DOUBLE) * 10000.0 + 0.5) / 10000.0
+      |  ${OracleSql.round4("wr / total * 1000000.0 / CAST(n_tokens AS DOUBLE)")}
       |    AS oversample_x
       |FROM sw, t
       |ORDER BY source""".stripMargin) { (s, dir) =>
@@ -969,7 +937,7 @@ object TextOps {
       |), perdoc AS (
       |  SELECT d.source, d.doc_id, d.toks,
       |    f.repeat_x + CASE WHEN
-      |      (CAST('0x' || substr(md5('up:' || d.source || ':' || CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000)
+      |      (${OracleSql.h60("'up:' || d.source || ':' || CAST(d.doc_id AS VARCHAR)")} % 10000)
       |        < f.frac_bp THEN 1 ELSE 0 END AS copies
       |  FROM $rel d JOIN fac f ON d.source = f.source
       |)""".stripMargin
@@ -980,7 +948,7 @@ object TextOps {
   private[graft] def recipeCtesSql: String =
     s"""WITH tok0 AS (
       |  SELECT source, doc_id,
-      |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS toks
+      |    CAST(len(${OracleSql.tokens()}) AS BIGINT) AS toks
       |  FROM documents
       |), ${recipeCtesBody("tok0")}""".stripMargin
 
@@ -990,8 +958,7 @@ object TextOps {
       |  CAST(COALESCE(SUM(p.copies), 0) AS BIGINT) AS n_rows,
       |  CAST(COALESCE(SUM(p.copies * p.toks), 0) AS BIGINT) AS up_tokens,
       |  CAST(COALESCE(SUM(p.copies * (p.copies + 1) // 2), 0) AS BIGINT) AS copy_checksum,
-      |  FLOOR(CAST(COALESCE(SUM(p.copies * p.toks), 0) AS DOUBLE)
-      |    / f.target_tokens * 10000.0 + 0.5) / 10000.0 AS hit_ratio
+      |  ${OracleSql.round4("CAST(COALESCE(SUM(p.copies * p.toks), 0) AS DOUBLE) / f.target_tokens")} AS hit_ratio
       |FROM fac f LEFT JOIN perdoc p ON f.source = p.source
       |GROUP BY f.source, f.n_docs, f.n_tokens, f.target_tokens, f.repeat_x, f.frac_bp
       |ORDER BY f.source""".stripMargin) { (s, dir) =>
@@ -1062,11 +1029,10 @@ object TextOps {
 
   private def q120OracleSql: String = {
     val w = BoilerShingle
-    val ghSql = "CAST('0x' || substr(md5(array_to_string(" +
-      s"list_slice(t, i, i + ${w - 1}), ' ')), 1, 15) AS BIGINT)"
-    val keptH = Dedup.h60Sql("COALESCE(k.kept, '')")
+    val ghSql = OracleSql.h60(s"array_to_string(list_slice(t, i, i + ${w - 1}), ' ')")
+    val keptH = OracleSql.h60("COALESCE(k.kept, '')")
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), pos AS (
        |  SELECT doc_id, generate_subscripts(t, 1) AS j, unnest(t) AS tok FROM tk
        |), st AS (
@@ -1174,7 +1140,7 @@ object TextOps {
 
   private def q121OracleSql: String =
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM documents
        |), g2 AS (
        |  SELECT doc_id,
        |    unnest(list_transform(range(1, len(t)),
@@ -1205,11 +1171,11 @@ object TextOps {
        |SELECT tk.doc_id, CAST(len(tk.t) AS BIGINT) AS n_tokens,
        |  CAST(COALESCE(a2.topc, 0) AS BIGINT) AS top_2gram_cnt,
        |  CASE WHEN len(tk.t) >= 2 THEN
-       |    FLOOR(CAST(COALESCE(a2.topc, 0) AS DOUBLE) / (len(tk.t) - 1) * 10000.0 + 0.5) / 10000.0
+       |    ${OracleSql.round4("CAST(COALESCE(a2.topc, 0) AS DOUBLE) / (len(tk.t) - 1)")}
        |    ELSE CAST(0.0 AS DOUBLE) END AS top_2gram_share,
        |  CAST(COALESCE(a5.dupc, 0) AS BIGINT) AS dup_5gram_cnt,
        |  CASE WHEN len(tk.t) >= 5 THEN
-       |    FLOOR(CAST(COALESCE(a5.dupc, 0) AS DOUBLE) / (len(tk.t) - 4) * 10000.0 + 0.5) / 10000.0
+       |    ${OracleSql.round4("CAST(COALESCE(a5.dupc, 0) AS DOUBLE) / (len(tk.t) - 4)")}
        |    ELSE CAST(0.0 AS DOUBLE) END AS dup_5gram_frac,
        |  CAST(COALESCE(runs.mx, 0) AS BIGINT) AS max_token_run,
        |  ((len(tk.t) >= 2 AND COALESCE(a2.topc, 0) * 5 >= len(tk.t) - 1)
@@ -1304,21 +1270,7 @@ object TextOps {
     * oracled exactly.
     */
   val q152 = Q("q152_wrap_packing",
-    """WITH toks AS (
-      |  SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tokens
-      |  FROM documents
-      |), c AS (
-      |  SELECT doc_id, n_tokens,
-      |    CAST(SUM(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-      |  FROM toks
-      |), sp AS (
-      |  SELECT doc_id, cum - n_tokens AS st, cum AS en
-      |  FROM c WHERE n_tokens > 0
-      |), ex AS (
-      |  SELECT doc_id, st, en,
-      |    unnest(range(st // 2048, (en - 1) // 2048 + 1)) AS pack_id
-      |  FROM sp
-      |)
+    s"""$wrapPackCtesSql
       |SELECT pack_id,
       |  COUNT(*) AS n_docs,
       |  CAST(SUM(CASE WHEN st >= pack_id * 2048 THEN 1 ELSE 0 END) AS BIGINT) AS n_starting,
@@ -1369,12 +1321,12 @@ object TextOps {
       .agg(sum(packFill).cast("long").as("pack_tokens"))
 
   /** Oracle fragment: the q152 CTE chain (toks → c → sp → ex) plus a
-    * `packs(pack_id, pack_tokens)` CTE — shared verbatim with q153's
-    * oracle so both engines derive the identical pack table.
+    * `packs(pack_id, pack_tokens)` CTE — q152 reads `ex`, q153 `packs`,
+    * so both derive the identical pack table.
     */
   private[graft] def wrapPackCtesSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tokens
+    s"""WITH toks AS (
+      |  SELECT doc_id, len(${OracleSql.tokens()}) AS n_tokens
       |  FROM documents
       |), c AS (
       |  SELECT doc_id, n_tokens,
@@ -1397,7 +1349,7 @@ object TextOps {
 
   private def q183OracleSql: String =
     s"""WITH tk AS (
-       |  SELECT doc_id, source, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+       |  SELECT doc_id, source, ${OracleSql.tokens()} AS t
        |  FROM documents
        |), cutv AS (
        |  SELECT MAX(doc_id) // 2 AS cut FROM documents
@@ -1483,10 +1435,11 @@ object TextOps {
   private[graft] val KAnonK = 5
   private[graft] val KAnonBucket = 256L
 
-  private def q189OracleSql: String =
+  /** q189's oracle over a `corpus` relation (the survivors for q205). */
+  private[ops] def q189OracleSql(corpus: String = "documents"): String =
     s"""WITH g AS (
        |  SELECT source, lang, n_chars // $KAnonBucket AS len_bucket, COUNT(*) AS gsz
-       |  FROM documents GROUP BY 1, 2, 3
+       |  FROM $corpus GROUP BY 1, 2, 3
        |)
        |SELECT source,
        |  CAST(SUM(gsz) AS BIGINT) AS n_docs,
@@ -1509,7 +1462,7 @@ object TextOps {
     * combinable (source, lang, bucket) aggregate — group count is
     * bounded by the QI domain, not the corpus — then a |sources| rollup.
     */
-  val q189 = Q("q189_kanonymity_audit", q189OracleSql) { (s, dir) =>
+  val q189 = Q("q189_kanonymity_audit", q189OracleSql()) { (s, dir) =>
     kAnonymityAudit(docs(s, dir))
   }
 
@@ -1551,11 +1504,11 @@ object TextOps {
   /** Shared oracle prefix for q195/q196: tokens → 32-token windows →
     * per-window stopword hits + token counts → window language majority.
     */
-  private def csMajCtes: String = {
+  private def csMajCtes(corpus: String = "documents"): String = {
     def hits(stop: Seq[String]) =
       s"SUM(CASE WHEN list_contains([${stop.map("'" + _ + "'").mkString(",")}], tok) THEN 1 ELSE 0 END)"
     s"""WITH tk AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents
+       |  SELECT doc_id, ${OracleSql.tokens()} AS t FROM $corpus
        |), pos AS (
        |  SELECT doc_id, (generate_subscripts(t, 1) - 1) // $CsWindow AS w, unnest(t) AS tok
        |  FROM tk
@@ -1575,8 +1528,9 @@ object TextOps {
        |)""".stripMargin
   }
 
-  private def q195OracleSql: String =
-    s"""$csMajCtes, seg AS (
+  /** q195's oracle over a `corpus` relation (q211: the survivors). */
+  private[ops] def q195OracleSql(corpus: String = "documents"): String =
+    s"""${csMajCtes(corpus)}, seg AS (
        |  SELECT doc_id, w, lang,
        |    CASE WHEN lang = LAG(lang) OVER (PARTITION BY doc_id ORDER BY w)
        |      THEN 0 ELSE 1 END AS brk
@@ -1599,7 +1553,7 @@ object TextOps {
        |  COALESCE(p.n_langs, 0) AS n_langs,
        |  COALESCE(m.dominant_lang, 'unknown') AS dominant_lang,
        |  COALESCE(p.n_langs, 0) >= 2 AS mixed
-       |FROM documents d
+       |FROM $corpus d
        |LEFT JOIN per p ON d.doc_id = p.doc_id
        |LEFT JOIN dom m ON d.doc_id = m.doc_id
        |ORDER BY d.doc_id""".stripMargin
@@ -1616,7 +1570,7 @@ object TextOps {
     * posexplode → (doc, window) hash aggregate, islands ride per-doc
     * window partitions (never a global sort), rollup is per-doc.
     */
-  val q195 = Q("q195_code_switching", q195OracleSql) { (s, dir) =>
+  val q195 = Q("q195_code_switching", q195OracleSql()) { (s, dir) =>
     codeSwitchOf(docs(s, dir))
   }
 
@@ -1676,7 +1630,7 @@ object TextOps {
   // ── q196: mixed-document salvage analysis ──────────────────────────────
 
   private def q196OracleSql: String =
-    s"""$csMajCtes, dom AS (
+    s"""${csMajCtes()}, dom AS (
        |  SELECT doc_id, lang AS dominant FROM (
        |    SELECT doc_id, lang,
        |      ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY COUNT(*) DESC, lang) AS rn
@@ -1762,7 +1716,7 @@ object TextOps {
   // ── q197: segment split (the transform q196's salvage plans) ──────────
 
   private def q197OracleSql: String =
-    s"""$csMajCtes, brkt AS (
+    s"""${csMajCtes()}, brkt AS (
        |  SELECT doc_id, w, n_toks, lang,
        |    CASE WHEN lang = LAG(lang) OVER (PARTITION BY doc_id ORDER BY w)
        |      THEN 0 ELSE 1 END AS brk

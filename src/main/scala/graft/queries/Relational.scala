@@ -898,11 +898,10 @@ object Relational {
     * care; XOR cannot overflow.)
     */
   val q78 = Q("q78_table_checksum",
-    """SELECT l_returnflag,
+    s"""SELECT l_returnflag,
       |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-      |  bit_xor(CAST('0x' || substr(md5(
-      |    CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR) || '|' ||
-      |    CAST(l_suppkey AS VARCHAR)), 1, 15) AS BIGINT)) AS checksum
+      |  bit_xor(${graft.ops.OracleSql.h60("CAST(l_orderkey AS VARCHAR) || '|' || " +
+        "CAST(l_linenumber AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR)")}) AS checksum
       |FROM lineitem
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>

@@ -349,8 +349,7 @@ object Forget {
             .join(keys, Seq(keyCol), "left_anti")
             .coalesce(1)
             .write.mode("overwrite").parquet(tmp.getPath)
-          java.nio.file.Files.write(new java.io.File(tmp, "_TARGET").toPath,
-            target.getName.getBytes("UTF-8"))
+          StoreCompaction.writeAtomic(new java.io.File(tmp, "_TARGET"), target.getName)
           val part = Option(tmp.listFiles()).toSeq.flatten
             .find(f => f.getName.startsWith("part-") &&
               f.getName.endsWith(".parquet")).get

@@ -297,19 +297,7 @@ object LshStream {
     val bucketRe = """.*_(\d+)(?:\..*)?$""".r
     def dataFiles() = Option(loc.listFiles()).toSeq.flatten.filter(f =>
       f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-    // recovery of any crashed per-bucket fold, from its manifest
-    Option(loc.listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("_compact_manifest_")).foreach { mf =>
-        val lines = java.nio.file.Files.readAllLines(mf.toPath)
-        val (finalName, olds) = (lines.get(0), lines.subList(1, lines.size))
-        val hidden = new java.io.File(loc, "." + finalName)
-        if (new java.io.File(loc, finalName).exists() || hidden.exists()) {
-          olds.forEach(o => { new java.io.File(loc, o).delete(); () })
-          if (hidden.exists())
-            require(hidden.renameTo(new java.io.File(loc, finalName)))
-        }
-        mf.delete()
-      }
+    StoreCompaction.replayCompactManifests(loc, "_compact_manifest_")
     // stray hidden files with no manifest are incomplete writes
     Option(loc.listFiles()).toSeq.flatten
       .filter(_.getName.startsWith(".part-")).foreach(_.delete())
@@ -336,9 +324,7 @@ object LshStream {
         val hidden = new java.io.File(loc, "." + finalName)
         java.nio.file.Files.copy(part.toPath, hidden.toPath)
         val manifest = new java.io.File(loc, s"_compact_manifest_$bucket")
-        java.nio.file.Files.write(manifest.toPath,
-          (finalName +: files.map(_.getName)).mkString("\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        StoreCompaction.writeAtomic(manifest, (finalName +: files.map(_.getName)).mkString("\n"))
         files.foreach(_.delete())
         require(hidden.renameTo(new java.io.File(loc, finalName)),
           s"rename ${hidden.getName} failed")

@@ -210,13 +210,10 @@ object SketchStream {
           s"refusing $what=$value — merging sketch partials of different " +
           "parameters returns a silently wrong estimate")
     } else if (writeIfAbsent) {
-      // tmp + atomic rename: a truncated marker from a crashed plain
-      // write would refuse every later landing/serve on a healthy store
+      // a truncated marker from a crashed write would refuse every later
+      // landing/serve on a healthy store
       new java.io.File(deltaDir).mkdirs()
-      val tmp = new java.io.File(deltaDir, s".$name.tmp")
-      java.nio.file.Files.write(tmp.toPath, value.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      require(tmp.renameTo(f), s"param marker $name commit on $deltaDir failed")
+      StoreCompaction.writeAtomic(f, value.toString)
     }
   }
 

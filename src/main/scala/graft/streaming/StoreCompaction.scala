@@ -42,6 +42,39 @@ object StoreCompaction {
   private val HorizonName = "_compaction_horizon"
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 
+  /** The one way a store writes a small file (marker, manifest): the
+    * bytes go to a dot-`.tmp` sibling, which is then renamed onto
+    * `target`. On Linux the rename replaces an existing target in one
+    * step, so a crash leaves the old content or the new, never an empty
+    * or truncated file and never no file. A stale `.tmp` left by a crash
+    * is invisible to readers and overwritten by the next write.
+    */
+  private[graft] def writeAtomic(target: java.io.File, content: String): Unit = {
+    val tmp = new java.io.File(target.getParentFile, s".${target.getName}.tmp")
+    java.nio.file.Files.write(tmp.toPath, content.getBytes(Utf8))
+    require(tmp.renameTo(target), s"atomic write of $target failed")
+  }
+
+  /** Finishes every per-bucket rewrite in `dir` that crashed before its
+    * manifest was dropped. A manifest named `prefix` + bucket lists the
+    * rewritten file's final name, then the files it replaces; if the new
+    * file landed (visible, or still dot-hidden), the old files go and the
+    * hidden one is renamed visible. The manifest is deleted either way.
+    */
+  private[graft] def replayCompactManifests(dir: java.io.File, prefix: String): Unit =
+    Option(dir.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith(prefix)).foreach { mf =>
+        val lines = java.nio.file.Files.readAllLines(mf.toPath)
+        val (finalName, olds) = (lines.get(0), lines.subList(1, lines.size))
+        val hidden = new java.io.File(dir, "." + finalName)
+        if (new java.io.File(dir, finalName).exists() || hidden.exists()) {
+          olds.forEach(o => { new java.io.File(dir, o).delete(); () })
+          if (hidden.exists())
+            require(hidden.renameTo(new java.io.File(dir, finalName)))
+        }
+        mf.delete()
+      }
+
   // ── live release pins: compaction must never fold past one ───────────
   //
   // A release pin at boundary P promises that serving `batch_id <= P OR
@@ -85,11 +118,7 @@ object StoreCompaction {
     }
     val pins = new java.io.File(storeDir, PinsDirName)
     pins.mkdirs()
-    val tmp = new java.io.File(pins, s".$name.tmp")
-    java.nio.file.Files.write(tmp.toPath, upto.toString.getBytes(Utf8))
-    val target = new java.io.File(pins, name)
-    target.delete()
-    require(tmp.renameTo(target), s"pin write $target failed")
+    writeAtomic(new java.io.File(pins, name), upto.toString)
   }
 
   /** Drop live pin `name` (idempotent) — folds past its boundary become
@@ -134,9 +163,7 @@ object StoreCompaction {
     if (folded.nonEmpty) {
       val h = math.max(folded.max,
         compactionHorizon(root.getPath).getOrElse(Long.MinValue))
-      java.nio.file.Files.write(new java.io.File(root, HorizonName).toPath,
-        h.toString.getBytes(Utf8))
-      ()
+      writeAtomic(new java.io.File(root, HorizonName), h.toString)
     }
   }
 
@@ -341,11 +368,7 @@ object StoreCompaction {
     */
   def declarePrefoldKeep(storeDir: String): Unit = {
     new java.io.File(storeDir).mkdirs()
-    val tmp = new java.io.File(storeDir, s".$PrefoldKeepName.tmp")
-    java.nio.file.Files.write(tmp.toPath, "1".getBytes(Utf8))
-    val target = new java.io.File(storeDir, PrefoldKeepName)
-    target.delete()
-    require(tmp.renameTo(target), s"prefold-keep marker on $storeDir failed")
+    writeAtomic(new java.io.File(storeDir, PrefoldKeepName), "1")
   }
 
   /** Whether the store keeps pre-fold deltas (the amend-horizon opt-in). */
@@ -369,11 +392,7 @@ object StoreCompaction {
   def declareAmendHorizon(storeDir: String, nBatches: Long): Unit = {
     require(nBatches > 0, s"amend horizon must be positive, got $nBatches")
     new java.io.File(storeDir).mkdirs()
-    val tmp = new java.io.File(storeDir, s".$AmendHorizonName.tmp")
-    java.nio.file.Files.write(tmp.toPath, nBatches.toString.getBytes(Utf8))
-    val target = new java.io.File(storeDir, AmendHorizonName)
-    target.delete()
-    require(tmp.renameTo(target), s"amend-horizon marker on $storeDir failed")
+    writeAtomic(new java.io.File(storeDir, AmendHorizonName), nBatches.toString)
   }
 
   /** The store's declared amend horizon (None = archives bounded by
@@ -442,12 +461,7 @@ object StoreCompaction {
           retirable.foreach { e =>
             val ids = epochArchiveManifest(storeDir, e).getOrElse(Nil)
             val tomb = archiveTombstoneFile(root, e)
-            val tmp = new java.io.File(tomb.getParentFile, s".${tomb.getName}.tmp")
-            java.nio.file.Files.write(tmp.toPath,
-              s"retired at frontier $frontier, horizon ${horizon.get}"
-                .getBytes(Utf8))
-            tomb.delete()
-            require(tmp.renameTo(tomb), s"archive tombstone $tomb failed")
+            writeAtomic(tomb, s"retired at frontier $frontier, horizon ${horizon.get}")
             ids.foreach(id => deleteRecursively(
               new java.io.File(prefold, s"batch_id=$id")))
             archiveManifestFile(root, e).delete()
@@ -498,11 +512,7 @@ object StoreCompaction {
     val ids = (prev.getOrElse(Nil) ++ nonEpoch).distinct.sorted
     val f = archiveManifestFile(root, e)
     f.getParentFile.mkdirs()
-    val tmp = new java.io.File(f.getParentFile, s".${f.getName}.tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      ids.mkString("\n").getBytes(Utf8))
-    f.delete()
-    require(tmp.renameTo(f), s"archive manifest $f failed")
+    writeAtomic(f, ids.mkString("\n"))
   }
 
   /** Retire one folded source partition: archive it under `.prefold/`
@@ -627,8 +637,7 @@ object StoreCompaction {
     // zero epoch partitions is benign — the store just serves windows
     // with nothing banded yet)
     if (byEpoch.nonEmpty && epochSizeOf(storeDir).isEmpty)
-      java.nio.file.Files.write(new java.io.File(root, EpochSizeName).toPath,
-        epochSize.toString.getBytes(Utf8))
+      writeAtomic(new java.io.File(root, EpochSizeName), epochSize.toString)
     val folded = byEpoch.toSeq.sortBy(_._1).map { case (e, ids) =>
       val tmp = new java.io.File(root, s".epoch_tmp_$e")
       deleteRecursively(tmp)
@@ -648,8 +657,7 @@ object StoreCompaction {
         .parquet(sources.map(id => s"$storeDir/batch_id=$id"): _*)
         .coalesce(1)
         .write.mode("overwrite").parquet(tmp.getPath)
-      java.nio.file.Files.write(new java.io.File(tmp, "_folded_ids").toPath,
-        sources.mkString("\n").getBytes(Utf8))
+      writeAtomic(new java.io.File(tmp, "_folded_ids"), sources.mkString("\n"))
       recordEpochArchive(root, e, sources)
       sources.foreach(id => retireFoldedSource(root, id))
       // rename WITH the manifest inside (invisible to readers), drop it
@@ -765,8 +773,7 @@ object StoreCompaction {
       .parquet(arch.map(id => s"$storeDir/$PrefoldDirName/batch_id=$id"): _*)
       .coalesce(1)
       .write.mode("overwrite").parquet(tmp.getPath)
-    java.nio.file.Files.write(new java.io.File(tmp, "_folded_ids").toPath,
-      arch.mkString("\n").getBytes(Utf8))
+    writeAtomic(new java.io.File(tmp, "_folded_ids"), arch.mkString("\n"))
     deleteRecursively(target)
     require(tmp.renameTo(target), s"epoch re-band $tmp -> $target failed")
     new java.io.File(target, "_folded_ids").delete()
@@ -940,10 +947,7 @@ object StoreCompaction {
     }
     val floor = math.max(plan.floor,
       retentionFloor(storeDir).getOrElse(Long.MinValue))
-    java.nio.file.Files.write(
-      new java.io.File(root, RetentionFloorName).toPath,
-      floor.toString.getBytes(Utf8))
-    ()
+    writeAtomic(new java.io.File(root, RetentionFloorName), floor.toString)
   }
 
   // ── the staged-expiry protocol: certify BEFORE deleting ──────────────
@@ -981,11 +985,7 @@ object StoreCompaction {
       plan.dropped.map(id => s"drop=$id:${plan.filesById.getOrElse(id, 0L)}") ++
       plan.archivedById.toSeq.sortBy(_._1)
         .map { case (id, n) => s"droparch=$id:$n" }
-    val tmp = new java.io.File(storeDir, s".$ExpiryStagedName.tmp")
-    java.nio.file.Files.write(tmp.toPath, lines.mkString("\n").getBytes(Utf8))
-    val target = new java.io.File(storeDir, ExpiryStagedName)
-    target.delete()
-    require(tmp.renameTo(target), s"staging expiry certificate $target failed")
+    writeAtomic(new java.io.File(storeDir, ExpiryStagedName), lines.mkString("\n"))
   }
 
   /** Finish a certified expiry a crash interrupted: re-write the
@@ -1223,11 +1223,7 @@ object StoreCompaction {
   def declareReplayDepth(storeDir: String, depth: Int): Unit = {
     require(depth >= 0, s"replay depth must be non-negative, got $depth")
     new java.io.File(storeDir).mkdirs()
-    val tmp = new java.io.File(storeDir, s".$ReplayDepthName.tmp")
-    java.nio.file.Files.write(tmp.toPath, depth.toString.getBytes(Utf8))
-    val target = new java.io.File(storeDir, ReplayDepthName)
-    target.delete()
-    require(tmp.renameTo(target), s"replay depth write $target failed")
+    writeAtomic(new java.io.File(storeDir, ReplayDepthName), depth.toString)
   }
 
   /** The store's declared replay depth (None if never declared). */
@@ -1256,14 +1252,10 @@ object StoreCompaction {
             s"$value — rows under different configurations merge without " +
             "error and serve silently wrong results")
     } else if (writeIfAbsent) {
-      // tmp + atomic rename (the writeCellSchema discipline): a plain
-      // Files.write crashed mid-way leaves a truncated marker whose
-      // mismatch then permanently refuses every later landing and serve
-      // on an otherwise healthy store
+      // a truncated marker from a crashed write would permanently refuse
+      // every later landing and serve on an otherwise healthy store
       new java.io.File(storeDir).mkdirs()
-      val tmp = new java.io.File(storeDir, s".$name.tmp")
-      java.nio.file.Files.write(tmp.toPath, value.getBytes(Utf8))
-      require(tmp.renameTo(f), s"config marker $name commit on $storeDir failed")
+      writeAtomic(f, value)
     }
   }
 
@@ -1403,13 +1395,8 @@ object StoreCompaction {
 
   private def writeCellSchema(storeDir: String, v: Int,
       cols: Seq[(String, String)]): Unit = {
-    val tmp = new java.io.File(storeDir, s".$CellSchemaName.tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      (s"v=$v" +: cols.map { case (n, t) => s"$n:$t" })
-        .mkString("\n").getBytes(Utf8))
-    val target = new java.io.File(storeDir, CellSchemaName)
-    target.delete()
-    require(tmp.renameTo(target), s"cell schema write $target failed")
+    writeAtomic(new java.io.File(storeDir, CellSchemaName),
+      (s"v=$v" +: cols.map { case (n, t) => s"$n:$t" }).mkString("\n"))
   }
 
   /** One schema-validated delta landing: validate the cell schema
@@ -1498,10 +1485,7 @@ object StoreCompaction {
     val ids = partitionIds(new java.io.File(storeDir)).filter(_ >= 0)
     val frontier = (ids ++ compactionHorizon(storeDir).toSeq ++
       forgetHorizon(storeDir).toSeq).foldLeft(-1L)(math.max)
-    java.nio.file.Files.write(
-      new java.io.File(storeDir, ForgetHorizonName).toPath,
-      frontier.toString.getBytes(Utf8))
-    ()
+    writeAtomic(new java.io.File(storeDir, ForgetHorizonName), frontier.toString)
   }
 
   private def requirePinsAhead(storeDir: String, upto: Long): Unit = {
@@ -1644,8 +1628,7 @@ object StoreCompaction {
     merge(spark.read.option("mergeSchema", "true")
       .parquet(ids.map(id => s"$storeDir/batch_id=$id"): _*))
       .write.mode("overwrite").parquet(staging.getPath)
-    java.nio.file.Files.write(manifest.toPath,
-      ids.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeAtomic(manifest, ids.mkString("\n"))
     finishFold(ids)
   }
 
@@ -1718,8 +1701,7 @@ object StoreCompaction {
       .withColumn("__b", pmod(xxhash64(bucketCols.map(col): _*), lit(nBuckets.toLong)))
       .repartition(col("__b"))
       .write.partitionBy("__b").mode("overwrite").parquet(staging.getPath)
-    java.nio.file.Files.write(manifest.toPath,
-      ids.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeAtomic(manifest, ids.mkString("\n"))
     finishAppend(ids)
   }
 
@@ -1872,19 +1854,7 @@ object StoreCompaction {
       maxFilesPerBucket: Int = 4): Long = withLease(storeDir) {
     val base = new java.io.File(storeDir, s"batch_id=$BasePartition")
     if (!base.exists()) return 0L
-    // recovery of a crashed per-bucket rewrite
-    Option(base.listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("_compactb_manifest_")).foreach { mf =>
-        val lines = java.nio.file.Files.readAllLines(mf.toPath)
-        val (finalName, olds) = (lines.get(0), lines.subList(1, lines.size))
-        val hidden = new java.io.File(base, "." + finalName)
-        if (new java.io.File(base, finalName).exists() || hidden.exists()) {
-          olds.forEach(o => { new java.io.File(base, o).delete(); () })
-          if (hidden.exists())
-            require(hidden.renameTo(new java.io.File(base, finalName)))
-        }
-        mf.delete()
-      }
+    replayCompactManifests(base, "_compactb_manifest_")
     Option(base.listFiles()).toSeq.flatten
       .filter(f => f.getName.startsWith(".") && f.getName.contains("append_b"))
       .foreach(_.delete())
@@ -1907,9 +1877,7 @@ object StoreCompaction {
         val hidden = new java.io.File(base, "." + finalName)
         java.nio.file.Files.copy(part.toPath, hidden.toPath)
         val mf = new java.io.File(base, s"_compactb_manifest_$bucket")
-        java.nio.file.Files.write(mf.toPath,
-          (finalName +: files.map(_.getName)).mkString("\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        writeAtomic(mf, (finalName +: files.map(_.getName)).mkString("\n"))
         files.foreach(_.delete())
         require(hidden.renameTo(new java.io.File(base, finalName)),
           s"rename ${hidden.getName} failed")
