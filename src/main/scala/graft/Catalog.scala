@@ -30,11 +30,8 @@ object Catalog {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     if (name == "events") {
-      // Set ONCE per session, monotonically (never unset, no reader wants
-      // it false): an unconditional set on every read was benign today
-      // but a racy pattern if concurrent reads ever differed in needs.
-      if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the NANOS encoding reads as longs through the nanosAsLong
+      // default GraftExtensions gives every engine session
       val raw = spark.read.parquet(path)
       raw.schema("ts").dataType match {
         case LongType =>

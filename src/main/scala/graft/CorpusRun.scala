@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Mining}
+import graft.streaming.CurationStream
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -70,8 +71,9 @@ object CorpusRun {
 
     // 1. curation stores + outcome rates
     val storesRoot = Dedup.buildCurationStores(spark, sfDir)
-    val nAccepted = spark.read.parquet(s"$storesRoot/accepted").count()
-    val nQuarantine = spark.read.parquet(s"$storesRoot/quarantine").count()
+    val stores = CurationStream.Layout(storesRoot)
+    val nAccepted = spark.read.parquet(stores.accepted).count()
+    val nQuarantine = spark.read.parquet(stores.quarantine).count()
     val rates = save("curation_rates", Dedup.q133.fn(spark, sfDir))
     val s1 = Stage("curation", rates, nAccepted + nQuarantine == nDocs,
       s"accepted=$nAccepted quarantine=$nQuarantine of $nDocs docs", secs = tick())
@@ -113,7 +115,7 @@ object CorpusRun {
     // document scans) — the mixture schedule a loader runs on exactly
     // what curation shipped
     val acceptedMasses = Mining.withRenormWeight(
-        spark.read.parquet(s"$storesRoot/accepted").select("source"))
+        spark.read.parquet(stores.accepted).select("source"))
       .groupBy("source", "w").agg(count(lit(1)).cast("long").as("n"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -131,7 +133,7 @@ object CorpusRun {
     // shipped, q167's rollup) — the mixture a benchmark-targeted run
     // would actually train on
     val acceptedDocs = Catalog.table(spark, sfDir, "documents")
-      .join(spark.read.parquet(s"$storesRoot/accepted").select("doc_id"),
+      .join(spark.read.parquet(stores.accepted).select("doc_id"),
         Seq("doc_id"), "left_semi")
     val recipe = Mining.selectedRecipeOf(
         Mining.targetedScoresOf(Mining.bigramBuckets(acceptedDocs)))
@@ -258,8 +260,8 @@ object CorpusRun {
         trendBounds)
       .collect().toSeq.map(_.toSeq)
     val hBefore = trendSnap()
-    val fpRep = StoreCompaction.maintain(spark, s"$storesRoot/fp", Seq("fp"), pol)
-    val idxRep = StoreCompaction.maintain(spark, s"$storesRoot/index",
+    val fpRep = StoreCompaction.maintain(spark, stores.fp, Seq("fp"), pol)
+    val idxRep = StoreCompaction.maintain(spark, stores.index,
       Seq("band_idx", "band_hash"), pol)
     val trendRep = StoreCompaction.maintain(spark, trendDir, Seq("h"), pol)
     val hAfter = trendSnap()
@@ -295,14 +297,15 @@ object CorpusRun {
     Seq(fRoot, s"$outDir/forget_requests", s"$outDir/forget_req_stage",
       s"$outDir/forget_markers", s"$outDir/forget_ck", s"$outDir/forget_fresh")
       .foreach(p => rmTree(new java.io.File(p)))
-    Seq("fp", "index", "decisions", "accepted", "quarantine").foreach { st =>
-      spark.read.parquet(s"$storesRoot/$st")
-        .write.partitionBy("batch_id").mode("overwrite").parquet(s"$fRoot/$st")
+    val fStores = CurationStream.Layout(fRoot)
+    stores.dirs.zip(fStores.dirs).foreach { case (from, to) =>
+      spark.read.parquet(from)
+        .write.partitionBy("batch_id").mode("overwrite").parquet(to)
     }
     val (fm, fr) = (ops.ForgetOps.ForgetMod, ops.ForgetOps.ForgetRes)
-    val archive = spark.read.parquet(s"$fRoot/accepted")
+    val archive = spark.read.parquet(fStores.accepted)
       .select("doc_id", "text", "source")
-      .unionByName(spark.read.parquet(s"$fRoot/quarantine")
+      .unionByName(spark.read.parquet(fStores.quarantine)
         .select("doc_id", "text", "source"))
       .localCheckpoint()
     val fIds = archive.filter(pmod(col("doc_id"), lit(fm)) === lit(fr))
@@ -323,18 +326,17 @@ object CorpusRun {
       ForgetStream.ForgetTargets(curationRoot = Some(fRoot)),
       s"$outDir/forget_markers", s"$outDir/forget_ck").awaitTermination()
     val nForgotten = fIds.count()
-    val leftAcross = Seq("fp", "index", "decisions", "accepted", "quarantine")
-      .map(st => spark.read.parquet(s"$fRoot/$st")
+    val leftAcross = fStores.dirs
+      .map(st => spark.read.parquet(st)
         .join(fIds, Seq("doc_id"), "left_semi").count()).sum
-    val freshRoot = s"$outDir/forget_fresh"
-    graft.streaming.CurationStream.processBatch(
+    val fresh = CurationStream.Layout(s"$outDir/forget_fresh")
+    CurationStream.processBatch(
       archive.filter(pmod(col("doc_id"), lit(fm)) =!= lit(fr)),
-      s"$freshRoot/fp", s"$freshRoot/index", s"$freshRoot/decisions", 0L,
-      None, None)
+      fresh.fp, fresh.index, fresh.decisions, 0L)
     def decSnap(dir: String) = graft.streaming.CurationStream
       .decisions(spark, dir).collect().map(_.toSeq).toSeq
     val forgetEqual =
-      decSnap(s"$fRoot/decisions") == decSnap(s"$freshRoot/decisions")
+      decSnap(fStores.decisions) == decSnap(fresh.decisions)
     val s15 = Stage("forget", nForgotten,
       leftAcross == 0L && forgetEqual,
       s"erased $nForgotten docs across 5 stores ($leftAcross rows left); " +
@@ -557,6 +559,7 @@ object CorpusRun {
     // build on (corrected corpus MINUS the wave).
     import graft.streaming.Amend
     val aRootS = s"$outDir/amend_stores"
+    val aStores = CurationStream.Layout(aRootS)
     val (aLanding, aStage2, aMarkers, aCk, aScratch, aCert, aFReq, aFMark) =
       (s"$outDir/amend_requests", s"$outDir/amend_req_stage",
         s"$outDir/amend_markers", s"$outDir/amend_ck",
@@ -571,10 +574,8 @@ object CorpusRun {
     val aBounds = Seq(aw, 2 * aw, 3 * aw, Long.MaxValue)
     aBounds.zipWithIndex.foreach { case (hiB, k) =>
       val loB = if (k == 0) Long.MinValue else aBounds(k - 1)
-      graft.streaming.CurationStream.processBatch(
-        rdocsFull.filter(col("doc_id") >= loB && col("doc_id") < hiB),
-        s"$aRootS/fp", s"$aRootS/index", s"$aRootS/decisions", k.toLong,
-        Some(s"$aRootS/accepted"), Some(s"$aRootS/quarantine"))
+      CurationStream.processBatch(
+        rdocsFull.filter(col("doc_id") >= loB && col("doc_id") < hiB), aStores, k.toLong)
     }
     // the erasure wave: docs ≡ 4 (mod 9) below the corrected landing's
     // upper bound — it hits batch 0 AND the landing the correction
@@ -603,12 +604,11 @@ object CorpusRun {
       Amend.AmendTargets(curationRoot = Some(aRootS),
         forgetRequestDirs = Seq(aFReq)), aMarkers, aCk,
       auditRoot = Some(aCert)).awaitTermination()
-    graft.streaming.CurationStream.processBatch(
+    val aFresh = CurationStream.Layout(aScratch)
+    CurationStream.processBatch(
       corrCorpus.join(fIds19, Seq("doc_id"), "left_anti"),
-      s"$aScratch/fp", s"$aScratch/index", s"$aScratch/decisions", 0L,
-      None, None)
-    val amendEqual = decSnap(s"$aRootS/decisions") ==
-      decSnap(s"$aScratch/decisions")
+      aFresh.fp, aFresh.index, aFresh.decisions, 0L)
+    val amendEqual = decSnap(aStores.decisions) == decSnap(aFresh.decisions)
     val nCorr = corrB.count()
     val nFb = corrB.join(fIds19, Seq("doc_id"), "left_semi").count()
     val nOldLanding = rdocsFull

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions._
 import graft.ops.{Dedup, Mining}
-import org.apache.spark.CodegenCacheDefault
+import org.apache.spark.ConfDefaults
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -26,21 +26,22 @@ import org.slf4j.LoggerFactory
   * table) that the oracle SQL inlines from the same values, so they take
   * no per-call parameters that could drift.
   *
-  * It also sizes Spark's codegen cache, the one static conf the engine
-  * owns: `apply` runs inside `getOrCreate` after the `SparkContext` exists
-  * and before the session clones its conf, so it gives
-  * `spark.sql.codegen.cache.maxEntries` the default
-  * [[CodegenCacheDefault.Entries]] (Spark's own is 100) unless the key is
-  * set. A value set explicitly wins. The cache is JVM-global and sized
-  * when the first class compiles; a session whose JVM has compiled
-  * classes before this default lands logs a WARN instead.
+  * It also applies the engine's conf defaults ([[ConfDefaults.Defaults]]:
+  * Spark's codegen cache size, and the parquet nanos-as-long read the
+  * `events` table needs), so that building a query never sets session
+  * conf: `apply` runs inside `getOrCreate` after the `SparkContext` exists
+  * and before the session clones its conf, so each key gets its default
+  * unless it is set. A value set explicitly wins. The codegen cache is
+  * JVM-global and sized when the first class compiles; a session whose
+  * JVM has compiled classes before this default lands logs a WARN instead.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    if (CodegenCacheDefault.onActiveContext() && CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
+    if (ConfDefaults.onActiveContext().contains(ConfDefaults.CodegenCacheKey) &&
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
       LoggerFactory.getLogger(getClass).warn(
-        s"${CodegenCacheDefault.Key} defaults to ${CodegenCacheDefault.Entries}, but this JVM " +
+        s"${ConfDefaults.CodegenCacheKey} defaults to ${ConfDefaults.CodegenCacheEntries}, but this JVM " +
           "compiled generated classes already, so its codegen cache keeps the size it was built with")
     def fn(name: String, usage: String)(build: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name),

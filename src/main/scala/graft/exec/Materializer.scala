@@ -31,8 +31,18 @@ object Materializer {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  def readTarget(spark: SparkSession, path: String): Option[DataFrame] =
+  /** The table at `path`, if any. A table a crash left moved aside in the
+    * middle of a [[swap]] (at `path__old`, nothing at `path`) is renamed
+    * back first, so the next incremental run reads it instead of
+    * rebuilding from a full scan.
+    */
+  def readTarget(spark: SparkSession, path: String): Option[DataFrame] = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (target, old) = (new Path(path), new Path(path + "__old"))
+    if (!fs.exists(target) && fs.exists(old) && !fs.rename(old, target))
+      throw new IOException(s"could not restore $old to $path")
     if (exists(spark, path)) Some(spark.read.parquet(path)) else None
+  }
 
   /** `{{ this }}` watermark scan (SURVEY S4/P4/A6): max(col) of the
     * current target table; None when it holds no value.
@@ -42,11 +52,18 @@ object Materializer {
 
   /** Gold table sink — atomic overwrite via temp-dir + swap. */
   def overwriteTable(df: DataFrame, path: String): StructType = {
-    val spark = df.sparkSession
-    val tmp = path + "__tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    swap(spark, tmp, path)
+    stagedWrite(df, path)(df.write.mode("overwrite").parquet)
     df.schema
+  }
+
+  /** Write `df`'s table with `write(stagingPath)` into a staging sibling
+    * of `path`, then [[swap]] it onto `path`: a failed write never touches
+    * the target.
+    */
+  private def stagedWrite(df: DataFrame, path: String)(write: String => Unit): Unit = {
+    val tmp = path + "__tmp"
+    write(tmp)
+    swap(df.sparkSession, tmp, path)
   }
 
   /** Silver incremental sink: `upsertInto` the table now at `path`. */
@@ -70,14 +87,12 @@ object Materializer {
       path: String,
       keys: Seq[String],
       partitionCols: Seq[String] = Nil): StructType = {
-    val spark = newRows.sparkSession
     target match {
+      case None if partitionCols.isEmpty => overwriteTable(newRows, path)
       case None =>
-        if (partitionCols.isEmpty) overwriteTable(newRows, path)
-        else {
-          newRows.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-          newRows.schema
-        }
+        stagedWrite(newRows, path)(
+          newRows.write.mode("overwrite").partitionBy(partitionCols: _*).parquet)
+        newRows.schema
 
       case Some(old) if partitionCols.nonEmpty =>
         // Dynamic partition overwrite: merge only the partitions the batch
@@ -97,9 +112,7 @@ object Materializer {
         val kept = old.join(newRows.select(keys.map(col): _*).distinct(), keys, "left_anti")
         val merged = kept.unionByName(newRows, allowMissingColumns = true)
         // merged still reads from `path`; write to temp then swap.
-        val tmp = path + "__tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        swap(spark, tmp, path)
+        stagedWrite(merged, path)(merged.write.mode("overwrite").parquet)
         merged.schema
     }
   }
@@ -118,12 +131,11 @@ object Materializer {
     */
   def scd2Upsert(incoming: DataFrame, path: String, key: String,
       trackedCols: Seq[String], now: java.sql.Timestamp): Unit = {
-    val spark = incoming.sparkSession
     val stamped = incoming
       .withColumn("_valid_from", lit(now))
       .withColumn("_valid_to", lit(null).cast("timestamp"))
       .withColumn("_is_current", lit(true))
-    readTarget(spark, path) match {
+    readTarget(incoming.sparkSession, path) match {
       case None => overwriteTable(stamped, path)
       case Some(old) =>
         val cur = old.filter(col("_is_current"))
@@ -144,9 +156,7 @@ object Materializer {
           .unionByName(untouched, allowMissingColumns = true)
           .unionByName(newKeyRows, allowMissingColumns = true)
           .unionByName(newVersions, allowMissingColumns = true)
-        val tmp = path + "__tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        swap(spark, tmp, path)
+        stagedWrite(merged, path)(merged.write.mode("overwrite").parquet)
     }
   }
 
@@ -178,14 +188,10 @@ object Materializer {
       df: DataFrame,
       path: String,
       clusterCols: Seq[String],
-      numFiles: Int): Unit = {
-    val spark = df.sparkSession
-    val tmp = path + "__tmp"
-    df.repartitionByRange(numFiles, clusterCols.map(col): _*)
+      numFiles: Int): Unit =
+    stagedWrite(df, path)(df.repartitionByRange(numFiles, clusterCols.map(col): _*)
       .sortWithinPartitions(clusterCols.map(col): _*)
-      .write.mode("overwrite").parquet(tmp)
-    swap(spark, tmp, path)
-  }
+      .write.mode("overwrite").parquet)
 
   /** Z-order clustered write: multi-dimensional file clustering (the
     * OPTIMIZE ZORDER BY idea from the reference's Databricks notebook,
@@ -230,28 +236,39 @@ object Materializer {
         a.bitwiseOR(shiftleft(shiftrightunsigned(sc, b).bitwiseAND(lit(1L)), b * zCols.size + ci))
       }
     }
-    val spark = df.sparkSession
-    val tmp = path + "__tmp"
-    df.withColumn("__zcode", code)
+    stagedWrite(df, path)(df.withColumn("__zcode", code)
       .repartitionByRange(numFiles, col("__zcode"))
       .sortWithinPartitions("__zcode")
       .drop("__zcode")
-      .write.mode("overwrite").parquet(tmp)
-    swap(spark, tmp, path)
+      .write.mode("overwrite").parquet)
   }
 
-  /** Replace `path` with the staged table at `tmp`. The target is deleted
-    * only once the staged table is known to exist, and a failed rename
-    * throws rather than leaving no table behind silently.
+  /** Replace `path` with the staged table at `tmp`, so that a crash at
+    * any point leaves a table at `path` or at `path__old`:
+    *
+    *  1. delete any stale `path__old`;
+    *  2. rename the target to `path__old`;
+    *  3. rename the staged table onto the target;
+    *  4. delete `path__old`.
+    *
+    * A crash between 2 and 3 leaves the old table at `path__old`, which
+    * [[readTarget]] renames back. A missing staged table throws before
+    * anything moves; a failed step 3 moves the old table back and throws.
+    * A concurrent reader can still find `path` missing between steps 2
+    * and 3; a commit log (ROADMAP item 3) closes that gap.
     */
   private[exec] def swap(spark: SparkSession, tmp: String, path: String): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = new Path(tmp)
-    val target = new Path(path)
+    val (staged, target, old) = (new Path(tmp), new Path(path), new Path(path + "__old"))
     if (!fs.exists(staged))
       throw new FileNotFoundException(s"staged table $tmp does not exist; $path left as is")
-    if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(staged, target))
+    if (fs.exists(old)) fs.delete(old, true)
+    if (fs.exists(target) && !fs.rename(target, old))
+      throw new IOException(s"could not move $path aside to $old")
+    if (!fs.rename(staged, target)) {
+      if (fs.exists(old)) fs.rename(old, target)
       throw new IOException(s"could not rename staged table $tmp to $path")
+    }
+    fs.delete(old, true)
   }
 }

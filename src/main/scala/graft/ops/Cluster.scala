@@ -350,13 +350,17 @@ object Cluster {
       .unionByName(customer
         .select((col("c_custkey") + CustOffset).as("id")))
       .localCheckpoint()
-    prIterate(ed, nodes, smallGraphMaxEdges).select(
+    top20Nodes(prIterate(ed, nodes, smallGraphMaxEdges))
+  }
+
+  /** The 20 highest-ranked (id, r) nodes as (node_kind, node_id, rank_fp). */
+  private def top20Nodes(ranks: DataFrame): DataFrame =
+    ranks.select(
         when(col("id") >= CustOffset, "customer").otherwise("supplier").as("node_kind"),
         when(col("id") >= CustOffset, col("id") - CustOffset).otherwise(col("id")).as("node_id"),
         col("r").as("rank_fp"))
       .orderBy(col("rank_fp").desc, col("node_kind"), col("node_id"))
       .limit(20)
-  }
 
   /** The damped fixed-point iteration over a weighted edge list
     * (src, dst, w, wsum = Σ outgoing w per src): contribution is
@@ -524,12 +528,7 @@ object Cluster {
       .unionByName(Catalog.table(s, dir, "customer")
         .select((col("c_custkey") + CustOffset).as("id")))
       .localCheckpoint()
-    prIterate(ed, nodes).select(
-        when(col("id") >= CustOffset, "customer").otherwise("supplier").as("node_kind"),
-        when(col("id") >= CustOffset, col("id") - CustOffset).otherwise(col("id")).as("node_id"),
-        col("r").as("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("node_kind"), col("node_id"))
-      .limit(20)
+    top20Nodes(prIterate(ed, nodes))
   }
 
   val all: Seq[Q] = Seq(q65, q71, q82)

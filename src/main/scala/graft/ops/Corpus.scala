@@ -44,14 +44,7 @@ object Corpus {
       |GROUP BY 1, 2
       |ORDER BY pair_count DESC, left_tok, right_tok
       |LIMIT 20""".stripMargin) { (s, dir) =>
-    docs(s, dir)
-      .select(TextOps.tokens(col("text")).as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(t)-1), i -> struct(element_at(t, i) AS a, element_at(t, i+1) AS b))"))
-        .as("p"))
-      .groupBy(col("p.a").as("left_tok"), col("p.b").as("right_tok"))
-      .agg(count(lit(1)).as("pair_count"))
+    pairCountsOf(docs(s, dir).select(TextOps.tokens(col("text")).as("t")))
       .orderBy(col("pair_count").desc, col("left_tok"), col("right_tok"))
       .limit(20)
   }
@@ -436,26 +429,19 @@ object Corpus {
   val q105 = Q("q105_bpe_merge_loop", q105OracleSql) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
     val tk = docs(s, dir).select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
-    def pairCounts(toks: DataFrame): DataFrame = toks
-      .filter(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(t)-1), i -> struct(element_at(t, i) AS a, element_at(t, i+1) AS b))"))
-        .as("p"))
-      .groupBy(col("p.a").as("left_tok"), col("p.b").as("right_tok"))
-      .agg(count(lit(1)).as("pair_count"))
     def top20(c: DataFrame, round: Int): DataFrame = c
       .orderBy(col("pair_count").desc, col("left_tok"), col("right_tok")).limit(20)
       .withColumn("merge_rank", row_number().over(
         Window.orderBy(col("pair_count").desc, col("left_tok"), col("right_tok"))).cast("long"))
       .select(lit(round.toLong).as("round"), col("merge_rank"),
         col("left_tok"), col("right_tok"), col("pair_count"))
-    val c1 = pairCounts(tk).localCheckpoint()
+    val c1 = pairCountsOf(tk).localCheckpoint()
     val top1 = c1.orderBy(col("pair_count").desc, col("left_tok"), col("right_tok")).limit(1)
       .select(col("left_tok").as("ma"), col("right_tok").as("mb"))
     val tk2 = tk.crossJoin(broadcast(top1))
       .select(col("doc_id"),
         graft.functions.BpeMerge(col("t"), col("ma"), col("mb")).as("t"))
-    top20(c1, 1).unionByName(top20(pairCounts(tk2), 2))
+    top20(c1, 1).unionByName(top20(pairCountsOf(tk2), 2))
       .orderBy("round", "merge_rank")
   }
 

@@ -560,8 +560,7 @@ object Dedup {
     graft.exec.DerivedStore.cached("curation_stores", dir, "documents") { root =>
       val d = docs(s, dir).select(col("doc_id"), col("text"), col("source"))
       graft.streaming.CurationStream.processBatch(
-        d, s"$root/fp", s"$root/index", s"$root/decisions", 0L,
-        Some(s"$root/accepted"), Some(s"$root/quarantine"))
+        d, graft.streaming.CurationStream.Layout(root), 0L)
     }
 
   private def q133OracleSql: String =
@@ -616,9 +615,8 @@ object Dedup {
   }
 
   val q133 = Q("q133_quarantine_rates", q133OracleSql) { (s, dir) =>
-    val root = buildCurationStores(s, dir)
-    quarantineRates(s.read.parquet(s"$root/accepted"),
-      s.read.parquet(s"$root/quarantine"))
+    val stores = graft.streaming.CurationStream.Layout(buildCurationStores(s, dir))
+    quarantineRates(s.read.parquet(stores.accepted), s.read.parquet(stores.quarantine))
   }
 
   private def q134OracleSql: String =
@@ -657,24 +655,15 @@ object Dedup {
     * (doc_id, text), via the distributed PrefixSum.
     */
   def packAccepted(accepted: DataFrame): DataFrame = {
-    val toks = accepted
-      .select(col("doc_id"), TextOps.tokenCount(col("text")).as("n_tokens"))
-    graft.exec.PrefixSum.runningTotal(toks, "doc_id", "n_tokens", "cum_tokens")
-      .withColumn("pack_id",
-        floor((col("cum_tokens") - col("n_tokens")) / 2048.0).cast("long"))
-      .groupBy("pack_id")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).cast("long").as("pack_tokens"),
-        min(col("doc_id")).as("first_doc"),
-        max(col("doc_id")).as("last_doc"))
+    TextOps.packShards(accepted
+        .select(col("doc_id"), TextOps.tokenCount(col("text")).as("n_tokens")))
       .withColumn("fill_bp", expr("(pack_tokens * 10000) div 2048"))
       .orderBy("pack_id")
   }
 
   val q134 = Q("q134_curated_packing", q134OracleSql) { (s, dir) =>
-    val root = buildCurationStores(s, dir)
-    packAccepted(s.read.parquet(s"$root/accepted"))
+    val stores = graft.streaming.CurationStream.Layout(buildCurationStores(s, dir))
+    packAccepted(s.read.parquet(stores.accepted))
   }
 
   // ── n-gram Jaccard ────────────────────────────────────────────────────
@@ -1287,6 +1276,16 @@ object Dedup {
     val pairs = jaccardLshPairs(d, 0.5)
       .select(col("doc_id").as("src"), col("doc_b").as("dst"))
       .localCheckpoint() // the LSH pipeline feeds edges, vertices, AND the CC loop — evaluate once
+    majorityRepair(pairs, splits)
+      .select(col("doc_id"), col("cluster_id"), col("split"), col("final_split"),
+        (col("split") =!= col("final_split")).as("moved"))
+  }
+
+  /** Each doc of the pair graph `pairs` (src, dst) with its connected
+    * component and that component's majority split (ties to the lowest
+    * split name): (cluster_id, doc_id, split, final_split).
+    */
+  private def majorityRepair(pairs: DataFrame, splits: DataFrame): DataFrame = {
     val verts = pairs.select(col("src").as("id"))
       .union(pairs.select(col("dst").as("id"))).distinct()
     val members = Cluster.connectedComponents(pairs, verts)
@@ -1298,8 +1297,6 @@ object Dedup {
       .filter(col("rn") === 1)
       .select(col("cluster_id"), col("split").as("final_split"))
     members.join(majority, Seq("cluster_id"))
-      .select(col("doc_id"), col("cluster_id"), col("split"), col("final_split"),
-        (col("split") =!= col("final_split")).as("moved"))
   }
 
   val q138 = Q("q138_leak_repair", q138OracleSql) { (s, dir) =>
@@ -1433,18 +1430,8 @@ object Dedup {
           lit(false)).as("moved_in"))
     val toks = d.select(col("doc_id"), size(TextOps.tokens(col("text"))).as("n_tokens"))
       .join(fin.filter(col("split") === "train"), Seq("doc_id"))
-    graft.exec.PrefixSum.runningTotal(
-        toks.select(col("doc_id"), col("n_tokens"), col("moved_in")),
-        "doc_id", "n_tokens", "cum_tokens")
-      .withColumn("pack_id",
-        floor((col("cum_tokens") - col("n_tokens")) / 2048.0).cast("long"))
-      .groupBy("pack_id")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).cast("long").as("pack_tokens"),
-        sum(when(col("moved_in"), 1L).otherwise(0L)).as("n_moved_in"),
-        min(col("doc_id")).as("first_doc"),
-        max(col("doc_id")).as("last_doc"))
+    TextOps.packShards(toks.select(col("doc_id"), col("n_tokens"), col("moved_in")),
+        sum(when(col("moved_in"), 1L).otherwise(0L)).as("n_moved_in"))
       .orderBy("pack_id")
   }
 
@@ -1571,7 +1558,14 @@ object Dedup {
         coalesce(col("hp2"), emptyPos).as("hp2"))
       .select(col("doc_id"), covered("hp1").as("nr1"), covered("hp2").as("nr2"))
       .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
-    per.groupBy("source")
+    releaseDelta(per)
+  }
+
+  /** q142's per-source release delta over per-doc (source, nr1, nr2)
+    * removed-token counts under releases v1 and v2.
+    */
+  private def releaseDelta(perDoc: DataFrame): DataFrame =
+    perDoc.groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),
         sum(when(col("nr1") === 0 && col("nr2") > 0, 1L).otherwise(0L))
@@ -1579,7 +1573,6 @@ object Dedup {
         sum(col("nr2") - col("nr1")).cast("long").as("delta_tokens_removed"),
         sum(col("nr2")).cast("long").as("tokens_removed_v2"))
       .orderBy("source")
-  }
 
   /** q143 — the release rotation SERVED off stores: each benchmark
     * release owns a frozen, content-addressed verdict store
@@ -1600,15 +1593,7 @@ object Dedup {
       .select(col("doc_id"), col("n_removed").as("nr1"))
     val v2 = s.read.parquet(s"$v2Root/rows")
       .select(col("doc_id"), col("source"), col("n_removed").as("nr2"))
-    v1.join(v2, Seq("doc_id"))
-      .groupBy("source")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("nr1") === 0 && col("nr2") > 0, 1L).otherwise(0L))
-          .as("n_newly_contaminated"),
-        sum(col("nr2") - col("nr1")).cast("long").as("delta_tokens_removed"),
-        sum(col("nr2")).cast("long").as("tokens_removed_v2"))
-      .orderBy("source")
+    releaseDelta(v1.join(v2, Seq("doc_id")))
   }
 
   private def q144OracleSql: String = {
@@ -1741,21 +1726,11 @@ object Dedup {
       .select(col("doc_id").as("src"), col("doc_b").as("dst"))
       .localCheckpoint() // feeds edges, vertices, the CC loop, and both flags
     val splits = d.select(col("doc_id"), TextOps.splitAssignment(col("text")).as("split"))
-    val verts = pairs.select(col("src").as("id"))
-      .union(pairs.select(col("dst").as("id"))).distinct()
-    val members = Cluster.connectedComponents(pairs, verts)
-      .join(splits, col("id") === col("doc_id"))
-      .select(col("doc_id"), col("component").as("cluster_id"), col("split"))
-    val majority = members.groupBy("cluster_id", "split").agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("cluster_id").orderBy(col("cnt").desc, col("split").asc)))
-      .filter(col("rn") === 1)
-      .select(col("cluster_id"), col("split").as("final_split"))
     val lexDocs = lex.select(col("doc_id")).union(lex.select(col("doc_b").as("doc_id")))
       .distinct().withColumn("in_lexical", lit(true))
     val semDocs = sem.select(col("doc_id")).union(sem.select(col("doc_b").as("doc_id")))
       .distinct().withColumn("in_semantic", lit(true))
-    members.join(majority, Seq("cluster_id"))
+    majorityRepair(pairs, splits)
       .join(lexDocs, Seq("doc_id"), "left")
       .join(semDocs, Seq("doc_id"), "left")
       .select(col("doc_id"), col("cluster_id"), col("split"), col("final_split"),
@@ -1812,18 +1787,8 @@ object Dedup {
       .select(col("doc_id"),
         (col("n_tokens_before") - col("n_removed")).as("n_tokens"),
         (col("n_removed") > 0).as("was_scrubbed"))
-    graft.exec.PrefixSum.runningTotal(
-        keep.select(col("doc_id"), col("n_tokens"), col("was_scrubbed")),
-        "doc_id", "n_tokens", "cum_tokens")
-      .withColumn("pack_id",
-        floor((col("cum_tokens") - col("n_tokens")) / 2048.0).cast("long"))
-      .groupBy("pack_id")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).cast("long").as("pack_tokens"),
-        sum(when(col("was_scrubbed"), 1L).otherwise(0L)).as("n_scrubbed_docs"),
-        min(col("doc_id")).as("first_doc"),
-        max(col("doc_id")).as("last_doc"))
+    TextOps.packShards(keep.select(col("doc_id"), col("n_tokens"), col("was_scrubbed")),
+        sum(when(col("was_scrubbed"), 1L).otherwise(0L)).as("n_scrubbed_docs"))
       .orderBy("pack_id")
   }
 

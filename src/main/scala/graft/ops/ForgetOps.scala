@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Catalog
 import graft.exec.DerivedStore
 import graft.queries.Q
-import graft.streaming.{CorpusStream, Forget, LshStream}
+import graft.streaming.{CorpusStream, CurationStream, Forget, LshStream}
 
 /** q200-q202 — right-to-be-forgotten over the artifact stores, end to
   * end: a deterministic forget set (doc_id % 17 = 3, ~6 % of the corpus)
@@ -37,6 +37,38 @@ object ForgetOps {
   private val survivorsSql =
     s"(SELECT * FROM documents WHERE doc_id % $ForgetMod <> $ForgetRes)"
 
+  // ── id-ordered landings ───────────────────────────────────────────────
+
+  /** The width of `n` id-ordered landings of `d`: max(doc_id) / n. */
+  private def landingWidth(d: DataFrame, n: Int): Long =
+    d.agg(max(col("doc_id"))).head().getLong(0) / n
+
+  /** Lands `d` as `n` id-ordered slices of width `w` through `land(slice,
+    * k)`: slice k holds the doc_ids in [k·w, (k+1)·w), the first open
+    * below and the last open above.
+    */
+  private def landSlices(d: DataFrame, n: Int, w: Long)(
+      land: (DataFrame, Long) => Unit): Unit =
+    (0 until n).foreach { k =>
+      val id = col("doc_id")
+      land(d.filter(
+        if (k == 0) id < w
+        else if (k == n - 1) id >= k * w
+        else id >= k * w && id < (k + 1) * w), k.toLong)
+    }
+
+  private def landSlices(d: DataFrame, n: Int)(
+      land: (DataFrame, Long) => Unit): Unit =
+    landSlices(d, n, landingWidth(d, n))(land)
+
+  /** Each doc's slice under [[landSlices]]: the `src_batch` a split forget
+    * negates.
+    */
+  private def landingOf(w: Long, n: Int): Column =
+    (1 until n - 1).foldLeft(when(col("doc_id") < w, 0L)) { (c, k) =>
+      c.when(col("doc_id") < (k + 1) * w, k.toLong)
+    }.otherwise(n - 1L)
+
   // ── the LM store with a forget landing ────────────────────────────────
 
   /** Two id-ordered LM cell landings (split at max(doc_id)/2), then the
@@ -46,9 +78,7 @@ object ForgetOps {
   def buildLmForgetStore(s: SparkSession, dir: String): String =
     DerivedStore.cached("lm_forget", dir, "documents") { root =>
       val d = docs(s, dir)
-      val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-      CorpusStream.writeLmDelta(d.filter(col("doc_id") < cut), root, 0L)
-      CorpusStream.writeLmDelta(d.filter(col("doc_id") >= cut), root, 1L)
+      landSlices(d, 2)((sl, k) => CorpusStream.writeLmDelta(sl, root, k))
       Forget.forgetLmDocs(d.filter(forgottenPred), root, 2L)
     }
 
@@ -66,13 +96,8 @@ object ForgetOps {
   val q200 = Q("q200_lm_forget", q200OracleSql) { (s, dir) =>
     val store = buildLmForgetStore(s, dir)
     val survivors = docs(s, dir).filter(!forgottenPred)
-    graft.ops.TextOps.fluencyScoredFromCounts(survivors,
-        Some(Forget.lmCountsAfterForget(s, store)))
-      .select(col("doc_id"), col("n_bigrams"),
-        when(col("n_bigrams") === 0, lit(0.0))
-          .otherwise(col("sum_fp").cast("double") / (col("n_bigrams") * lit(1000000.0)))
-          .as("fluency_score"))
-      .orderBy("doc_id")
+    TextOps.fluencyScores(survivors,
+      Some(Forget.lmCountsAfterForget(s, store)))
   }
 
   // ── the band store with forget + re-election ──────────────────────────
@@ -86,9 +111,7 @@ object ForgetOps {
     val root = DerivedStore.cached("lsh_forget", dir, "documents") { root =>
       val (idx, dec, rep) = (s"$root/index", s"$root/decisions", s"$root/report")
       val d = docs(s, dir).select("doc_id", "source", "text")
-      val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-      LshStream.processBatch(d.filter(col("doc_id") < cut), idx, dec, 0L)
-      LshStream.processBatch(d.filter(col("doc_id") >= cut), idx, dec, 1L)
+      landSlices(d, 2)((sl, k) => LshStream.processBatch(sl, idx, dec, k))
       val fIds = d.filter(forgottenPred).select("doc_id")
       val r = Forget.reelectBandStores(s, idx, dec, fIds)
       import s.implicits._
@@ -168,9 +191,7 @@ object ForgetOps {
     val root = DerivedStore.cached("div_forget", dir, "documents") { root =>
       val (dims, stats) = (s"$root/dims", s"$root/stats")
       val d = docs(s, dir)
-      val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-      CorpusStream.writeDivDelta(d.filter(col("doc_id") < cut), dims, stats, 0L)
-      CorpusStream.writeDivDelta(d.filter(col("doc_id") >= cut), dims, stats, 1L)
+      landSlices(d, 2)((sl, k) => CorpusStream.writeDivDelta(sl, dims, stats, k))
       Forget.forgetDivDocs(d.filter(forgottenPred), dims, stats, 2L)
     }
     (s"$root/dims", s"$root/stats")
@@ -210,17 +231,14 @@ object ForgetOps {
   def buildCurationForgetStore(s: SparkSession, dir: String): String =
     DerivedStore.cached("cur_forget", dir, "documents") { root =>
       val d = docs(s, dir).select("doc_id", "text", "source")
-      graft.streaming.CurationStream.processBatch(
-        d, s"$root/fp", s"$root/index", s"$root/decisions", 0L,
-        Some(s"$root/accepted"), Some(s"$root/quarantine"))
+      val stores = CurationStream.Layout(root)
+      CurationStream.processBatch(d, stores, 0L)
       Forget.forgetFromCurationStores(s, root,
         d.filter(forgottenPred).select("doc_id"), correctiveId = 1L)
       val replay = d.filter(forgottenPred)
         .select((col("doc_id") + lit(ReplayOffset)).as("doc_id"),
           col("text"), col("source"))
-      graft.streaming.CurationStream.processBatch(
-        replay, s"$root/fp", s"$root/index", s"$root/decisions", 2L,
-        Some(s"$root/accepted"), Some(s"$root/quarantine"))
+      CurationStream.processBatch(replay, stores, 2L)
     }
 
   private def q204OracleSql: String = {
@@ -252,10 +270,8 @@ object ForgetOps {
     * in both directions. Serving is a pure decisions-store read.
     */
   val q204 = Q("q204_curation_amnesia", q204OracleSql) { (s, dir) =>
-    val root = buildCurationForgetStore(s, dir)
-    s.read.parquet(s"$root/decisions")
-      .select("doc_id", "is_exact_dup", "exact_dup_of",
-        "n_earlier", "dup_of", "is_band_dup")
+    s.read.parquet(CurationStream.Layout(buildCurationForgetStore(s, dir)).decisions)
+      .select(CurationStream.DecisionCols.map(col): _*)
       .orderBy("doc_id")
   }
 
@@ -267,9 +283,7 @@ object ForgetOps {
   def buildKAnonForgetStore(s: SparkSession, dir: String): String =
     DerivedStore.cached("kanon_forget", dir, "documents") { root =>
       val d = docs(s, dir)
-      val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-      CorpusStream.writeKAnonDelta(d.filter(col("doc_id") < cut), root, 0L)
-      CorpusStream.writeKAnonDelta(d.filter(col("doc_id") >= cut), root, 1L)
+      landSlices(d, 2)((sl, k) => CorpusStream.writeKAnonDelta(sl, root, k))
       Forget.forgetKAnonDocs(d.filter(forgottenPred), root, 2L)
     }
 
@@ -309,15 +323,12 @@ object ForgetOps {
     */
   def buildTrendForgetStore(s: SparkSession, dir: String): (String, Seq[Long]) = {
     val d = docs(s, dir)
-    val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
+    val q = landingWidth(d, 4)
     val bounds = Seq(q, 2 * q, 3 * q, Long.MaxValue)
     val root = DerivedStore.cached("trend_forget", dir, "documents") { root =>
       val deltas = s"$root/deltas"
-      bounds.zipWithIndex.foreach { case (hi, k) =>
-        val lo = if (k == 0) Long.MinValue else bounds(k - 1)
-        graft.streaming.ScrubStream.writeShingleDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
-      }
+      landSlices(d, 4, q)((sl, k) =>
+        graft.streaming.ScrubStream.writeShingleDelta(sl, deltas, k))
       graft.streaming.StoreCompaction.registerPin(deltas, "trend_history", 0L)
       Forget.surgicalDelete(s, deltas, d.filter(forgottenPred).select("doc_id"))
     }
@@ -354,12 +365,9 @@ object ForgetOps {
       val bench = s.read.parquet(s"$benchRoot/hashes").localCheckpoint()
       val corpus = docs(s, dir).filter(col("doc_id") >= 50)
         .select(col("doc_id"), col("text"), col("source"))
-      val cut = corpus.agg(max(col("doc_id"))).head().getLong(0) / 2
-      Seq(col("doc_id") < cut, col("doc_id") >= cut).zipWithIndex.foreach {
-        case (p, b) =>
-          graft.streaming.ScrubStream.batchScrub(corpus.filter(p), bench)
-            .write.mode("overwrite").parquet(s"$rows/batch_id=$b")
-      }
+      landSlices(corpus, 2)((sl, b) =>
+        graft.streaming.ScrubStream.batchScrub(sl, bench)
+          .write.mode("overwrite").parquet(s"$rows/batch_id=$b"))
       Forget.surgicalDelete(s, rows,
         docs(s, dir).filter(forgottenPred).select("doc_id"))
     }
@@ -450,9 +458,7 @@ object ForgetOps {
     val root = DerivedStore.cached("span_forget", dir, "documents") { root =>
       val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text")
-      val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-      CorpusStream.writeSpanDelta(d.filter(col("doc_id") < cut), deltas, 0L)
-      CorpusStream.writeSpanDelta(d.filter(col("doc_id") >= cut), deltas, 1L)
+      landSlices(d, 2)((sl, k) => CorpusStream.writeSpanDelta(sl, deltas, k))
       Forget.forgetSpanCells(s, deltas, d.filter(forgottenPred),
         d.filter(!forgottenPred), correctiveId = 2L)
     }
@@ -487,9 +493,7 @@ object ForgetOps {
     val root = DerivedStore.cached("cdc_forget", dir, "documents") { root =>
       val (chunks, nd) = (s"$root/chunks", s"$root/docs")
       val d = docs(s, dir).select("doc_id", "source", "text")
-      val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-      CorpusStream.writeCdcDelta(d.filter(col("doc_id") < cut), chunks, nd, 0L)
-      CorpusStream.writeCdcDelta(d.filter(col("doc_id") >= cut), chunks, nd, 1L)
+      landSlices(d, 2)((sl, k) => CorpusStream.writeCdcDelta(sl, chunks, nd, k))
       Forget.forgetCdcDocs(d.filter(forgottenPred), chunks, nd, 2L)
     }
     (s"$root/chunks", s"$root/docs")
@@ -521,9 +525,7 @@ object ForgetOps {
     val root = DerivedStore.cached("cs_forget", dir, "documents") { root =>
       val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text")
-      val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-      CorpusStream.writeCsDelta(d.filter(col("doc_id") < cut), deltas, 0L)
-      CorpusStream.writeCsDelta(d.filter(col("doc_id") >= cut), deltas, 1L)
+      landSlices(d, 2)((sl, k) => CorpusStream.writeCsDelta(sl, deltas, k))
       Forget.surgicalDelete(s, deltas,
         d.filter(forgottenPred).select("doc_id"))
     }
@@ -589,15 +591,21 @@ object ForgetOps {
        |ORDER BY k.kind""".stripMargin) { (s, dir) =>
     val store = buildAssetForgetStore(s, dir)
     val fIds = docs(s, dir).filter(forgottenPred).select("doc_id")
-    val assets = s.read.parquet(store)
-    val left = assets.join(broadcast(fIds), Seq("doc_id"), "left_semi")
+    assetAudit(s.read.parquet(store), fIds, "n_forgotten_left")
+  }
+
+  /** Per payload kind of `assets`: row count, id mass, and the rows left
+    * whose doc is in `gone` (as `leftCol`).
+    */
+  private def assetAudit(assets: DataFrame, gone: DataFrame, leftCol: String): DataFrame = {
+    val left = assets.join(broadcast(gone), Seq("doc_id"), "left_semi")
       .groupBy("kind").agg(count(lit(1)).as("n_left"))
     assets.groupBy("kind")
       .agg(count(lit(1)).as("n_rows"),
         sum(col("doc_id")).cast("long").as("sum_doc_id"))
       .join(left, Seq("kind"), "left")
       .select(col("kind"), col("n_rows"), col("sum_doc_id"),
-        coalesce(col("n_left"), lit(0L)).as("n_forgotten_left"))
+        coalesce(col("n_left"), lit(0L)).as(leftCol))
       .orderBy("kind")
   }
 
@@ -687,19 +695,12 @@ object ForgetOps {
     */
   def buildLmPinForgetStore(s: SparkSession, dir: String): (String, Long) = {
     val d = docs(s, dir)
-    val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
+    val q = landingWidth(d, 4)
     val root = DerivedStore.cached("lmpin_forget", dir, "documents") { root =>
-      val bounds = Seq(
-        Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), root, k.toLong)
-      }
+      landSlices(d, 4, q)((sl, k) => CorpusStream.writeLmDelta(sl, root, k))
       graft.streaming.StoreCompaction.registerPin(root, "release_b1", 1L)
       val forgotten = d.filter(forgottenPred)
-        .withColumn("src_batch",
-          when(col("doc_id") < q, 0L).when(col("doc_id") < 2 * q, 1L)
-            .when(col("doc_id") < 3 * q, 2L).otherwise(3L))
+        .withColumn("src_batch", landingOf(q, 4))
       Forget.forgetSumCellsSplit(forgotten, Forget.lmCellTarget(root),
         requestId = 0L)
     }
@@ -738,13 +739,8 @@ object ForgetOps {
     graft.streaming.StoreCompaction.requireServableAt(store, 1L)
     val pinnedSurvivors = docs(s, dir)
       .filter(!forgottenPred && col("doc_id") < cut2)
-    graft.ops.TextOps.fluencyScoredFromCounts(pinnedSurvivors,
-        Some(Forget.lmCountsAfterForget(s, store, upto = 1L)))
-      .select(col("doc_id"), col("n_bigrams"),
-        when(col("n_bigrams") === 0, lit(0.0))
-          .otherwise(col("sum_fp").cast("double") / (col("n_bigrams") * lit(1000000.0)))
-          .as("fluency_score"))
-      .orderBy("doc_id")
+    TextOps.fluencyScores(pinnedSurvivors,
+      Some(Forget.lmCountsAfterForget(s, store, upto = 1L)))
   }
 
   // ── q215: retention expiry + windowed serving + split forget compose ──
@@ -759,18 +755,11 @@ object ForgetOps {
     */
   def buildLmTtlStore(s: SparkSession, dir: String): (String, Long) = {
     val d = docs(s, dir)
-    val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
+    val q = landingWidth(d, 4)
     val root = DerivedStore.cached("lmttl", dir, "documents") { root =>
-      val bounds = Seq(
-        Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), root, k.toLong)
-      }
+      landSlices(d, 4, q)((sl, k) => CorpusStream.writeLmDelta(sl, root, k))
       val forgotten = d.filter(forgottenPred)
-        .withColumn("src_batch",
-          when(col("doc_id") < q, 0L).when(col("doc_id") < 2 * q, 1L)
-            .when(col("doc_id") < 3 * q, 2L).otherwise(3L))
+        .withColumn("src_batch", landingOf(q, 4))
       Forget.forgetSumCellsSplit(forgotten, Forget.lmCellTarget(root),
         requestId = 0L)
       graft.streaming.StoreCompaction.expireBefore(root, lo = 2L)
@@ -804,13 +793,8 @@ object ForgetOps {
     val (store, cut2) = buildLmTtlStore(s, dir)
     val windowSurvivors = docs(s, dir)
       .filter(!forgottenPred && col("doc_id") >= cut2)
-    graft.ops.TextOps.fluencyScoredFromCounts(windowSurvivors,
-        Some(Forget.lmCountsAfterForgetWindow(s, store, lo = 2L)))
-      .select(col("doc_id"), col("n_bigrams"),
-        when(col("n_bigrams") === 0, lit(0.0))
-          .otherwise(col("sum_fp").cast("double") / (col("n_bigrams") * lit(1000000.0)))
-          .as("fluency_score"))
-      .orderBy("doc_id")
+    TextOps.fluencyScores(windowSurvivors,
+      Some(Forget.lmCountsAfterForgetWindow(s, store, lo = 2L)))
   }
 
   // ── q216: ANN retrieval AFTER erasure (file-level surgical delete) ────
@@ -855,47 +839,7 @@ object ForgetOps {
   val q216 = Q("q216_retrieval_after_forget",
     Similarity.q99OracleSql(s" AND vec_id % $ForgetMod <> $ForgetRes", candidates = true)) {
     (s, dir) =>
-      import graft.ops.Similarity.{PqM, PqSubDim, PqK, NProbe, asDouble, dot, norm, sqDist}
-      val store = buildPqForgetStore(s, dir)
-      val e = Catalog.table(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-      val codes = s.read.parquet(store)
-      val cents = s.read.parquet(Similarity.buildIvfIndex(s, dir))
-      val qrow = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val qsub = qrow.select(explode(array((0 until PqM).map(m =>
-          struct(lit(m).as("m"), slice(col("qv"), m * PqSubDim + 1, PqSubDim).as("sv"))): _*)).as("p"))
-        .select(col("p.m").as("qm"), col("p.sv").as("qs"))
-      val cb = e.filter(col("vec_id") < PqK)
-        .select(col("vec_id").as("k"), explode(array((0 until PqM).map(m =>
-          struct(lit(m).as("m"), slice(col("v"), m * PqSubDim + 1, PqSubDim).as("cw"))): _*)).as("p"))
-        .select(col("k"), col("p.m").as("cm"), col("p.cw").as("cw"))
-      val lut = qsub.join(cb, col("qm") === col("cm"))
-        .select(col("cm").as("lm"), col("k").as("lk"), sqDist(col("qs"), col("cw")).as("ld"))
-      val probes = cents.crossJoin(broadcast(qrow))
-        .select(col("label").as("probe_label"),
-          (dot(col("qv"), col("centroid")) / (norm(col("qv")) * norm(col("centroid")))).as("c_sim"))
-        .orderBy(col("c_sim").desc, col("probe_label"))
-        .limit(NProbe)
-      val adc = e.filter(col("vec_id") =!= 0)
-        .join(broadcast(probes.select("probe_label")),
-          col("label") === col("probe_label"), "left_semi")
-        .select("vec_id", "label")
-        .join(codes, Seq("vec_id"))
-        .join(broadcast(lut), col("m") === col("lm") && col("k") === col("lk"))
-        .groupBy("vec_id", "label")
-        .agg(sum(floor(col("ld") * lit(1000000.0)).cast("long")).as("adc_fp"))
-        .localCheckpoint()
-      val nCand = adc.agg(count(lit(1)).cast("long").as("n_candidates"))
-      val shortlist = adc.orderBy("adc_fp", "vec_id").limit(10)
-        .select(col("vec_id"), col("label"),
-          (col("adc_fp").cast("double") / lit(1000000.0)).as("adc_dist"))
-      shortlist
-        .join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-        .crossJoin(broadcast(qrow))
-        .crossJoin(broadcast(nCand))
-        .select(col("vec_id"), col("label"), col("adc_dist"), col("n_candidates"),
-          (dot(col("qv"), col("v")) / (norm(col("qv")) * norm(col("v")))).as("cosine_sim"))
-        .orderBy("adc_dist", "vec_id")
+      Similarity.pqSearch(s, dir, buildPqForgetStore(s, dir), candidates = true)
   }
 
   // ── q217: the erasure certificate, ground-truthed ─────────────────────
@@ -911,23 +855,20 @@ object ForgetOps {
     val root = DerivedStore.cached("cert", dir, "documents") { root =>
       val markers = s"$root/markers"
       val d = Catalog.table(s, dir, "documents").localCheckpoint()
-      val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
+      val cut = landingWidth(d, 2)
       val (lm, kanon, chunks, nd, shingle, assets) = (s"$root/lm",
         s"$root/kanon", s"$root/chunks", s"$root/nd", s"$root/shingle",
         s"$root/assets")
-      Seq(col("doc_id") < cut, col("doc_id") >= cut).zipWithIndex.foreach {
-        case (p, b) =>
-          val sl = d.filter(p)
-          CorpusStream.writeLmDelta(sl, lm, b.toLong)
-          CorpusStream.writeKAnonDelta(sl, kanon, b.toLong)
-          CorpusStream.writeCdcDelta(sl, chunks, nd, b.toLong)
-          graft.streaming.ScrubStream.writeShingleDelta(sl, shingle, b.toLong)
+      landSlices(d, 2, cut) { (sl, b) =>
+        CorpusStream.writeLmDelta(sl, lm, b)
+        CorpusStream.writeKAnonDelta(sl, kanon, b)
+        CorpusStream.writeCdcDelta(sl, chunks, nd, b)
+        graft.streaming.ScrubStream.writeShingleDelta(sl, shingle, b)
       }
       s.read.parquet(graft.ops.Multimodal.buildAssetStore(s, dir))
         .repartition(col("kind"))
         .write.partitionBy("kind").mode("overwrite").parquet(assets)
-      val content = d.withColumn("src_batch",
-        when(col("doc_id") < cut, 0L).otherwise(1L))
+      val content = d.withColumn("src_batch", landingOf(cut, 2))
       graft.streaming.ForgetStream.processBatch(
         d.filter(forgottenPred).select("doc_id"), content,
         graft.streaming.ForgetStream.ForgetTargets(
@@ -996,14 +937,11 @@ object ForgetOps {
     */
   def buildShingleTtlStore(s: SparkSession, dir: String): (String, Long) = {
     val d = docs(s, dir)
-    val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
+    val q = landingWidth(d, 4)
     val root = DerivedStore.cached("shingle_ttl", dir, "documents") { root =>
       val deltas = s"$root/deltas"
-      val bounds = Seq(
-        Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        graft.streaming.ScrubStream.writeShingleDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
+      landSlices(d, 4, q) { (sl, k) =>
+        graft.streaming.ScrubStream.writeShingleDelta(sl, deltas, k)
       }
       Forget.surgicalDelete(s, deltas, d.filter(forgottenPred).select("doc_id"))
       graft.streaming.StoreCompaction.expireBefore(deltas, 2L)
@@ -1049,7 +987,7 @@ object ForgetOps {
     */
   def buildLmEpochStore(s: SparkSession, dir: String): (String, String, Long) = {
     val d = docs(s, dir)
-    val o = d.agg(max(col("doc_id"))).head().getLong(0) / 8
+    val o = landingWidth(d, 8)
     // the split wave below decodes src_batch with `doc_id div o`: o=0
     // would null the div (non-ANSI) and silently land every negative
     // under least(null, 7) = 7 — refuse loudly on a degenerate fixture
@@ -1057,12 +995,7 @@ object ForgetOps {
     val root = DerivedStore.cached("lmepoch", dir, "documents") { root =>
       val deltas = s"$root/deltas"
       val audit = s"$root/expiry_audit"
-      (0 until 8).foreach { k =>
-        val lo = if (k == 0) Long.MinValue else k * o
-        val hi = if (k == 7) Long.MaxValue else (k + 1) * o
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
-      }
+      landSlices(d, 8, o)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
       val forgotten = d.filter(forgottenPred)
         .withColumn("src_batch", least(expr(s"doc_id div $o"), lit(7L)).cast("long"))
       Forget.forgetSumCellsSplit(forgotten, Forget.lmCellTarget(deltas),
@@ -1099,13 +1032,8 @@ object ForgetOps {
     val (store, _, cut6) = buildLmEpochStore(s, dir)
     val windowSurvivors = docs(s, dir)
       .filter(!forgottenPred && col("doc_id") >= cut6)
-    graft.ops.TextOps.fluencyScoredFromCounts(windowSurvivors,
-        Some(Forget.lmCountsAfterForgetWindow(s, store, lo = 6L)))
-      .select(col("doc_id"), col("n_bigrams"),
-        when(col("n_bigrams") === 0, lit(0.0))
-          .otherwise(col("sum_fp").cast("double") / (col("n_bigrams") * lit(1000000.0)))
-          .as("fluency_score"))
-      .orderBy("doc_id")
+    TextOps.fluencyScores(windowSurvivors,
+      Some(Forget.lmCountsAfterForgetWindow(s, store, lo = 6L)))
   }
 
   /** q220 — the EXPIRY CERTIFICATE, ground-truthed: q217's
@@ -1156,16 +1084,13 @@ object ForgetOps {
     */
   def buildAssetTtlStore(s: SparkSession, dir: String): (String, String, Long) = {
     val d = docs(s, dir)
-    val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
+    val q = landingWidth(d, 4)
     val root = DerivedStore.cached("asset_ttl", dir, "documents") { root =>
       val store = s"$root/assets"
       val audit = s"$root/expiry_audit"
       val assets = s.read.parquet(Multimodal.buildAssetStore(s, dir))
-      val bounds = Seq(
-        Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        assets.filter(col("doc_id") >= lo && col("doc_id") < hi)
-          .repartition(col("kind"))
+      landSlices(assets, 4, q) { (sl, k) =>
+        sl.repartition(col("kind"))
           .write.partitionBy("kind").mode("overwrite")
           .parquet(s"$store/batch_id=$k")
       }
@@ -1218,15 +1143,7 @@ object ForgetOps {
     // landed below the retention floor (expired)
     val gone = docs(s, dir)
       .filter(forgottenPred || col("doc_id") < cut2).select("doc_id")
-    val left = assets.join(broadcast(gone), Seq("doc_id"), "left_semi")
-      .groupBy("kind").agg(count(lit(1)).as("n_left"))
-    assets.groupBy("kind")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("doc_id")).cast("long").as("sum_doc_id"))
-      .join(left, Seq("kind"), "left")
-      .select(col("kind"), col("n_rows"), col("sum_doc_id"),
-        coalesce(col("n_left"), lit(0L)).as("n_gone_left"))
-      .orderBy("kind")
+    assetAudit(assets, gone, "n_gone_left")
   }
 
   // ── q222: the DSIR selector trained on a retention window ────────────
@@ -1285,15 +1202,10 @@ object ForgetOps {
     */
   def buildLshTtlStore(s: SparkSession, dir: String): (String, Long) = {
     val d = docs(s, dir).select("doc_id", "source", "text")
-    val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
+    val q = landingWidth(d, 4)
     val root = DerivedStore.cached("lsh_ttl", dir, "documents") { root =>
       val (idx, dec) = (s"$root/index", s"$root/decisions")
-      val bounds = Seq(
-        Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        LshStream.processBatch(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), idx, dec, k.toLong)
-      }
+      landSlices(d, 4, q)((sl, k) => LshStream.processBatch(sl, idx, dec, k))
       val fIds = d.filter(forgottenPred).select("doc_id")
       Forget.surgicalDelete(s, idx, fIds)
       Forget.surgicalDelete(s, dec, fIds)
@@ -1326,7 +1238,7 @@ object ForgetOps {
   // ── q225: the full curation verdict over a retention window ──────────
 
   /** Four quartile landings of the WINDOW-MODE curation stores
-    * ([[graft.streaming.CurationStream.writeWindowDelta]] — per-doc fp
+    * ([[CurationStream.writeWindowDelta]] — per-doc fp
     * rows and per-doc band rows, ownership never materialized), the
     * forget set surgically erased from both (per-doc identity deletes,
     * NO re-election correctives — the next election elects among
@@ -1337,14 +1249,7 @@ object ForgetOps {
     val root = DerivedStore.cached("cur_ttl", dir, "documents") { root =>
       val (fpD, idxD) = (s"$root/fps", s"$root/bands")
       val d = docs(s, dir).select("doc_id", "source", "text")
-      val q = d.agg(max(col("doc_id"))).head().getLong(0) / 4
-      val bounds = Seq(
-        Long.MinValue -> q, q -> 2 * q, 2 * q -> 3 * q, 3 * q -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        graft.streaming.CurationStream.writeWindowDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), fpD, idxD,
-          k.toLong)
-      }
+      landSlices(d, 4)((sl, k) => CurationStream.writeWindowDelta(sl, fpD, idxD, k))
       val fIds = d.filter(forgottenPred).select("doc_id")
       Forget.surgicalDelete(s, fpD, fIds)
       Forget.surgicalDelete(s, idxD, fIds)
@@ -1361,7 +1266,7 @@ object ForgetOps {
     * so this is the WINDOW-MODE layout that can: per-doc identity rows
     * land per batch, and gate → exact-first-owner → rep-banding →
     * keep-earliest is ONE serve-time election over the window slice
-    * ([[graft.streaming.CurationStream.windowedDecisions]]). Erasure
+    * ([[CurationStream.windowedDecisions]]). Erasure
     * needed no re-election correctives (ownership is never
     * materialized) and expiry was pure partition drops — and the served
     * table equals batch q127 run from scratch on the retained window's
@@ -1376,7 +1281,7 @@ object ForgetOps {
        |FROM exact e LEFT JOIN verdicts v ON e.doc_id = v.doc_id
        |ORDER BY e.doc_id""".stripMargin) { (s, dir) =>
     val (fpD, idxD) = buildCurationTtlStore(s, dir)
-    graft.streaming.CurationStream.windowedDecisions(s, fpD, idxD, lo = 2L)
+    CurationStream.windowedDecisions(s, fpD, idxD, lo = 2L)
   }
 
   // ── q226-q228: corrected-content landings (amendments) ───────────────
@@ -1394,7 +1299,7 @@ object ForgetOps {
     */
   def amendFixture(s: SparkSession, dir: String): (DataFrame, DataFrame, Long) = {
     val d = docs(s, dir).select("doc_id", "text", "source")
-    val w = d.agg(max(col("doc_id"))).head().getLong(0) / 4
+    val w = landingWidth(d, 4)
     val donor = d.select((col("doc_id") - lit(2 * w)).as("doc_id"),
       col("text").as("donor_text"))
     val batch = d
@@ -1440,12 +1345,7 @@ object ForgetOps {
       val deltas = s"$root/deltas"
       val d = docs(s, dir)
       val (batch, _, w) = amendFixture(s, dir)
-      val bounds = Seq(
-        Long.MinValue -> w, w -> 2 * w, 2 * w -> 3 * w, 3 * w -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
-      }
+      landSlices(d, 4, w)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
       graft.streaming.Amend.amendSumCells(Forget.lmCellTarget(deltas), batch, 1L)
     }
     s"$root/deltas"
@@ -1466,13 +1366,8 @@ object ForgetOps {
     TextOps.fluencyOracleSql(correctedCorpusSql)) { (s, dir) =>
     val deltas = buildLmAmendStore(s, dir)
     val (_, corpus, _) = amendFixture(s, dir)
-    graft.ops.TextOps.fluencyScoredFromCounts(corpus,
-        Some(Forget.lmCountsAfterForget(s, deltas)))
-      .select(col("doc_id"), col("n_bigrams"),
-        when(col("n_bigrams") === 0, lit(0.0))
-          .otherwise(col("sum_fp").cast("double") / (col("n_bigrams") * lit(1000000.0)))
-          .as("fluency_score"))
-      .orderBy("doc_id")
+    TextOps.fluencyScores(corpus,
+      Some(Forget.lmCountsAfterForget(s, deltas)))
   }
 
   /** Four quartile landings of the WINDOW-MODE curation stores, then
@@ -1486,13 +1381,7 @@ object ForgetOps {
       val (fpD, idxD) = (s"$root/fps", s"$root/bands")
       val d = docs(s, dir).select("doc_id", "source", "text")
       val (batch, _, w) = amendFixture(s, dir)
-      val bounds = Seq(
-        Long.MinValue -> w, w -> 2 * w, 2 * w -> 3 * w, 3 * w -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        graft.streaming.CurationStream.writeWindowDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), fpD, idxD,
-          k.toLong)
-      }
+      landSlices(d, 4, w)((sl, k) => CurationStream.writeWindowDelta(sl, fpD, idxD, k))
       graft.streaming.Amend.amendWindowCuration(batch, fpD, idxD, 1L)
     }
     (s"$root/fps", s"$root/bands")
@@ -1514,11 +1403,11 @@ object ForgetOps {
        |FROM exact e LEFT JOIN verdicts v ON e.doc_id = v.doc_id
        |ORDER BY e.doc_id""".stripMargin) { (s, dir) =>
     val (fpD, idxD) = buildWindowAmendStore(s, dir)
-    graft.streaming.CurationStream.windowedDecisions(s, fpD, idxD, lo = 0L)
+    CurationStream.windowedDecisions(s, fpD, idxD, lo = 0L)
   }
 
   /** Four quartile landings through the MATERIALIZED curation family
-    * ([[graft.streaming.CurationStream.processBatch]]), then batch 1
+    * ([[CurationStream.processBatch]]), then batch 1
     * amended ([[graft.streaming.Amend.amendCurationBatch]] — the old
     * landing's docs forgotten with two-level re-election, the corrected
     * batch landed through the id-ordered re-electing insert; forget
@@ -1529,14 +1418,8 @@ object ForgetOps {
     DerivedStore.cached("cur_amend", dir, "documents") { root =>
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
-      val bounds = Seq(
-        Long.MinValue -> w, w -> 2 * w, 2 * w -> 3 * w, 3 * w -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        graft.streaming.CurationStream.processBatch(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi),
-          s"$root/fp", s"$root/index", s"$root/decisions", k.toLong,
-          Some(s"$root/accepted"), Some(s"$root/quarantine"))
-      }
+      landSlices(d, 4, w)((sl, k) =>
+        CurationStream.processBatch(sl, CurationStream.Layout(root), k))
       graft.streaming.Amend.amendCurationBatch(s, root, batch,
         batchId = 1L, correctiveId = 4L,
         audit = Some((s"$root/amend_audit", "curation")))
@@ -1561,8 +1444,7 @@ object ForgetOps {
        |  v.n_earlier, v.dup_of, v.is_band_dup
        |FROM exact e LEFT JOIN verdicts v ON e.doc_id = v.doc_id
        |ORDER BY e.doc_id""".stripMargin) { (s, dir) =>
-    val root = buildCurationAmendStore(s, dir)
-    graft.streaming.CurationStream.decisions(s, s"$root/decisions")
+    CurationStream.decisions(s, CurationStream.Layout(buildCurationAmendStore(s, dir)).decisions)
   }
 
   // ── q229: the cumulative cross-family compliance ledger ──────────────
@@ -1579,14 +1461,9 @@ object ForgetOps {
       val (deltas, markers, audit) =
         (s"$root/deltas", s"$root/forget_markers", s"$root/expiry_audit")
       val d = docs(s, dir).select("doc_id", "text", "source")
-      val o = d.agg(max(col("doc_id"))).head().getLong(0) / 8
+      val o = landingWidth(d, 8)
       require(o > 0, s"compliance store needs max(doc_id) >= 8, got width $o")
-      (0 until 8).foreach { k =>
-        val lo = if (k == 0) Long.MinValue else k * o
-        val hi = if (k == 7) Long.MaxValue else (k + 1) * o
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
-      }
+      landSlices(d, 8, o)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
       val content = d.withColumn("src_batch",
         least(expr(s"doc_id div $o"), lit(7L)).cast("long"))
       val targets = graft.streaming.ForgetStream.ForgetTargets(
@@ -1684,14 +1561,10 @@ object ForgetOps {
     val root = DerivedStore.cached("schema_evo", dir, "documents") { root =>
       val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text", "source")
-      val w = d.agg(max(col("doc_id"))).head().getLong(0) / 4
-      val bounds = Seq(
-        Long.MinValue -> w, w -> 2 * w, 2 * w -> 3 * w, 3 * w -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
+      landSlices(d, 4) { (sl, k) =>
         graft.streaming.StoreCompaction.writeEvolvedDelta(
-          statCells(d.filter(col("doc_id") >= lo && col("doc_id") < hi),
-            withAlpha = k >= 2),
-          deltas, k.toLong)
+          statCells(sl, withAlpha = k >= 2),
+          deltas, k)
       }
     }
     s"$root/deltas"
@@ -1781,12 +1654,7 @@ object ForgetOps {
       val d = docs(s, dir)
       val (batch, _, w) = amendFixture(s, dir)
       graft.streaming.StoreCompaction.declarePrefoldKeep(deltas)
-      val bounds = Seq(
-        Long.MinValue -> w, w -> 2 * w, 2 * w -> 3 * w, 3 * w -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
-      }
+      landSlices(d, 4, w)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
       graft.streaming.StoreCompaction.foldEpochs(s, deltas,
         epochSize = 2L, uptoBatch = 3L)
       graft.streaming.Amend.amendSumCells(Forget.lmCellTarget(deltas), batch, 1L)
@@ -1810,13 +1678,8 @@ object ForgetOps {
     TextOps.fluencyOracleSql(correctedCorpusSql)) { (s, dir) =>
     val deltas = buildLmRebandStore(s, dir)
     val (_, corpus, _) = amendFixture(s, dir)
-    graft.ops.TextOps.fluencyScoredFromCounts(corpus,
-        Some(Forget.lmCountsAfterForgetWindow(s, deltas, lo = 0L)))
-      .select(col("doc_id"), col("n_bigrams"),
-        when(col("n_bigrams") === 0, lit(0.0))
-          .otherwise(col("sum_fp").cast("double") / (col("n_bigrams") * lit(1000000.0)))
-          .as("fluency_score"))
-      .orderBy("doc_id")
+    TextOps.fluencyScores(corpus,
+      Some(Forget.lmCountsAfterForgetWindow(s, deltas, lo = 0L)))
   }
 
   /** The evolving per-DOC stat rows — [[statCells]]' identity twin
@@ -1848,14 +1711,10 @@ object ForgetOps {
     val root = DerivedStore.cached("identity_evo", dir, "documents") { root =>
       val store = s"$root/docstats"
       val d = docs(s, dir).select("doc_id", "text", "source")
-      val w = d.agg(max(col("doc_id"))).head().getLong(0) / 4
-      val bounds = Seq(
-        Long.MinValue -> w, w -> 2 * w, 2 * w -> 3 * w, 3 * w -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
+      landSlices(d, 4) { (sl, k) =>
         graft.streaming.StoreCompaction.writeEvolvedDelta(
-          statRows(d.filter(col("doc_id") >= lo && col("doc_id") < hi),
-            withAlpha = k >= 2),
-          store, k.toLong)
+          statRows(sl, withAlpha = k >= 2),
+          store, k)
       }
     }
     s"$root/docstats"
@@ -1906,14 +1765,9 @@ object ForgetOps {
         (s"$root/deltas", s"$root/forget_markers", s"$root/expiry_audit",
           s"$root/snapshots")
       val d = docs(s, dir).select("doc_id", "text", "source")
-      val o = d.agg(max(col("doc_id"))).head().getLong(0) / 8
+      val o = landingWidth(d, 8)
       require(o > 0, s"ledger snapshot store needs max(doc_id) >= 8, got width $o")
-      (0 until 8).foreach { k =>
-        val lo = if (k == 0) Long.MinValue else k * o
-        val hi = if (k == 7) Long.MaxValue else (k + 1) * o
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
-      }
+      landSlices(d, 8, o)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
       val content = d.withColumn("src_batch",
         least(expr(s"doc_id div $o"), lit(7L)).cast("long"))
       val targets = graft.streaming.ForgetStream.ForgetTargets(
@@ -1990,20 +1844,12 @@ object ForgetOps {
     DerivedStore.cached("cur_bandamend", dir, "documents") { root =>
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
-      val bounds = Seq(
-        Long.MinValue -> w, w -> 2 * w, 2 * w -> 3 * w, 3 * w -> Long.MaxValue)
-      val stores = Seq("fp", "index", "decisions", "accepted", "quarantine")
-        .map(n => s"$root/$n")
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        graft.streaming.CurationStream.processBatch(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi),
-          s"$root/fp", s"$root/index", s"$root/decisions", k.toLong,
-          Some(s"$root/accepted"), Some(s"$root/quarantine"))
-      }
+      val stores = CurationStream.Layout(root)
+      landSlices(d, 4, w)((sl, k) => CurationStream.processBatch(sl, stores, k))
       // the opt-in precedes the FOLD (after the landings: an empty store
       // dir holding only the marker would break batch 0's history probe)
-      stores.foreach(graft.streaming.StoreCompaction.declarePrefoldKeep)
-      stores.foreach(st =>
+      stores.dirs.foreach(graft.streaming.StoreCompaction.declarePrefoldKeep)
+      stores.dirs.foreach(st =>
         graft.streaming.StoreCompaction.foldEpochs(s, st, 2L, uptoBatch = 3L))
       graft.streaming.Amend.amendCurationBatch(s, root, batch,
         batchId = 1L, correctiveId = 4L,
@@ -2026,8 +1872,8 @@ object ForgetOps {
        |  v.n_earlier, v.dup_of, v.is_band_dup
        |FROM exact e LEFT JOIN verdicts v ON e.doc_id = v.doc_id
        |ORDER BY e.doc_id""".stripMargin) { (s, dir) =>
-    val root = buildCurationBandAmendStore(s, dir)
-    graft.streaming.CurationStream.decisions(s, s"$root/decisions")
+    CurationStream.decisions(s,
+      CurationStream.Layout(buildCurationBandAmendStore(s, dir)).decisions)
   }
 
   /** The corrected corpus MINUS the commute-wave forget set (doc_id ≡ 4
@@ -2053,17 +1899,10 @@ object ForgetOps {
       val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
-      val bounds = Seq(
-        Long.MinValue -> w, w -> 2 * w, 2 * w -> 3 * w, 3 * w -> Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
-      }
+      landSlices(d, 4, w)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
       val fIds = d.filter(col("doc_id") < 2 * w &&
         pmod(col("doc_id"), lit(9L)) === 4L).select("doc_id")
-      val content = d.withColumn("src_batch",
-        when(col("doc_id") < w, 0L).when(col("doc_id") < 2 * w, 1L)
-          .when(col("doc_id") < 3 * w, 2L).otherwise(3L).cast("long"))
+      val content = d.withColumn("src_batch", landingOf(w, 4).cast("long"))
       graft.streaming.ForgetStream.processBatch(fIds, content,
         graft.streaming.ForgetStream.ForgetTargets(
           sumCellStores = Seq(Forget.lmCellTarget(deltas)),
@@ -2102,13 +1941,8 @@ object ForgetOps {
     val (_, corpus, w) = amendFixture(s, dir)
     val after = corpus.filter(!(pmod(col("doc_id"), lit(9L)) === 4L &&
       col("doc_id") < 2 * w))
-    graft.ops.TextOps.fluencyScoredFromCounts(after,
-        Some(Forget.lmCountsAfterForget(s, deltas)))
-      .select(col("doc_id"), col("n_bigrams"),
-        when(col("n_bigrams") === 0, lit(0.0))
-          .otherwise(col("sum_fp").cast("double") / (col("n_bigrams") * lit(1000000.0)))
-          .as("fluency_score"))
-      .orderBy("doc_id")
+    TextOps.fluencyScores(after,
+      Some(Forget.lmCountsAfterForget(s, deltas)))
   }
 
   val all: Seq[Q] = Seq(q200, q201, q202, q203, q204, q205, q206, q207,

@@ -1127,15 +1127,7 @@ object Mining {
   }
 
   val q149 = Q("q149_mixture_interleave", q149OracleSql) { (s, dir) =>
-    interleaveSlots(s, dir)
-      .groupBy("source")
-      .agg(
-        max(col("w")).as("w"),
-        count(lit(1)).as("n_docs"),
-        min(col("slot")).as("first_slot"),
-        max(col("slot")).as("last_slot"),
-        sum(col("slot") * col("doc_id")).cast("long").as("slot_dot"))
-      .orderBy("source")
+    slotStats(interleaveSlots(s, dir), "source")
   }
 
   // ── q150: curriculum order (global total-order rank) ──────────────────
@@ -1541,16 +1533,21 @@ object Mining {
   }
 
   val q157 = Q("q157_renorm_interleave", q157OracleSql) { (s, dir) =>
-    renormSlots(s, dir)
-      .groupBy("source")
+    slotStats(renormSlots(s, dir), "source")
+  }
+
+  /** Per-group statistics of an interleave schedule's (source, doc_id,
+    * w, slot) rows, ordered by `keys`.
+    */
+  private def slotStats(slots: DataFrame, keys: String*): DataFrame =
+    slots.groupBy(keys.map(col): _*)
       .agg(
         max(col("w")).as("w"),
         count(lit(1)).as("n_docs"),
         min(col("slot")).as("first_slot"),
         max(col("slot")).as("last_slot"),
         sum(col("slot") * col("doc_id")).cast("long").as("slot_dot"))
-      .orderBy("source")
-  }
+      .orderBy(keys.map(col): _*)
 
   // ── q158: renormalizing-schedule segment manifest ─────────────────────
 
@@ -1685,17 +1682,24 @@ object Mining {
     val cum = graft.exec.PrefixSum.globalRunningTotal(
       slotted.withColumn("_slotb", expr(s"slot DIV $step")),
       "_slotb", Seq("slot"), "n_tokens", "cum_tokens")
-    cum.withColumn("consumed", col("cum_tokens") <= budget)
-      .groupBy("source")
-      .agg(
-        max(col("w")).as("w"),
-        count(lit(1)).as("n_docs"),
-        Det.countIf(col("consumed")).as("n_consumed"),
-        sum(when(col("consumed"), col("n_tokens")).otherwise(0L))
-          .cast("long").as("tokens_consumed"),
-        coalesce(max(when(col("consumed"), col("slot"))), lit(-1L))
-          .cast("long").as("last_slot"))
-      .orderBy("source")
+    consumption(cum.withColumn("consumed", col("cum_tokens") <= budget),
+      Seq(max(col("w")).as("w")), "source")
+  }
+
+  /** Per-group budget consumption of slotted (slot, n_tokens, consumed)
+    * rows: the `leading` aggregates, then n_docs, n_consumed,
+    * tokens_consumed and last_slot, ordered by `keys`.
+    */
+  private def consumption(flagged: DataFrame, leading: Seq[Column],
+      keys: String*): DataFrame = {
+    val stats = leading ++ Seq(count(lit(1)).as("n_docs"),
+      Det.countIf(col("consumed")).as("n_consumed"),
+      sum(when(col("consumed"), col("n_tokens")).otherwise(0L))
+        .cast("long").as("tokens_consumed"),
+      coalesce(max(when(col("consumed"), col("slot"))), lit(-1L))
+        .cast("long").as("last_slot"))
+    flagged.groupBy(keys.map(col): _*).agg(stats.head, stats.tail: _*)
+      .orderBy(keys.map(col): _*)
   }
 
   // ── q161: the loader chain end to end ─────────────────────────────────
@@ -1839,16 +1843,8 @@ object Mining {
   }
 
   val q162 = Q("q162_renorm_epochs", q162OracleSql) { (s, dir) =>
-    (1 to 2).map(renormEpochSlots(s, dir, _))
-      .reduce(_.unionByName(_))
-      .groupBy("epoch", "source")
-      .agg(
-        max(col("w")).as("w"),
-        count(lit(1)).as("n_docs"),
-        min(col("slot")).as("first_slot"),
-        max(col("slot")).as("last_slot"),
-        sum(col("slot") * col("doc_id")).cast("long").as("slot_dot"))
-      .orderBy("epoch", "source")
+    slotStats((1 to 2).map(renormEpochSlots(s, dir, _)).reduce(_.unionByName(_)),
+      "epoch", "source")
   }
 
   // ── q166: budget consumption across epoch boundaries ──────────────────
@@ -1900,16 +1896,7 @@ object Mining {
     val cum = graft.exec.PrefixSum.globalRunningTotal(
       slots.withColumn("_b", (col("epoch") - 1L) * 33L + expr(s"slot DIV $step")),
       "_b", Seq("epoch", "slot"), "n_tokens", "c")
-    cum.withColumn("consumed", col("c") <= budget)
-      .groupBy("epoch", "source")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        Det.countIf(col("consumed")).as("n_consumed"),
-        sum(when(col("consumed"), col("n_tokens")).otherwise(0L))
-          .cast("long").as("tokens_consumed"),
-        coalesce(max(when(col("consumed"), col("slot"))), lit(-1L))
-          .cast("long").as("last_slot"))
-      .orderBy("epoch", "source")
+    consumption(cum.withColumn("consumed", col("c") <= budget), Nil, "epoch", "source")
   }
 
   // ── q163: classifier-vs-gate evaluation ───────────────────────────────

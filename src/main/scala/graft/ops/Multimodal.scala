@@ -121,59 +121,46 @@ object Multimodal {
   object BmpCodec extends Codec {
     def decode(a: Asset): AssetFeatures = {
       val b = a.payload
-      require(b.length >= 54 && b(0) == 'B'.toByte && b(1) == 'M'.toByte, "not a BMP")
-      def i32(off: Int): Int =
-        (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-      def i16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-      val pixelOff = i32(10)
-      val hdrSize = i32(14)
-      val width = i32(18)
-      val rawHeight = i32(22)
-      val height = math.abs(rawHeight)
-      val bpp = i16(28)
-      val compression = if (hdrSize >= 20) i32(30) else 0
-      require(hdrSize >= 40, s"unsupported DIB header size $hdrSize")
-      require(width > 0 && height > 0, s"bad dimensions ${width}x$rawHeight")
-      require(bpp == 24 || bpp == 32, s"unsupported bpp $bpp (only 24/32-bit BI_RGB)")
-      require(compression == 0, s"unsupported compression $compression")
-      val bytesPerPx = bpp / 8
-      val rowStride = ((width * bytesPerPx + 3) / 4) * 4
-      require(b.length >= pixelOff + rowStride.toLong * height, "truncated pixel array")
-      var sumB, sumG, sumR, sumLuma, sumEdge = 0.0
-      var minLuma = Double.MaxValue
-      var maxLuma = Double.MinValue
-      var nBright = 0L
-      var y = 0
-      while (y < height) {
-        val row = pixelOff + y * rowStride
-        var x = 0
-        var prevLuma = 0.0
-        while (x < width) {
-          val p = row + x * bytesPerPx
-          val blue = (b(p) & 0xff) / 255.0
-          val green = (b(p + 1) & 0xff) / 255.0
-          val red = (b(p + 2) & 0xff) / 255.0
-          val luma = 0.2126 * red + 0.7152 * green + 0.0722 * blue
-          sumB += blue; sumG += green; sumR += red; sumLuma += luma
-          if (luma < minLuma) minLuma = luma
-          if (luma > maxLuma) maxLuma = luma
-          if (luma > 0.5) nBright += 1
-          if (x > 0) sumEdge += math.abs(luma - prevLuma)
-          prevLuma = luma
-          x += 1
-        }
-        y += 1
+      val bmp = bmpLayout(b)
+      import bmp._
+      pixelFeatures(a.doc_id, b, width, height) { (x, y) =>
+        val p = pixelOff + y * rowStride + x * bytesPerPx
+        ((b(p + 2) & 0xff) << 16) | ((b(p + 1) & 0xff) << 8) | (b(p) & 0xff)
       }
-      val n = width.toLong * height
-      val nEdges = math.max(1L, (width - 1).toLong * height)
-      val crc = new java.util.zip.CRC32
-      crc.update(b, 0, b.length)
-      AssetFeatures(a.doc_id, b.length, crc.getValue, width, height, n_frames = 1,
-        feature = Array(
-          (sumB / n).toFloat, (sumG / n).toFloat, (sumR / n).toFloat,
-          (sumLuma / n).toFloat, minLuma.toFloat, maxLuma.toFloat,
-          (sumEdge / nEdges).toFloat, nBright.toFloat / n))
     }
+  }
+
+  /** Little-endian int32 / uint16 at `off`. */
+  private def le32(b: Array[Byte], off: Int): Int =
+    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
+  private def le16(b: Array[Byte], off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
+
+  /** A validated BI_RGB BMP's pixel-array layout; `rawHeight` < 0 means
+    * top-down row order.
+    */
+  private final case class BmpLayout(pixelOff: Int, width: Int, rawHeight: Int,
+      bytesPerPx: Int, rowStride: Int) {
+    def height: Int = math.abs(rawHeight)
+  }
+
+  /** Parse and validate the BITMAPFILEHEADER + BITMAPINFOHEADER. */
+  private def bmpLayout(b: Array[Byte]): BmpLayout = {
+    require(b.length >= 54 && b(0) == 'B'.toByte && b(1) == 'M'.toByte, "not a BMP")
+    val pixelOff = le32(b, 10)
+    val hdrSize = le32(b, 14)
+    val width = le32(b, 18)
+    val rawHeight = le32(b, 22)
+    val height = math.abs(rawHeight)
+    val bpp = le16(b, 28)
+    require(hdrSize >= 40, s"unsupported DIB header size $hdrSize")
+    require(width > 0 && height > 0, s"bad dimensions ${width}x$rawHeight")
+    require(bpp == 24 || bpp == 32, s"unsupported bpp $bpp (only 24/32-bit BI_RGB)")
+    val compression = le32(b, 30)
+    require(compression == 0, s"unsupported compression $compression")
+    val bytesPerPx = bpp / 8
+    val rowStride = ((width * bytesPerPx + 3) / 4) * 4
+    require(b.length >= pixelOff + rowStride.toLong * height, "truncated pixel array")
+    BmpLayout(pixelOff, width, rawHeight, bytesPerPx, rowStride)
   }
 
   /** The SAME 8-statistic battery BmpCodec computes from raw bytes,
@@ -187,6 +174,14 @@ object Multimodal {
     val width = img.getWidth
     val height = img.getHeight
     require(width > 0 && height > 0, s"bad dimensions ${width}x$height")
+    pixelFeatures(docId, bytes, width, height)(img.getRGB)
+  }
+
+  /** The image statistics battery over the `width`×`height` pixels
+    * `rgbAt(x, y)` (0xRRGGBB), rows in `y` order.
+    */
+  private def pixelFeatures(docId: Long, bytes: Array[Byte], width: Int,
+      height: Int)(rgbAt: (Int, Int) => Int): AssetFeatures = {
     var sumB, sumG, sumR, sumLuma, sumEdge = 0.0
     var minLuma = Double.MaxValue
     var maxLuma = Double.MinValue
@@ -196,7 +191,7 @@ object Multimodal {
       var x = 0
       var prevLuma = 0.0
       while (x < width) {
-        val rgb = img.getRGB(x, y)
+        val rgb = rgbAt(x, y)
         val red = ((rgb >> 16) & 0xff) / 255.0
         val green = ((rgb >> 8) & 0xff) / 255.0
         val blue = (rgb & 0xff) / 255.0
@@ -293,28 +288,11 @@ object Multimodal {
   object WavCodec extends Codec {
     def decode(a: Asset): AssetFeatures = {
       val b = a.payload
-      require(b.length >= 44 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F'
-        && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E', "not a WAV")
-      def i32(off: Int): Int =
-        (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-      def i16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-      var off = 12
-      var fmtOff = -1
-      var dataOff = -1
-      var dataLen = 0
-      while (off + 8 <= b.length && (fmtOff < 0 || dataOff < 0)) {
-        val id = new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-        val sz = i32(off + 4)
-        require(sz >= 0, s"bad chunk size $sz")
-        if (id == "fmt ") fmtOff = off + 8
-        else if (id == "data") { dataOff = off + 8; dataLen = math.min(sz, b.length - dataOff) }
-        off += 8 + sz + (sz & 1) // chunks are word-aligned
-      }
-      require(fmtOff >= 0 && dataOff >= 0, "missing fmt/data chunk")
-      val fmtTag = i16(fmtOff)
-      val channels = i16(fmtOff + 2)
-      val sampleRate = i32(fmtOff + 4)
-      val bitsPerSample = i16(fmtOff + 14)
+      val (fmtOff, dataOff, dataLen) = wavChunks(b)
+      val fmtTag = le16(b, fmtOff)
+      val channels = le16(b, fmtOff + 2)
+      val sampleRate = le32(b, fmtOff + 4)
+      val bitsPerSample = le16(b, fmtOff + 14)
       require(channels > 0 && sampleRate > 0, "bad fmt chunk")
       require((fmtTag == 1 && (bitsPerSample == 8 || bitsPerSample == 16)) ||
         (fmtTag == 3 && bitsPerSample == 32),
@@ -330,7 +308,7 @@ object Multimodal {
           acc += (bitsPerSample match {
             case 8 => ((b(p) & 0xff) - 128) / 128.0 // 8-bit WAV is unsigned
             case 16 => ((b(p) & 0xff) | (b(p + 1) << 8)).toShort / 32768.0
-            case 32 => java.lang.Float.intBitsToFloat(i32(p)).toDouble
+            case 32 => java.lang.Float.intBitsToFloat(le32(b, p)).toDouble
           })
           c += 1
         }
@@ -338,6 +316,28 @@ object Multimodal {
       }
       audioBattery(a.doc_id, b, sampleRate, channels, nFrames, sampleAt)
     }
+  }
+
+  /** Walk a RIFF/WAVE file's chunks: (fmt body offset, data body offset,
+    * data length clipped to the file).
+    */
+  private def wavChunks(b: Array[Byte]): (Int, Int, Int) = {
+    require(b.length >= 44 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F'
+      && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E', "not a WAV")
+    var off = 12
+    var fmtOff = -1
+    var dataOff = -1
+    var dataLen = 0
+    while (off + 8 <= b.length && (fmtOff < 0 || dataOff < 0)) {
+      val id = new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
+      val sz = le32(b, off + 4)
+      require(sz >= 0, s"bad chunk size $sz")
+      if (id == "fmt ") fmtOff = off + 8
+      else if (id == "data") { dataOff = off + 8; dataLen = math.min(sz, b.length - dataOff) }
+      off += 8 + sz + (sz & 1) // chunks are word-aligned
+    }
+    require(fmtOff >= 0 && dataOff >= 0, "missing fmt/data chunk")
+    (fmtOff, dataOff, dataLen)
   }
 
   /** The 8-statistic audio battery over channel-averaged frame samples —
@@ -791,23 +791,8 @@ object Multimodal {
     * heights (bottom-up files) are flipped into image order.
     */
   private[graft] def parseBmpGray(b: Array[Byte]): (Int, Int, Array[Int]) = {
-    require(b.length >= 54 && b(0) == 'B'.toByte && b(1) == 'M'.toByte, "not a BMP")
-    def i32(off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    def i16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    val pixelOff = i32(10)
-    val hdrSize = i32(14)
-    val width = i32(18)
-    val rawHeight = i32(22)
-    val height = math.abs(rawHeight)
-    val bpp = i16(28)
-    require(hdrSize >= 40, s"unsupported DIB header size $hdrSize")
-    require(width > 0 && height > 0, s"bad dimensions ${width}x$rawHeight")
-    require(bpp == 24 || bpp == 32, s"unsupported bpp $bpp")
-    require(i32(30) == 0, "unsupported compression")
-    val bytesPerPx = bpp / 8
-    val rowStride = ((width * bytesPerPx + 3) / 4) * 4
-    require(b.length >= pixelOff + rowStride.toLong * height, "truncated pixel array")
+    val bmp = bmpLayout(b)
+    import bmp._
     val g = new Array[Int](width * height)
     var y = 0
     while (y < height) {
@@ -1102,25 +1087,8 @@ object Multimodal {
     * downstream fingerprint arithmetic is integer-exact end to end.
     */
   private[graft] def parseWavPcm16(b: Array[Byte]): Array[Int] = {
-    require(b.length >= 44 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F'
-      && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E', "not a WAV")
-    def i32(off: Int): Int =
-      (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    def i16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    var off = 12
-    var fmtOff = -1
-    var dataOff = -1
-    var dataLen = 0
-    while (off + 8 <= b.length && (fmtOff < 0 || dataOff < 0)) {
-      val id = new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val sz = i32(off + 4)
-      require(sz >= 0, s"bad chunk size $sz")
-      if (id == "fmt ") fmtOff = off + 8
-      else if (id == "data") { dataOff = off + 8; dataLen = math.min(sz, b.length - dataOff) }
-      off += 8 + sz + (sz & 1)
-    }
-    require(fmtOff >= 0 && dataOff >= 0, "missing fmt/data chunk")
-    require(i16(fmtOff) == 1 && i16(fmtOff + 2) == 1 && i16(fmtOff + 14) == 16,
+    val (fmtOff, dataOff, dataLen) = wavChunks(b)
+    require(le16(b, fmtOff) == 1 && le16(b, fmtOff + 2) == 1 && le16(b, fmtOff + 14) == 16,
       "only PCM16 mono")
     Array.tabulate(dataLen / 2)(f =>
       ((b(dataOff + 2 * f) & 0xff) | (b(dataOff + 2 * f + 1) << 8)).toShort.toInt)

@@ -1100,8 +1100,17 @@ object Similarity {
     * O(M×K) or O(k) state — the corpus-sized side never shuffles.
     */
   val q99 = Q("q99_ivf_pq_search", q99OracleSql()) { (s, dir) =>
+    pqSearch(s, dir, buildPqIndex(s, dir))
+  }
+
+  /** q99's search for vector 0 over the PQ code store at `codesPath`.
+    * With `candidates`, every row also carries the number of vectors the
+    * ADC scan scored (q216 runs it over an erased copy of the codes).
+    */
+  private[ops] def pqSearch(s: SparkSession, dir: String, codesPath: String,
+      candidates: Boolean = false): DataFrame = {
     val e = emb(s, dir).select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-    val codes = s.read.parquet(buildPqIndex(s, dir))
+    val codes = s.read.parquet(codesPath)
     val cents = s.read.parquet(buildIvfIndex(s, dir))
     val qrow = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
     val qsub = qrow.select(explode(array((0 until PqM).map(m =>
@@ -1113,27 +1122,51 @@ object Similarity {
       .select(col("k"), col("p.m").as("cm"), col("p.cw").as("cw"))
     val lut = qsub.join(cb, col("qm") === col("cm"))
       .select(col("cm").as("lm"), col("k").as("lk"), sqDist(col("qs"), col("cw")).as("ld"))
-    val probes = cents.crossJoin(broadcast(qrow))
+    adcRerank(e, qrow, probedCodes(e, probeCells(cents, qrow), codes)
+      .join(broadcast(lut), col("m") === col("lm") && col("k") === col("lk")),
+      candidates)
+  }
+
+  /** The NProbe coarse cells nearest the query row `qrow` (qv). */
+  private def probeCells(cents: DataFrame, qrow: DataFrame): DataFrame =
+    cents.crossJoin(broadcast(qrow))
       .select(col("label").as("probe_label"),
         (dot(col("qv"), col("centroid")) / (norm(col("qv")) * norm(col("centroid")))).as("c_sim"))
       .orderBy(col("c_sim").desc, col("probe_label"))
       .limit(NProbe)
-    val adc = e.filter(col("vec_id") =!= 0)
+
+  /** Every vector but the query in a probed cell, joined to its code rows. */
+  private def probedCodes(e: DataFrame, probes: DataFrame, codes: DataFrame): DataFrame =
+    e.filter(col("vec_id") =!= 0)
       .join(broadcast(probes.select("probe_label")),
         col("label") === col("probe_label"), "left_semi")
       .select("vec_id", "label")
       .join(codes, Seq("vec_id"))
-      .join(broadcast(lut), col("m") === col("lm") && col("k") === col("lk"))
-      .groupBy("vec_id", "label")
+
+  /** The ADC tail of q99/q106/q216: each candidate's fixed-point sum of
+    * its LUT distances `ld`, the top-10 shortlist, and its exact cosine
+    * rerank; `candidates` adds the number of vectors scored.
+    */
+  private def adcRerank(e: DataFrame, qrow: DataFrame, lutRows: DataFrame,
+      candidates: Boolean): DataFrame = {
+    val adc = lutRows.groupBy("vec_id", "label")
       .agg(sum(floor(col("ld") * lit(1000000.0)).cast("long")).as("adc_fp"))
-    val shortlist = adc.orderBy("adc_fp", "vec_id").limit(10)
+    val scored = if (candidates) adc.localCheckpoint() else adc
+    val shortlist = scored.orderBy("adc_fp", "vec_id").limit(10)
       .select(col("vec_id"), col("label"),
         (col("adc_fp").cast("double") / lit(1000000.0)).as("adc_dist"))
-    shortlist
+    val reranked = shortlist
       .join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
       .crossJoin(broadcast(qrow))
-      .select(col("vec_id"), col("label"), col("adc_dist"),
-        (dot(col("qv"), col("v")) / (norm(col("qv")) * norm(col("v")))).as("cosine_sim"))
+    val withCount =
+      if (candidates)
+        reranked.crossJoin(broadcast(
+          scored.agg(count(lit(1)).cast("long").as("n_candidates"))))
+      else reranked
+    withCount
+      .select(Seq(col("vec_id"), col("label"), col("adc_dist")) ++
+        (if (candidates) Seq(col("n_candidates")) else Nil) :+
+        (dot(col("qv"), col("v")) / (norm(col("qv")) * norm(col("v")))).as("cosine_sim"): _*)
       .orderBy("adc_dist", "vec_id")
   }
 
@@ -1325,11 +1358,7 @@ object Similarity {
     val centSel = cents.select(col("label").as("cl"), col("centroid"))
     val cb = s.read.parquet(cbPath(buildResPqIndex(s, dir)))
     val qrow = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val probes = cents.crossJoin(broadcast(qrow))
-      .select(col("label").as("probe_label"),
-        (dot(col("qv"), col("centroid")) / (norm(col("qv")) * norm(col("centroid")))).as("c_sim"))
-      .orderBy(col("c_sim").desc, col("probe_label"))
-      .limit(NProbe)
+    val probes = probeCells(cents, qrow)
     val rq = probes.join(broadcast(centSel), col("probe_label") === col("cl"))
       .crossJoin(broadcast(qrow))
       .select(col("probe_label").as("cell"),
@@ -1340,24 +1369,10 @@ object Similarity {
     val lut = rqsub.join(cb, col("qm") === col("cm"))
       .select(col("cell").as("lc"), col("cm").as("lm"), col("k").as("lk"),
         sqDist(col("qs"), col("cw")).as("ld"))
-    val adc = e.filter(col("vec_id") =!= 0)
-      .join(broadcast(probes.select("probe_label")),
-        col("label") === col("probe_label"), "left_semi")
-      .select("vec_id", "label")
-      .join(codes, Seq("vec_id"))
+    adcRerank(e, qrow, probedCodes(e, probes, codes)
       .join(broadcast(lut),
-        col("label") === col("lc") && col("m") === col("lm") && col("k") === col("lk"))
-      .groupBy("vec_id", "label")
-      .agg(sum(floor(col("ld") * lit(1000000.0)).cast("long")).as("adc_fp"))
-    val shortlist = adc.orderBy("adc_fp", "vec_id").limit(10)
-      .select(col("vec_id"), col("label"),
-        (col("adc_fp").cast("double") / lit(1000000.0)).as("adc_dist"))
-    shortlist
-      .join(e.select(col("vec_id"), col("v")), Seq("vec_id"))
-      .crossJoin(broadcast(qrow))
-      .select(col("vec_id"), col("label"), col("adc_dist"),
-        (dot(col("qv"), col("v")) / (norm(col("qv")) * norm(col("v")))).as("cosine_sim"))
-      .orderBy("adc_dist", "vec_id")
+        col("label") === col("lc") && col("m") === col("lm") && col("k") === col("lk")),
+      candidates = false)
   }
 
   private def bucketSumSql: String =
@@ -1745,14 +1760,7 @@ object Similarity {
        |  t1.top1_full = t1.top1_t16 AS top1_match
        |FROM t1 LEFT JOIN ov ON t1.probe_id = ov.probe_id
        |ORDER BY t1.probe_id""".stripMargin) { (s, dir) =>
-    val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("v16", slice(col("v"), 1, 16))
-    val p = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("v16").as("pv16"))
-    val pairs = e.crossJoin(broadcast(p)).filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        (dot(col("pv"), col("v")) / (norm(col("pv")) * norm(col("v")))).as("sim_full"),
-        (dot(col("pv16"), col("v16")) / (norm(col("pv16")) * norm(col("v16")))).as("sim_t16"))
+    val pairs = probePrefixSims(s, dir)
     val tk = pairs.groupBy("probe_id").agg(
       graft.functions.TopKMin.topKMin(10)(simDescKey(col("sim_full")), col("vec_id")).as("tf"),
       graft.functions.TopKMin.topKMin(10)(simDescKey(col("sim_t16")), col("vec_id")).as("tt"))
@@ -1766,6 +1774,20 @@ object Similarity {
         element_at(col("idst"), 1).as("top1_t16"),
         (element_at(col("idsf"), 1) === element_at(col("idst"), 1)).as("top1_match"))
       .orderBy("probe_id")
+  }
+
+  /** Probes 0-9 against every other vector: (probe_id, vec_id, sim_full,
+    * sim_t16), the full-dimension and 16-dim-prefix cosines.
+    */
+  private def probePrefixSims(s: SparkSession, dir: String): DataFrame = {
+    val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .withColumn("v16", slice(col("v"), 1, 16))
+    val p = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("v16").as("pv16"))
+    e.crossJoin(broadcast(p)).filter(col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"),
+        (dot(col("pv"), col("v")) / (norm(col("pv")) * norm(col("v")))).as("sim_full"),
+        (dot(col("pv16"), col("v16")) / (norm(col("pv16")) * norm(col("v16")))).as("sim_t16"))
   }
 
   /** q114 — two-stage retrieval: q112's cheap truncated scan promoted to
@@ -1805,15 +1827,7 @@ object Similarity {
        |  CAST(COALESCE(ov.n_overlap, 0) * 1000 AS BIGINT) AS recall_bp
        |FROM p LEFT JOIN ov ON p.probe_id = ov.probe_id
        |ORDER BY p.probe_id""".stripMargin) { (s, dir) =>
-    val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("v16", slice(col("v"), 1, 16))
-    val p = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("v16").as("pv16"))
-    val pairs = e.crossJoin(broadcast(p)).filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        (dot(col("pv"), col("v")) / (norm(col("pv")) * norm(col("v")))).as("sim_full"),
-        (dot(col("pv16"), col("v16")) / (norm(col("pv16")) * norm(col("v16")))).as("sim_t16"))
-      .localCheckpoint()
+    val pairs = probePrefixSims(s, dir).localCheckpoint()
     val short = pairs.groupBy("probe_id")
       .agg(graft.functions.TopKMin.topKMin(50)(simDescKey(col("sim_t16")), col("vec_id")).as("tk"))
       .select(col("probe_id"), explode(col("tk")).as("s"))

@@ -259,19 +259,23 @@ object TextOps {
       |FROM packed
       |GROUP BY pack_id
       |ORDER BY pack_id""".stripMargin) { (s, dir) =>
-    val toks = docs(s, dir)
-      .select(col("doc_id"), tokenCount(col("text")).as("n_tokens"))
+    packShards(docs(s, dir)
+        .select(col("doc_id"), tokenCount(col("text")).as("n_tokens")))
+      .orderBy("pack_id")
+  }
+
+  /** Fixed 2048-token shards over (doc_id, n_tokens, ...) rows in doc
+    * order, via the distributed PrefixSum: per pack_id, n_docs,
+    * pack_tokens, the `extra` aggregates, first_doc and last_doc.
+    */
+  def packShards(toks: DataFrame, extra: Column*): DataFrame =
     graft.exec.PrefixSum.runningTotal(toks, "doc_id", "n_tokens", "cum_tokens")
       .withColumn("pack_id",
         floor((col("cum_tokens") - col("n_tokens")) / 2048.0).cast("long"))
       .groupBy("pack_id")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).cast("long").as("pack_tokens"),
-        min(col("doc_id")).as("first_doc"),
-        max(col("doc_id")).as("last_doc"))
-      .orderBy("pack_id")
-  }
+      .agg(count(lit(1)).as("n_docs"),
+        Seq(sum(col("n_tokens")).cast("long").as("pack_tokens")) ++ extra ++
+          Seq(min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc")): _*)
 
   /** q57 — repetition/diversity quality signals (Gopher-style): type-token
     * ratio and the most-frequent-token share, per document.
@@ -616,13 +620,21 @@ object TextOps {
        |ORDER BY d.doc_id""".stripMargin
 
   val q101 = Q("q101_bigram_lm", fluencyOracleSql()) { (s, dir) =>
-    fluencyScored(s, dir)
+    fluencyScores(docs(s, dir))
+  }
+
+  /** q101's output — (doc_id, n_bigrams, fluency_score) in doc order — for
+    * `corpus` scored against `counts` (a bigram model trained on `corpus`
+    * itself when None). The forget, retention and amendment queries pass
+    * the survivors and a derived store's folded counts.
+    */
+  def fluencyScores(corpus: DataFrame, counts: Option[DataFrame] = None): DataFrame =
+    fluencyScoredFromCounts(corpus, counts)
       .select(col("doc_id"), col("n_bigrams"),
         when(col("n_bigrams") === 0, lit(0.0))
           .otherwise(col("sum_fp").cast("double") / (col("n_bigrams") * lit(1000000.0)))
           .as("fluency_score"))
       .orderBy("doc_id")
-  }
 
   /** The exploded (doc_id, w1, w2) bigram-occurrence rows — the shared
     * projection of the batch trainer and the streamed LM cell sink.

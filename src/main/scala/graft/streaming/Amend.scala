@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Corpus, Dedup, TextOps}
-
 /** CORRECTED-CONTENT landings (amendments) as a first-class store
   * operation — the missing semantic between replay and erasure. Every
   * sink here is replay-safe by first-verdict-wins / per-batchId
@@ -121,9 +119,13 @@ object Amend {
     *    what the OLD content added and would mis-subtract from the
     *    corrected cells. (Amend first, then re-issue the erasure wave
     *    against the corrected landing.)
+    *
+    * With `rebands` (the epoch re-band path, [[rebandsEpoch]]) the
+    * compaction and folded-epoch refusals do not apply, and split
+    * negatives archived with the epoch refuse as well as live ones.
     */
   def requireAmendable(storeDir: String, batchId: Long,
-      allowSourcedNegatives: Boolean = false): Unit = {
+      allowSourcedNegatives: Boolean = false, rebands: Boolean = false): Unit = {
     require(batchId >= 0, s"amendments target ingest landings, got $batchId")
     StoreCompaction.retentionFloor(storeDir).filter(_ > batchId).foreach { f =>
       throw new IllegalStateException(
@@ -131,22 +133,24 @@ object Amend {
           s"landing below $f — the old content left disk on the retention " +
           "clock and a correction would re-introduce data below the floor")
     }
-    StoreCompaction.compactionHorizon(storeDir).filter(_ >= batchId).foreach { h =>
-      throw new IllegalStateException(
-        s"cannot amend $storeDir batch $batchId: compaction folded batches " +
-          s"up to $h into the base, so the landing is no longer its own " +
-          "partition — amendments need the per-batch layout")
-    }
-    StoreCompaction.epochSizeOf(storeDir).foreach { es =>
-      val e = batchId / es
-      if (new java.io.File(storeDir,
-          s"batch_id=${StoreCompaction.EpochFoldBase - e}").exists())
+    if (!rebands) {
+      StoreCompaction.compactionHorizon(storeDir).filter(_ >= batchId).foreach { h =>
         throw new IllegalStateException(
-          s"cannot amend $storeDir batch $batchId: epoch $e is folded and " +
-            "the landing's rows lost their batch identity — amend before " +
-            "banding reaches the batch, or opt the store into " +
-            "declarePrefoldKeep (before folding) so late corrections " +
-            "re-band the epoch from its pre-fold archive")
+          s"cannot amend $storeDir batch $batchId: compaction folded batches " +
+            s"up to $h into the base, so the landing is no longer its own " +
+            "partition — amendments need the per-batch layout")
+      }
+      StoreCompaction.epochSizeOf(storeDir).foreach { es =>
+        val e = batchId / es
+        if (new java.io.File(storeDir,
+            s"batch_id=${StoreCompaction.EpochFoldBase - e}").exists())
+          throw new IllegalStateException(
+            s"cannot amend $storeDir batch $batchId: epoch $e is folded and " +
+              "the landing's rows lost their batch identity — amend before " +
+              "banding reaches the batch, or opt the store into " +
+              "declarePrefoldKeep (before folding) so late corrections " +
+              "re-band the epoch from its pre-fold archive")
+      }
     }
     StoreCompaction.forgetHorizon(storeDir).foreach { h =>
       throw new IllegalStateException(
@@ -155,28 +159,38 @@ object Amend {
           "of every batch — replacing this batch's positives would leave " +
           "the wave inconsistent; amend stores that take split forgets")
     }
-    val staleNegs = StoreCompaction
-      .partitionIds(new java.io.File(storeDir))
-      .filter(id => id <= StoreCompaction.SplitForgetBase &&
-        id > StoreCompaction.EpochFoldBase &&
-        StoreCompaction.splitSourceBatch(id) == batchId)
+    def sourcedAt(ids: Seq[Long]) = splitNegativesOf(ids, batchId)
     // `allowSourcedNegatives`: the STREAMED sink already re-applied every
     // outstanding forget request to the corrected content, so the
     // landing's sourced negatives are obsolete after the overwrite (their
     // positives are excluded from the corrected cells) and the amendment
     // DROPS them instead of refusing — the forget-then-amend commutation.
     // A direct caller without that guarantee keeps the refusal: dangling
-    // negatives against replaced positives mis-subtract.
-    if (staleNegs.nonEmpty && !allowSourcedNegatives)
+    // negatives against replaced positives mis-subtract. ARCHIVED ones
+    // folded INTO the epoch with their positives and a re-band's re-fold
+    // would reproduce them against the corrected cells — always refuse.
+    val live = if (allowSourcedNegatives) Nil
+      else sourcedAt(StoreCompaction.partitionIds(new java.io.File(storeDir)))
+    val staleNegs =
+      if (rebands) live ++ sourcedAt(StoreCompaction.archivedIds(storeDir)) else live
+    if (staleNegs.nonEmpty)
       throw new IllegalStateException(
         s"cannot amend $storeDir batch $batchId: split-forget negative(s) " +
-          staleNegs.sorted.mkString(", ") +
+          staleNegs.distinct.sorted.mkString(", ") +
           " negate what the OLD content added and would mis-subtract from " +
           "the corrected cells — amend first, then re-issue the erasure " +
-          "wave against the corrected landing (or route the correction " +
+          "wave against the corrected landing" + (if (rebands) "" else
+          " (or route the correction " +
           "through the streamed sink with forgetRequestDirs, which " +
-          "re-applies the erasure and retires the negatives)")
+          "re-applies the erasure and retires the negatives)"))
   }
+
+  /** The split-forget negative partitions among `ids` that negate landing
+    * `batchId`.
+    */
+  private def splitNegativesOf(ids: Seq[Long], batchId: Long): Seq[Long] =
+    ids.filter(id => id <= StoreCompaction.SplitForgetBase &&
+      id > StoreCompaction.EpochFoldBase && StoreCompaction.splitSourceBatch(id) == batchId)
 
   /** Can `batchId` amend through the epoch RE-BAND path on this store —
     * i.e. the landing is inside a folded epoch AND the store opted into
@@ -187,50 +201,6 @@ object Amend {
   private def rebandsEpoch(storeDir: String, batchId: Long): Boolean =
     StoreCompaction.prefoldKeepDeclared(storeDir) &&
       StoreCompaction.foldedEpochOf(storeDir, batchId).isDefined
-
-  /** [[requireAmendable]] minus the folded-epoch refusal — the refusal
-    * shapes that still apply when the amendment goes through the epoch
-    * re-band path: an expired landing stays unamendable (the correction
-    * would re-introduce content below the floor), whole-wave forget
-    * negations still block, and split negatives sourced at the batch —
-    * live OR archived with the epoch — still negate the OLD content and
-    * would mis-subtract from the corrected cells.
-    */
-  private def requireRebandable(storeDir: String, batchId: Long,
-      allowSourcedNegatives: Boolean = false): Unit = {
-    require(batchId >= 0, s"amendments target ingest landings, got $batchId")
-    StoreCompaction.retentionFloor(storeDir).filter(_ > batchId).foreach { f =>
-      throw new IllegalStateException(
-        s"cannot amend $storeDir batch $batchId: retention expired every " +
-          s"landing below $f — the old content left disk on the retention " +
-          "clock and a correction would re-introduce data below the floor")
-    }
-    StoreCompaction.forgetHorizon(storeDir).foreach { h =>
-      throw new IllegalStateException(
-        s"cannot amend $storeDir batch $batchId: a whole-wave forget " +
-          s"(horizon $h) negated cells computed against the OLD content " +
-          "of every batch — replacing this batch's positives would leave " +
-          "the wave inconsistent; amend stores that take split forgets")
-    }
-    def sourcedAt(ids: Seq[Long]) = ids.filter(id =>
-      id <= StoreCompaction.SplitForgetBase &&
-        id > StoreCompaction.EpochFoldBase &&
-        StoreCompaction.splitSourceBatch(id) == batchId)
-    // live sourced negatives retire with the amendment when the streamed
-    // sink re-applied the erasure (see [[requireAmendable]]); ARCHIVED
-    // ones folded INTO the epoch with their positives and the re-fold
-    // would reproduce them against the corrected cells — always refuse
-    val live = if (allowSourcedNegatives) Nil
-      else sourcedAt(StoreCompaction.partitionIds(new java.io.File(storeDir)))
-    val staleNegs = live ++ sourcedAt(StoreCompaction.archivedIds(storeDir))
-    if (staleNegs.nonEmpty)
-      throw new IllegalStateException(
-        s"cannot amend $storeDir batch $batchId: split-forget negative(s) " +
-          staleNegs.distinct.sorted.mkString(", ") +
-          " negate what the OLD content added and would mis-subtract from " +
-          "the corrected cells — amend first, then re-issue the erasure " +
-          "wave against the corrected landing")
-  }
 
   /** Amend a SUM-cell store's landing `batchId` to `corrected` content:
     * overwrite the landing partition with the store's own cell kernel
@@ -264,48 +234,36 @@ object Amend {
       // order would resurrect)
       def sourcedNegatives(): Seq[Long] =
         if (!erasureReapplied) Nil
-        else StoreCompaction.partitionIds(new java.io.File(t.deltaDir))
-          .filter(id => id <= StoreCompaction.SplitForgetBase &&
-            id > StoreCompaction.EpochFoldBase &&
-            StoreCompaction.splitSourceBatch(id) == batchId)
+        else splitNegativesOf(
+          StoreCompaction.partitionIds(new java.io.File(t.deltaDir)), batchId)
       def dropNegatives(negs: Seq[Long]): Unit = negs.foreach { id =>
         StoreCompaction.deleteRecursively(
           new java.io.File(t.deltaDir, s"batch_id=$id"))
       }
-      if (rebandsEpoch(t.deltaDir, batchId)) {
-        requireRebandable(t.deltaDir, batchId, erasureReapplied)
-        val negs = sourcedNegatives()
-        val cells = t.cells(corrected).localCheckpoint()
-        certifyAmendment(corrected.sparkSession, audit, batchId, Seq(
+      val rebands = rebandsEpoch(t.deltaDir, batchId)
+      requireAmendable(t.deltaDir, batchId, erasureReapplied, rebands)
+      val negs = sourcedNegatives()
+      val cells = t.cells(corrected).localCheckpoint()
+      certifyAmendment(corrected.sparkSession, audit, batchId,
+        (if (rebands) Seq(
           ("batch_amended", 1L, "sum-cell landing re-banded into its epoch"),
           ("epoch_rebanded",
             StoreCompaction.foldedEpochOf(t.deltaDir, batchId).get,
-            "folded epoch re-banded from the pre-fold archive"),
-          ("corrected_cells_landed", cells.count(),
+            "folded epoch re-banded from the pre-fold archive"))
+        else Seq(("batch_amended", 1L, "sum-cell landing partition replaced"))) ++
+          Seq(("corrected_cells_landed", cells.count(),
             "cells of the corrected content, replacing the old landing's")) ++
           (if (negs.nonEmpty) Seq(("stale_negatives_dropped", negs.size.toLong,
             "sourced split negatives retired — the re-applied erasure " +
               "already excludes their docs from the corrected cells"))
            else Nil))
+      if (rebands)
         StoreCompaction.rebandEpochWithAmendment(
           corrected.sparkSession, t.deltaDir, batchId, cells)
-        dropNegatives(negs)
-      } else {
-        requireAmendable(t.deltaDir, batchId, erasureReapplied)
-        val negs = sourcedNegatives()
-        val cells = t.cells(corrected).localCheckpoint()
-        certifyAmendment(corrected.sparkSession, audit, batchId, Seq(
-          ("batch_amended", 1L, "sum-cell landing partition replaced"),
-          ("corrected_cells_landed", cells.count(),
-            "cells of the corrected content, replacing the old landing's")) ++
-          (if (negs.nonEmpty) Seq(("stale_negatives_dropped", negs.size.toLong,
-            "sourced split negatives retired — the re-applied erasure " +
-              "already excludes their docs from the corrected cells"))
-           else Nil))
+      else
         cells.coalesce(1).write.mode("overwrite")
           .parquet(s"${t.deltaDir}/batch_id=$batchId")
-        dropNegatives(negs)
-      }
+      dropNegatives(negs)
     }
 
   /** Amend a per-doc identity store's landing: `rows` is the store's
@@ -356,8 +314,8 @@ object Amend {
           s"cannot amend window-mode batch $batchId: only one of the " +
             s"fp/band stores is epoch-banded with a pre-fold archive — " +
             "the pair must band (and opt in) together")
-        requireRebandable(fpDir, batchId)
-        requireRebandable(idxDir, batchId)
+        requireAmendable(fpDir, batchId, rebands = true)
+        requireAmendable(idxDir, batchId, rebands = true)
         StoreCompaction.requireConfigMarker(idxDir, "_band_conf",
           graft.ops.Dedup.bandConfigFingerprint, writeIfAbsent = false,
           "banding configuration")
@@ -437,15 +395,10 @@ object Amend {
     */
   def landCurationReelected(spark: SparkSession, root: String,
       batch: DataFrame, landingId: Long): CurationAmendReport = {
-    val (fpDir, idxDir, decDir, accDir, quarDir) =
-      (s"$root/fp", s"$root/index", s"$root/decisions",
-        s"$root/accepted", s"$root/quarantine")
-    val gatedAll = batch
-      .join(Corpus.gateFrame(batch).select(col("doc_id"), col("keep")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("text"), col("source"), col("keep"),
-        md5(TextOps.normalized(col("text"))).as("fp"))
-      .localCheckpoint()
+    val stores = CurationStream.Layout(root)
+    val (fpDir, idxDir, decDir, accDir, quarDir) = (stores.fp, stores.index,
+      stores.decisions, stores.accepted, stores.quarantine)
+    val gatedAll = CurationStream.gatedFingerprints(batch, withGateFailures = true)
     val gated = gatedAll.filter(col("keep")).drop("keep")
 
     // ── exact ownership, id-ordered across batch ∪ existing owners ──
@@ -479,18 +432,11 @@ object Amend {
 
     // duplicates pointing at a demoted owner re-point at the stealer
     val decHist = readStoreOrEmpty(spark, decDir,
-      exact.select(col("doc_id"), col("is_exact_dup"), col("exact_dup_of"),
-        lit(null).cast("long").as("n_earlier"),
-        lit(null).cast("long").as("dup_of"),
-        lit(null).cast("boolean").as("is_band_dup")))
+      exact.select(CurationStream.exactDupRow(col("exact_dup_of")): _*))
     val repointed = decHist
       .join(broadcast(steals.select(col("demoted"), col("new_owner"))),
         col("exact_dup_of") === col("demoted"))
-      .select(col("doc_id"), lit(true).as("is_exact_dup"),
-        col("new_owner").as("exact_dup_of"),
-        lit(null).cast("long").as("n_earlier"),
-        lit(null).cast("long").as("dup_of"),
-        lit(null).cast("boolean").as("is_band_dup"))
+      .select(CurationStream.exactDupRow(col("new_owner")): _*)
       .localCheckpoint()
 
     // ── fp store: land stolen + fresh owners, drop demoted rows ──
@@ -521,32 +467,17 @@ object Amend {
     // ── band re-election over every bucket whose membership changed ──
     val buckets = demotedBuckets
       .unionByName(repBands.select("band_idx", "band_hash")).distinct()
-    val idx2 = readStoreOrEmpty(spark, idxDir, idxLike)
-      .select("doc_id", "band_idx", "band_hash")
-    val affectedDocs = idx2
-      .join(buckets, Seq("band_idx", "band_hash"), "left_semi")
-      .select("doc_id").distinct().localCheckpoint()
-    val affBands = idx2.join(affectedDocs, Seq("doc_id"), "left_semi")
-    val verdicts = Dedup.keepEarliestVerdicts(affectedDocs,
-      Dedup.earlierBandPartners(affBands, idx2)).localCheckpoint()
+    val (verdicts, _) = CurationStream.reelectBuckets(
+      readStoreOrEmpty(spark, idxDir, idxLike).select("doc_id", "band_idx", "band_hash"),
+      buckets)
 
     // ── decisions: one corrective row per touched doc ──
-    val decRows = verdicts
-      .select(col("doc_id"), lit(false).as("is_exact_dup"),
-        lit(null).cast("long").as("exact_dup_of"),
-        col("n_earlier"), col("dup_of"), col("is_band_dup"))
+    val decRows = verdicts.select(CurationStream.bandVerdictRow: _*)
       .unionByName(exact.filter(col("is_exact_dup"))
-        .select(col("doc_id"), col("is_exact_dup"), col("exact_dup_of"),
-          lit(null).cast("long").as("n_earlier"),
-          lit(null).cast("long").as("dup_of"),
-          lit(null).cast("boolean").as("is_band_dup")))
+        .select(CurationStream.exactDupRow(col("exact_dup_of")): _*))
       .unionByName(demotedIds
         .join(broadcast(steals), col("doc_id") === col("demoted"))
-        .select(col("doc_id"), lit(true).as("is_exact_dup"),
-          col("new_owner").as("exact_dup_of"),
-          lit(null).cast("long").as("n_earlier"),
-          lit(null).cast("long").as("dup_of"),
-          lit(null).cast("boolean").as("is_band_dup")))
+        .select(CurationStream.exactDupRow(col("new_owner")): _*))
       .unionByName(repointed)
       .groupBy("doc_id") // a doc can be both re-pointed and re-elected;
       // exact-dup rows outrank band rows (exact-first pipeline order)
@@ -577,19 +508,10 @@ object Amend {
       .unionByName(gatedAll.select("doc_id")).distinct().localCheckpoint()
     Forget.surgicalDelete(spark, accDir, repairIds)
     Forget.surgicalDelete(spark, quarDir, repairIds)
-    val withVerdict = contentRows.join(decRows, Seq("doc_id"))
-    upsertPartition(spark, accDir, landingId,
-      withVerdict
-        .filter(!col("is_exact_dup") && !coalesce(col("is_band_dup"), lit(false)))
-        .select("doc_id", "text", "source"),
-      keyCol = "doc_id")
-    upsertPartition(spark, quarDir, landingId,
-      withVerdict
-        .filter(col("is_exact_dup") || coalesce(col("is_band_dup"), lit(false)))
-        .select(col("doc_id"), col("text"), col("source"),
-          when(col("is_exact_dup"), lit("exact_dup")).otherwise(lit("near_dup"))
-            .as("reason"))
-        .unionByName(gateFails),
+    val (accepted, quarantined) =
+      CurationStream.splitByVerdict(contentRows.join(decRows, Seq("doc_id")))
+    upsertPartition(spark, accDir, landingId, accepted, keyCol = "doc_id")
+    upsertPartition(spark, quarDir, landingId, quarantined.unionByName(gateFails),
       keyCol = "doc_id")
 
     CurationAmendReport(0L, gatedAll.count(), steals.count(),
@@ -674,8 +596,8 @@ object Amend {
       corrected: DataFrame, batchId: Long,
       correctiveId: Long,
       audit: Option[(String, String)] = None): CurationAmendReport = {
-    val dirs = Seq(s"$root/fp", s"$root/index", s"$root/decisions",
-      s"$root/accepted", s"$root/quarantine")
+    val stores = CurationStream.Layout(root)
+    val dirs = stores.dirs
     StoreCompaction.withLeases(dirs) {
       // An epoch-banded landing amends WITHOUT re-folding here: the
       // materialized composition is erase-by-doc-id (surgical deletes
@@ -686,7 +608,7 @@ object Amend {
       // (landingDocs below); a store banded without the archive keeps
       // the refusal.
       dirs.foreach { d =>
-        if (rebandsEpoch(d, batchId)) requireRebandable(d, batchId)
+        if (rebandsEpoch(d, batchId)) requireAmendable(d, batchId, rebands = true)
         else requireAmendable(d, batchId)
       }
       def landingDocs(dir: String): Option[DataFrame] = {
@@ -723,8 +645,8 @@ object Amend {
             "corrected batch rows landed through the id-ordered insert")))
         CurationAmendReport(0L, 0L, 0L, 0L, 0L)
       } else {
-        val oldIds = (landingDocs(s"$root/accepted").toSeq ++
-          landingDocs(s"$root/quarantine").toSeq ++
+        val oldIds = (landingDocs(stores.accepted).toSeq ++
+          landingDocs(stores.quarantine).toSeq ++
           recorded.map(_.select("doc_id")).toSeq)
           .reduceOption(_ unionByName _)
           .map(_.distinct().localCheckpoint())

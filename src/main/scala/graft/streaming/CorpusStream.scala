@@ -223,16 +223,19 @@ object CorpusStream {
     * any frame against it reproduces batch q164 exactly
     * (StreamingSpec-pinned).
     */
-  def ratioFromDeltas(spark: SparkSession, deltaDir: String): Map[Long, Long] = {
-    val folded = spark.read.parquet(deltaDir)
-      .groupBy("f")
-      .agg(sum(col("tgt_n")).cast("long").as("tgt_n"),
-        sum(col("raw_n")).cast("long").as("raw_n"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    graft.ops.Mining.ratioFromCounts(
-      folded.map(t => t._1 -> t._2).toMap.filter(_._2 > 0),
-      folded.map(t => t._1 -> t._3).toMap.filter(_._2 > 0))
+  def ratioFromDeltas(spark: SparkSession, deltaDir: String): Map[Long, Long] =
+    foldRatios(spark.read.parquet(deltaDir), "tgt_n").head
+
+  /** The importance ratio tables of the feature cells `rows`, folded: one
+    * per target count column, each against the same raw pool.
+    */
+  private def foldRatios(rows: DataFrame, targets: String*): Seq[Map[Long, Long]] = {
+    val counts = (targets :+ "raw_n").map(c => sum(col(c)).cast("long").as(c))
+    val folded = rows.groupBy("f").agg(counts.head, counts.tail: _*).collect()
+    def countsAt(i: Int) =
+      folded.map(r => r.getLong(0) -> r.getLong(i + 1)).toMap.filter(_._2 > 0)
+    val raw = countsAt(targets.size)
+    targets.indices.map(i => graft.ops.Mining.ratioFromCounts(countsAt(i), raw))
   }
 
   /** BOTH release ratio tables off the folded cells — v1 trains on the
@@ -242,18 +245,8 @@ object CorpusStream {
     */
   def releaseRatiosFromDeltas(spark: SparkSession,
       deltaDir: String): (Map[Long, Long], Map[Long, Long]) = {
-    val folded = spark.read.parquet(deltaDir)
-      .groupBy("f")
-      .agg(sum(col("tgt1_n")).cast("long").as("tgt1_n"),
-        sum(col("tgt_n")).cast("long").as("tgt_n"),
-        sum(col("raw_n")).cast("long").as("raw_n"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val raw = folded.map(t => t._1 -> t._4).toMap.filter(_._2 > 0)
-    (graft.ops.Mining.ratioFromCounts(
-        folded.map(t => t._1 -> t._2).toMap.filter(_._2 > 0), raw),
-      graft.ops.Mining.ratioFromCounts(
-        folded.map(t => t._1 -> t._3).toMap.filter(_._2 > 0), raw))
+    val Seq(v1, v2) = foldRatios(spark.read.parquet(deltaDir), "tgt1_n", "tgt_n")
+    (v1, v2)
   }
 
   /** The importance ratio table over a retention WINDOW [lo, upto] —
@@ -265,17 +258,8 @@ object CorpusStream {
     * forgotten members).
     */
   def ratioWindowed(spark: SparkSession, deltaDir: String, lo: Long,
-      upto: Long = Long.MaxValue): Map[Long, Long] = {
-    val folded = StoreCompaction.readWindow(spark, deltaDir, lo, upto)
-      .groupBy("f")
-      .agg(sum(col("tgt_n")).cast("long").as("tgt_n"),
-        sum(col("raw_n")).cast("long").as("raw_n"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    graft.ops.Mining.ratioFromCounts(
-      folded.map(t => t._1 -> t._2).toMap.filter(_._2 > 0),
-      folded.map(t => t._1 -> t._3).toMap.filter(_._2 > 0))
-  }
+      upto: Long = Long.MaxValue): Map[Long, Long] =
+    foldRatios(StoreCompaction.readWindow(spark, deltaDir, lo, upto), "tgt_n").head
 
   /** Feature-store retention: the fold algebra is the serving algebra. */
   def compactFeatureDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
@@ -795,19 +779,25 @@ object CorpusStream {
       docDir: String, upto: Long = Long.MaxValue): DataFrame = {
     StoreCompaction.requireServableAt(chunkDir, upto)
     StoreCompaction.requireServableAt(docDir, upto)
+    cdcReportOf(
+      spark.read.parquet(chunkDir).filter(StoreCompaction.pinnedReadFilter(upto)),
+      spark.read.parquet(docDir).filter(StoreCompaction.pinnedReadFilter(upto)))
+  }
+
+  /** The q171 report folded from the chunk-cell and doc-count rows a read
+    * returns; a negative fold refuses.
+    */
+  private def cdcReportOf(chunkRows: DataFrame, docRows: DataFrame): DataFrame = {
     def guarded(df: DataFrame, c: String) = df
       .withColumn(c, when(col(c) < 0, raise_error(concat(lit(
         s"store folded a NEGATIVE $c — a forget delta was landed for " +
           "docs this store never counted"), lit(" "), col("source"))))
         .otherwise(col(c)))
       .filter(col(c) > 0)
-    val cells = guarded(spark.read.parquet(chunkDir)
-      .filter(StoreCompaction.pinnedReadFilter(upto))
-      .groupBy("fp", "source")
+    val cells = guarded(chunkRows.groupBy("fp", "source")
       .agg(sum(col("n")).cast("long").as("n"), min(col("ln")).cast("long").as("ln")),
       "n")
-    val nd = guarded(spark.read.parquet(docDir)
-      .filter(StoreCompaction.pinnedReadFilter(upto))
+    val nd = guarded(docRows
       .groupBy("source").agg(sum(col("n_docs")).cast("long").as("n_docs")),
       "n_docs")
     graft.ops.Dedup.cdcReportFromCells(cells, nd)
@@ -823,22 +813,9 @@ object CorpusStream {
       docDir: String, lo: Long, upto: Long = Long.MaxValue): DataFrame = {
     StoreCompaction.requireWindowServableAt(chunkDir, lo, upto)
     StoreCompaction.requireWindowServableAt(docDir, lo, upto)
-    def guarded(df: DataFrame, c: String) = df
-      .withColumn(c, when(col(c) < 0, raise_error(concat(lit(
-        s"store folded a NEGATIVE $c — a forget delta was landed for " +
-          "docs this store never counted"), lit(" "), col("source"))))
-        .otherwise(col(c)))
-      .filter(col(c) > 0)
-    val cells = guarded(spark.read.parquet(chunkDir)
-      .filter(StoreCompaction.windowedReadFilter(chunkDir, lo, upto))
-      .groupBy("fp", "source")
-      .agg(sum(col("n")).cast("long").as("n"), min(col("ln")).cast("long").as("ln")),
-      "n")
-    val nd = guarded(spark.read.parquet(docDir)
-      .filter(StoreCompaction.windowedReadFilter(docDir, lo, upto))
-      .groupBy("source").agg(sum(col("n_docs")).cast("long").as("n_docs")),
-      "n_docs")
-    graft.ops.Dedup.cdcReportFromCells(cells, nd)
+    cdcReportOf(
+      spark.read.parquet(chunkDir).filter(StoreCompaction.windowedReadFilter(chunkDir, lo, upto)),
+      spark.read.parquet(docDir).filter(StoreCompaction.windowedReadFilter(docDir, lo, upto)))
   }
 
   /** CDC-store retention: the fold algebra is the serving algebra. */

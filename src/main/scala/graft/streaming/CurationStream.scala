@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.{Corpus, Dedup, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -32,6 +32,86 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object CurationStream {
 
+  /** The materialized curation family under one root: fingerprint
+    * history, band index, decision audit, and the accepted/quarantine
+    * split a training reader consumes.
+    */
+  final case class Layout(root: String) {
+    val fp: String = s"$root/fp"
+    val index: String = s"$root/index"
+    val decisions: String = s"$root/decisions"
+    val accepted: String = s"$root/accepted"
+    val quarantine: String = s"$root/quarantine"
+    def dirs: Seq[String] = Seq(fp, index, decisions, accepted, quarantine)
+  }
+
+  /** The decision audit's columns, in store order. */
+  val DecisionCols: Seq[String] =
+    Seq("doc_id", "is_exact_dup", "exact_dup_of", "n_earlier", "dup_of", "is_band_dup")
+
+  /** The decision row of an exact duplicate of `owner`: exact dups never
+    * reach banding, so the band columns are null.
+    */
+  private[graft] def exactDupRow(owner: Column): Seq[Column] =
+    Seq(col("doc_id"), lit(true).as("is_exact_dup"), owner.as("exact_dup_of"),
+      lit(null).cast("long").as("n_earlier"), lit(null).cast("long").as("dup_of"),
+      lit(null).cast("boolean").as("is_band_dup"))
+
+  /** The decision row of an exact survivor from its keep-earliest verdict. */
+  private[graft] val bandVerdictRow: Seq[Column] =
+    Seq(col("doc_id"), lit(false).as("is_exact_dup"),
+      lit(null).cast("long").as("exact_dup_of"),
+      col("n_earlier"), col("dup_of"), col("is_band_dup"))
+
+  /** The batch's gate-passing docs with their normalized-text fingerprint,
+    * (doc_id, text, source, fp), checkpointed. With `withGateFailures`,
+    * every doc with its gate verdict: (doc_id, text, source, keep, fp).
+    */
+  private[graft] def gatedFingerprints(batch: DataFrame,
+      withGateFailures: Boolean = false): DataFrame = {
+    val judged = batch
+      .join(Corpus.gateFrame(batch).select(col("doc_id"), col("keep")), Seq("doc_id"))
+    val fp = md5(TextOps.normalized(col("text"))).as("fp")
+    (if (withGateFailures)
+      judged.select(col("doc_id"), col("text"), col("source"), col("keep"), fp)
+    else judged.filter(col("keep")).select(col("doc_id"), col("text"), col("source"), fp))
+      .localCheckpoint()
+  }
+
+  /** Keep-earliest re-election for every doc of the band index `idx` with
+    * a band row in `buckets` (band_idx, band_hash) — the only docs whose
+    * partner sets change when those buckets gain or lose a member —
+    * against all of `idx`. Returns (verdicts, re-elected doc ids), both
+    * checkpointed.
+    */
+  private[graft] def reelectBuckets(idx: DataFrame,
+      buckets: DataFrame): (DataFrame, DataFrame) = {
+    val affectedDocs = idx.join(buckets, Seq("band_idx", "band_hash"), "left_semi")
+      .select("doc_id").distinct().localCheckpoint()
+    val affBands = idx.join(affectedDocs, Seq("doc_id"), "left_semi")
+    (Dedup.keepEarliestVerdicts(affectedDocs,
+      Dedup.earlierBandPartners(affBands, idx)).localCheckpoint(), affectedDocs)
+  }
+
+  /** The expectations split of docs joined to their decision columns
+    * (`is_exact_dup` null when the gate rejected the doc): accepted docs
+    * passed the gate with no exact or band dup; every other doc is
+    * quarantined with the first failing stage as its reason ('gate' |
+    * 'exact_dup' | 'near_dup'). Both keep the doc columns of `judged`.
+    * Returns (accepted, quarantine).
+    */
+  private[graft] def splitByVerdict(judged: DataFrame): (DataFrame, DataFrame) = {
+    val docCols = judged.columns.filterNot(DecisionCols.tail.contains).map(col).toSeq
+    val band = coalesce(col("is_band_dup"), lit(false))
+    (judged.filter(col("is_exact_dup").isNotNull && !col("is_exact_dup") && !band)
+      .select(docCols: _*),
+      judged.filter(col("is_exact_dup").isNull || col("is_exact_dup") || band)
+        .select(docCols :+
+          when(col("is_exact_dup").isNull, lit("gate"))
+            .when(col("is_exact_dup"), lit("exact_dup"))
+            .otherwise(lit("near_dup")).as("reason"): _*))
+  }
+
   def readDocStream(spark: SparkSession, landingDir: String): DataFrame =
     CorpusStream.readDocStream(spark, landingDir)
 
@@ -49,12 +129,7 @@ object CurationStream {
       acceptedDir: Option[String] = None,
       quarantineDir: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    val gated = batch
-      .join(Corpus.gateFrame(batch).select(col("doc_id"), col("keep")), Seq("doc_id"))
-      .filter(col("keep"))
-      .select(col("doc_id"), col("text"), col("source"),
-        md5(TextOps.normalized(col("text"))).as("fp"))
-      .localCheckpoint()
+    val gated = gatedFingerprints(batch)
 
     // exact verdicts: earliest owner of each fp among history + the batch.
     // History excludes this batch's own partition (batch_id < batchId) so
@@ -97,48 +172,27 @@ object CurationStream {
     val survivors = gated.join(
       exact.filter(!col("is_exact_dup")).select("doc_id"), Seq("doc_id"), "left_semi")
     val bands = LshStream.batchBands(survivors).localCheckpoint()
-    val idxFile = new java.io.File(indexDir)
-    val idxHist =
-      if (idxFile.exists() && idxFile.listFiles() != null &&
-          idxFile.listFiles().exists(f => f.getName.endsWith(".parquet") ||
-            (f.isDirectory && f.getName.startsWith("batch_id="))))
-        spark.read.parquet(indexDir).filter(col("batch_id") < batchId)
-          .select("doc_id", "band_idx", "band_hash")
-      else bands.filter(lit(false))
+    val idxHist = StoreCompaction.historyBefore(spark, indexDir, batchId,
+      bands.filter(lit(false))).select("doc_id", "band_idx", "band_hash")
     val partners = Dedup.firstSeenBandPartners(bands, idxHist)
     val bandVerdicts = Dedup.keepEarliestVerdicts(survivors.select("doc_id"), partners)
 
     // decisions: both verdicts in one audit row
     val decisionRows = exact
       .join(bandVerdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("is_exact_dup"), col("exact_dup_of"),
-        col("n_earlier"), col("dup_of"), col("is_band_dup"))
+      .select(DecisionCols.map(col): _*)
       .localCheckpoint()
     decisionRows
       .write.mode("overwrite").parquet(s"$decisionsDir/batch_id=$batchId")
 
     // expectations-style split: accepted store + quarantine-with-reason
     if (acceptedDir.isDefined || quarantineDir.isDefined) {
-      val verdictsAll = batch
-        .join(decisionRows.select(col("doc_id"),
-          col("is_exact_dup"), coalesce(col("is_band_dup"), lit(false)).as("band")),
-          Seq("doc_id"), "left")
-      acceptedDir.foreach { dir =>
-        verdictsAll
-          .filter(col("is_exact_dup").isNotNull && !col("is_exact_dup") && !col("band"))
-          .drop("is_exact_dup", "band")
-          .write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
-      }
-      quarantineDir.foreach { dir =>
-        verdictsAll
-          .filter(col("is_exact_dup").isNull || col("is_exact_dup") || col("band"))
-          .withColumn("reason",
-            when(col("is_exact_dup").isNull, lit("gate"))
-              .when(col("is_exact_dup"), lit("exact_dup"))
-              .otherwise(lit("near_dup")))
-          .drop("is_exact_dup", "band")
-          .write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
-      }
+      val (accepted, quarantined) = splitByVerdict(batch.join(
+        decisionRows.select("doc_id", "is_exact_dup", "is_band_dup"), Seq("doc_id"), "left"))
+      acceptedDir.foreach(dir =>
+        accepted.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId"))
+      quarantineDir.foreach(dir =>
+        quarantined.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId"))
     }
     // band index grows by the survivors' bands
     bands.write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
@@ -153,6 +207,11 @@ object CurationStream {
       .join(broadcast(histMin.select("fp")), Seq("fp"), "left_anti")
     freshFps.write.mode("overwrite").parquet(s"$fpDir/batch_id=$batchId")
   }
+
+  /** [[processBatch]] into every store of the family at `stores`. */
+  def processBatch(batch: DataFrame, stores: Layout, batchId: Long): Unit =
+    processBatch(batch, stores.fp, stores.index, stores.decisions, batchId,
+      Some(stores.accepted), Some(stores.quarantine))
 
   /** The history slice for one batch's fingerprints: the store probed
     * with a broadcast semi-join on the SMALL batch fp set — history is
@@ -230,25 +289,20 @@ object CurationStream {
   // election join instead of a pure store read — the price of a layout
   // that can age, and the reason both layouts exist.
 
-  /** One landing of the window-mode curation stores: the gated batch's
-    * per-doc fingerprint rows and per-doc band rows, each an
-    * OVERWRITE-idempotent per-batchId partition.
-    */
   /** The two per-batch frames one window-mode landing writes: the gated
     * batch's per-doc fingerprint rows and per-doc band rows — shared by
     * [[writeWindowDelta]] and the epoch re-band amendment path (which
     * needs the same frames computed from a CORRECTED batch).
     */
   private[graft] def windowDeltaFrames(batch: DataFrame): (DataFrame, DataFrame) = {
-    val gated = batch
-      .join(Corpus.gateFrame(batch).select(col("doc_id"), col("keep")), Seq("doc_id"))
-      .filter(col("keep"))
-      .select(col("doc_id"), col("text"), col("source"),
-        md5(TextOps.normalized(col("text"))).as("fp"))
-      .localCheckpoint()
+    val gated = gatedFingerprints(batch)
     (gated.select("doc_id", "fp", "source"), LshStream.batchBands(gated))
   }
 
+  /** One landing of the window-mode curation stores: the gated batch's
+    * per-doc fingerprint rows and per-doc band rows, each an
+    * OVERWRITE-idempotent per-batchId partition.
+    */
   def writeWindowDelta(batch: DataFrame, fpDir: String, idxDir: String,
       batchId: Long): Unit = {
     StoreCompaction.requireConfigMarker(idxDir, "_band_conf",
@@ -290,8 +344,7 @@ object CurationStream {
     val verdicts = Dedup.keepEarliestVerdicts(repIds,
       Dedup.firstSeenBandPartners(bands, bands.filter(lit(false))))
     exact.join(verdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("is_exact_dup"), col("exact_dup_of"),
-        col("n_earlier"), col("dup_of"), col("is_band_dup"))
+      .select(DecisionCols.map(col): _*)
       .orderBy("doc_id")
   }
 

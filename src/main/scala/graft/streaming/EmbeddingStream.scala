@@ -249,13 +249,8 @@ object EmbeddingStream {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$occDeltaDir/batch_id=$batchId")
     // dedup verdicts off the same assignment (dedupSink's history rule)
-    val hist = new java.io.File(historyDir)
-    val history =
-      if (hist.exists() && hist.listFiles() != null &&
-          hist.listFiles().exists(f => f.getName.endsWith(".parquet") ||
-            (f.isDirectory && f.getName.startsWith("batch_id="))))
-        spark.read.parquet(historyDir).filter(col("batch_id") < batchId)
-      else asg.filter(lit(false))
+    val history = StoreCompaction.historyBefore(spark, historyDir, batchId,
+      asg.filter(lit(false)))
     val decisions = scoreBatch(asg, history).localCheckpoint()
     decisions.write.mode("overwrite").parquet(s"$decisionsDir/batch_id=$batchId")
     // history rows carry the label so the semantic-leakage audit
@@ -307,16 +302,8 @@ object EmbeddingStream {
         val spark = batch.sparkSession
         val cents = spark.read.parquet(centroidPath)
         val asg = assignFrozen(batch, cents).localCheckpoint()
-        val hist = new java.io.File(historyDir)
-        val history =
-          if (hist.exists() && hist.listFiles() != null &&
-              hist.listFiles().exists(f => f.getName.endsWith(".parquet") ||
-                (f.isDirectory && f.getName.startsWith("batch_id="))))
-            // a replayed batch may already have (partially) written its
-            // own partition — exclude it so scoring always sees exactly
-            // the pre-batch history
-            spark.read.parquet(historyDir).filter(col("batch_id") < batchId)
-          else asg.filter(lit(false))
+        val history = StoreCompaction.historyBefore(spark, historyDir, batchId,
+          asg.filter(lit(false)))
         scoreBatch(asg, history)
           .write.mode("overwrite").parquet(s"$decisionsDir/batch_id=$batchId")
         // label rides along for the audit serving path (see

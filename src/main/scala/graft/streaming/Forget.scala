@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
-
 /** Right-to-be-forgotten over the artifact stores — deletion as a
   * FIRST-CLASS store operation, not a rebuild. Two mechanics, chosen by
   * store algebra:
@@ -149,9 +147,15 @@ object Forget {
   def kAnonCellsAfterForget(spark: SparkSession, deltaDir: String,
       upto: Long = Long.MaxValue): DataFrame = {
     StoreCompaction.requireServableAt(deltaDir, upto)
-    spark.read.parquet(deltaDir)
-      .filter(StoreCompaction.pinnedReadFilter(upto))
-      .groupBy("source", "lang", "len_bucket")
+    foldKAnonCells(spark.read.parquet(deltaDir)
+      .filter(StoreCompaction.pinnedReadFilter(upto)), deltaDir)
+  }
+
+  /** The QI-group cells `rows` of the store at `deltaDir` folded to group
+    * sizes, tombstones dropped, negative folds refused.
+    */
+  private def foldKAnonCells(rows: DataFrame, deltaDir: String): DataFrame =
+    rows.groupBy("source", "lang", "len_bucket")
       .agg(sum(col("gsz")).cast("long").as("gsz"))
       .withColumn("gsz",
         when(col("gsz") < 0, raise_error(concat(lit(
@@ -159,7 +163,6 @@ object Forget {
             "delta was landed for docs this store never counted: "),
           col("source"), lit("/"), col("lang")))).otherwise(col("gsz")))
       .filter(col("gsz") > 0)
-  }
 
   /** The folded QI-group cells over a retention WINDOW [lo, upto] —
     * [[kAnonCellsAfterForget]]'s windowed twin, with the same tombstone
@@ -171,16 +174,8 @@ object Forget {
   def kAnonCellsAfterForgetWindow(spark: SparkSession, deltaDir: String,
       lo: Long, upto: Long = Long.MaxValue): DataFrame = {
     StoreCompaction.requireWindowServableAt(deltaDir, lo, upto)
-    spark.read.parquet(deltaDir)
-      .filter(StoreCompaction.windowedReadFilter(deltaDir, lo, upto))
-      .groupBy("source", "lang", "len_bucket")
-      .agg(sum(col("gsz")).cast("long").as("gsz"))
-      .withColumn("gsz",
-        when(col("gsz") < 0, raise_error(concat(lit(
-          s"store $deltaDir folded a NEGATIVE QI-group size — a forget " +
-            "delta was landed for docs this store never counted: "),
-          col("source"), lit("/"), col("lang")))).otherwise(col("gsz")))
-      .filter(col("gsz") > 0)
+    foldKAnonCells(spark.read.parquet(deltaDir)
+      .filter(StoreCompaction.windowedReadFilter(deltaDir, lo, upto)), deltaDir)
   }
 
   /** Surgically delete every row whose `keyCol` is in `ids` from a
@@ -400,9 +395,9 @@ object Forget {
     import org.apache.spark.sql.functions.broadcast
     val fIds = forgotten.select(col(forgotten.columns.head).as("doc_id"))
       .localCheckpoint()
-    val (fpDir, idxDir, decDir, accDir, quarDir) =
-      (s"$root/fp", s"$root/index", s"$root/decisions",
-        s"$root/accepted", s"$root/quarantine")
+    val stores = CurationStream.Layout(root)
+    val (fpDir, idxDir, decDir, accDir, quarDir) = (stores.fp, stores.index,
+      stores.decisions, stores.accepted, stores.quarantine)
 
     // 1. captures, then deletes
     val orphanFps = spark.read.parquet(fpDir)
@@ -411,9 +406,8 @@ object Forget {
     val bucketsF = spark.read.parquet(idxDir)
       .join(fIds, Seq("doc_id"), "left_semi")
       .select("band_idx", "band_hash").distinct().localCheckpoint()
-    val deleted = Seq("fp" -> fpDir, "index" -> idxDir, "decisions" -> decDir,
-      "accepted" -> accDir, "quarantine" -> quarDir)
-      .map { case (n, d) => n -> surgicalDelete(spark, d, fIds) }.toMap
+    val deleted = stores.dirs
+      .map(d => new java.io.File(d).getName -> surgicalDelete(spark, d, fIds)).toMap
 
     // 2. exact re-election off the quarantine store's recomputable fps
     val quarDups = spark.read.parquet(quarDir)
@@ -438,26 +432,15 @@ object Forget {
     // 3. band re-election over every bucket that changed membership
     val buckets = bucketsF
       .unionByName(newBands.select("band_idx", "band_hash")).distinct()
-    val idx2 = spark.read.parquet(idxDir)
-      .select("doc_id", "band_idx", "band_hash")
-    val affectedDocs = idx2.join(buckets, Seq("band_idx", "band_hash"), "left_semi")
-      .select("doc_id").distinct().localCheckpoint()
-    val affBands = idx2.join(affectedDocs, Seq("doc_id"), "left_semi")
-    val verdicts = graft.ops.Dedup.keepEarliestVerdicts(affectedDocs,
-      graft.ops.Dedup.earlierBandPartners(affBands, idx2)).localCheckpoint()
+    val (verdicts, affectedDocs) = CurationStream.reelectBuckets(
+      spark.read.parquet(idxDir).select("doc_id", "band_idx", "band_hash"), buckets)
 
     // decisions: replace every touched doc's row with its recomputed one
     val touched = affectedDocs.unionByName(remDups.select("doc_id")).distinct()
       .localCheckpoint()
     surgicalDelete(spark, decDir, touched)
-    val decRows = verdicts
-      .select(col("doc_id"), lit(false).as("is_exact_dup"),
-        lit(null).cast("long").as("exact_dup_of"),
-        col("n_earlier"), col("dup_of"), col("is_band_dup"))
-      .unionByName(remDups.select(col("doc_id"), lit(true).as("is_exact_dup"),
-        col("owner").as("exact_dup_of"), lit(null).cast("long").as("n_earlier"),
-        lit(null).cast("long").as("dup_of"),
-        lit(null).cast("boolean").as("is_band_dup")))
+    val decRows = verdicts.select(CurationStream.bandVerdictRow: _*)
+      .unionByName(remDups.select(CurationStream.exactDupRow(col("owner")): _*))
       .localCheckpoint()
     decRows.write.mode("overwrite").parquet(s"$decDir/batch_id=$correctiveId")
 
@@ -468,17 +451,10 @@ object Forget {
       .join(touched, Seq("doc_id"), "left_semi").localCheckpoint()
     surgicalDelete(spark, accDir, touched)
     surgicalDelete(spark, quarDir, touched)
-    val withVerdict = docRows.join(decRows, Seq("doc_id"))
-    withVerdict
-      .filter(!col("is_exact_dup") && !coalesce(col("is_band_dup"), lit(false)))
-      .select("doc_id", "text", "source")
-      .write.mode("overwrite").parquet(s"$accDir/batch_id=$correctiveId")
-    withVerdict
-      .filter(col("is_exact_dup") || coalesce(col("is_band_dup"), lit(false)))
-      .select(col("doc_id"), col("text"), col("source"),
-        when(col("is_exact_dup"), lit("exact_dup")).otherwise(lit("near_dup"))
-          .as("reason"))
-      .write.mode("overwrite").parquet(s"$quarDir/batch_id=$correctiveId")
+    val (accepted, quarantined) =
+      CurationStream.splitByVerdict(docRows.join(decRows, Seq("doc_id")))
+    accepted.write.mode("overwrite").parquet(s"$accDir/batch_id=$correctiveId")
+    quarantined.write.mode("overwrite").parquet(s"$quarDir/batch_id=$correctiveId")
 
     CurationForgetReport(deleted, orphanFps.count(), newOwners.count(),
       verdicts.count(), remDups.count())
@@ -521,13 +497,8 @@ object Forget {
     val idxRep = surgicalDelete(spark, indexDir, keys)
     val decRep = surgicalDelete(spark, decisionsDir, keys)
 
-    val idx = spark.read.parquet(indexDir)
-      .select("doc_id", "band_idx", "band_hash")
-    val affectedDocs = idx.join(buckets, Seq("band_idx", "band_hash"), "left_semi")
-      .select("doc_id").distinct().localCheckpoint()
-    val affBands = idx.join(affectedDocs, Seq("doc_id"), "left_semi")
-    val verdicts = Dedup.keepEarliestVerdicts(affectedDocs,
-      Dedup.earlierBandPartners(affBands, idx)).localCheckpoint()
+    val (verdicts, affectedDocs) = CurationStream.reelectBuckets(
+      spark.read.parquet(indexDir).select("doc_id", "band_idx", "band_hash"), buckets)
 
     surgicalDelete(spark, decisionsDir, affectedDocs)
     val nextId = StoreCompaction.partitionIds(new java.io.File(decisionsDir))

@@ -262,7 +262,7 @@ object ForgetStream {
     }
     targets.curationRoot.foreach { root =>
       val next = StoreCompaction.partitionIds(
-          new java.io.File(s"$root/decisions"))
+          new java.io.File(CurationStream.Layout(root).decisions))
         .filter(_ != StoreCompaction.BasePartition)
         .foldLeft(-1L)(math.max) + 1L
       val rep = Forget.forgetFromCurationStores(spark, root, ids,

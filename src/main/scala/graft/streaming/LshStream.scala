@@ -86,14 +86,8 @@ object LshStream {
       family.conf, writeIfAbsent = true,
       s"banding configuration (${family.name})")
     val bands = family.bandsOf(batch).localCheckpoint()
-    val idx = new java.io.File(indexDir)
-    val history =
-      if (idx.exists() && idx.listFiles() != null &&
-          idx.listFiles().exists(f => f.getName.endsWith(".parquet") ||
-            (f.isDirectory && f.getName.startsWith("batch_id="))))
-        spark.read.parquet(indexDir).filter(col("batch_id") < batchId)
-          .select("doc_id", "band_idx", "band_hash")
-      else bands.filter(lit(false))
+    val history = StoreCompaction.historyBefore(spark, indexDir, batchId,
+      bands.filter(lit(false))).select("doc_id", "band_idx", "band_hash")
     // first-seen partner rule (Dedup.firstSeenBandPartners): history
     // colliders count unconditionally (they arrived earlier by
     // construction), batch-internal ones by lower id — bit-equal to the

@@ -127,8 +127,12 @@ object OrderStream {
     * q158 over the union of all landed documents, with zero document
     * rescans (StreamingSpec-pinned).
     */
-  def segmentManifestFromDeltas(spark: SparkSession, deltaDir: String): DataFrame = {
-    val masses = spark.read.parquet(deltaDir)
+  def segmentManifestFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
+    manifestOf(spark, spark.read.parquet(deltaDir))
+
+  /** The segment manifest planned over the mass-cell rows a read returns. */
+  private def manifestOf(spark: SparkSession, cells: DataFrame): DataFrame = {
+    val masses = cells
       .groupBy("source", "w").agg(sum(col("n_docs")).cast("long").as("n"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -142,14 +146,8 @@ object OrderStream {
     * plan never schedules erased or expired documents).
     */
   def segmentManifestWindowed(spark: SparkSession, deltaDir: String,
-      lo: Long, upto: Long = Long.MaxValue): DataFrame = {
-    val masses = StoreCompaction.readWindow(spark, deltaDir, lo, upto)
-      .groupBy("source", "w").agg(sum(col("n_docs")).cast("long").as("n"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .toSeq.sortBy((t: (String, Long, Long)) => t._1)
-    Mining.renormManifestDf(spark, masses).orderBy("seg_idx")
-  }
+      lo: Long, upto: Long = Long.MaxValue): DataFrame =
+    manifestOf(spark, StoreCompaction.readWindow(spark, deltaDir, lo, upto))
 
   /** Mass-store retention: same fold algebra as serving. */
   def compactMassDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =

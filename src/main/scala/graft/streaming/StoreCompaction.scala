@@ -1570,6 +1570,21 @@ object StoreCompaction {
       .foldRight(() => body)((dir, cont) => () => withLease(dir, staleMs)(cont()))
       .apply()
 
+  /** The landings of the per-batchId store at `dir` below `batchId`, or
+    * `empty` while the store has none. A replayed batch may already have
+    * (partly) written its own partition, so it is never its own history.
+    */
+  private[streaming] def historyBefore(spark: SparkSession, dir: String,
+      batchId: Long, empty: DataFrame): DataFrame = {
+    val f = new java.io.File(dir)
+    val landed = f.exists() && f.listFiles() != null &&
+      f.listFiles().exists(x => x.getName.endsWith(".parquet") ||
+        (x.isDirectory && x.getName.startsWith("batch_id=")))
+    if (landed) spark.read.parquet(dir)
+      .filter(org.apache.spark.sql.functions.col("batch_id") < batchId)
+    else empty
+  }
+
   private[streaming] def partitionIds(dir: java.io.File): Seq[Long] =
     Option(dir.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.exec.Pipeline
-import org.apache.spark.{CodegenCacheDefault, SparkConf}
+import org.apache.spark.{ConfDefaults, SparkConf}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CodegenCacheSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
-  import CodegenCacheDefault.{Entries, Key}
+  import ConfDefaults.{CodegenCacheEntries => Entries, CodegenCacheKey => Key}
 
   test("an engine session carries the engine's codegen cache size") {
     assert(spark.conf.get(Key) === Entries.toString)
@@ -32,10 +32,11 @@ class CodegenCacheSpec extends AnyFunSuite with TempDirs {
 
   test("a value set explicitly wins over the default") {
     val set = new SparkConf(false).set(Key, "77")
-    assert(!CodegenCacheDefault.defaultIfUnset(set))
+    assert(ConfDefaults.applyTo(set) === ConfDefaults.Defaults.keySet - Key)
     assert(set.get(Key) === "77")
     val unset = new SparkConf(false)
-    assert(CodegenCacheDefault.defaultIfUnset(unset))
+    assert(ConfDefaults.applyTo(unset) === ConfDefaults.Defaults.keySet)
     assert(unset.get(Key) === Entries.toString)
+    assert(unset.get(ConfDefaults.NanosAsLongKey) === "true")
   }
 }

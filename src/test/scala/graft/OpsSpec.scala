@@ -1468,6 +1468,7 @@ class OpsSpec extends AnyFunSuite {
     def names(): Seq[String] =
       castToImpl(fresh).sessionState.functionRegistry.listFunction().map(_.unquotedString).sorted
     val before = names()
+    val confBefore = fresh.conf.getAll
     val byId = SparkEntry.allQ.map(q => q.name.takeWhile(_ != '_') -> q).toMap
     Seq("q199", "q140", "q192", "q186", "q173", "q202", "q107", "q110").foreach { id =>
       byId(id).fn(fresh, sf).count()
@@ -1475,6 +1476,8 @@ class OpsSpec extends AnyFunSuite {
     val after = names()
     // (names added, names removed)
     assert((after.diff(before), before.diff(after)) === ((Nil, Nil)))
+    // nor the session conf (q110 reads `events`)
+    assert(fresh.conf.getAll === confBefore)
   }
 
   test("asof join: latest right row at-or-before each left timestamp, null when none") {

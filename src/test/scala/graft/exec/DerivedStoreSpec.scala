@@ -111,21 +111,16 @@ class DerivedStoreSpec extends AnyFunSuite {
   }
 
   test("no main code but DerivedStore names the temp dir or a store commit marker") {
-    val main = new File("src/main/scala")
-    assert(main.isDirectory, s"run from the repository root: ${main.getAbsolutePath}")
     val banned = Seq("java.io.tmpdir", "_STORE_COMMITTED", "_STORES_COMMITTED",
       "_ARTIFACT_COMMITTED", "_INDEX_COMMITTED")
-    val walk = Files.walk(main.toPath)
-    val hits = try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator.asScala.filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "DerivedStore.scala")
-        .flatMap { p =>
-          Files.readAllLines(p).asScala.zipWithIndex.collect {
-            case (l, i) if banned.exists(l.contains) => s"$p:${i + 1}: ${l.trim}"
-          }
-        }.toList
-    } finally walk.close()
+    import scala.jdk.CollectionConverters._
+    val hits = graft.MainSources.files
+      .filter(_.getFileName.toString != "DerivedStore.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if banned.exists(l.contains) => s"$p:${i + 1}: ${l.trim}"
+        }
+      }
     assert(hits.isEmpty,
       s"cache a derived store through DerivedStore.cached:\n${hits.mkString("\n")}")
   }

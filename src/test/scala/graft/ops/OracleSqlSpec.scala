@@ -1,7 +1,6 @@
 package graft.ops
 
-import java.io.File
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -12,42 +11,12 @@ import scala.jdk.CollectionConverters._
   */
 class OracleSqlSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[Path] = {
-    val main = new File("src/main/scala")
-    assert(main.isDirectory, s"run from the repository root: ${main.getAbsolutePath}")
-    val walk = Files.walk(main.toPath)
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sortBy(_.toString)
-    finally walk.close()
-  }
-
-  /** The repeated windows of `window` consecutive oracle lines (trimmed
-    * lines starting with `|`), at least `window - 1` of them longer than
-    * 4 characters, each with the places it occurs.
-    */
-  private def repeatedWindows(window: Int): Map[Seq[String], Seq[String]] = {
-    val at = for {
-      p <- mainSources
-      run <- oracleRuns(Files.readAllLines(p).asScala.toSeq)
-      w <- run.sliding(window) if w.size == window && w.count(_._2.length > 4) >= window - 1
-    } yield w.map(_._2) -> s"$p:${w.head._1}"
-    at.groupBy(_._1).collect { case (w, hits) if hits.size > 1 => w -> hits.map(_._2) }
-  }
-
-  /** Maximal runs of consecutive oracle lines, with 1-based line numbers. */
-  private def oracleRuns(lines: Seq[String]): Seq[Seq[(Int, String)]] =
-    lines.zipWithIndex.map { case (l, i) => (i + 1, l.trim) }
-      .foldLeft(List(List.empty[(Int, String)])) {
-        case (cur :: done, (i, t)) if t.startsWith("|") => ((i, t) :: cur) :: done
-        case (cur :: done, _) => Nil :: cur :: done
-        case (Nil, _) => Nil
-      }
-      .map(_.reverse).filter(_.nonEmpty).reverse
+  private def mainSources = graft.MainSources.files
 
   test("no window of 8 consecutive oracle lines appears twice") {
-    val dup = repeatedWindows(8)
-    assert(dup.isEmpty, "call a shared fragment instead of pasting it:\n" +
-      dup.toSeq.sortBy(_._2.head).take(10).map { case (w, at) =>
-        s"${at.mkString(", ")}\n  ${w.mkString("\n  ")}" }.mkString("\n"))
+    val dup = graft.MainSources.repeatedWindows(8, _.startsWith("|"))
+    assert(dup.size === 0, "call a shared fragment instead of pasting it:\n" +
+      graft.MainSources.describe(dup))
   }
 
   test("the tokenizer and h60 are spelled only in OracleSql") {
