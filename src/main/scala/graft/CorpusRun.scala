@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Mining}
-import graft.streaming.CurationStream
+import graft.streaming.{CorpusStream, CurationStream}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -364,9 +364,8 @@ object CorpusRun {
     val rBounds = Seq(rq, 2 * rq, 3 * rq, Long.MaxValue)
     rBounds.zipWithIndex.foreach { case (hiB, k) =>
       val loB = if (k == 0) Long.MinValue else rBounds(k - 1)
-      graft.streaming.CorpusStream.writeLmDelta(
-        rdocs.filter(col("doc_id") >= loB && col("doc_id") < hiB),
-        ttlStore, k.toLong)
+      CorpusStream.lmStore(ttlStore).land(
+        rdocs.filter(col("doc_id") >= loB && col("doc_id") < hiB), k.toLong)
     }
     StoreCompaction.registerPin(ttlStore, "rel_v1", 1L)
     val rContent = rdocs.withColumn("src_batch",
@@ -385,20 +384,20 @@ object CorpusRun {
       }
     ForgetStream.forgetSink(
       ForgetStream.readRequestStream(spark, rLanding), rContent,
-      ForgetStream.ForgetTargets(lmDeltaDir = Some(ttlStore),
+      ForgetStream.ForgetTargets(cellStores = Seq(CorpusStream.lmStore(ttlStore)),
         splitBySrcBatch = true),
       rMarkers, rCk).awaitTermination()
     def lmSnap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     val rSurv = pmod(col("doc_id"), lit(fm)) =!= lit(fr)
     val pinServedOk =
-      lmSnap(graft.streaming.Forget.lmCountsAfterForget(spark, ttlStore, upto = 1L)) ==
+      lmSnap(CorpusStream.lmStore(ttlStore).servedAt(spark, upto = 1L)) ==
         lmSnap(graft.streaming.CorpusStream.lmCells(
           rdocs.filter(col("doc_id") < 2 * rq && rSurv)))
     StoreCompaction.releasePin(ttlStore, "rel_v1")
     val exp = StoreCompaction.expireBefore(ttlStore, 2L)
     val windowOk =
-      lmSnap(graft.streaming.Forget.lmCountsAfterForgetWindow(spark, ttlStore, lo = 2L)) ==
+      lmSnap(CorpusStream.lmStore(ttlStore).servedWindow(spark, lo = 2L)) ==
         lmSnap(graft.streaming.CorpusStream.lmCells(
           rdocs.filter(col("doc_id") >= 2 * rq && rSurv)))
     val s16 = Stage("retention", exp.droppedBatches.size.toLong,
@@ -420,17 +419,16 @@ object CorpusRun {
     rmTree(new java.io.File(rAudit))
     rBounds.zipWithIndex.foreach { case (hiB, k) =>
       val loB = if (k == 0) Long.MinValue else rBounds(k - 1)
-      graft.streaming.CorpusStream.writeLmDelta(
-        rdocs.filter(col("doc_id") >= loB && col("doc_id") < hiB),
-        ttlStore, (4 + k).toLong)
+      CorpusStream.lmStore(ttlStore).land(
+        rdocs.filter(col("doc_id") >= loB && col("doc_id") < hiB), (4 + k).toLong)
     }
     val preFold = lmSnap(
-      graft.streaming.Forget.lmCountsAfterForgetWindow(spark, ttlStore, lo = 2L))
+      CorpusStream.lmStore(ttlStore).servedWindow(spark, lo = 2L))
     val mrep = StoreCompaction.maintain(spark, ttlStore, Seq("w1", "w2"),
       StoreCompaction.MaintenancePolicy(keepLatestDeltas = 1,
         epochSize = Some(2L)))
     val foldUnchanged = lmSnap(
-      graft.streaming.Forget.lmCountsAfterForgetWindow(spark, ttlStore, lo = 2L)) == preFold
+      CorpusStream.lmStore(ttlStore).servedWindow(spark, lo = 2L)) == preFold
     val expE = StoreCompaction.expireBeforeCertified(spark, ttlStore,
       lo = 4L, rAudit, storeName = "retention_lm")
     val certRows = StoreCompaction.expiryCertificate(spark, rAudit)
@@ -439,7 +437,7 @@ object CorpusRun {
     val certOk = certRows ==
       Set(Seq("retention_lm", 4L, "epoch_drop", 1L))
     val windowOk4 = lmSnap(
-      graft.streaming.Forget.lmCountsAfterForgetWindow(spark, ttlStore, lo = 4L)) ==
+      CorpusStream.lmStore(ttlStore).servedWindow(spark, lo = 4L)) ==
       lmSnap(graft.streaming.CorpusStream.lmCells(rdocs))
     val s17 = Stage("epoch_banding", mrep.epochsFolded,
       mrep.epochsFolded == 2L && foldUnchanged && certOk && windowOk4 &&

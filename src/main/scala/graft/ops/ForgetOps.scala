@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Catalog
 import graft.exec.DerivedStore
 import graft.queries.Q
-import graft.streaming.{CorpusStream, CurationStream, Forget, LshStream}
+import graft.streaming.{CellStore, CorpusStream, CurationStream, EmbeddingStream, Forget, LshStream}
 
 /** q200-q202 — right-to-be-forgotten over the artifact stores, end to
   * end: a deterministic forget set (doc_id % 17 = 3, ~6 % of the corpus)
@@ -78,8 +78,8 @@ object ForgetOps {
   def buildLmForgetStore(s: SparkSession, dir: String): String =
     DerivedStore.cached("lm_forget", dir, "documents") { root =>
       val d = docs(s, dir)
-      landSlices(d, 2)((sl, k) => CorpusStream.writeLmDelta(sl, root, k))
-      Forget.forgetLmDocs(d.filter(forgottenPred), root, 2L)
+      landSlices(d, 2)((sl, k) => CorpusStream.lmStore(root).land(sl, k))
+      CorpusStream.lmStore(root).forget(d.filter(forgottenPred), 2L)
     }
 
   private def q200OracleSql: String = TextOps.fluencyOracleSql(survivorsSql)
@@ -97,7 +97,7 @@ object ForgetOps {
     val store = buildLmForgetStore(s, dir)
     val survivors = docs(s, dir).filter(!forgottenPred)
     TextOps.fluencyScores(survivors,
-      Some(Forget.lmCountsAfterForget(s, store)))
+      Some(CorpusStream.lmStore(store).servedAt(s)))
   }
 
   // ── the band store with forget + re-election ──────────────────────────
@@ -191,8 +191,8 @@ object ForgetOps {
     val root = DerivedStore.cached("div_forget", dir, "documents") { root =>
       val (dims, stats) = (s"$root/dims", s"$root/stats")
       val d = docs(s, dir)
-      landSlices(d, 2)((sl, k) => CorpusStream.writeDivDelta(sl, dims, stats, k))
-      Forget.forgetDivDocs(d.filter(forgottenPred), dims, stats, 2L)
+      landSlices(d, 2)((sl, k) => CellStore.land(sl, k, CorpusStream.divStores(dims, stats)))
+      CellStore.forget(d.filter(forgottenPred), 2L, CorpusStream.divStores(dims, stats))
     }
     (s"$root/dims", s"$root/stats")
   }
@@ -200,7 +200,7 @@ object ForgetOps {
   private def q203OracleSql: String = Similarity.q178OracleSql(survivorsSql)
 
   /** q203 — diversity AFTER FORGETTING: the negative-cell erasure law
-    * ([[graft.streaming.Forget.forgetDivDocs]]) on a TWO-store family —
+    * ([[graft.streaming.CellStore.forget]]) on a TWO-store family —
     * one negated landing on the dimension-sum and stat stores makes the
     * served per-source diversity equal q178 recomputed on the surviving
     * corpus (the centroid identity is linear in exactly the sums the
@@ -283,8 +283,8 @@ object ForgetOps {
   def buildKAnonForgetStore(s: SparkSession, dir: String): String =
     DerivedStore.cached("kanon_forget", dir, "documents") { root =>
       val d = docs(s, dir)
-      landSlices(d, 2)((sl, k) => CorpusStream.writeKAnonDelta(sl, root, k))
-      Forget.forgetKAnonDocs(d.filter(forgottenPred), root, 2L)
+      landSlices(d, 2)((sl, k) => CorpusStream.kAnonStore(root).land(sl, k))
+      CorpusStream.kAnonStore(root).forget(d.filter(forgottenPred), 2L)
     }
 
   private def q205OracleSql: String = TextOps.q189OracleSql(survivorsSql)
@@ -294,7 +294,7 @@ object ForgetOps {
     * pre-erasure audit under-suppresses — a group at exactly k members
     * drops below k when one member is erased, and its remaining docs
     * become re-identification risks. One negative QI-cell landing
-    * ([[graft.streaming.Forget.forgetKAnonDocs]]) re-serves the q189
+    * ([[graft.streaming.CellStore.forget]]) re-serves the q189
     * audit at survivor-exact group sizes (groups folded to zero
     * disappear; negative folds refuse); oracle = q189's SQL over the
     * survivors. The third store family under the negative-cell erasure
@@ -304,7 +304,7 @@ object ForgetOps {
   val q205 = Q("q205_kanon_after_forget", q205OracleSql) { (s, dir) =>
     val store = buildKAnonForgetStore(s, dir)
     graft.ops.TextOps.kAnonymityFromCells(
-      Forget.kAnonCellsAfterForget(s, store))
+      CorpusStream.kAnonStore(store).servedAt(s))
   }
 
   // ── round 10: the erasure loop closed over EVERY content-bearing store ──
@@ -458,7 +458,7 @@ object ForgetOps {
     val root = DerivedStore.cached("span_forget", dir, "documents") { root =>
       val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text")
-      landSlices(d, 2)((sl, k) => CorpusStream.writeSpanDelta(sl, deltas, k))
+      landSlices(d, 2)((sl, k) => CorpusStream.spanStore(deltas).land(sl, k))
       Forget.forgetSpanCells(s, deltas, d.filter(forgottenPred),
         d.filter(!forgottenPred), correctiveId = 2L)
     }
@@ -493,8 +493,8 @@ object ForgetOps {
     val root = DerivedStore.cached("cdc_forget", dir, "documents") { root =>
       val (chunks, nd) = (s"$root/chunks", s"$root/docs")
       val d = docs(s, dir).select("doc_id", "source", "text")
-      landSlices(d, 2)((sl, k) => CorpusStream.writeCdcDelta(sl, chunks, nd, k))
-      Forget.forgetCdcDocs(d.filter(forgottenPred), chunks, nd, 2L)
+      landSlices(d, 2)((sl, k) => CellStore.land(sl, k, CorpusStream.cdcStores(chunks, nd)))
+      CellStore.forget(d.filter(forgottenPred), 2L, CorpusStream.cdcStores(chunks, nd))
     }
     (s"$root/chunks", s"$root/docs")
   }
@@ -609,13 +609,13 @@ object ForgetOps {
       .orderBy("kind")
   }
 
-  // ── q213: embedding-occupancy cells AFTER forgetting (SumCellTarget) ──
+  // ── q213: embedding-occupancy cells AFTER forgetting (CellStore) ──────
 
   /** The frozen quantizer (the round-1 fixed-point centroids whose
     * cosine argmax IS the q104/q130 `asg2` assignment), two snapshot-
     * tagged occupancy landings split at max(vec_id)/2 (snapshots =
     * vec_id parity), then the negative forget landing through the
-    * GENERIC [[graft.streaming.Forget.SumCellTarget]] wiring — the same
+    * GENERIC [[graft.streaming.CellStore]] erasure — the same
     * entry every eval/feature/MW cell store uses, so this build is the
     * symmetry proof that any add-mergeable store in the system erases
     * with one negated landing. Idempotent. Returns
@@ -638,12 +638,10 @@ object ForgetOps {
       val snap = e.select(col("vec_id"), col("embedding"),
         pmod(col("vec_id"), lit(2L)).as("snapshot_id"))
       val cut = snap.agg(max(col("vec_id"))).head().getLong(0) / 2
-      graft.streaming.EmbeddingStream.writeOccupancyDelta(
-        snap.filter(col("vec_id") < cut), cents, deltas, 0L)
-      graft.streaming.EmbeddingStream.writeOccupancyDelta(
-        snap.filter(col("vec_id") >= cut), cents, deltas, 1L)
-      Forget.forgetSumCells(snap.filter(forgottenVecPred),
-        Forget.occupancyCellTarget(deltas, cents), 2L)
+      val occ = EmbeddingStream.occupancyStore(deltas, cents)
+      occ.land(snap.filter(col("vec_id") < cut), 0L)
+      occ.land(snap.filter(col("vec_id") >= cut), 1L)
+      occ.forget(snap.filter(forgottenVecPred), 2L)
     }
     (s"$root/deltas", s"$root/centroids")
   }
@@ -665,7 +663,7 @@ object ForgetOps {
   /** q213 — OCCUPANCY DRIFT AFTER FORGETTING: the last cell-store family
     * without an erasure audit (the round-10 handoff's symmetry gap).
     * Forgetting vectors lands their (snapshot, cluster) counts negated
-    * through the generic SumCellTarget wiring — the forgotten vectors
+    * through the generic CellStore erasure — the forgotten vectors
     * re-assigned against the SAME frozen quantizer the sink uses, so the
     * folded occupancy equals a recount over the survivors and the served
     * q130 pair-χ² statistic (snapshot A vs B) is survivor-exact: the
@@ -677,17 +675,16 @@ object ForgetOps {
     * exact χ² tail.
     */
   val q213 = Q("q213_occupancy_forget", q213OracleSql) { (s, dir) =>
-    val (deltas, _) = buildOccForgetStore(s, dir)
-    Similarity.occupancyPairChi2(
-      Forget.occupancyAfterForget(s, deltas, 0L, "na"),
-      Forget.occupancyAfterForget(s, deltas, 1L, "nb"))
+    val (deltas, cents) = buildOccForgetStore(s, dir)
+    EmbeddingStream.occupancyPairFromDeltas(s,
+      EmbeddingStream.occupancyStore(deltas, cents), 0L, 1L)
   }
 
   // ── q214: a release pin SURVIVES erasure (pin-preserving split forget) ──
 
   /** Four quartile LM landings (batches 0-3 by doc_id), the release pin
     * registered at batch 1 — and THEN the forget wave, landed
-    * PIN-PRESERVINGLY ([[graft.streaming.Forget.forgetSumCellsSplit]]):
+    * PIN-PRESERVINGLY ([[graft.streaming.CellStore.forgetSplit]]):
     * one negative delta per source batch the forgotten docs span, ids
     * encoding the source batch, NO forget horizon sealed. The pin stays
     * registered and legal throughout. Idempotent.
@@ -697,12 +694,11 @@ object ForgetOps {
     val d = docs(s, dir)
     val q = landingWidth(d, 4)
     val root = DerivedStore.cached("lmpin_forget", dir, "documents") { root =>
-      landSlices(d, 4, q)((sl, k) => CorpusStream.writeLmDelta(sl, root, k))
+      landSlices(d, 4, q)((sl, k) => CorpusStream.lmStore(root).land(sl, k))
       graft.streaming.StoreCompaction.registerPin(root, "release_b1", 1L)
       val forgotten = d.filter(forgottenPred)
         .withColumn("src_batch", landingOf(q, 4))
-      Forget.forgetSumCellsSplit(forgotten, Forget.lmCellTarget(root),
-        requestId = 0L)
+      CorpusStream.lmStore(root).forgetSplit(forgotten, requestId = 0L)
     }
     (root, 2 * q)
   }
@@ -718,7 +714,7 @@ object ForgetOps {
     * pinned BELOW a later wave's frontier refuses to serve. When the
     * content archive records each doc's original landing batch, the wave
     * can land ONE NEGATIVE DELTA PER SOURCE BATCH instead
-    * ([[graft.streaming.Forget.forgetSumCellsSplit]]), each under an id
+    * ([[graft.streaming.CellStore.forgetSplit]]), each under an id
     * encoding the batch it negates — and every pinned read then folds
     * exactly the negatives inside its slice
     * ([[graft.streaming.StoreCompaction.pinnedReadFilter]], all
@@ -740,7 +736,7 @@ object ForgetOps {
     val pinnedSurvivors = docs(s, dir)
       .filter(!forgottenPred && col("doc_id") < cut2)
     TextOps.fluencyScores(pinnedSurvivors,
-      Some(Forget.lmCountsAfterForget(s, store, upto = 1L)))
+      Some(CorpusStream.lmStore(store).servedAt(s, upto = 1L)))
   }
 
   // ── q215: retention expiry + windowed serving + split forget compose ──
@@ -757,11 +753,10 @@ object ForgetOps {
     val d = docs(s, dir)
     val q = landingWidth(d, 4)
     val root = DerivedStore.cached("lmttl", dir, "documents") { root =>
-      landSlices(d, 4, q)((sl, k) => CorpusStream.writeLmDelta(sl, root, k))
+      landSlices(d, 4, q)((sl, k) => CorpusStream.lmStore(root).land(sl, k))
       val forgotten = d.filter(forgottenPred)
         .withColumn("src_batch", landingOf(q, 4))
-      Forget.forgetSumCellsSplit(forgotten, Forget.lmCellTarget(root),
-        requestId = 0L)
+      CorpusStream.lmStore(root).forgetSplit(forgotten, requestId = 0L)
       graft.streaming.StoreCompaction.expireBefore(root, lo = 2L)
     }
     (root, 2 * q)
@@ -794,7 +789,7 @@ object ForgetOps {
     val windowSurvivors = docs(s, dir)
       .filter(!forgottenPred && col("doc_id") >= cut2)
     TextOps.fluencyScores(windowSurvivors,
-      Some(Forget.lmCountsAfterForgetWindow(s, store, lo = 2L)))
+      Some(CorpusStream.lmStore(store).servedWindow(s, lo = 2L)))
   }
 
   // ── q216: ANN retrieval AFTER erasure (file-level surgical delete) ────
@@ -860,9 +855,9 @@ object ForgetOps {
         s"$root/kanon", s"$root/chunks", s"$root/nd", s"$root/shingle",
         s"$root/assets")
       landSlices(d, 2, cut) { (sl, b) =>
-        CorpusStream.writeLmDelta(sl, lm, b)
-        CorpusStream.writeKAnonDelta(sl, kanon, b)
-        CorpusStream.writeCdcDelta(sl, chunks, nd, b)
+        CorpusStream.lmStore(lm).land(sl, b)
+        CorpusStream.kAnonStore(kanon).land(sl, b)
+        CellStore.land(sl, b, CorpusStream.cdcStores(chunks, nd))
         graft.streaming.ScrubStream.writeShingleDelta(sl, shingle, b)
       }
       s.read.parquet(graft.ops.Multimodal.buildAssetStore(s, dir))
@@ -872,8 +867,9 @@ object ForgetOps {
       graft.streaming.ForgetStream.processBatch(
         d.filter(forgottenPred).select("doc_id"), content,
         graft.streaming.ForgetStream.ForgetTargets(
-          lmDeltaDir = Some(lm), kAnonDeltaDir = Some(kanon),
-          cdcStores = Some((chunks, nd)), shingleIndexDirs = Seq(shingle),
+          cellStores = CorpusStream.lmStore(lm) +: CorpusStream.kAnonStore(kanon) +:
+            CorpusStream.cdcStores(chunks, nd),
+          shingleIndexDirs = Seq(shingle),
           assetStore = Some((assets, "kind")), splitBySrcBatch = true),
         markers, batchId = 0L)
     }
@@ -995,11 +991,10 @@ object ForgetOps {
     val root = DerivedStore.cached("lmepoch", dir, "documents") { root =>
       val deltas = s"$root/deltas"
       val audit = s"$root/expiry_audit"
-      landSlices(d, 8, o)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
+      landSlices(d, 8, o)((sl, k) => CorpusStream.lmStore(deltas).land(sl, k))
       val forgotten = d.filter(forgottenPred)
         .withColumn("src_batch", least(expr(s"doc_id div $o"), lit(7L)).cast("long"))
-      Forget.forgetSumCellsSplit(forgotten, Forget.lmCellTarget(deltas),
-        requestId = 0L)
+      CorpusStream.lmStore(deltas).forgetSplit(forgotten, requestId = 0L)
       val rep = graft.streaming.StoreCompaction.maintain(s, deltas,
         Seq("w1", "w2"), graft.streaming.StoreCompaction.MaintenancePolicy(
           keepLatestDeltas = 3, epochSize = Some(2L)))
@@ -1033,7 +1028,7 @@ object ForgetOps {
     val windowSurvivors = docs(s, dir)
       .filter(!forgottenPred && col("doc_id") >= cut6)
     TextOps.fluencyScores(windowSurvivors,
-      Some(Forget.lmCountsAfterForgetWindow(s, store, lo = 6L)))
+      Some(CorpusStream.lmStore(store).servedWindow(s, lo = 6L)))
   }
 
   /** q220 — the EXPIRY CERTIFICATE, ground-truthed: q217's
@@ -1158,13 +1153,12 @@ object ForgetOps {
     DerivedStore.cached("feat_ttl", dir, "documents") { root =>
       val d = docs(s, dir)
       (0 until 4).foreach { k =>
-        CorpusStream.writeFeatureDelta(
-          d.filter(pmod(col("doc_id"), lit(4L)) === k.toLong), root, k.toLong)
+        CorpusStream.featureStore(root)
+          .land(d.filter(pmod(col("doc_id"), lit(4L)) === k.toLong), k.toLong)
       }
       val forgotten = d.filter(forgottenPred)
         .withColumn("src_batch", pmod(col("doc_id"), lit(4L)))
-      Forget.forgetSumCellsSplit(forgotten, Forget.featureCellTarget(root),
-        requestId = 0L)
+      CorpusStream.featureStore(root).forgetSplit(forgotten, requestId = 0L)
       graft.streaming.StoreCompaction.expireBefore(root, lo = 2L)
     }
 
@@ -1345,8 +1339,8 @@ object ForgetOps {
       val deltas = s"$root/deltas"
       val d = docs(s, dir)
       val (batch, _, w) = amendFixture(s, dir)
-      landSlices(d, 4, w)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
-      graft.streaming.Amend.amendSumCells(Forget.lmCellTarget(deltas), batch, 1L)
+      landSlices(d, 4, w)((sl, k) => CorpusStream.lmStore(deltas).land(sl, k))
+      graft.streaming.Amend.amendSumCells(CorpusStream.lmStore(deltas), batch, 1L)
     }
     s"$root/deltas"
   }
@@ -1367,7 +1361,7 @@ object ForgetOps {
     val deltas = buildLmAmendStore(s, dir)
     val (_, corpus, _) = amendFixture(s, dir)
     TextOps.fluencyScores(corpus,
-      Some(Forget.lmCountsAfterForget(s, deltas)))
+      Some(CorpusStream.lmStore(deltas).servedAt(s)))
   }
 
   /** Four quartile landings of the WINDOW-MODE curation stores, then
@@ -1463,11 +1457,11 @@ object ForgetOps {
       val d = docs(s, dir).select("doc_id", "text", "source")
       val o = landingWidth(d, 8)
       require(o > 0, s"compliance store needs max(doc_id) >= 8, got width $o")
-      landSlices(d, 8, o)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
+      landSlices(d, 8, o)((sl, k) => CorpusStream.lmStore(deltas).land(sl, k))
       val content = d.withColumn("src_batch",
         least(expr(s"doc_id div $o"), lit(7L)).cast("long"))
       val targets = graft.streaming.ForgetStream.ForgetTargets(
-        lmDeltaDir = Some(deltas), splitBySrcBatch = true)
+        cellStores = Seq(CorpusStream.lmStore(deltas)), splitBySrcBatch = true)
       Seq(3L -> 0L, 5L -> 1L).foreach { case (res, reqId) =>
         graft.streaming.ForgetStream.processBatch(
           d.filter(pmod(col("doc_id"), lit(ForgetMod)) === lit(res))
@@ -1654,10 +1648,10 @@ object ForgetOps {
       val d = docs(s, dir)
       val (batch, _, w) = amendFixture(s, dir)
       graft.streaming.StoreCompaction.declarePrefoldKeep(deltas)
-      landSlices(d, 4, w)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
+      landSlices(d, 4, w)((sl, k) => CorpusStream.lmStore(deltas).land(sl, k))
       graft.streaming.StoreCompaction.foldEpochs(s, deltas,
         epochSize = 2L, uptoBatch = 3L)
-      graft.streaming.Amend.amendSumCells(Forget.lmCellTarget(deltas), batch, 1L)
+      graft.streaming.Amend.amendSumCells(CorpusStream.lmStore(deltas), batch, 1L)
     }
     s"$root/deltas"
   }
@@ -1679,7 +1673,7 @@ object ForgetOps {
     val deltas = buildLmRebandStore(s, dir)
     val (_, corpus, _) = amendFixture(s, dir)
     TextOps.fluencyScores(corpus,
-      Some(Forget.lmCountsAfterForgetWindow(s, deltas, lo = 0L)))
+      Some(CorpusStream.lmStore(deltas).servedWindow(s, lo = 0L)))
   }
 
   /** The evolving per-DOC stat rows — [[statCells]]' identity twin
@@ -1767,11 +1761,11 @@ object ForgetOps {
       val d = docs(s, dir).select("doc_id", "text", "source")
       val o = landingWidth(d, 8)
       require(o > 0, s"ledger snapshot store needs max(doc_id) >= 8, got width $o")
-      landSlices(d, 8, o)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
+      landSlices(d, 8, o)((sl, k) => CorpusStream.lmStore(deltas).land(sl, k))
       val content = d.withColumn("src_batch",
         least(expr(s"doc_id div $o"), lit(7L)).cast("long"))
       val targets = graft.streaming.ForgetStream.ForgetTargets(
-        lmDeltaDir = Some(deltas), splitBySrcBatch = true)
+        cellStores = Seq(CorpusStream.lmStore(deltas)), splitBySrcBatch = true)
       def snapshot(id: Long): Unit = {
         graft.streaming.Compliance.landLedgerSnapshot(s, snaps, id,
           Seq("lm" -> deltas), forgetMarkerRoots = Seq(markers),
@@ -1899,13 +1893,13 @@ object ForgetOps {
       val deltas = s"$root/deltas"
       val d = docs(s, dir).select("doc_id", "text", "source")
       val (batch, _, w) = amendFixture(s, dir)
-      landSlices(d, 4, w)((sl, k) => CorpusStream.writeLmDelta(sl, deltas, k))
+      landSlices(d, 4, w)((sl, k) => CorpusStream.lmStore(deltas).land(sl, k))
       val fIds = d.filter(col("doc_id") < 2 * w &&
         pmod(col("doc_id"), lit(9L)) === 4L).select("doc_id")
       val content = d.withColumn("src_batch", landingOf(w, 4).cast("long"))
       graft.streaming.ForgetStream.processBatch(fIds, content,
         graft.streaming.ForgetStream.ForgetTargets(
-          sumCellStores = Seq(Forget.lmCellTarget(deltas)),
+          cellStores = Seq(CorpusStream.lmStore(deltas)),
           splitBySrcBatch = true),
         s"$root/forget_markers", 0L)
       fIds.coalesce(1).write.mode("overwrite").parquet(s"$root/requests")
@@ -1913,7 +1907,7 @@ object ForgetOps {
         batch.select(lit(1L).as("amend_batch"), col("doc_id"),
           col("text"), col("source")),
         graft.streaming.Amend.AmendTargets(
-          sumCellStores = Seq("lm" -> Forget.lmCellTarget(deltas)),
+          cellStores = Seq(CorpusStream.lmStore(deltas)),
           forgetRequestDirs = Seq(s"$root/requests")),
         s"$root/amend_markers", 0L, Some(s"$root/amend_audit"))
     }
@@ -1942,7 +1936,7 @@ object ForgetOps {
     val after = corpus.filter(!(pmod(col("doc_id"), lit(9L)) === 4L &&
       col("doc_id") < 2 * w))
     TextOps.fluencyScores(after,
-      Some(Forget.lmCountsAfterForget(s, deltas)))
+      Some(CorpusStream.lmStore(deltas).servedAt(s)))
   }
 
   val all: Seq[Q] = Seq(q200, q201, q202, q203, q204, q205, q206, q207,

@@ -194,18 +194,6 @@ object Similarity {
        |LIMIT 10""".stripMargin
   }
 
-  /** The IVF coarse quantizer: per-label fixed-point mean vector (one
-    * posexplode + hash aggregate — exact-decimal means so the oracle
-    * matches bit-for-bit).
-    */
-  def ivfCentroids(e: DataFrame): DataFrame = {
-    val un = e.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-    val mu = un.groupBy("label", "pos").agg(Det.davg(col("x"), 6).as("mu"))
-    mu.groupBy("label").agg(
-      transform(array_sort(collect_list(struct(col("pos"), col("mu")))),
-        c => c.getField("mu")).as("centroid"))
-  }
-
   /** (label, pos) INTEGER centroid sums — the associative representation
     * behind the IVF artifact. Because each element is floor-scaled to a
     * long before summing, merging two corpora's sums then decoding equals

@@ -219,11 +219,11 @@ object Amend {
     * end. Cost: O(epoch), not O(store). Non-opted stores keep the loud
     * [[requireAmendable]] refusal.
     */
-  def amendSumCells(t: Forget.SumCellTarget, corrected: DataFrame,
+  def amendSumCells(t: CellStore, corrected: DataFrame,
       batchId: Long,
       audit: Option[(String, String)] = None,
       erasureReapplied: Boolean = false): Unit =
-    StoreCompaction.withLease(t.deltaDir) {
+    StoreCompaction.withLease(t.dir) {
       // with `erasureReapplied` (the streamed sink filtered the corrected
       // content against every outstanding forget request), the landing's
       // LIVE sourced split negatives are obsolete once the overwrite
@@ -235,20 +235,20 @@ object Amend {
       def sourcedNegatives(): Seq[Long] =
         if (!erasureReapplied) Nil
         else splitNegativesOf(
-          StoreCompaction.partitionIds(new java.io.File(t.deltaDir)), batchId)
+          StoreCompaction.partitionIds(new java.io.File(t.dir)), batchId)
       def dropNegatives(negs: Seq[Long]): Unit = negs.foreach { id =>
         StoreCompaction.deleteRecursively(
-          new java.io.File(t.deltaDir, s"batch_id=$id"))
+          new java.io.File(t.dir, s"batch_id=$id"))
       }
-      val rebands = rebandsEpoch(t.deltaDir, batchId)
-      requireAmendable(t.deltaDir, batchId, erasureReapplied, rebands)
+      val rebands = rebandsEpoch(t.dir, batchId)
+      requireAmendable(t.dir, batchId, erasureReapplied, rebands)
       val negs = sourcedNegatives()
       val cells = t.cells(corrected).localCheckpoint()
       certifyAmendment(corrected.sparkSession, audit, batchId,
         (if (rebands) Seq(
           ("batch_amended", 1L, "sum-cell landing re-banded into its epoch"),
           ("epoch_rebanded",
-            StoreCompaction.foldedEpochOf(t.deltaDir, batchId).get,
+            StoreCompaction.foldedEpochOf(t.dir, batchId).get,
             "folded epoch re-banded from the pre-fold archive"))
         else Seq(("batch_amended", 1L, "sum-cell landing partition replaced"))) ++
           Seq(("corrected_cells_landed", cells.count(),
@@ -259,10 +259,10 @@ object Amend {
            else Nil))
       if (rebands)
         StoreCompaction.rebandEpochWithAmendment(
-          corrected.sparkSession, t.deltaDir, batchId, cells)
+          corrected.sparkSession, t.dir, batchId, cells)
       else
         cells.coalesce(1).write.mode("overwrite")
-          .parquet(s"${t.deltaDir}/batch_id=$batchId")
+          .parquet(s"${t.dir}/batch_id=$batchId")
       dropNegatives(negs)
     }
 
@@ -720,7 +720,7 @@ object Amend {
   case class AmendTargets(
       curationRoot: Option[String] = None,
       windowCuration: Option[(String, String)] = None,
-      sumCellStores: Seq[(String, Forget.SumCellTarget)] = Nil,
+      cellStores: Seq[CellStore] = Nil,
       identityStores: Seq[IdentityAmendTarget] = Nil,
       forgetRequestDirs: Seq[String] = Nil)
 
@@ -778,8 +778,8 @@ object Amend {
     amended.zipWithIndex.foreach { case (b, k) =>
       val slice = kept.filter(col("amend_batch") === b)
         .select("doc_id", "text", "source").localCheckpoint()
-      targets.sumCellStores.foreach { case (n, t) =>
-        amendSumCells(t, slice, b, audit = auditRoot.map((_, n)),
+      targets.cellStores.foreach { t =>
+        amendSumCells(t, slice, b, audit = auditRoot.map((_, t.family)),
           erasureReapplied = targets.forgetRequestDirs.nonEmpty)
       }
       targets.windowCuration.foreach { case (fp, idx) =>
@@ -807,13 +807,7 @@ object Amend {
   def amendSink(stream: DataFrame, targets: AmendTargets, markerRoot: String,
       checkpointDir: String,
       auditRoot: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .queryName("amendment_requests")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processAmendBatch(batch, targets, markerRoot, batchId, auditRoot)
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "amendment_requests", checkpointDir) { (batch, batchId) =>
+      processAmendBatch(batch, targets, markerRoot, batchId, auditRoot)
+    }
 }

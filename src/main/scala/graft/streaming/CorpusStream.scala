@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.{Corpus, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming corpus ingest — the training-data twin of the sensor
@@ -72,114 +72,59 @@ object CorpusStream {
     * call again as new files land; the checkpoint carries progress.
     */
   def ingestSink(stream: DataFrame, historyDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .queryName("corpus_ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fps = gatedFingerprints(batch)
-        val firstInBatch = fps.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-        val batchReps = fps.join(firstInBatch, Seq("fp", "doc_id"), "left_semi")
-        val hist = new java.io.File(historyDir)
-        val fresh =
-          if (hist.exists() && hist.listFiles() != null && hist.listFiles().nonEmpty) {
-            // exclude this batch's own partition: a partially-visible
-            // replay write must never count as history for itself.
-            // Per-batch cost law: probe the BIG history with the small
-            // batch's fps (broadcast semi-join — history is scanned,
-            // never shuffled), then anti-join against the matched slice
-            // (≤ batch size, broadcast). A direct anti-join against the
-            // full store would shuffle the whole store every batch.
-            val known = spark.read.parquet(historyDir)
-              .filter(col("batch_id") < batchId).select("fp")
-              .join(broadcast(batchReps.select("fp")), Seq("fp"), "left_semi")
-            batchReps.join(broadcast(known), Seq("fp"), "left_anti")
-          } else batchReps
-        // history rows carry (fp, doc_id, source): later batches anti-join
-        // on fp only, so appended text never needs to be re-read. A
-        // per-batchId OVERWRITE partition (not append) makes a crashed-
-        // then-replayed batch rewrite identical rows instead of adding a
-        // second copy — history stays one row per fp by construction.
-        fresh.select("fp", "doc_id", "source")
-          .write.mode("overwrite").parquet(s"$historyDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "corpus_ingest", checkpointDir) { (batch, batchId) =>
+      val fps = gatedFingerprints(batch)
+      val firstInBatch = fps.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
+      val batchReps = fps.join(firstInBatch, Seq("fp", "doc_id"), "left_semi")
+      // Per-batch cost law: probe the BIG history with the small batch's
+      // fps (broadcast semi-join — history is scanned, never shuffled),
+      // then anti-join against the matched slice (≤ batch size,
+      // broadcast). A direct anti-join against the full store would
+      // shuffle the whole store every batch.
+      val known = StoreCompaction.historyBefore(batch.sparkSession, historyDir,
+          batchId, batchReps.select("fp").filter(lit(false)))
+        .select("fp")
+        .join(broadcast(batchReps.select("fp")), Seq("fp"), "left_semi")
+      // history rows carry (fp, doc_id, source): later batches anti-join
+      // on fp only, so appended text never needs to be re-read. A
+      // per-batchId OVERWRITE partition (not append) makes a crashed-
+      // then-replayed batch rewrite identical rows instead of adding a
+      // second copy — history stays one row per fp by construction.
+      batchReps.join(broadcast(known), Seq("fp"), "left_anti")
+        .select("fp", "doc_id", "source")
+        .write.mode("overwrite").parquet(s"$historyDir/batch_id=$batchId")
+    }
 
-  // ── classifier-vs-gate eval cells (q163 serving) ────────────────────
+  // ── the corpus cell stores, each declared once ───────────────────────
+  //
+  // Every additive store below is a [[CellStore]]: its landing, sink,
+  // pinned and windowed reads, compaction and erasure all derive from the
+  // declaration. The serves that follow are each family's bespoke
+  // post-processing over the store's served cells (or, for kernels that
+  // re-fold themselves, its pinned or windowed rows).
 
-  /** Idempotent per-batch eval-cell delta — Mining.evalCells verbatim,
+  /** q163's classifier-vs-gate eval cells — Mining.evalCells verbatim,
     * so the streamed fold can never band or gate a doc differently from
-    * batch q163. ≤ |bands|+1 SUM rows per batch, per-batchId OVERWRITE.
+    * batch q163. ≤ |bands|+1 SUM rows per batch.
     */
-  def writeEvalDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(
-      graft.ops.Mining.evalCells(batch), deltaDir, batchId)
-  }
-
-  /** Eval-cell maintenance sink: the evaluation dashboard a curation
-    * team watches (is the cheap classifier still tracking the gate?)
-    * kept current as documents land, with zero corpus rescans at
-    * serving time.
-    */
-  def evalCellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("classifier_eval_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeEvalDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("band")), maintain)
-      }
-      .start()
+  def evalStore(dir: String): CellStore = CellStore("sum_cells", dir, Seq("band"),
+    Seq("n_docs" -> CellStore.Sum, "n_keep" -> CellStore.Sum),
+    graft.ops.Mining.evalCells, tombstone = Some("n_docs" -> "doc count"))
 
   /** Serve the q163 eval table off the folded cells alone — bit-equal
     * to batch q163 over the union of landings (StreamingSpec-pinned).
-    * Bands folded to zero docs are forget tombstones
-    * ([[Forget.forgetSumCells]]) and are dropped; negative folds refuse.
     */
   def evalTableFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
-    graft.ops.Mining.evalTableFromCells(spark,
-      guardedFold(spark.read.parquet(deltaDir), Seq("band"),
-        Seq("n_docs", "n_keep"), "n_docs"))
+    graft.ops.Mining.evalTableFromCells(spark, evalStore(deltaDir).servedAt(spark))
 
-  /** The q163 eval table over a retention WINDOW [lo, upto] —
-    * [[evalTableFromDeltas]]'s windowed twin ([[lmCountsWindowed]]'s
-    * law on the eval family): classifier-vs-gate agreement measured
-    * over exactly the retained landings' survivors.
+  /** The q163 eval table over a retention WINDOW [lo, upto]:
+    * classifier-vs-gate agreement measured over exactly the retained
+    * landings' survivors.
     */
   def evalTableWindowed(spark: SparkSession, deltaDir: String, lo: Long,
       upto: Long = Long.MaxValue): DataFrame =
     graft.ops.Mining.evalTableFromCells(spark,
-      guardedFold(StoreCompaction.readWindow(spark, deltaDir, lo, upto),
-        Seq("band"), Seq("n_docs", "n_keep"), "n_docs"))
-
-  /** Shared tombstone discipline for SUM-cell stores under erasure:
-    * fold the cells, REFUSE a negative count (a forget delta landed for
-    * docs the store never counted), drop zero-count tombstones.
-    */
-  private def guardedFold(cells: DataFrame, keys: Seq[String],
-      sums: Seq[String], countCol: String): DataFrame =
-    cells.groupBy(keys.map(col): _*)
-      .agg(sum(col(sums.head)).cast("long").as(sums.head),
-        sums.tail.map(c => sum(col(c)).cast("long").as(c)): _*)
-      .withColumn(countCol,
-        when(col(countCol) < 0, raise_error(lit(
-          s"store folded a NEGATIVE $countCol — a forget delta was landed " +
-            "for docs this store never counted"))).otherwise(col(countCol)))
-      .filter(col(countCol) > 0)
-
-  /** Eval-store retention: the fold algebra is the serving algebra. */
-  def compactEvalDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto) { cells =>
-      cells.groupBy("band")
-        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-          sum(col("n_keep")).cast("long").as("n_keep"))
-    }
+      evalStore(deltaDir).servedWindow(spark, lo, upto))
 
   // ── targeted-selection feature cells (q164 serving) ─────────────────
 
@@ -199,24 +144,10 @@ object CorpusStream {
         graft.queries.Det.countIf(col("doc_id") < 50).as("tgt_n"),
         graft.queries.Det.countIf(col("doc_id") >= 50).as("raw_n"))
 
-  def writeFeatureDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(featureCells(batch), deltaDir, batchId)
-  }
-
-  /** Feature-cell maintenance sink — q164's trainer kept current. */
-  def featureCellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("selection_feature_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeFeatureDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("f")), maintain)
-      }
-      .start()
+  /** The feature-cell store — q164's trainer kept current. */
+  def featureStore(dir: String): CellStore = CellStore("sum_cells", dir, Seq("f"),
+    Seq("tgt1_n" -> CellStore.Sum, "tgt_n" -> CellStore.Sum, "raw_n" -> CellStore.Sum),
+    featureCells)
 
   /** The importance ratio table off the folded cells alone — bit-equal
     * to the batch-trained table over the union of landings, so scoring
@@ -224,16 +155,15 @@ object CorpusStream {
     * (StreamingSpec-pinned).
     */
   def ratioFromDeltas(spark: SparkSession, deltaDir: String): Map[Long, Long] =
-    foldRatios(spark.read.parquet(deltaDir), "tgt_n").head
+    ratiosOf(featureStore(deltaDir).servedAt(spark), "tgt_n").head
 
-  /** The importance ratio tables of the feature cells `rows`, folded: one
-    * per target count column, each against the same raw pool.
+  /** The importance ratio tables of the folded feature cells: one per
+    * target count column, each against the same raw pool.
     */
-  private def foldRatios(rows: DataFrame, targets: String*): Seq[Map[Long, Long]] = {
-    val counts = (targets :+ "raw_n").map(c => sum(col(c)).cast("long").as(c))
-    val folded = rows.groupBy("f").agg(counts.head, counts.tail: _*).collect()
+  private def ratiosOf(folded: DataFrame, targets: String*): Seq[Map[Long, Long]] = {
+    val rows = folded.select(("f" +: targets :+ "raw_n").map(col): _*).collect()
     def countsAt(i: Int) =
-      folded.map(r => r.getLong(0) -> r.getLong(i + 1)).toMap.filter(_._2 > 0)
+      rows.map(r => r.getLong(0) -> r.getLong(i + 1)).toMap.filter(_._2 > 0)
     val raw = countsAt(targets.size)
     targets.indices.map(i => graft.ops.Mining.ratioFromCounts(countsAt(i), raw))
   }
@@ -245,30 +175,20 @@ object CorpusStream {
     */
   def releaseRatiosFromDeltas(spark: SparkSession,
       deltaDir: String): (Map[Long, Long], Map[Long, Long]) = {
-    val Seq(v1, v2) = foldRatios(spark.read.parquet(deltaDir), "tgt1_n", "tgt_n")
+    val Seq(v1, v2) = ratiosOf(featureStore(deltaDir).servedAt(spark), "tgt1_n", "tgt_n")
     (v1, v2)
   }
 
-  /** The importance ratio table over a retention WINDOW [lo, upto] —
-    * [[ratioFromDeltas]]'s windowed twin: the DSIR selector trained on
-    * exactly the cells of the landings still on disk, which is what
-    * "train the selector only on licensed data" means operationally.
-    * Split-forget negatives inside the window fold too, so the trained
-    * table equals a from-scratch train on (window docs) minus (their
-    * forgotten members).
+  /** The importance ratio table over a retention WINDOW [lo, upto]: the
+    * DSIR selector trained on exactly the cells of the landings still on
+    * disk, which is what "train the selector only on licensed data"
+    * means operationally. Split-forget negatives inside the window fold
+    * too, so the trained table equals a from-scratch train on (window
+    * docs) minus (their forgotten members).
     */
   def ratioWindowed(spark: SparkSession, deltaDir: String, lo: Long,
       upto: Long = Long.MaxValue): Map[Long, Long] =
-    foldRatios(StoreCompaction.readWindow(spark, deltaDir, lo, upto), "tgt_n").head
-
-  /** Feature-store retention: the fold algebra is the serving algebra. */
-  def compactFeatureDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto) { cells =>
-      cells.groupBy("f")
-        .agg(sum(col("tgt1_n")).cast("long").as("tgt1_n"),
-          sum(col("tgt_n")).cast("long").as("tgt_n"),
-          sum(col("raw_n")).cast("long").as("raw_n"))
-    }
+    ratiosOf(featureStore(deltaDir).servedWindow(spark, lo, upto), "tgt_n").head
 
   // ── bigram-LM count cells (q101/q170 serving) ───────────────────────
 
@@ -281,59 +201,31 @@ object CorpusStream {
     TextOps.bigramRows(batch)
       .groupBy("w1", "w2").agg(count(lit(1)).cast("long").as("c12"))
 
-  def writeLmDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(lmCells(batch), deltaDir, batchId)
-  }
-
-  /** LM-cell maintenance sink — the q101 fluency trainer kept current as
-    * documents land, zero corpus rescans at serving time.
+  /** The LM count store — the q101 fluency trainer kept current as
+    * documents land. `servedAt(spark, upto)` pins a MODEL RELEASE: only
+    * batches ≤ upto fold in, so one store serves every historical model
+    * (q173's rotation without a second training pass), and the read
+    * refuses a pin behind the compaction or forget horizon instead of
+    * silently including post-pin rows. Register the release via
+    * [[StoreCompaction.registerPin]] and compaction refuses to cross it.
+    * `servedWindow(spark, lo, upto)` is the serve of a store under
+    * RETENTION: expiry drops whole landings below the moving floor and
+    * the window folds exactly the surviving landings (their split-forget
+    * negatives included), so a windowed model equals a retrain on
+    * (window docs) minus (their forgotten members). Bigrams folded to
+    * zero are forget tombstones; the served counts equal a retrain on
+    * the survivors.
     */
-  def lmCellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("bigram_lm_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeLmDelta(batch, deltaDir, batchId)
-        // sink-side maintenance hook (see StoreCompaction.sinkMaintain —
-        // this sink was the template, now shared by every delta sink)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("w1")), maintain)
-      }
-      .start()
-
-  /** The folded count table off the store alone — scoring any frame with
-    * it reproduces batch q101/q170 bit-for-bit over the union of landings
-    * (StreamingSpec-pinned). `upto` pins a MODEL RELEASE: only batches
-    * ≤ upto fold in, so one store serves every historical model (q173's
-    * rotation without a second training pass). The pin-ahead-of-
-    * compaction rule is ENFORCED, not documented: register the release
-    * via [[StoreCompaction.registerPin]] and `compactLmDeltas` (like
-    * every fold) refuses to cross it; this read itself asserts
-    * [[StoreCompaction.requireServableAt]] so a pin behind the
-    * compaction horizon fails loudly instead of silently including
-    * post-pin rows folded into the base.
-    */
-  def lmCountsFromDeltas(spark: SparkSession, deltaDir: String,
-      upto: Long = Long.MaxValue): DataFrame = {
-    StoreCompaction.requireServableAt(deltaDir, upto)
-    spark.read.parquet(deltaDir)
-      // pinnedReadFilter extends `batch_id <= upto OR base` to the
-      // split-forget range: a pin registered BEFORE a pin-preserving
-      // forget wave keeps serving, with the wave's erasure applied
-      // inside the pinned slice (Forget.forgetSumCellsSplit's law)
-      .filter(StoreCompaction.pinnedReadFilter(upto))
-      .groupBy("w1", "w2").agg(sum(col("c12")).cast("long").as("c12"))
-  }
+  def lmStore(dir: String): CellStore = CellStore("lm", dir, Seq("w1", "w2"),
+    Seq("c12" -> CellStore.Sum), lmCells, tombstone = Some("c12" -> "bigram count"),
+    bucketCols = Seq("w1"), countedErasure = Some("negated bigram cells landed"))
 
   /** Per-doc fluency scores for `d` served off the streamed LM store —
     * `upto` scores against a pinned model release.
     */
   def fluencyFromDeltas(spark: SparkSession, deltaDir: String,
       d: DataFrame, upto: Long = Long.MaxValue): DataFrame =
-    TextOps.fluencyScoredFromCounts(d, Some(lmCountsFromDeltas(spark, deltaDir, upto)))
+    TextOps.fluencyScoredFromCounts(d, Some(lmStore(deltaDir).servedAt(spark, upto)))
 
   /** q183's bigram-novelty table served off the streamed LM store: the
     * previous release's vocabulary is the release-pinned fold (batches ≤
@@ -344,63 +236,18 @@ object CorpusStream {
   def noveltyFromDeltas(spark: SparkSession, deltaDir: String,
       d: DataFrame, cut: Long, upto: Long = Long.MaxValue): DataFrame =
     TextOps.bigramNovelty(d, cut,
-      Some(lmCountsFromDeltas(spark, deltaDir, upto).select("w1", "w2")))
-
-  /** The folded count table of a WINDOW of landings [lo, upto] — the
-    * serving shape of an LM store under RETENTION (licensing windows,
-    * privacy retention limits): expiry drops whole landings below the
-    * moving floor ([[StoreCompaction.expireBefore]] — O(dropped) file
-    * deletes, zero rewrites), and this read folds exactly the surviving
-    * window. Split-forget negatives inside the window fold too (each
-    * belongs to the source batch it negates and expires with it), so a
-    * windowed model equals a retrain on (window docs) minus (their
-    * forgotten members). The servability guards refuse the shapes a
-    * window cannot express: a base partition, whole-wave negatives, a
-    * window floor below the retention floor.
-    */
-  def lmCountsWindowed(spark: SparkSession, deltaDir: String, lo: Long,
-      upto: Long = Long.MaxValue): DataFrame = {
-    StoreCompaction.requireWindowServableAt(deltaDir, lo, upto)
-    spark.read.parquet(deltaDir)
-      .filter(StoreCompaction.windowedReadFilter(deltaDir, lo, upto))
-      .groupBy("w1", "w2").agg(sum(col("c12")).cast("long").as("c12"))
-  }
-
-  /** LM-store retention: the fold algebra is the serving algebra. */
-  def compactLmDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto) { cells =>
-      cells.groupBy("w1", "w2").agg(sum(col("c12")).cast("long").as("c12"))
-    }
+      Some(lmStore(deltaDir).servedAt(spark, upto).select("w1", "w2")))
 
   // ── MW loss cells (q175 serving) ────────────────────────────────────
 
-  /** One micro-batch's per-source proxy-loss cells — Mining.mwCells
-    * verbatim, so the streamed fold can never score a doc differently
-    * from batch q175. ≤ |sources| SUM rows per batch, per-batchId
-    * OVERWRITE.
+  /** The per-source proxy-loss store — Mining.mwCells verbatim, so the
+    * streamed fold can never score a doc differently from batch q175:
+    * the domain-reweighting optimizer's input kept current as documents
+    * land. ≤ |sources| SUM rows per batch.
     */
-  def writeMwDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(
-      graft.ops.Mining.mwCells(batch), deltaDir, batchId)
-  }
-
-  /** Loss-cell maintenance sink — the domain-reweighting optimizer's
-    * input kept current as documents land, zero corpus rescans when the
-    * weights are recomputed.
-    */
-  def mwCellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("domain_reweighting_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeMwDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("source")), maintain)
-      }
-      .start()
+  def mwStore(dir: String): CellStore = CellStore("sum_cells", dir, Seq("source"),
+    Seq("n_docs" -> CellStore.Sum, "loss_sum" -> CellStore.Sum),
+    graft.ops.Mining.mwCells, tombstone = Some("n_docs" -> "doc count"))
 
   /** The q175 reweighting table off the folded cells alone — bit-equal
     * to batch q175 over the union of landings (StreamingSpec-pinned):
@@ -409,63 +256,32 @@ object CorpusStream {
     * numbers.
     */
   def reweightingFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
-    graft.ops.Mining.mwTableFromCells(
-      guardedFold(spark.read.parquet(deltaDir), Seq("source"),
-        Seq("n_docs", "loss_sum"), "n_docs"))
+    graft.ops.Mining.mwTableFromCells(mwStore(deltaDir).servedAt(spark))
 
-  /** The q175 reweighting table over a retention WINDOW [lo, upto] —
-    * [[reweightingFromDeltas]]'s windowed twin: the optimizer's input
-    * (per-source doc counts and loss mass) measured over exactly the
-    * retained landings' survivors.
+  /** The q175 reweighting table over a retention WINDOW [lo, upto]: the
+    * optimizer's input measured over exactly the retained landings'
+    * survivors.
     */
   def reweightingWindowed(spark: SparkSession, deltaDir: String, lo: Long,
       upto: Long = Long.MaxValue): DataFrame =
-    graft.ops.Mining.mwTableFromCells(
-      guardedFold(StoreCompaction.readWindow(spark, deltaDir, lo, upto),
-        Seq("source"), Seq("n_docs", "loss_sum"), "n_docs"))
-
-  /** MW-store retention: the fold algebra is the serving algebra. */
-  def compactMwDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto) { cells =>
-      cells.groupBy("source")
-        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-          sum(col("loss_sum")).cast("long").as("loss_sum"))
-    }
+    graft.ops.Mining.mwTableFromCells(mwStore(deltaDir).servedWindow(spark, lo, upto))
 
   // ── embedding diversity cells (q178 serving) ────────────────────────
 
-  /** One micro-batch's diversity cells — the batch is hashed-embedded
-    * ONCE (checkpointed) and fans into both stores: per-(source, dim)
-    * coordinate sums and per-source (n_docs, Σ‖x‖²). All SUM-mergeable,
-    * per-batchId OVERWRITE.
-    */
-  def writeDivDelta(batch: DataFrame, dimDir: String, statDir: String,
-      batchId: Long): Unit = {
-    val w = graft.ops.Similarity.hashedVec(batch, keep = Seq("source")).localCheckpoint()
-    StoreCompaction.writeEvolvedDelta(
-      graft.ops.Similarity.divDimCells(w), dimDir, batchId)
-    graft.ops.Similarity.divStatCells(w).coalesce(1)
-      .write.mode("overwrite").parquet(s"$statDir/batch_id=$batchId")
-    ()
-  }
+  private val hashedVecs =
+    new CellStore.Shared(graft.ops.Similarity.hashedVec(_, keep = Seq("source")))
 
-  /** Diversity-cell maintenance sink — the per-source diversity metric a
-    * sampling policy reads, kept current as documents land with zero
-    * corpus rescans at serving time.
+  /** The diversity store pair — the batch is hashed-embedded ONCE per
+    * landing and fans into per-(source, dim) coordinate sums and
+    * per-source (n_docs, Σ‖x‖²): the per-source diversity metric a
+    * sampling policy reads, kept current as documents land.
     */
-  def divCellSink(stream: DataFrame, dimDir: String, statDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("embedding_diversity_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeDivDelta(batch, dimDir, statDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(dimDir -> Seq("source", "d"), statDir -> Seq("source")), maintain)
-      }
-      .start()
+  def divStores(dimDir: String, statDir: String): Seq[CellStore] = Seq(
+    CellStore("diversity_dims", dimDir, Seq("source", "d"), Seq("s_d" -> CellStore.Sum),
+      graft.ops.Similarity.divDimCells, Some(hashedVecs)),
+    CellStore("diversity_stats", statDir, Seq("source"),
+      Seq("n_docs" -> CellStore.Sum, "sum_sq" -> CellStore.Sum),
+      graft.ops.Similarity.divStatCells, Some(hashedVecs)))
 
   /** The q178 diversity table off the folded stores alone — bit-equal to
     * batch q178 over the union of landings (StreamingSpec-pinned): the
@@ -477,92 +293,46 @@ object CorpusStream {
     */
   def diversityFromDeltas(spark: SparkSession, dimDir: String,
       statDir: String, upto: Long = Long.MaxValue): DataFrame = {
-    def pinned(dir: String) = {
-      StoreCompaction.requireServableAt(dir, upto)
-      spark.read.parquet(dir)
-        .filter(StoreCompaction.pinnedReadFilter(upto))
-    }
+    val Seq(dims, stats) = divStores(dimDir, statDir)
     graft.ops.Similarity.diversityFromCells(
-      pinned(dimDir).select("source", "d", "s_d"),
-      pinned(statDir).select("source", "n_docs", "sum_sq"))
+      dims.rowsAt(spark, upto).select("source", "d", "s_d"),
+      stats.rowsAt(spark, upto).select("source", "n_docs", "sum_sq"))
   }
 
-  /** The q178 diversity table over a retention WINDOW [lo, upto] — the
-    * LM family's windowed serve ([[lmCountsWindowed]]) on the two-store
-    * diversity family: expiry drops whole landings, split-forget
-    * negatives expire with their source batches, and the windowed
-    * centroid identity equals a recompute on (window docs) minus (their
-    * forgotten members).
+  /** The q178 diversity table over a retention WINDOW [lo, upto]: expiry
+    * drops whole landings, split-forget negatives expire with their
+    * source batches, and the windowed centroid identity equals a
+    * recompute on (window docs) minus (their forgotten members).
     */
   def diversityWindowed(spark: SparkSession, dimDir: String,
       statDir: String, lo: Long, upto: Long = Long.MaxValue): DataFrame = {
-    def windowed(dir: String) = {
-      StoreCompaction.requireWindowServableAt(dir, lo, upto)
-      spark.read.parquet(dir)
-        .filter(StoreCompaction.windowedReadFilter(dir, lo, upto))
-    }
+    val Seq(dims, stats) = divStores(dimDir, statDir)
     graft.ops.Similarity.diversityFromCells(
-      windowed(dimDir).select("source", "d", "s_d"),
-      windowed(statDir).select("source", "n_docs", "sum_sq"))
-  }
-
-  /** Diversity-store retention: the fold algebra is the serving algebra. */
-  def compactDivDeltas(spark: SparkSession, dimDir: String, statDir: String,
-      upto: Long): Unit = {
-    StoreCompaction.foldInto(spark, dimDir, upto) { cells =>
-      cells.groupBy("source", "d").agg(sum(col("s_d")).cast("long").as("s_d"))
-    }
-    StoreCompaction.foldInto(spark, statDir, upto) { cells =>
-      cells.groupBy("source")
-        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-          sum(col("sum_sq")).cast("long").as("sum_sq"))
-    }
+      dims.windowRows(spark, lo, upto).select("source", "d", "s_d"),
+      stats.windowRows(spark, lo, upto).select("source", "n_docs", "sum_sq"))
   }
 
   // ── k-anonymity QI cells (q189 serving) ─────────────────────────────
 
-  /** One micro-batch's quasi-identifier group cells —
-    * TextOps.kAnonCells verbatim: (source, lang, len_bucket, gsz) with
-    * SUM-mergeable gsz. Per-batchId OVERWRITE; state is bounded by the
-    * QI domain, not the corpus. The k test runs at SERVE time on the
-    * folded size, so a group that is small in every batch but large in
-    * union is correctly safe — the audit is arrival-order invariant.
+  /** The quasi-identifier group store — TextOps.kAnonCells verbatim:
+    * (source, lang, len_bucket, gsz) with SUM-mergeable gsz; state is
+    * bounded by the QI domain, not the corpus. The k test runs at SERVE
+    * time on the folded size, so a group that is small in every batch
+    * but large in union is correctly safe — the audit is arrival-order
+    * invariant. Erasure SHRINKS groups, so it can flip a group from safe
+    * to suppressed: the served sizes equal a recount over the survivors
+    * (q205).
     */
-  def writeKAnonDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(
-      graft.ops.TextOps.kAnonCells(batch), deltaDir, batchId)
-  }
-
-  /** QI-cell maintenance sink — the privacy audit's input kept current
-    * as documents land, zero corpus rescans at audit time.
-    */
-  def kAnonCellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("kanonymity_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeKAnonDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("source", "lang", "len_bucket")), maintain)
-      }
-      .start()
+  def kAnonStore(dir: String): CellStore = CellStore("k_anonymity", dir,
+    Seq("source", "lang", "len_bucket"), Seq("gsz" -> CellStore.Sum),
+    graft.ops.TextOps.kAnonCells, tombstone = Some("gsz" -> "QI-group size"))
 
   /** The q189 audit off the folded cells alone — bit-equal to batch q189
     * over the union of landings (StreamingSpec-pinned).
     */
   def kAnonymityFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
     graft.ops.TextOps.kAnonymityFromCells(
-      spark.read.parquet(deltaDir).select("source", "lang", "len_bucket", "gsz"))
-
-  /** QI-store retention: the fold algebra is the serving algebra. */
-  def compactKAnonDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto) { cells =>
-      cells.groupBy("source", "lang", "len_bucket")
-        .agg(sum(col("gsz")).cast("long").as("gsz"))
-    }
+      kAnonStore(deltaDir).rowsAt(spark).select("source", "lang", "len_bucket", "gsz"))
 
   // ── language-majority window cells (q195/q196 serving) ──────────────
 
@@ -584,16 +354,12 @@ object CorpusStream {
   def csCellSink(stream: DataFrame, deltaDir: String,
       checkpointDir: String,
       maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("code_switching_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StoreCompaction.sink(stream, "code_switching_maintenance", checkpointDir) {
+      (batch, batchId) =>
         writeCsDelta(batch, deltaDir, batchId)
         StoreCompaction.sinkMaintain(batch.sparkSession,
           Seq(deltaDir -> Seq("doc_id")), maintain)
-      }
-      .start()
+    }
 
   private def csCells(spark: SparkSession, deltaDir: String): DataFrame =
     spark.read.parquet(deltaDir).select("doc_id", "w", "n_toks", "lang")
@@ -631,22 +397,22 @@ object CorpusStream {
 
   // ── span window cells (q182 serving) ────────────────────────────────
 
-  /** One micro-batch's window cells — Mining.spanWindowCells verbatim:
-    * (h, n, first_key) with SUM-mergeable n and MIN-mergeable first_key.
-    * The first-occurrence attribution is therefore arrival-order
-    * INVARIANT: whichever batch lands first, the fold's MIN recovers the
-    * global argmin (doc_id, pos). Per-batchId OVERWRITE; the store grows
-    * with unique window content, like the CDC chunk store.
+  /** The span window store — Mining.spanWindowCells verbatim: (h, n,
+    * first_key) with SUM-mergeable n and MIN-mergeable first_key. The
+    * first-occurrence attribution is therefore arrival-order INVARIANT:
+    * whichever batch lands first, the fold's MIN recovers the global
+    * argmin (doc_id, pos). The store grows with unique window content,
+    * like the CDC chunk store; erasure re-elects first occurrences
+    * ([[Forget.forgetSpanCells]]) instead of negating.
     */
-  def writeSpanDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(
-      graft.ops.Mining.spanWindowCells(batch), deltaDir, batchId)
-  }
+  def spanStore(dir: String): CellStore = CellStore("span_windows", dir, Seq("h"),
+    Seq("n" -> CellStore.Sum, "first_key" -> CellStore.Min),
+    graft.ops.Mining.spanWindowCells)
 
   /** One micro-batch's positional-window INVERTED-INDEX delta: DISTINCT
     * (h, doc_id) pairs over the batch's span windows — the add-only
     * identity sibling of the cell store (a doc's windows are fixed at
-    * landing), maintained so span-store erasure can re-elect
+    * landing), landed beside it so span-store erasure can re-elect
     * first-occurrence attribution by tokenizing ONLY the implicated
     * docs ([[Forget.forgetSpanCells]]' `windowIndexDir` path) instead
     * of a full survivor content pass.
@@ -658,27 +424,6 @@ object CorpusStream {
       coalesce1 = false)
   }
 
-  /** Window-cell maintenance sink — the exact-substring duplication
-    * state kept current as documents land. With `indexDir` the sink
-    * also maintains the positional inverted index (the erasure
-    * accelerator) from the same batch.
-    */
-  def spanCellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None,
-      indexDir: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("span_window_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeSpanDelta(batch, deltaDir, batchId)
-        indexDir.foreach(idx => writeSpanIndexDelta(batch, idx, batchId))
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("h")) ++ indexDir.map(_ -> Seq("h")), maintain)
-      }
-      .start()
-
   /** The q182 scrub plan for `d` served off the folded window store —
     * bit-equal to batch q182 when `d` is the union of landings
     * (StreamingSpec-pinned), and the path an incremental pipeline runs:
@@ -688,7 +433,7 @@ object CorpusStream {
   def spanScrubFromDeltas(spark: SparkSession, deltaDir: String,
       d: DataFrame): DataFrame =
     graft.ops.Mining.spanScrubFromCells(d,
-      spark.read.parquet(deltaDir).select("h", "n", "first_key"))
+      spanStore(deltaDir).rowsAt(spark).select("h", "n", "first_key"))
 
   /** The q182 scrub plan for `d` over a retention WINDOW [lo, upto] —
     * [[spanScrubFromDeltas]]'s windowed twin: window cells SUM `n` and
@@ -714,8 +459,7 @@ object CorpusStream {
           "window — a span store under retention must not take re-elected " +
           "forgets")
     graft.ops.Mining.spanScrubFromCells(d,
-      StoreCompaction.readWindow(spark, deltaDir, lo, upto)
-        .select("h", "n", "first_key"))
+      spanStore(deltaDir).windowRows(spark, lo, upto).select("h", "n", "first_key"))
   }
 
   /** Sentinel [[Forget.forgetSpanCells]] stamps inside its corrective
@@ -723,110 +467,49 @@ object CorpusStream {
     */
   private[streaming] val SpanCorrectiveName = "_SPAN_CORRECTIVE"
 
-  /** Span-store retention: the fold algebra is the serving algebra. */
-  def compactSpanDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto) { cells =>
-      cells.groupBy("h")
-        .agg(sum(col("n")).cast("long").as("n"),
-          min(col("first_key")).as("first_key"))
-    }
-
   // ── CDC chunk cells (q171 serving) ──────────────────────────────────
 
-  /** One micro-batch's CDC chunk cells and per-source doc counts — the
-    * batch is chunked ONCE (checkpointed) and fans into both stores.
-    * Chunk cells (fp, source, n, ln) SUM-merge on n (ln is an fp
-    * attribute, MIN-carried); doc counts SUM-merge because every doc
-    * lands in exactly one batch. Both per-batchId OVERWRITE partitions.
-    */
-  def writeCdcDelta(batch: DataFrame, chunkDir: String, docDir: String,
-      batchId: Long): Unit = {
-    val ex = graft.ops.Dedup.cdcChunks(batch).localCheckpoint()
-    StoreCompaction.writeEvolvedDelta(
-      graft.ops.Dedup.cdcCellsOf(ex), chunkDir, batchId)
-    StoreCompaction.writeEvolvedDelta(
-      ex.select("source", "doc_id").distinct()
-        .groupBy("source").agg(count(lit(1)).cast("long").as("n_docs")),
-      docDir, batchId)
-  }
+  private val cdcChunks = new CellStore.Shared(graft.ops.Dedup.cdcChunks)
 
-  /** Chunk-cell maintenance sink — sub-document duplication monitoring
-    * (q171) kept current as documents land, zero corpus rescans at
-    * serving time.
+  /** The CDC store pair — the batch is chunked ONCE per landing and fans
+    * into chunk cells (fp, source, n, ln), SUM-merged on n (ln is an
+    * attribute of the chunk fp — the same content hashes to the same
+    * chunk — so it is MIN-carried and erasure leaves it untouched), and
+    * per-source doc counts, SUM-merged because every doc lands in
+    * exactly one batch: sub-document duplication monitoring (q171) kept
+    * current as documents land.
     */
-  def cdcCellSink(stream: DataFrame, chunkDir: String, docDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("cdc_chunk_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeCdcDelta(batch, chunkDir, docDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(chunkDir -> Seq("fp"), docDir -> Seq("source")), maintain)
-      }
-      .start()
+  def cdcStores(chunkDir: String, docDir: String): Seq[CellStore] = Seq(
+    CellStore("cdc_chunks", chunkDir, Seq("fp", "source"),
+      Seq("n" -> CellStore.Sum, "ln" -> CellStore.Min),
+      graft.ops.Dedup.cdcCellsOf, Some(cdcChunks), tombstone = Some("n" -> "chunk count"),
+      bucketCols = Seq("fp")),
+    CellStore("cdc_docs", docDir, Seq("source"), Seq("n_docs" -> CellStore.Sum),
+      _.select("source", "doc_id").distinct()
+        .groupBy("source").agg(count(lit(1)).cast("long").as("n_docs")),
+      Some(cdcChunks), tombstone = Some("n_docs" -> "doc count")))
 
   /** The q171 report off the folded stores alone — bit-equal to batch
     * q171 over the union of landings (StreamingSpec-pinned). Chunks
-    * whose instance count folds to ZERO are forget tombstones
-    * ([[Forget.forgetCdcDocs]]' negative landings) and are dropped;
-    * a NEGATIVE fold means a forget delta was landed for docs the store
-    * never chunked — refuse loudly (the LM-store law).
+    * whose instance count folds to ZERO are forget tombstones and are
+    * dropped, so after erasure the served report equals a re-chunk of
+    * the surviving corpus exactly.
     */
   def cdcReportFromDeltas(spark: SparkSession, chunkDir: String,
       docDir: String, upto: Long = Long.MaxValue): DataFrame = {
-    StoreCompaction.requireServableAt(chunkDir, upto)
-    StoreCompaction.requireServableAt(docDir, upto)
-    cdcReportOf(
-      spark.read.parquet(chunkDir).filter(StoreCompaction.pinnedReadFilter(upto)),
-      spark.read.parquet(docDir).filter(StoreCompaction.pinnedReadFilter(upto)))
+    val Seq(chunks, docs) = cdcStores(chunkDir, docDir).map(_.servedAt(spark, upto))
+    graft.ops.Dedup.cdcReportFromCells(chunks, docs)
   }
 
-  /** The q171 report folded from the chunk-cell and doc-count rows a read
-    * returns; a negative fold refuses.
-    */
-  private def cdcReportOf(chunkRows: DataFrame, docRows: DataFrame): DataFrame = {
-    def guarded(df: DataFrame, c: String) = df
-      .withColumn(c, when(col(c) < 0, raise_error(concat(lit(
-        s"store folded a NEGATIVE $c — a forget delta was landed for " +
-          "docs this store never counted"), lit(" "), col("source"))))
-        .otherwise(col(c)))
-      .filter(col(c) > 0)
-    val cells = guarded(chunkRows.groupBy("fp", "source")
-      .agg(sum(col("n")).cast("long").as("n"), min(col("ln")).cast("long").as("ln")),
-      "n")
-    val nd = guarded(docRows
-      .groupBy("source").agg(sum(col("n_docs")).cast("long").as("n_docs")),
-      "n_docs")
-    graft.ops.Dedup.cdcReportFromCells(cells, nd)
-  }
-
-  /** The q171 report over a retention WINDOW [lo, upto] — windowed twin
-    * of [[cdcReportFromDeltas]]: chunk instance counts and doc counts
-    * fold over exactly the retained landings (split-forget negatives
-    * inside the window included), so the duplication report describes
-    * the data still on disk.
+  /** The q171 report over a retention WINDOW [lo, upto]: chunk instance
+    * counts and doc counts fold over exactly the retained landings
+    * (split-forget negatives inside the window included), so the
+    * duplication report describes the data still on disk.
     */
   def cdcReportWindowed(spark: SparkSession, chunkDir: String,
       docDir: String, lo: Long, upto: Long = Long.MaxValue): DataFrame = {
-    StoreCompaction.requireWindowServableAt(chunkDir, lo, upto)
-    StoreCompaction.requireWindowServableAt(docDir, lo, upto)
-    cdcReportOf(
-      spark.read.parquet(chunkDir).filter(StoreCompaction.windowedReadFilter(chunkDir, lo, upto)),
-      spark.read.parquet(docDir).filter(StoreCompaction.windowedReadFilter(docDir, lo, upto)))
-  }
-
-  /** CDC-store retention: the fold algebra is the serving algebra. */
-  def compactCdcDeltas(spark: SparkSession, chunkDir: String, docDir: String,
-      upto: Long): Unit = {
-    StoreCompaction.foldInto(spark, chunkDir, upto) { cells =>
-      cells.groupBy("fp", "source")
-        .agg(sum(col("n")).cast("long").as("n"), min(col("ln")).cast("long").as("ln"))
-    }
-    StoreCompaction.foldInto(spark, docDir, upto) { cells =>
-      cells.groupBy("source").agg(sum(col("n_docs")).cast("long").as("n_docs"))
-    }
+    val Seq(chunks, docs) =
+      cdcStores(chunkDir, docDir).map(_.servedWindow(spark, lo, upto))
+    graft.ops.Dedup.cdcReportFromCells(chunks, docs)
   }
 }

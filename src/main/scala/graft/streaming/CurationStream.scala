@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.{Corpus, Dedup, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The CONSOLIDATED curation sink — gate, exact-fingerprint dedup, and
   * band-index near-dup verdicts as ONE pass per micro-batch, in the
@@ -232,16 +232,10 @@ object CurationStream {
       decisionsDir: String, checkpointDir: String,
       acceptedDir: Option[String] = None,
       quarantineDir: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("curated_corpus_ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, fpDir, indexDir, decisionsDir, batchId,
-          acceptedDir, quarantineDir)
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "curated_corpus_ingest", checkpointDir) { (batch, batchId) =>
+      processBatch(batch, fpDir, indexDir, decisionsDir, batchId,
+        acceptedDir, quarantineDir)
+    }
 
   /** The combined decision audit across all batches, in doc order —
     * FIRST-VERDICT-WINS: if a doc somehow decided twice (a re-delivered

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.Corpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming drift maintenance — q126's monitoring run continuously:
   * the (source, bin) histogram cells are ADD-mergeable (plain count
@@ -21,36 +20,11 @@ object DriftStream {
   def readDocStream(spark: SparkSession, landingDir: String): DataFrame =
     CorpusStream.readDocStream(spark, landingDir)
 
-  /** Idempotent delta write — Corpus.driftCells verbatim, so the fold
-    * can never diverge from batch q126's projection. Exposed for the
-    * spec's replay pin.
+  /** The (source, bin) histogram store — Corpus.driftCells verbatim, so
+    * the fold can never diverge from batch q126's projection.
     */
-  def writeDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(Corpus.driftCells(batch), deltaDir, batchId)
-  }
-
-  /** Cell-maintenance sink: per micro-batch, one histogram aggregate
-    * into this batch's delta partition.
-    */
-  def cellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("drift_cell_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("source", "bin")), maintain)
-      }
-      .start()
-
-  /** The whole-corpus cell table off the delta store alone. */
-  def cellsFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
-    spark.read.parquet(deltaDir)
-      .groupBy("source", "bin")
-      .agg(sum(col("o")).cast("long").as("o"))
+  def driftStore(dir: String): CellStore = CellStore("drift", dir,
+    Seq("source", "bin"), Seq("o" -> CellStore.Sum), Corpus.driftCells)
 
   /** q126's drift report served off the maintained artifact — the SAME
     * χ² kernel (Corpus.chi2FromCells), so after streaming a corpus the
@@ -58,7 +32,7 @@ object DriftStream {
     * (StreamingSpec-pinned).
     */
   def driftFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
-    Corpus.chi2FromCells(cellsFromDeltas(spark, deltaDir))
+    Corpus.chi2FromCells(driftStore(deltaDir).servedAt(spark))
 
   /** q126's report over a retention WINDOW [lo, upto] —
     * [[driftFromDeltas]]'s windowed twin: the histogram folds exactly
@@ -67,10 +41,7 @@ object DriftStream {
     */
   def driftWindowed(spark: SparkSession, deltaDir: String, lo: Long,
       upto: Long = Long.MaxValue): DataFrame =
-    Corpus.chi2FromCells(
-      StoreCompaction.readWindow(spark, deltaDir, lo, upto)
-        .groupBy("source", "bin")
-        .agg(sum(col("o")).cast("long").as("o")))
+    Corpus.chi2FromCells(driftStore(deltaDir).servedWindow(spark, lo, upto))
 
   // ── snapshot-keyed cells: drift BETWEEN corpus states ────────────────
 
@@ -82,45 +53,28 @@ object DriftStream {
       .schema(CorpusStream.docSchema.add("snapshot_id", "long"))
       .parquet(landingDir)
 
-  /** Snapshot-keyed delta write — Corpus.driftCellsBySnapshot verbatim.
-    * One micro-batch may span snapshots (a late file from an old ingest
-    * landing next to the new one); the key travels in the DATA, so the
-    * fold assigns every cell to its snapshot regardless of which batch
-    * carried it.
+  /** The snapshot-keyed histogram store — Corpus.driftCellsBySnapshot
+    * verbatim. One micro-batch may span snapshots (a late file from an old
+    * ingest landing next to the new one); the key travels in the DATA, so
+    * the fold assigns every cell to its snapshot regardless of which batch
+    * carried it, and compaction keeps the key: pair drift between ANY two
+    * snapshots — including long-closed ones — still serves off the
+    * compacted base. State is O(batches × snapshots × sources × bins) cell
+    * rows, never documents.
     */
-  def writeSnapshotDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(
-      Corpus.driftCellsBySnapshot(batch), deltaDir, batchId)
-  }
-
-  /** Cell-maintenance sink keyed by snapshot: state is
-    * O(batches × snapshots × sources × bins) cell rows, never documents;
-    * per-batchId overwrite partitions keep replays no-ops exactly like
-    * the unkeyed sink.
-    */
-  def snapshotCellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("snapshot_drift_cell_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeSnapshotDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("snapshot_id", "source", "bin")), maintain)
-      }
-      .start()
+  def snapshotStore(dir: String): CellStore = CellStore("snapshot_drift", dir,
+    Seq("snapshot_id", "source", "bin"), Seq("o" -> CellStore.Sum),
+    Corpus.driftCellsBySnapshot)
 
   /** One snapshot's folded cell table ((source, bin, o) — the
     * driftCells shape) off the delta store alone.
     */
   def cellsForSnapshot(spark: SparkSession, deltaDir: String,
       snapshotId: Long): DataFrame =
-    spark.read.parquet(deltaDir)
-      .filter(col("snapshot_id") === snapshotId)
-      .groupBy("source", "bin")
-      .agg(sum(col("o")).cast("long").as("o"))
+    cellsOf(snapshotStore(deltaDir).servedAt(spark), snapshotId)
+
+  private def cellsOf(folded: DataFrame, snapshotId: Long): DataFrame =
+    folded.filter(col("snapshot_id") === snapshotId).select("source", "bin", "o")
 
   /** Snapshot-PAIR drift served off the maintained artifact: which
     * source changed shape between corpus states A and B — q128's
@@ -143,12 +97,8 @@ object DriftStream {
   def pairDriftWindowed(spark: SparkSession, deltaDir: String,
       snapA: Long, snapB: Long, lo: Long,
       upto: Long = Long.MaxValue): DataFrame = {
-    val w = StoreCompaction.readWindow(spark, deltaDir, lo, upto)
-      .localCheckpoint()
-    def cellsOf(snap: Long) = w.filter(col("snapshot_id") === snap)
-      .groupBy("source", "bin")
-      .agg(sum(col("o")).cast("long").as("o"))
-    Corpus.chi2Pair(cellsOf(snapA), cellsOf(snapB))
+    val w = snapshotStore(deltaDir).servedWindow(spark, lo, upto).localCheckpoint()
+    Corpus.chi2Pair(cellsOf(w, snapA), cellsOf(w, snapB))
   }
 
   /** Snapshot lifecycle registry, derived from the cell store itself (no
@@ -191,10 +141,7 @@ object DriftStream {
     * (StreamingSpec pins bit-equality).
     */
   def rollingDriftFromDeltas(spark: SparkSession, deltaDir: String): DataFrame = {
-    val cells = spark.read.parquet(deltaDir)
-      .groupBy("snapshot_id", "source", "bin")
-      .agg(sum(col("o")).cast("long").as("o"))
-      .localCheckpoint()
+    val cells = snapshotStore(deltaDir).servedAt(spark).localCheckpoint()
     val snaps = cells.select("snapshot_id").distinct()
       .collect().map(_.getLong(0)).sorted
     require(snaps.length >= 2, s"need at least 2 snapshots, found ${snaps.length}")
@@ -208,20 +155,4 @@ object DriftStream {
           col("chi2_fp"), col("df"), col("shifted"))
     }.reduce(_.unionByName(_)).orderBy("snap", "source")
   }
-
-  /** Delta-store retention for the unkeyed cell store: counts are plain
-    * sums, so folding old partitions into the base reassociates exactly
-    * and every served statistic is unchanged (StreamingSpec-pinned).
-    */
-  def compactDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto)(
-      _.groupBy("source", "bin").agg(sum(col("o")).cast("long").as("o")))
-
-  /** Retention for the snapshot-keyed store: the fold keeps the
-    * snapshot key, so pair drift between ANY two snapshots — including
-    * long-closed ones — still serves off the compacted base.
-    */
-  def compactSnapshotDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto)(
-      _.groupBy("snapshot_id", "source", "bin").agg(sum(col("o")).cast("long").as("o")))
 }

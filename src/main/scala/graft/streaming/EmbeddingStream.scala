@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming SemDeDup — the embedding twin of `CorpusStream`: vectors
@@ -98,18 +98,6 @@ object EmbeddingStream {
         (coalesce(col("sim"), lit(0.0)) >= threshold).as("is_semantic_dup"))
   }
 
-  /** Ingest sink: per micro-batch, assign against the frozen quantizer,
-    * score against cluster history, write decisions (audit) and ALL
-    * batch vectors (history — dups included, so later verdicts see the
-    * same prior set a batch run would). Trigger.AvailableNow like the
-    * corpus twin. The checkpoint makes file DELIVERY exactly-once, but
-    * foreachBatch side-effects are at-least-once: a crash between the
-    * two writes (or before checkpoint commit) replays the batch. Both
-    * writes therefore OVERWRITE a per-batchId partition directory —
-    * a replay rewrites the same rows instead of appending duplicates,
-    * so the sink is idempotent end-to-end. Readers see `batch_id` as a
-    * trailing partition-discovery column.
-    */
   // ── snapshot-keyed occupancy cells: q130's drift, maintained ─────────
 
   /** Embedding stream whose rows carry a `snapshot_id` (ingest
@@ -118,52 +106,40 @@ object EmbeddingStream {
   def readSnapshotEmbStream(spark: SparkSession, landingDir: String): DataFrame =
     spark.readStream.schema(embSchema.add("snapshot_id", "long")).parquet(landingDir)
 
-  /** One micro-batch's occupancy delta: assign against the FROZEN
-    * quantizer (serving-time clustering never retrains per batch — the
-    * same centroid artifact the dedup sink uses), count per (snapshot,
-    * cluster). ≤ snapshots × k rows per batch; counts are add-mergeable,
-    * so any batch boundaries fold to the whole-corpus cells. Exposed for
-    * the spec's replay pin.
-    */
-  def writeOccupancyDelta(batch: DataFrame, centroidPath: String,
-      deltaDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val cents = spark.read.parquet(centroidPath)
-    StoreCompaction.writeEvolvedDelta(
-      assignFrozen(batch, cents)
-        .join(batch.select(col("vec_id"), col("snapshot_id")), Seq("vec_id"))
-        .groupBy("snapshot_id", "cluster")
-        .agg(count(lit(1)).as("o")),
-      deltaDir, batchId)
-  }
+  /** The (snapshot, cluster) occupancy cells of an assigned batch. */
+  private def occupancyCells(asg: DataFrame, batch: DataFrame): DataFrame =
+    asg.join(batch.select(col("vec_id"), col("snapshot_id")), Seq("vec_id"))
+      .groupBy("snapshot_id", "cluster")
+      .agg(count(lit(1)).as("o"))
 
-  /** Occupancy-cell maintenance sink — the embedding twin of
-    * DriftStream.snapshotCellSink: per-batchId overwrite partitions keep
-    * replays no-ops; the artifact is cells, never vectors.
+  /** The occupancy cell store: each batch is assigned against the FROZEN
+    * quantizer at `centroidPath` (serving-time clustering never retrains
+    * per batch — the same centroid artifact the dedup sink uses) and
+    * counted per (snapshot, cluster); ≤ snapshots × k rows per batch,
+    * add-mergeable, so any batch boundaries fold to the whole-corpus
+    * cells and the artifact is cells, never vectors. Erasure re-assigns
+    * the forgotten vectors against the same quantizer, so the folded
+    * occupancy equals a recount over the surviving vectors and every
+    * drift statistic served off it (q130's pair χ²) is survivor-exact;
+    * the quantizer itself is not retrained (k aggregate centroids retain
+    * no per-vector content; retraining is the q132 rebuild trigger's
+    * job).
     */
-  def occupancySink(stream: DataFrame, centroidPath: String, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("embedding_occupancy_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeOccupancyDelta(batch, centroidPath, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("snapshot_id", "cluster")), maintain)
-      }
-      .start()
+  def occupancyStore(deltaDir: String, centroidPath: String): CellStore =
+    CellStore("sum_cells", deltaDir, Seq("snapshot_id", "cluster"),
+      Seq("o" -> CellStore.Sum),
+      b => occupancyCells(assignFrozen(b, b.sparkSession.read.parquet(centroidPath)), b),
+      tombstone = Some("o" -> "occupancy count"))
 
   /** One snapshot's folded per-cluster counts, aliased for the kernel
-    * side (`na`/`nb`) by the caller.
+    * side (`na`/`nb`) by the caller; clusters erased to zero are dropped.
     */
-  def occupancyForSnapshot(spark: SparkSession, deltaDir: String,
+  def occupancyForSnapshot(spark: SparkSession, store: CellStore,
       snapshotId: Long, as: String): DataFrame =
-    spark.read.parquet(deltaDir)
-      .filter(col("snapshot_id") === snapshotId)
-      .groupBy("cluster")
-      .agg(sum(col("o")).cast("long").as(as))
+    occupancyOf(store.servedAt(spark), snapshotId, as)
+
+  private def occupancyOf(folded: DataFrame, snapshotId: Long, as: String): DataFrame =
+    folded.filter(col("snapshot_id") === snapshotId).select(col("cluster"), col("o").as(as))
 
   /** q130's statistic served off the maintained artifact: which region
     * of embedding space grew or vanished between snapshots A and B —
@@ -171,11 +147,11 @@ object EmbeddingStream {
     * served and batch statistics are bit-identical (StreamingSpec-
     * pinned).
     */
-  def occupancyPairFromDeltas(spark: SparkSession, deltaDir: String,
+  def occupancyPairFromDeltas(spark: SparkSession, store: CellStore,
       snapA: Long, snapB: Long): DataFrame =
     Similarity.occupancyPairChi2(
-      occupancyForSnapshot(spark, deltaDir, snapA, "na"),
-      occupancyForSnapshot(spark, deltaDir, snapB, "nb"))
+      occupancyForSnapshot(spark, store, snapA, "na"),
+      occupancyForSnapshot(spark, store, snapB, "nb"))
 
   /** q130's statistic over a retention WINDOW [lo, upto] —
     * [[occupancyPairFromDeltas]]'s windowed twin
@@ -183,25 +159,12 @@ object EmbeddingStream {
     * snapshot's per-cluster occupancy folds only the cells of landings
     * still on disk.
     */
-  def occupancyPairWindowed(spark: SparkSession, deltaDir: String,
+  def occupancyPairWindowed(spark: SparkSession, store: CellStore,
       snapA: Long, snapB: Long, lo: Long,
       upto: Long = Long.MaxValue): DataFrame = {
-    val w = StoreCompaction.readWindow(spark, deltaDir, lo, upto)
-      .localCheckpoint()
-    def occOf(snap: Long, as: String) = w
-      .filter(col("snapshot_id") === snap)
-      .groupBy("cluster")
-      .agg(sum(col("o")).cast("long").as(as))
-    Similarity.occupancyPairChi2(occOf(snapA, "na"), occOf(snapB, "nb"))
+    val w = store.servedWindow(spark, lo, upto).localCheckpoint()
+    Similarity.occupancyPairChi2(occupancyOf(w, snapA, "na"), occupancyOf(w, snapB, "nb"))
   }
-
-  /** Delta-store retention: cells fold by exact integer sums keyed by
-    * snapshot, so pair drift for any snapshot pair serves identically
-    * off the compacted base.
-    */
-  def compactOccupancyDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto)(
-      _.groupBy("snapshot_id", "cluster").agg(sum(col("o")).cast("long").as("o")))
 
   /** Occupancy-store lifecycle registry — DriftStream.snapshotRegistry's
     * shape for the vector side: snapshot ids, vector mass (Σo — each
@@ -243,11 +206,7 @@ object EmbeddingStream {
     val cents = spark.read.parquet(centroidPath)
     val asg = assignFrozen(batch, cents).localCheckpoint()
     // occupancy delta off the SAME assignment
-    asg.join(batch.select(col("vec_id"), col("snapshot_id")), Seq("vec_id"))
-      .groupBy("snapshot_id", "cluster")
-      .agg(count(lit(1)).as("o"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$occDeltaDir/batch_id=$batchId")
+    StoreCompaction.writeEvolvedDelta(occupancyCells(asg, batch), occDeltaDir, batchId)
     // dedup verdicts off the same assignment (dedupSink's history rule)
     val history = StoreCompaction.historyBefore(spark, historyDir, batchId,
       asg.filter(lit(false)))
@@ -281,38 +240,38 @@ object EmbeddingStream {
       decisionsDir: String, occDeltaDir: String, checkpointDir: String,
       acceptedDir: Option[String] = None,
       quarantineDir: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("embedding_curation")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curationProcessBatch(batch, centroidPath, historyDir, decisionsDir,
-          occDeltaDir, batchId, acceptedDir, quarantineDir)
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "embedding_curation", checkpointDir) { (batch, batchId) =>
+      curationProcessBatch(batch, centroidPath, historyDir, decisionsDir,
+        occDeltaDir, batchId, acceptedDir, quarantineDir)
+    }
 
+  /** Ingest sink: per micro-batch, assign against the frozen quantizer,
+    * score against cluster history, write decisions (audit) and ALL
+    * batch vectors (history — dups included, so later verdicts see the
+    * same prior set a batch run would). Trigger.AvailableNow like the
+    * corpus twin. The checkpoint makes file DELIVERY exactly-once, but
+    * foreachBatch side-effects are at-least-once: a crash between the
+    * two writes (or before checkpoint commit) replays the batch. Both
+    * writes therefore OVERWRITE a per-batchId partition directory —
+    * a replay rewrites the same rows instead of appending duplicates,
+    * so the sink is idempotent end-to-end. Readers see `batch_id` as a
+    * trailing partition-discovery column.
+    */
   def dedupSink(stream: DataFrame, centroidPath: String, historyDir: String,
       decisionsDir: String, checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .queryName("embedding_ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val cents = spark.read.parquet(centroidPath)
-        val asg = assignFrozen(batch, cents).localCheckpoint()
-        val history = StoreCompaction.historyBefore(spark, historyDir, batchId,
-          asg.filter(lit(false)))
-        scoreBatch(asg, history)
-          .write.mode("overwrite").parquet(s"$decisionsDir/batch_id=$batchId")
-        // label rides along for the audit serving path (see
-        // semanticAuditFromHistory)
-        asg.join(batch.select(col("vec_id"), col("label")), Seq("vec_id"))
-          .write.mode("overwrite").parquet(s"$historyDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "embedding_ingest", checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val cents = spark.read.parquet(centroidPath)
+      val asg = assignFrozen(batch, cents).localCheckpoint()
+      val history = StoreCompaction.historyBefore(spark, historyDir, batchId,
+        asg.filter(lit(false)))
+      scoreBatch(asg, history)
+        .write.mode("overwrite").parquet(s"$decisionsDir/batch_id=$batchId")
+      // label rides along for the audit serving path (see
+      // semanticAuditFromHistory)
+      asg.join(batch.select(col("vec_id"), col("label")), Seq("vec_id"))
+        .write.mode("overwrite").parquet(s"$historyDir/batch_id=$batchId")
+    }
 
   /** q145's semantic split-leakage audit SERVED off the sink-written
     * history store: history carries every ingested vector with its

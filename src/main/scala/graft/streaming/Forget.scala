@@ -9,12 +9,13 @@ import org.apache.spark.sql.functions._
   *
   *  - SUM-cell stores (LM counts, mass/feature/loss cells): forgetting
   *    docs is landing ONE NEGATIVE delta — the cells of the forgotten
-  *    docs with every additive measure negated. The fold algebra does
-  *    the rest: `Σ cells = Σ survivors' cells` exactly, so every served
+  *    docs with every additive measure negated ([[CellStore.forget]],
+  *    [[CellStore.forgetSplit]]). The fold algebra does the rest:
+  *    `Σ cells = Σ survivors' cells` exactly, so every served
   *    model/table equals a retrain on the surviving corpus with zero
   *    store rewrites (an O(|forgotten|) append, the same write path as
   *    an ingest landing). Rows whose folded count reaches 0 are
-  *    tombstones — serving filters them (`c12 > 0`).
+  *    tombstones — serving drops them (the store's `tombstone` rule).
   *  - IDENTITY stores (band index, decisions, fp history): forgetting is
   *    a SURGICAL partition rewrite — only the per-batchId partitions
   *    (base included) that actually hold a forgotten row are rewritten,
@@ -53,130 +54,6 @@ object Forget {
     */
   case class ForgetReport(nPartitions: Int, nRewritten: Int, rowsRemoved: Long,
       archivedRewritten: Int = 0, archivedRowsRemoved: Long = 0L)
-
-  /** Land the negative LM-cell delta for `forgotten` docs as batch
-    * `batchId`: the exact cells [[CorpusStream.lmCells]] would emit for
-    * them, with `c12` negated. After the fold, every bigram count equals
-    * the survivor-trained count; counts that reach zero are tombstones
-    * ([[lmCountsAfterForget]] drops them). Returns cells landed.
-    */
-  def forgetLmDocs(forgotten: DataFrame, deltaDir: String, batchId: Long): Long = {
-    StoreCompaction.advanceForgetHorizon(deltaDir)
-    val neg = CorpusStream.lmCells(forgotten)
-      .select(col("w1"), col("w2"), (-col("c12")).as("c12"))
-      .localCheckpoint()
-    neg.coalesce(1).write.mode("overwrite")
-      .parquet(s"$deltaDir/batch_id=$batchId")
-    neg.count()
-  }
-
-  /** The folded LM count table with forget tombstones dropped — bigram
-    * counts exactly as a retrain on the surviving corpus would produce
-    * them. A NEGATIVE folded count means a forget delta was landed for
-    * docs the store never counted; refuse loudly instead of serving an
-    * impossible model.
-    */
-  private def guardLmNegatives(counts: DataFrame, deltaDir: String): DataFrame =
-    counts
-      .withColumn("c12",
-        when(col("c12") < 0, raise_error(concat(lit(
-          s"store $deltaDir folded a NEGATIVE bigram count — a forget " +
-            "delta was landed for docs this store never counted: "),
-          col("w1"), lit(" "), col("w2")))).otherwise(col("c12")))
-      .filter(col("c12") > 0)
-
-  def lmCountsAfterForget(spark: SparkSession, deltaDir: String,
-      upto: Long = Long.MaxValue): DataFrame =
-    guardLmNegatives(
-      CorpusStream.lmCountsFromDeltas(spark, deltaDir, upto), deltaDir)
-
-  /** The windowed twin ([[CorpusStream.lmCountsWindowed]]) with the same
-    * tombstone drop and negative-fold refusal — the serving read of an
-    * LM store under RETENTION, where expiry drops whole landings and
-    * split-forget negatives expire with their source batches.
-    */
-  def lmCountsAfterForgetWindow(spark: SparkSession, deltaDir: String,
-      lo: Long, upto: Long = Long.MaxValue): DataFrame =
-    guardLmNegatives(
-      CorpusStream.lmCountsWindowed(spark, deltaDir, lo, upto), deltaDir)
-
-  /** Land the negative diversity-cell deltas for `forgotten` docs as
-    * batch `batchId` on BOTH diversity stores — [[forgetLmDocs]]'s law on
-    * a two-store family: every additive measure (per-(source, dim)
-    * coordinate sums; per-source doc counts and Σ‖x‖²) negates, and the
-    * folded centroid identity then equals a recompute on the survivors.
-    */
-  def forgetDivDocs(forgotten: DataFrame, dimDir: String, statDir: String,
-      batchId: Long): Unit = {
-    StoreCompaction.advanceForgetHorizon(dimDir)
-    StoreCompaction.advanceForgetHorizon(statDir)
-    val w = graft.ops.Similarity.hashedVec(forgotten, keep = Seq("source"))
-      .localCheckpoint()
-    graft.ops.Similarity.divDimCells(w)
-      .select(col("source"), col("d"), (-col("s_d")).as("s_d"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dimDir/batch_id=$batchId")
-    graft.ops.Similarity.divStatCells(w)
-      .select(col("source"), (-col("n_docs")).as("n_docs"),
-        (-col("sum_sq")).as("sum_sq"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$statDir/batch_id=$batchId")
-    ()
-  }
-
-  /** Land the negative k-anonymity QI-group cells for `forgotten` docs
-    * as batch `batchId` — erasure SHRINKS quasi-identifier groups, so it
-    * can flip a group from safe (≥ k) to suppressed (< k): the audit
-    * must re-run on the folded post-forget sizes (q205 proves the flip
-    * against a survivor recompute). Groups folded to zero are dropped by
-    * [[kAnonCellsAfterForget]]; negative folds refuse.
-    */
-  def forgetKAnonDocs(forgotten: DataFrame, deltaDir: String,
-      batchId: Long): Unit = {
-    StoreCompaction.advanceForgetHorizon(deltaDir)
-    graft.ops.TextOps.kAnonCells(forgotten)
-      .select(col("source"), col("lang"), col("len_bucket"),
-        (-col("gsz")).as("gsz"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$deltaDir/batch_id=$batchId")
-    ()
-  }
-
-  /** The folded QI-group cells with forget tombstones dropped — group
-    * sizes exactly as a recount over the surviving corpus. Negative
-    * folds (forgetting docs never counted) refuse loudly.
-    */
-  def kAnonCellsAfterForget(spark: SparkSession, deltaDir: String,
-      upto: Long = Long.MaxValue): DataFrame = {
-    StoreCompaction.requireServableAt(deltaDir, upto)
-    foldKAnonCells(spark.read.parquet(deltaDir)
-      .filter(StoreCompaction.pinnedReadFilter(upto)), deltaDir)
-  }
-
-  /** The QI-group cells `rows` of the store at `deltaDir` folded to group
-    * sizes, tombstones dropped, negative folds refused.
-    */
-  private def foldKAnonCells(rows: DataFrame, deltaDir: String): DataFrame =
-    rows.groupBy("source", "lang", "len_bucket")
-      .agg(sum(col("gsz")).cast("long").as("gsz"))
-      .withColumn("gsz",
-        when(col("gsz") < 0, raise_error(concat(lit(
-          s"store $deltaDir folded a NEGATIVE QI-group size — a forget " +
-            "delta was landed for docs this store never counted: "),
-          col("source"), lit("/"), col("lang")))).otherwise(col("gsz")))
-      .filter(col("gsz") > 0)
-
-  /** The folded QI-group cells over a retention WINDOW [lo, upto] —
-    * [[kAnonCellsAfterForget]]'s windowed twin, with the same tombstone
-    * drop and negative-fold refusal. Erasure makes the k-anonymity
-    * verdict stricter (q205); retention makes it WINDOW-scoped: group
-    * sizes count only the retained landings' survivors, which is what a
-    * re-identification audit over the data actually still on disk means.
-    */
-  def kAnonCellsAfterForgetWindow(spark: SparkSession, deltaDir: String,
-      lo: Long, upto: Long = Long.MaxValue): DataFrame = {
-    StoreCompaction.requireWindowServableAt(deltaDir, lo, upto)
-    foldKAnonCells(spark.read.parquet(deltaDir)
-      .filter(StoreCompaction.windowedReadFilter(deltaDir, lo, upto)), deltaDir)
-  }
 
   /** Surgically delete every row whose `keyCol` is in `ids` from a
     * partitioned store: ONE column-pruned detection pass finds the
@@ -506,186 +383,6 @@ object Forget {
       .foldLeft(-1L)(math.max) + 1L
     verdicts.write.mode("overwrite").parquet(s"$decisionsDir/batch_id=$nextId")
     BandForgetReport(idxRep, decRep, verdicts.count(), nextId)
-  }
-
-  // ── generic SUM-cell erasure: any add-mergeable store negates ─────────
-
-  /** One add-mergeable cell store's erasure wiring: `cells` is the
-    * store's own per-batch cell kernel (the EXACT function its sink
-    * writes with — eval/feature/MW/occupancy cells), `negCols` the
-    * additive measures to negate. Forgetting lands `cells(forgotten)`
-    * with every measure negated — the q200/q203/q205 law generalized to
-    * the whole SUM-cell family: the fold algebra makes every served
-    * table equal a recompute on the survivors, at O(|forgotten-cells|)
-    * append cost, zero store rewrites.
-    */
-  case class SumCellTarget(deltaDir: String, negCols: Seq[String],
-      cells: DataFrame => DataFrame)
-
-  /** The three corpus cell stores beyond LM/diversity/k-anonymity whose
-    * sinks [[CorpusStream]] maintains — ready-made erasure targets.
-    */
-  def evalCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("n_docs", "n_keep"), graft.ops.Mining.evalCells)
-  def featureCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("tgt1_n", "tgt_n", "raw_n"), CorpusStream.featureCells)
-  def mwCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("n_docs", "loss_sum"), graft.ops.Mining.mwCells)
-
-  /** The embedding-occupancy cell store ([[EmbeddingStream.occupancySink]])
-    * as an erasure target: forgetting vectors re-assigns THEM against the
-    * same FROZEN quantizer the sink uses (the artifact at `centroidPath`)
-    * and lands their (snapshot, cluster) counts negated — the exact sink
-    * kernel ([[EmbeddingStream.writeOccupancyDelta]]'s), so the folded
-    * occupancy equals a recount over the surviving vectors and every
-    * drift statistic served off it (q130's pair χ²) is survivor-exact.
-    * The quantizer itself is NOT retrained (k aggregate centroids retain
-    * no per-vector content; retraining is the q132 rebuild trigger's
-    * job). Cells folded to zero are tombstones —
-    * [[occupancyAfterForget]] drops them and refuses negative folds.
-    */
-  def occupancyCellTarget(dir: String, centroidPath: String): SumCellTarget =
-    SumCellTarget(dir, Seq("o"), { b =>
-      val cents = b.sparkSession.read.parquet(centroidPath)
-      EmbeddingStream.assignFrozen(b, cents)
-        .join(b.select(col("vec_id"), col("snapshot_id")), Seq("vec_id"))
-        .groupBy("snapshot_id", "cluster")
-        .agg(count(lit(1)).as("o"))
-    })
-
-  /** One snapshot's folded per-cluster occupancy with forget tombstones
-    * dropped — counts exactly as a recount over the surviving vectors
-    * ([[EmbeddingStream.occupancyForSnapshot]] with the erasure guards:
-    * a NEGATIVE folded count means a forget delta was landed for vectors
-    * the store never counted, and refuses loudly).
-    */
-  def occupancyAfterForget(spark: SparkSession, deltaDir: String,
-      snapshotId: Long, as: String): DataFrame =
-    spark.read.parquet(deltaDir)
-      .filter(col("snapshot_id") === snapshotId)
-      .groupBy("cluster")
-      .agg(sum(col("o")).cast("long").as(as))
-      .withColumn(as,
-        when(col(as) < 0, raise_error(concat(lit(
-          s"store $deltaDir folded a NEGATIVE occupancy count — a forget " +
-            "delta was landed for vectors this store never counted: cluster "),
-          col("cluster")))).otherwise(col(as)))
-      .filter(col(as) > 0)
-
-  /** The LM / k-anonymity / diversity / CDC cell stores as generic
-    * [[SumCellTarget]]s — the family-specific forget entry points above
-    * predate the generic wiring; these let the SAME stores take the
-    * pin-preserving split path ([[forgetSumCellsSplit]]).
-    */
-  def lmCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("c12"), CorpusStream.lmCells)
-  def kAnonCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("gsz"), graft.ops.TextOps.kAnonCells)
-  def divDimCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("s_d"), d => graft.ops.Similarity.divDimCells(
-      graft.ops.Similarity.hashedVec(d, keep = Seq("source"))))
-  def divStatCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("n_docs", "sum_sq"), d => graft.ops.Similarity
-      .divStatCells(graft.ops.Similarity.hashedVec(d, keep = Seq("source"))))
-  def cdcChunkCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("n"),
-      d => graft.ops.Dedup.cdcCellsOf(graft.ops.Dedup.cdcChunks(d)))
-  def cdcDocCellTarget(dir: String): SumCellTarget =
-    SumCellTarget(dir, Seq("n_docs"), d => graft.ops.Dedup.cdcChunks(d)
-      .select("source", "doc_id").distinct()
-      .groupBy("source").agg(count(lit(1)).cast("long").as("n_docs")))
-
-  /** PIN-PRESERVING erasure on a SUM-cell store: land ONE negative
-    * delta per ORIGINAL landing batch instead of one per wave. A
-    * whole-wave negation ([[forgetSumCells]]) is an aggregate
-    * correction — faithful only for reads folding EVERY forgotten doc's
-    * positive cells — so it seals the store's forget horizon and pins
-    * below the frontier refuse. When the content archive records each
-    * doc's landing batch (`srcBatchCol`), the wave can split: the delta
-    * for source batch b is the negation of exactly what batch b added
-    * for the forgotten docs, landed under
-    * [[StoreCompaction.splitForgetId]] so every pinned read at P folds
-    * it iff b ≤ P ([[StoreCompaction.pinnedReadFilter]]). A pin at P
-    * then serves the cells of (docs landed ≤ P) minus (their forgotten
-    * members) — the survivor recompute of the pinned slice — so NO
-    * horizon is sealed and release pins registered before the wave keep
-    * serving, with the erased docs gone from their slice too (erasure
-    * stays retroactive by law). Cost: k = |landings the forgotten docs
-    * span| small landings, bounded by the store's landing count.
-    *
-    * Replay-idempotent (same request → same ids, overwrite). `stamp`
-    * marks the partitions fold-eligible ([[StoreCompaction
-    * .ForgetCommittedName]]) immediately — right for batch callers; the
-    * streamed sink passes false and stamps after its request marker
-    * commits (the double-subtraction crash window). Returns landed
-    * partition ids.
-    */
-  def forgetSumCellsSplit(forgotten: DataFrame, t: SumCellTarget,
-      requestId: Long, srcBatchCol: String = "src_batch",
-      stamp: Boolean = true): Seq[Long] = {
-    // content whose landing already EXPIRED needs no negation — its
-    // positive cells left disk with the batch (retention floor); landing
-    // one anyway would fold negative and refuse at serve
-    val floor = StoreCompaction.retentionFloor(t.deltaDir)
-      .getOrElse(Long.MinValue)
-    val srcBatches = forgotten.select(col(srcBatchCol).cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).filter(_ >= floor).sorted.toSeq
-    srcBatches.map { b =>
-      val id = StoreCompaction.splitForgetId(requestId, b)
-      val c = t.cells(forgotten.filter(col(srcBatchCol) === b))
-      c.select(c.columns.map(n =>
-          if (t.negCols.contains(n)) (-col(n)).as(n) else col(n)): _*)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"${t.deltaDir}/batch_id=$id")
-      if (stamp) {
-        new java.io.File(s"${t.deltaDir}/batch_id=$id",
-          StoreCompaction.ForgetCommittedName).createNewFile()
-        ()
-      }
-      id
-    }
-  }
-
-  /** Land the negative cell delta for `forgotten` docs on a generic
-    * SUM-cell store. Serving reads need no change (negatives fold);
-    * families whose semantics require dropping zero cells add the
-    * tombstone filter at their serve path (the LM/k-anon pattern).
-    */
-  def forgetSumCells(forgotten: DataFrame, t: SumCellTarget,
-      batchId: Long): Unit = {
-    StoreCompaction.advanceForgetHorizon(t.deltaDir)
-    val c = t.cells(forgotten)
-    c.select(c.columns.map(n =>
-        if (t.negCols.contains(n)) (-col(n)).as(n) else col(n)): _*)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${t.deltaDir}/batch_id=$batchId")
-    ()
-  }
-
-  // ── CDC chunk stores: negative cells + zero-count tombstones ──────────
-
-  /** Forget `forgotten` docs from the CDC chunk-cell + doc-count store
-    * pair: both measures are SUM cells (`ln` is a constant attribute of
-    * the chunk fp — the same content hashes to the same chunk — so the
-    * negative delta carries the identical `ln` and the MIN fold is
-    * untouched), making CDC erasure ONE negative landing per store.
-    * Chunks whose instance count folds to zero are tombstones;
-    * [[CorpusStream.cdcReportFromDeltas]] drops them and refuses
-    * negative folds, so the served report equals a re-chunk of the
-    * surviving corpus exactly.
-    */
-  def forgetCdcDocs(forgotten: DataFrame, chunkDir: String, docDir: String,
-      batchId: Long): Unit = {
-    StoreCompaction.advanceForgetHorizon(chunkDir)
-    StoreCompaction.advanceForgetHorizon(docDir)
-    val ex = graft.ops.Dedup.cdcChunks(forgotten).localCheckpoint()
-    graft.ops.Dedup.cdcCellsOf(ex)
-      .select(col("fp"), col("source"), (-col("n")).as("n"), col("ln"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$chunkDir/batch_id=$batchId")
-    ex.select("source", "doc_id").distinct()
-      .groupBy("source").agg((-count(lit(1))).cast("long").as("n_docs"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$docDir/batch_id=$batchId")
-    ()
   }
 
   /** What a span-store forget did. */

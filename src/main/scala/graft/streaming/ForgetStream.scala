@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming right-to-be-forgotten: erasure REQUESTS land as files
   * (rows of doc_id) and each micro-batch applies the store-appropriate
@@ -40,9 +40,10 @@ object ForgetStream {
   /** Which stores a forget request stream erases from — any subset of
     * EVERY content-bearing store family in the system:
     *
-    *  - additive negative landings: LM cells, diversity cell pair,
-    *    k-anonymity QI cells, CDC chunk+doc pair, and any generic
-    *    [[Forget.SumCellTarget]] (eval/feature/MW/occupancy cells);
+    *  - additive negative landings: any [[CellStore]] (LM cells, the
+    *    diversity pair, k-anonymity QI cells, the CDC pair,
+    *    eval/feature/MW/occupancy cells), each certified under its
+    *    declared family;
     *  - identity surgical deletes: shingle inverted indexes (the q185
     *    serving index, the q198 release-delta store, the q199 trend
     *    store — same row shape), scrub verdict stores, window-majority
@@ -58,7 +59,7 @@ object ForgetStream {
     * need the content resolvable first (the archive-last rule).
     *
     * `splitBySrcBatch` switches the ADDITIVE families to PIN-PRESERVING
-    * erasure ([[Forget.forgetSumCellsSplit]]): the content archive must
+    * erasure ([[CellStore.forgetSplit]]): the content archive must
     * then carry each doc's original landing batch in a `src_batch`
     * column, the wave lands one negative delta per source batch instead
     * of one per wave, and NO forget horizon is sealed — release pins
@@ -68,39 +69,17 @@ object ForgetStream {
     * construction).
     */
   case class ForgetTargets(
-      lmDeltaDir: Option[String] = None,
-      divStores: Option[(String, String)] = None,
+      cellStores: Seq[CellStore] = Nil,
       bandStores: Option[(String, String)] = None,
       curationRoot: Option[String] = None,
-      kAnonDeltaDir: Option[String] = None,
       shingleIndexDirs: Seq[String] = Nil,
       scrubStoreDirs: Seq[String] = Nil,
       csDeltaDir: Option[String] = None,
       spanDeltaDir: Option[String] = None,
       spanIndexDir: Option[String] = None,
-      cdcStores: Option[(String, String)] = None,
       semanticStores: Option[(String, String)] = None,
       assetStore: Option[(String, String)] = None,
-      sumCellStores: Seq[Forget.SumCellTarget] = Nil,
-      splitBySrcBatch: Boolean = false) {
-
-    /** Every additive family as its generic SumCellTarget (tagged with
-      * its family name for the erasure certificate) — the one list both
-      * erasure modes (whole-wave vs batch-split) fan over.
-      */
-    private[streaming] def additiveTargets: Seq[(String, Forget.SumCellTarget)] =
-      lmDeltaDir.map(d => "lm" -> Forget.lmCellTarget(d)).toSeq ++
-        divStores.toSeq.flatMap { case (dims, stats) =>
-          Seq("diversity_dims" -> Forget.divDimCellTarget(dims),
-            "diversity_stats" -> Forget.divStatCellTarget(stats))
-        } ++
-        kAnonDeltaDir.map(d => "k_anonymity" -> Forget.kAnonCellTarget(d)).toSeq ++
-        cdcStores.toSeq.flatMap { case (chunks, nd) =>
-          Seq("cdc_chunks" -> Forget.cdcChunkCellTarget(chunks),
-            "cdc_docs" -> Forget.cdcDocCellTarget(nd))
-        } ++
-        sumCellStores.map("sum_cells" -> _)
-  }
+      splitBySrcBatch: Boolean = false)
 
   /** File-source forget-request stream: parquet rows with a `doc_id`
     * column landing in `requestDir`.
@@ -163,7 +142,7 @@ object ForgetStream {
     // whole-wave partition and/or this request's split-forget partitions
     // (decodable from their ids), whichever mode landed them
     def stampCommitted(): Unit =
-      targets.additiveTargets.map(_._2.deltaDir).distinct.foreach { d =>
+      targets.cellStores.map(_.dir).distinct.foreach { d =>
         val root = new java.io.File(d)
         // bound the decode to the split range: epoch-fold partitions
         // (id <= EpochFoldBase) also satisfy `<= SplitForgetBase`, and
@@ -224,33 +203,20 @@ object ForgetStream {
       require(docs.columns.contains("src_batch"),
         s"forget batch $batchId: splitBySrcBatch needs the content archive " +
           "to carry each doc's original landing batch in a src_batch column")
-      targets.additiveTargets.foreach { case (family, t) =>
-        val landed = Forget.forgetSumCellsSplit(docs, t, batchId, stamp = false)
-        record(family, t.deltaDir, "negative_split_landing", landed.size.toLong,
+      val landed = CellStore.forgetSplit(docs, batchId, targets.cellStores, stamp = false)
+      targets.cellStores.zip(landed).foreach { case (t, ids) =>
+        record(t.family, t.dir, "negative_split_landing", ids.size.toLong,
           "negative deltas landed, one per source batch the forgotten docs span")
       }
     } else {
-      targets.lmDeltaDir.foreach { dir =>
-        val n = Forget.forgetLmDocs(docs, dir, part)
-        record("lm", dir, "negative_landing", n, "negated bigram cells landed")
-      }
-      targets.divStores.foreach { case (dims, stats) =>
-        Forget.forgetDivDocs(docs, dims, stats, part)
-        record("diversity_dims", dims, "negative_landing", 1L, "negated cell delta landed")
-        record("diversity_stats", stats, "negative_landing", 1L, "negated cell delta landed")
-      }
-      targets.kAnonDeltaDir.foreach { dir =>
-        Forget.forgetKAnonDocs(docs, dir, part)
-        record("k_anonymity", dir, "negative_landing", 1L, "negated cell delta landed")
-      }
-      targets.cdcStores.foreach { case (chunks, nd) =>
-        Forget.forgetCdcDocs(docs, chunks, nd, part)
-        record("cdc_chunks", chunks, "negative_landing", 1L, "negated cell delta landed")
-        record("cdc_docs", nd, "negative_landing", 1L, "negated cell delta landed")
-      }
-      targets.sumCellStores.foreach { t =>
-        Forget.forgetSumCells(docs, t, part)
-        record("sum_cells", t.deltaDir, "negative_landing", 1L, "negated cell delta landed")
+      CellStore.forget(docs, part, targets.cellStores)
+      targets.cellStores.foreach { t =>
+        t.countedErasure match {
+          case Some(detail) => record(t.family, t.dir, "negative_landing",
+            spark.read.parquet(s"${t.dir}/batch_id=$part").count(), detail)
+          case None => record(t.family, t.dir, "negative_landing", 1L,
+            "negated cell delta landed")
+        }
       }
     }
     targets.bandStores.foreach { case (idx, dec) =>
@@ -325,13 +291,7 @@ object ForgetStream {
   def forgetSink(stream: DataFrame, content: DataFrame,
       targets: ForgetTargets, markerRoot: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .queryName("forget_requests")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, content, targets, markerRoot, batchId)
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "forget_requests", checkpointDir) { (batch, batchId) =>
+      processBatch(batch, content, targets, markerRoot, batchId)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming MinHash-LSH near-dup curation — the TEXT twin of
   * EmbeddingStream's SemDeDup: documents land as parquet files, each
@@ -108,15 +108,9 @@ object LshStream {
   def dedupSink(stream: DataFrame, indexDir: String, decisionsDir: String,
       checkpointDir: String,
       family: BandFamily = textBandFamily): StreamingQuery =
-    stream.writeStream
-      .queryName("lsh_band_ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, indexDir, decisionsDir, batchId, family)
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "lsh_band_ingest", checkpointDir) { (batch, batchId) =>
+      processBatch(batch, indexDir, decisionsDir, batchId, family)
+    }
 
   /** The decision audit across all batches, in doc order —
     * first-verdict-wins per doc, like CurationStream.decisions: a doc

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.Mining
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming curriculum-plan maintenance — q151's (phase, shard) cells
   * kept current as document deltas land, the training-order twin of the
@@ -27,37 +26,13 @@ object OrderStream {
   def readDocStream(spark: SparkSession, landingDir: String): DataFrame =
     CorpusStream.readDocStream(spark, landingDir)
 
-  /** One micro-batch's partial cells — Mining.curriculumCells verbatim,
-    * so the streaming fold can never phase a doc differently from batch
-    * q151. ≤ phases × EpochShards rows per batch.
+  /** The (phase, shard) curriculum cell store — Mining.curriculumCells
+    * verbatim, so the streaming fold can never phase a doc differently
+    * from batch q151. ≤ phases × EpochShards rows per batch.
     */
-  def batchCells(batch: DataFrame): DataFrame =
-    Mining.curriculumCells(batch)
-
-  /** Idempotent delta write: OVERWRITE this batch's partition directory.
-    * Exposed for the spec's replay pin.
-    */
-  def writeDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(batchCells(batch), deltaDir, batchId)
-  }
-
-  /** Cell-maintenance sink: per micro-batch, write the partial cells to
-    * their batch_id partition. Trigger.AvailableNow + checkpoint as in
-    * the corpus/shard/drift twins.
-    */
-  def cellSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("curriculum_cell_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("phase", "shard")), maintain)
-      }
-      .start()
+  def curriculumStore(dir: String): CellStore = CellStore("curriculum", dir,
+    Seq("phase", "shard"), Seq("n_docs" -> CellStore.Sum, "n_tokens" -> CellStore.Sum),
+    Mining.curriculumCells)
 
   /** Serve the curriculum plan manifest off the delta store alone:
     * curriculumManifest already re-folds its input, so the per-batch
@@ -66,7 +41,7 @@ object OrderStream {
     */
   def manifestFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
     Mining.curriculumManifest(
-      spark.read.parquet(deltaDir)
+      curriculumStore(deltaDir).rowsAt(spark)
         .select("phase", "shard", "n_docs", "n_tokens"))
 
   /** The curriculum manifest over a retention WINDOW [lo, upto] — the
@@ -75,19 +50,8 @@ object OrderStream {
   def manifestWindowed(spark: SparkSession, deltaDir: String, lo: Long,
       upto: Long = Long.MaxValue): DataFrame =
     Mining.curriculumManifest(
-      StoreCompaction.readWindow(spark, deltaDir, lo, upto)
+      curriculumStore(deltaDir).windowRows(spark, lo, upto)
         .select("phase", "shard", "n_docs", "n_tokens"))
-
-  /** Delta-store retention: fold partitions `batch_id <= upto` into the
-    * base partition with the same SUM algebra serving applies — served
-    * manifest bit-identical before and after (StreamingSpec-pinned).
-    */
-  def compactDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto) { cells =>
-      cells.groupBy("phase", "shard")
-        .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("n_tokens"))
-    }
 
   // ── renormalizing-schedule mass cells (q157/q158 serving) ───────────
 
@@ -102,24 +66,9 @@ object OrderStream {
       .groupBy("source", "w")
       .agg(count(lit(1)).cast("long").as("n_docs"))
 
-  def writeMassDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(massCells(batch), deltaDir, batchId)
-  }
-
-  /** Mass-cell maintenance sink — the q158 twin of [[cellSink]]. */
-  def massSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("renorm_mass_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeMassDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("source", "w")), maintain)
-      }
-      .start()
+  /** The mass-cell store — the q158 twin of [[curriculumStore]]. */
+  def massStore(dir: String): CellStore = CellStore("renorm_mass", dir,
+    Seq("source", "w"), Seq("n_docs" -> CellStore.Sum), massCells)
 
   /** Serve q158's segment manifest off the folded mass cells alone —
     * [[graft.ops.Mining.renormSegments]] is pure driver arithmetic on
@@ -128,12 +77,11 @@ object OrderStream {
     * rescans (StreamingSpec-pinned).
     */
   def segmentManifestFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
-    manifestOf(spark, spark.read.parquet(deltaDir))
+    manifestOf(spark, massStore(deltaDir).servedAt(spark))
 
-  /** The segment manifest planned over the mass-cell rows a read returns. */
-  private def manifestOf(spark: SparkSession, cells: DataFrame): DataFrame = {
-    val masses = cells
-      .groupBy("source", "w").agg(sum(col("n_docs")).cast("long").as("n"))
+  /** The segment manifest planned over the folded mass cells. */
+  private def manifestOf(spark: SparkSession, folded: DataFrame): DataFrame = {
+    val masses = folded.select("source", "w", "n_docs")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSeq.sortBy((t: (String, Long, Long)) => t._1)
@@ -147,12 +95,5 @@ object OrderStream {
     */
   def segmentManifestWindowed(spark: SparkSession, deltaDir: String,
       lo: Long, upto: Long = Long.MaxValue): DataFrame =
-    manifestOf(spark, StoreCompaction.readWindow(spark, deltaDir, lo, upto))
-
-  /** Mass-store retention: same fold algebra as serving. */
-  def compactMassDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto) { cells =>
-      cells.groupBy("source", "w")
-        .agg(sum(col("n_docs")).cast("long").as("n_docs"))
-    }
+    manifestOf(spark, massStore(deltaDir).servedWindow(spark, lo, upto))
 }

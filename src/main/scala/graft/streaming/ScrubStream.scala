@@ -4,7 +4,7 @@ import graft.exec.DerivedStore
 import graft.ops.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming decontamination — q137's surgical span scrub run per
   * micro-batch against a MATERIALIZED benchmark shingle artifact, the
@@ -58,43 +58,31 @@ object ScrubStream {
     */
   def scrubSink(stream: DataFrame, benchArtifactRoot: String, storeDir: String,
       checkpointDir: String, indexDir: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("scrub_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val store = new java.io.File(storeDir)
-        val hasHistory = store.exists() && store.listFiles() != null &&
-          store.listFiles().exists(f =>
-            f.isDirectory && f.getName.startsWith("batch_id="))
-        val fresh =
-          if (hasHistory) {
-            val known = spark.read.parquet(storeDir)
-              .filter(col("batch_id") < batchId).select("doc_id")
-              .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_semi")
-            batch.join(broadcast(known), Seq("doc_id"), "left_anti")
-          } else batch
-        // the batch is unrolled into positional shingles once anyway —
-        // materialize one localCheckpoint so the verdict write and the
-        // index delta don't re-tokenize
-        val freshMat = fresh.localCheckpoint()
-        val bench = spark.read.parquet(s"$benchArtifactRoot/hashes")
-        batchScrub(freshMat, bench)
-          .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
-        // maintain the inverted shingle index alongside the verdicts:
-        // per-batch (h, doc_id) delta partitions, overwrite-idempotent
-        // like the store itself. Docs are first-seen-unique across
-        // batches, so the union of deltas IS the distinct corpus index
-        // and rotation reads it via partition discovery.
-        indexDir.foreach { idx =>
-          Dedup.positionalShingles(freshMat.select(col("doc_id"), col("text")))
-            .select(col("h"), col("doc_id")).distinct()
-            .write.mode("overwrite").parquet(s"$idx/batch_id=$batchId")
-        }
-        ()
+    StoreCompaction.sink(stream, "scrub_stream", checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val known = StoreCompaction.historyBefore(spark, storeDir, batchId,
+          batch.select("doc_id").filter(lit(false)))
+        .select("doc_id")
+        .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_semi")
+      // the batch is unrolled into positional shingles once anyway —
+      // materialize one localCheckpoint so the verdict write and the
+      // index delta don't re-tokenize
+      val freshMat = batch.join(broadcast(known), Seq("doc_id"), "left_anti")
+        .localCheckpoint()
+      val bench = spark.read.parquet(s"$benchArtifactRoot/hashes")
+      batchScrub(freshMat, bench)
+        .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
+      // maintain the inverted shingle index alongside the verdicts:
+      // per-batch (h, doc_id) delta partitions, overwrite-idempotent
+      // like the store itself. Docs are first-seen-unique across
+      // batches, so the union of deltas IS the distinct corpus index
+      // and rotation reads it via partition discovery.
+      indexDir.foreach { idx =>
+        Dedup.positionalShingles(freshMat.select(col("doc_id"), col("text")))
+          .select(col("h"), col("doc_id")).distinct()
+          .write.mode("overwrite").parquet(s"$idx/batch_id=$batchId")
       }
-      .start()
+    }
 
   /** Build the scrub store for a corpus dir by running the sink's batch
     * path over the whole corpus slice as one batch — the same code every
@@ -148,16 +136,12 @@ object ScrubStream {
   def shingleIndexSink(stream: DataFrame, deltaDir: String,
       checkpointDir: String,
       maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("shingle_index_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StoreCompaction.sink(stream, "shingle_index_maintenance", checkpointDir) {
+      (batch, batchId) =>
         writeShingleDelta(batch, deltaDir, batchId)
         StoreCompaction.sinkMaintain(batch.sparkSession,
           Seq(deltaDir -> Seq("h")), maintain)
-      }
-      .start()
+    }
 
   /** q185's containment table off the index deltas alone — bit-equal to
     * the batch query over the union of landings (StreamingSpec-pinned).

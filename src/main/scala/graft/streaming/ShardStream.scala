@@ -2,8 +2,6 @@ package graft.streaming
 
 import graft.ops.Mining
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming shard-manifest maintenance — q123's fixed hash-range
   * manifest kept current as document deltas land, the reshard twin of
@@ -32,38 +30,18 @@ object ShardStream {
   def readDocStream(spark: SparkSession, landingDir: String): DataFrame =
     CorpusStream.readDocStream(spark, landingDir)
 
-  /** One micro-batch's partial manifest — Mining.shardStats +
-    * shardManifest verbatim, so the streaming fold can never diverge
-    * from the batch query. ≤ ShardCount rows per batch.
+  /** The shard-manifest store — Mining.shardStats + shardManifest
+    * verbatim, so the streaming fold can never diverge from the batch
+    * query; ≤ ShardCount rows per batch. Sums, XOR, min/max all
+    * reassociate exactly, so compaction leaves the served manifest
+    * bit-identical (StreamingSpec-pinned) and the store holds ≤
+    * ShardCount base rows plus one small partition per recent batch.
     */
-  def batchDelta(batch: DataFrame): DataFrame =
-    Mining.shardManifest(Mining.shardStats(batch))
-
-  /** Idempotent delta write: OVERWRITE this batch's partition directory.
-    * Exposed for the spec's replay pin (writing the same delta twice is
-    * a no-op for the served manifest).
-    */
-  def writeDelta(batch: DataFrame, deltaDir: String, batchId: Long): Unit = {
-    StoreCompaction.writeEvolvedDelta(batchDelta(batch), deltaDir, batchId)
-  }
-
-  /** Manifest-maintenance sink: per micro-batch, write the partial
-    * manifest to its batch_id partition. Trigger.AvailableNow +
-    * checkpoint as in the corpus/embedding/sketch twins.
-    */
-  def manifestSink(stream: DataFrame, deltaDir: String,
-      checkpointDir: String,
-      maintain: Option[StoreCompaction.MaintenancePolicy] = None): StreamingQuery =
-    stream.writeStream
-      .queryName("shard_manifest_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeDelta(batch, deltaDir, batchId)
-        StoreCompaction.sinkMaintain(batch.sparkSession,
-          Seq(deltaDir -> Seq("shard_id")), maintain)
-      }
-      .start()
+  def manifestStore(dir: String): CellStore = CellStore("shard_manifest", dir,
+    Seq("shard_id"), Seq("n_docs" -> CellStore.Sum, "shard_tokens" -> CellStore.Sum,
+      "checksum" -> CellStore.Xor, "min_doc_id" -> CellStore.Min,
+      "max_doc_id" -> CellStore.Max),
+    b => Mining.shardManifest(Mining.shardStats(b)))
 
   /** Serve the whole-corpus manifest off the delta store alone: fold the
     * per-batch partials with the same associative algebra — no document
@@ -71,7 +49,7 @@ object ShardStream {
     * landed documents (StreamingSpec-pinned).
     */
   def manifestFromDeltas(spark: SparkSession, deltaDir: String): DataFrame =
-    foldManifest(spark.read.parquet(deltaDir)).orderBy("shard_id")
+    manifestStore(deltaDir).servedAt(spark).orderBy("shard_id")
 
   /** The shard manifest over a retention WINDOW [lo, upto] — the same
     * associative fold over exactly the retained landings' partials: the
@@ -79,26 +57,5 @@ object ShardStream {
     */
   def manifestWindowed(spark: SparkSession, deltaDir: String, lo: Long,
       upto: Long = Long.MaxValue): DataFrame =
-    foldManifest(StoreCompaction.readWindow(spark, deltaDir, lo, upto))
-      .orderBy("shard_id")
-
-  private def foldManifest(deltas: DataFrame): DataFrame =
-    deltas
-      .groupBy(col("shard_id"))
-      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("shard_tokens")).cast("long").as("shard_tokens"),
-        expr("bit_xor(checksum)").as("checksum"),
-        min(col("min_doc_id")).as("min_doc_id"),
-        max(col("max_doc_id")).as("max_doc_id"))
-
-  /** Delta-store retention: fold partitions `batch_id <= upto` into the
-    * base partition using the SAME associative manifest algebra serving
-    * applies — sums, XOR, min/max all reassociate exactly, so the served
-    * manifest is bit-identical before and after compaction
-    * (StreamingSpec-pinned). The store then holds ≤ ShardCount base rows
-    * plus one small partition per recent batch instead of one per batch
-    * ever ingested.
-    */
-  def compactDeltas(spark: SparkSession, deltaDir: String, upto: Long): Unit =
-    StoreCompaction.foldInto(spark, deltaDir, upto)(foldManifest)
+    manifestStore(deltaDir).servedWindow(spark, lo, upto).orderBy("shard_id")
 }

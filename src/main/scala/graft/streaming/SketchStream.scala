@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.Sketches
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming HLL register maintenance — q109's merge algebra run
@@ -82,16 +82,10 @@ object SketchStream {
     */
   def sketchSink(stream: DataFrame, artifactDir: String, checkpointDir: String,
       p: Int = 6): StreamingQuery =
-    stream.writeStream
-      .queryName("hll_register_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val regs = Sketches.hllRegisters(batch, Seq("event_type"), userDayKey, p)
-        mergeRegisters(batch.sparkSession, regs, artifactDir)
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "hll_register_maintenance", checkpointDir) { (batch, _) =>
+      val regs = Sketches.hllRegisters(batch, Seq("event_type"), userDayKey, p)
+      mergeRegisters(batch.sparkSession, regs, artifactDir)
+    }
 
   /** Serve the maintained sketch: distinct estimates straight off the
     * artifact — no event data touched at query time.
@@ -107,17 +101,12 @@ object SketchStream {
     */
   def sketchSinkPartitioned(stream: DataFrame, artifactDir: String, checkpointDir: String,
       p: Int = 6): StreamingQuery =
-    stream.writeStream
-      .queryName("hll_register_maintenance_partitioned")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val regs = Sketches.hllRegisters(batch, Seq("event_type"), userDayKey, p)
-        foldArtifact(batch.sparkSession, regs, artifactDir, Some("event_type"))(
-          _.groupBy("event_type", "bucket").agg(max("r").as("r")))
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "hll_register_maintenance_partitioned",
+        checkpointDir) { (batch, _) =>
+      val regs = Sketches.hllRegisters(batch, Seq("event_type"), userDayKey, p)
+      foldArtifact(batch.sparkSession, regs, artifactDir, Some("event_type"))(
+        _.groupBy("event_type", "bucket").agg(max("r").as("r")))
+    }
 
   /** Serve ONE group's distinct estimate off its artifact partition: the
     * equality filter prunes the partitioned layout to a single directory
@@ -162,19 +151,13 @@ object SketchStream {
     */
   def kmvSink(stream: DataFrame, artifactDir: String, checkpointDir: String,
       k: Int = 256): StreamingQuery =
-    stream.writeStream
-      .queryName("kmv_sketch_maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sk = batch
-          .select(col("event_type"), graft.ops.Dedup.h60Col(userDayKey).as("h"))
-          .groupBy("event_type")
-          .agg(graft.functions.KmvMin.kmvMin(k)(col("h")).as("mins"))
-        mergeKmv(batch.sparkSession, sk, artifactDir, k)
-        ()
-      }
-      .start()
+    StoreCompaction.sink(stream, "kmv_sketch_maintenance", checkpointDir) { (batch, _) =>
+      val sk = batch
+        .select(col("event_type"), graft.ops.Dedup.h60Col(userDayKey).as("h"))
+        .groupBy("event_type")
+        .agg(graft.functions.KmvMin.kmvMin(k)(col("h")).as("mins"))
+      mergeKmv(batch.sparkSession, sk, artifactDir, k)
+    }
 
   // ── sketch stores under RETENTION: per-landing register deltas ───────
   //

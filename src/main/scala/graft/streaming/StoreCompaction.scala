@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import scala.jdk.CollectionConverters._
 
 /** Generic retention for the per-batchId DELTA stores every streaming
@@ -1292,16 +1293,21 @@ object StoreCompaction {
       }
     }
 
-  /** The guarded delta landing every sink should use: assert the batch
-    * is landable ([[requireLandable]] — the margin contract), then the
-    * usual one-file overwrite partition write (replay-idempotent for
-    * any batch still inside the margin).
+  /** The one micro-batch sink frame every streaming sink starts through:
+    * `land` runs once per micro-batch of `stream` under a checkpoint at
+    * `checkpointDir`, with Trigger.AvailableNow (drain what has landed,
+    * then stop — call again as new files land). The margin contract
+    * above assumes exactly this trigger: a restarted AvailableNow query
+    * re-delivers at most its last batch.
     */
-  def landDelta(rows: DataFrame, storeDir: String, batchId: Long): Unit = {
-    requireLandable(storeDir, batchId)
-    rows.coalesce(1).write.mode("overwrite")
-      .parquet(s"$storeDir/batch_id=$batchId")
-  }
+  def sink(stream: DataFrame, name: String, checkpointDir: String)(
+      land: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .queryName(name)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) => land(batch, batchId) }
+      .start()
 
   // ── cell-schema evolution: append_new_columns at the store layer ─────
   //
@@ -1833,8 +1839,8 @@ object StoreCompaction {
         epochsFolded, retired)
     }
 
-  /** Sink-side maintenance hook shared by every delta sink (the
-    * lmCellSink pattern generalized): when a policy is given, run one
+  /** Sink-side maintenance hook shared by every delta sink
+    * ([[CellStore.sink]] and the identity sinks): when a policy is given, run one
     * threshold-driven [[maintain]] pass per landing on each
     * (storeDir, bucketCols) pair. Below-threshold passes are
     * listing-only no-ops (the maintprobe law), live release pins CLAMP

@@ -5,7 +5,7 @@ import graft.exec.Materializer
 import graft.models.{Intermediate, Staging}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming parity-plus (SURVEY §2.8).
   *
@@ -92,17 +92,11 @@ object StreamingIngest {
       targetPath: String,
       checkpointDir: String,
       cfg: RunConfig = RunConfig.frozen): StreamingQuery =
-    rawReadings.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cleaned = Intermediate.intSensorReadingsCleaned(
-          Staging.stgSensorReadings(batch, cfg), devices, cfg)
-        Materializer.incrementalUpsert(cleaned, targetPath, Seq("reading_id"))
-        ()
-      }
-      .start()
+    StoreCompaction.sink(rawReadings, "silver_upsert", checkpointDir) { (batch, _) =>
+      val cleaned = Intermediate.intSensorReadingsCleaned(
+        Staging.stgSensorReadings(batch, cfg), devices, cfg)
+      Materializer.incrementalUpsert(cleaned, targetPath, Seq("reading_id"))
+    }
 
   /** Gap-based session windows on the stream — the streaming twin of the
     * batch sessionization query (q25): a session closes once the watermark

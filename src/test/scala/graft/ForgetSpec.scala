@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{CorpusStream, CurationStream, Forget, LshStream, StoreCompaction}
+import graft.streaming.{CellStore, CorpusStream, CurationStream, DriftStream, EmbeddingStream, Forget, LshStream, OrderStream, ShardStream, StoreCompaction}
 
 /** Right-to-be-forgotten laws (q200-q202's machinery):
   * negative-cell erasure ≡ retrain-on-survivors on the additive stores,
@@ -28,11 +28,11 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val deltas = tmpDir("graft-forget-lm") + "/deltas"
     val ids = docs.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val cut = ids(ids.length / 2)
-    CorpusStream.writeLmDelta(docs.filter(col("doc_id") < cut), deltas, 0L)
-    CorpusStream.writeLmDelta(docs.filter(col("doc_id") >= cut), deltas, 1L)
-    Forget.forgetLmDocs(docs.filter(forgetPred), deltas, 2L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") < cut), 0L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") >= cut), 1L)
+    CorpusStream.lmStore(deltas).forget(docs.filter(forgetPred), 2L)
 
-    val served = lmMap(Forget.lmCountsAfterForget(spark, deltas))
+    val served = lmMap(CorpusStream.lmStore(deltas).servedAt(spark))
     val retrained = lmMap(CorpusStream.lmCells(docs.filter(!forgetPred)))
     assert(served === retrained,
       "negative-delta fold must equal the survivor-trained count table")
@@ -40,16 +40,16 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // the same law through compaction: fold EVERYTHING (forget delta
     // included) into the base partition — the additive algebra carries
     // the negation into the base and serving is unchanged
-    CorpusStream.compactLmDeltas(spark, deltas, upto = 2L)
-    assert(lmMap(Forget.lmCountsAfterForget(spark, deltas)) === retrained,
+    CorpusStream.lmStore(deltas).compact(spark, upto = 2L)
+    assert(lmMap(CorpusStream.lmStore(deltas).servedAt(spark)) === retrained,
       "folding the forget delta into the base must not move a count")
 
     // and forgetting docs already IN the base (a second forget wave
     // against fully-compacted history) still equals the retrain
     val wave2 = col("doc_id") % 17 === 5
-    Forget.forgetLmDocs(docs.filter(wave2), deltas, 3L)
+    CorpusStream.lmStore(deltas).forget(docs.filter(wave2), 3L)
     val retrained2 = lmMap(CorpusStream.lmCells(docs.filter(!forgetPred && !wave2)))
-    assert(lmMap(Forget.lmCountsAfterForget(spark, deltas)) === retrained2,
+    assert(lmMap(CorpusStream.lmStore(deltas).servedAt(spark)) === retrained2,
       "erasing rows folded into the base must equal the two-wave retrain")
   }
 
@@ -58,9 +58,9 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val (dims, stats) = (s"$root/dims", s"$root/stats")
     val ids = docs.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val cut = ids(ids.length / 2)
-    CorpusStream.writeDivDelta(docs.filter(col("doc_id") < cut), dims, stats, 0L)
-    CorpusStream.writeDivDelta(docs.filter(col("doc_id") >= cut), dims, stats, 1L)
-    Forget.forgetDivDocs(docs.filter(forgetPred), dims, stats, 2L)
+    CellStore.land(docs.filter(col("doc_id") < cut), 0L, CorpusStream.divStores(dims, stats))
+    CellStore.land(docs.filter(col("doc_id") >= cut), 1L, CorpusStream.divStores(dims, stats))
+    CellStore.forget(docs.filter(forgetPred), 2L, CorpusStream.divStores(dims, stats))
 
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
@@ -68,17 +68,17 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     assert(snap(CorpusStream.diversityFromDeltas(spark, dims, stats)) === expected,
       "negative-cell fold must equal the survivor-recomputed diversity table")
 
-    CorpusStream.compactDivDeltas(spark, dims, stats, upto = 2L)
+    CorpusStream.divStores(dims, stats).foreach(_.compact(spark, upto = 2L))
     assert(snap(CorpusStream.diversityFromDeltas(spark, dims, stats)) === expected,
       "folding the forget delta into the base must not move the metric")
   }
 
   test("LM forget: erasing docs the store never counted fails loudly instead of serving an impossible model") {
     val deltas = tmpDir("graft-forget-lm-neg") + "/deltas"
-    CorpusStream.writeLmDelta(docs.filter(col("doc_id") < 50), deltas, 0L)
-    Forget.forgetLmDocs(docs.filter(col("doc_id") >= 400), deltas, 1L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") < 50), 0L)
+    CorpusStream.lmStore(deltas).forget(docs.filter(col("doc_id") >= 400), 1L)
     val ex = intercept[Exception] {
-      Forget.lmCountsAfterForget(spark, deltas).collect()
+      CorpusStream.lmStore(deltas).servedAt(spark).collect()
     }
     assert(ex.getMessage.contains("NEGATIVE bigram count"))
   }
@@ -135,8 +135,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val full = Catalog.table(spark, sf, "documents")
     val ids = full.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val cut = ids(ids.length / 2)
-    CorpusStream.writeKAnonDelta(full.filter(col("doc_id") < cut), deltas, 0L)
-    CorpusStream.writeKAnonDelta(full.filter(col("doc_id") >= cut), deltas, 1L)
+    CorpusStream.kAnonStore(deltas).land(full.filter(col("doc_id") < cut), 0L)
+    CorpusStream.kAnonStore(deltas).land(full.filter(col("doc_id") >= cut), 1L)
 
     // pick the smallest SAFE group (size >= k) and erase just enough of
     // its members to push it below k — the under-suppression hazard
@@ -154,13 +154,13 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       .select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val forgotten = members.take((gSz - TextOps.KAnonK + 1).toInt)
     val fDf = full.filter(col("doc_id").isin(forgotten: _*))
-    Forget.forgetKAnonDocs(fDf, deltas, 2L)
+    CorpusStream.kAnonStore(deltas).forget(fDf, 2L)
 
     def audit(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
     val before = audit(TextOps.kAnonymityAudit(full))
     val after = audit(TextOps.kAnonymityFromCells(
-      Forget.kAnonCellsAfterForget(spark, deltas)))
+      CorpusStream.kAnonStore(deltas).servedAt(spark)))
     val survivors = full.filter(!col("doc_id").isin(forgotten: _*))
     assert(after === audit(TextOps.kAnonymityAudit(survivors)),
       "served post-forget audit must equal the survivor recompute")
@@ -187,8 +187,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val (idx, dec) = (s"$root/index", s"$root/decisions")
     Seq(col("doc_id") < cut, col("doc_id") >= cut).zipWithIndex.foreach {
       case (p, b) =>
-        CorpusStream.writeLmDelta(d.filter(p), lm, b.toLong)
-        CorpusStream.writeDivDelta(d.filter(p), dims, stats, b.toLong)
+        CorpusStream.lmStore(lm).land(d.filter(p), b.toLong)
+        CellStore.land(d.filter(p), b.toLong, CorpusStream.divStores(dims, stats))
         LshStream.processBatch(d.filter(p), idx, dec, b.toLong)
     }
 
@@ -202,8 +202,9 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(landing, name))
     }
-    val targets = ForgetTargets(lmDeltaDir = Some(lm),
-      divStores = Some((dims, stats)), bandStores = Some((idx, dec)))
+    val targets = ForgetTargets(
+      cellStores = CorpusStream.lmStore(lm) +: CorpusStream.divStores(dims, stats),
+      bandStores = Some((idx, dec)))
     val w1 = pmod(col("doc_id"), lit(17L)) === lit(3L)
     val w2 = pmod(col("doc_id"), lit(17L)) === lit(5L)
     land(d.filter(w1).select("doc_id"), "w1.parquet")
@@ -215,7 +216,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
 
     // every store now equals batch erasure of the UNION of waves
     val survivors = d.filter(!w1 && !w2).localCheckpoint()
-    assert(lmMap(Forget.lmCountsAfterForget(spark, lm)) ===
+    assert(lmMap(CorpusStream.lmStore(lm).servedAt(spark)) ===
       lmMap(CorpusStream.lmCells(survivors)),
       "streamed LM erasure must equal the survivor retrain")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
@@ -368,8 +369,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // survivors 21 (% 17 = 4) and 22 (% 17 = 5) duplicate it
     val d = Seq((3L, w), (21L, w), (22L, w), (5L, uniq))
       .toDF("doc_id", "text").localCheckpoint()
-    CorpusStream.writeSpanDelta(d.filter(col("doc_id") < 21), deltas, 0L)
-    CorpusStream.writeSpanDelta(d.filter(col("doc_id") >= 21), deltas, 1L)
+    CorpusStream.spanStore(deltas).land(d.filter(col("doc_id") < 21), 0L)
+    CorpusStream.spanStore(deltas).land(d.filter(col("doc_id") >= 21), 1L)
     val survivors = d.filter(!forgetPred).localCheckpoint()
     def served() = CorpusStream.spanScrubFromDeltas(spark, deltas, survivors)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -394,7 +395,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     assert(after.find(_._1 == 22L).get._6,
       "later duplicates still cut against the re-elected owner")
 
-    CorpusStream.compactSpanDeltas(spark, deltas, upto = 2L)
+    CorpusStream.spanStore(deltas).compact(spark, upto = 2L)
     assert(served() === fresh, "the re-election must survive the fold")
 
     // the INDEXED path: a positional inverted index narrows the
@@ -404,7 +405,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val (deltas2, idx2) = (s"$root2/deltas", s"$root2/index")
     Seq(col("doc_id") < 21, col("doc_id") >= 21).zipWithIndex.foreach {
       case (p, b) =>
-        CorpusStream.writeSpanDelta(d.filter(p), deltas2, b.toLong)
+        CorpusStream.spanStore(deltas2).land(d.filter(p), b.toLong)
         CorpusStream.writeSpanIndexDelta(d.filter(p), idx2, b.toLong)
     }
     Forget.forgetSpanCells(spark, deltas2, d.filter(forgetPred), survivors,
@@ -425,9 +426,9 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val (chunks, nd) = (s"$root/chunks", s"$root/docs")
     val d = docs.localCheckpoint()
     val cut = d.agg(max(col("doc_id"))).head().getLong(0) / 2
-    CorpusStream.writeCdcDelta(d.filter(col("doc_id") < cut), chunks, nd, 0L)
-    CorpusStream.writeCdcDelta(d.filter(col("doc_id") >= cut), chunks, nd, 1L)
-    Forget.forgetCdcDocs(d.filter(forgetPred), chunks, nd, 2L)
+    CellStore.land(d.filter(col("doc_id") < cut), 0L, CorpusStream.cdcStores(chunks, nd))
+    CellStore.land(d.filter(col("doc_id") >= cut), 1L, CorpusStream.cdcStores(chunks, nd))
+    CellStore.forget(d.filter(forgetPred), 2L, CorpusStream.cdcStores(chunks, nd))
 
     val survivors = d.filter(!forgetPred).localCheckpoint()
     val ex = Dedup.cdcChunks(survivors).localCheckpoint()
@@ -438,12 +439,12 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     assert(rows(CorpusStream.cdcReportFromDeltas(spark, chunks, nd)) === fresh,
       "negative cells + tombstones must equal the survivor re-chunk")
 
-    CorpusStream.compactCdcDeltas(spark, chunks, nd, upto = 2L)
+    CorpusStream.cdcStores(chunks, nd).foreach(_.compact(spark, upto = 2L))
     assert(rows(CorpusStream.cdcReportFromDeltas(spark, chunks, nd)) === fresh,
       "the negation must survive the fold")
 
     // a second forget for the SAME docs drives forgotten-only chunks negative
-    Forget.forgetCdcDocs(d.filter(forgetPred), chunks, nd, 3L)
+    CellStore.forget(d.filter(forgetPred), 3L, CorpusStream.cdcStores(chunks, nd))
     val ex2 = intercept[Exception] {
       CorpusStream.cdcReportFromDeltas(spark, chunks, nd).collect()
     }
@@ -510,14 +511,14 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val cut = full.agg(max(col("doc_id"))).head().getLong(0) / 2
     Seq(col("doc_id") < cut, col("doc_id") >= cut).zipWithIndex.foreach {
       case (p, b) =>
-        CorpusStream.writeEvalDelta(full.filter(p), ev, b.toLong)
-        CorpusStream.writeFeatureDelta(full.filter(p), ft, b.toLong)
-        CorpusStream.writeMwDelta(full.filter(p), mw, b.toLong)
+        CorpusStream.evalStore(ev).land(full.filter(p), b.toLong)
+        CorpusStream.featureStore(ft).land(full.filter(p), b.toLong)
+        CorpusStream.mwStore(mw).land(full.filter(p), b.toLong)
     }
     val f = full.filter(forgetPred)
-    Forget.forgetSumCells(f, Forget.evalCellTarget(ev), 2L)
-    Forget.forgetSumCells(f, Forget.featureCellTarget(ft), 2L)
-    Forget.forgetSumCells(f, Forget.mwCellTarget(mw), 2L)
+    CorpusStream.evalStore(ev).forget(f, 2L)
+    CorpusStream.featureStore(ft).forget(f, 2L)
+    CorpusStream.mwStore(mw).forget(f, 2L)
 
     val survivors = full.filter(!forgetPred).localCheckpoint()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
@@ -537,9 +538,9 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
         s"MW store must equal survivor recompute ($tag)")
     }
     check("unfolded")
-    CorpusStream.compactEvalDeltas(spark, ev, 2L)
-    CorpusStream.compactFeatureDeltas(spark, ft, 2L)
-    CorpusStream.compactMwDeltas(spark, mw, 2L)
+    CorpusStream.evalStore(ev).compact(spark, 2L)
+    CorpusStream.featureStore(ft).compact(spark, 2L)
+    CorpusStream.mwStore(mw).compact(spark, 2L)
     check("folded")
   }
 
@@ -603,12 +604,12 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     Seq(col("doc_id") < cut, col("doc_id") >= cut).zipWithIndex.foreach {
       case (p, b) =>
         val sl = full.filter(p)
-        CorpusStream.writeKAnonDelta(sl, kan, b.toLong)
-        CorpusStream.writeCdcDelta(sl, chunks, nd, b.toLong)
-        CorpusStream.writeSpanDelta(sl, span, b.toLong)
+        CorpusStream.kAnonStore(kan).land(sl, b.toLong)
+        CellStore.land(sl, b.toLong, CorpusStream.cdcStores(chunks, nd))
+        CorpusStream.spanStore(span).land(sl, b.toLong)
         CorpusStream.writeCsDelta(sl, cs, b.toLong)
         graft.streaming.ScrubStream.writeShingleDelta(sl, shingle, b.toLong)
-        CorpusStream.writeEvalDelta(sl, ev, b.toLong)
+        CorpusStream.evalStore(ev).land(sl, b.toLong)
     }
     val assets = s"$root/assets"
     spark.read.parquet(graft.ops.Multimodal.buildAssetStore(spark, sf))
@@ -616,12 +617,11 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       .write.partitionBy("kind").mode("overwrite").parquet(assets)
 
     val targets = ForgetTargets(
-      kAnonDeltaDir = Some(kan),
-      cdcStores = Some((chunks, nd)),
+      cellStores = CorpusStream.kAnonStore(kan) +: CorpusStream.cdcStores(chunks, nd) :+
+        CorpusStream.evalStore(ev),
       spanDeltaDir = Some(span),
       csDeltaDir = Some(cs),
       shingleIndexDirs = Seq(shingle),
-      sumCellStores = Seq(Forget.evalCellTarget(ev)),
       assetStore = Some((assets, "kind")))
     ForgetStream.processBatch(full.filter(forgetPred).select("doc_id"),
       full, targets, s"$root/markers", batchId = 0L)
@@ -631,7 +631,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
     // additive families serve the survivor recompute
     assert(rows(graft.ops.TextOps.kAnonymityFromCells(
-        Forget.kAnonCellsAfterForget(spark, kan))) ===
+        CorpusStream.kAnonStore(kan).servedAt(spark))) ===
       rows(graft.ops.TextOps.kAnonymityAudit(survivors)))
     assert(rows(CorpusStream.evalTableFromDeltas(spark, ev)) ===
       rows(graft.ops.Mining.evalTableFromCells(spark,
@@ -701,23 +701,23 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val d = docs.localCheckpoint()
     val ids = d.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val cut = ids(ids.length / 2)
-    CorpusStream.writeLmDelta(d.filter(col("doc_id") < cut), lm, 0L)
-    CorpusStream.writeLmDelta(d.filter(col("doc_id") >= cut), lm, 1L)
+    CorpusStream.lmStore(lm).land(d.filter(col("doc_id") < cut), 0L)
+    CorpusStream.lmStore(lm).land(d.filter(col("doc_id") >= cut), 1L)
     // a forget landing whose request marker has NOT committed (crash
     // window): the negative partition exists, no sentinel stamped
     val forgotten = d.filter(forgetPred)
-    Forget.forgetLmDocs(forgotten, lm, -1001L)
+    CorpusStream.lmStore(lm).forget(forgotten, -1001L)
     val expected = lmMap(CorpusStream.lmCells(d.filter(!forgetPred)))
 
     StoreCompaction.appendInto(spark, lm, upto = 1L, bucketCols = Seq("w1"))
     assert(new java.io.File(s"$lm/batch_id=-1001").isDirectory,
       "an uncommitted negative partition must survive the fold")
-    assert(lmMap(Forget.lmCountsAfterForget(spark, lm)) === expected,
+    assert(lmMap(CorpusStream.lmStore(lm).servedAt(spark)) === expected,
       "serving still folds the uncommitted delta (readers are unaffected)")
     // the crash replay: re-land the SAME negative partition (overwrite) —
     // because the fold skipped it, this is idempotent, not a double-subtract
-    Forget.forgetLmDocs(forgotten, lm, -1001L)
-    assert(lmMap(Forget.lmCountsAfterForget(spark, lm)) === expected,
+    CorpusStream.lmStore(lm).forget(forgotten, -1001L)
+    assert(lmMap(CorpusStream.lmStore(lm).servedAt(spark)) === expected,
       "a replayed uncommitted forget landing must not double-subtract")
     // marker commits -> the stamp makes the partition foldable
     new java.io.File(s"$lm/batch_id=-1001/" +
@@ -725,7 +725,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     StoreCompaction.appendInto(spark, lm, upto = 1L, bucketCols = Seq("w1"))
     assert(!new java.io.File(s"$lm/batch_id=-1001").exists(),
       "a stamped forget partition folds like any other delta")
-    assert(lmMap(Forget.lmCountsAfterForget(spark, lm)) === expected,
+    assert(lmMap(CorpusStream.lmStore(lm).servedAt(spark)) === expected,
       "the negation survives the fold")
   }
 
@@ -735,13 +735,13 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val root = tmpDir("graft-forget-ordering")
     val lm = s"$root/lm"
     val d = docs.localCheckpoint()
-    CorpusStream.writeLmDelta(d, lm, 0L)
+    CorpusStream.lmStore(lm).land(d, 0L)
     // the erase-archive-FIRST mistake: the content frame no longer holds
     // the requested ids (they were already deleted from the archive)
     val archiveErased = d.filter(!forgetPred)
     val ex = intercept[IllegalStateException] {
       ForgetStream.processBatch(d.filter(forgetPred).select("doc_id"),
-        archiveErased, ForgetTargets(lmDeltaDir = Some(lm)),
+        archiveErased, ForgetTargets(cellStores = Seq(CorpusStream.lmStore(lm))),
         s"$root/markers", batchId = 0L)
     }
     assert(ex.getMessage.contains("content archive"),
@@ -752,8 +752,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       "a refused request must land nothing")
     // the correct ordering still works and serves the survivor retrain
     ForgetStream.processBatch(d.filter(forgetPred).select("doc_id"), d,
-      ForgetTargets(lmDeltaDir = Some(lm)), s"$root/markers", batchId = 0L)
-    assert(lmMap(Forget.lmCountsAfterForget(spark, lm)) ===
+      ForgetTargets(cellStores = Seq(CorpusStream.lmStore(lm))), s"$root/markers", batchId = 0L)
+    assert(lmMap(CorpusStream.lmStore(lm).servedAt(spark)) ===
       lmMap(CorpusStream.lmCells(d.filter(!forgetPred))))
     assert(new java.io.File(s"$lm/batch_id=-1000/_FORGET_COMMITTED").exists(),
       "the commit stamp must land with the marker")
@@ -776,8 +776,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       ids(3 * ids.length / 4), Long.MaxValue)
     bounds.zipWithIndex.foreach { case (hi, k) =>
       val lo = if (k == 0) Long.MinValue else bounds(k - 1)
-      CorpusStream.writeLmDelta(
-        d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
+      CorpusStream.lmStore(deltas).land(d.filter(col("doc_id") >= lo && col("doc_id") < hi),
+        k.toLong)
     }
     bounds
   }
@@ -793,9 +793,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val deltas = tmpDir("graft-split-forget") + "/deltas"
     val bounds = landQuartiles(d, deltas)
     StoreCompaction.registerPin(deltas, "rel1", 1L)
-    Forget.forgetSumCellsSplit(
-      d.filter(forgetPred).withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(deltas), requestId = 0L)
+    CorpusStream.lmStore(deltas).forgetSplit(d.filter(forgetPred).withColumn("src_batch",
+      srcBatchCol(bounds)), requestId = 0L)
 
     // no horizon sealed: the pre-wave pin is still legal
     StoreCompaction.requireServableAt(deltas, 1L)
@@ -805,7 +804,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // EVERY pin boundary serves the survivor retrain of exactly its slice
     (0 to 3).foreach { p =>
       val slice = d.filter(col("doc_id") < bounds(p) && !forgetPred)
-      assert(lmMap(Forget.lmCountsAfterForget(spark, deltas, upto = p.toLong)) ===
+      assert(lmMap(CorpusStream.lmStore(deltas).servedAt(spark, upto = p.toLong)) ===
         lmMap(CorpusStream.lmCells(slice)),
         s"pin at batch $p must equal the retrain on its slice's survivors")
     }
@@ -815,10 +814,10 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val sealedStore = tmpDir("graft-split-forget-sealed") + "/deltas"
     landQuartiles(d, sealedStore)
     StoreCompaction.registerPin(sealedStore, "rel1", 1L)
-    Forget.forgetLmDocs(d.filter(forgetPred), sealedStore,
+    CorpusStream.lmStore(sealedStore).forget(d.filter(forgetPred),
       graft.streaming.ForgetStream.ForgetBase - 0L)
     val ex = intercept[IllegalStateException] {
-      Forget.lmCountsAfterForget(spark, sealedStore, upto = 1L)
+      CorpusStream.lmStore(sealedStore).servedAt(spark, upto = 1L)
     }
     assert(ex.getMessage.contains("forget"),
       s"the sealed store must refuse the pinned read, got: ${ex.getMessage}")
@@ -829,11 +828,10 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val deltas = tmpDir("graft-split-maint") + "/deltas"
     val bounds = landQuartiles(d, deltas)
     StoreCompaction.registerPin(deltas, "rel2", 2L)
-    Forget.forgetSumCellsSplit(
-      d.filter(forgetPred).withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(deltas), requestId = 0L)
-    val full = lmMap(Forget.lmCountsAfterForget(spark, deltas))
-    val pinned2 = lmMap(Forget.lmCountsAfterForget(spark, deltas, upto = 2L))
+    CorpusStream.lmStore(deltas).forgetSplit(d.filter(forgetPred).withColumn("src_batch",
+      srcBatchCol(bounds)), requestId = 0L)
+    val full = lmMap(CorpusStream.lmStore(deltas).servedAt(spark))
+    val pinned2 = lmMap(CorpusStream.lmStore(deltas).servedAt(spark, upto = 2L))
 
     // maintenance folds as far as the pin allows: batches 0-2 plus the
     // split negatives for source batches 0-2 land in the base
@@ -845,9 +843,9 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     assert(leftIds.count(_ <= StoreCompaction.SplitForgetBase) === 1,
       s"only the source-batch-3 split negative may survive the fold, got $leftIds")
 
-    assert(lmMap(Forget.lmCountsAfterForget(spark, deltas)) === full,
+    assert(lmMap(CorpusStream.lmStore(deltas).servedAt(spark)) === full,
       "the full read must not move across the fold")
-    assert(lmMap(Forget.lmCountsAfterForget(spark, deltas, upto = 2L)) === pinned2,
+    assert(lmMap(CorpusStream.lmStore(deltas).servedAt(spark, upto = 2L)) === pinned2,
       "the pinned read must not move across the fold")
     // a pin below a folded SPLIT source batch is refused at registration:
     // the negative's rows are in the base now, so the slice is gone
@@ -877,17 +875,17 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(landing, "w1.parquet"))
-    val targets = ForgetTargets(lmDeltaDir = Some(lm), splitBySrcBatch = true)
+    val targets = ForgetTargets(cellStores = Seq(CorpusStream.lmStore(lm)), splitBySrcBatch = true)
     ForgetStream.forgetSink(ForgetStream.readRequestStream(spark, landing),
       content, targets, s"$root/markers", s"$root/ck").awaitTermination()
 
     // the pre-wave pin survived and serves its slice's survivor retrain
     StoreCompaction.requireServableAt(lm, 1L)
-    assert(lmMap(Forget.lmCountsAfterForget(spark, lm, upto = 1L)) ===
+    assert(lmMap(CorpusStream.lmStore(lm).servedAt(spark, upto = 1L)) ===
       lmMap(CorpusStream.lmCells(
         d.filter(col("doc_id") < bounds(1) && !forgetPred))),
       "the pinned release must serve erasure-aware survivor counts")
-    assert(lmMap(Forget.lmCountsAfterForget(spark, lm)) ===
+    assert(lmMap(CorpusStream.lmStore(lm).servedAt(spark)) ===
       lmMap(CorpusStream.lmCells(d.filter(!forgetPred))),
       "the full read must equal the survivor retrain")
 
@@ -909,10 +907,10 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // a replayed request batch is a marker-gated no-op
     def partsOf(dir: String) = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq
-    val snap = (partsOf(lm), lmMap(Forget.lmCountsAfterForget(spark, lm)))
+    val snap = (partsOf(lm), lmMap(CorpusStream.lmStore(lm).servedAt(spark)))
     ForgetStream.processBatch(d.filter(forgetPred).select("doc_id"), content,
       targets, s"$root/markers", batchId = 0L)
-    assert((partsOf(lm), lmMap(Forget.lmCountsAfterForget(spark, lm))) === snap,
+    assert((partsOf(lm), lmMap(CorpusStream.lmStore(lm).servedAt(spark))) === snap,
       "a replayed split wave must not move a single row or partition")
   }
 
@@ -925,24 +923,23 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       s"$root/stats", s"$root/chunks", s"$root/nd")
     Seq(col("doc_id") < cut, col("doc_id") >= cut).zipWithIndex.foreach {
       case (p, b) =>
-        CorpusStream.writeKAnonDelta(full.filter(p), kanon, b.toLong)
-        CorpusStream.writeDivDelta(full.filter(p), dims, stats, b.toLong)
-        CorpusStream.writeCdcDelta(full.filter(p), chunks, nd, b.toLong)
+        CorpusStream.kAnonStore(kanon).land(full.filter(p), b.toLong)
+        CellStore.land(full.filter(p), b.toLong, CorpusStream.divStores(dims, stats))
+        CellStore.land(full.filter(p), b.toLong, CorpusStream.cdcStores(chunks, nd))
     }
     val forgotten = full.filter(forgetPred).withColumn("src_batch", srcB)
-    Seq(Forget.kAnonCellTarget(kanon),
-      Forget.divDimCellTarget(dims), Forget.divStatCellTarget(stats),
-      Forget.cdcChunkCellTarget(chunks), Forget.cdcDocCellTarget(nd))
+    (CorpusStream.kAnonStore(kanon) +:
+      (CorpusStream.divStores(dims, stats) ++ CorpusStream.cdcStores(chunks, nd)))
       .foreach { t =>
-        Forget.forgetSumCellsSplit(forgotten, t, requestId = 0L)
-        assert(StoreCompaction.forgetHorizon(t.deltaDir).isEmpty,
-          s"split mode must not seal ${t.deltaDir}")
+        t.forgetSplit(forgotten, requestId = 0L)
+        assert(StoreCompaction.forgetHorizon(t.dir).isEmpty,
+          s"split mode must not seal ${t.dir}")
       }
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
     Seq(0L, Long.MaxValue).foreach { p =>
       val slice = full.filter(!forgetPred &&
         (if (p == 0L) col("doc_id") < cut else lit(true)))
-      assert(rows(Forget.kAnonCellsAfterForget(spark, kanon, upto = p)
+      assert(rows(CorpusStream.kAnonStore(kanon).servedAt(spark, upto = p)
           .orderBy("source", "lang", "len_bucket")) ===
         rows(graft.ops.TextOps.kAnonCells(slice)
           .orderBy("source", "lang", "len_bucket")),
@@ -1020,9 +1017,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val d = docs.localCheckpoint()
     val deltas = tmpDir("graft-ttl") + "/deltas"
     val bounds = landQuartiles(d, deltas)
-    Forget.forgetSumCellsSplit(
-      d.filter(forgetPred).withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(deltas), requestId = 0L)
+    CorpusStream.lmStore(deltas).forgetSplit(d.filter(forgetPred).withColumn("src_batch",
+      srcBatchCol(bounds)), requestId = 0L)
 
     val rep = StoreCompaction.expireBefore(deltas, lo = 2L)
     assert(rep.floor === 2L && !rep.droppedBase &&
@@ -1040,10 +1036,10 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     def windowRetrain(lo: Long, hi: Long) = lmMap(CorpusStream.lmCells(
       d.filter(col("doc_id") >= (if (lo == 2) bounds(1) else bounds(2)) &&
         col("doc_id") < bounds(hi.toInt) && !forgetPred)))
-    assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, deltas, lo = 2L)) ===
+    assert(lmMap(CorpusStream.lmStore(deltas).servedWindow(spark, lo = 2L)) ===
       windowRetrain(2, 3),
       "the full retained window must equal its survivor retrain")
-    assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, deltas, lo = 2L, upto = 2L)) ===
+    assert(lmMap(CorpusStream.lmStore(deltas).servedWindow(spark, lo = 2L, upto = 2L)) ===
       windowRetrain(2, 2),
       "a sub-window must equal its own survivor retrain")
 
@@ -1054,12 +1050,11 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // a later wave forgetting docs whose landings EXPIRED lands nothing
     // for them (their positives left disk) — and the serve stays exact
     val wave2 = col("doc_id") % 17 === 5
-    val landed = Forget.forgetSumCellsSplit(
-      d.filter(wave2).withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(deltas), requestId = 1L)
+    val landed = CorpusStream.lmStore(deltas).forgetSplit(d.filter(wave2).withColumn("src_batch",
+      srcBatchCol(bounds)), requestId = 1L)
     assert(landed.map(StoreCompaction.splitSourceBatch).sorted === Seq(2L, 3L),
       s"expired source batches must not re-land: $landed")
-    assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, deltas, lo = 2L)) ===
+    assert(lmMap(CorpusStream.lmStore(deltas).servedWindow(spark, lo = 2L)) ===
       lmMap(CorpusStream.lmCells(
         d.filter(col("doc_id") >= bounds(1) && !forgetPred && !wave2))),
       "the two-wave windowed serve must equal the two-wave window retrain")
@@ -1076,22 +1071,21 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     bounds.zipWithIndex.foreach { case (hi, k) =>
       val lo = if (k == 0) Long.MinValue else bounds(k - 1)
       val sl = full.filter(col("doc_id") >= lo && col("doc_id") < hi)
-      CorpusStream.writeKAnonDelta(sl, kanon, k.toLong)
-      CorpusStream.writeDivDelta(sl, dims, stats, k.toLong)
-      CorpusStream.writeCdcDelta(sl, chunks, nd, k.toLong)
+      CorpusStream.kAnonStore(kanon).land(sl, k.toLong)
+      CellStore.land(sl, k.toLong, CorpusStream.divStores(dims, stats))
+      CellStore.land(sl, k.toLong, CorpusStream.cdcStores(chunks, nd))
     }
     val forgotten = full.filter(forgetPred)
       .withColumn("src_batch", srcBatchCol(bounds))
-    val stores = Seq(Forget.kAnonCellTarget(kanon),
-      Forget.divDimCellTarget(dims), Forget.divStatCellTarget(stats),
-      Forget.cdcChunkCellTarget(chunks), Forget.cdcDocCellTarget(nd))
-    stores.foreach(t => Forget.forgetSumCellsSplit(forgotten, t, requestId = 0L))
-    stores.foreach(t => StoreCompaction.expireBefore(t.deltaDir, 2L))
+    val stores = (CorpusStream.kAnonStore(kanon) +:
+      (CorpusStream.divStores(dims, stats) ++ CorpusStream.cdcStores(chunks, nd)))
+    stores.foreach(t => t.forgetSplit(forgotten, requestId = 0L))
+    stores.foreach(t => StoreCompaction.expireBefore(t.dir, 2L))
 
     val windowSurv = full
       .filter(col("doc_id") >= bounds(1) && !forgetPred).localCheckpoint()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    assert(rows(Forget.kAnonCellsAfterForgetWindow(spark, kanon, lo = 2L)
+    assert(rows(CorpusStream.kAnonStore(kanon).servedWindow(spark, lo = 2L)
         .orderBy("source", "lang", "len_bucket")) ===
       rows(graft.ops.TextOps.kAnonCells(windowSurv)
         .orderBy("source", "lang", "len_bucket")),
@@ -1118,19 +1112,19 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     bounds.zipWithIndex.foreach { case (hi, k) =>
       val lo = if (k == 0) Long.MinValue else bounds(k - 1)
       val sl = full.filter(col("doc_id") >= lo && col("doc_id") < hi)
-      CorpusStream.writeEvalDelta(sl, evalD, k.toLong)
-      CorpusStream.writeFeatureDelta(sl, featD, k.toLong)
-      CorpusStream.writeMwDelta(sl, mwD, k.toLong)
-      graft.streaming.DriftStream.writeDelta(sl, driftD, k.toLong)
+      CorpusStream.evalStore(evalD).land(sl, k.toLong)
+      CorpusStream.featureStore(featD).land(sl, k.toLong)
+      CorpusStream.mwStore(mwD).land(sl, k.toLong)
+      DriftStream.driftStore(driftD).land(sl, k.toLong)
     }
     val forgotten = full.filter(forgetPred)
       .withColumn("src_batch", srcBatchCol(bounds))
     val targets = Seq(
-      Forget.evalCellTarget(evalD), Forget.featureCellTarget(featD),
-      Forget.mwCellTarget(mwD),
-      Forget.SumCellTarget(driftD, Seq("o"), graft.ops.Corpus.driftCells))
-    targets.foreach(t => Forget.forgetSumCellsSplit(forgotten, t, requestId = 0L))
-    targets.foreach(t => StoreCompaction.expireBefore(t.deltaDir, 2L))
+      CorpusStream.evalStore(evalD), CorpusStream.featureStore(featD),
+      CorpusStream.mwStore(mwD),
+      DriftStream.driftStore(driftD))
+    targets.foreach(t => t.forgetSplit(forgotten, requestId = 0L))
+    targets.foreach(t => StoreCompaction.expireBefore(t.dir, 2L))
     val windowSurv = full
       .filter(col("doc_id") >= bounds(1) && !forgetPred).localCheckpoint()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
@@ -1177,10 +1171,12 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
         .parquet(s"$keyedTwin/batch_id=$k")
     }
     StoreCompaction.expireBefore(keyedD, 2L)
-    assert(rows(graft.streaming.EmbeddingStream.occupancyPairWindowed(
-        spark, keyedD, 0L, 1L, lo = 2L).orderBy("cluster")) ===
-      rows(graft.streaming.EmbeddingStream.occupancyPairFromDeltas(
-        spark, keyedTwin, 0L, 1L).orderBy("cluster")),
+    assert(rows(graft.streaming.EmbeddingStream.occupancyPairWindowed(spark,
+        graft.streaming.EmbeddingStream.occupancyStore(keyedD, centroidPath = ""),
+        0L, 1L, lo = 2L).orderBy("cluster")) ===
+      rows(graft.streaming.EmbeddingStream.occupancyPairFromDeltas(spark,
+        graft.streaming.EmbeddingStream.occupancyStore(keyedTwin, centroidPath = ""),
+        0L, 1L).orderBy("cluster")),
       "occupancy pair windowed must equal the survivor-twin statistic")
     val (dkD, dkTwin) = (s"$root/driftkeyed", s"$root/driftkeyed_twin")
     (0 until 4).foreach { k =>
@@ -1188,8 +1184,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
         col("doc_id") >= (if (k == 0) Long.MinValue else bounds(k - 1)) &&
           col("doc_id") < bounds(k))
         .withColumn("snapshot_id", col("doc_id") % 2)
-      graft.streaming.DriftStream.writeSnapshotDelta(sl, dkD, k.toLong)
-      if (k >= 2) graft.streaming.DriftStream.writeSnapshotDelta(sl, dkTwin, k.toLong)
+      DriftStream.snapshotStore(dkD).land(sl, k.toLong)
+      if (k >= 2) DriftStream.snapshotStore(dkTwin).land(sl, k.toLong)
     }
     StoreCompaction.expireBefore(dkD, 2L)
     assert(rows(graft.streaming.DriftStream.pairDriftWindowed(
@@ -1278,8 +1274,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val spanD = s"$root/span"
     bounds.zipWithIndex.foreach { case (hi, k) =>
       val lo = if (k == 0) Long.MinValue else bounds(k - 1)
-      CorpusStream.writeSpanDelta(
-        full.filter(col("doc_id") >= lo && col("doc_id") < hi), spanD, k.toLong)
+      CorpusStream.spanStore(spanD).land(full.filter(col("doc_id") >= lo && col("doc_id") < hi),
+        k.toLong)
     }
     StoreCompaction.expireBefore(spanD, 2L)
     assert(rows(CorpusStream.spanScrubWindowed(spark, spanD,
@@ -1290,8 +1286,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
           full.filter(col("doc_id") >= bounds(1))))),
       "span windowed must equal the retained-window recompute")
     val spanF = s"$root/spanf"
-    CorpusStream.writeSpanDelta(full.filter(col("doc_id") < bounds(0)), spanF, 0L)
-    CorpusStream.writeSpanDelta(full.filter(col("doc_id") >= bounds(0)), spanF, 1L)
+    CorpusStream.spanStore(spanF).land(full.filter(col("doc_id") < bounds(0)), 0L)
+    CorpusStream.spanStore(spanF).land(full.filter(col("doc_id") >= bounds(0)), 1L)
     Forget.forgetSpanCells(spark, spanF, full.filter(forgetPred),
       survivors, correctiveId = 2L)
     assert(intercept[IllegalStateException] {
@@ -1370,9 +1366,9 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     bounds.zipWithIndex.foreach { case (hi, k) =>
       val lo = if (k == 0) Long.MinValue else bounds(k - 1)
       val sl = d.filter(col("doc_id") >= lo && col("doc_id") < hi)
-      ShardStream.writeDelta(sl, shardD, k.toLong)
-      OrderStream.writeDelta(sl, currD, k.toLong)
-      OrderStream.writeMassDelta(sl, massD, k.toLong)
+      ShardStream.manifestStore(shardD).land(sl, k.toLong)
+      OrderStream.curriculumStore(currD).land(sl, k.toLong)
+      OrderStream.massStore(massD).land(sl, k.toLong)
     }
     Seq(shardD, currD, massD).foreach(StoreCompaction.expireBefore(_, 2L))
     val winDocs = d.filter(col("doc_id") >= bounds(1)).localCheckpoint()
@@ -1479,11 +1475,10 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val d = docs.localCheckpoint()
     val deltas = tmpDir("graft-epoch") + "/deltas"
     val bounds = landQuartiles(d, deltas) // 4 landings; epoch size 2 → 2 epochs
-    Forget.forgetSumCellsSplit(
-      d.filter(forgetPred).withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(deltas), requestId = 0L)
+    CorpusStream.lmStore(deltas).forgetSplit(d.filter(forgetPred).withColumn("src_batch",
+      srcBatchCol(bounds)), requestId = 0L)
     def win(lo: Long, hi: Long = Long.MaxValue) =
-      lmMap(Forget.lmCountsAfterForgetWindow(spark, deltas, lo, hi))
+      lmMap(CorpusStream.lmStore(deltas).servedWindow(spark, lo, hi))
     val (w01, w0m, w2m) = (win(0, 1), win(0), win(2))
 
     // fold ONLY the complete epoch 0 (batches 0-1 + split negatives for
@@ -1504,7 +1499,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     assert(intercept[IllegalStateException](win(1, 3))
       .getMessage.contains("partially"), "mid-epoch windows must refuse")
     assert(intercept[IllegalStateException] {
-      Forget.lmCountsAfterForget(spark, deltas, upto = 3L)
+      CorpusStream.lmStore(deltas).servedAt(spark, upto = 3L)
     }.getMessage.contains("epoch-folded"), "pinned reads must refuse")
 
     // fold epoch 1, expire epoch 0 — ONE directory drop
@@ -1521,9 +1516,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // a later split wave on the epoch-folded store lands beside the
     // epoch partitions and windows correctly
     val wave2 = col("doc_id") % 17 === 5
-    Forget.forgetSumCellsSplit(
-      d.filter(wave2).withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(deltas), requestId = 1L)
+    CorpusStream.lmStore(deltas).forgetSplit(d.filter(wave2).withColumn("src_batch",
+      srcBatchCol(bounds)), requestId = 1L)
     assert(win(2) === lmMap(CorpusStream.lmCells(
         d.filter(col("doc_id") >= bounds(1) && !forgetPred && !wave2))),
       "the windowed serve must equal the retained-epoch two-wave retrain")
@@ -1555,14 +1549,14 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val repE = StoreCompaction.expireBefore(epoch, 2L)
     assert(repE.droppedBase && StoreCompaction.compactionHorizon(epoch).isEmpty,
       s"a base entirely below the floor must drop whole: $repE")
-    assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, epoch, lo = 2L)) ===
+    assert(lmMap(CorpusStream.lmStore(epoch).servedWindow(spark, lo = 2L)) ===
       lmMap(CorpusStream.lmCells(d.filter(col("doc_id") >= bounds(1)))),
       "after the epoch drop the window must serve its retrain")
 
     // whole-wave negatives cannot expire per-batch
     val waved = tmpDir("graft-ttl-wave") + "/deltas"
     landQuartiles(d, waved)
-    Forget.forgetLmDocs(d.filter(forgetPred), waved, -1000L)
+    CorpusStream.lmStore(waved).forget(d.filter(forgetPred), -1000L)
     val exWave = intercept[IllegalStateException] {
       StoreCompaction.expireBefore(waved, 2L)
     }
@@ -1571,9 +1565,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // an unstamped (in-flight) split negative blocks expiry
     val inflight = tmpDir("graft-ttl-inflight") + "/deltas"
     val b2 = landQuartiles(d, inflight)
-    Forget.forgetSumCellsSplit(
-      d.filter(forgetPred).withColumn("src_batch", srcBatchCol(b2)),
-      Forget.lmCellTarget(inflight), requestId = 0L, stamp = false)
+    CorpusStream.lmStore(inflight).forgetSplit(d.filter(forgetPred).withColumn("src_batch",
+      srcBatchCol(b2)), requestId = 0L, stamp = false)
     val exFlight = intercept[IllegalStateException] {
       StoreCompaction.expireBefore(inflight, 2L)
     }
@@ -1584,7 +1577,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     landQuartiles(d, ttl)
     StoreCompaction.expireBefore(ttl, 2L)
     assert(intercept[IllegalStateException] {
-      Forget.lmCountsAfterForget(spark, ttl, upto = 3L)
+      CorpusStream.lmStore(ttl).servedAt(spark, upto = 3L)
     }.getMessage.contains("retention"))
     assert(intercept[IllegalStateException] {
       StoreCompaction.registerPin(ttl, "late", 3L)
@@ -1612,10 +1605,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // epoch 0 is cleanly foldable, so only whole-pass pre-validation —
     // not the per-epoch check the fold loop used to run — can stop
     // epoch 0 from folding before the refusal
-    Forget.forgetSumCellsSplit(
-      d.filter(forgetPred && col("doc_id") >= bounds(1))
-        .withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(pre), requestId = 0L, stamp = false)
+    CorpusStream.lmStore(pre).forgetSplit(d.filter(forgetPred && col("doc_id") >= bounds(1))
+        .withColumn("src_batch", srcBatchCol(bounds)), requestId = 0L, stamp = false)
     val exPre = intercept[IllegalStateException] {
       StoreCompaction.foldEpochs(spark, pre, epochSize = 2L, uptoBatch = 3L)
     }
@@ -1650,14 +1641,14 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     graft.streaming.ForgetStream.processBatch(
       d.filter(forgetPred).select("doc_id"), content,
       graft.streaming.ForgetStream.ForgetTargets(
-        sumCellStores = Seq(Forget.lmCellTarget(ep)), splitBySrcBatch = true),
+        cellStores = Seq(CorpusStream.lmStore(ep)), splitBySrcBatch = true),
       markers, batchId = 0L)
     val negIds = batchIdsOf(ep).filter(id =>
       id <= StoreCompaction.SplitForgetBase && id > StoreCompaction.EpochFoldBase)
     assert(negIds.nonEmpty && negIds.forall(id =>
       new java.io.File(s"$ep/batch_id=$id/_FORGET_COMMITTED").exists()),
       s"the wave's negatives must land AND stamp on an epoch store: $negIds")
-    assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, ep, lo = 0L)) ===
+    assert(lmMap(CorpusStream.lmStore(ep).servedWindow(spark, lo = 0L)) ===
       lmMap(CorpusStream.lmCells(d.filter(!forgetPred))),
       "the full-window serve must equal the survivor retrain across the fold")
 
@@ -1680,10 +1671,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
 
     // an UNSTAMPED wave against epoch 0 holds the banding back — maintain
     // must skip the epoch (not throw, not fold) and keep running
-    Forget.forgetSumCellsSplit(
-      d.filter(forgetPred && col("doc_id") < bounds(1))
-        .withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(deltas), requestId = 0L, stamp = false)
+    CorpusStream.lmStore(deltas).forgetSplit(d.filter(forgetPred && col("doc_id") < bounds(1))
+        .withColumn("src_batch", srcBatchCol(bounds)), requestId = 0L, stamp = false)
     val r1 = StoreCompaction.maintain(spark, deltas, Seq("w1", "w2"), pol)
     assert(r1.epochsFolded === 0L && r1.minorUpto.isEmpty,
       s"an in-flight negative must hold its epoch raw (and no whole-base " +
@@ -1703,7 +1692,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val r2 = StoreCompaction.maintain(spark, deltas, Seq("w1", "w2"), pol)
     assert(r2.epochsFolded === 1L, s"epoch 0 must band once stamped: $r2")
     assert(StoreCompaction.epochSizeOf(deltas) === Some(2L))
-    assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, deltas, lo = 0L)) ===
+    assert(lmMap(CorpusStream.lmStore(deltas).servedWindow(spark, lo = 0L)) ===
       lmMap(CorpusStream.lmCells(d.filter(
         !(forgetPred && col("doc_id") < bounds(1))))),
       "the full-window serve must equal the survivor retrain after banding")
@@ -1715,8 +1704,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
 
     // a store already epoch-folded keeps banding at its MARKER size even
     // when the policy leaves epochSize unset
-    CorpusStream.writeLmDelta(d.limit(0), deltas, 4L)
-    CorpusStream.writeLmDelta(d.limit(0), deltas, 5L)
+    CorpusStream.lmStore(deltas).land(d.limit(0), 4L)
+    CorpusStream.lmStore(deltas).land(d.limit(0), 5L)
     val r4 = StoreCompaction.maintain(spark, deltas, Seq("w1", "w2"),
       StoreCompaction.MaintenancePolicy(keepLatestDeltas = 1))
     assert(r4.epochsFolded === 1L && r4.minorUpto.isEmpty,
@@ -1858,9 +1847,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val d = docs.localCheckpoint()
     val deltas = tmpDir("graft-cert-files") + "/deltas"
     val bounds = landQuartiles(d, deltas)
-    Forget.forgetSumCellsSplit(
-      d.filter(forgetPred).withColumn("src_batch", srcBatchCol(bounds)),
-      Forget.lmCellTarget(deltas), requestId = 0L)
+    CorpusStream.lmStore(deltas).forgetSplit(d.filter(forgetPred).withColumn("src_batch",
+      srcBatchCol(bounds)), requestId = 0L)
     val audit = tmpDir("graft-cert-files-audit")
     def dataFilesIn(dir: String): Long =
       Option(new java.io.File(dir).listFiles()).toSeq.flatten
@@ -1895,7 +1883,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     assert(batchIdsOf(deltas).contains(1L),
       "the straddling epoch's surviving batch must stay a raw partition")
     // the survivors stay servable: window [1, ∞) = raw batch 1 + epoch 1
-    val served = lmMap(Forget.lmCountsAfterForgetWindow(spark, deltas, lo = 1L))
+    val served = lmMap(CorpusStream.lmStore(deltas).servedWindow(spark, lo = 1L))
     val retrained = lmMap(CorpusStream.lmCells(
       d.filter(col("doc_id") >= bounds(0))))
     assert(served === retrained,
@@ -1905,7 +1893,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     StoreCompaction.expireBefore(deltas, 2L)
     assert(StoreCompaction.foldEpochs(spark, deltas, 2L, uptoBatch = 3L)
       .isEmpty, "nothing new to band after the aligned expiry")
-    assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, deltas, lo = 2L)) ===
+    assert(lmMap(CorpusStream.lmStore(deltas).servedWindow(spark, lo = 2L)) ===
       lmMap(CorpusStream.lmCells(d.filter(col("doc_id") >= bounds(1)))))
   }
 
@@ -2031,19 +2019,19 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       if (k >= 6) Long.MaxValue else ids(k * ids.length / 6)
     def slice(k: Int) = d.filter(col("doc_id") >= (if (k == 0) Long.MinValue
       else bound(k)) && col("doc_id") < bound(k + 1))
-    (0 until 6).foreach(k => CorpusStream.writeLmDelta(slice(k), store, k.toLong))
+    (0 until 6).foreach(k => CorpusStream.lmStore(store).land(slice(k), k.toLong))
     StoreCompaction.declareReplayDepth(store, 3)
     val rep = StoreCompaction.maintain(spark, store, Seq("w1", "w2"),
       StoreCompaction.MaintenancePolicy(minorAtDeltas = 1, keepLatestDeltas = 1))
     assert(rep.minorUpto === Some(2L) &&
       StoreCompaction.compactionHorizon(store) === Some(2L),
       s"the declared depth must floor the margin at 3 landings: $rep")
-    CorpusStream.writeLmDelta(slice(3), store, 3L) // inside the floor: lands
+    CorpusStream.lmStore(store).land(slice(3), 3L) // inside the floor: lands
     assert(intercept[IllegalStateException] {
-      CorpusStream.writeLmDelta(slice(2), store, 2L)
+      CorpusStream.lmStore(store).land(slice(2), 2L)
     }.getMessage.contains("keepLatestDeltas"),
       "a replay below the floored margin must still refuse")
-    assert(lmMap(CorpusStream.lmCountsFromDeltas(spark, store)) ===
+    assert(lmMap(CorpusStream.lmStore(store).servedAt(spark)) ===
       lmMap(CorpusStream.lmCells(d)),
       "serving must equal the full retrain through the floored fold")
 
@@ -2114,47 +2102,45 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       3 * w -> Long.MaxValue)
     def landAll(deltas: String): Unit =
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), deltas, k.toLong)
+        CorpusStream.lmStore(deltas).land(d.filter(col("doc_id") >= lo && col("doc_id") < hi),
+          k.toLong)
       }
 
     // ── amend ≡ forget(old batch) + land(corrected) on a SUM-cell store ──
     val sA = tmpDir("graft-amend-a") + "/deltas"
     landAll(sA)
-    Amend.amendSumCells(Forget.lmCellTarget(sA), b, 1L)
+    Amend.amendSumCells(CorpusStream.lmStore(sA), b, 1L)
     val sB = tmpDir("graft-amend-b") + "/deltas"
     landAll(sB)
-    Forget.forgetSumCellsSplit(
-      d.filter(col("doc_id") >= w && col("doc_id") < 2 * w)
-        .withColumn("src_batch", lit(1L)),
-      Forget.lmCellTarget(sB), requestId = 0L)
-    CorpusStream.writeLmDelta(b, sB, 4L)
+    CorpusStream.lmStore(sB).forgetSplit(d.filter(col("doc_id") >= w && col("doc_id") < 2 * w)
+        .withColumn("src_batch", lit(1L)), requestId = 0L)
+    CorpusStream.lmStore(sB).land(b, 4L)
     val retrain = lmMap(CorpusStream.lmCells(c))
-    assert(lmMap(Forget.lmCountsAfterForget(spark, sA)) === retrain &&
-      lmMap(Forget.lmCountsAfterForget(spark, sB)) === retrain,
+    assert(lmMap(CorpusStream.lmStore(sA).servedAt(spark)) === retrain &&
+      lmMap(CorpusStream.lmStore(sB).servedAt(spark)) === retrain,
       "amend and forget+land must both equal the corrected-corpus retrain")
 
     // replay of the amendment is a no-op (identical cells, serving fixed)
-    Amend.amendSumCells(Forget.lmCellTarget(sA), b, 1L)
-    assert(lmMap(Forget.lmCountsAfterForget(spark, sA)) === retrain,
+    Amend.amendSumCells(CorpusStream.lmStore(sA), b, 1L)
+    assert(lmMap(CorpusStream.lmStore(sA).servedAt(spark)) === retrain,
       "a replayed amendment must rewrite identical state")
 
     // the fold algebra serves the corrected slice EVERYWHERE the batch
     // qualifies: a pinned read at the amended batch equals the corrected
     // corpus's prefix retrain, and after the batches below it expire the
     // windowed serve equals the corrected window retrain
-    assert(lmMap(Forget.lmCountsAfterForget(spark, sA, upto = 1L)) ===
+    assert(lmMap(CorpusStream.lmStore(sA).servedAt(spark, upto = 1L)) ===
       lmMap(CorpusStream.lmCells(c.filter(col("doc_id") < 2 * w))),
       "a pinned read covering the amendment must serve the corrected slice")
     StoreCompaction.expireBefore(sA, 1L)
-    assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, sA, lo = 1L)) ===
+    assert(lmMap(CorpusStream.lmStore(sA).servedWindow(spark, lo = 1L)) ===
       lmMap(CorpusStream.lmCells(c.filter(col("doc_id") >= w))),
       "the corrected landing must window on its original age")
 
     // ── refusal shapes ──
     // split negatives at the amended source batch: stale negation
     val exSplit = intercept[IllegalStateException] {
-      Amend.amendSumCells(Forget.lmCellTarget(sB), b, 1L)
+      Amend.amendSumCells(CorpusStream.lmStore(sB), b, 1L)
     }
     assert(exSplit.getMessage.contains("split-forget"), exSplit.getMessage)
     // an expired landing cannot be amended
@@ -2162,7 +2148,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     landAll(sC)
     StoreCompaction.expireBefore(sC, 2L)
     val exExp = intercept[IllegalStateException] {
-      Amend.amendSumCells(Forget.lmCellTarget(sC), b, 1L)
+      Amend.amendSumCells(CorpusStream.lmStore(sC), b, 1L)
     }
     assert(exExp.getMessage.contains("retention"), exExp.getMessage)
     // an epoch-folded landing lost its partition
@@ -2170,7 +2156,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     landAll(sD)
     StoreCompaction.foldEpochs(spark, sD, epochSize = 2L, uptoBatch = 1L)
     val exEp = intercept[IllegalStateException] {
-      Amend.amendSumCells(Forget.lmCellTarget(sD), b, 1L)
+      Amend.amendSumCells(CorpusStream.lmStore(sD), b, 1L)
     }
     assert(exEp.getMessage.contains("epoch"), exEp.getMessage)
 
@@ -2503,8 +2489,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       3 * w -> Long.MaxValue)
     def land4(store: String): Unit =
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        CorpusStream.writeLmDelta(
-          d.filter(col("doc_id") >= lo && col("doc_id") < hi), store, k.toLong)
+        CorpusStream.lmStore(store).land(d.filter(col("doc_id") >= lo && col("doc_id") < hi),
+          k.toLong)
       }
 
     // ── band-then-amend ≡ amend-then-band ≡ corrected retrain ──
@@ -2513,14 +2499,14 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     land4(sA)
     assert(StoreCompaction.foldEpochs(spark, sA, 2L, uptoBatch = 3L) ===
       Seq(0L, 1L), "both epochs must band, sources archived")
-    Amend.amendSumCells(Forget.lmCellTarget(sA), b, 1L) // re-band path
+    Amend.amendSumCells(CorpusStream.lmStore(sA), b, 1L) // re-band path
     val sB = tmpDir("graft-reband-b") + "/deltas"
     StoreCompaction.declarePrefoldKeep(sB)
     land4(sB)
-    Amend.amendSumCells(Forget.lmCellTarget(sB), b, 1L) // raw overwrite path
+    Amend.amendSumCells(CorpusStream.lmStore(sB), b, 1L) // raw overwrite path
     StoreCompaction.foldEpochs(spark, sB, 2L, uptoBatch = 3L)
     def served(store: String) =
-      lmMap(CorpusStream.lmCountsWindowed(spark, store, lo = 0L))
+      lmMap(CorpusStream.lmStore(store).servedWindow(spark, lo = 0L))
     assert(served(sA) === served(sB),
       "band-then-amend and amend-then-band must serve identical counts")
     assert(served(sA) === lmMap(CorpusStream.lmCells(c)),
@@ -2530,7 +2516,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // same folded epoch (batch 0 this time) re-bands again
     val batch0 = d.filter(col("doc_id") < w)
       .withColumn("text", expr("replace(text, 'e', 'x')")).localCheckpoint()
-    Amend.amendSumCells(Forget.lmCellTarget(sA), batch0, 0L)
+    Amend.amendSumCells(CorpusStream.lmStore(sA), batch0, 0L)
     val corpus2 = c.filter(col("doc_id") >= w).unionByName(batch0)
     assert(served(sA) === lmMap(CorpusStream.lmCells(corpus2)),
       "a second re-band of the same epoch must serve the twice-corrected retrain")
@@ -2540,12 +2526,12 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     land4(sC)
     StoreCompaction.foldEpochs(spark, sC, 2L, uptoBatch = 3L)
     assert(intercept[IllegalStateException] {
-      Amend.amendSumCells(Forget.lmCellTarget(sC), b, 1L)
+      Amend.amendSumCells(CorpusStream.lmStore(sC), b, 1L)
     }.getMessage.contains("declarePrefoldKeep"),
       "a non-opted folded epoch must refuse and name the opt-in")
     StoreCompaction.declarePrefoldKeep(sC) // too late: epochs folded without archive
     assert(intercept[IllegalStateException] {
-      Amend.amendSumCells(Forget.lmCellTarget(sC), b, 1L)
+      Amend.amendSumCells(CorpusStream.lmStore(sC), b, 1L)
     }.getMessage.contains("without its pre-fold deltas"),
       "opting in after the fold must refuse — the archive is incomplete")
 
@@ -2585,7 +2571,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       s"the certificate must record the archive drop: ${cert.toSeq}")
     // the dropped epoch can no longer re-band (manifest expired with it)
     assert(intercept[IllegalStateException] {
-      Amend.amendSumCells(Forget.lmCellTarget(sA), b, 1L)
+      Amend.amendSumCells(CorpusStream.lmStore(sA), b, 1L)
     }.getMessage.contains("retention expired"),
       "an expired landing stays unamendable through the re-band path too")
   }
@@ -2596,8 +2582,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val store = tmpDir("graft-amend-certcrash") + "/deltas"
     val ids = d.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val cut = ids(ids.length / 2)
-    CorpusStream.writeLmDelta(d.filter(col("doc_id") < cut), store, 0L)
-    CorpusStream.writeLmDelta(d.filter(col("doc_id") >= cut), store, 1L)
+    CorpusStream.lmStore(store).land(d.filter(col("doc_id") < cut), 0L)
+    CorpusStream.lmStore(store).land(d.filter(col("doc_id") >= cut), 1L)
     // simulate the crash: the certificate DIRECTORY exists (with write
     // debris) but the write never committed — no _SUCCESS. A bare
     // dir.exists() first-writer-wins would skip the rewrite forever and
@@ -2607,7 +2593,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     new java.io.File(crashed, "_temporary").mkdirs()
     val corrected = d.filter(col("doc_id") >= cut)
       .withColumn("text", expr("replace(text, 'e', 'a')")).localCheckpoint()
-    Amend.amendSumCells(Forget.lmCellTarget(store), corrected, 1L,
+    Amend.amendSumCells(CorpusStream.lmStore(store), corrected, 1L,
       audit = Some((audit, "lm")))
     val cert = Amend.amendmentCertificate(spark, audit)
       .filter(col("store") === "lm" && col("amend") === 1L)
@@ -2620,7 +2606,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val mtime = crashed.listFiles().filter(_.getName.endsWith(".parquet"))
       .map(_.lastModified()).max
     Thread.sleep(1100)
-    Amend.amendSumCells(Forget.lmCellTarget(store), corrected, 1L,
+    Amend.amendSumCells(CorpusStream.lmStore(store), corrected, 1L,
       audit = Some((audit, "lm")))
     val mtime2 = crashed.listFiles().filter(_.getName.endsWith(".parquet"))
       .map(_.lastModified()).max
@@ -2658,7 +2644,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     def corrected(k: Long) =
       slice(k).withColumn("text", expr("replace(text, 'e', 'a')"))
     (0 until 8).foreach(k =>
-      CorpusStream.writeLmDelta(slice(k.toLong), store, k.toLong))
+      CorpusStream.lmStore(store).land(slice(k.toLong), k.toLong))
     StoreCompaction.declarePrefoldKeep(store)
     StoreCompaction.declareAmendHorizon(store, 4L)
     StoreCompaction.foldEpochs(spark, store, 2L, uptoBatch = 7L)
@@ -2675,22 +2661,22 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       "a second retirement pass must be a no-op")
 
     // an in-horizon banded landing still amends through the re-band path
-    Amend.amendSumCells(Forget.lmCellTarget(store), corrected(2L), 2L)
+    Amend.amendSumCells(CorpusStream.lmStore(store), corrected(2L), 2L)
     val expect = lmMap(CorpusStream.lmCells(
       d.filter(pmod(col("doc_id"), lit(8L)) =!= 2L).unionByName(corrected(2L))))
-    assert(lmMap(CorpusStream.lmCountsWindowed(spark, store, lo = 0L)) === expect,
+    assert(lmMap(CorpusStream.lmStore(store).servedWindow(spark, lo = 0L)) === expect,
       "the in-horizon re-band must serve the corrected retrain")
 
     // the retired epoch refuses with the horizon named
     assert(intercept[IllegalStateException] {
-      Amend.amendSumCells(Forget.lmCellTarget(store), corrected(0L), 0L)
+      Amend.amendSumCells(CorpusStream.lmStore(store), corrected(0L), 0L)
     }.getMessage.contains("amend horizon"),
       "a correction beyond the retired window must refuse naming the horizon")
 
     // maintenance runs retirement on its own cadence: two more landings
     // move the frontier to 9 (cut 5), so epoch 1 (newest batch 3) retires
-    CorpusStream.writeLmDelta(slice(0L), store, 8L)
-    CorpusStream.writeLmDelta(slice(1L), store, 9L)
+    CorpusStream.lmStore(store).land(slice(0L), 8L)
+    CorpusStream.lmStore(store).land(slice(1L), 9L)
     val rep = StoreCompaction.maintain(spark, store, Seq("w1"))
     assert(rep.archivesRetired === 1L,
       s"maintain must retire epoch 1's archive at the new frontier: $rep")
@@ -2761,8 +2747,8 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
       3 * w -> Long.MaxValue)
     def land4(store: String, src: org.apache.spark.sql.DataFrame): Unit =
       bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-        CorpusStream.writeLmDelta(
-          src.filter(col("doc_id") >= lo && col("doc_id") < hi), store, k.toLong)
+        CorpusStream.lmStore(store).land(src.filter(col("doc_id") >= lo && col("doc_id") < hi),
+          k.toLong)
       }
     // forgotten docs span batches 0 AND 1 — batch 1 is the landing the
     // correction targets, so an unfiltered amendment would resurrect its
@@ -2792,19 +2778,19 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     val fm = tmpDir("graft-commute-fmark")
     ForgetStream.processBatch(fIds,
       d.withColumn("src_batch", srcB.cast("long")),
-      ForgetStream.ForgetTargets(sumCellStores =
-        Seq(Forget.lmCellTarget(sX)), splitBySrcBatch = true), fm, 0L)
+      ForgetStream.ForgetTargets(cellStores =
+        Seq(CorpusStream.lmStore(sX)), splitBySrcBatch = true), fm, 0L)
     assert(negIdsOf(sX).map(StoreCompaction.splitSourceBatch).toSet ===
       Set(0L, 1L), "the wave must land negatives sourced at both batches")
     // the direct API keeps the refusal — no erasure guarantee there
     assert(intercept[IllegalStateException] {
-      Amend.amendSumCells(Forget.lmCellTarget(sX), b, 1L)
+      Amend.amendSumCells(CorpusStream.lmStore(sX), b, 1L)
     }.getMessage.contains("split-forget negative"),
       "a direct amendment against sourced negatives must still refuse")
     val reqDir = tmpDir("graft-commute-req")
     fIds.coalesce(1).write.mode("overwrite").parquet(reqDir)
     val targetsX = Amend.AmendTargets(
-      sumCellStores = Seq("lm" -> Forget.lmCellTarget(sX)),
+      cellStores = Seq(CorpusStream.lmStore(sX)),
       forgetRequestDirs = Seq(reqDir))
     val amReq = b.select(lit(1L).as("amend_batch"), col("doc_id"),
       col("text"), col("source")).localCheckpoint()
@@ -2812,7 +2798,7 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     Amend.processAmendBatch(amReq, targetsX, am, 0L, Some(audit))
     val expect = lmMap(CorpusStream.lmCells(
       c.join(fIds, Seq("doc_id"), "left_anti")))
-    assert(lmMap(Forget.lmCountsAfterForget(spark, sX)) === expect,
+    assert(lmMap(CorpusStream.lmStore(sX).servedAt(spark)) === expect,
       "forget-then-amend must serve the corrected retrain minus the wave")
     val negsAfter = negIdsOf(sX).map(StoreCompaction.splitSourceBatch).toSet
     assert(negsAfter === Set(0L),
@@ -2833,13 +2819,13 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
 
     // replay: marker skips, nothing moves
     Amend.processAmendBatch(amReq, targetsX, am, 0L, Some(audit))
-    assert(lmMap(Forget.lmCountsAfterForget(spark, sX)) === expect)
+    assert(lmMap(CorpusStream.lmStore(sX).servedAt(spark)) === expect)
 
     // ── store Y: amendment FIRST, then the forget wave — commutes ──
     val sY = tmpDir("graft-commute-y") + "/deltas"
     land4(sY, d)
     Amend.processAmendBatch(amReq,
-      Amend.AmendTargets(sumCellStores = Seq("lm" -> Forget.lmCellTarget(sY)),
+      Amend.AmendTargets(cellStores = Seq(CorpusStream.lmStore(sY)),
         forgetRequestDirs = Seq(tmpDir("graft-commute-noreq"))),
       tmpDir("graft-commute-amark2"), 0L, None)
     // the erasure wave now negates the CORRECTED content (the content
@@ -2847,10 +2833,10 @@ class ForgetSpec extends AnyFunSuite with TempDirs {
     // stores-first)
     ForgetStream.processBatch(fIds,
       c.withColumn("src_batch", srcB.cast("long")),
-      ForgetStream.ForgetTargets(sumCellStores =
-        Seq(Forget.lmCellTarget(sY)), splitBySrcBatch = true),
+      ForgetStream.ForgetTargets(cellStores =
+        Seq(CorpusStream.lmStore(sY)), splitBySrcBatch = true),
       tmpDir("graft-commute-fmark2"), 0L)
-    assert(lmMap(Forget.lmCountsAfterForget(spark, sY)) === expect,
+    assert(lmMap(CorpusStream.lmStore(sY).servedAt(spark)) === expect,
       "amend-then-forget must serve the same counts — the operations commute")
   }
 }

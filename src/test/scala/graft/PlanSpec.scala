@@ -790,8 +790,9 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     assert(!p213.linesIterator.exists(l =>
         l.contains("ReadSchema") && l.contains("embedding:")),
       s"q213 must serve off occupancy cells, never raw vectors:\n$p213")
-    val (occDeltas, _) = graft.ops.ForgetOps.buildOccForgetStore(spark, sf)
-    val pOcc = graft.streaming.Forget.occupancyAfterForget(spark, occDeltas, 0L, "na")
+    val (occDeltas, occCents) = graft.ops.ForgetOps.buildOccForgetStore(spark, sf)
+    val pOcc = graft.streaming.EmbeddingStream.occupancyForSnapshot(spark,
+      graft.streaming.EmbeddingStream.occupancyStore(occDeltas, occCents), 0L, "na")
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     assert(pOcc.contains("graft_occ_forget"),
       s"the occupancy serve must read the forget-mutated cell store:\n$pOcc")

@@ -48,17 +48,17 @@ class SoakSpec extends AnyFunSuite with TempDirs {
       forgotten.foldLeft(base)((d, p) => d.filter(!p))
     }
     def checkUnpinned(step: String): Unit =
-      assert(lmMap(Forget.lmCountsAfterForget(spark, store)) ===
+      assert(lmMap(CorpusStream.lmStore(store).servedAt(spark)) ===
         lmMap(CorpusStream.lmCells(corpusOf(landedUpto))),
         s"[$step] unpinned serving must equal the logical-corpus retrain")
     def checkPinned(step: String, pinBatch: Int): Unit =
-      assert(lmMap(Forget.lmCountsAfterForget(spark, store, upto = pinBatch.toLong)) ===
+      assert(lmMap(CorpusStream.lmStore(store).servedAt(spark, upto = pinBatch.toLong)) ===
         lmMap(CorpusStream.lmCells(corpusOf(pinBatch))),
         s"[$step] pinned($pinBatch) serving must equal the pinned logical corpus " +
           "minus every forget so far (erasure is retroactive by law)")
 
     def land(k: Int): Unit = {
-      CorpusStream.writeLmDelta(slice(k), store, k.toLong)
+      CorpusStream.lmStore(store).land(slice(k), k.toLong)
       landedUpto = k
     }
     def maintainPass(): Unit = {
@@ -72,7 +72,7 @@ class SoakSpec extends AnyFunSuite with TempDirs {
       val wavePred = pred && col("doc_id") < sliceBound(landedUpto + 1)
       ForgetStream.processBatch(
         docs.filter(wavePred).select("doc_id"), docs,
-        ForgetStream.ForgetTargets(lmDeltaDir = Some(store)),
+        ForgetStream.ForgetTargets(cellStores = Seq(CorpusStream.lmStore(store))),
         markers, batchId)
       forgotten = forgotten :+ wavePred
     }
@@ -108,7 +108,7 @@ class SoakSpec extends AnyFunSuite with TempDirs {
     // forget horizon seals history and the pinned read refuses loudly
     // instead of serving counts wrong in either legal direction.
     val exStale = intercept[IllegalStateException] {
-      Forget.lmCountsAfterForget(spark, store, upto = 4L).collect()
+      CorpusStream.lmStore(store).servedAt(spark, upto = 4L).collect()
     }
     assert(exStale.getMessage.contains("forget"),
       s"a pin below the forget frontier must refuse, got: ${exStale.getMessage}")
@@ -135,11 +135,11 @@ class SoakSpec extends AnyFunSuite with TempDirs {
 
     // a replayed forget wave (same batchId) through the full history is
     // still a marker-gated no-op
-    val before = lmMap(Forget.lmCountsAfterForget(spark, store))
+    val before = lmMap(CorpusStream.lmStore(store).servedAt(spark))
     ForgetStream.processBatch(
       docs.filter(pmod(col("doc_id"), lit(17L)) === lit(5L)).select("doc_id"),
-      docs, ForgetStream.ForgetTargets(lmDeltaDir = Some(store)), markers, 1L)
-    assert(lmMap(Forget.lmCountsAfterForget(spark, store)) === before,
+      docs, ForgetStream.ForgetTargets(cellStores = Seq(CorpusStream.lmStore(store))), markers, 1L)
+    assert(lmMap(CorpusStream.lmStore(store).servedAt(spark)) === before,
       "a replayed wave must not move a single count")
   }
 
@@ -164,7 +164,7 @@ class SoakSpec extends AnyFunSuite with TempDirs {
     val policy = StoreCompaction.MaintenancePolicy(
       minorAtDeltas = 2, keepLatestDeltas = 1, maxFilesPerBucket = 2, nBuckets = 4)
     val targets = ForgetStream.ForgetTargets(
-      lmDeltaDir = Some(store), splitBySrcBatch = true)
+      cellStores = Seq(CorpusStream.lmStore(store)), splitBySrcBatch = true)
 
     var landedUpto = -1
     var forgotten: Seq[org.apache.spark.sql.Column] = Nil
@@ -173,7 +173,7 @@ class SoakSpec extends AnyFunSuite with TempDirs {
       forgotten.foldLeft(base)((d, p) => d.filter(!p))
     }
     def land(k: Int): Unit = {
-      CorpusStream.writeLmDelta(slice(k), store, k.toLong); landedUpto = k
+      CorpusStream.lmStore(store).land(slice(k), k.toLong); landedUpto = k
     }
     def waveSplit(batchId: Long, pred: org.apache.spark.sql.Column): Unit = {
       val wavePred = pred && col("doc_id") < sliceBound(landedUpto + 1)
@@ -183,11 +183,11 @@ class SoakSpec extends AnyFunSuite with TempDirs {
       forgotten = forgotten :+ wavePred
     }
     def check(step: String): Unit = {
-      assert(lmMap(Forget.lmCountsAfterForget(spark, store)) ===
+      assert(lmMap(CorpusStream.lmStore(store).servedAt(spark)) ===
         lmMap(CorpusStream.lmCells(corpusOf(landedUpto))),
         s"[$step] unpinned serving must equal the logical-corpus retrain")
       StoreCompaction.livePins(store).foreach { case (name, p) =>
-        assert(lmMap(Forget.lmCountsAfterForget(spark, store, upto = p)) ===
+        assert(lmMap(CorpusStream.lmStore(store).servedAt(spark, upto = p)) ===
           lmMap(CorpusStream.lmCells(corpusOf(p.toInt))),
           s"[$step] $name@$p must serve its slice retrain minus every wave so far")
       }
@@ -223,12 +223,12 @@ class SoakSpec extends AnyFunSuite with TempDirs {
     check("final state after rotation and fold")
 
     // replay of wave B is a marker-gated no-op
-    val before = lmMap(Forget.lmCountsAfterForget(spark, store))
+    val before = lmMap(CorpusStream.lmStore(store).servedAt(spark))
     ForgetStream.processBatch(
       docs.filter(pmod(col("doc_id"), lit(17L)) === lit(5L) &&
         col("doc_id") < sliceBound(7)).select("doc_id"),
       content, targets, markers, 1L)
-    assert(lmMap(Forget.lmCountsAfterForget(spark, store)) === before,
+    assert(lmMap(CorpusStream.lmStore(store).servedAt(spark)) === before,
       "a replayed split wave must not move a single count")
   }
 
@@ -252,20 +252,19 @@ class SoakSpec extends AnyFunSuite with TempDirs {
     var floor = 0L
     var forgotten: Seq[org.apache.spark.sql.Column] = Nil
     def land(k: Int): Unit = {
-      CorpusStream.writeLmDelta(slice(k), store, k.toLong); landedUpto = k
+      CorpusStream.lmStore(store).land(slice(k), k.toLong); landedUpto = k
     }
     def wave(reqId: Long, pred: org.apache.spark.sql.Column): Unit = {
       val wavePred = pred && col("doc_id") < sliceBound(landedUpto + 1)
-      Forget.forgetSumCellsSplit(
-        docs.filter(wavePred).withColumn("src_batch", srcCol),
-        Forget.lmCellTarget(store), requestId = reqId)
+      CorpusStream.lmStore(store).forgetSplit(docs.filter(wavePred).withColumn("src_batch",
+        srcCol), requestId = reqId)
       forgotten = forgotten :+ wavePred
     }
     def check(step: String): Unit = {
       val window = docs.filter(col("doc_id") >= sliceBound(floor.toInt) &&
         col("doc_id") < sliceBound(landedUpto + 1))
       val logical = forgotten.foldLeft(window)((d, p) => d.filter(!p))
-      assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, store, lo = floor)) ===
+      assert(lmMap(CorpusStream.lmStore(store).servedWindow(spark, lo = floor)) ===
         lmMap(CorpusStream.lmCells(logical)),
         s"[$step] the windowed serve must equal the retained-window retrain")
     }
@@ -313,20 +312,19 @@ class SoakSpec extends AnyFunSuite with TempDirs {
     var floor = 0L
     var forgotten: Seq[org.apache.spark.sql.Column] = Nil
     def land(k: Int): Unit = {
-      CorpusStream.writeLmDelta(slice(k), store, k.toLong); landedUpto = k
+      CorpusStream.lmStore(store).land(slice(k), k.toLong); landedUpto = k
     }
     def wave(reqId: Long, pred: org.apache.spark.sql.Column): Unit = {
       val wavePred = pred && col("doc_id") < sliceBound(landedUpto + 1)
-      Forget.forgetSumCellsSplit(
-        docs.filter(wavePred).withColumn("src_batch", srcCol),
-        Forget.lmCellTarget(store), requestId = reqId)
+      CorpusStream.lmStore(store).forgetSplit(docs.filter(wavePred).withColumn("src_batch",
+        srcCol), requestId = reqId)
       forgotten = forgotten :+ wavePred
     }
     def check(step: String): Unit = {
       val window = docs.filter(col("doc_id") >= sliceBound(floor.toInt) &&
         col("doc_id") < sliceBound(landedUpto + 1))
       val logical = forgotten.foldLeft(window)((d, p) => d.filter(!p))
-      assert(lmMap(Forget.lmCountsAfterForgetWindow(spark, store, lo = floor)) ===
+      assert(lmMap(CorpusStream.lmStore(store).servedWindow(spark, lo = floor)) ===
         lmMap(CorpusStream.lmCells(logical)),
         s"[$step] the windowed serve must equal the retained-window retrain")
     }
@@ -376,7 +374,7 @@ class SoakSpec extends AnyFunSuite with TempDirs {
       StoreCompaction.registerPin(store, "late_rel", 6L)
     }.getMessage.contains("retention"))
     assert(intercept[IllegalStateException] {
-      Forget.lmCountsAfterForget(spark, store, upto = 6L)
+      CorpusStream.lmStore(store).servedAt(spark, upto = 6L)
     }.getMessage.contains("epoch-folded"))
     assert(StoreCompaction.retentionFloor(store) === Some(4L) &&
       StoreCompaction.epochSizeOf(store) === Some(2L),
@@ -397,7 +395,7 @@ class SoakSpec extends AnyFunSuite with TempDirs {
     }
     val store = tmpDir("graft-soak-margin") + "/deltas"
     (0 until nLandings).foreach(k =>
-      CorpusStream.writeLmDelta(slice(k), store, k.toLong))
+      CorpusStream.lmStore(store).land(slice(k), k.toLong))
     // threshold maintenance with a margin of 2: batches 0-3 fold into
     // the base, 4-5 stay raw (the replay-safety margin)
     val rep = StoreCompaction.maintain(spark, store, Seq("w1", "w2"),
@@ -405,35 +403,35 @@ class SoakSpec extends AnyFunSuite with TempDirs {
     assert(rep.minorUpto === Some(3L) &&
       StoreCompaction.compactionHorizon(store) === Some(3L),
       s"the margin must keep the newest two landings raw: $rep")
-    val served = lmMap(CorpusStream.lmCountsFromDeltas(spark, store))
+    val served = lmMap(CorpusStream.lmStore(store).servedAt(spark))
     assert(served === lmMap(CorpusStream.lmCells(docs)),
       "serving must equal the full retrain after the fold")
 
     // a replay INSIDE the margin (the checkpoint's real re-delivery
     // depth for AvailableNow sinks is 1): overwrite, serving unchanged
-    CorpusStream.writeLmDelta(slice(5), store, 5L)
-    CorpusStream.writeLmDelta(slice(4), store, 4L)
-    assert(lmMap(CorpusStream.lmCountsFromDeltas(spark, store)) === served,
+    CorpusStream.lmStore(store).land(slice(5), 5L)
+    CorpusStream.lmStore(store).land(slice(4), 4L)
+    assert(lmMap(CorpusStream.lmStore(store).servedAt(spark)) === served,
       "an in-margin replay must re-land as a no-op")
 
     // a replay DEEPER than the margin targets a folded batch: refuse
     // loudly (landing it would double-count beside the folded rows)
     val ex = intercept[IllegalStateException] {
-      CorpusStream.writeLmDelta(slice(2), store, 2L)
+      CorpusStream.lmStore(store).land(slice(2), 2L)
     }
     assert(ex.getMessage.contains("keepLatestDeltas"), ex.getMessage)
-    assert(lmMap(CorpusStream.lmCountsFromDeltas(spark, store)) === served,
+    assert(lmMap(CorpusStream.lmStore(store).servedAt(spark)) === served,
       "the refused replay must leave serving untouched")
 
     // the epoch-banded dual: batches folded into an epoch refuse the
     // same way (and the un-banded tail keeps accepting replays)
     val eStore = tmpDir("graft-soak-margin-epoch") + "/deltas"
-    (0 until 4).foreach(k => CorpusStream.writeLmDelta(slice(k), eStore, k.toLong))
+    (0 until 4).foreach(k => CorpusStream.lmStore(eStore).land(slice(k), k.toLong))
     StoreCompaction.foldEpochs(spark, eStore, epochSize = 2L, uptoBatch = 1L)
     val exE = intercept[IllegalStateException] {
-      CorpusStream.writeLmDelta(slice(0), eStore, 0L)
+      CorpusStream.lmStore(eStore).land(slice(0), 0L)
     }
     assert(exE.getMessage.contains("epoch"), exE.getMessage)
-    CorpusStream.writeLmDelta(slice(3), eStore, 3L) // raw tail still lands
+    CorpusStream.lmStore(eStore).land(slice(3), 3L) // raw tail still lands
   }
 }

@@ -71,8 +71,8 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".json")).get
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(landing, s"$name.json"))
-      OrderStream.cellSink(CorpusStream.readDocStreamJson(spark, landing),
-        deltas, checkpoint).awaitTermination()
+      OrderStream.curriculumStore(deltas).sink(CorpusStream.readDocStreamJson(spark, landing),
+        checkpoint).awaitTermination()
     }
     // the manifest served off the JSON-landed store equals batch q151
     // over the parquet source — the landing format must be invisible

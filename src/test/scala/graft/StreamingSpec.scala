@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.models.Staging
-import graft.streaming.StreamingIngest
+import graft.streaming.{CellStore, CorpusStream, DriftStream, EmbeddingStream, OrderStream, ShardStream, StreamingIngest}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -828,14 +828,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // three landing files, sink run after each -> three delta partitions
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    ShardStream.manifestSink(ShardStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    ShardStream.manifestStore(deltas).sink(ShardStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    ShardStream.manifestSink(ShardStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    ShardStream.manifestStore(deltas).sink(ShardStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    ShardStream.manifestSink(ShardStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    ShardStream.manifestStore(deltas).sink(ShardStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def maniMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("shard_id") ->
@@ -852,15 +852,15 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // replay pin: foreachBatch is at-least-once — re-writing the SAME
     // batchId delta overwrites its partition, so XOR/SUM never double-fold
     val replay = docs.filter(col("doc_id") < cut1)
-    ShardStream.writeDelta(replay, deltas, 0L)
-    ShardStream.writeDelta(replay, deltas, 0L)
+    ShardStream.manifestStore(deltas).land(replay, 0L)
+    ShardStream.manifestStore(deltas).land(replay, 0L)
     assert(maniMap(ShardStream.manifestFromDeltas(spark, deltas)) === batch,
       "a replayed delta write must not move the served manifest")
 
     // retention pin: folding old deltas into the base reassociates the
     // same algebra — the served manifest must not move, and the store
     // must shrink to base + the still-replayable tail
-    ShardStream.compactDeltas(spark, deltas, upto = 1L)
+    ShardStream.manifestStore(deltas).compact(spark, upto = 1L)
     assert(new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
       Seq("batch_id=-1", "batch_id=2"))
@@ -887,14 +887,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    OrderStream.cellSink(OrderStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    OrderStream.curriculumStore(deltas).sink(OrderStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    OrderStream.cellSink(OrderStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    OrderStream.curriculumStore(deltas).sink(OrderStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    OrderStream.cellSink(OrderStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    OrderStream.curriculumStore(deltas).sink(OrderStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def maniMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Int]("phase"), r.getAs[Long]("shard")) ->
@@ -914,14 +914,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // replay pin: SUM cells are not idempotent — the per-batchId
     // overwrite is what makes a re-delivered batch a no-op
     val replay = docs.filter(col("doc_id") < cut1)
-    OrderStream.writeDelta(replay, deltas, 0L)
-    OrderStream.writeDelta(replay, deltas, 0L)
+    OrderStream.curriculumStore(deltas).land(replay, 0L)
+    OrderStream.curriculumStore(deltas).land(replay, 0L)
     assert(maniMap(OrderStream.manifestFromDeltas(spark, deltas)) === batch,
       "a replayed delta write must not move the served manifest")
 
     // retention pin: folding old deltas into the base reassociates the
     // same SUM algebra — the served manifest must not move
-    OrderStream.compactDeltas(spark, deltas, upto = 1L)
+    OrderStream.curriculumStore(deltas).compact(spark, upto = 1L)
     assert(new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
       Seq("batch_id=-1", "batch_id=2"))
@@ -948,8 +948,8 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       docs.filter(col("doc_id") < cut1) -> "r3.parquet"
     ).foreach { case (chunk, name) =>
       land2(chunk, name)
-      OrderStream.cellSink(OrderStream.readDocStream(spark, landing2),
-        deltas2, checkpoint2).awaitTermination()
+      OrderStream.curriculumStore(deltas2).sink(OrderStream.readDocStream(spark, landing2),
+        checkpoint2).awaitTermination()
     }
     assert(maniMap(OrderStream.manifestFromDeltas(spark, deltas2)) === batch,
       "reversed arrival order must serve the identical manifest")
@@ -974,14 +974,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    OrderStream.massSink(OrderStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    OrderStream.massStore(deltas).sink(OrderStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    OrderStream.massSink(OrderStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    OrderStream.massStore(deltas).sink(OrderStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    OrderStream.massSink(OrderStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    OrderStream.massStore(deltas).sink(OrderStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def segMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("seg_idx") ->
@@ -1001,13 +1001,13 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // replay: per-batchId overwrite keeps SUM cells idempotent
     val replay = docs.filter(col("doc_id") < cut1)
-    OrderStream.writeMassDelta(replay, deltas, 0L)
-    OrderStream.writeMassDelta(replay, deltas, 0L)
+    OrderStream.massStore(deltas).land(replay, 0L)
+    OrderStream.massStore(deltas).land(replay, 0L)
     assert(segMap(OrderStream.segmentManifestFromDeltas(spark, deltas)) === batch,
       "a replayed delta write must not move the served manifest")
 
     // retention: the fold algebra is the serving algebra
-    OrderStream.compactMassDeltas(spark, deltas, upto = 1L)
+    OrderStream.massStore(deltas).compact(spark, upto = 1L)
     assert(new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
       Seq("batch_id=-1", "batch_id=2"))
@@ -1034,14 +1034,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    CorpusStream.evalCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.evalStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    CorpusStream.evalCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.evalStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    CorpusStream.evalCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.evalStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def tblMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("band") ->
@@ -1062,13 +1062,13 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // replay: per-batchId overwrite keeps SUM cells idempotent
     val replay = docs.filter(col("doc_id") < cut1)
-    CorpusStream.writeEvalDelta(replay, deltas, 0L)
-    CorpusStream.writeEvalDelta(replay, deltas, 0L)
+    CorpusStream.evalStore(deltas).land(replay, 0L)
+    CorpusStream.evalStore(deltas).land(replay, 0L)
     assert(tblMap(CorpusStream.evalTableFromDeltas(spark, deltas)) === batch,
       "a replayed delta write must not move the served table")
 
     // retention: the fold algebra is the serving algebra
-    CorpusStream.compactEvalDeltas(spark, deltas, upto = 1L)
+    CorpusStream.evalStore(deltas).compact(spark, upto = 1L)
     assert(new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
       Seq("batch_id=-1", "batch_id=2"))
@@ -1095,14 +1095,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    CorpusStream.mwCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.mwStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    CorpusStream.mwCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.mwStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    CorpusStream.mwCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.mwStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def tblMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[String]("source") ->
@@ -1123,13 +1123,13 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // replay: per-batchId overwrite keeps SUM cells idempotent
     val replay = docs.filter(col("doc_id") < cut1)
-    CorpusStream.writeMwDelta(replay, deltas, 0L)
-    CorpusStream.writeMwDelta(replay, deltas, 0L)
+    CorpusStream.mwStore(deltas).land(replay, 0L)
+    CorpusStream.mwStore(deltas).land(replay, 0L)
     assert(tblMap(CorpusStream.reweightingFromDeltas(spark, deltas)) === batch,
       "a replayed delta write must not move the served table")
 
     // retention: the fold algebra is the serving algebra
-    CorpusStream.compactMwDeltas(spark, deltas, upto = 1L)
+    CorpusStream.mwStore(deltas).compact(spark, upto = 1L)
     assert(new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
       Seq("batch_id=-1", "batch_id=2"))
@@ -1156,14 +1156,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    CorpusStream.featureCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.featureStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    CorpusStream.featureCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.featureStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    CorpusStream.featureCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.featureStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def scoreMap(ratio: Map[Long, Long]) = ops.Mining
       .applyRatio(ops.Mining.bigramBuckets(docs), ratio)
@@ -1179,13 +1179,13 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // replay: per-batchId overwrite keeps SUM cells idempotent
     val replay = docs.filter(col("doc_id") < cut1)
-    CorpusStream.writeFeatureDelta(replay, deltas, 0L)
-    CorpusStream.writeFeatureDelta(replay, deltas, 0L)
+    CorpusStream.featureStore(deltas).land(replay, 0L)
+    CorpusStream.featureStore(deltas).land(replay, 0L)
     assert(scoreMap(CorpusStream.ratioFromDeltas(spark, deltas)) === batch,
       "a replayed delta write must not move the trained table")
 
     // retention: the fold algebra is the serving algebra
-    CorpusStream.compactFeatureDeltas(spark, deltas, upto = 1L)
+    CorpusStream.featureStore(deltas).compact(spark, upto = 1L)
     assert(new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
       Seq("batch_id=-1", "batch_id=2"))
@@ -1228,11 +1228,11 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // batch 0 = the v1 release, batch 1 = the new half
     land(docs.filter(col("doc_id") < cut), "f1.parquet")
-    CorpusStream.lmCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.lmStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut), "f2.parquet")
-    CorpusStream.lmCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.lmStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def tblMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getString(0) ->
@@ -1269,14 +1269,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    CorpusStream.lmCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.lmStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    CorpusStream.lmCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.lmStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    CorpusStream.lmCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.lmStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def servedMap() = CorpusStream.fluencyFromDeltas(spark, deltas, docs)
       .collect().map(r => r.getAs[Long]("doc_id") ->
@@ -1314,13 +1314,13 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       "a release-pinned table must equal the batch model trained on those landings")
 
     // replay: per-batchId overwrite keeps SUM cells idempotent
-    CorpusStream.writeLmDelta(docs.filter(col("doc_id") < cut1), deltas, 0L)
-    CorpusStream.writeLmDelta(docs.filter(col("doc_id") < cut1), deltas, 0L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") < cut1), 0L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") < cut1), 0L)
     assert(servedMap() === batch,
       "a replayed delta write must not move the count table")
 
     // retention: the fold algebra is the serving algebra
-    CorpusStream.compactLmDeltas(spark, deltas, upto = 1L)
+    CorpusStream.lmStore(deltas).compact(spark, upto = 1L)
     assert(new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
       Seq("batch_id=-1", "batch_id=2"))
@@ -1533,14 +1533,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    CorpusStream.divCellSink(CorpusStream.readDocStream(spark, landing),
-      dims, stats, checkpoint).awaitTermination()
+    CellStore.sink(CorpusStream.divStores(dims, stats), CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    CorpusStream.divCellSink(CorpusStream.readDocStream(spark, landing),
-      dims, stats, checkpoint).awaitTermination()
+    CellStore.sink(CorpusStream.divStores(dims, stats), CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    CorpusStream.divCellSink(CorpusStream.readDocStream(spark, landing),
-      dims, stats, checkpoint).awaitTermination()
+    CellStore.sink(CorpusStream.divStores(dims, stats), CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def tblMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[String]("source") ->
@@ -1553,8 +1553,8 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       "served diversity table must equal batch q178 over the landed corpus")
 
     // replay: per-batchId overwrite keeps both stores idempotent
-    CorpusStream.writeDivDelta(docs.filter(col("doc_id") < cut1), dims, stats, 0L)
-    CorpusStream.writeDivDelta(docs.filter(col("doc_id") < cut1), dims, stats, 0L)
+    CellStore.land(docs.filter(col("doc_id") < cut1), 0L, CorpusStream.divStores(dims, stats))
+    CellStore.land(docs.filter(col("doc_id") < cut1), 0L, CorpusStream.divStores(dims, stats))
     assert(tblMap(CorpusStream.diversityFromDeltas(spark, dims, stats)) === batch,
       "a replayed delta write must not move the served table")
 
@@ -1565,9 +1565,98 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(pinned === chunk1, "the snapshot pin must replay the first landing's metric")
 
     // retention: the fold algebra is the serving algebra, on both stores
-    CorpusStream.compactDivDeltas(spark, dims, stats, upto = 1L)
+    CorpusStream.divStores(dims, stats).foreach(_.compact(spark, upto = 1L))
     assert(tblMap(CorpusStream.diversityFromDeltas(spark, dims, stats)) === batch,
       "compaction must not move the served table")
+  }
+
+  test("a diversity landing guards its stat store: the cell schema registers, and a replay of a batch folded into the stat store alone is refused") {
+    import graft.streaming.StoreCompaction
+    val docs = Catalog.table(spark, "/root/testdata/sf0.001", "documents")
+    val root = tmpDir("graft-div-guard")
+    val (dims, stats) = (s"$root/dims", s"$root/stats")
+    val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+    val first = docs.filter(col("doc_id") < cut)
+    CellStore.land(first, 0L, CorpusStream.divStores(dims, stats))
+    CellStore.land(docs.filter(col("doc_id") >= cut), 1L, CorpusStream.divStores(dims, stats))
+    assert(StoreCompaction.cellSchemaOf(stats).isDefined,
+      "the stat store must register its cell schema like every landing")
+    // maintenance folds batch 0 into the stat store's base alone; a
+    // replay of batch 0 would double-count beside the folded rows
+    StoreCompaction.foldInto(spark, stats, upto = 0L)(identity)
+    val ex = intercept[IllegalStateException] {
+      CellStore.land(first, 0L, CorpusStream.divStores(dims, stats))
+    }
+    assert(ex.getMessage.contains("keepLatestDeltas") && ex.getMessage.contains(stats),
+      s"the replay must refuse on the folded stat store: ${ex.getMessage}")
+  }
+
+  test("every CellStore declaration keeps the store laws: a replay changes nothing, compaction keeps pinned serves, the full window equals the unpinned serve, and whole-wave erasure equals landing only the survivors") {
+    val sf = "/root/testdata/sf0.001"
+    val docs = Catalog.table(spark, sf, "documents")
+      .withColumn("snapshot_id", col("doc_id") % 2).localCheckpoint()
+    val vecs = Catalog.table(spark, sf, "embeddings")
+      .withColumn("snapshot_id", col("vec_id") % 2).localCheckpoint()
+    val centroidPath = ops.Similarity.buildIvfIndex(spark, sf)
+    // (name, the declaration under a root, its input, the id column,
+    // whether the store is an erasure target) — a new store is one row
+    val laws: Seq[(String, String => Seq[CellStore], org.apache.spark.sql.DataFrame,
+        String, Boolean)] = Seq(
+      ("eval", r => Seq(CorpusStream.evalStore(r)), docs, "doc_id", true),
+      ("feature", r => Seq(CorpusStream.featureStore(r)), docs, "doc_id", true),
+      ("lm", r => Seq(CorpusStream.lmStore(r)), docs, "doc_id", true),
+      ("mw", r => Seq(CorpusStream.mwStore(r)), docs, "doc_id", true),
+      ("div", r => CorpusStream.divStores(s"$r/dims", s"$r/stats"), docs, "doc_id", true),
+      ("kanon", r => Seq(CorpusStream.kAnonStore(r)), docs, "doc_id", true),
+      ("span", r => Seq(CorpusStream.spanStore(r)), docs, "doc_id", false),
+      ("cdc", r => CorpusStream.cdcStores(s"$r/chunks", s"$r/docs"), docs, "doc_id", true),
+      ("drift", r => Seq(DriftStream.driftStore(r)), docs, "doc_id", false),
+      ("snapdrift", r => Seq(DriftStream.snapshotStore(r)), docs, "doc_id", false),
+      ("curriculum", r => Seq(OrderStream.curriculumStore(r)), docs, "doc_id", false),
+      ("mass", r => Seq(OrderStream.massStore(r)), docs, "doc_id", false),
+      ("shard", r => Seq(ShardStream.manifestStore(r)), docs, "doc_id", false),
+      ("occupancy", r => Seq(EmbeddingStream.occupancyStore(r, centroidPath)), vecs,
+        "vec_id", true))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    def nonZero(t: CellStore, df: org.apache.spark.sql.DataFrame) =
+      rows(df.filter(!t.measures.collect { case (c, CellStore.Sum) => col(c) === 0L }
+        .reduce(_ && _)))
+    val root = tmpDir("graft-cellstore-laws")
+    laws.foreach { case (name, declare, input, id, erasable) =>
+      val ids = input.select(id).orderBy(id).collect().map(_.getLong(0))
+      val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
+      def slices(d: org.apache.spark.sql.DataFrame) = Seq(d.filter(col(id) < cuts(0)),
+        d.filter(col(id) >= cuts(0) && col(id) < cuts(1)), d.filter(col(id) >= cuts(1)))
+      def landAll(stores: Seq[CellStore], d: org.apache.spark.sql.DataFrame): Unit =
+        slices(d).zipWithIndex.foreach { case (sl, k) => CellStore.land(sl, k.toLong, stores) }
+      val stores = declare(s"$root/$name/laws")
+      landAll(stores, input)
+      val served = stores.map(t => rows(t.servedAt(spark)))
+      CellStore.land(slices(input)(1), 1L, stores)
+      assert(stores.map(t => rows(t.servedAt(spark))) === served,
+        s"$name: a replayed landing must change nothing")
+      assert(stores.map(t => rows(t.servedWindow(spark, lo = 0L))) === served,
+        s"$name: the window over every landing must equal the unpinned serve")
+      val pinned = stores.map(t => rows(t.servedAt(spark, upto = 1L)))
+      stores.foreach(_.compact(spark, upto = 1L))
+      assert(stores.map(t => rows(t.servedAt(spark, upto = 1L))) === pinned,
+        s"$name: compaction must not move the pinned serve")
+      assert(stores.map(t => rows(t.servedAt(spark))) === served,
+        s"$name: compaction must not move the unpinned serve")
+      if (erasable) {
+        val forgetPred = pmod(col(id), lit(7L)) === lit(3L)
+        val (erased, survivors) =
+          (declare(s"$root/$name/erased"), declare(s"$root/$name/survivors"))
+        landAll(erased, input)
+        CellStore.forget(input.filter(forgetPred), -1000L, erased)
+        landAll(survivors, input.filter(!forgetPred))
+        erased.zip(survivors).foreach { case (e, sv) =>
+          assert(nonZero(e, e.servedAt(spark)) === nonZero(sv, sv.servedAt(spark)),
+            s"$name (${e.family}): whole-wave erasure must equal landing only the survivors")
+        }
+      }
+    }
   }
 
   test("shingle-index stream: containment served off landed deltas equals batch q185") {
@@ -1632,14 +1721,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val ids = docs.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
     val cuts = Seq(ids(ids.length / 4), ids(ids.length / 2), ids(3 * ids.length / 4))
     // four landings, batch ids 0..3
-    CorpusStream.writeLmDelta(docs.filter(col("doc_id") < cuts(0)), deltas, 0L)
-    CorpusStream.writeLmDelta(
-      docs.filter(col("doc_id") >= cuts(0) && col("doc_id") < cuts(1)), deltas, 1L)
-    CorpusStream.writeLmDelta(
-      docs.filter(col("doc_id") >= cuts(1) && col("doc_id") < cuts(2)), deltas, 2L)
-    CorpusStream.writeLmDelta(docs.filter(col("doc_id") >= cuts(2)), deltas, 3L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") < cuts(0)), 0L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") >= cuts(0) && col("doc_id") < cuts(
+      1)), 1L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") >= cuts(1) && col("doc_id") < cuts(
+      2)), 2L)
+    CorpusStream.lmStore(deltas).land(docs.filter(col("doc_id") >= cuts(2)), 3L)
 
-    def counts(upto: Long) = CorpusStream.lmCountsFromDeltas(spark, deltas, upto)
+    def counts(upto: Long) = CorpusStream.lmStore(deltas).servedAt(spark, upto)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     def partitions() = new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq
@@ -1652,7 +1741,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // an illegal fold (past the pin) REFUSES and leaves the store untouched
     val ex1 = intercept[IllegalStateException] {
-      CorpusStream.compactLmDeltas(spark, deltas, upto = 2L)
+      CorpusStream.lmStore(deltas).compact(spark, upto = 2L)
     }
     assert(ex1.getMessage.contains("release_v1"))
     assert(partitions() ===
@@ -1669,8 +1758,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(StoreCompaction.maxFoldableUpto(deltas, 0L) === 0L)
 
     // a legal fold AT the pin: pinned serving bit-identical across it
-    CorpusStream.compactLmDeltas(spark, deltas,
-      StoreCompaction.maxFoldableUpto(deltas, 3L))
+    CorpusStream.lmStore(deltas).compact(spark, StoreCompaction.maxFoldableUpto(deltas, 3L))
     assert(partitions() === Seq("batch_id=-1", "batch_id=2", "batch_id=3"))
     assert(counts(1L) === pinnedBefore,
       "pinned serving must be bit-identical across a legal compaction")
@@ -1683,7 +1771,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       StoreCompaction.registerPin(deltas, "late_pin", 0L)
     }
     intercept[IllegalStateException] {
-      CorpusStream.lmCountsFromDeltas(spark, deltas, upto = 0L)
+      CorpusStream.lmStore(deltas).servedAt(spark, upto = 0L)
     }
     // re-pinning AT the horizon is fine (the fold stopped exactly there)
     StoreCompaction.registerPin(deltas, "release_v1", 1L)
@@ -1691,7 +1779,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // releasing the pin makes the fold legal; full serving never moves
     StoreCompaction.releasePin(deltas, "release_v1")
     assert(StoreCompaction.livePins(deltas) === Map.empty)
-    CorpusStream.compactLmDeltas(spark, deltas, upto = 2L)
+    CorpusStream.lmStore(deltas).compact(spark, upto = 2L)
     assert(partitions() === Seq("batch_id=-1", "batch_id=3"))
     assert(counts(Long.MaxValue) === fullBefore,
       "unpinned serving must be bit-identical across the released fold")
@@ -1726,23 +1814,23 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val families: Seq[(String, W, String => Seq[(String, Seq[String])],
         String => Any)] = Seq(
       ("eval",
-        (b, r, i) => CorpusStream.writeEvalDelta(b, r, i),
+        (b, r, i) => CorpusStream.evalStore(r).land(b, i),
         r => Seq(r -> Seq("band")),
         r => snap(CorpusStream.evalTableFromDeltas(spark, r))),
       ("feature",
-        (b, r, i) => CorpusStream.writeFeatureDelta(b, r, i),
+        (b, r, i) => CorpusStream.featureStore(r).land(b, i),
         r => Seq(r -> Seq("f")),
         r => CorpusStream.ratioFromDeltas(spark, r)),
       ("mw",
-        (b, r, i) => CorpusStream.writeMwDelta(b, r, i),
+        (b, r, i) => CorpusStream.mwStore(r).land(b, i),
         r => Seq(r -> Seq("source")),
         r => snap(CorpusStream.reweightingFromDeltas(spark, r))),
       ("div",
-        (b, r, i) => CorpusStream.writeDivDelta(b, s"$r/dims", s"$r/stats", i),
+        (b, r, i) => CellStore.land(b, i, CorpusStream.divStores(s"$r/dims", s"$r/stats")),
         r => Seq(s"$r/dims" -> Seq("source", "d"), s"$r/stats" -> Seq("source")),
         r => snap(CorpusStream.diversityFromDeltas(spark, s"$r/dims", s"$r/stats"))),
       ("kanon",
-        (b, r, i) => CorpusStream.writeKAnonDelta(b, r, i),
+        (b, r, i) => CorpusStream.kAnonStore(r).land(b, i),
         r => Seq(r -> Seq("source", "lang", "len_bucket")),
         r => snap(CorpusStream.kAnonymityFromDeltas(spark, r))),
       ("cs",
@@ -1750,12 +1838,12 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
         r => Seq(r -> Seq("doc_id")),
         r => snap(CorpusStream.codeSwitchFromDeltas(spark, r, full.select("doc_id")))),
       ("span",
-        (b, r, i) => CorpusStream.writeSpanDelta(b, r, i),
+        (b, r, i) => CorpusStream.spanStore(r).land(b, i),
         r => Seq(r -> Seq("h")),
         r => snap(CorpusStream.spanScrubFromDeltas(spark, r,
           full.select("doc_id", "text")))),
       ("cdc",
-        (b, r, i) => CorpusStream.writeCdcDelta(b, s"$r/chunks", s"$r/docs", i),
+        (b, r, i) => CellStore.land(b, i, CorpusStream.cdcStores(s"$r/chunks", s"$r/docs")),
         r => Seq(s"$r/chunks" -> Seq("fp"), s"$r/docs" -> Seq("source")),
         r => snap(CorpusStream.cdcReportFromDeltas(spark, s"$r/chunks", s"$r/docs"))),
       ("shingle",
@@ -1764,25 +1852,24 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
         r => snap(ScrubStream.containmentFromDeltas(spark, r,
           full.filter(col("doc_id") >= 50).select("doc_id")))),
       ("drift",
-        (b, r, i) => DriftStream.writeDelta(b, r, i),
+        (b, r, i) => DriftStream.driftStore(r).land(b, i),
         r => Seq(r -> Seq("source", "bin")),
         r => snap(DriftStream.driftFromDeltas(spark, r))),
       ("snapdrift",
-        (b, r, i) => DriftStream.writeSnapshotDelta(
-          b.withColumn("snapshot_id", lit(i % 2)), r, i),
+        (b, r, i) => DriftStream.snapshotStore(r).land(b.withColumn("snapshot_id", lit(i % 2)), i),
         r => Seq(r -> Seq("snapshot_id", "source", "bin")),
         r => snap(spark.read.parquet(r).groupBy("snapshot_id", "source", "bin")
           .agg(sum(col("o")).cast("long").as("o")))),
       ("curriculum",
-        (b, r, i) => OrderStream.writeDelta(b, r, i),
+        (b, r, i) => OrderStream.curriculumStore(r).land(b, i),
         r => Seq(r -> Seq("phase", "shard")),
         r => snap(OrderStream.manifestFromDeltas(spark, r))),
       ("mass",
-        (b, r, i) => OrderStream.writeMassDelta(b, r, i),
+        (b, r, i) => OrderStream.massStore(r).land(b, i),
         r => Seq(r -> Seq("source", "w")),
         r => snap(OrderStream.segmentManifestFromDeltas(spark, r))),
       ("shard",
-        (b, r, i) => ShardStream.writeDelta(b, r, i),
+        (b, r, i) => ShardStream.manifestStore(r).land(b, i),
         r => Seq(r -> Seq("shard_id")),
         r => snap(ShardStream.manifestFromDeltas(spark, r))))
 
@@ -1817,9 +1904,8 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val deltas = tmpDir("graft-maint-honest") + "/deltas"
     val docs = Catalog.table(spark, "/root/testdata/sf0.001", "documents")
     // four landings 10..13, pin at 5 — every eligible delta is past the pin
-    (10 to 13).foreach(k => CorpusStream.writeLmDelta(
-      docs.filter(pmod(col("doc_id"), lit(4L)) === lit((k - 10).toLong)),
-      deltas, k.toLong))
+    (10 to 13).foreach(k => CorpusStream.lmStore(deltas).land(docs.filter(pmod(col("doc_id"),
+      lit(4L)) === lit((k - 10).toLong)), k.toLong))
     StoreCompaction.registerPin(deltas, "rel", 5L)
     val before = new java.io.File(deltas).listFiles()
       .map(_.getName).filter(_.startsWith("batch_id=")).sorted.toSeq
@@ -1851,7 +1937,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
         else ids((k + 1) * ids.length / nLandings)
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
     }
-    def counts(dir: String) = CorpusStream.lmCountsFromDeltas(spark, dir)
+    def counts(dir: String) = CorpusStream.lmStore(dir).servedAt(spark)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     def deltaPartitions() = new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName)
@@ -1860,8 +1946,8 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // a release pin goes live at landing 5 and is dropped after landing 11
     var reports = Vector.empty[StoreCompaction.MaintenanceReport]
     (0 until nLandings).foreach { k =>
-      CorpusStream.writeLmDelta(slice(k), deltas, k.toLong)
-      CorpusStream.writeLmDelta(slice(k), raw, k.toLong)
+      CorpusStream.lmStore(deltas).land(slice(k), k.toLong)
+      CorpusStream.lmStore(raw).land(slice(k), k.toLong)
       if (k == 5) StoreCompaction.registerPin(deltas, "rel", 5L)
       if (k == 11) StoreCompaction.releasePin(deltas, "rel")
       reports :+= maintain(spark, deltas, Seq("w1", "w2"), policy)
@@ -2139,11 +2225,11 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // batches, so a per-batch k test would misflag large groups — only
     // the folded sizes give the right audit
     land(docs.filter(col("doc_id") % 2 === 0), "f1.parquet")
-    CorpusStream.kAnonCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.kAnonStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") % 2 === 1), "f2.parquet")
-    CorpusStream.kAnonCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.kAnonStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def tblMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[String]("source") ->
@@ -2170,12 +2256,12 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       "the split must produce a group that only the folded sizes clear")
 
     // replay: per-batchId overwrite keeps the store idempotent
-    CorpusStream.writeKAnonDelta(docs.filter(col("doc_id") % 2 === 0), deltas, 0L)
+    CorpusStream.kAnonStore(deltas).land(docs.filter(col("doc_id") % 2 === 0), 0L)
     assert(tblMap(CorpusStream.kAnonymityFromDeltas(spark, deltas)) === batch,
       "a replayed delta write must not move the served audit")
 
     // retention: the fold algebra is the serving algebra
-    CorpusStream.compactKAnonDeltas(spark, deltas, upto = 1L)
+    CorpusStream.kAnonStore(deltas).compact(spark, upto = 1L)
     assert(tblMap(CorpusStream.kAnonymityFromDeltas(spark, deltas)) === batch,
       "compaction must not move the served audit")
   }
@@ -2201,14 +2287,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // REVERSED arrival order: the highest-id chunk lands first — the MIN
     // fold must still recover the global first-occurrence attribution
     land(docs.filter(col("doc_id") >= cut2), "f1.parquet")
-    CorpusStream.spanCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.spanStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    CorpusStream.spanCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.spanStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") < cut1), "f3.parquet")
-    CorpusStream.spanCellSink(CorpusStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    CorpusStream.spanStore(deltas).sink(CorpusStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def tblMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) ->
@@ -2219,13 +2305,13 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       "served scrub plan must equal batch q182 despite reversed arrival")
 
     // replay: per-batchId overwrite keeps SUM/MIN cells idempotent
-    CorpusStream.writeSpanDelta(docs.filter(col("doc_id") >= cut2), deltas, 0L)
-    CorpusStream.writeSpanDelta(docs.filter(col("doc_id") >= cut2), deltas, 0L)
+    CorpusStream.spanStore(deltas).land(docs.filter(col("doc_id") >= cut2), 0L)
+    CorpusStream.spanStore(deltas).land(docs.filter(col("doc_id") >= cut2), 0L)
     assert(tblMap(CorpusStream.spanScrubFromDeltas(spark, deltas, docs)) === batch,
       "a replayed delta write must not move the served plan")
 
     // retention: the fold algebra is the serving algebra
-    CorpusStream.compactSpanDeltas(spark, deltas, upto = 1L)
+    CorpusStream.spanStore(deltas).compact(spark, upto = 1L)
     assert(tblMap(CorpusStream.spanScrubFromDeltas(spark, deltas, docs)) === batch,
       "compaction must not move the served plan")
   }
@@ -2250,14 +2336,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut1), "f1.parquet")
-    CorpusStream.cdcCellSink(CorpusStream.readDocStream(spark, landing),
-      chunks, dcount, checkpoint).awaitTermination()
+    CellStore.sink(CorpusStream.cdcStores(chunks, dcount), CorpusStream.readDocStream(spark,
+      landing), checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2), "f2.parquet")
-    CorpusStream.cdcCellSink(CorpusStream.readDocStream(spark, landing),
-      chunks, dcount, checkpoint).awaitTermination()
+    CellStore.sink(CorpusStream.cdcStores(chunks, dcount), CorpusStream.readDocStream(spark,
+      landing), checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut2), "f3.parquet")
-    CorpusStream.cdcCellSink(CorpusStream.readDocStream(spark, landing),
-      chunks, dcount, checkpoint).awaitTermination()
+    CellStore.sink(CorpusStream.cdcStores(chunks, dcount), CorpusStream.readDocStream(spark,
+      landing), checkpoint).awaitTermination()
 
     def servedRows() = CorpusStream.cdcReportFromDeltas(spark, chunks, dcount)
       .collect().map(r => (r.getAs[String]("source"), r.getAs[Long]("n_docs"),
@@ -2271,12 +2357,12 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       "the dup report off the streamed chunk cells must equal batch q171 exactly")
 
     // replay: per-batchId overwrite keeps both stores idempotent
-    CorpusStream.writeCdcDelta(docs.filter(col("doc_id") < cut1), chunks, dcount, 0L)
-    CorpusStream.writeCdcDelta(docs.filter(col("doc_id") < cut1), chunks, dcount, 0L)
+    CellStore.land(docs.filter(col("doc_id") < cut1), 0L, CorpusStream.cdcStores(chunks, dcount))
+    CellStore.land(docs.filter(col("doc_id") < cut1), 0L, CorpusStream.cdcStores(chunks, dcount))
     assert(servedRows() === batch, "a replayed delta write must not move the report")
 
     // retention: the fold algebra is the serving algebra, on both stores
-    CorpusStream.compactCdcDeltas(spark, chunks, dcount, upto = 1L)
+    CorpusStream.cdcStores(chunks, dcount).foreach(_.compact(spark, upto = 1L))
     Seq(chunks, dcount).foreach { d =>
       assert(new java.io.File(d).listFiles()
         .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
@@ -2653,11 +2739,11 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
 
     land(docs.filter(col("doc_id") < cut), "f1.parquet")
-    DriftStream.cellSink(DriftStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    DriftStream.driftStore(deltas).sink(DriftStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(docs.filter(col("doc_id") >= cut), "f2.parquet")
-    DriftStream.cellSink(DriftStream.readDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    DriftStream.driftStore(deltas).sink(DriftStream.readDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def repMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[String]("source") ->
@@ -2670,7 +2756,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // replay pin: SUM is not idempotent — the per-batchId overwrite is
     // what keeps a replayed fold from double-counting
-    DriftStream.writeDelta(docs.filter(col("doc_id") < cut), deltas, 0L)
+    DriftStream.driftStore(deltas).land(docs.filter(col("doc_id") < cut), 0L)
     assert(repMap(DriftStream.driftFromDeltas(spark, deltas)) === expected,
       "a replayed delta write must not move any statistic")
   }
@@ -3014,14 +3100,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // landing files split by doc_id RANGE, so every micro-batch mixes
     // snapshots — the key must travel in the data, not batch boundaries
     land(tagged.filter(col("doc_id") < c1), "f1.parquet")
-    DriftStream.snapshotCellSink(DriftStream.readSnapshotDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    DriftStream.snapshotStore(deltas).sink(DriftStream.readSnapshotDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(tagged.filter(col("doc_id") >= c1 && col("doc_id") < c2), "f2.parquet")
-    DriftStream.snapshotCellSink(DriftStream.readSnapshotDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    DriftStream.snapshotStore(deltas).sink(DriftStream.readSnapshotDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(tagged.filter(col("doc_id") >= c2), "f3.parquet")
-    DriftStream.snapshotCellSink(DriftStream.readSnapshotDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    DriftStream.snapshotStore(deltas).sink(DriftStream.readSnapshotDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[String]("source"), r.getAs[Long]("n_a"), r.getAs[Long]("n_b"),
@@ -3052,7 +3138,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // replay pin: rewriting a batch's delta partition changes nothing
     val before = served
-    DriftStream.writeSnapshotDelta(tagged.filter(col("doc_id") >= c2), deltas, 2L)
+    DriftStream.snapshotStore(deltas).land(tagged.filter(col("doc_id") >= c2), 2L)
     assert(rows(DriftStream.pairDriftFromDeltas(spark, deltas, 0L, 1L)) === before,
       "a replayed snapshot-cell delta must be a no-op")
 
@@ -3080,7 +3166,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // including for a long-closed snapshot — serves identically off the
     // compacted base partition (the registry keeps the snapshots, with
     // first_batch collapsing to the base id)
-    DriftStream.compactSnapshotDeltas(spark, deltas, upto = 1L)
+    DriftStream.snapshotStore(deltas).compact(spark, upto = 1L)
     assert(DriftStream.snapshotRegistry(spark, deltas)
       .collect().map(_.getAs[Long]("snapshot_id")).toSet === Set(0L, 1L),
       "compaction must not lose any snapshot from the registry")
@@ -3122,11 +3208,11 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // two id-range batches, each mixing all four snapshots
     land(tagged.filter(col("doc_id") < cut), "f1.parquet")
-    DriftStream.snapshotCellSink(DriftStream.readSnapshotDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    DriftStream.snapshotStore(deltas).sink(DriftStream.readSnapshotDocStream(spark, landing),
+      checkpoint).awaitTermination()
     land(tagged.filter(col("doc_id") >= cut), "f2.parquet")
-    DriftStream.snapshotCellSink(DriftStream.readSnapshotDocStream(spark, landing),
-      deltas, checkpoint).awaitTermination()
+    DriftStream.snapshotStore(deltas).sink(DriftStream.readSnapshotDocStream(spark, landing),
+      checkpoint).awaitTermination()
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("snap"), r.getAs[String]("source"),
@@ -3188,11 +3274,11 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // two landing files split by vec_id range: batches mix snapshots
     land(tagged.filter(col("vec_id") < cut), "f1.parquet")
-    EmbeddingStream.occupancySink(EmbeddingStream.readSnapshotEmbStream(spark, landing),
-      centroidPath, deltas, checkpoint).awaitTermination()
+    EmbeddingStream.occupancyStore(deltas, centroidPath).sink(
+      EmbeddingStream.readSnapshotEmbStream(spark, landing), checkpoint).awaitTermination()
     land(tagged.filter(col("vec_id") >= cut), "f2.parquet")
-    EmbeddingStream.occupancySink(EmbeddingStream.readSnapshotEmbStream(spark, landing),
-      centroidPath, deltas, checkpoint).awaitTermination()
+    EmbeddingStream.occupancyStore(deltas, centroidPath).sink(
+      EmbeddingStream.readSnapshotEmbStream(spark, landing), checkpoint).awaitTermination()
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("cluster"), r.getAs[Long]("n_a"), r.getAs[Long]("n_b"),
@@ -3205,7 +3291,8 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val expected = rows(Similarity.occupancyPairChi2(
       occ.filter(col("snapshot_id") === 0).groupBy("cluster").agg(count(lit(1)).as("na")),
       occ.filter(col("snapshot_id") === 1).groupBy("cluster").agg(count(lit(1)).as("nb"))))
-    val served = rows(EmbeddingStream.occupancyPairFromDeltas(spark, deltas, 0L, 1L))
+    val served = rows(EmbeddingStream.occupancyPairFromDeltas(spark,
+      EmbeddingStream.occupancyStore(deltas, centroidPath), 0L, 1L))
     assert(served === expected,
       "artifact-served occupancy drift must equal the frozen-cluster batch statistic")
 
@@ -3215,15 +3302,17 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       "the dropped cluster must appear with zero snapshot-B mass")
 
     // replay + compaction pins: both must leave every served number fixed
-    EmbeddingStream.writeOccupancyDelta(tagged.filter(col("vec_id") >= cut),
-      centroidPath, deltas, 1L)
-    assert(rows(EmbeddingStream.occupancyPairFromDeltas(spark, deltas, 0L, 1L)) === expected,
+    EmbeddingStream.occupancyStore(deltas, centroidPath)
+      .land(tagged.filter(col("vec_id") >= cut), 1L)
+    assert(rows(EmbeddingStream.occupancyPairFromDeltas(spark,
+      EmbeddingStream.occupancyStore(deltas, centroidPath), 0L, 1L)) === expected,
       "a replayed occupancy delta must be a no-op")
-    EmbeddingStream.compactOccupancyDeltas(spark, deltas, upto = 0L)
+    EmbeddingStream.occupancyStore(deltas, centroidPath).compact(spark, upto = 0L)
     assert(new java.io.File(deltas).listFiles()
       .filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted.toSeq ===
       Seq("batch_id=-1", "batch_id=1"))
-    assert(rows(EmbeddingStream.occupancyPairFromDeltas(spark, deltas, 0L, 1L)) === expected,
+    assert(rows(EmbeddingStream.occupancyPairFromDeltas(spark,
+      EmbeddingStream.occupancyStore(deltas, centroidPath), 0L, 1L)) === expected,
       "compaction must not move any served statistic")
 
     // ARRIVAL-ORDER invariance, stated explicitly: occupancy cells are
@@ -3242,12 +3331,13 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       Files.move(part.toPath, java.nio.file.Paths.get(landing2, name))
     }
     land2(tagged.filter(col("vec_id") >= cut), "f1.parquet")
-    EmbeddingStream.occupancySink(EmbeddingStream.readSnapshotEmbStream(spark, landing2),
-      centroidPath, deltas2, checkpoint2).awaitTermination()
+    EmbeddingStream.occupancyStore(deltas2, centroidPath).sink(
+      EmbeddingStream.readSnapshotEmbStream(spark, landing2), checkpoint2).awaitTermination()
     land2(tagged.filter(col("vec_id") < cut), "f2.parquet")
-    EmbeddingStream.occupancySink(EmbeddingStream.readSnapshotEmbStream(spark, landing2),
-      centroidPath, deltas2, checkpoint2).awaitTermination()
-    assert(rows(EmbeddingStream.occupancyPairFromDeltas(spark, deltas2, 0L, 1L)) === expected,
+    EmbeddingStream.occupancyStore(deltas2, centroidPath).sink(
+      EmbeddingStream.readSnapshotEmbStream(spark, landing2), checkpoint2).awaitTermination()
+    assert(rows(EmbeddingStream.occupancyPairFromDeltas(spark,
+      EmbeddingStream.occupancyStore(deltas2, centroidPath), 0L, 1L)) === expected,
       "reversed arrival must serve the identical occupancy statistic")
   }
 
@@ -3451,8 +3541,8 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     }
     val pol = StoreCompaction.MaintenancePolicy(
       minorAtDeltas = 4, keepLatestDeltas = 1, maxFilesPerBucket = 4, nBuckets = 4)
-    CorpusStream.lmCellSink(CorpusStream.readDocStreamPaced(spark, landing),
-      deltas, checkpoint, maintain = Some(pol)).awaitTermination()
+    CorpusStream.lmStore(deltas).sink(CorpusStream.readDocStreamPaced(spark, landing), checkpoint,
+      maintain = Some(pol)).awaitTermination()
 
     // the hook folded (a base exists) but never crossed the live pin
     val horizon = StoreCompaction.compactionHorizon(deltas)
@@ -3467,11 +3557,11 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     def tbl(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     // head serving == the batch train over every landing
-    assert(tbl(CorpusStream.lmCountsFromDeltas(spark, deltas)) ===
+    assert(tbl(CorpusStream.lmStore(deltas).servedAt(spark)) ===
       tbl(CorpusStream.lmCells(docs)),
       "self-maintained head serving must equal the batch train")
     // pinned serving == the batch train over landings 0..3 only
-    assert(tbl(CorpusStream.lmCountsFromDeltas(spark, deltas, upto = 3L)) ===
+    assert(tbl(CorpusStream.lmStore(deltas).servedAt(spark, upto = 3L)) ===
       tbl(CorpusStream.lmCells(docs.filter(pmod(col("doc_id"), lit(nLand.toLong)) <= 3L))),
       "pinned serving must survive every hook-driven fold bit-identically")
   }
@@ -3505,16 +3595,16 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // a SUM-cell co-target: the LM store amends in the same wave
     val lmStore = tmpDir("graft-amend-stream-lm") + "/deltas"
     bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-      CorpusStream.writeLmDelta(
-        d.filter(col("doc_id") >= lo && col("doc_id") < hi), lmStore, k.toLong)
+      CorpusStream.lmStore(lmStore).land(d.filter(col("doc_id") >= lo && col("doc_id") < hi),
+        k.toLong)
     }
     val targets = Amend.AmendTargets(curationRoot = Some(root),
-      sumCellStores = Seq("lm" -> graft.streaming.Forget.lmCellTarget(lmStore)))
+      cellStores = Seq(CorpusStream.lmStore(lmStore)))
     land(b.select(lit(1L).as("amend_batch"), col("doc_id"), col("text"),
       col("source")), "corrections.parquet")
     Amend.amendSink(Amend.readAmendStream(spark, landing), targets, markers,
       checkpoint, auditRoot = Some(audit)).awaitTermination()
-    assert(CorpusStream.lmCountsFromDeltas(spark, lmStore)
+    assert(CorpusStream.lmStore(lmStore).servedAt(spark)
         .collect().map(_.toSeq).toSet ===
       CorpusStream.lmCells(c).collect().map(_.toSeq).toSet,
       "the co-targeted SUM-cell store must serve the corrected retrain")
